@@ -13,6 +13,16 @@ same verdicts AND byte-identical error messages as the batch assembler
 order-free group semantics (operators/assemble.py) — a group errors iff it
 has an end but no start / not all regions, ever.
 
+The hand-off to the Python state worker is deliberately narrow. Spark
+converts every handed-off column from Arrow to pandas once per group, and
+groups are small (~6 lines), so the number of columns handed off — not the
+fold — sets the per-group cost. The JVM side therefore projects only the
+keys, ``turn_idx``, one small-int line code (start, a region, or end), the
+region's after-count, and the PauseEnd payload as one JSON string set only
+on end lines; ``ts`` rides along only when the event-time watermark needs it
+at the operator. The Python side folds those arrays in one plain-Python pass
+in turn order (last line wins) and decodes the end payload once per group.
+
 Two lateness disciplines (SURVEY §2.9 ST2):
 
   * **event-time watermark** (``lateness_ms``, the primary path): the parsed
@@ -44,8 +54,10 @@ the batch semantics don't have.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
-from typing import TYPE_CHECKING, Any
+from operator import itemgetter
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -100,6 +112,14 @@ STATE_SCHEMA = T.StructType(
 
 _REGIONS = ("Eden", "Survivor", "Old", "Humongous")
 
+# Line codes of the narrow hand-off: start, one per region in _REGIONS order
+# (so a region's index in the fold's region list is its code - 1), end.
+_START, _END = 0, len(_REGIONS) + 1
+
+_END_FIELDS = ("pause_type", "reason", "offset_ms", "duration_ms",
+               "heap_before", "heap_after", "heap_total")
+_OUTPUT_COLUMNS = OUTPUT_SCHEMA.fieldNames()
+
 
 def _make_assemble_fn(timeout_ms: int | None, lateness_ms: int | None = None):
     def fn(
@@ -108,54 +128,34 @@ def _make_assemble_fn(timeout_ms: int | None, lateness_ms: int | None = None):
         import pandas as pd
 
         conv_id, event_id = key
+        event_id = int(event_id)
 
         if state.exists:
             st = list(state.get)
         else:
             st = [False, None, None, None, None, False,
                   None, None, None, None, None, None, None, None]
-        (has_start, eden, survivor, old, humongous, has_end,
-         p_type, p_reason, p_off, p_dur, p_hb, p_ha, p_ht, max_ts_ms) = st
-        regions = dict(zip(_REGIONS, (eden, survivor, old, humongous)))
+        has_start, regions, has_end = st[0], st[1:5], st[5]
+        end_values, max_ts_ms = st[6:13], st[13]
 
         def emit(verdict: str) -> "pd.DataFrame":
-            ok = verdict == "ok"
-            remark = ok and p_type == "Remark"
+            err = None
             if verdict == "end_before_start":
-                err = ERR_END_BEFORE_START.format(event_id=int(event_id))
+                err = ERR_END_BEFORE_START.format(event_id=event_id)
             elif verdict == "missing_regions":
                 present = ",".join(
-                    r for r in _REGIONS if regions[r] is not None
+                    r for r, v in zip(_REGIONS, regions) if v is not None
                 )
                 err = ERR_MISSING_REGIONS.format(
-                    regions=present, event_id=int(event_id)
+                    regions=present, event_id=event_id
                 )
-            else:
-                err = None
-            return pd.DataFrame(
-                [
-                    {
-                        "conv_id": conv_id,
-                        "event_id": int(event_id),
-                        "verdict": verdict,
-                        "pause_type": p_type if ok else None,
-                        "reason": p_reason if ok else None,
-                        "offset_ms": p_off if ok else None,
-                        "duration_ms": p_dur if ok else None,
-                        "heap_before": p_hb if ok else None,
-                        "heap_after": p_ha if ok else None,
-                        "heap_total": p_ht if ok else None,
-                        "eden_after": regions["Eden"] if ok and not remark else None,
-                        "survivor_after": regions["Survivor"]
-                        if ok and not remark
-                        else None,
-                        "old_after": regions["Old"] if ok and not remark else None,
-                        "humongous_after": regions["Humongous"]
-                        if ok and not remark
-                        else None,
-                        "error_message": err,
-                    }
-                ]
+            ok = verdict == "ok"
+            values = end_values if ok else [None] * len(_END_FIELDS)
+            after = (regions if ok and end_values[0] != "Remark"
+                     else [None] * len(_REGIONS))
+            return pd.DataFrame.from_records(
+                [(conv_id, event_id, verdict, *values, *after, err)],
+                columns=_OUTPUT_COLUMNS,
             )
 
         if state.hasTimedOut:
@@ -165,12 +165,16 @@ def _make_assemble_fn(timeout_ms: int | None, lateness_ms: int | None = None):
             yield emit(verdict)
             return
 
-        # vectorized fold: per event-class the merge is "last in turn order
-        # wins", so boolean masks + groupby-last replace any per-row loop
-        # (groups are small, but the module standard is no row-at-a-time)
+        # Plain-Python fold: per line class, the last line in turn order
+        # wins. The per-group cost is set by the number of columns handed
+        # off (each is converted from Arrow to pandas per group), not by
+        # this loop, which is why the end payload arrives as one string.
+        lines = []
         for pdf in pdfs:
-            pdf = pdf.sort_values("turn_idx")
-            ec = pdf["event_class"]
+            lines.extend(zip(pdf["turn_idx"].to_numpy(),
+                             pdf["line"].to_numpy(),
+                             pdf["region_after"].to_numpy(),
+                             pdf["end"].to_numpy()))
             if lateness_ms is not None and len(pdf):
                 batch_max = pdf["ts"].max()
                 if pd.notna(batch_max):
@@ -178,43 +182,31 @@ def _make_assemble_fn(timeout_ms: int | None, lateness_ms: int | None = None):
                     max_ts_ms = bm_ms if max_ts_ms is None else max(
                         max_ts_ms, bm_ms
                     )
-            has_start = has_start or bool((ec == "pause_start").any())
-            nr = pdf.loc[ec == "nr_regions", ["region", "region_after"]]
-            if len(nr):
-                last_per_region = nr.groupby("region")["region_after"].last()
-                for rname, rafter in last_per_region.items():
-                    regions[rname] = int(rafter)
-            ends = pdf.loc[ec == "pause_end"]
-            if len(ends):
-                has_end = True
-                end = ends.iloc[-1]
-                p_type = end["pause_type"]
-                p_reason = end["reason"]
-                p_off = int(end["offset_ms"])
-                p_dur = float(end["duration_ms"])
-                p_hb, p_ha, p_ht = (
-                    int(end["heap_before"]),
-                    int(end["heap_after"]),
-                    int(end["heap_total"]),
-                )
+        lines.sort(key=itemgetter(0))
+        end = None
+        for _, code, region_after, payload in lines:
+            if code == _START:
+                has_start = True
+            elif code == _END:
+                end = payload
+            else:
+                regions[code - 1] = int(region_after)
+        if end is not None:
+            has_end = True
+            end_values = list(map(json.loads(end).get, _END_FIELDS))
 
         complete = (
             has_end
             and has_start
-            and (p_type == "Remark" or all(regions[r] is not None for r in _REGIONS))
+            and (end_values[0] == "Remark"
+                 or all(v is not None for v in regions))
         )
         if complete:
             state.remove()
             yield emit("ok")
             return
 
-        state.update(
-            (
-                has_start, regions["Eden"], regions["Survivor"], regions["Old"],
-                regions["Humongous"], has_end, p_type, p_reason, p_off, p_dur,
-                p_hb, p_ha, p_ht, max_ts_ms,
-            )
-        )
+        state.update((has_start, *regions, has_end, *end_values, max_ts_ms))
         # only end-bearing groups can become dead letters; end-less
         # dangling groups are silently discarded, like batch
         if has_end:
@@ -273,12 +265,20 @@ def stream_assembled(
         timeout_conf = GroupStateTimeout.ProcessingTimeTimeout
     else:
         timeout_conf = GroupStateTimeout.NoTimeout
+    ec = F.col("event_class")
+    line = F.when(ec == "pause_start", _START).when(ec == "pause_end", _END)
+    for code, region in enumerate(_REGIONS, start=1):
+        line = line.when(F.col("region") == region, code)
+    end = F.when(ec == "pause_end", F.to_json(F.struct(*_END_FIELDS)))
+    handoff = [
+        "conv_id", "event_id", "turn_idx",
+        line.cast("tinyint").alias("line"), "region_after", end.alias("end"),
+    ]
+    if lateness_ms is not None:
+        # EventTimeTimeout needs the watermarked column at the operator
+        handoff.append("ts")
     return (
-        filtered.select(
-            "conv_id", "turn_idx", "event_id", "event_class", "pause_type",
-            "reason", "offset_ms", "duration_ms", "heap_before", "heap_after",
-            "heap_total", "region", "region_after", "ts",
-        )
+        filtered.select(*handoff)
         .groupBy("conv_id", "event_id")
         .applyInPandasWithState(
             _make_assemble_fn(timeout_ms, lateness_ms),

@@ -42,6 +42,7 @@ from java9_gc_log_parser_spark.operators.similarity import ivfpq_encode
 __all__ = [
     "current_generation",
     "write_base_generation",
+    "apply_generation",
     "maintain_index",
     "read_index",
 ]
@@ -62,6 +63,28 @@ def write_base_generation(
     generation, partitioned by cell (the index's prune key)."""
     ivfpq_encode(base, cells, books).write.partitionBy("cell").parquet(
         f"{out_root}/base"
+    )
+
+
+def apply_generation(enc: DataFrame, out_root: str, batch_id: int) -> None:
+    """Write batch ``batch_id``'s encoded vectors as its generation, then
+    flip the pointer to it. An empty batch leaves a generation dir holding
+    only ``_SUCCESS``; ``read_index`` skips such dirs."""
+    enc.write.partitionBy("cell").mode("overwrite").parquet(
+        f"{out_root}/batch={batch_id}"
+    )
+    ptr = os.path.join(out_root, "_CURRENT")
+    tmp = ptr + f".tmp{batch_id}"
+    with open(tmp, "w") as f:
+        f.write(str(batch_id))
+    os.replace(tmp, ptr)
+
+
+def _has_parquet_parts(gen_dir: str) -> bool:
+    return any(
+        name.endswith(".parquet")
+        for _, _, names in os.walk(gen_dir)
+        for name in names
     )
 
 
@@ -89,7 +112,6 @@ def maintain_index(
     the checkpoint and must drain replayed ids without re-applying them.
     """
     os.makedirs(out_root, exist_ok=True)
-    ptr = os.path.join(out_root, "_CURRENT")
     applied_this_run = 0
 
     def _emit(batch_df: DataFrame, batch_id: int) -> None:
@@ -108,13 +130,7 @@ def maintain_index(
             spark.createDataFrame(cells_rows, cells_schema),
             spark.createDataFrame(books_rows, books_schema),
         )
-        enc.write.partitionBy("cell").mode("overwrite").parquet(
-            f"{out_root}/batch={batch_id}"
-        )
-        tmp = ptr + f".tmp{batch_id}"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, ptr)
+        apply_generation(enc, out_root, batch_id)
         applied_this_run += 1
 
     q = (
@@ -136,13 +152,15 @@ def read_index(spark: SparkSession, out_root: str) -> DataFrame:
 
     Each generation dir is read on its own (recovering its ``cell=K``
     partition dirs); a wholesale read of ``out_root`` would misparse the
-    ``batch=N`` dir names as a partition column."""
+    ``batch=N`` dir names as a partition column. Generations of empty
+    micro-batches hold no part files and are skipped: there is no schema to
+    infer from them and nothing to add."""
     final = current_generation(out_root)
-    gens = [f"{out_root}/base"] + (
-        [f"{out_root}/batch={i}" for i in range(int(final) + 1)]
-        if final is not None
-        else []
-    )
+    batches = range(final + 1) if final is not None else []
+    gens = [f"{out_root}/base"] + [
+        g for g in (f"{out_root}/batch={i}" for i in batches)
+        if _has_parquet_parts(g)
+    ]
     idx = spark.read.parquet(gens[0])
     for g in gens[1:]:
         idx = idx.unionByName(spark.read.parquet(g))

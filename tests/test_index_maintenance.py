@@ -111,6 +111,28 @@ def test_encode_empty_batch_yields_empty_generation(spark, sf_dir, trained):
     ]
 
 
+def test_empty_generation_round_trips(spark, sf_dir, trained, tmp_path):
+    """An empty micro-batch's generation holds no part files, only
+    ``_SUCCESS``; reading the index back skips it instead of failing to
+    infer a schema, and the generations around it still count."""
+    import glob
+
+    embs, base, cells, books = trained
+    out_root = str(tmp_path / "gens")
+    im.write_base_generation(base, cells, books, out_root)
+    batch = embs.filter(F.col("vec_id") % 3 == 2)
+    im.apply_generation(
+        ivfpq_encode(batch.filter(F.lit(False)), cells, books), out_root, 0
+    )
+    im.apply_generation(ivfpq_encode(batch, cells, books), out_root, 1)
+    assert im.current_generation(out_root) == 1
+    assert glob.glob(f"{out_root}/batch=0/*SUCCESS")
+    assert not glob.glob(f"{out_root}/batch=0/**/*.parquet", recursive=True)
+
+    idx = im.read_index(spark, out_root)
+    assert _index_rows(idx) == _index_rows(ivfpq_encode(embs, cells, books))
+
+
 def test_train_rejects_indivisible_dim(spark, sf_dir, trained):
     embs, base, _, _ = trained
     with pytest.raises(ValueError, match="not divisible"):

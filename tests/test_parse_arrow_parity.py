@@ -13,7 +13,13 @@ from java9_gc_log_parser_spark.functions.parse import PARSE_COLUMNS, parse_lines
 from java9_gc_log_parser_spark.functions.parse_arrow import parse_lines_arrow
 from java9_gc_log_parser_spark.sources.transcripts import synth_transcripts
 
-from test_parse import NEGATIVE, OVERFLOW, POSITIVE, UNLISTED_REASON
+from test_parse import (
+    NEGATIVE,
+    OVERFLOW,
+    POSITIVE,
+    UNLISTED_REASON,
+    skip_if_input_missing,
+)
 
 
 def _norm(v):
@@ -39,6 +45,7 @@ def test_corpus_parity(spark):
     assert _rows(parse_lines(df), ["idx"]) == _rows(parse_lines_arrow(df), ["idx"])
 
 
+@skip_if_input_missing
 def test_reference_log_parity(spark):
     df = spark.read.text("/root/reference/gc.log").withColumnRenamed("value", "text")
     a = _rows(parse_lines(df), ["text"])

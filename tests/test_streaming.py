@@ -449,3 +449,23 @@ def test_stream_cms_maintenance_is_truly_incremental(spark, sf_dir):
     root = entrymod._scratch(sf_dir, "q67")
     gens = glob.glob(os.path.join(root, "gens", "batch=*"))
     assert len(gens) >= 2, gens  # merge path exercised across micro-batches
+
+
+@pytest.mark.parametrize("lateness_ms", [None, 5000])
+def test_assembler_handoff_is_narrow(spark, stream_source, lateness_ms):
+    """The Python state worker converts every column it is handed once per
+    group, so the hand-off must stay narrow: no raw text, no class or region
+    names, and ``ts`` only when the event-time timeout needs it."""
+    out = stream_assembled(spark, stream_source, INPUT_SCHEMA,
+                           lateness_ms=lateness_ms)
+    nodes = [out._jdf.queryExecution().analyzed()]
+    while nodes[-1].nodeName() != "FlatMapGroupsInPandasWithState":
+        nodes.append(nodes[-1].children().apply(0))
+    attrs = nodes[-1].child().output()
+    handoff = {
+        attrs.apply(i).name(): attrs.apply(i).dataType().simpleString()
+        for i in range(attrs.size())
+    }
+    strings = {name for name, typ in handoff.items() if typ == "string"}
+    assert not strings & {"text", "event_class", "region"}, handoff
+    assert ("ts" in handoff) == (lateness_ms is not None), handoff
