@@ -1085,12 +1085,13 @@ def q67_stream_cms_maintenance(spark, sf_dir):
     running grid, cells merge by add) must equal the batch grid over the
     whole corpus CELL-FOR-CELL after the drain — associativity is exactly
     what makes a sketch maintainable online, and this query oracles it.
-    Same batch-id-keyed generation + atomic pointer discipline as the
-    conv-state stream (idempotent under foreachBatch replay). At 100 TB/day
-    the running grid is a few KB however much history it summarizes — the
-    streaming analogue of q60's audit."""
+    Generations are keyed by batch id and committed through ``commit_log``,
+    like the conv-state stream's. At 100 TB/day the running grid is a few
+    KB however much history it summarizes — the streaming analogue of
+    q60's audit."""
     import shutil
 
+    from java9_gc_log_parser_spark import commit_log
     from java9_gc_log_parser_spark.operators.sketches import cms_sketch
 
     root = _scratch(sf_dir, "q67")
@@ -1098,21 +1099,11 @@ def q67_stream_cms_maintenance(spark, sf_dir):
     src, out_root, ck = f"{root}/src", f"{root}/gens", f"{root}/ckpt"
     _docs(spark, sf_dir).repartition(8).write.parquet(src)
     os.makedirs(out_root, exist_ok=True)
-    ptr = os.path.join(out_root, "_CURRENT")
+    log = f"{out_root}/commits.jsonl"
 
-    def _cur():
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            return int(f.read().strip())
-
-    def _emit(batch_df, batch_id):
-        last = _cur()
-        if last is not None and batch_id <= last:
-            batch_df.count()  # drain the replayed batch, side effects skipped
-            return
+    def _apply(batch_df, batch_id, last):
         batch_df.persist()  # grid build is the only action, but keep the
-        g = cms_sketch(batch_df)  # idiom uniform with state_stream._emit
+        g = cms_sketch(batch_df)  # idiom uniform with state_stream._apply
         if last is not None:
             prev = spark.read.parquet(f"{out_root}/batch={last}")
             g = (
@@ -1124,10 +1115,7 @@ def q67_stream_cms_maintenance(spark, sf_dir):
             f"{out_root}/batch={batch_id}"
         )
         batch_df.unpersist()
-        tmp = ptr + f".tmp{batch_id}"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, ptr)
+        return {"batch_id": batch_id}
 
     docs_schema = _docs(spark, sf_dir).schema
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -1137,7 +1125,7 @@ def q67_stream_cms_maintenance(spark, sf_dir):
             spark.readStream.schema(docs_schema)
             .option("maxFilesPerTrigger", 2)
             .parquet(src)
-            .writeStream.foreachBatch(_emit)
+            .writeStream.foreachBatch(commit_log.once_per_batch(log, _apply))
             .option("checkpointLocation", ck)
             .trigger(availableNow=True)
             .start()
@@ -1145,7 +1133,7 @@ def q67_stream_cms_maintenance(spark, sf_dir):
         _await_drained(q)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    final = _cur()
+    final = commit_log.last_batch(log)
     return spark.read.parquet(f"{out_root}/batch={final}").select(
         F.col("row").cast("int").alias("row"),
         F.col("bucket").cast("int").alias("bucket"),

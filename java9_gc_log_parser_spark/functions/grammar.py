@@ -78,7 +78,7 @@ EVENT_CLASSES = (
 # groups: 1=int-part 2=frac-part 3=unit 4=level 5=raw tag list 6=event id 7=body
 _TAG_ALT = "|".join(TAGS)
 #: header WITHOUT the trailing body capture — shared by HEADER_RE (two-pass
-#: variants: Arrow twin, oracle SQL) and COMBINED_RE (single-pass JVM parse)
+#: variants: oracle SQL) and COMBINED_RE (single-pass JVM parse)
 HEADER_PREFIX_RE = (
     r"^\s*\[\s*(\d+)(?:\.(\d+))?(ms|s)\s*\]\s*"
     r"\[\s*(info|warn)\s*\]\s*"

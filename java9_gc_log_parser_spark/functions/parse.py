@@ -4,8 +4,7 @@ This is the Spark-first re-expression of the reference's per-line combinator
 parse (``GcLineParser.scala:112-120`` applied at ``GcLogStream.scala:55``).
 Instead of a row-at-a-time PEG, the whole grammar becomes a *columnar
 expression cascade* of built-in ``regexp_extract`` / ``rlike`` calls — pure
-JVM, whole-stage-codegen-fused, no Python in the hot path. An Arrow/pandas-UDF
-variant with identical semantics lives in ``parse_arrow.py`` (parity-tested).
+JVM, whole-stage-codegen-fused, no Python in the hot path.
 
 Output schema (all nullable; null means "not applicable to this class"):
 

@@ -18,9 +18,8 @@ Design:
     unpartitioned path still works (predicate fallback) for ad-hoc runs.
   * each sink writes to ``{root}/{sink}/batch={id}/`` with overwrite — a
     re-run of a half-finished batch replaces its output exactly (idempotent).
-  * the manifest (JSONL) line for a batch is appended only after every sink
-    for that batch has committed; a crash between sink write and manifest
-    append re-runs the batch, which overwrites in place.
+  * ``manifest.jsonl`` is the commit log (``commit_log``): a batch's record
+    is committed after every one of its sinks has been written.
   * lineage per batch records the source path + the exact filter predicate;
     metrics record rows in/out per sink and wall seconds.
 
@@ -31,7 +30,6 @@ appends with overwrite-by-filter.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from dataclasses import dataclass
@@ -39,6 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .. import commit_log
 from ..storage import (
     ICEBERG,
     TableRef,
@@ -67,15 +66,7 @@ def _manifest_path(root: str) -> str:
 
 
 def completed_batches(root: str) -> set[int]:
-    path = _manifest_path(root)
-    done: set[int] = set()
-    if os.path.exists(path):
-        with open(path) as f:
-            for line in f:
-                rec = json.loads(line)
-                if rec.get("status") == "ok":
-                    done.add(rec["batch_id"])
-    return done
+    return {r["batch_id"] for r in commit_log.records(_manifest_path(root))}
 
 
 def prepare_source(
@@ -110,8 +101,8 @@ def run_batch(
     n_batches: int,
     verify_commit: bool = False,
 ) -> BatchResult:
-    """Process one micro-batch: read its bucket, write every sink, append the
-    manifest line.
+    """Process one micro-batch: read its bucket, write every sink, commit the
+    manifest record.
 
     ``verify_commit``: the sink row metric is an Observation on the write job
     — rows *fed to the writer*, not a post-commit read-back, so a silent
@@ -121,9 +112,7 @@ def run_batch(
     written). Setting ``verify_commit=True`` restores the check cheaply: one
     count() read-back of the SMALLEST sink (conv_state, O(conversations)
     rows) per batch, recorded in the manifest as ``commit_check``. Resume
-    correctness never depends on the metric either way: the manifest line is
-    appended only after every sink's write action returned, and a crash
-    before the append re-runs + overwrites the whole batch.
+    correctness never depends on the metric either way.
     """
     src = _as_ref(source_path)
     snapshot = None
@@ -213,8 +202,7 @@ def run_batch(
         "n_batches": n_batches,
     }
     os.makedirs(root, exist_ok=True)
-    with open(_manifest_path(root), "a") as f:
-        f.write(json.dumps(rec) + "\n")
+    commit_log.commit(_manifest_path(root), rec)
     return BatchResult(batch_id, rows_in, sink_rows, wall)
 
 

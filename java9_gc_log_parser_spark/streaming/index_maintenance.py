@@ -8,16 +8,8 @@ The maintained index is a generation store under ``out_root``:
                         artifact)
     batch=N/cell=K/     per-micro-batch appends: the vectors of batch N
                         encoded against the FIXED index metadata
-    _CURRENT            atomic pointer: last durably-applied batch id
-
-Fault-tolerance contract (the ST3 north-rule discipline, same as
-``state_stream`` / q67): foreachBatch is at-least-once, so each
-generation is keyed by batch_id and committed via an atomic pointer
-replace; a replayed ``batch_id <= _CURRENT`` is drained without side
-effects, and a crash between the generation write and the pointer flip
-re-runs the batch with ``mode("overwrite")`` — idempotent either way.
-``fail_after`` injects a crash between batches so the resume path is
-exercised by a real test, not asserted in prose.
+    commits.jsonl       the commit log (``commit_log``): one record per
+                        committed generation
 
 Scale shape (100 TB/day of arriving vectors): per-batch cost is batch
 rows × a few KB of broadcast metadata (``ivfpq_encode``'s plan is
@@ -37,10 +29,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from java9_gc_log_parser_spark import commit_log
 from java9_gc_log_parser_spark.operators.similarity import ivfpq_encode
 
 __all__ = [
-    "current_generation",
     "write_base_generation",
     "apply_generation",
     "maintain_index",
@@ -48,12 +40,8 @@ __all__ = [
 ]
 
 
-def current_generation(out_root: str) -> int | None:
-    ptr = os.path.join(out_root, "_CURRENT")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        return int(f.read().strip())
+def _log(out_root: str) -> str:
+    return os.path.join(out_root, "commits.jsonl")
 
 
 def write_base_generation(
@@ -66,18 +54,15 @@ def write_base_generation(
     )
 
 
-def apply_generation(enc: DataFrame, out_root: str, batch_id: int) -> None:
-    """Write batch ``batch_id``'s encoded vectors as its generation, then
-    flip the pointer to it. An empty batch leaves a generation dir holding
-    only ``_SUCCESS``; ``read_index`` skips such dirs."""
+def apply_generation(enc: DataFrame, out_root: str, batch_id: int) -> dict:
+    """Write batch ``batch_id``'s encoded vectors as its generation and
+    return its commit record (``maintain_index`` commits it). An empty batch
+    leaves a generation dir holding only ``_SUCCESS``; ``read_index`` skips
+    such dirs."""
     enc.write.partitionBy("cell").mode("overwrite").parquet(
         f"{out_root}/batch={batch_id}"
     )
-    ptr = os.path.join(out_root, "_CURRENT")
-    tmp = ptr + f".tmp{batch_id}"
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, ptr)
+    return {"batch_id": batch_id}
 
 
 def _has_parquet_parts(gen_dir: str) -> bool:
@@ -99,7 +84,6 @@ def maintain_index(
     books_schema,
     max_files_per_trigger: int = 2,
     timeout_s: int = 600,
-    fail_after: int | None = None,
 ) -> None:
     """Drain the vector stream, appending one encoded generation per
     micro-batch; blocks until the availableNow backlog is done.
@@ -107,37 +91,25 @@ def maintain_index(
     Metadata arrives as COLLECTED rows + schema (not DataFrames): that is
     what pins the no-corpus-lineage property — the per-batch encode plan
     physically cannot re-scan the corpus because nothing in scope refers
-    to it. ``fail_after=N`` raises after N new generations are applied
-    (simulated crash between batches); rerunning without it resumes from
-    the checkpoint and must drain replayed ids without re-applying them.
+    to it.
     """
     os.makedirs(out_root, exist_ok=True)
-    applied_this_run = 0
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal applied_this_run
-        last = current_generation(out_root)
-        if last is not None and batch_id <= last:
-            batch_df.count()  # drain the replayed batch, side effects skipped
-            return
-        if fail_after is not None and applied_this_run >= fail_after:
-            raise RuntimeError(
-                f"injected crash before batch {batch_id} "
-                f"(applied {applied_this_run} this run)"
-            )
+    def _apply(batch_df: DataFrame, batch_id: int, last: int | None) -> dict:
         enc = ivfpq_encode(
             batch_df,
             spark.createDataFrame(cells_rows, cells_schema),
             spark.createDataFrame(books_rows, books_schema),
         )
-        apply_generation(enc, out_root, batch_id)
-        applied_this_run += 1
+        return apply_generation(enc, out_root, batch_id)
 
     q = (
         spark.readStream.schema(input_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_path)
-        .writeStream.foreachBatch(_emit)
+        .writeStream.foreachBatch(
+            commit_log.once_per_batch(_log(out_root), _apply)
+        )
         .option("checkpointLocation", f"{out_root}/ckpt")
         .trigger(availableNow=True)
         .start()
@@ -155,7 +127,7 @@ def read_index(spark: SparkSession, out_root: str) -> DataFrame:
     ``batch=N`` dir names as a partition column. Generations of empty
     micro-batches hold no part files and are skipped: there is no schema to
     infer from them and nothing to add."""
-    final = current_generation(out_root)
+    final = commit_log.last_batch(_log(out_root))
     batches = range(final + 1) if final is not None else []
     gens = [f"{out_root}/base"] + [
         g for g in (f"{out_root}/batch={i}" for i in batches)

@@ -5,8 +5,9 @@ Server-Sent-Events socket with a heartbeat (``HttpFrontEnd.scala:24-37``).
 The capability — *push incremental aggregate snapshots as data arrives* —
 maps to Structured Streaming ``foreachBatch``: each micro-batch of assembled
 pause events folds into a running per-conversation state table, every batch
-appends its snapshot (the SSE "event") and a metrics record (the
-"heartbeat": batch id, rows, convs, wall seconds) to a JSONL feed.
+writes its snapshot (the SSE "event") and commits a metrics record (the
+"heartbeat": batch id, rows, convs, wall seconds) to a JSONL feed, which is
+the stream's commit log (``commit_log``).
 
 The running state is a *mergeable partial aggregate*: alongside the GcState
 counters it carries the two argmax keys (``_max_off`` for heap,
@@ -24,13 +25,13 @@ conv per side.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import commit_log
 from ..operators.aggregate import COUNTERS, GEN_COLS
 from .assembler import stream_assembled
 
@@ -75,13 +76,8 @@ def merge_states(prev: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
-def _current_batch_id(out_root: str) -> int | None:
-    """Last durably-applied batch id, from the atomic pointer file."""
-    ptr = os.path.join(out_root, "_CURRENT")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        return int(f.read().strip())
+def _log(out_root: str) -> str:
+    return os.path.join(out_root, "metrics.jsonl")
 
 
 def _gen_dir(out_root: str, batch_id: int) -> str:
@@ -90,7 +86,7 @@ def _gen_dir(out_root: str, batch_id: int) -> str:
 
 def current_state(spark: SparkSession, out_root: str) -> DataFrame | None:
     """The cumulative state as of the last applied batch (None before any)."""
-    bid = _current_batch_id(out_root)
+    bid = commit_log.last_batch(_log(out_root))
     if bid is None:
         return None
     return spark.read.parquet(_gen_dir(out_root, bid))
@@ -124,10 +120,10 @@ def stream_conv_state(
 
     Layout under ``out_root``:
       state_gens/batch=N/    cumulative state generation after batch N
-      _CURRENT               atomic pointer: last durably-applied batch id
       snapshots/batch=N/     the state as of batch N (the SSE "event" feed)
-      metrics.jsonl          one heartbeat line per micro-batch (batch-id
-                             deduped; replays append nothing)
+      metrics.jsonl          the commit log (``commit_log``): one heartbeat
+                             record per applied batch (batch id, events,
+                             convs, wall seconds)
     """
     assembled = stream_assembled(
         spark, source_path, input_schema,
@@ -136,21 +132,8 @@ def stream_conv_state(
 
     os.makedirs(out_root, exist_ok=True)
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: after failure recovery Spark replays
-        # the in-flight batch_id. Idempotence: each state generation is keyed
-        # by batch_id and exposed via an atomically-replaced pointer file, so
-        # a replayed batch_id <= last-applied is skipped (its effects are
-        # already durable), and a crash mid-write leaves the pointer at the
-        # previous complete generation — never a missing/partial state dir.
+    def _apply(batch_df: DataFrame, batch_id: int, last: int | None) -> dict:
         t0 = time.perf_counter()
-        last = _current_batch_id(out_root)
-        if last is not None and batch_id <= last:
-            # skip the external side effects, but still drain the batch:
-            # Spark validates that foreachBatch processed every partition
-            # (upstream stateful operators must commit their state stores)
-            batch_df.count()
-            return
         # two actions read this batch (the merged-state write and the
         # heartbeat's n_events count); without a persist each one re-runs
         # the whole stateful-assembler micro-batch — measured 69 s -> ~2/3
@@ -170,34 +153,17 @@ def stream_conv_state(
         )
         n_events = batch_df.count()
         batch_df.unpersist()
-        # metrics heartbeat, deduped by batch_id (replays re-append nothing)
-        mpath = os.path.join(out_root, "metrics.jsonl")
-        seen = set()
-        if os.path.exists(mpath):
-            with open(mpath) as f:
-                seen = {json.loads(line)["batch_id"] for line in f if line.strip()}
-        if batch_id not in seen:
-            with open(mpath, "a") as f:
-                f.write(
-                    json.dumps(
-                        {
-                            "batch_id": batch_id,
-                            "events": n_events,
-                            "convs": n_convs,
-                            "wall_s": round(time.perf_counter() - t0, 3),
-                        }
-                    )
-                    + "\n"
-                )
-        # commit point: atomic pointer replace makes this generation current
-        ptr = os.path.join(out_root, "_CURRENT")
-        tmp = ptr + f".tmp{batch_id}"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, ptr)
+        return {
+            "batch_id": batch_id,
+            "events": n_events,
+            "convs": n_convs,
+            "wall_s": round(time.perf_counter() - t0, 3),
+        }
 
     writer = (
-        assembled.writeStream.foreachBatch(_emit)
+        assembled.writeStream.foreachBatch(
+            commit_log.once_per_batch(_log(out_root), _apply)
+        )
         .outputMode("append")
         .option("checkpointLocation", os.path.join(out_root, "ckpt"))
     )

@@ -7,6 +7,7 @@ import os
 
 import pytest
 
+from java9_gc_log_parser_spark import commit_log
 from java9_gc_log_parser_spark.plans import checkpoint as cp
 from java9_gc_log_parser_spark.plans.pipeline import build
 from java9_gc_log_parser_spark.sources.transcripts import synth_transcripts
@@ -23,20 +24,13 @@ def _collect_sorted(df, cols):
     return sorted([tuple(r) for r in df.select(*cols).collect()], key=repr)
 
 
-def test_crash_resume_identical(spark, source_path, tmp_path):
-    root = str(tmp_path / "out")
-    n_batches = 4
+def _manifest(root):
+    with open(os.path.join(root, "manifest.jsonl")) as f:
+        return [json.loads(line) for line in f]
 
-    # run 2 of 4 batches, then "crash"
-    r1 = cp.run(spark, source_path, root, n_batches, stop_after=2)
-    assert len(r1) == 2
-    assert cp.completed_batches(root) == {0, 1}
 
-    # resume: only the remaining batches run
-    r2 = cp.run(spark, source_path, root, n_batches)
-    assert sorted(b.batch_id for b in r2) == [2, 3]
-
-    # resumed output == single-shot pipeline output, sink by sink
+def _assert_matches_single_shot(spark, source_path, root):
+    """Resumed output == single-shot pipeline output, sink by sink."""
     single = build(spark.read.parquet(source_path))
     for sink, cols in [
         ("assembled", ["conv_id", "event_id", "pause_type", "duration_ms"]),
@@ -50,6 +44,54 @@ def test_crash_resume_identical(spark, source_path, tmp_path):
     single["parsed"].unpersist()
 
 
+def test_crash_resume_identical(spark, source_path, tmp_path):
+    root = str(tmp_path / "out")
+    n_batches = 4
+
+    # run 2 of 4 batches, then "crash"
+    r1 = cp.run(spark, source_path, root, n_batches, stop_after=2)
+    assert len(r1) == 2
+    assert cp.completed_batches(root) == {0, 1}
+
+    # resume: only the remaining batches run
+    r2 = cp.run(spark, source_path, root, n_batches)
+    assert sorted(b.batch_id for b in r2) == [2, 3]
+
+    _assert_matches_single_shot(spark, source_path, root)
+
+
+def test_crash_between_sink_write_and_commit(spark, source_path, tmp_path,
+                                             monkeypatch):
+    """The second commit raises: batch 1's sinks are written but its
+    manifest record is not. The resume re-runs batch 1 over its own partial
+    output and must end equal to the single-shot build."""
+    root = str(tmp_path / "out_crash")
+    n_batches = 3
+    real_commit = commit_log.commit
+    calls = []
+
+    def crash_on_second(log, record):
+        calls.append(record["batch_id"])
+        if len(calls) == 2:
+            raise RuntimeError("injected crash before commit")
+        real_commit(log, record)
+
+    monkeypatch.setattr(commit_log, "commit", crash_on_second)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        cp.run(spark, source_path, root, n_batches)
+    monkeypatch.undo()
+    assert cp.completed_batches(root) == {0}
+    assert os.path.isdir(os.path.join(root, "assembled", "batch=1"))
+
+    resumed = cp.run(spark, source_path, root, n_batches)
+    assert [b.batch_id for b in resumed] == [1, 2]
+    recs = _manifest(root)
+    assert sorted(r["batch_id"] for r in recs) == list(range(n_batches))
+    assert (sum(r["rows_in"] for r in recs)
+            == spark.read.parquet(source_path).count())
+    _assert_matches_single_shot(spark, source_path, root)
+
+
 def test_rerun_is_idempotent(spark, source_path, tmp_path):
     root = str(tmp_path / "out2")
     cp.run(spark, source_path, root, 2)
@@ -58,6 +100,12 @@ def test_rerun_is_idempotent(spark, source_path, tmp_path):
     # batch 0 directly — overwrite makes it idempotent
     cp.run_batch(spark, source_path, root, 0, 2)
     assert cp.read_sink(spark, root, "assembled").count() == n_before
+    # the re-commit replaced batch 0's record: one record per batch id, and
+    # rows_in still partitions the input
+    recs = _manifest(root)
+    n_in = spark.read.parquet(source_path).count()
+    assert (sorted(r["batch_id"] for r in recs),
+            sum(r["rows_in"] for r in recs)) == ([0, 1], n_in)
 
 
 def test_manifest_lineage_and_metrics(spark, source_path, tmp_path):

@@ -1,20 +1,22 @@
 """Crash/resume contract of the streaming IVF×PQ index maintenance
 (q141's engine, `streaming/index_maintenance.py`).
 
-The generation + atomic-pointer discipline is the same as q67/q51's, but
-here it is exercised under a REAL injected failure: the first run dies
-between micro-batches, the second resumes from the Structured Streaming
-checkpoint, replayed batch ids are drained without re-applying, and the
-final maintained index must equal the one-shot batch build — the ST3
-resumability evidence (GcService.scala:35-38 has none; the north rule
-requires it).
+The commit log is the shared ``commit_log`` module, exercised here under a
+REAL injected failure: the first run dies between a generation write and
+its commit, the second resumes from the Structured Streaming checkpoint and
+re-runs the uncommitted batch, and the final maintained index must equal
+the one-shot batch build — the ST3 resumability evidence
+(GcService.scala:35-38 has none; the north rule requires it).
 """
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from java9_gc_log_parser_spark import commit_log
 from java9_gc_log_parser_spark.operators.similarity import (
     ivfpq_encode,
     ivfpq_train,
@@ -34,7 +36,12 @@ def _index_rows(df):
     return sorted((r.vec_id, r.cell, r.s, r.code) for r in df.collect())
 
 
-def test_crash_between_batches_then_resume(spark, sf_dir, trained, tmp_path):
+def _last(out_root):
+    return commit_log.last_batch(os.path.join(out_root, "commits.jsonl"))
+
+
+def test_crash_between_batches_then_resume(spark, sf_dir, trained, tmp_path,
+                                           monkeypatch):
     embs, base, cells, books = trained
     src = str(tmp_path / "src")
     out_root = str(tmp_path / "gens")
@@ -42,26 +49,40 @@ def test_crash_between_batches_then_resume(spark, sf_dir, trained, tmp_path):
     im.write_base_generation(base, cells, books, out_root)
     cells_rows, books_rows = cells.collect(), books.collect()
 
-    # run 1: dies after ONE applied generation (injected between batches)
+    # run 1: the second commit raises, so batch 1's generation is written
+    # but never committed
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
+    real_commit = commit_log.commit
+    calls = []
+
+    def crash_on_second(log, record):
+        calls.append(record["batch_id"])
+        if len(calls) == 2:
+            raise RuntimeError(f"injected crash before commit {record}")
+        real_commit(log, record)
+
+    monkeypatch.setattr(commit_log, "commit", crash_on_second)
     with pytest.raises(StreamingQueryException, match="injected crash"):
         im.maintain_index(
             spark, src, embs.schema, out_root,
             cells_rows, cells.schema, books_rows, books.schema,
-            max_files_per_trigger=2, fail_after=1,
+            max_files_per_trigger=2,
         )
-    after_crash = im.current_generation(out_root)
+    after_crash = _last(out_root)
     assert after_crash == 0  # exactly one generation committed pre-crash
+    assert os.path.isdir(f"{out_root}/batch=1")
 
-    # run 2: resume from the checkpoint; batch 0 is replayed and must be
+    # run 2: resume from the checkpoint; the uncommitted batch 1 re-runs
+    # over its partial generation, a replay of the committed batch 0 would be
     # DRAINED, not re-applied — then the backlog finishes
     im.maintain_index(
         spark, src, embs.schema, out_root,
         cells_rows, cells.schema, books_rows, books.schema,
         max_files_per_trigger=2,
     )
-    final = im.current_generation(out_root)
+    assert calls[:3] == [0, 1, 1] and calls.count(0) == 1
+    final = _last(out_root)
     assert final is not None and final > after_crash
 
     idx = im.read_index(spark, out_root)
@@ -78,7 +99,7 @@ def test_crash_between_batches_then_resume(spark, sf_dir, trained, tmp_path):
 def test_replay_of_committed_batch_is_skipped(spark, sf_dir, trained,
                                               tmp_path):
     """Deleting the checkpoint (but not the store) forces EVERY batch to
-    replay with fresh ids from 0: all of them collide with _CURRENT or
+    replay with fresh ids from 0: all of them collide with the last commit or
     rewrite identical content — the store must come out unchanged."""
     import shutil
 
@@ -121,11 +142,14 @@ def test_empty_generation_round_trips(spark, sf_dir, trained, tmp_path):
     out_root = str(tmp_path / "gens")
     im.write_base_generation(base, cells, books, out_root)
     batch = embs.filter(F.col("vec_id") % 3 == 2)
-    im.apply_generation(
+    log = os.path.join(out_root, "commits.jsonl")
+    commit_log.commit(log, im.apply_generation(
         ivfpq_encode(batch.filter(F.lit(False)), cells, books), out_root, 0
+    ))
+    commit_log.commit(
+        log, im.apply_generation(ivfpq_encode(batch, cells, books), out_root, 1)
     )
-    im.apply_generation(ivfpq_encode(batch, cells, books), out_root, 1)
-    assert im.current_generation(out_root) == 1
+    assert _last(out_root) == 1
     assert glob.glob(f"{out_root}/batch=0/*SUCCESS")
     assert not glob.glob(f"{out_root}/batch=0/**/*.parquet", recursive=True)
 

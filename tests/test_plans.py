@@ -68,9 +68,8 @@ def test_parquet_filter_pushdown_and_column_pruning(spark, sf_dir):
 
 
 def test_route_stage_is_fully_jvm_side(spark, sf_dir):
-    """The default parse cascade + route predicates never leave the JVM:
-    no Python eval nodes of any kind in the plan (the Arrow twin in
-    functions/parse_arrow.py is the explicit opt-in alternative)."""
+    """The parse cascade + route predicates never leave the JVM: no
+    Python eval nodes of any kind in the plan."""
     transcripts = synth_transcripts(spark, sf_dir)
     from java9_gc_log_parser_spark.functions.parse import parse_lines
     from java9_gc_log_parser_spark.operators.route import supported_types_filter

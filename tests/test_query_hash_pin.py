@@ -91,7 +91,7 @@ def test_rotation_shape():
     assert set(oracles) <= set(names)
 
 
-def test_no_complex_typed_output_columns(spark):
+def test_no_complex_typed_output_columns(spark, sf_dir):
     """Driver-canonicalizer conformance (VERDICT r4 task #2): NO
     ``queries()`` entry may emit ArrayType/MapType/StructType columns —
     the driver's pandas canonicalizer sorts cell values and crashes on
@@ -106,7 +106,6 @@ def test_no_complex_typed_output_columns(spark):
         T.ArrayType, T.MapType, T.StructType,
         T.BinaryType, T.DecimalType, T.NullType,
     )
-    sf_dir = "/root/testdata/sf0.001"
     bad = []
     for name, fn in entrymod.queries().items():
         for f in fn(spark, sf_dir).schema.fields:

@@ -234,23 +234,24 @@ def test_state_replay_idempotent_and_pointer_atomic(spark, stream_source, tmp_pa
     """A replayed batch_id (at-least-once foreachBatch recovery) must not
     double-count. Deleting the stream's OWN checkpoint while keeping the
     state makes the re-run re-fire every batch id from 0 — the worst-case
-    replay — and every one must be skipped by the _CURRENT guard."""
+    replay — and every one must be skipped by the commit-log guard."""
     import os
     import shutil
 
+    from java9_gc_log_parser_spark.commit_log import last_batch
     from java9_gc_log_parser_spark.streaming.state_stream import (
-        _current_batch_id,
         final_state,
         stream_conv_state,
     )
 
     out_root = str(tmp_path / "state_replay")
+    log = os.path.join(out_root, "metrics.jsonl")
     q = stream_conv_state(spark, stream_source, INPUT_SCHEMA, out_root,
                           max_files_per_trigger=16)
     q.awaitTermination(300)
 
     before = sorted(map(tuple, final_state(spark, out_root).collect()))
-    last = _current_batch_id(out_root)
+    last = last_batch(log)
     assert last is not None and last >= 1
     with open(os.path.join(out_root, "metrics.jsonl")) as f:
         metrics_before = f.read()
@@ -262,7 +263,7 @@ def test_state_replay_idempotent_and_pointer_atomic(spark, stream_source, tmp_pa
                            max_files_per_trigger=16)
     q2.awaitTermination(300)
 
-    assert _current_batch_id(out_root) == last
+    assert last_batch(log) == last
     assert sorted(map(tuple, final_state(spark, out_root).collect())) == before
     with open(os.path.join(out_root, "metrics.jsonl")) as f:
         assert f.read() == metrics_before  # heartbeat not duplicated
