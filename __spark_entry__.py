@@ -2,8 +2,10 @@
 
 ``queries()`` exposes every implemented operator from SURVEY.md §2 as a
 (spark, sf_dir) -> DataFrame callable; ``oracle_sql()`` carries the DuckDB
-equivalent. The transcripts input is synthesized from the ``events`` parquet
-via SQL shared verbatim between both engines
+equivalent. ``queries()`` is every top-level ``qNN_<name>`` function in
+query-number order, and ``oracle_sql()`` has the same keys. The
+transcripts input is synthesized from the ``events`` parquet via SQL
+shared verbatim between both engines
 (java9_gc_log_parser_spark/sources/transcripts.py), and the oracle re-derives
 expected outputs from the generative parameters — independent of the Spark
 regex parse (java9_gc_log_parser_spark/oracle.py).
@@ -12,8 +14,11 @@ regex parse (java9_gc_log_parser_spark/oracle.py).
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import sys
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -290,6 +295,13 @@ def _scratch(sf_dir: str, name: str) -> str:
     return f"/tmp/gclp_scratch/{name}_{tag}"
 
 
+def _fresh_scratch(sf_dir: str, name: str) -> str:
+    """``_scratch`` emptied of any earlier run's files."""
+    root = _scratch(sf_dir, name)
+    shutil.rmtree(root, ignore_errors=True)
+    return root
+
+
 def _await_drained(q, timeout_s: int = 600) -> None:
     """awaitTermination returns False on timeout — without the check the
     caller would fall through with the stream still running and read a
@@ -297,6 +309,33 @@ def _await_drained(q, timeout_s: int = 600) -> None:
     if not q.awaitTermination(timeout_s):
         q.stop()
         raise TimeoutError(f"stream did not drain within {timeout_s}s")
+
+
+@contextmanager
+def _shuffle_partitions(spark, n: str):
+    """Run the block at ``n`` shuffle partitions. A stream captures the
+    conf when it starts; restoring it keeps later batch queries at the
+    session's own setting."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _drain_to_parquet(sdf: DataFrame, outp: str, ck: str) -> None:
+    """Append a streaming DataFrame to a parquet sink until its backlog
+    is drained (``availableNow``)."""
+    q = (
+        sdf.writeStream.format("parquet")
+        .option("path", outp)
+        .option("checkpointLocation", ck)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_drained(q)
 
 
 def _stream_parts(spark) -> str:
@@ -343,12 +382,9 @@ def q26_stream_assembled(spark, sf_dir):
     over a file-scattered copy of the same transcripts; its ok-rows must equal
     the batch assembly — oracled against the SAME easm SQL as q06 (capability
     parity for the reference's live mode, GcLogStream.scala:45-51)."""
-    import shutil
-
     from java9_gc_log_parser_spark.streaming.assembler import stream_assembled
 
-    root = _scratch(sf_dir, "q26")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q26")
     src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
     # round-robin scatter: one event's lines spread across many files, so
     # micro-batches deliver them out of order across triggers (with 16 files
@@ -357,25 +393,14 @@ def q26_stream_assembled(spark, sf_dir):
     synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
     # stateful-stage partition count: sized to core count via
     # _stream_parts (measured 2-3x faster than the old fixed 8 — the
-    # Python state workers parallelize with partitions). The stream
-    # captures the conf at start; restore it for the later batch queries.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts(spark))
-    try:
-        q = (
+    # Python state workers parallelize with partitions).
+    with _shuffle_partitions(spark, _stream_parts(spark)):
+        _drain_to_parquet(
             stream_assembled(spark, src, _INPUT_SCHEMA,
                              max_files_per_trigger=16)
-            .filter(F.col("verdict") == "ok")
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .filter(F.col("verdict") == "ok"),
+            outp, ck,
         )
-        _await_drained(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(outp).select(*_ASSEMBLED_COLS)
 
 
@@ -396,10 +421,7 @@ def q55_stream_atleastonce_dedup(spark, sf_dir):
     drops those before they hit storage. State is one entry per key within
     the watermark horizon, partitioned by key hash — sized by the horizon,
     not the corpus."""
-    import shutil
-
-    root = _scratch(sf_dir, "q55")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q55")
     src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
     tdf = synth_transcripts(spark, sf_dir)
     tdf.repartition(16).write.parquet(src)
@@ -409,25 +431,15 @@ def q55_stream_atleastonce_dedup(spark, sf_dir):
     lo, hi = tdf.agg(F.min("ts"), F.max("ts")).first()
     delay_s = int((hi - lo).total_seconds()) + 60
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _jvm_state_parts(spark))
-    try:
-        q = (
+    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+        _drain_to_parquet(
             spark.readStream.schema(_INPUT_SCHEMA)
             .option("maxFilesPerTrigger", 16)
             .parquet(src)
             .withWatermark("ts", f"{delay_s} seconds")
-            .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"]),
+            outp, ck,
         )
-        _await_drained(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(outp).select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts"
     )
@@ -451,12 +463,10 @@ def q49_stream_late_dead_letter(spark, sf_dir):
     The sentinel is a start-only group: dangling state both engines
     silently discard, so it alters nothing downstream."""
     import datetime
-    import shutil
 
     from java9_gc_log_parser_spark.streaming.assembler import stream_assembled
 
-    root = _scratch(sf_dir, "q49")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q49")
     src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
     tdf = synth_transcripts(spark, sf_dir)
     lo, hi = tdf.agg(F.min("ts"), F.max("ts")).first()
@@ -467,11 +477,9 @@ def q49_stream_late_dead_letter(spark, sf_dir):
     lateness_ms = span_ms + 60_000
     tdf.repartition(8).write.parquet(src)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts(spark))
-    try:
+    with _shuffle_partitions(spark, _stream_parts(spark)):
         def drain():
-            q = (
+            _drain_to_parquet(
                 stream_assembled(spark, src, _INPUT_SCHEMA,
                                  lateness_ms=lateness_ms,
                                  max_files_per_trigger=32)
@@ -479,15 +487,9 @@ def q49_stream_late_dead_letter(spark, sf_dir):
                 .select(
                     "conv_id", "event_id",
                     F.col("verdict").alias("error_code"), "error_message",
-                )
-                .writeStream.format("parquet")
-                .option("path", outp)
-                .option("checkpointLocation", ck)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+                ),
+                outp, ck,
             )
-            _await_drained(q)
 
         drain()  # full backlog; watermark still below every deadline
         # ONE sentinel + ONE drain: the sentinel's batch moves the watermark
@@ -505,8 +507,6 @@ def q49_stream_late_dead_letter(spark, sf_dir):
             "append"
         ).parquet(src)
         drain()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(outp)
 
 
@@ -514,12 +514,9 @@ def q27_checkpoint_resume(spark, sf_dir):
     """Checkpointed micro-batch runner: partition-pruned batches, simulated
     crash after 2 of 4, resume, then the re-read assembled sink must equal
     the single-shot batch pipeline (oracled against q06's SQL + ts)."""
-    import shutil
-
     from java9_gc_log_parser_spark.plans import checkpoint as cp
 
-    root = _scratch(sf_dir, "q27")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q27")
     src, out = f"{root}/src", f"{root}/out"
     # 3 buckets, crash after 2, resume the last: the crash/resume contract
     # needs committed batches BEFORE the crash and pending ones AFTER it,
@@ -560,20 +557,16 @@ def q51_stream_metrics_feed(spark, sf_dir):
     (HttpFrontEnd.scala:24-37); the feed is its per-micro-batch metrics
     twin and this entry promotes it from pytest-only into CORRECTNESS."""
     import json as _json
-    import shutil
 
     from java9_gc_log_parser_spark.streaming.state_stream import (
         final_state,
         stream_conv_state,
     )
 
-    root = _scratch(sf_dir, "q51")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q51")
     src, out_root = f"{root}/src", f"{root}/out"
     synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts(spark))
-    try:
+    with _shuffle_partitions(spark, _stream_parts(spark)):
         # 32 files at 16/trigger -> 2 micro-batches. The feed's
         # cross-batch properties (contiguous batch ids, monotonic
         # cumulative convs, events summing across batches) need >= 2
@@ -583,8 +576,6 @@ def q51_stream_metrics_feed(spark, sf_dir):
         q = stream_conv_state(spark, src, _INPUT_SCHEMA, out_root,
                               max_files_per_trigger=16)
         _await_drained(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     with open(os.path.join(out_root, "metrics.jsonl")) as f:
         beats = sorted(
@@ -749,16 +740,13 @@ def q39_jsonl_source(spark, sf_dir):
     """Second source format through the storage seam (S1 variant): the same
     transcripts written to JSONL, read back with an explicit schema, parsed
     and classified — must equal the parquet-path q01 (same oracle SQL)."""
-    import shutil
-
     from java9_gc_log_parser_spark.storage import (
         TableRef,
         read_table,
         write_table,
     )
 
-    root = _scratch(sf_dir, "q39")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q39")
     ref = TableRef(f"{root}/transcripts", format="jsonl", schema=_INPUT_SCHEMA)
     write_table(synth_transcripts(spark, sf_dir), ref)
     return (
@@ -874,8 +862,6 @@ def q50_curation_e2e(spark, sf_dir):
     re-reads a compact materialized table instead of recomputing the whole
     upstream chain per branch. The final plan scans ONLY the last
     materialized stage (plan-asserted in tests/test_plans.py)."""
-    import shutil
-
     from java9_gc_log_parser_spark.operators.contamination import decontaminate
     from java9_gc_log_parser_spark.operators.dedupe import (
         dedup_clusters,
@@ -892,8 +878,7 @@ def q50_curation_e2e(spark, sf_dir):
     )
     from java9_gc_log_parser_spark.storage import read_table, write_table
 
-    root = _scratch(sf_dir, "q50")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q50")
     docs = _docs(spark, sf_dir)
 
     # stage 1+2: composite quality gate, then exact dedup WITHIN the kept
@@ -985,16 +970,13 @@ def q59_bucketed_join(spark, sf_dir):
     hashing (both Murmur3), giving exactly one file per bucket so the
     sorted in-bucket layout is also usable. Plan shape (no Exchange, no
     broadcast) is pinned in tests/test_plans.py."""
-    import shutil
-
     from java9_gc_log_parser_spark.operators.text_analysis import (
         quality_score,
         token_stats,
     )
     from java9_gc_log_parser_spark.storage import TableRef, write_table, read_table
 
-    root = _scratch(sf_dir, "q59")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q59")
     docs = _docs(spark, sf_dir)
     refs = {}
     for tag, stage in (("tok", token_stats), ("qual", quality_score)):
@@ -1089,13 +1071,10 @@ def q67_stream_cms_maintenance(spark, sf_dir):
     like the conv-state stream's. At 100 TB/day the running grid is a few
     KB however much history it summarizes — the streaming analogue of
     q60's audit."""
-    import shutil
-
     from java9_gc_log_parser_spark import commit_log
     from java9_gc_log_parser_spark.operators.sketches import cms_sketch
 
-    root = _scratch(sf_dir, "q67")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q67")
     src, out_root, ck = f"{root}/src", f"{root}/gens", f"{root}/ckpt"
     _docs(spark, sf_dir).repartition(8).write.parquet(src)
     os.makedirs(out_root, exist_ok=True)
@@ -1118,9 +1097,7 @@ def q67_stream_cms_maintenance(spark, sf_dir):
         return {"batch_id": batch_id}
 
     docs_schema = _docs(spark, sf_dir).schema
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _jvm_state_parts(spark))
-    try:
+    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
         q = (
             spark.readStream.schema(docs_schema)
             .option("maxFilesPerTrigger", 2)
@@ -1131,8 +1108,6 @@ def q67_stream_cms_maintenance(spark, sf_dir):
             .start()
         )
         _await_drained(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     final = commit_log.last_batch(log)
     return spark.read.parquet(f"{out_root}/batch={final}").select(
         F.col("row").cast("int").alias("row"),
@@ -1175,12 +1150,9 @@ def q66_stream_stream_join(spark, sf_dir):
     Reference capability: the reference correlates pause_start/pause_end
     lines of one GC event; this is the general two-stream correlation with
     a time bound."""
-    import shutil
-
     bucket_s = 600  # == the 10-minute range bound
 
-    root = _scratch(sf_dir, "q66")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q66")
     src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
     synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
     # min/max from the written files (parquet footer stats), not a second
@@ -1210,10 +1182,8 @@ def q66_stream_stream_join(spark, sf_dir):
         F.col("ts").alias("r_ts"),
         bucket.alias("r_bucket"),
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _jvm_state_parts(spark))
-    try:
-        q = (
+    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+        _drain_to_parquet(
             left.join(
                 right,
                 F.expr(
@@ -1221,17 +1191,9 @@ def q66_stream_stream_join(spark, sf_dir):
                     "AND r_ts >= l_ts "
                     "AND r_ts < l_ts + INTERVAL 10 MINUTES"
                 ),
-            )
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            outp, ck,
         )
-        _await_drained(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(outp).select(
         F.col("l_conv").alias("conv_id"),
         F.col("l_turn").cast("long").alias("user_turn_idx"),
@@ -1280,17 +1242,12 @@ def q64_stream_window_agg(spark, sf_dir):
     Reference capability: the reference's time-bucketed rollups
     (GcStateFlow.scala counters exposed over SSE) restated as the
     standard streaming windowed aggregate with late-data discipline."""
-    import shutil
-
-    root = _scratch(sf_dir, "q64")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q64")
     src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
     synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _jvm_state_parts(spark))
-    try:
-        q = (
+    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+        _drain_to_parquet(
             spark.readStream.schema(_INPUT_SCHEMA)
             .option("maxFilesPerTrigger", 16)
             .parquet(src)
@@ -1301,17 +1258,9 @@ def q64_stream_window_agg(spark, sf_dir):
                 F.col("_w.start").alias("window_start"),
                 "role",
                 F.col("n_turns").cast("long").alias("n_turns"),
-            )
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            outp, ck,
         )
-        _await_drained(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(outp).select("window_start", "role", "n_turns")
 
 
@@ -1358,17 +1307,12 @@ def q68_stream_session_window(spark, sf_dir):
     Reference capability: the reference scopes state to one JVM log = one
     session (GcStateFlow.scala); a multi-tenant transcript store needs the
     gap-based generalization, here in its streaming form."""
-    import shutil
-
-    root = _scratch(sf_dir, "q68")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q68")
     src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
     synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _jvm_state_parts(spark))
-    try:
-        q = (
+    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+        _drain_to_parquet(
             spark.readStream.schema(_INPUT_SCHEMA)
             .option("maxFilesPerTrigger", 16)
             .parquet(src)
@@ -1382,17 +1326,9 @@ def q68_stream_session_window(spark, sf_dir):
                 F.col("_w.start").alias("session_start"),
                 F.col("_w.end").alias("session_end"),
                 F.col("n_turns").cast("long").alias("n_turns"),
-            )
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            outp, ck,
         )
-        _await_drained(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(outp).select(
         "conv_id", "session_start", "session_end", "n_turns"
     )
@@ -1463,8 +1399,6 @@ def q72_incremental_refresh(spark, sf_dir):
     and dropping deleted ones; the oracle recomputes quality over the full
     mutated snapshot from scratch, so any key the incremental path missed,
     kept stale, or double-emitted fails the hash."""
-    import shutil
-
     from java9_gc_log_parser_spark.operators.cdc import (
         incremental_refresh,
         snapshot_diff,
@@ -1474,8 +1408,7 @@ def q72_incremental_refresh(spark, sf_dir):
         quality_score,
     )
 
-    root = _scratch(sf_dir, "q72")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q72")
     old = _docs(spark, sf_dir)
     quality_score(old).write.parquet(f"{root}/state")
     old_state = spark.read.parquet(f"{root}/state")
@@ -1544,19 +1477,14 @@ def q76_stream_static_join(spark, sf_dir):
     a watermarked tumbling-window aggregate per role_group in append mode.
     The oracle replays the batch join plus q64's emission rule: windows
     whose end exceeds the final watermark are withheld."""
-    import shutil
-
     from java9_gc_log_parser_spark.sources.dims import role_dim
 
-    root = _scratch(sf_dir, "q76")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q76")
     src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
     synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _jvm_state_parts(spark))
-    try:
-        q = (
+    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+        _drain_to_parquet(
             spark.readStream.schema(_INPUT_SCHEMA)
             .option("maxFilesPerTrigger", 16)
             .parquet(src)
@@ -1572,17 +1500,9 @@ def q76_stream_static_join(spark, sf_dir):
                 "role_group",
                 F.col("n_turns").cast("long").alias("n_turns"),
                 F.col("n_agent_turns").cast("long").alias("n_agent_turns"),
-            )
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            outp, ck,
         )
-        _await_drained(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(outp).select(
         "window_start", "role_group", "n_turns", "n_agent_turns"
     )
@@ -1598,8 +1518,6 @@ def q77_range_cluster_layout(spark, sf_dir):
     computed from the WRITTEN table, so the round trip is what's checked.
     The oracle replays boundaries (quantile_cont), assignment, and stats
     arithmetically from raw events."""
-    import shutil
-
     from java9_gc_log_parser_spark.operators.layout import (
         range_cluster,
         zone_map,
@@ -1620,8 +1538,7 @@ def q77_range_cluster_layout(spark, sf_dir):
         .repartition("cluster")
         .sortWithinPartitions("ts_us")
     )
-    root = _scratch(sf_dir, "q77")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q77")
     ref = TableRef(f"{root}/events_clustered", partition_by=("cluster",))
     write_table(clustered, ref)
     return zone_map(read_table(spark, ref), "ts_us").select(
@@ -1768,8 +1685,6 @@ def q86_zorder_layout(spark, sf_dir):
     column alone prunes to a strict subset of clusters (here 4 + 4 of 16) —
     the property no single-dim layout can give.
     """
-    import shutil
-
     from java9_gc_log_parser_spark.operators.layout import (
         zorder_cluster,
         zorder_zone_map,
@@ -1799,8 +1714,7 @@ def q86_zorder_layout(spark, sf_dir):
         .repartition("cluster")
         .sortWithinPartitions("zval")
     )
-    root = _scratch(sf_dir, "q86")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q86")
     ref = TableRef(f"{root}/events_zordered", partition_by=("cluster",))
     write_table(clustered, ref)
     return zorder_zone_map(
@@ -2030,16 +1944,13 @@ def q101_orc_storage_parity(spark, sf_dir):
     (string, int64) would hash-mismatch. Scan-level pruning (partition dir
     skip + ORC predicate pushdown) is plan-asserted in tests/test_plans.py.
     """
-    import shutil
-
     from java9_gc_log_parser_spark.storage import (
         TableRef,
         read_table,
         write_table,
     )
 
-    root = _scratch(sf_dir, "q101")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q101")
     ref = TableRef(f"{root}/docs_orc", format="orc",
                    partition_by=("source",))
     write_table(_docs(spark, sf_dir), ref)
@@ -2113,16 +2024,13 @@ def q105_schema_evolution_audit(spark, sf_dir):
     evolved-column null count, and an exact payload sum — the shape of a
     backfill-planning query over a decade of heterogenous batches. The
     oracle re-derives both batches from the raw documents."""
-    import shutil
-
     from java9_gc_log_parser_spark.storage import (
         TableRef,
         read_table,
         write_table,
     )
 
-    root = _scratch(sf_dir, "q105")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q105")
     docs = _docs(spark, sf_dir)
     write_table(
         docs.filter(F.col("doc_id") % 2 == 0)
@@ -2473,12 +2381,10 @@ def q126_stream_outer_join(spark, sf_dir):
     match rows, and is null only if every probe came back null. The
     drained+collapsed set must equal DuckDB's batch LEFT JOIN exactly."""
     import datetime
-    import shutil
 
     bucket_s = 600
 
-    root = _scratch(sf_dir, "q126")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q126")
     src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
     tdf = synth_transcripts(spark, sf_dir)
     tdf.repartition(32).write.parquet(src)
@@ -2508,7 +2414,7 @@ def q126_stream_outer_join(spark, sf_dir):
             F.col("ts").alias("r_ts"),
             bucket.alias("r_bucket"),
         )
-        q = (
+        _drain_to_parquet(
             left.join(
                 right,
                 F.expr(
@@ -2517,19 +2423,11 @@ def q126_stream_outer_join(spark, sf_dir):
                     "AND r_ts < l_ts + INTERVAL 10 MINUTES"
                 ),
                 "leftOuter",
-            )
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            outp, ck,
         )
-        _await_drained(q)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _jvm_state_parts(spark))
-    try:
+    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
         _drain()  # matches; watermark still below every horizon
         sent_ts = hi + datetime.timedelta(seconds=2 * delay_s + 2 * bucket_s)
         rows = [
@@ -2540,8 +2438,6 @@ def q126_stream_outer_join(spark, sf_dir):
             "append"
         ).parquet(src)
         _drain()  # no-data batch evicts surviving left state as nulls
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     out = spark.read.parquet(outp).filter(F.col("l_conv") != "__wm__")
     matched = out.filter(F.col("r_turn").isNotNull())
@@ -2778,13 +2674,10 @@ def q141_stream_index_maintenance(spark, sf_dir):
     (the no-corpus-re-scan plan pinned in tests/test_plans.py); at 100
     TB/day of new vectors the corpus is never re-read and the index
     grows append-only, partition-pruned by cell."""
-    import shutil
-
     from java9_gc_log_parser_spark.operators.similarity import ivfpq_train
     from java9_gc_log_parser_spark.streaming import index_maintenance as im
 
-    root = _scratch(sf_dir, "q141")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_scratch(sf_dir, "q141")
     src, out_root = f"{root}/src", f"{root}/gens"
     embs = _embs(spark, sf_dir)
     base = embs.filter(F.col("vec_id") % 3 != 2)
@@ -2798,16 +2691,12 @@ def q141_stream_index_maintenance(spark, sf_dir):
     cells_b = spark.createDataFrame(cells_rows, cells.schema)
     books_b = spark.createDataFrame(books_rows, books.schema)
     im.write_base_generation(base, cells_b, books_b, out_root)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _jvm_state_parts(spark))
-    try:
+    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
         im.maintain_index(
             spark, src, embs.schema, out_root,
             cells_rows, cells.schema, books_rows, books.schema,
             max_files_per_trigger=2,
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return im.read_index(spark, out_root).select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.col("cell").cast("long").alias("cell"),
@@ -7210,183 +7099,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    base = {
-        "q01_parse_classify": q01_parse_classify,
-        "q02_pause_end_fields": q02_pause_end_fields,
-        "q03_pause_events_sink": q03_pause_events_sink,
-        "q04_tool_calls_sink": q04_tool_calls_sink,
-        "q05_unmatched_sink": q05_unmatched_sink,
-        "q06_assembled_pauses": q06_assembled_pauses,
-        "q07_assembly_errors": q07_assembly_errors,
-        "q08_conv_state_final": q08_conv_state_final,
-        "q09_conv_state_scan": q09_conv_state_scan,
-        "q10_bucket_turn_counts": q10_bucket_turn_counts,
-        "q11_bucket_pause_stats": q11_bucket_pause_stats,
-        "q12_duration_histogram": q12_duration_histogram,
-        "q13_dedup_exact": q13_dedup_exact,
-        "q14_token_stats": q14_token_stats,
-        "q15_text_quality": q15_text_quality,
-        "q16_lang_id": q16_lang_id,
-        "q17_fingerprint": q17_fingerprint,
-        "q18_ngram_jaccard": q18_ngram_jaccard,
-        "q19_ann_bruteforce": q19_ann_bruteforce,
-        "q20_ann_lsh": q20_ann_lsh,
-        "q21_embedding_near_dup": q21_embedding_near_dup,
-        "q22_minhash_lsh": q22_minhash_lsh,
-        "q23_simhash_pairs": q23_simhash_pairs,
-        "q24_multimodal_features": q24_multimodal_features,
-        "q25_frame_sample": q25_frame_sample,
-        "q26_stream_assembled": q26_stream_assembled,
-        "q27_checkpoint_resume": q27_checkpoint_resume,
-        "q28_conv_state_json": q28_conv_state_json,
-        "q29_dedup_clusters": q29_dedup_clusters,
-        "q30_hash_split": q30_hash_split,
-        "q31_hash_sample": q31_hash_sample,
-        "q32_contamination": q32_contamination,
-        "q33_token_budget": q33_token_budget,
-        "q34_ann_ivf": q34_ann_ivf,
-        "q35_pii_redact": q35_pii_redact,
-        "q36_repetition": q36_repetition,
-        "q37_sessionize": q37_sessionize,
-        "q38_stratified_sample": q38_stratified_sample,
-        "q39_jsonl_source": q39_jsonl_source,
-        "q40_corpus_filter": q40_corpus_filter,
-        "q41_bigram_logprob": q41_bigram_logprob,
-        "q42_kmeans": q42_kmeans,
-        "q43_tfidf_topk": q43_tfidf_topk,
-        "q44_semdedup": q44_semdedup,
-        "q45_shard_manifest": q45_shard_manifest,
-        "q46_zipf_topk": q46_zipf_topk,
-        "q47_mixture_sample": q47_mixture_sample,
-        "q48_encoding_audit": q48_encoding_audit,
-        "q49_stream_late_dead_letter": q49_stream_late_dead_letter,
-        "q50_curation_e2e": q50_curation_e2e,
-        "q51_stream_metrics_feed": q51_stream_metrics_feed,
-        "q52_importance_resample": q52_importance_resample,
-        "q53_incremental_dedup": q53_incremental_dedup,
-        "q54_semantic_decontam": q54_semantic_decontam,
-        "q55_stream_atleastonce_dedup": q55_stream_atleastonce_dedup,
-        "q56_pack_sequences": q56_pack_sequences,
-        "q57_epoch_order": q57_epoch_order,
-        "q58_dup_ngram_gate": q58_dup_ngram_gate,
-        "q59_bucketed_join": q59_bucketed_join,
-        "q60_cms_heavy_hitters": q60_cms_heavy_hitters,
-        "q61_hll_distinct": q61_hll_distinct,
-        "q62_asof_join": q62_asof_join,
-        "q63_range_join": q63_range_join,
-        "q64_stream_window_agg": q64_stream_window_agg,
-        "q65_quantile_sketch": q65_quantile_sketch,
-        "q66_stream_stream_join": q66_stream_stream_join,
-        "q67_stream_cms_maintenance": q67_stream_cms_maintenance,
-        "q68_stream_session_window": q68_stream_session_window,
-        "q69_snapshot_diff": q69_snapshot_diff,
-        "q70_canonical_select": q70_canonical_select,
-        "q71_dup_span_scrub": q71_dup_span_scrub,
-        "q72_incremental_refresh": q72_incremental_refresh,
-        "q73_length_outlier_gate": q73_length_outlier_gate,
-        "q74_key_skew_report": q74_key_skew_report,
-        "q75_bloom_prune": q75_bloom_prune,
-        "q76_stream_static_join": q76_stream_static_join,
-        "q77_range_cluster_layout": q77_range_cluster_layout,
-        "q78_containment_dedup": q78_containment_dedup,
-        "q79_pricing_summary": q79_pricing_summary,
-        "q80_star_revenue": q80_star_revenue,
-        "q81_grouping_sets": q81_grouping_sets,
-        "q82_gapfill_locf": q82_gapfill_locf,
-        "q83_chunk_sliding": q83_chunk_sliding,
-        "q84_weighted_sample": q84_weighted_sample,
-        "q85_corpus_overlap": q85_corpus_overlap,
-        "q86_zorder_layout": q86_zorder_layout,
-        "q87_inverted_index": q87_inverted_index,
-        "q88_funnel_conversion": q88_funnel_conversion,
-        "q89_cohort_retention": q89_cohort_retention,
-        "q90_scd2_history": q90_scd2_history,
-        "q91_json_payload_audit": q91_json_payload_audit,
-        "q92_moving_window_stats": q92_moving_window_stats,
-        "q93_sliding_distinct_users": q93_sliding_distinct_users,
-        "q94_compaction_plan": q94_compaction_plan,
-        "q95_pagerank": q95_pagerank,
-        "q96_hybrid_rrf_search": q96_hybrid_rrf_search,
-        "q97_scd2_temporal_enrich": q97_scd2_temporal_enrich,
-        "q98_value_anomaly_profile": q98_value_anomaly_profile,
-        "q99_data_contract_audit": q99_data_contract_audit,
-        "q100_grouped_hll_distinct": q100_grouped_hll_distinct,
-        "q101_orc_storage_parity": q101_orc_storage_parity,
-        "q102_time_weighted_avg": q102_time_weighted_avg,
-        "q103_triangle_count": q103_triangle_count,
-        "q104_edit_distance_join": q104_edit_distance_join,
-        "q105_schema_evolution_audit": q105_schema_evolution_audit,
-        "q106_transition_matrix": q106_transition_matrix,
-        "q107_touch_attribution": q107_touch_attribution,
-        "q108_trend_ols": q108_trend_ols,
-        "q109_pmi_collocations": q109_pmi_collocations,
-        "q110_benford_audit": q110_benford_audit,
-        "q111_source_divergence": q111_source_divergence,
-        "q112_exact_quantile_select": q112_exact_quantile_select,
-        "q113_table_stats": q113_table_stats,
-        "q114_sliding_hll_distinct": q114_sliding_hll_distinct,
-        "q115_incremental_stats": q115_incremental_stats,
-        "q116_salted_join": q116_salted_join,
-        "q117_ppjoin_exact_jaccard": q117_ppjoin_exact_jaccard,
-        "q118_seasonal_anomaly": q118_seasonal_anomaly,
-        "q119_ann_recall": q119_ann_recall,
-        "q120_near_dup_recall": q120_near_dup_recall,
-        "q121_mad_outliers": q121_mad_outliers,
-        "q122_classifier_gate": q122_classifier_gate,
-        "q123_rtbf_purge": q123_rtbf_purge,
-        "q124_bpe_merges": q124_bpe_merges,
-        "q125_bpe_fertility": q125_bpe_fertility,
-        "q126_stream_outer_join": q126_stream_outer_join,
-        "q127_ahash_near_dup": q127_ahash_near_dup,
-        "q128_token_entropy": q128_token_entropy,
-        "q129_ab_ztest": q129_ab_ztest,
-        "q130_ann_pq": q130_ann_pq,
-        "q131_compaction_apply": q131_compaction_apply,
-        "q132_score_calibration": q132_score_calibration,
-        "q133_hll_set_ops": q133_hll_set_ops,
-        "q134_dataset_card": q134_dataset_card,
-        "q135_ann_ivf_pq": q135_ann_ivf_pq,
-        "q136_rendezvous_reshard": q136_rendezvous_reshard,
-        "q137_blocking_quality": q137_blocking_quality,
-        "q138_normalize_audit": q138_normalize_audit,
-        "q139_budget_waterfill": q139_budget_waterfill,
-        "q140_split_leakage": q140_split_leakage,
-        "q141_stream_index_maintenance": q141_stream_index_maintenance,
-        "q142_real_decode_audit": q142_real_decode_audit,
-        "q143_real_ahash_audit": q143_real_ahash_audit,
-        "q144_real_png_decode_audit": q144_real_png_decode_audit,
-    }
-    # Driver-gate rotation (VERDICT r3/r4 "Next round" #1): the driver's
-    # CORRECTNESS gate checks only the first ~50 ``queries()`` entries in
-    # dict insertion order. Round 4 verified q51-q100 (49/50 green; the
-    # sole red, q87, was a driver-canonicalizer schema crash, fixed this
-    # round via array_join). Round 5 puts q101+ first — the queries that
-    # have never had a driver row — then the two retests: the
-    # schema-fixed q87 and q11, the one remaining query whose green
-    # driver row (r1-r3 vintage) predates a semantic fix (the ROUND-seam
-    # repair, commit 36db70f). That makes every query's newest semantics
-    # driver-checked or queued in a window that fits the ~50-entry gate.
-    # ROUND-6 ROTATION (if a next round happens): q01-q50 first — their
-    # rows are r1-r3 vintage — i.e. swap the group keys so `n <= 50`
-    # returns (0, n).
-    # Names and semantics are untouched — pinned by
-    # tests/test_query_hash_pin.py against the pre-reorder sf0.01 value
-    # hashes in tests/fixtures/query_hashes_sf001.json.
-
-    def _num(name: str) -> int:
-        return int(name[1:name.index("_")])
-
-    def _rotation(name: str) -> tuple[int, int]:
-        n = _num(name)
-        if n >= 101:
-            return (0, n)  # round-5 driver window (never driver-checked)
-        if n in (87, 11):
-            return (1, n)  # retests: q87 schema fix, q11 stale driver row
-        if 51 <= n <= 100:
-            return (2, n)  # driver-green in r4
-        return (3, n)  # q01-q50 rest: driver-green r1-r3; round-6 window
-
-    return {name: base[name] for name in sorted(base, key=_rotation)}
+    """Every top-level ``qNN_<name>`` function, in query-number order."""
+    found = sorted(
+        (int(m[1]), name, fn) for name, fn in globals().items()
+        if (m := re.fullmatch(r"q(\d+)_\w+", name))
+    )
+    return {name: fn for _, name, fn in found}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -75,17 +75,16 @@ EVENT_CLASSES = (
 
 # --- header (GcLineParser.scala:45-47) ---------------------------------------
 # "[" offset "]" level "[" tag+ "]" opt(eventId)
-# groups: 1=int-part 2=frac-part 3=unit 4=level 5=raw tag list 6=event id 7=body
+# groups: 1=int-part 2=frac-part 3=unit 4=level 5=raw tag list 6=event id
 _TAG_ALT = "|".join(TAGS)
-#: header WITHOUT the trailing body capture — shared by HEADER_RE (two-pass
-#: variants: oracle SQL) and COMBINED_RE (single-pass JVM parse)
+#: header WITHOUT the trailing body capture; COMBINED_RE appends the body
+#: alternation for the single-pass JVM parse
 HEADER_PREFIX_RE = (
     r"^\s*\[\s*(\d+)(?:\.(\d+))?(ms|s)\s*\]\s*"
     r"\[\s*(info|warn)\s*\]\s*"
     rf"\[\s*((?:{_TAG_ALT})(?:\s*,\s*(?:{_TAG_ALT}))*\s*,?)\s*\]\s*"
     r"(?:GC\(\s*(\d+)\s*\))?\s*"
 )
-HEADER_RE = HEADER_PREFIX_RE + r"(.*)$"
 
 # --- body productions, in lineDesc alternation order -------------------------
 _PTYPE_ALT = "Full|Mixed|Cleanup|Young|Initial Mark|Remark"

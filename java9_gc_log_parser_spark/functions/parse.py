@@ -57,15 +57,9 @@ from pyspark.sql import functions as F
 
 from . import grammar as G
 
-_H = G.HEADER_RE
-
 #: unique observation names (two CollectMetrics nodes in one query must not
 #: share a name)
 _obs_ids = itertools.count()
-
-
-def _hdr(text: Column, idx: int) -> Column:
-    return F.regexp_extract(text, _H, idx)
 
 
 def _dur_ms(i: Column, f: Column, unit: Column) -> Column:

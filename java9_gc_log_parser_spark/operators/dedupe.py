@@ -88,21 +88,6 @@ def with_shingles(docs: DataFrame, n: int = 3, out: str = "sh") -> DataFrame:
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Column-expression shingles for one-shot use. Do NOT reference the
-    result more than once in a plan — use :func:`with_shingles` instead (see
-    module expression-shape note)."""
-    toks = tokens_col(F.lower(text))
-    k = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), k - n + 1),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    return F.array_distinct(
-        F.when(k >= n, grams).otherwise(F.array(F.array_join(toks, " ")))
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 1,

@@ -93,6 +93,23 @@ def prepare_source(
     return ref
 
 
+def write_sinks(
+    dfs: dict[str, DataFrame], dirs: dict[str, str]
+) -> dict[str, int]:
+    """Write each ``dfs[sink]`` to ``dirs[sink]``; return ``{sink: rows}``.
+
+    The row metric is collected DURING the write (an Observation piggybacks
+    on the write job) — re-reading the committed files to count them is one
+    extra scan of the entire output per sink, which at 100 TB means
+    re-reading everything you just wrote."""
+    rows = {}
+    for sink, out in dirs.items():
+        obs = Observation(f"sink_rows_{sink}")
+        write_table(dfs[sink].observe(obs, F.count(F.lit(1)).alias("rows")), out)
+        rows[sink] = int(obs.get["rows"])
+    return rows
+
+
 def run_batch(
     spark: SparkSession,
     source_path: TableRef | str,
@@ -150,17 +167,9 @@ def run_batch(
     t0 = time.perf_counter()
     dfs = build(transcripts, persist=True)
     rows_in = dfs["parsed"].count()
-    sink_rows = {}
-    for sink in SINKS:
-        out = os.path.join(root, sink, f"batch={batch_id}")
-        df: DataFrame = dfs[sink]
-        # row metric collected DURING the write (Observation piggybacks on
-        # the write job) — re-reading the committed files to count them is
-        # one extra scan of the entire output per sink per batch, which at
-        # 100 TB means re-reading everything you just wrote
-        obs = Observation(f"sink_rows_{sink}_{batch_id}")
-        write_table(df.observe(obs, F.count(F.lit(1)).alias("rows")), out)
-        sink_rows[sink] = int(obs.get["rows"])
+    sink_rows = write_sinks(
+        dfs, {s: os.path.join(root, s, f"batch={batch_id}") for s in SINKS}
+    )
     commit_check = None
     if verify_commit:
         # cheap integrity spot-check: read back the smallest sink and compare

@@ -141,15 +141,6 @@ def transcripts_sql(events_relation: str) -> str:
     return TRANSCRIPTS_SQL_TEMPLATE.format(events=events_relation)
 
 
-def duckdb_transcripts_cte(sf_dir: str | None = None) -> str:
-    """`transcripts AS (...)` CTE body for DuckDB oracle SQL.
-
-    The driver pre-registers `events` as a view, so reference it directly.
-    """
-    inner = transcripts_sql("events")
-    return f"transcripts AS ({inner})"
-
-
 def synth_transcripts(
     spark: SparkSession, sf_dir: str, replicate: int = 1
 ) -> DataFrame:

@@ -321,10 +321,3 @@ def path_exists(spark: SparkSession, location: str) -> bool:
     path = jvm.org.apache.hadoop.fs.Path(location)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(path))
-
-
-def table_exists(spark: SparkSession, table: TableRef | str) -> bool:
-    ref = _as_ref(table)
-    if ref.format == ICEBERG:
-        return spark.catalog.tableExists(ref.location)
-    return path_exists(spark, ref.location)

@@ -50,19 +50,17 @@ def main(argv: list[str] | None = None) -> None:
         print(json.dumps({"mode": "synth", "rows": spark.read.parquet(args.output).count()}))
         return
 
+    from java9_gc_log_parser_spark.plans import checkpoint as cp
+
     if args.mode == "batch":
         from java9_gc_log_parser_spark.plans.pipeline import build
 
         dfs = build(spark.read.parquet(args.input))
-        counts = {}
-        for sink in ("pause_events", "tool_calls", "dead_letter", "assembled",
-                     "conv_state"):
-            dfs[sink].write.mode("overwrite").parquet(f"{args.output}/{sink}")
-            counts[sink] = spark.read.parquet(f"{args.output}/{sink}").count()
+        counts = cp.write_sinks(
+            dfs, {s: f"{args.output}/{s}" for s in cp.SINKS}
+        )
         print(json.dumps({"mode": "batch", "sink_rows": counts}))
         return
-
-    from java9_gc_log_parser_spark.plans import checkpoint as cp
 
     source = args.input
     if args.prepare_source:

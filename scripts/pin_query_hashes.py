@@ -1,13 +1,15 @@
 """Capture per-query value hashes at sf0.01 to pin semantics across refactors.
 
-VERDICT r3 task #10: any reordering of ``queries()`` must not change any
-query's semantics. This script runs every ``__spark_entry__.queries()``
-entry at sf0.01 and records a SHA-256 over the order-insensitive,
-column-name-sorted normalized rows — the same normalization the local
-oracle-parity gate uses — into ``tests/fixtures/query_hashes_sf001.json``.
+VERDICT r3 task #10: no reordering of ``queries()`` (query-number order,
+derived from the ``qNN_`` definitions) and no refactor of a query body may
+change any query's semantics. This script runs every
+``__spark_entry__.queries()`` entry at sf0.01 and records a SHA-256 over
+the order-insensitive, column-name-sorted normalized rows — the same
+normalization the local oracle-parity gate uses — into
+``tests/fixtures/query_hashes_sf001.json``.
 
 ``tests/test_query_hash_pin.py`` then asserts current results match the
-committed fixture, so a dict reorder (or any refactor) that silently
+committed fixture, so a reorder (or any refactor) that silently
 changes values is caught locally before the driver sees it.
 
 Usage:

@@ -1,14 +1,13 @@
-"""Value-hash pin for the queries() driver-gate rotation (VERDICT r3 #10).
+"""Value-hash pin for ``__spark_entry__.queries()`` (VERDICT r3 #10).
 
-The round-4 reorder of ``__spark_entry__.queries()`` (q51-q100 first so the
-driver's ~50-entry CORRECTNESS gate reaches them) must not change any
-query's semantics. ``scripts/pin_query_hashes.py --write`` captured every
-query's order-insensitive sf0.01 value hash BEFORE the reorder into
+No reorder or refactor of ``__spark_entry__`` may change any query's
+semantics. ``scripts/pin_query_hashes.py --write`` captured every query's
+order-insensitive sf0.01 value hash into
 ``tests/fixtures/query_hashes_sf001.json``; this test re-runs a
-deterministic sample spanning both rotation groups and asserts the hashes
-are byte-identical. The full 134-query sweep is the script itself (run
-once per round; see BENCH_MANIFEST.md) — here we keep the default pytest
-wall bounded by pinning the cheap, fully deterministic subset.
+deterministic sample spread across the query-number range and asserts the
+hashes are byte-identical. The full sweep is the script itself (run once
+per round; see BENCH_MANIFEST.md) — here we keep the default pytest wall
+bounded by pinning the cheap, fully deterministic subset.
 """
 
 from __future__ import annotations
@@ -26,8 +25,7 @@ from scripts.pin_query_hashes import FIXTURE, query_hash  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
-# Cheap deterministic queries spanning all three rotation groups
-# (q01-q50 back, q51-q100 driver window, q101+ round-5 queue).
+# Cheap deterministic queries spread across q01-q50, q51-q100 and q101+.
 PINNED_SAMPLE = [
     "q01_parse_classify",
     "q03_pause_events_sink",
@@ -72,23 +70,13 @@ def test_hash_unchanged(spark01, fixture_hashes, name):
 
 
 def test_rotation_shape():
-    """Round-5 driver window (first ~50 insertion-order entries): every
-    q101+ query (never driver-checked before r5), then the two retests
-    (q11 stale driver row, q87 schema fix), then q51-q100 (r4-green),
-    then the rest of q01-q50 (r1-r3-green, queued for a round-6
-    window)."""
+    """``queries()`` is in query-number order, so q01-q50 come first, and
+    every query has an oracle and every oracle a query."""
     names = list(entrymod.queries())
     nums = [int(n[1:n.index("_")]) for n in names]
-    n_new = sum(1 for v in nums if v >= 101)
-    assert nums[:n_new] == sorted(v for v in nums if v >= 101)
-    assert nums[n_new:n_new + 2] == [11, 87]
-    assert sorted(nums[n_new + 2:-49]) == [
-        v for v in range(51, 101) if v != 87
-    ]
-    assert sorted(nums[-49:]) == [v for v in range(1, 51) if v != 11]
-    # every query still has an oracle or documented omission
-    oracles = entrymod.oracle_sql()
-    assert set(oracles) <= set(names)
+    assert all(a < b for a, b in zip(nums, nums[1:]))
+    assert nums[:50] == list(range(1, 51))
+    assert set(names) == set(entrymod.oracle_sql())
 
 
 def test_no_complex_typed_output_columns(spark, sf_dir):

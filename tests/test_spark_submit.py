@@ -7,11 +7,13 @@ REAL spark-submit subprocess — package importable only through the zip
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 import subprocess
 
+import pyarrow.parquet as pq
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -69,3 +71,9 @@ def test_package_and_submit_synth_then_batch(tmp_path):
     assert counts["dead_letter"] > 0
     assert counts["assembled"] > 0
     assert counts["conv_state"] > 0
+    # the counts are Observations on the write jobs, not read-backs: each
+    # must equal the rows actually committed under out/<sink>
+    for sink, n in counts.items():
+        files = glob.glob(str(tmp_path / "out" / sink / "*.parquet"))
+        assert files, sink
+        assert sum(pq.read_metadata(f).num_rows for f in files) == n, sink
