@@ -1919,7 +1919,7 @@ def q99_data_contract_audit(spark, sf_dir):
 
 def q100_grouped_hll_distinct(spark, sf_dir):
     """Distinct users per event_type via per-group mergeable HLL (q61's
-    register construction restated per group): shards sketch
+    register table, grouped): shards sketch
     independently, registers merge by elementwise max per group — the
     scale pattern that replaces an exact two-phase distinct over every
     (group, user) pair with 256 small integers per group. Estimate audited
@@ -3000,6 +3000,29 @@ _GEN_WIN_SQL = ",\n  ".join(
     f" OVER w, 0) AS {c}"
     for c in ["eden_after", "survivor_after", "old_after", "humongous_after"]
 )
+
+# HLL oracle fragments (sketches.hll_register_table /
+# hll_estimate_from_registers): the string-space leading-zero rank over a
+# CTE with columns (z, tail), and the linear-counting estimate over
+# (s, zeros); alpha_256 * 256^2 is interpolated with repr so both engines
+# see the same double.
+_HLL_AMM = 0.7213 / (1.0 + 1.079 / 256.0) * 256.0 * 256.0
+
+_HLL_RANK_SQL = """CASE WHEN z = 12 THEN 49
+              ELSE z * 4 + 1 +
+                CASE substr(tail, z + 1, 1)
+                  WHEN '1' THEN 3
+                  WHEN '2' THEN 2 WHEN '3' THEN 2
+                  WHEN '4' THEN 1 WHEN '5' THEN 1
+                  WHEN '6' THEN 1 WHEN '7' THEN 1
+                  ELSE 0 END
+         END AS rank"""
+
+_HLL_EST_SQL = f"""CASE WHEN ({_HLL_AMM!r}
+                    / (s + zeros)) <= 640.0 AND zeros > 0
+              THEN 256.0 * ln(256.0 / zeros)
+              ELSE {_HLL_AMM!r}
+                   / (s + zeros) END AS est"""
 
 _ORACLES = {
     "q01_parse_classify": O.with_ctes() + """
@@ -4239,15 +4262,7 @@ lz AS (
 ),
 rk AS (
   SELECT register,
-         CASE WHEN z = 12 THEN 49
-              ELSE z * 4 + 1 +
-                CASE substr(tail, z + 1, 1)
-                  WHEN '1' THEN 3
-                  WHEN '2' THEN 2 WHEN '3' THEN 2
-                  WHEN '4' THEN 1 WHEN '5' THEN 1
-                  WHEN '6' THEN 1 WHEN '7' THEN 1
-                  ELSE 0 END
-         END AS rank
+         {_HLL_RANK_SQL}
   FROM lz
 ),
 regs AS (SELECT register, MAX(rank) AS max_rank FROM rk GROUP BY register),
@@ -4261,11 +4276,7 @@ calc AS (
   FROM ag CROSS JOIN ex
 ),
 e AS (
-  SELECT CASE WHEN ({0.7213 / (1.0 + 1.079 / 256.0) * 256.0 * 256.0!r}
-                    / (s + zeros)) <= 640.0 AND zeros > 0
-              THEN 256.0 * ln(256.0 / zeros)
-              ELSE {0.7213 / (1.0 + 1.079 / 256.0) * 256.0 * 256.0!r}
-                   / (s + zeros) END AS est,
+  SELECT {_HLL_EST_SQL},
          exact_distinct
   FROM calc
 )
@@ -5408,15 +5419,7 @@ WITH pairs AS (
   FROM pairs
 ), rk AS (
   SELECT event_type, register,
-         CASE WHEN z = 12 THEN 49
-              ELSE z * 4 + 1 +
-                CASE substr(tail, z + 1, 1)
-                  WHEN '1' THEN 3
-                  WHEN '2' THEN 2 WHEN '3' THEN 2
-                  WHEN '4' THEN 1 WHEN '5' THEN 1
-                  WHEN '6' THEN 1 WHEN '7' THEN 1
-                  ELSE 0 END
-         END AS rank
+         {_HLL_RANK_SQL}
   FROM lz
 ),
 regs AS (SELECT event_type, register, MAX(rank) AS max_rank
@@ -5432,11 +5435,7 @@ calc AS (
 ),
 e AS (
   SELECT event_type,
-         CASE WHEN ({0.7213 / (1.0 + 1.079 / 256.0) * 256.0 * 256.0!r}
-                    / (s + zeros)) <= 640.0 AND zeros > 0
-              THEN 256.0 * ln(256.0 / zeros)
-              ELSE {0.7213 / (1.0 + 1.079 / 256.0) * 256.0 * 256.0!r}
-                   / (s + zeros) END AS est,
+         {_HLL_EST_SQL},
          exact_distinct
   FROM calc
 )
@@ -6277,15 +6276,14 @@ FROM bk GROUP BY bucket
 """
 
 def _hll_est_sql(src: str, keys: str) -> str:
-    """Estimate block over a (keys, register, max_rank) table — the q100
-    math restated for arbitrary grouping keys."""
-    amm = 0.7213 / (1.0 + 1.079 / 256.0) * 256.0 * 256.0
+    """Estimate block over a (keys, register, max_rank) table: the
+    :data:`_HLL_EST_SQL` estimate for arbitrary grouping keys."""
     return f"""(
   SELECT {keys}, CAST(FLOOR(ROUND(est, 6)) AS BIGINT) AS est FROM (
     SELECT {keys},
-      CASE WHEN ({amm!r} / (s + zeros)) <= 640.0 AND zeros > 0
+      CASE WHEN ({_HLL_AMM!r} / (s + zeros)) <= 640.0 AND zeros > 0
            THEN 256.0 * ln(256.0 / zeros)
-           ELSE {amm!r} / (s + zeros) END AS est
+           ELSE {_HLL_AMM!r} / (s + zeros) END AS est
     FROM (
       SELECT {keys},
              SUM(1::BIGINT << (49 - max_rank))::DOUBLE
@@ -6308,15 +6306,7 @@ WITH pairs AS (
   FROM pairs
 ), rk AS (
   SELECT event_type, register,
-         CASE WHEN z = 12 THEN 49
-              ELSE z * 4 + 1 +
-                CASE substr(tail, z + 1, 1)
-                  WHEN '1' THEN 3
-                  WHEN '2' THEN 2 WHEN '3' THEN 2
-                  WHEN '4' THEN 1 WHEN '5' THEN 1
-                  WHEN '6' THEN 1 WHEN '7' THEN 1
-                  ELSE 0 END
-         END AS rank
+         {_HLL_RANK_SQL}
   FROM lz
 ),
 regs AS (SELECT event_type, register, MAX(rank) AS max_rank
@@ -6603,15 +6593,7 @@ pairs AS (
   FROM pairs
 ), rk AS (
   SELECT col, register,
-         CASE WHEN z = 12 THEN 49
-              ELSE z * 4 + 1 +
-                CASE substr(tail, z + 1, 1)
-                  WHEN '1' THEN 3
-                  WHEN '2' THEN 2 WHEN '3' THEN 2
-                  WHEN '4' THEN 1 WHEN '5' THEN 1
-                  WHEN '6' THEN 1 WHEN '7' THEN 1
-                  ELSE 0 END
-         END AS rank
+         {_HLL_RANK_SQL}
   FROM lz
 ),
 regs AS (SELECT col, register, MAX(rank) AS max_rank
@@ -6624,11 +6606,7 @@ calc AS (
 ),
 e AS (
   SELECT col,
-         CASE WHEN ({0.7213 / (1.0 + 1.079 / 256.0) * 256.0 * 256.0!r}
-                    / (s + zeros)) <= 640.0 AND zeros > 0
-              THEN 256.0 * ln(256.0 / zeros)
-              ELSE {0.7213 / (1.0 + 1.079 / 256.0) * 256.0 * 256.0!r}
-                   / (s + zeros) END AS est
+         {_HLL_EST_SQL}
   FROM calc
 )
 SELECT basic.col AS column, n_rows, n_null, min_key, max_key,
@@ -6649,15 +6627,7 @@ WITH pairs AS (
   FROM pairs
 ), rk AS (
   SELECT b, register,
-         CASE WHEN z = 12 THEN 49
-              ELSE z * 4 + 1 +
-                CASE substr(tail, z + 1, 1)
-                  WHEN '1' THEN 3
-                  WHEN '2' THEN 2 WHEN '3' THEN 2
-                  WHEN '4' THEN 1 WHEN '5' THEN 1
-                  WHEN '6' THEN 1 WHEN '7' THEN 1
-                  ELSE 0 END
-         END AS rank
+         {_HLL_RANK_SQL}
   FROM lz
 ),
 regs AS (SELECT b, register, MAX(rank) AS max_rank FROM rk GROUP BY 1, 2),
@@ -6687,11 +6657,7 @@ calc AS (
 ),
 e AS (
   SELECT t, act,
-         CASE WHEN ({0.7213 / (1.0 + 1.079 / 256.0) * 256.0 * 256.0!r}
-                    / (s + zeros)) <= 640.0 AND zeros > 0
-              THEN 256.0 * ln(256.0 / zeros)
-              ELSE {0.7213 / (1.0 + 1.079 / 256.0) * 256.0 * 256.0!r}
-                   / (s + zeros) END AS est,
+         {_HLL_EST_SQL},
          n_users_exact
   FROM calc
 )
@@ -6738,15 +6704,7 @@ pairs AS (
   FROM pairs
 ), rk AS (
   SELECT col, register,
-         CASE WHEN z = 12 THEN 49
-              ELSE z * 4 + 1 +
-                CASE substr(tail, z + 1, 1)
-                  WHEN '1' THEN 3
-                  WHEN '2' THEN 2 WHEN '3' THEN 2
-                  WHEN '4' THEN 1 WHEN '5' THEN 1
-                  WHEN '6' THEN 1 WHEN '7' THEN 1
-                  ELSE 0 END
-         END AS rank
+         {_HLL_RANK_SQL}
   FROM lz
 ),
 regs AS (SELECT col, register, MAX(rank) AS max_rank
@@ -6762,11 +6720,7 @@ calc AS (
 ),
 e AS (
   SELECT col,
-         CASE WHEN ({0.7213 / (1.0 + 1.079 / 256.0) * 256.0 * 256.0!r}
-                    / (s + zeros)) <= 640.0 AND zeros > 0
-              THEN 256.0 * ln(256.0 / zeros)
-              ELSE {0.7213 / (1.0 + 1.079 / 256.0) * 256.0 * 256.0!r}
-                   / (s + zeros) END AS est,
+         {_HLL_EST_SQL},
          exact_distinct
   FROM calc
 )

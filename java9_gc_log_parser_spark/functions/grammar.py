@@ -40,7 +40,6 @@ from __future__ import annotations
 
 # --- vocabularies (GcLineParser.scala / GCLogFileModel.scala) ---------------
 
-LEVELS = ("info", "warn")
 TAGS = ("gc", "start", "heap", "phases")
 PAUSE_TYPES = {  # token -> canonical name (GcLineParser.scala:63-70)
     "Young": "Young",
@@ -140,14 +139,13 @@ _BODY_ALT = "|".join(
         _unanchored(NR_REGIONS_RE),
         _unanchored(PAUSE_END_RE),
         _unanchored(PAUSE_START_RE),
-        "(Concurrent Cycle)",
-        "(To-space exhausted)",
-        "(Using G1)",
+        f"({_unanchored(CONCURRENT_CYCLE_RE)})",
+        f"({_unanchored(TO_SPACE_RE)})",
+        f"({_unanchored(USING_G1_RE)})",
         _unanchored(REGION_SIZE_RE),
         _unanchored(PHASE_RE),
     ]
 )
-MEGA_BODY_RE = "^(?:" + _BODY_ALT + ")"
 MEGA_BODY_GROUPS = 21
 
 # Single-pass line grammar: header prefix + OPTIONAL body alternation, ONE
@@ -158,21 +156,9 @@ MEGA_BODY_GROUPS = 21
 # mismatch fails the whole regex. Every body production has at least one
 # mandatory non-empty capture, so body participation is detectable from the
 # groups alone. Alternation order is preserved, so first-match-wins equals
-# the reference's lineDesc cascade exactly as in the two-pass variant.
+# the reference's lineDesc cascade exactly.
 COMBINED_RE = HEADER_PREFIX_RE + "(?:" + _BODY_ALT + ")?"
 COMBINED_GROUPS = 6 + MEGA_BODY_GROUPS
-
-# Ordered cascade: (event_class, body_regex). First match wins.
-BODY_CASCADE = (
-    ("nr_regions", NR_REGIONS_RE),
-    ("pause_end", PAUSE_END_RE),
-    ("pause_start", PAUSE_START_RE),
-    ("concurrent_cycle", CONCURRENT_CYCLE_RE),
-    ("to_space_exhausted", TO_SPACE_RE),
-    ("using_g1", USING_G1_RE),
-    ("region_size", REGION_SIZE_RE),
-    ("phase", PHASE_RE),
-)
 
 # Reference error strings, kept byte-identical for parity tests
 # (CollectPauseLines.scala:32,43).

@@ -59,8 +59,6 @@ ASSEMBLED_COLUMNS = [
     "ts",
 ]
 
-DEAD_LETTER_COLUMNS = ["conv_id", "event_id", "error_code", "error_message", "ts"]
-
 
 def _last(value: Column, cond: Column) -> Column:
     """Last-write-wins under ``cond``, ordered by turn_idx (null keys ignored)."""

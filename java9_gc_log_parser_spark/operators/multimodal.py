@@ -64,10 +64,6 @@ def _probe_pil():
 
 _PIL_IMAGE = _probe_pil()
 
-#: True when ANY real still-image decode path exists. The pure-Python PPM
-#: (P6) decoder below always works — so the real path is exercisable (and
-#: parity-tested) even in codec-less containers; PIL widens it to PNG/JPEG.
-REAL_DECODERS_AVAILABLE = True
 PIL_AVAILABLE = _PIL_IMAGE is not None
 
 

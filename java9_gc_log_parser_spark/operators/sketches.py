@@ -62,16 +62,17 @@ def _cms_bucket(term: Column, row: int) -> Column:
     )
 
 
+def _terms(docs: DataFrame) -> DataFrame:
+    """One ``term`` row per lowercase whitespace token occurrence."""
+    return docs.select(
+        F.explode(tokens_col(F.lower(F.col("text")))).alias("term")
+    )
+
+
 def _term_counts(docs: DataFrame) -> DataFrame:
     """Exact occurrence count per lowercase whitespace token (the q46
     reduction): one map-side-combinable hash agg."""
-    return (
-        docs.select(
-            F.explode(tokens_col(F.lower(F.col("text")))).alias("term")
-        )
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return _terms(docs).groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def cms_sketch(docs: DataFrame) -> DataFrame:
@@ -141,21 +142,27 @@ HLL_REGISTERS = 256
 _HLL_RANK_BITS = 48
 
 
-def hll_registers(docs: DataFrame) -> DataFrame:
-    """HyperLogLog-shaped register table from the distinct tokens:
-    (register, max_rank), <= 256 rows.
+def hll_register_table(
+    df: DataFrame, group_cols: tuple[str, ...], item: Column
+) -> DataFrame:
+    """The one HLL register construction: ``(group..., register,
+    max_rank)`` rows from the distinct items per group, <= 256 rows per
+    group. Every HLL query builds its registers here, and callers may
+    PERSIST the table and merge later batches by elementwise max instead
+    of re-scanning history (see profiling.merge_stats_state / q115).
 
-    register = first 2 md5 hex chars of the token; rank = 1 + number of
-    leading zero bits in the next 48 hash bits. Registers merge by
-    elementwise max — the mergeable-summary contract again. Determinism:
-    everything is md5 string arithmetic, so the oracle rebuilds the exact
-    same 256 registers.
+    register = first 2 md5 hex chars of the item; rank = 1 + number of
+    leading zero bits in the next 48 hash bits. The leading-zero count
+    is computed entirely in STRING space (4 bits per leading '0' hex
+    char + the leading zeros inside the first non-zero hex digit), never
+    by a float log2, which has cross-engine boundary risk at exact
+    powers of two — so the DuckDB oracle rebuilds the same registers
+    bit for bit.
     """
-    h = F.md5(F.col("term"))
-    # leading-zero count of the 48-bit value, computed entirely in STRING
-    # space so both engines agree bit-for-bit (float log2 has cross-engine
-    # boundary risk at exact powers of two): 4 bits per leading '0' hex
-    # char + the leading zeros inside the first non-zero hex digit.
+    pairs = df.select(
+        *group_cols, item.cast("string").alias("_item")
+    ).distinct()
+    h = F.md5(F.col("_item"))
     hx = F.substring(h, 3, 12)
     z = F.length(F.regexp_extract(hx, "^(0*)", 1))
     first = F.substring(hx, z + 1, 1)  # '' iff all 12 chars are zero
@@ -169,70 +176,90 @@ def hll_registers(docs: DataFrame) -> DataFrame:
         z * 4 + digit_lz + 1
     )
     return (
-        docs.select(
-            F.explode(tokens_col(F.lower(F.col("text")))).alias("term")
-        )
-        .distinct()
-        .select(
-            F.conv(F.substring(h, 1, 2), 16, 10).cast("int").alias("register"),
+        pairs.select(
+            *group_cols,
+            F.conv(F.substring(h, 1, 2), 16, 10).cast("int")
+            .alias("register"),
             rank.cast("int").alias("rank"),
         )
-        .groupBy("register")
+        .groupBy(*group_cols, "register")
         .agg(F.max("rank").alias("max_rank"))
     )
 
 
-def hll_distinct_report(docs: DataFrame) -> DataFrame:
-    """One-row audit: HLL estimate vs exact distinct-token count, with the
-    relative error (rounded 6dp, the cross-engine float contract).
+def hll_estimate_from_registers(
+    regs: DataFrame, group_cols: tuple[str, ...]
+) -> DataFrame:
+    """The one HLL estimator, per group of a ``(group..., register,
+    max_rank)`` table from :func:`hll_register_table`.
 
-    Standard HLL estimator with the small-range (linear counting)
+    Standard estimator with the small-range (linear counting)
     correction: E = a_m * m^2 / sum(2^-M_j) over all m registers (absent
     registers count as 2^0 = 1); if E <= 5/2 m and any register is empty,
-    E = m * ln(m / V) with V = number of empty registers. a_256 = 0.7213 /
-    (1 + 1.079/256). Both engines compute the identical double expression
-    and round to 6dp BEFORE the final cast to long, so the rows hash-match.
+    E = m * ln(m / V) with V = number of empty registers, and a_m the
+    large-m bias constant of Flajolet et al. (2007).
+
+    Float contract: sum(2^-rank) must be ORDER-INDEPENDENT (float sums
+    aren't, and Spark folds partitions in nondeterministic order), so it
+    is scaled by 2^49: every term 2^(49-rank) is an exact integer (rank
+    <= 49 -> term <= 2^48; 256 terms -> sum <= 2^56, inside BIGINT),
+    summed exactly as longs, and divided back by 2^49 in double — ONE
+    deterministic rounding. Both engines then compute the identical
+    double expression and round it to 6dp, so the rows hash-match.
+
+    Output: ``(group..., hll_estimate, _est6)`` — ``_est6`` is that
+    6-dp double, which audits compute ``rel_error`` from;
+    ``hll_estimate`` is its floor as a long.
     """
-    regs = hll_registers(docs)
     m = float(HLL_REGISTERS)
     alpha = 0.7213 / (1.0 + 1.079 / m)
-    # sum(2^-rank) must be ORDER-INDEPENDENT (float sums aren't, and Spark
-    # folds partitions in nondeterministic order): scale by 2^49 so every
-    # term 2^(49-rank) is an exact integer (rank <= 49 -> term <= 2^48;
-    # 256 terms -> sum <= 2^56, inside BIGINT), sum exactly as longs, and
-    # divide back by 2^49 in double — exactly ONE deterministic rounding,
-    # identical in both engines.
-    agg = regs.agg(
+    agg = regs.groupBy(*group_cols).agg(
         F.sum(
             F.expr(f"shiftleft(1L, {_HLL_RANK_BITS + 1} - max_rank)")
         ).alias("_s_int"),
         F.count(F.lit(1)).alias("_nz"),
-    ).select(
-        (F.col("_s_int").cast("double") / F.lit(float(2 ** 49))).alias("_s"),
-        "_nz",
-    )
-    exact = (
-        docs.select(
-            F.explode(tokens_col(F.lower(F.col("text")))).alias("term")
-        )
-        .agg(F.countDistinct("term").alias("exact_distinct"))
     )
     zeros = F.lit(m) - F.col("_nz")
-    raw = F.lit(alpha * m * m) / (F.col("_s") + zeros)
+    raw = F.lit(alpha * m * m) / (
+        F.col("_s_int").cast("double") / F.lit(float(2 ** 49)) + zeros
+    )
     est = F.when(
         (raw <= F.lit(2.5 * m)) & (zeros > 0),
         F.lit(m) * F.log(F.lit(m) / zeros),
     ).otherwise(raw)
+    return agg.select(*group_cols, F.round(est, 6).alias("_est6")).select(
+        *group_cols,
+        F.floor("_est6").cast("long").alias("hll_estimate"),
+        "_est6",
+    )
+
+
+def _rel_error(exact: str) -> Column:
+    """Audit column: the 6-dp estimate's relative error against ``exact``."""
+    return F.round(
+        (F.col("_est6") - F.col(exact)) / F.col(exact), 6
+    ).alias("rel_error")
+
+
+def hll_registers(docs: DataFrame) -> DataFrame:
+    """:func:`hll_register_table` over the distinct lowercase tokens:
+    ``(register, max_rank)``, <= 256 rows."""
+    return hll_register_table(_terms(docs), (), F.col("term"))
+
+
+def hll_distinct_report(docs: DataFrame) -> DataFrame:
+    """One-row audit: HLL estimate of the distinct lowercase tokens vs
+    the exact count, with the relative error. Registers and estimate are
+    :func:`hll_register_table` and :func:`hll_estimate_from_registers`.
+    """
+    exact = _terms(docs).agg(F.countDistinct("term").alias("exact_distinct"))
     return (
-        agg.join(exact)
+        hll_estimate_from_registers(hll_registers(docs), ())
+        .join(exact)
         .select(
-            F.floor(F.round(est, 6)).cast("long").alias("hll_estimate"),
+            "hll_estimate",
             F.col("exact_distinct").cast("long").alias("exact_distinct"),
-            F.round(
-                (F.round(est, 6) - F.col("exact_distinct"))
-                / F.col("exact_distinct"),
-                6,
-            ).alias("rel_error"),
+            _rel_error("exact_distinct"),
         )
     )
 
@@ -302,68 +329,30 @@ def grouped_hll_distinct(
     sketches independently, registers merge by elementwise max per group,
     and the estimate reads 256 small integers per group.
 
-    Same register construction, string-space leading-zero rank, exact
-    integer 2^(49-rank) summation, linear-counting correction, and 6-dp
-    float contract as :func:`hll_distinct_report` (q61) — restated per
-    group so the DuckDB oracle replays every group's registers exactly.
+    Registers and estimate are :func:`hll_register_table` and
+    :func:`hll_estimate_from_registers`, so the DuckDB oracle replays
+    every group's registers exactly.
 
     Output, one row per group: ``(<group_col>, hll_estimate,
     exact_distinct, rel_error)``. (The exact leg exists for the audit; at
     100 TB only the sketch side runs.)
     """
-    pairs = df.select(F.col(group_col), item.cast("string").alias("_item")).distinct()
-    hi = F.md5(F.col("_item"))
-    hxi = F.substring(hi, 3, 12)
-    zi = F.length(F.regexp_extract(hxi, "^(0*)", 1))
-    firsti = F.substring(hxi, zi + 1, 1)
-    digit_lzi = (
-        F.when(firsti == "1", 3)
-        .when(firsti.isin("2", "3"), 2)
-        .when(firsti.isin("4", "5", "6", "7"), 1)
-        .otherwise(0)
-    )
-    ranki = F.when(zi == 12, F.lit(_HLL_RANK_BITS + 1)).otherwise(
-        zi * 4 + digit_lzi + 1
-    )
-    regs = (
-        pairs.select(
-            group_col,
-            F.conv(F.substring(hi, 1, 2), 16, 10).cast("int").alias("register"),
-            ranki.cast("int").alias("rank"),
-        )
-        .groupBy(group_col, "register")
-        .agg(F.max("rank").alias("max_rank"))
-    )
-    m = float(HLL_REGISTERS)
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    agg = regs.groupBy(group_col).agg(
-        F.sum(
-            F.expr(f"shiftleft(1L, {_HLL_RANK_BITS + 1} - max_rank)")
-        ).alias("_s_int"),
-        F.count(F.lit(1)).alias("_nz"),
-    ).select(
-        group_col,
-        (F.col("_s_int").cast("double") / F.lit(float(2 ** 49))).alias("_s"),
-        "_nz",
-    )
+    pairs = df.select(
+        F.col(group_col), item.cast("string").alias("_item")
+    ).distinct()
+    regs = hll_register_table(pairs, (group_col,), F.col("_item"))
     exact = pairs.groupBy(group_col).agg(
         F.countDistinct("_item").alias("exact_distinct")
     )
-    zeros = F.lit(m) - F.col("_nz")
-    raw = F.lit(alpha * m * m) / (F.col("_s") + zeros)
-    est = F.when(
-        (raw <= F.lit(2.5 * m)) & (zeros > 0),
-        F.lit(m) * F.log(F.lit(m) / zeros),
-    ).otherwise(raw)
-    return agg.join(exact, group_col).select(
-        group_col,
-        F.floor(F.round(est, 6)).cast("long").alias("hll_estimate"),
-        F.col("exact_distinct").cast("long").alias("exact_distinct"),
-        F.round(
-            (F.round(est, 6) - F.col("exact_distinct"))
-            / F.col("exact_distinct"),
-            6,
-        ).alias("rel_error"),
+    return (
+        hll_estimate_from_registers(regs, (group_col,))
+        .join(exact, group_col)
+        .select(
+            group_col,
+            "hll_estimate",
+            F.col("exact_distinct").cast("long").alias("exact_distinct"),
+            _rel_error("exact_distinct"),
+        )
     )
 
 
@@ -525,8 +514,8 @@ def sliding_hll_distinct(
     between re-shuffling the active-user corpus ×window_n and window-
     maxing a few-thousand-row rollup.
 
-    Same register construction / rank arithmetic / linear-counting
-    correction as q61/q100 (md5 string space — the oracle replays every
+    Registers and estimate are :func:`hll_register_table` and
+    :func:`hll_estimate_from_registers` (the oracle replays every
     register exactly). Exact distinct kept per row as the audit; at
     cluster scale only the sketch side runs.
 
@@ -542,149 +531,38 @@ def sliding_hll_distinct(
         ).cast("long").alias("_b"),
         F.col(user).cast("string").alias("_u"),
     ).distinct()
-    h = F.md5(F.col("_u"))
-    hx = F.substring(h, 3, 12)
-    z = F.length(F.regexp_extract(hx, "^(0*)", 1))
-    first = F.substring(hx, z + 1, 1)
-    digit_lz = (
-        F.when(first == "1", 3)
-        .when(first.isin("2", "3"), 2)
-        .when(first.isin("4", "5", "6", "7"), 1)
-        .otherwise(0)
-    )
-    rank = F.when(z == 12, F.lit(_HLL_RANK_BITS + 1)).otherwise(
-        z * 4 + digit_lz + 1
-    )
-    regs = (
-        pairs.select(
-            "_b",
-            F.conv(F.substring(h, 1, 2), 16, 10).cast("int")
-            .alias("register"),
-            rank.cast("int").alias("rank"),
-        )
-        .groupBy("_b", "register")
-        .agg(F.max("rank").alias("max_rank"))
-    )
+    fan = F.explode(
+        F.sequence(F.col("_b"), F.col("_b") + F.lit(window_n - 1))
+    ).alias("_t")
     # fan the TINY register rollup (not the user corpus) into its
     # window_n target buckets, then merge by max — register-table merge
-    fanned = regs.select(
-        F.explode(
-            F.sequence(F.col("_b"), F.col("_b") + F.lit(window_n - 1))
-        ).alias("_t"),
-        "register",
-        "max_rank",
-        F.col("_b").alias("_src"),
-    )
-    merged = fanned.groupBy("_t", "register").agg(
-        F.max("max_rank").alias("mr"),
-        F.max((F.col("_src") == F.col("_t")).cast("int")).alias("_act_r"),
-    )
-    m = float(HLL_REGISTERS)
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    agg = merged.groupBy("_t").agg(
-        F.sum(
-            F.expr(f"shiftleft(1L, {_HLL_RANK_BITS + 1} - mr)")
-        ).alias("_s_int"),
-        F.count(F.lit(1)).alias("_nz"),
-        F.max("_act_r").alias("_act"),
+    merged = (
+        hll_register_table(pairs, ("_b",), F.col("_u"))
+        .select(fan, "register", "max_rank")
+        .groupBy("_t", "register")
+        .agg(F.max("max_rank").alias("max_rank"))
     )
     # exact audit leg (test scale only): q93's fan-out of the pair set
     exact = (
-        pairs.select(
-            F.explode(
-                F.sequence(F.col("_b"), F.col("_b") + F.lit(window_n - 1))
-            ).alias("_t"),
-            "_u",
-        )
+        pairs.select(fan, "_b", "_u")
         .groupBy("_t")
-        .agg(F.countDistinct("_u").cast("long").alias("n_users_exact"))
-    )
-    zeros = F.lit(m) - F.col("_nz")
-    raw = F.lit(alpha * m * m) / (
-        F.col("_s_int").cast("double") / F.lit(float(2 ** 49)) + zeros
-    )
-    est = F.when(
-        (raw <= F.lit(2.5 * m)) & (zeros > 0),
-        F.lit(m) * F.log(F.lit(m) / zeros),
-    ).otherwise(raw)
-    return agg.join(exact, "_t").select(
-        F.timestamp_micros(F.col("_t") * F.lit(bucket_us))
-        .cast("timestamp_ntz")
-        .alias("bucket_ts"),
-        (F.col("_act") == 1).alias("has_activity"),
-        "n_users_exact",
-        F.floor(F.round(est, 6)).cast("long").alias("hll_estimate"),
-        F.round(
-            (F.round(est, 6) - F.col("n_users_exact"))
-            / F.col("n_users_exact"),
-            6,
-        ).alias("rel_error"),
-    )
-
-
-def hll_register_table(
-    df: DataFrame, group_cols: tuple[str, ...], item: Column
-) -> DataFrame:
-    """MERGEABLE HLL state: (group..., register, max_rank) rows from the
-    distinct items per group — the same md5 string-space construction as
-    q61/q100/q114, exposed as a reusable state table so callers can
-    PERSIST it and merge later batches by elementwise max instead of
-    re-scanning history (see profiling.merge_stats_state / q115).
-    """
-    pairs = df.select(
-        *group_cols, item.cast("string").alias("_item")
-    ).distinct()
-    h = F.md5(F.col("_item"))
-    hx = F.substring(h, 3, 12)
-    z = F.length(F.regexp_extract(hx, "^(0*)", 1))
-    first = F.substring(hx, z + 1, 1)
-    digit_lz = (
-        F.when(first == "1", 3)
-        .when(first.isin("2", "3"), 2)
-        .when(first.isin("4", "5", "6", "7"), 1)
-        .otherwise(0)
-    )
-    rank = F.when(z == 12, F.lit(_HLL_RANK_BITS + 1)).otherwise(
-        z * 4 + digit_lz + 1
+        .agg(
+            F.countDistinct("_u").cast("long").alias("n_users_exact"),
+            F.max(F.col("_b") == F.col("_t")).alias("has_activity"),
+        )
     )
     return (
-        pairs.select(
-            *group_cols,
-            F.conv(F.substring(h, 1, 2), 16, 10).cast("int")
-            .alias("register"),
-            rank.cast("int").alias("rank"),
+        hll_estimate_from_registers(merged, ("_t",))
+        .join(exact, "_t")
+        .select(
+            F.timestamp_micros(F.col("_t") * F.lit(bucket_us))
+            .cast("timestamp_ntz")
+            .alias("bucket_ts"),
+            "has_activity",
+            "n_users_exact",
+            "hll_estimate",
+            _rel_error("n_users_exact"),
         )
-        .groupBy(*group_cols, "register")
-        .agg(F.max("rank").alias("max_rank"))
-    )
-
-
-def hll_estimate_from_registers(
-    regs: DataFrame, group_cols: tuple[str, ...]
-) -> DataFrame:
-    """Estimate per group from a (group..., register, max_rank) state
-    table — standard estimator + linear-counting correction, the same
-    6-dp float contract as q61/q100 so oracles replay it exactly.
-    Output: (group..., hll_estimate)."""
-    m = float(HLL_REGISTERS)
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    agg = regs.groupBy(*group_cols).agg(
-        F.sum(
-            F.expr(f"shiftleft(1L, {_HLL_RANK_BITS + 1} - max_rank)")
-        ).alias("_s_int"),
-        F.count(F.lit(1)).alias("_nz"),
-    )
-    zeros = F.lit(m) - F.col("_nz")
-    raw = F.lit(alpha * m * m) / (
-        F.col("_s_int").cast("double") / F.lit(float(2 ** 49)) + zeros
-    )
-    est = F.when(
-        (raw <= F.lit(2.5 * m)) & (zeros > 0),
-        F.lit(m) * F.log(F.lit(m) / zeros),
-    ).otherwise(raw)
-    return agg.select(
-        *group_cols,
-        F.floor(F.round(est, 6)).cast("long").alias("hll_estimate"),
     )
 
 
@@ -701,11 +579,10 @@ def hll_set_ops(
     clamped at 0 (inclusion–exclusion on estimates can go negative; the
     clamp is part of the contract).
 
-    Same register construction, string-space leading-zero rank, exact
-    integer 2^(49−rank) summation, linear-counting correction and 6-dp
-    contract as q61/q100, so the oracle replays every single-group AND
-    merged-pair register table exactly. The exact legs are the audit;
-    at scale only the sketch side runs.
+    Registers and estimates are :func:`hll_register_table` and
+    :func:`hll_estimate_from_registers`, so the oracle replays every
+    single-group AND merged-pair register table exactly. The exact legs
+    are the audit; at scale only the sketch side runs.
 
     Output per unordered group pair: ``(type_a, type_b, est_a, est_b,
     est_union, est_inter, exact_a, exact_b, exact_union, exact_inter)``.
@@ -715,57 +592,7 @@ def hll_set_ops(
     pairs = df.select(
         F.col(group_col).alias("g"), item.cast("string").alias("_item")
     ).distinct()
-    hi = F.md5(F.col("_item"))
-    hxi = F.substring(hi, 3, 12)
-    zi = F.length(F.regexp_extract(hxi, "^(0*)", 1))
-    firsti = F.substring(hxi, zi + 1, 1)
-    digit_lzi = (
-        F.when(firsti == "1", 3)
-        .when(firsti.isin("2", "3"), 2)
-        .when(firsti.isin("4", "5", "6", "7"), 1)
-        .otherwise(0)
-    )
-    ranki = F.when(zi == 12, F.lit(_HLL_RANK_BITS + 1)).otherwise(
-        zi * 4 + digit_lzi + 1
-    )
-    regs = (
-        pairs.select(
-            "g",
-            F.conv(F.substring(hi, 1, 2), 16, 10).cast("int").alias("register"),
-            ranki.cast("int").alias("rank"),
-        )
-        .groupBy("g", "register")
-        .agg(F.max("rank").alias("max_rank"))
-    )
-
-    m = float(HLL_REGISTERS)
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-
-    def _est(regdf: DataFrame, keys: list[str], out: str) -> DataFrame:
-        agg = (
-            regdf.groupBy(*keys)
-            .agg(
-                F.sum(
-                    F.expr(f"shiftleft(1L, {_HLL_RANK_BITS + 1} - max_rank)")
-                ).alias("_s_int"),
-                F.count(F.lit(1)).alias("_nz"),
-            )
-            .select(
-                *keys,
-                (F.col("_s_int").cast("double") / F.lit(float(2 ** 49)))
-                .alias("_s"),
-                "_nz",
-            )
-        )
-        zeros = F.lit(m) - F.col("_nz")
-        raw = F.lit(alpha * m * m) / (F.col("_s") + zeros)
-        est = F.when(
-            (raw <= F.lit(2.5 * m)) & (zeros > 0),
-            F.lit(m) * F.log(F.lit(m) / zeros),
-        ).otherwise(raw)
-        return agg.select(
-            *keys, F.floor(F.round(est, 6)).cast("long").alias(out)
-        )
+    regs = hll_register_table(pairs, ("g",), F.col("_item"))
 
     groups = pairs.select("g").distinct()
     combos = (
@@ -781,8 +608,12 @@ def hll_set_ops(
         .groupBy("ga", "gb", "register")
         .agg(F.max("max_rank").alias("max_rank"))
     )
-    singles = _est(regs, ["g"], "est")
-    unions = _est(merged, ["ga", "gb"], "est_union")
+    singles = hll_estimate_from_registers(regs, ("g",)).withColumnRenamed(
+        "hll_estimate", "est"
+    )
+    unions = hll_estimate_from_registers(merged, ("ga", "gb")).select(
+        "ga", "gb", F.col("hll_estimate").alias("est_union")
+    )
     ex_g = pairs.groupBy("g").agg(
         F.countDistinct("_item").cast("long").alias("exact")
     )

@@ -18,7 +18,8 @@ Two materialization strategies:
   parallel encode, and every sink then reads only the columns it needs
   (columnar pruning — e.g. the wide ``text`` column is read ONLY by the
   dead-letter sink), so the fan-out costs far less I/O than one full cache
-  scan per sink. bench.py uses this mode.
+  scan per sink. bench.py and perfbench's ``batch_full`` workload use this
+  mode.
 """
 
 from __future__ import annotations

@@ -35,11 +35,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32). On a real
+    master defaults to ``local[$SPARK_GRAFT_CPUS]``, or to one worker thread
+    per CPU this process may run on when the env var is unset. On a real
     cluster this is left unset and spark-submit provides it.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS")
+        if cpus is None:
+            cpus = len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS

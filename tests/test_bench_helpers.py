@@ -46,41 +46,3 @@ def test_latency_slope_queueing_is_positive():
 def test_latency_slope_catchup_is_negative():
     assert _slope([2000.0, 1500.0, 1200.0, 1000.0, 950.0]) < 0.0
 
-
-def test_grouped_hll_matches_global_hll_on_single_group(spark):
-    """grouped_hll_distinct with one group must reproduce q61's estimator
-    exactly (same registers, same correction) on the same item set."""
-    from pyspark.sql import functions as F
-
-    from java9_gc_log_parser_spark.operators.sketches import (
-        grouped_hll_distinct,
-    )
-
-    df = spark.createDataFrame(
-        [("g", f"item-{i}") for i in range(300)], "grp string, item string"
-    )
-    row = grouped_hll_distinct(df, "grp", F.col("item")).collect()[0]
-    assert row["exact_distinct"] == 300
-    # 300 distinct over 256 registers: estimate within 25% (HLL-256 has
-    # ~6.5% relative sigma; this is a deterministic fixture, the bound is
-    # a regression tripwire not a statistical claim)
-    assert abs(row["rel_error"]) < 0.25
-    assert row["hll_estimate"] > 0
-
-
-def test_grouped_hll_groups_are_independent(spark):
-    from pyspark.sql import functions as F
-
-    from java9_gc_log_parser_spark.operators.sketches import (
-        grouped_hll_distinct,
-    )
-
-    # same items in two groups -> identical registers -> identical rows
-    rows_in = [("a", f"x{i}") for i in range(50)] + [
-        ("b", f"x{i}") for i in range(50)
-    ]
-    df = spark.createDataFrame(rows_in, "grp string, item string")
-    out = {r["grp"]: r for r in
-           grouped_hll_distinct(df, "grp", F.col("item")).collect()}
-    assert out["a"]["hll_estimate"] == out["b"]["hll_estimate"]
-    assert out["a"]["exact_distinct"] == out["b"]["exact_distinct"] == 50

@@ -162,3 +162,79 @@ def test_hll_set_ops_partial_overlap_and_merge_property(spark):
     ac = out[("A", "C")]
     assert ac["exact_union"] == 300 and ac["exact_inter"] == 200
     assert ac["est_union"] == ac["est_b"]
+
+
+# ------------------------------------------------------- grouped HLL
+
+
+def test_hll_queries_agree_on_one_item_set(spark):
+    """All HLL queries share one register table and one estimator, so one
+    item set yields the IDENTICAL estimate from each of them: q61's
+    report, one group of q100, one bucket of q114, q115's stats report
+    and q133's single-group estimate. Items are lower-case alphanumeric,
+    so q61's lowercase whitespace tokenization leaves them unchanged."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from java9_gc_log_parser_spark.operators.profiling import (
+        stats_report,
+        stats_state,
+    )
+    from java9_gc_log_parser_spark.operators.sketches import (
+        grouped_hll_distinct,
+        hll_distinct_report,
+        hll_set_ops,
+        sliding_hll_distinct,
+    )
+
+    items = [f"item{i}" for i in range(300)]
+    t0 = datetime.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [(i, "a", item, t0) for i, item in enumerate(items)]
+        + [(len(items), "b", "other", t0)],
+        "doc_id long, grp string, item string, ts timestamp",
+    )
+    one = df.filter(F.col("grp") == "a")
+
+    [report] = hll_distinct_report(
+        one.withColumnRenamed("item", "text")
+    ).collect()
+    assert report["exact_distinct"] == 300
+    estimate = report["hll_estimate"]
+    assert estimate > 0
+    # 300 distinct over 256 registers: a regression tripwire on a fixed
+    # fixture, not a statistical claim (HLL-256 has ~6.5% relative sigma)
+    assert abs(report["rel_error"]) < 0.25
+
+    [grouped] = grouped_hll_distinct(one, "grp", F.col("item")).collect()
+    [bucket] = sliding_hll_distinct(one, user="item", window_n=1).collect()
+    [stats] = stats_report(
+        stats_state(one, (("item", F.col("item")),))
+    ).collect()
+    [pair] = hll_set_ops(df, "grp", F.col("item")).collect()
+
+    assert grouped["hll_estimate"] == estimate
+    assert grouped["rel_error"] == report["rel_error"]
+    assert bucket["hll_estimate"] == estimate
+    assert bucket["rel_error"] == report["rel_error"]
+    assert stats["ndv_hll"] == estimate
+    assert (pair["type_a"], pair["est_a"]) == ("a", estimate)
+
+
+def test_grouped_hll_groups_are_independent(spark):
+    from pyspark.sql import functions as F
+
+    from java9_gc_log_parser_spark.operators.sketches import (
+        grouped_hll_distinct,
+    )
+
+    # same items in two groups -> identical registers -> identical rows
+    rows_in = [("a", f"x{i}") for i in range(50)] + [
+        ("b", f"x{i}") for i in range(50)
+    ]
+    df = spark.createDataFrame(rows_in, "grp string, item string")
+    out = {r["grp"]: r for r in
+           grouped_hll_distinct(df, "grp", F.col("item")).collect()}
+    assert out["a"]["hll_estimate"] == out["b"]["hll_estimate"]
+    assert out["a"]["exact_distinct"] == out["b"]["exact_distinct"] == 50
