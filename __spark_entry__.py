@@ -338,70 +338,56 @@ def _drain_to_parquet(sdf: DataFrame, outp: str, ck: str) -> None:
     _await_drained(q)
 
 
-def _stream_parts(spark) -> str:
-    """Stateful-stage partition count for the streaming queries.
+def _drain_closed(spark, src: str, root: str, rows, **kw) -> DataFrame:
+    """Drain the stream's carry-over assembly fold over ``src`` with
+    ``availableNow``, writing ``rows(closed groups)`` of each trigger under
+    ``root/out``; returns everything written there so far."""
+    from java9_gc_log_parser_spark.streaming.assembler import assemble_stream
 
-    Round 3 pinned this at 8 on the theory that state partitions are a
-    state-volume knob (each pays a state-store commit per micro-batch).
-    Measured at sf0.1/local[32], the opposite dominates: the
-    applyInPandasWithState Python workers are the hot stage and they
-    parallelize WITH partitions — an A/B/A drain of the q26 scatter gave
-    p8 = 15.8-27.4 s (high variance), p16 = 9.2 s, p32 = 8.4 s. So size
-    state partitions to the session's core count (floor 8), which is also
-    the cluster-correct shape: on N executors you want >= N state
-    partitions, while commit overhead only matters when partitions vastly
-    outnumber cores. Results are partition-count-invariant (all oracles
-    unchanged); only wall time and sink file counts move.
+    outp = f"{root}/out"
 
-    Scope: queries whose stateful stage is ``applyInPandasWithState``
-    (q26/q49/q51) — the ones where the Python worker is the hot stage.
-    The checkpoint batch runner (q27) does NOT read this knob: it is a
-    batch-job loop, so it runs at the session's default shuffle
-    partitions, which in the bench/driver session is already the core
-    count this knob would set. JVM-stateful streams use
-    ``_jvm_state_parts`` instead."""
-    return str(max(8, spark.sparkContext.defaultParallelism))
+    def emit(closed, batch_id, last):
+        rows(closed).write.mode("overwrite").parquet(f"{outp}/batch={batch_id}")
+        return {}
+
+    _await_drained(assemble_stream(spark, src, _INPUT_SCHEMA, f"{root}/fold",
+                                   emit, **kw))
+    return spark.read.parquet(outp)
 
 
 def _jvm_state_parts(spark) -> str:
-    """Stateful-stage partition count for PURE-JVM streaming state
-    (stream-stream joins, window/session aggs, dropDuplicates, CMS
-    maintenance): there is no Python worker to parallelize, the per-batch
-    cost is dominated by state-store commits — which scale WITH partition
-    count — and the state itself is a few MB. Measured r4: lifting these
-    to core-count partitions regressed q66 4.5→11.3 s and q126 9.2→15.7 s
-    at sf0.1 while the same change cut the Python-stateful queries 2×,
-    so the two families get separate knobs. At production state volumes
+    """Stateful-stage partition count for streaming state (stream-stream
+    joins, window/session aggs, dropDuplicates, CMS maintenance): the
+    per-batch cost is dominated by state-store commits — which scale WITH
+    partition count — and the state itself is a few MB. Measured r4:
+    lifting these to core-count partitions regressed q66 4.5→11.3 s and
+    q126 9.2→15.7 s at sf0.1. At production state volumes
     (state ≫ one executor's heap) this floor rises to spread the store —
     a state-size knob, not a compute-parallelism knob."""
     return "8"
 
 
 def q26_stream_assembled(spark, sf_dir):
-    """Streaming assembler (applyInPandasWithState) drained with availableNow
-    over a file-scattered copy of the same transcripts; its ok-rows must equal
-    the batch assembly — oracled against the SAME easm SQL as q06 (capability
-    parity for the reference's live mode, GcLogStream.scala:45-51)."""
-    from java9_gc_log_parser_spark.streaming.assembler import stream_assembled
+    """The stream's carry-over assembly fold drained with availableNow over
+    a file-scattered copy of the same transcripts; its ok-rows must equal
+    the batch assembly — oracled against the SAME easm SQL as q06
+    (capability parity for the reference's live mode,
+    GcLogStream.scala:45-51)."""
+    from java9_gc_log_parser_spark.operators.assemble import (
+        assembled_pauses_from_groups,
+    )
 
     root = _fresh_scratch(sf_dir, "q26")
-    src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
+    src = f"{root}/src"
     # round-robin scatter: one event's lines spread across many files, so
     # micro-batches deliver them out of order across triggers (with 16 files
     # per trigger over 32 files, ~97% of events still split across batches:
     # P(all ~6 lines land in one half) = 2 * 0.5^6)
     synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
-    # stateful-stage partition count: sized to core count via
-    # _stream_parts (measured 2-3x faster than the old fixed 8 — the
-    # Python state workers parallelize with partitions).
-    with _shuffle_partitions(spark, _stream_parts(spark)):
-        _drain_to_parquet(
-            stream_assembled(spark, src, _INPUT_SCHEMA,
-                             max_files_per_trigger=16)
-            .filter(F.col("verdict") == "ok"),
-            outp, ck,
-        )
-    return spark.read.parquet(outp).select(*_ASSEMBLED_COLS)
+    return _drain_closed(
+        spark, src, root, assembled_pauses_from_groups,
+        max_files_per_trigger=16,
+    ).select(*_ASSEMBLED_COLS)
 
 
 def q55_stream_atleastonce_dedup(spark, sf_dir):
@@ -447,67 +433,58 @@ def q55_stream_atleastonce_dedup(spark, sf_dir):
 
 def q49_stream_late_dead_letter(spark, sf_dir):
     """Event-time late-data dead-lettering (SURVEY §2.9 ST2, the round-2
-    verdict's #1 gap): the streaming assembler runs with an event-time
-    watermark (lateness > the data's full ts span, so no group can expire
-    while the backlog drains), then the watermark is pushed past every
-    straggler's deadline by one parseable sentinel line — the dead letters
-    that fire must equal the BATCH assembler's error table, verdicts AND
+    verdict's #1 gap): the stream's assembly fold runs with an event-time
+    lateness (> the data's full ts span, so no group can expire while the
+    backlog drains), then the watermark is pushed past every straggler's
+    deadline by one parseable sentinel line — the dead letters that fire
+    must equal the BATCH assembler's error table, verdicts AND
     byte-identical messages (q07's oracle, minus ts). Cross-batch
-    out-of-order assembly under the same stateful operator is q26's job;
-    this query isolates the lateness discipline, so the backlog drains as
-    one micro-batch.
+    out-of-order assembly is q26's job; this query isolates the lateness
+    discipline, so the backlog drains as one micro-batch.
 
     Reference capability: live-mode failure semantics
     (GcLogStream.scala:45-51 + CollectPauseLines.scala:31-43), upgraded
     from fail-stop to dead-letter with data-time (not wall-clock) expiry.
-    The sentinel is a start-only group: dangling state both engines
+    The sentinel is a start-only group: a dangling group both engines
     silently discard, so it alters nothing downstream."""
     import datetime
 
-    from java9_gc_log_parser_spark.streaming.assembler import stream_assembled
+    from java9_gc_log_parser_spark.operators.assemble import (
+        assembly_dead_letters_from_groups,
+    )
 
     root = _fresh_scratch(sf_dir, "q49")
-    src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
+    src = f"{root}/src"
     tdf = synth_transcripts(spark, sf_dir)
     lo, hi = tdf.agg(F.min("ts"), F.max("ts")).first()
     span_ms = int((hi - lo).total_seconds() * 1000)
-    # deadline(group) <= hi + lateness; watermark during the drain stays
-    # <= hi - lateness < lo - 60s, so nothing expires before the backlog
-    # is fully assembled
+    # a group expires once its newest ts + lateness is behind the watermark
+    # (high-water mark - lateness); during the drain the high-water mark is
+    # hi, so expiry needs newest ts < hi - 2 * lateness < lo: nothing
+    # expires before the backlog is fully assembled
     lateness_ms = span_ms + 60_000
     tdf.repartition(8).write.parquet(src)
 
-    with _shuffle_partitions(spark, _stream_parts(spark)):
-        def drain():
-            _drain_to_parquet(
-                stream_assembled(spark, src, _INPUT_SCHEMA,
-                                 lateness_ms=lateness_ms,
-                                 max_files_per_trigger=32)
-                .filter(F.col("verdict") != "ok")
-                .select(
-                    "conv_id", "event_id",
-                    F.col("verdict").alias("error_code"), "error_message",
-                ),
-                outp, ck,
-            )
+    def drain():
+        return _drain_closed(
+            spark, src, root, assembly_dead_letters_from_groups,
+            lateness_ms=lateness_ms, max_files_per_trigger=32,
+        ).select("conv_id", "event_id", "error_code", "error_message")
 
-        drain()  # full backlog; watermark still below every deadline
-        # ONE sentinel + ONE drain: the sentinel's batch moves the watermark
-        # past every deadline, and Spark's no-data micro-batch (run when the
-        # watermark advances, even under availableNow) fires the expired
-        # timers within the same drain — no second sentinel/restart needed
-        sent_ts = hi + datetime.timedelta(milliseconds=2 * lateness_ms)
-        row = [(
-            "__wm__", 1, "assistant",
-            "[9.0s][info][gc,start     ] GC(990001) Pause Young "
-            "(G1 Evacuation Pause)",
-            None, sent_ts,
-        )]
-        spark.createDataFrame(row, _INPUT_SCHEMA).write.mode(
-            "append"
-        ).parquet(src)
-        drain()
-    return spark.read.parquet(outp)
+    drain()  # full backlog; the watermark stays below every deadline
+    # ONE sentinel + ONE drain: the sentinel's batch moves the watermark
+    # past every deadline, and expiry is decided at the end of that batch
+    sent_ts = hi + datetime.timedelta(milliseconds=2 * lateness_ms)
+    row = [(
+        "__wm__", 1, "assistant",
+        "[9.0s][info][gc,start     ] GC(990001) Pause Young "
+        "(G1 Evacuation Pause)",
+        None, sent_ts,
+    )]
+    spark.createDataFrame(row, _INPUT_SCHEMA).write.mode(
+        "append"
+    ).parquet(src)
+    return drain()
 
 
 def q27_checkpoint_resume(spark, sf_dir):
@@ -541,10 +518,12 @@ def q28_conv_state_json(spark, sf_dir):
 def q51_stream_metrics_feed(spark, sf_dir):
     """Metrics-heartbeat feed parity (SURVEY §2.8 SC6 — the last
     pytest-only seam from the round-2 verdict): ``stream_conv_state``
-    drains a 32-file scatter at 16 files/trigger, emitting one heartbeat
-    line per micro-batch (batch id, events, convs, wall). Per-batch event
-    counts depend on file→trigger assignment and are not engine-
-    independent, so the query reduces the feed to invariants that ARE:
+    drains a 32-file scatter at 16 files/trigger through the stream's
+    carry-over assembly fold, emitting one heartbeat line per micro-batch
+    (batch id, event-time high-water mark, events, convs, wall).
+    Per-batch event counts depend on file→trigger assignment and are not
+    engine-independent, so the query reduces the feed to invariants that
+    ARE:
 
       n_batches        == ceil(32/16) heartbeat lines, ids contiguous 0..N-1
       events_total     == the batch assembler's ok-event count
@@ -566,16 +545,13 @@ def q51_stream_metrics_feed(spark, sf_dir):
     root = _fresh_scratch(sf_dir, "q51")
     src, out_root = f"{root}/src", f"{root}/out"
     synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
-    with _shuffle_partitions(spark, _stream_parts(spark)):
-        # 32 files at 16/trigger -> 2 micro-batches. The feed's
-        # cross-batch properties (contiguous batch ids, monotonic
-        # cumulative convs, events summing across batches) need >= 2
-        # batches, which 2 provides; the old 8/trigger -> 4 batches
-        # doubled the state-commit wall (~5 s/batch at sf0.1) without
-        # strengthening any invariant (r3 verdict task #8).
-        q = stream_conv_state(spark, src, _INPUT_SCHEMA, out_root,
-                              max_files_per_trigger=16)
-        _await_drained(q)
+    # 32 files at 16/trigger -> 2 micro-batches. The feed's cross-batch
+    # properties (contiguous batch ids, monotonic cumulative convs, events
+    # summing across batches) need >= 2 batches, which 2 provides; the old
+    # 8/trigger -> 4 batches doubled the per-trigger wall without
+    # strengthening any invariant (r3 verdict task #8).
+    _await_drained(stream_conv_state(spark, src, _INPUT_SCHEMA, out_root,
+                                     max_files_per_trigger=16))
 
     with open(os.path.join(out_root, "metrics.jsonl")) as f:
         beats = sorted(
@@ -1082,7 +1058,7 @@ def q67_stream_cms_maintenance(spark, sf_dir):
 
     def _apply(batch_df, batch_id, last):
         batch_df.persist()  # grid build is the only action, but keep the
-        g = cms_sketch(batch_df)  # idiom uniform with state_stream._apply
+        g = cms_sketch(batch_df)  # idiom uniform with assemble_stream
         if last is not None:
             prev = spark.read.parquet(f"{out_root}/batch={last}")
             g = (
@@ -3158,7 +3134,7 @@ FROM easm WHERE verdict = 'ok'
 GROUP BY CAST(FLOOR(duration_ms / 10.0) AS BIGINT)
 """,
     # streaming drain == batch assembly: same easm oracle as q06, minus ts
-    # (the streaming assembler's output schema carries no timestamp)
+    # (q26 selects the pause columns without the timestamp)
     "q26_stream_assembled": O.with_ctes() + """
 SELECT conv_id, event_id, pause_type, reason, offset_ms, duration_ms,
        heap_before, heap_after, heap_total,
@@ -3166,7 +3142,7 @@ SELECT conv_id, event_id, pause_type, reason, offset_ms, duration_ms,
 FROM easm WHERE verdict = 'ok'
 """,
     # event-time-expired streaming dead letters == batch error table
-    # (q07's oracle minus ts; the streaming output carries no timestamp)
+    # (q07's oracle minus ts; q49 selects the columns without it)
     "q49_stream_late_dead_letter": O.with_ctes() + """
 SELECT conv_id, event_id, verdict AS error_code,
        CASE WHEN verdict = 'end_before_start'

@@ -151,7 +151,7 @@ def _live_latency(spark, sf_dir: str, n_drops: int = 10,
     CORRECTNESS; this leg proves the LATENCY story).
 
     Pre-stages ``n_drops`` file drops of the sf transcripts, starts the
-    stateful streaming assembler under a 1 s processing-time trigger, then
+    streaming assembly fold under a 1 s processing-time trigger, then
     feeds one drop per second WHILE the query runs. Reports, from the
     query's own progress events:
       * trigger_ms p50/p95/max — per-micro-batch execution time; the
@@ -165,12 +165,10 @@ def _live_latency(spark, sf_dir: str, n_drops: int = 10,
     is a one-off per stream, not part of the steady-state cadence the
     reference's long-lived tail runs at (cold-start is reported
     separately as warmup_ms).
-    State-partition note: 8 shuffle partitions, q26's sizing. Measured
-    both directions: applyInPandasWithState dispatches the Python fn PER
-    GROUP, so 1 partition serializes hundreds of conversation groups
-    (7.2k rows took 5.8 s); but every partition also pays a state-store
-    commit per micro-batch, so 32 partitions buy commit overhead, not
-    parallelism, at ~1k rows/batch. 8 balances the two at this volume.
+    State-partition note: measured on the Python state worker that the
+    fold replaced, 1 partition serialized hundreds of conversation groups
+    (7.2k rows took 5.8 s), while 32 partitions bought state-store commit
+    overhead, not parallelism, at ~1k rows/batch.
     """
     import datetime as dt
     import glob
@@ -180,11 +178,11 @@ def _live_latency(spark, sf_dir: str, n_drops: int = 10,
 
     import __spark_entry__ as entrymod
     from java9_gc_log_parser_spark.sources.transcripts import synth_transcripts
-    from java9_gc_log_parser_spark.streaming.assembler import stream_assembled
+    from java9_gc_log_parser_spark.streaming.assembler import assemble_stream
 
     root = "/tmp/gclp_bench_live"
     shutil.rmtree(root, ignore_errors=True)
-    src, stage, ck = f"{root}/src", f"{root}/stage", f"{root}/ckpt"
+    src, stage = f"{root}/src", f"{root}/stage"
     os.makedirs(src)
 
     # fixed-volume feed: this leg measures LATENCY at the reference's 1 s
@@ -238,15 +236,10 @@ def _live_latency(spark, sf_dir: str, n_drops: int = 10,
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
     try:
-        q = (
-            stream_assembled(spark, src, entrymod._INPUT_SCHEMA,
-                             max_files_per_trigger=100000)
-            .writeStream.format("noop")
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(processingTime=f"{cadence_s} second")
-            .start()
-        )
+        # the fold's trigger is the 1 s tail cadence (cadence_s's default)
+        q = assemble_stream(spark, src, entrymod._INPUT_SCHEMA, root,
+                            lambda closed, batch_id, last: {},
+                            max_files_per_trigger=100000, available_now=False)
         # drain the warmup drop completely before the timed feed: its
         # batches carry the one-off costs and are excluded below by batchId
         t_warm = time.perf_counter()

@@ -59,6 +59,13 @@ ASSEMBLED_COLUMNS = [
     "ts",
 ]
 
+#: the parse columns ``assemble_groups`` reads
+LINE_COLUMNS = [
+    "conv_id", "event_id", "turn_idx", "ts", "event_class", "region",
+    "region_after", "pause_type", "reason", "offset_ms", "duration_ms",
+    "heap_before", "heap_after", "heap_total",
+]
+
 
 def _last(value: Column, cond: Column) -> Column:
     """Last-write-wins under ``cond``, ordered by turn_idx (null keys ignored)."""

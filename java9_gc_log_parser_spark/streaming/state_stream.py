@@ -3,11 +3,12 @@
 The reference pushes one cumulative ``GcState`` JSON per event over a
 Server-Sent-Events socket with a heartbeat (``HttpFrontEnd.scala:24-37``).
 The capability — *push incremental aggregate snapshots as data arrives* —
-maps to Structured Streaming ``foreachBatch``: each micro-batch of assembled
+maps to Structured Streaming ``foreachBatch``: in the callback of the stream's
+assembly fold (``assembler.assemble_stream``), each micro-batch of assembled
 pause events folds into a running per-conversation state table, every batch
 writes its snapshot (the SSE "event") and commits a metrics record (the
-"heartbeat": batch id, rows, convs, wall seconds) to a JSONL feed, which is
-the stream's commit log (``commit_log``).
+"heartbeat": batch id, event-time high-water mark, events, convs, wall
+seconds) to a JSONL feed, which is the fold's commit log (``commit_log``).
 
 The running state is a *mergeable partial aggregate*: alongside the GcState
 counters it carries the two argmax keys (``_max_off`` for heap,
@@ -26,14 +27,14 @@ conv per side.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import commit_log
 from ..operators.aggregate import COUNTERS, GEN_COLS
-from .assembler import stream_assembled
+from ..operators.assemble import assembled_pauses_from_groups
+from .assembler import assemble_stream, log_path
 
 #: exposed snapshot schema == conv_state_final's schema
 STATE_COLS = (
@@ -76,17 +77,13 @@ def merge_states(prev: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
-def _log(out_root: str) -> str:
-    return os.path.join(out_root, "metrics.jsonl")
-
-
 def _gen_dir(out_root: str, batch_id: int) -> str:
     return os.path.join(out_root, "state_gens", f"batch={batch_id}")
 
 
 def current_state(spark: SparkSession, out_root: str) -> DataFrame | None:
     """The cumulative state as of the last applied batch (None before any)."""
-    bid = commit_log.last_batch(_log(out_root))
+    bid = commit_log.last_batch(log_path(out_root))
     if bid is None:
         return None
     return spark.read.parquet(_gen_dir(out_root, bid))
@@ -118,28 +115,19 @@ def stream_conv_state(
 ):
     """Start the snapshot stream; returns the StreamingQuery.
 
-    Layout under ``out_root``:
+    The ok groups of each trigger of ``assembler.assemble_stream`` fold into
+    the state in the same ``foreachBatch`` callback. Layout under
+    ``out_root`` (besides the fold's ``ckpt/`` and ``carry/``):
       state_gens/batch=N/    cumulative state generation after batch N
       snapshots/batch=N/     the state as of batch N (the SSE "event" feed)
       metrics.jsonl          the commit log (``commit_log``): one heartbeat
-                             record per applied batch (batch id, events,
-                             convs, wall seconds)
+                             record per applied batch (batch id, event-time
+                             high-water mark, events, convs, wall seconds)
     """
-    assembled = stream_assembled(
-        spark, source_path, input_schema,
-        max_files_per_trigger=max_files_per_trigger,
-    ).filter(F.col("verdict") == "ok")
 
-    os.makedirs(out_root, exist_ok=True)
-
-    def _apply(batch_df: DataFrame, batch_id: int, last: int | None) -> dict:
-        t0 = time.perf_counter()
-        # two actions read this batch (the merged-state write and the
-        # heartbeat's n_events count); without a persist each one re-runs
-        # the whole stateful-assembler micro-batch — measured 69 s -> ~2/3
-        # of that on the q51 drain at sf0.1
-        batch_df.persist()
-        b = batch_state(batch_df)
+    def emit(closed: DataFrame, batch_id: int, last: int | None) -> dict:
+        ok = assembled_pauses_from_groups(closed)
+        b = batch_state(ok)
         if last is not None:
             merged = merge_states(spark.read.parquet(_gen_dir(out_root, last)), b)
         else:
@@ -151,24 +139,10 @@ def stream_conv_state(
         staged.write.mode("overwrite").parquet(
             os.path.join(out_root, "snapshots", f"batch={batch_id}")
         )
-        n_events = batch_df.count()
-        batch_df.unpersist()
-        return {
-            "batch_id": batch_id,
-            "events": n_events,
-            "convs": n_convs,
-            "wall_s": round(time.perf_counter() - t0, 3),
-        }
+        return {"events": ok.count(), "convs": n_convs}
 
-    writer = (
-        assembled.writeStream.foreachBatch(
-            commit_log.once_per_batch(_log(out_root), _apply)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(out_root, "ckpt"))
+    return assemble_stream(
+        spark, source_path, input_schema, out_root, emit,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()

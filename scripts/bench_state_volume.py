@@ -31,23 +31,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _stream_drain(spark, src: str, out: str) -> float:
-    from pyspark.sql import functions as F
-
     import __spark_entry__ as entrymod
-    from java9_gc_log_parser_spark.streaming.assembler import stream_assembled
+    from java9_gc_log_parser_spark.operators.assemble import (
+        assembled_pauses_from_groups,
+    )
+    from java9_gc_log_parser_spark.streaming.assembler import assemble_stream
+
+    def emit(closed, batch_id, last):
+        assembled_pauses_from_groups(closed).write.mode("overwrite").parquet(
+            f"{out}/sink/batch={batch_id}")
+        return {}
 
     t0 = time.perf_counter()
-    q = (
-        stream_assembled(spark, src, entrymod._INPUT_SCHEMA,
-                         max_files_per_trigger=16)
-        .filter(F.col("verdict") == "ok")
-        .writeStream.format("parquet")
-        .option("path", f"{out}/sink")
-        .option("checkpointLocation", f"{out}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = assemble_stream(spark, src, entrymod._INPUT_SCHEMA, out, emit,
+                        max_files_per_trigger=16)
     if not q.awaitTermination(3600):
         q.stop()
         raise TimeoutError("stream drain exceeded 3600s")

@@ -1,29 +1,77 @@
-"""Streaming assembler vs batch assembler (SURVEY §2.9).
+"""Streaming assembly vs batch assembly (SURVEY §2.9).
 
-The streaming operator buffers out-of-order lines across micro-batches and
-emits an event exactly once when complete; stragglers (end present, never
-completed) are dead-lettered by processing-time timeout.
+The stream's carry-over fold keeps the lines of open groups across
+micro-batches and emits an event exactly once when complete; stragglers (end
+present, never completed) are dead-lettered when event time moves past them.
 """
 
 from __future__ import annotations
 
-import time
+import datetime as dt
 
 import pytest
+from pyspark.sql import functions as F
 
 from java9_gc_log_parser_spark.functions.parse import parse_lines
 from java9_gc_log_parser_spark.operators.assemble import (
     assembled_pauses,
+    assembled_pauses_from_groups,
     assembly_dead_letters,
+    assembly_dead_letters_from_groups,
 )
 from java9_gc_log_parser_spark.operators.route import supported_types_filter
 from java9_gc_log_parser_spark.sources.transcripts import synth_transcripts
-from java9_gc_log_parser_spark.streaming.assembler import stream_assembled
+from java9_gc_log_parser_spark.streaming.assembler import assemble_stream
 
 INPUT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
 )
+T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+START7 = ("[1.4s][info][gc,start     ] GC(7) Pause Young "
+          "(G1 Evacuation Pause)")
+END7 = ("[1.5s][info][gc           ] GC(7) Pause Young "
+        "(G1 Evacuation Pause) 10M->5M(64M) 2.0ms")
+
+
+def _sentinel(event_id):
+    """A start-only line of a fresh group: it moves event time and parks in
+    the carry as a dangling group, which changes no output."""
+    return (f"[99.0s][info][gc,start     ] GC({event_id}) Pause Young "
+            "(G1 Evacuation Pause)")
+
+
+def _write_files(spark, src, files):
+    """One parquet file per list of ``(conv_id, turn_idx, text, ts)``, in
+    order, so ``max_files_per_trigger=1`` delivers one per trigger."""
+    for rows in files:
+        spark.createDataFrame(
+            [(c, t, "assistant", text, None, ts) for c, t, text, ts in rows],
+            INPUT_SCHEMA,
+        ).coalesce(1).write.mode("append").parquet(src)
+
+
+def _drain(spark, src, root, out, **kw):
+    """Drain the fold over ``src`` with availableNow, writing every closed
+    group under ``out``."""
+
+    def emit(closed, batch_id, last):
+        closed.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
+        return {}
+
+    q = assemble_stream(spark, src, INPUT_SCHEMA, root, emit, **kw)
+    assert q.awaitTermination(300)
+
+
+def _closed_rows(spark, out):
+    """Every closed group under ``out`` as a verdict row: ok groups as the
+    pause table, the rest as dead letters with the error code as
+    ``verdict``."""
+    groups = spark.read.parquet(out)
+    ok = assembled_pauses_from_groups(groups).withColumn("verdict", F.lit("ok"))
+    dead = assembly_dead_letters_from_groups(groups).withColumnRenamed(
+        "error_code", "verdict")
+    return ok.unionByName(dead, allowMissingColumns=True)
 
 
 @pytest.fixture(scope="module")
@@ -38,18 +86,8 @@ def stream_source(spark, sf_dir, tmp_path_factory):
 
 
 def test_streaming_matches_batch_assembly(spark, stream_source, tmp_path):
-    out = stream_assembled(spark, stream_source, INPUT_SCHEMA)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("assembled_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = spark.sql("SELECT * FROM assembled_stream")
+    _drain(spark, stream_source, str(tmp_path / "fold"), str(tmp_path / "out"))
+    got = _closed_rows(spark, str(tmp_path / "out"))
     got_ok = sorted(
         [
             (r.conv_id, r.event_id, r.pause_type, r.offset_ms, r.duration_ms,
@@ -69,53 +107,11 @@ def test_streaming_matches_batch_assembly(spark, stream_source, tmp_path):
         ]
     )
     assert got_ok == want_ok and len(got_ok) > 0
-    # error groups are stragglers awaiting timeout; with availableNow (no
-    # further triggers) they must NOT have been emitted
+    # error groups are stragglers awaiting expiry; without lateness_ms
+    # they stay in the carry and must NOT have been emitted
     assert got.filter("verdict <> 'ok'").count() == 0
     # ...and the batch assembler confirms they exist in this input
     assert assembly_dead_letters(batch_filtered).count() > 0
-
-
-def test_straggler_timeout_dead_letter(spark, tmp_path):
-    """A group with an end but no start must dead-letter after the timeout."""
-    import datetime
-
-    from pyspark.sql import Row
-
-    src = str(tmp_path / "src")
-    rows = [
-        Row(conv_id="c1", turn_idx=0, role="assistant",
-            text="[1.5s][info][gc] GC(7) Pause Young (G1 Evacuation Pause) "
-                 "10M->5M(64M) 2.0ms",
-            tool=None, ts=datetime.datetime(2024, 1, 1)),
-    ]
-    spark.createDataFrame(rows, INPUT_SCHEMA).write.parquet(src)
-
-    out = stream_assembled(spark, src, INPUT_SCHEMA, timeout_ms=3000)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("straggler_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        errs = []
-        while time.time() < deadline:
-            # empty micro-batches keep firing, eventually the timeout trips
-            errs = spark.sql(
-                "SELECT * FROM straggler_stream WHERE verdict <> 'ok'"
-            ).collect()
-            if errs:
-                break
-            time.sleep(2)
-    finally:
-        q.stop()
-    assert len(errs) == 1
-    assert errs[0].verdict == "end_before_start"
-    assert errs[0].event_id == 7
 
 
 def test_event_time_watermark_dead_letter(spark, tmp_path):
@@ -133,19 +129,10 @@ def test_event_time_watermark_dead_letter(spark, tmp_path):
     t0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
 
     def drain():
-        q = (
-            stream_assembled(spark, src, INPUT_SCHEMA, lateness_ms=5000)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
+        _drain(spark, src, ck, out, lateness_ms=5000)
 
     def read_out():
-        return spark.read.parquet(out)
+        return _closed_rows(spark, out)
 
     rows = [
         # straggler: end with no start (GC(7), Young => needs start+regions)
@@ -171,11 +158,11 @@ def test_event_time_watermark_dead_letter(spark, tmp_path):
     assert got.filter("verdict <> 'ok'").count() == 0
 
     # watermark advance via ONE parseable start-only line with a later
-    # event time (unmatched free text never reaches the watermark node —
-    # the class filter is pushed below it; a start-only group parks as
-    # dangling state that both engines silently discard). A single drain
-    # suffices: the sentinel's batch advances the watermark, and Spark's
-    # no-data micro-batch fires the expired timer within the same run.
+    # event time (unmatched free text never moves the high-water mark; a
+    # start-only group parks in the carry as a dangling group that both
+    # engines silently discard). A single drain suffices: the sentinel's
+    # batch advances the watermark, and expiry is decided at the end of
+    # that same batch.
     Rowi = Row(conv_id="wm", turn_idx=0, role="assistant",
                text="[99.0s][info][gc,start     ] GC(9001) Pause Young "
                     "(G1 Evacuation Pause)",
@@ -452,21 +439,125 @@ def test_stream_cms_maintenance_is_truly_incremental(spark, sf_dir):
     assert len(gens) >= 2, gens  # merge path exercised across micro-batches
 
 
-@pytest.mark.parametrize("lateness_ms", [None, 5000])
-def test_assembler_handoff_is_narrow(spark, stream_source, lateness_ms):
-    """The Python state worker converts every column it is handed once per
-    group, so the hand-off must stay narrow: no raw text, no class or region
-    names, and ``ts`` only when the event-time timeout needs it."""
-    out = stream_assembled(spark, stream_source, INPUT_SCHEMA,
-                           lateness_ms=lateness_ms)
-    nodes = [out._jdf.queryExecution().analyzed()]
-    while nodes[-1].nodeName() != "FlatMapGroupsInPandasWithState":
-        nodes.append(nodes[-1].children().apply(0))
-    attrs = nodes[-1].child().output()
-    handoff = {
-        attrs.apply(i).name(): attrs.apply(i).dataType().simpleString()
-        for i in range(attrs.size())
-    }
-    strings = {name for name, typ in handoff.items() if typ == "string"}
-    assert not strings & {"text", "event_class", "region"}, handoff
-    assert ("ts" in handoff) == (lateness_ms is not None), handoff
+def test_cross_trigger_duplicate_region_last_turn_wins(spark, tmp_path):
+    """Two Eden lines of one group in different triggers: the line of the
+    higher turn wins, as in the batch assembler, even when the lower turn
+    arrives later (Eden 25->0 at turn 5 beats 25->7 at turn 3)."""
+    src = str(tmp_path / "src")
+    heap = "[9.0s][info][gc,heap      ] GC(7) "
+    _write_files(spark, src, [
+        [("c1", 0, START7, T0), ("c1", 5, heap + "Eden regions: 25->0(21)", T0)],
+        [("c1", 3, heap + "Eden regions: 25->7(21)", T0)],
+        [("c1", 6, heap + "Survivor regions: 0->4(21)", T0),
+         ("c1", 7, heap + "Old regions: 0->4", T0),
+         ("c1", 8, heap + "Humongous regions: 0->4", T0),
+         ("c1", 9, END7, T0)],
+    ])
+    _drain(spark, src, str(tmp_path / "fold"), str(tmp_path / "out"),
+           max_files_per_trigger=1)
+    got = _closed_rows(spark, str(tmp_path / "out"))
+    want = assembled_pauses(
+        supported_types_filter(parse_lines(spark.read.parquet(src)))
+    )
+    got_ok = [r.asDict() for r in got.filter("verdict = 'ok'")
+              .select(*want.columns).collect()]
+    assert got_ok == [r.asDict() for r in want.collect()]
+    assert got_ok[0]["eden_after"] == 0
+
+
+@pytest.mark.parametrize("past_ms, fires", [(0, False), (1, True)])
+def test_expiry_is_strictly_behind_the_watermark(spark, tmp_path, past_ms,
+                                                 fires):
+    """A straggler whose newest line is at t0 expires when t0 + lateness is
+    strictly behind the watermark (high-water mark - lateness): a sentinel
+    at exactly t0 + 2 * lateness does not fire it, one 1 ms later does."""
+    src = str(tmp_path / "src")
+    lateness = dt.timedelta(milliseconds=5000)
+    _write_files(spark, src, [
+        [("c1", 0, END7, T0)],
+        [("wm", 0, _sentinel(9001),
+          T0 + 2 * lateness + dt.timedelta(milliseconds=past_ms))],
+    ])
+    _drain(spark, src, str(tmp_path / "fold"), str(tmp_path / "out"),
+           lateness_ms=5000, max_files_per_trigger=1)
+    got = [(r.event_id, r.verdict)
+           for r in _closed_rows(spark, str(tmp_path / "out")).collect()]
+    assert got == ([(7, "end_before_start")] if fires else [])
+
+
+@pytest.mark.parametrize("start_after_wm_ms, verdict",
+                         [(0, "end_before_start"), (1, "missing_regions")])
+def test_line_at_or_behind_the_watermark_is_dropped(spark, tmp_path,
+                                                    start_after_wm_ms,
+                                                    verdict):
+    """A PauseStart at the watermark of earlier batches is dropped before
+    the fold, so the straggler keeps its end_before_start verdict; 1 ms
+    later it joins the group, which then dead-letters as missing_regions.
+    The filler batch between the watermark's move and the PauseStart makes
+    the case independent of the batch in which a watermark takes effect."""
+    src = str(tmp_path / "src")
+    wm = T0 + dt.timedelta(seconds=1)  # 6 s high-water mark - 5 s lateness
+    _write_files(spark, src, [
+        [("c1", 1, END7, T0), ("wm", 0, _sentinel(9001), T0 + dt.timedelta(seconds=6))],
+        [("f1", 0, _sentinel(9002), T0 + dt.timedelta(seconds=6))],
+        [("c1", 0, START7,
+          wm + dt.timedelta(milliseconds=start_after_wm_ms))],
+        [("wm", 1, _sentinel(9003), T0 + dt.timedelta(seconds=30))],
+    ])
+    _drain(spark, src, str(tmp_path / "fold"), str(tmp_path / "out"),
+           lateness_ms=5000, max_files_per_trigger=1)
+    got = [(r.conv_id, r.event_id, r.verdict)
+           for r in _closed_rows(spark, str(tmp_path / "out")).collect()]
+    assert got == [("c1", 7, verdict)]
+
+
+def test_conv_state_crash_between_carry_write_and_commit(spark, stream_source,
+                                                         tmp_path,
+                                                         monkeypatch):
+    """The second commit raises: batch 1's carry, state generation and
+    snapshot are written but its heartbeat is not. The resumed stream
+    re-runs batch 1 from batch 0's carry and state and must end equal to the
+    batch final state, with contiguous heartbeats whose events sum to the
+    batch ok count."""
+    import os
+
+    from java9_gc_log_parser_spark import commit_log
+    from java9_gc_log_parser_spark.operators.aggregate import conv_state_final
+    from java9_gc_log_parser_spark.streaming.state_stream import (
+        final_state,
+        stream_conv_state,
+    )
+
+    out_root = str(tmp_path / "state_crash")
+    log = os.path.join(out_root, "metrics.jsonl")
+    real_commit = commit_log.commit
+    calls = []
+
+    def crash_on_second(log, record):
+        calls.append(record["batch_id"])
+        if len(calls) == 2:
+            raise RuntimeError("injected crash before commit")
+        real_commit(log, record)
+
+    monkeypatch.setattr(commit_log, "commit", crash_on_second)
+    q = stream_conv_state(spark, stream_source, INPUT_SCHEMA, out_root,
+                          max_files_per_trigger=8)
+    with pytest.raises(Exception, match="injected crash"):
+        q.awaitTermination(300)
+    monkeypatch.undo()
+    assert commit_log.last_batch(log) == 0
+    assert os.path.isdir(os.path.join(out_root, "carry", "batch=1"))
+
+    q = stream_conv_state(spark, stream_source, INPUT_SCHEMA, out_root,
+                          max_files_per_trigger=8)
+    assert q.awaitTermination(300)
+
+    ok = assembled_pauses(
+        supported_types_filter(parse_lines(spark.read.parquet(stream_source)))
+    )
+    got = sorted(map(tuple, final_state(spark, out_root).collect()))
+    assert got == sorted(map(tuple, conv_state_final(ok).collect()))
+    beats = commit_log.records(log)
+    assert sorted(b["batch_id"] for b in beats) == list(range(len(beats)))
+    assert len(beats) >= 3
+    assert sum(b["events"] for b in beats) == ok.count()
