@@ -7,8 +7,8 @@ Cleanup` lines are parsed but silently dropped, so the `cleanups` counter can
 never increment through the full pipeline (quirk parity; tested).
 
 F2: the implicit dead-letter of the reference becomes explicit fan-out: one
-filtered projection per sink from a single cached parsed DataFrame, so the
-parse stage executes once for all sinks (SURVEY §4 "one-pass fan-out").
+filtered projection per sink from a single materialized parsed DataFrame, so
+the parse stage executes once for all sinks (SURVEY §4 "one-pass fan-out").
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ def supported_types_filter(parsed: DataFrame) -> DataFrame:
 def route(parsed: DataFrame) -> dict[str, DataFrame]:
     """Fan out one parsed DataFrame into the three sink DataFrames.
 
-    Caller is responsible for persisting `parsed` before materializing more
+    Caller is responsible for materializing `parsed` before writing more
     than one sink (plans/pipeline.py does; verified by explain in tests).
     """
     pause_events = supported_types_filter(parsed).transform(enrich).select(

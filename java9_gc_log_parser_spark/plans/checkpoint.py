@@ -18,6 +18,8 @@ Design:
     unpartitioned path still works (predicate fallback) for ad-hoc runs.
   * each sink writes to ``{root}/{sink}/batch={id}/`` with overwrite — a
     re-run of a half-finished batch replaces its output exactly (idempotent).
+  * the batch's parse and assembly groups are staged under ``{root}/stage/``
+    (``pipeline.build``); every batch and every re-run overwrites them.
   * ``manifest.jsonl`` is the commit log (``commit_log``): a batch's record
     is committed after every one of its sinks has been written.
   * lineage per batch records the source path + the exact filter predicate;
@@ -116,21 +118,9 @@ def run_batch(
     root: str,
     batch_id: int,
     n_batches: int,
-    verify_commit: bool = False,
 ) -> BatchResult:
     """Process one micro-batch: read its bucket, write every sink, commit the
-    manifest record.
-
-    ``verify_commit``: the sink row metric is an Observation on the write job
-    — rows *fed to the writer*, not a post-commit read-back, so a silent
-    commit truncation would go unnoticed by the metric alone (the pre-r2 code
-    re-read every sink, which doubles as an integrity check but re-scans the
-    entire output per sink per batch — at 100 TB, re-reading everything just
-    written). Setting ``verify_commit=True`` restores the check cheaply: one
-    count() read-back of the SMALLEST sink (conv_state, O(conversations)
-    rows) per batch, recorded in the manifest as ``commit_check``. Resume
-    correctness never depends on the metric either way.
-    """
+    manifest record."""
     src = _as_ref(source_path)
     snapshot = None
     if src.format == ICEBERG:
@@ -165,37 +155,17 @@ def run_batch(
         transcripts = read_table(spark, src.location).filter(F.expr(predicate))
         scan_files, scan_bytes = table_scan_stats(spark, src)
     t0 = time.perf_counter()
-    dfs = build(transcripts, persist=True)
+    dfs = build(transcripts, os.path.join(root, "stage", "parsed"))
     rows_in = dfs["parsed"].count()
     sink_rows = write_sinks(
         dfs, {s: os.path.join(root, s, f"batch={batch_id}") for s in SINKS}
     )
-    commit_check = None
-    if verify_commit:
-        # cheap integrity spot-check: read back the smallest sink and compare
-        # its committed row count against the Observation metric
-        sink = "conv_state"
-        committed = read_table(
-            spark, os.path.join(root, sink, f"batch={batch_id}")
-        ).count()
-        commit_check = {
-            "sink": sink,
-            "observed": sink_rows[sink],
-            "committed": committed,
-            "ok": committed == sink_rows[sink],
-        }
-        if not commit_check["ok"]:
-            raise RuntimeError(
-                f"commit check failed for batch {batch_id}: {commit_check}"
-            )
-    dfs["parsed"].unpersist()
     wall = time.perf_counter() - t0
     rec = {
         "batch_id": batch_id,
         "status": "ok",
         "rows_in": rows_in,
         "sink_rows": sink_rows,
-        "commit_check": commit_check,
         "wall_s": round(wall, 3),
         "lineage": {
             "source": src.location,
@@ -221,7 +191,6 @@ def run(
     root: str,
     n_batches: int = 8,
     stop_after: int | None = None,
-    verify_commit: bool = False,
 ) -> list[BatchResult]:
     """Run all pending micro-batches (resuming past completed ones).
 
@@ -233,10 +202,7 @@ def run(
     for b in range(n_batches):
         if b in done:
             continue
-        results.append(
-            run_batch(spark, source_path, root, b, n_batches,
-                      verify_commit=verify_commit)
-        )
+        results.append(run_batch(spark, source_path, root, b, n_batches))
         if stop_after is not None and len(results) >= stop_after:
             break
     return results

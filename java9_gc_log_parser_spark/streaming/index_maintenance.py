@@ -57,20 +57,12 @@ def write_base_generation(
 def apply_generation(enc: DataFrame, out_root: str, batch_id: int) -> dict:
     """Write batch ``batch_id``'s encoded vectors as its generation and
     return its commit record (``maintain_index`` commits it). An empty batch
-    leaves a generation dir holding only ``_SUCCESS``; ``read_index`` skips
-    such dirs."""
+    leaves a generation dir holding only ``_SUCCESS``, which ``read_index``
+    reads as zero rows."""
     enc.write.partitionBy("cell").mode("overwrite").parquet(
         f"{out_root}/batch={batch_id}"
     )
     return {"batch_id": batch_id}
-
-
-def _has_parquet_parts(gen_dir: str) -> bool:
-    return any(
-        name.endswith(".parquet")
-        for _, _, names in os.walk(gen_dir)
-        for name in names
-    )
 
 
 def maintain_index(
@@ -124,16 +116,14 @@ def read_index(spark: SparkSession, out_root: str) -> DataFrame:
 
     Each generation dir is read on its own (recovering its ``cell=K``
     partition dirs); a wholesale read of ``out_root`` would misparse the
-    ``batch=N`` dir names as a partition column. Generations of empty
-    micro-batches hold no part files and are skipped: there is no schema to
-    infer from them and nothing to add."""
+    ``batch=N`` dir names as a partition column. Appends are read with the
+    base generation's schema, so nothing is inferred from their files: the
+    generation of an empty micro-batch holds no part files and reads as
+    zero rows."""
     final = commit_log.last_batch(_log(out_root))
     batches = range(final + 1) if final is not None else []
-    gens = [f"{out_root}/base"] + [
-        g for g in (f"{out_root}/batch={i}" for i in batches)
-        if _has_parquet_parts(g)
-    ]
-    idx = spark.read.parquet(gens[0])
-    for g in gens[1:]:
-        idx = idx.unionByName(spark.read.parquet(g))
+    idx = spark.read.parquet(f"{out_root}/base")
+    reader = spark.read.schema(idx.schema)
+    for i in batches:
+        idx = idx.unionByName(reader.parquet(f"{out_root}/batch={i}"))
     return idx

@@ -6,9 +6,10 @@ The capability — *push incremental aggregate snapshots as data arrives* —
 maps to Structured Streaming ``foreachBatch``: in the callback of the stream's
 assembly fold (``assembler.assemble_stream``), each micro-batch of assembled
 pause events folds into a running per-conversation state table, every batch
-writes its snapshot (the SSE "event") and commits a metrics record (the
-"heartbeat": batch id, event-time high-water mark, events, convs, wall
-seconds) to a JSONL feed, which is the fold's commit log (``commit_log``).
+writes its state generation (the snapshot, the SSE "event") and commits a
+metrics record (the "heartbeat": batch id, event-time high-water mark,
+events, convs, wall seconds) to a JSONL feed, which is the fold's commit log
+(``commit_log``).
 
 The running state is a *mergeable partial aggregate*: alongside the GcState
 counters it carries the two argmax keys (``_max_off`` for heap,
@@ -118,8 +119,8 @@ def stream_conv_state(
     The ok groups of each trigger of ``assembler.assemble_stream`` fold into
     the state in the same ``foreachBatch`` callback. Layout under
     ``out_root`` (besides the fold's ``ckpt/`` and ``carry/``):
-      state_gens/batch=N/    cumulative state generation after batch N
-      snapshots/batch=N/     the state as of batch N (the SSE "event" feed)
+      state_gens/batch=N/    cumulative state generation after batch N: the
+                             state as of batch N (the SSE "event" feed)
       metrics.jsonl          the commit log (``commit_log``): one heartbeat
                              record per applied batch (batch id, event-time
                              high-water mark, events, convs, wall seconds)
@@ -134,12 +135,7 @@ def stream_conv_state(
             merged = b
         gen = _gen_dir(out_root, batch_id)
         merged.coalesce(1).write.mode("overwrite").parquet(gen)
-        staged = spark.read.parquet(gen)
-        n_convs = staged.count()
-        staged.write.mode("overwrite").parquet(
-            os.path.join(out_root, "snapshots", f"batch={batch_id}")
-        )
-        return {"events": ok.count(), "convs": n_convs}
+        return {"events": ok.count(), "convs": spark.read.parquet(gen).count()}
 
     return assemble_stream(
         spark, source_path, input_schema, out_root, emit,

@@ -8,7 +8,8 @@ Packaging (north rule: "packaged for spark-submit --py-files"):
         --mode checkpoint --n-batches 64
 
 Modes:
-  batch      one-shot pipeline, all sinks written once
+  batch      one-shot pipeline, all sinks written once (parse and assembly
+             staged under <output>/stage)
   checkpoint resumable micro-batches with manifest/lineage/metrics (default);
              --prepare-source first rewrites the input partitioned by
              batch_bucket so every micro-batch is a pruned 1/n scan
@@ -55,7 +56,8 @@ def main(argv: list[str] | None = None) -> None:
     if args.mode == "batch":
         from java9_gc_log_parser_spark.plans.pipeline import build
 
-        dfs = build(spark.read.parquet(args.input))
+        dfs = build(spark.read.parquet(args.input),
+                    f"{args.output}/stage/parsed")
         counts = cp.write_sinks(
             dfs, {s: f"{args.output}/{s}" for s in cp.SINKS}
         )

@@ -31,7 +31,8 @@ def _manifest(root):
 
 def _assert_matches_single_shot(spark, source_path, root):
     """Resumed output == single-shot pipeline output, sink by sink."""
-    single = build(spark.read.parquet(source_path))
+    single = build(spark.read.parquet(source_path),
+                   os.path.join(root, "single_stage"))
     for sink, cols in [
         ("assembled", ["conv_id", "event_id", "pause_type", "duration_ms"]),
         ("pause_events", ["conv_id", "turn_idx", "event_class"]),
@@ -41,7 +42,6 @@ def _assert_matches_single_shot(spark, source_path, root):
         got = _collect_sorted(cp.read_sink(spark, root, sink), cols)
         want = _collect_sorted(single[sink], cols)
         assert got == want, f"{sink}: resumed output differs from single-shot"
-    single["parsed"].unpersist()
 
 
 def test_crash_resume_identical(spark, source_path, tmp_path):
@@ -150,7 +150,7 @@ def test_prepared_source_prunes_scans(spark, sf_dir, tmp_path):
     total_in = sum(r["rows_in"] for r in recs)
     plain = synth_transcripts(spark, sf_dir)
     assert total_in == plain.count()
-    single = build(plain)
+    single = build(plain, str(tmp_path / "single_stage"))
     got = _collect_sorted(
         cp.read_sink(spark, root, "assembled"),
         ["conv_id", "event_id", "pause_type", "duration_ms"],
@@ -159,4 +159,3 @@ def test_prepared_source_prunes_scans(spark, sf_dir, tmp_path):
         single["assembled"], ["conv_id", "event_id", "pause_type", "duration_ms"]
     )
     assert got == want
-    single["parsed"].unpersist()

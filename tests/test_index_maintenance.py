@@ -134,8 +134,8 @@ def test_encode_empty_batch_yields_empty_generation(spark, sf_dir, trained):
 
 def test_empty_generation_round_trips(spark, sf_dir, trained, tmp_path):
     """An empty micro-batch's generation holds no part files, only
-    ``_SUCCESS``; reading the index back skips it instead of failing to
-    infer a schema, and the generations around it still count."""
+    ``_SUCCESS``; reading the index back with the base generation's schema
+    reads it as zero rows, and the generations around it still count."""
     import glob
 
     embs, base, cells, books = trained

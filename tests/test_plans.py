@@ -4,9 +4,9 @@ These tests pin the *plan shape*, not just results:
 
 - enrich joins execute as BroadcastHashJoin (never shuffle the fact side
   against a 4-row dim — SURVEY §2.6);
-- after ``plans.pipeline.build(persist=True)`` every sink reads the parsed
-  DataFrame from the InMemoryRelation cache, so the Arrow parse stage runs
-  once for all sinks (SURVEY §4 "one-pass fan-out");
+- after ``plans.pipeline.build`` every sink scans the staged parsed table
+  or its assembly groups, so the parse runs once for all sinks (SURVEY §4
+  "one-pass fan-out");
 - parquet scans get filters pushed down and columns pruned (PushedFilters /
   ReadSchema in the formatted plan) so a 100 TB scan only reads what the
   query projects.
@@ -36,20 +36,26 @@ def test_enrich_uses_broadcast_hash_join(spark, sf_dir):
     assert "ShuffledHashJoin" not in plan
 
 
-def test_pipeline_sinks_read_parse_from_cache(spark, sf_dir):
-    transcripts = synth_transcripts(spark, sf_dir)
-    dfs = build(transcripts, persist=True)
-    try:
-        for sink in ("pause_events", "tool_calls", "unmatched", "assembled",
-                     "conv_state", "dur_histogram"):
-            plan = _formatted(dfs[sink])
-            assert "InMemoryTableScan" in plan, f"{sink} does not hit the cache"
-            # the Arrow parse stage must not re-run below the cache boundary
-            assert "ArrowEvalPython" not in plan.split("InMemoryTableScan")[0], (
-                f"{sink} re-executes the parse UDF above the cache"
-            )
-    finally:
-        dfs["parsed"].unpersist()
+def test_pipeline_sinks_read_staged_tables(spark, sf_dir, tmp_path):
+    stage = str(tmp_path / "stage" / "parsed")
+    dfs = build(synth_transcripts(spark, sf_dir), stage)
+    for sink, table in [
+        ("pause_events", stage),
+        ("tool_calls", stage),
+        ("unmatched", stage),
+        ("assembled", stage + "__groups"),
+        ("conv_state", stage + "__groups"),
+        ("dur_histogram", stage + "__groups"),
+    ]:
+        plan = _formatted(dfs[sink])
+        scans = [line for line in plan.splitlines() if "Location:" in line]
+        assert scans and all(
+            line.rstrip().endswith(table + "]") for line in scans
+        ), f"{sink} does not scan only {table}: {scans}"
+        # the parse (its CollectMetrics barrier and regex cascade) ran once,
+        # in build; no sink plan re-runs it
+        assert "CollectMetrics" not in plan, sink
+        assert "regexp_replace" not in plan, sink
 
 
 def test_parquet_filter_pushdown_and_column_pruning(spark, sf_dir):
@@ -98,9 +104,10 @@ def test_assembly_and_state_aggs_are_hash_based(spark, sf_dir):
 
 
 @pytest.mark.parametrize("sink", ["pause_events", "tool_calls"])
-def test_sink_plans_have_no_cartesian_or_nested_loop(spark, sf_dir, sink):
+def test_sink_plans_have_no_cartesian_or_nested_loop(spark, sf_dir, sink,
+                                                      tmp_path):
     transcripts = synth_transcripts(spark, sf_dir)
-    dfs = build(transcripts, persist=False)
+    dfs = build(transcripts, str(tmp_path / "stage" / "parsed"))
     plan = _formatted(dfs[sink])
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

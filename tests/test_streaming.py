@@ -185,7 +185,7 @@ def test_event_time_watermark_dead_letter(spark, tmp_path):
 def test_stream_conv_state_matches_batch_final(spark, stream_source, tmp_path):
     """After the snapshot stream drains, the cumulative state equals the
     batch conv_state_final over the same input, and every micro-batch left a
-    snapshot + a metrics heartbeat line."""
+    state generation + a metrics heartbeat line."""
     import json
     import os
 
@@ -213,8 +213,8 @@ def test_stream_conv_state_matches_batch_final(spark, stream_source, tmp_path):
         metrics = [json.loads(line) for line in f]
     assert len(metrics) >= 2  # several micro-batches actually ran
     assert {m["batch_id"] for m in metrics} == set(range(len(metrics)))
-    snapshots = os.listdir(os.path.join(out_root, "snapshots"))
-    assert len(snapshots) == len(metrics)
+    gens = os.listdir(os.path.join(out_root, "state_gens"))
+    assert len(gens) == len(metrics)
 
 
 def test_state_replay_idempotent_and_pointer_atomic(spark, stream_source, tmp_path):
