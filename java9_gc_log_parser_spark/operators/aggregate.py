@@ -9,9 +9,12 @@ prefix scan, not a grouped agg. Spark-first: a window over
 by feeding nulls for Remark rows into the carry-forward.
 
 G2 ``conv_state_final``: the final snapshot per conversation = grouped
-counters + last sizes. Implemented as a *salted two-phase aggregation*
-(phase 1 groups on (conv_id, salt), phase 2 re-aggregates per conv_id) to
-defuse the hot-conv skew the north rule calls out. For algebraic aggs Spark's
+counters + last sizes, built from the one GcState aggregate that the
+snapshot stream (``streaming/state_stream.py``) shares: a mergeable
+``gc_state_partial``, its ``gc_state_merge`` and ``gc_state_finalize``.
+Implemented as a *salted two-phase aggregation* (the partial groups on
+(conv_id, salt), the merge re-aggregates per conv_id) to defuse the
+hot-conv skew the north rule calls out. For algebraic aggs Spark's
 map-side partial aggregation already bounds per-key work; the salted shape
 matters once holistic aggs (exact percentiles, collect_*) enter, and it keeps
 reducer-side hash tables balanced under extreme key skew.
@@ -81,39 +84,59 @@ def _salt(n_salts: int) -> Column:
     return F.pmod(F.xxhash64("event_id"), F.lit(n_salts))
 
 
-def conv_state_final(assembled: DataFrame, n_salts: int = 16) -> DataFrame:
-    """G2: final GcState per conversation via salted two-phase aggregation."""
+def gc_state_partial(assembled: DataFrame, *keys: str) -> DataFrame:
+    """Mergeable partial GcState per ``keys`` (``conv_id`` first): counters,
+    ``time_offset_ms``, heap by max ``offset_ms`` and generation sizes by max
+    non-Remark offset, whose key is kept as ``_max_nr_off`` — Remark updates
+    the heap but keeps the generation sizes (``GcStateFlow.scala:28-29``)."""
     pt = F.col("pause_type")
-    not_remark_key = F.when(pt != "Remark", F.col("offset_ms"))
-
-    phase1 = assembled.withColumn("_salt", _salt(n_salts)).groupBy(
-        "conv_id", "_salt"
-    )
-    p1 = phase1.agg(
+    nr_off = F.when(pt != "Remark", F.col("offset_ms"))
+    return assembled.groupBy(*keys).agg(
         *[
-            F.sum((pt == t).cast("long")).alias(f"_{name}")
+            F.sum((pt == t).cast("long")).alias(name)
             for name, t in COUNTERS.items()
         ],
-        F.max("offset_ms").alias("_max_off"),
-        F.max_by("heap_after", "offset_ms").alias("_heap_size"),
-        F.max_by("heap_total", "offset_ms").alias("_heap_total"),
-        F.max(not_remark_key).alias("_max_nr_off"),
-        *[
-            F.max_by(F.col(c), not_remark_key).alias(f"_{c}")
-            for c in GEN_COLS
-        ],
+        F.max("offset_ms").alias("time_offset_ms"),
+        F.max_by("heap_after", "offset_ms").alias("heap_size"),
+        F.max_by("heap_total", "offset_ms").alias("heap_total"),
+        *[F.max_by(F.col(c), nr_off).alias(c) for c in GEN_COLS],
+        F.max(nr_off).alias("_max_nr_off"),
     )
-    out = p1.groupBy("conv_id").agg(
-        *[F.sum(f"_{name}").alias(name) for name in COUNTERS],
-        F.max("_max_off").alias("time_offset_ms"),
-        F.max_by("_heap_size", "_max_off").alias("heap_size"),
-        F.max_by("_heap_total", "_max_off").alias("heap_total"),
-        *[
-            F.coalesce(F.max_by(f"_{c}", "_max_nr_off"), F.lit(0)).alias(c)
-            for c in GEN_COLS
-        ],
+
+
+def gc_state_merge(partials: DataFrame) -> DataFrame:
+    """partial ⊕ partial per ``conv_id``: counters add; heap follows max
+    ``time_offset_ms``; generation sizes follow max ``_max_nr_off`` (a
+    Remark-only partial's null key never wins)."""
+    return partials.groupBy("conv_id").agg(
+        *[F.sum(name).alias(name) for name in COUNTERS],
+        F.max("time_offset_ms").alias("time_offset_ms"),
+        F.max_by("heap_size", "time_offset_ms").alias("heap_size"),
+        F.max_by("heap_total", "time_offset_ms").alias("heap_total"),
+        *[F.max_by(c, "_max_nr_off").alias(c) for c in GEN_COLS],
+        F.max("_max_nr_off").alias("_max_nr_off"),
     )
-    return out
+
+
+def gc_state_finalize(state: DataFrame) -> DataFrame:
+    """The exposed GcState: ``_max_nr_off`` dropped, generation sizes
+    zero-filled like ``GcState``'s zero-initialised ones."""
+    return state.select(
+        "conv_id",
+        *COUNTERS,
+        "time_offset_ms",
+        "heap_size",
+        "heap_total",
+        *[F.coalesce(F.col(c), F.lit(0)).alias(c) for c in GEN_COLS],
+    )
+
+
+def conv_state_final(assembled: DataFrame) -> DataFrame:
+    """G2: final GcState per conversation via salted two-phase aggregation."""
+    salted = assembled.withColumn("_salt", _salt(16))
+    return gc_state_finalize(
+        gc_state_merge(gc_state_partial(salted, "conv_id", "_salt"))
+    )
 
 
 def conv_state_json(conv_state: DataFrame) -> DataFrame:

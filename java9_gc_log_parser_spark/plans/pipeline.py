@@ -108,7 +108,7 @@ def build(
         "assembled": assembled,
         "conv_state": conv_state_final(assembled),
         "conv_state_scan": conv_state_scan(assembled),
-        "bucket_turns": bucket_turn_counts(transcripts),
+        "bucket_turns": bucket_turn_counts(parsed),
         "bucket_pauses": bucket_pause_stats(assembled),
         "dur_histogram": duration_histogram(assembled),
     }

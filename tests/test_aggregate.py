@@ -103,6 +103,43 @@ def test_final_state_matches_scan_tail(spark):
     assert (c2.mixed, c2.eden_after) == (1, 3)
 
 
+def test_merge_of_split_partials_equals_final_state(spark):
+    """finalize(merge(partial(a) ∪ partial(b))) == conv_state_final(a ∪ b)
+    when a conversation's latest event is a Remark in one half and its
+    latest generation sizes live in the other: the heap crosses the merge
+    from one side, the generation sizes from the other."""
+    from java9_gc_log_parser_spark.operators.aggregate import (
+        gc_state_finalize,
+        gc_state_merge,
+        gc_state_partial,
+    )
+
+    a = [
+        _ev(0, "Young", 10, 50, gens=(1, 1, 1, 1)),
+        _ev(3, "Remark", 40, 70),  # c1's last event
+        _ev(4, "Young", 10, 20, gens=(5, 5, 5, 5), conv="c2"),
+    ]
+    b = [
+        _ev(1, "Young", 20, 55, gens=(2, 2, 2, 2)),
+        _ev(2, "Mixed", 30, 60, gens=(3, 3, 3, 3)),
+        _ev(5, "Remark", 20, 25, conv="c2"),  # a Remark-only half
+        _ev(6, "Full", 10, 30, gens=(6, 6, 6, 6), conv="c3"),
+    ]
+    da, db = (spark.createDataFrame(h, SCHEMA) for h in (a, b))
+    merged = gc_state_finalize(gc_state_merge(
+        gc_state_partial(da, "conv_id").unionByName(
+            gc_state_partial(db, "conv_id"))
+    ))
+    got = {r.conv_id: r for r in merged.collect()}
+    want = {r.conv_id: r for r in conv_state_final(da.unionByName(db)).collect()}
+    assert got == want
+    c1, c2 = got["c1"], got["c2"]
+    assert (c1.young_gcs, c1.mixed, c1.remarks) == (2, 1, 1)
+    assert (c1.time_offset_ms, c1.heap_size) == (40, 70)  # heap from a
+    assert (c1.eden_after, c1.humongous_after) == (3, 3)  # gens from b
+    assert (c2.heap_size, c2.eden_after) == (25, 5)
+
+
 def test_scan_is_per_conversation(spark):
     events = [_ev(0, "Young", 10, 50), _ev(1, "Young", 20, 55, conv="c2")]
     s = _scan(spark, events)

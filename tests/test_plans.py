@@ -43,6 +43,7 @@ def test_pipeline_sinks_read_staged_tables(spark, sf_dir, tmp_path):
         ("pause_events", stage),
         ("tool_calls", stage),
         ("unmatched", stage),
+        ("bucket_turns", stage),
         ("assembled", stage + "__groups"),
         ("conv_state", stage + "__groups"),
         ("dur_histogram", stage + "__groups"),

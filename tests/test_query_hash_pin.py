@@ -29,8 +29,10 @@ SF_DIR = "/root/testdata/sf0.01"
 PINNED_SAMPLE = [
     "q01_parse_classify",
     "q03_pause_events_sink",
+    "q08_conv_state_final",
     "q10_bucket_turn_counts",
     "q13_dedup_exact",
+    "q28_conv_state_json",
     "q30_hash_split",
     "q52_importance_resample",
     "q56_pack_sequences",

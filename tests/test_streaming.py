@@ -215,6 +215,45 @@ def test_stream_conv_state_matches_batch_final(spark, stream_source, tmp_path):
     assert {m["batch_id"] for m in metrics} == set(range(len(metrics)))
     gens = os.listdir(os.path.join(out_root, "state_gens"))
     assert len(gens) == len(metrics)
+    for m in metrics:  # the observed convs is the generation's row count
+        gen = os.path.join(out_root, "state_gens", f"batch={m['batch_id']}")
+        assert m["convs"] == spark.read.parquet(gen).count()
+
+
+def test_stream_conv_state_survives_triggers_that_close_no_group(spark,
+                                                                 tmp_path):
+    """Triggers holding only PauseStarts close no group: their heartbeat
+    reads ``events == 0`` and the previous ``convs`` (0 before any state),
+    and the stream drains without waiting on an observation."""
+    import os
+
+    from java9_gc_log_parser_spark import commit_log
+    from java9_gc_log_parser_spark.streaming.state_stream import (
+        final_state,
+        stream_conv_state,
+    )
+
+    src, out_root = str(tmp_path / "src"), str(tmp_path / "state")
+    heap = "[1.5s][info][gc,heap      ] GC(7) "
+    _write_files(spark, src, [
+        [("c0", 0, _sentinel(9001), T0)],
+        [("c1", 0, START7, T0),
+         ("c1", 1, heap + "Eden regions: 25->0(21)", T0),
+         ("c1", 2, heap + "Survivor regions: 0->4(21)", T0),
+         ("c1", 3, heap + "Old regions: 0->4", T0),
+         ("c1", 4, heap + "Humongous regions: 0->4", T0),
+         ("c1", 5, END7, T0)],
+        [("c2", 0, _sentinel(9002), T0)],
+    ])
+    q = stream_conv_state(spark, src, INPUT_SCHEMA, out_root,
+                          max_files_per_trigger=1)
+    assert q.awaitTermination(300)
+
+    beats = sorted(commit_log.records(os.path.join(out_root, "metrics.jsonl")),
+                   key=lambda b: b["batch_id"])
+    assert [(b["events"], b["convs"]) for b in beats] == [(0, 0), (1, 1), (0, 1)]
+    [c1] = final_state(spark, out_root).collect()
+    assert (c1.conv_id, c1.young_gcs) == ("c1", 1)
 
 
 def test_state_replay_idempotent_and_pointer_atomic(spark, stream_source, tmp_path):
