@@ -27,36 +27,21 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from java9_gc_log_parser_spark import oracle as O  # noqa: E402
 from java9_gc_log_parser_spark.functions.parse import parse_lines  # noqa: E402
-from java9_gc_log_parser_spark.operators.aggregate import (  # noqa: E402
-    bucket_pause_stats,
-    bucket_turn_counts,
-    conv_state_final,
-    conv_state_scan,
-    duration_histogram,
-)
-from java9_gc_log_parser_spark.operators.assemble import (  # noqa: E402
-    assembled_pauses,
-    assembly_dead_letters,
-)
-from java9_gc_log_parser_spark.operators.route import (  # noqa: E402
-    route,
-    supported_types_filter,
-)
+from java9_gc_log_parser_spark.plans.pipeline import build  # noqa: E402
 from java9_gc_log_parser_spark.sources.transcripts import synth_transcripts  # noqa: E402
 
-_CACHE: dict[tuple[int, str], DataFrame] = {}
+_BUILDS: dict[tuple[int, str], dict[str, DataFrame]] = {}
 
 
-def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _built(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The pipeline's ``build`` over the synthesized transcripts, run once per
+    (session, sf dir) and staged under a fresh scratch dir; the pipeline
+    queries read its sinks."""
     key = (id(spark), sf_dir)
-    if key not in _CACHE:
-        df = parse_lines(synth_transcripts(spark, sf_dir)).persist()
-        _CACHE[key] = df
-    return _CACHE[key]
-
-
-def _assembled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return assembled_pauses(supported_types_filter(_parsed(spark, sf_dir)))
+    if key not in _BUILDS:
+        _BUILDS[key] = build(synth_transcripts(spark, sf_dir),
+                             f"{_fresh_scratch(sf_dir, 'build')}/parsed")
+    return _BUILDS[key]
 
 
 # --------------------------------------------------------------------------
@@ -65,57 +50,59 @@ def _assembled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q01_parse_classify(spark, sf_dir):
     return (
-        _parsed(spark, sf_dir)
+        _built(spark, sf_dir)["parsed"]
         .groupBy("event_class")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
 def q02_pause_end_fields(spark, sf_dir):
-    return _parsed(spark, sf_dir).filter(F.col("event_class") == "pause_end").select(
+    return _built(spark, sf_dir)["parsed"].filter(
+        F.col("event_class") == "pause_end"
+    ).select(
         "conv_id", "turn_idx", "event_id", "pause_type", "reason", "offset_ms",
         "heap_before", "heap_after", "heap_total", "duration_ms",
     )
 
 
 def q03_pause_events_sink(spark, sf_dir):
-    return route(_parsed(spark, sf_dir))["pause_events"]
+    return _built(spark, sf_dir)["pause_events"]
 
 
 def q04_tool_calls_sink(spark, sf_dir):
-    return route(_parsed(spark, sf_dir))["tool_calls"]
+    return _built(spark, sf_dir)["tool_calls"]
 
 
 def q05_unmatched_sink(spark, sf_dir):
-    return route(_parsed(spark, sf_dir))["unmatched"]
+    return _built(spark, sf_dir)["unmatched"]
 
 
 def q06_assembled_pauses(spark, sf_dir):
-    return _assembled(spark, sf_dir)
+    return _built(spark, sf_dir)["assembled"]
 
 
 def q07_assembly_errors(spark, sf_dir):
-    return assembly_dead_letters(supported_types_filter(_parsed(spark, sf_dir)))
+    return _built(spark, sf_dir)["assembly_errors"]
 
 
 def q08_conv_state_final(spark, sf_dir):
-    return conv_state_final(_assembled(spark, sf_dir))
+    return _built(spark, sf_dir)["conv_state"]
 
 
 def q09_conv_state_scan(spark, sf_dir):
-    return conv_state_scan(_assembled(spark, sf_dir))
+    return _built(spark, sf_dir)["conv_state_scan"]
 
 
 def q10_bucket_turn_counts(spark, sf_dir):
-    return bucket_turn_counts(synth_transcripts(spark, sf_dir))
+    return _built(spark, sf_dir)["bucket_turns"]
 
 
 def q11_bucket_pause_stats(spark, sf_dir):
-    return bucket_pause_stats(_assembled(spark, sf_dir))
+    return _built(spark, sf_dir)["bucket_pauses"]
 
 
 def q12_duration_histogram(spark, sf_dir):
-    return duration_histogram(_assembled(spark, sf_dir))
+    return _built(spark, sf_dir)["dur_histogram"]
 
 
 # --- training-data ops over documents/embeddings (SURVEY target additions) --
@@ -355,16 +342,15 @@ def _drain_closed(spark, src: str, root: str, rows, **kw) -> DataFrame:
     return spark.read.parquet(outp)
 
 
-def _jvm_state_parts(spark) -> str:
-    """Stateful-stage partition count for streaming state (stream-stream
-    joins, window/session aggs, dropDuplicates, CMS maintenance): the
-    per-batch cost is dominated by state-store commits — which scale WITH
-    partition count — and the state itself is a few MB. Measured r4:
-    lifting these to core-count partitions regressed q66 4.5→11.3 s and
-    q126 9.2→15.7 s at sf0.1. At production state volumes
-    (state ≫ one executor's heap) this floor rises to spread the store —
-    a state-size knob, not a compute-parallelism knob."""
-    return "8"
+#: Stateful-stage partition count for streaming state (stream-stream
+#: joins, window/session aggs, dropDuplicates, CMS maintenance): the
+#: per-batch cost is dominated by state-store commits — which scale WITH
+#: partition count — and the state itself is a few MB. Measured r4:
+#: lifting these to core-count partitions regressed q66 4.5→11.3 s and
+#: q126 9.2→15.7 s at sf0.1. At production state volumes
+#: (state ≫ one executor's heap) this floor rises to spread the store —
+#: a state-size knob, not a compute-parallelism knob.
+_JVM_STATE_PARTS = "8"
 
 
 def q26_stream_assembled(spark, sf_dir):
@@ -417,7 +403,7 @@ def q55_stream_atleastonce_dedup(spark, sf_dir):
     lo, hi = tdf.agg(F.min("ts"), F.max("ts")).first()
     delay_s = int((hi - lo).total_seconds()) + 60
 
-    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
         _drain_to_parquet(
             spark.readStream.schema(_INPUT_SCHEMA)
             .option("maxFilesPerTrigger", 16)
@@ -512,7 +498,7 @@ def q28_conv_state_json(spark, sf_dir):
     payload shape, byte-compared against DuckDB's to_json of the same state."""
     from java9_gc_log_parser_spark.operators.aggregate import conv_state_json
 
-    return conv_state_json(conv_state_final(_assembled(spark, sf_dir)))
+    return conv_state_json(_built(spark, sf_dir)["conv_state"])
 
 
 def q51_stream_metrics_feed(spark, sf_dir):
@@ -563,7 +549,7 @@ def q51_stream_metrics_feed(spark, sf_dir):
     convs = [b["convs"] for b in beats]
     monotonic = all(a <= b for a, b in zip(convs, convs[1:]))
 
-    batch_final = conv_state_final(_assembled(spark, sf_dir))
+    batch_final = _built(spark, sf_dir)["conv_state"]
     streamed = final_state(spark, out_root).select(*batch_final.columns)
     diff = streamed.exceptAll(batch_final).count() + batch_final.exceptAll(
         streamed
@@ -1073,7 +1059,7 @@ def q67_stream_cms_maintenance(spark, sf_dir):
         return {"batch_id": batch_id}
 
     docs_schema = _docs(spark, sf_dir).schema
-    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
         q = (
             spark.readStream.schema(docs_schema)
             .option("maxFilesPerTrigger", 2)
@@ -1158,7 +1144,7 @@ def q66_stream_stream_join(spark, sf_dir):
         F.col("ts").alias("r_ts"),
         bucket.alias("r_bucket"),
     )
-    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
         _drain_to_parquet(
             left.join(
                 right,
@@ -1192,7 +1178,7 @@ def q65_quantile_sketch(spark, sf_dir):
     from pyspark.sql import functions as F
 
     return histogram_quantile(
-        _assembled(spark, sf_dir).select(
+        _built(spark, sf_dir)["assembled"].select(
             F.floor("duration_ms").cast("long").alias("duration_ms_int")
         ),
         "duration_ms_int",
@@ -1222,7 +1208,7 @@ def q64_stream_window_agg(spark, sf_dir):
     src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
     synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
 
-    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
         _drain_to_parquet(
             spark.readStream.schema(_INPUT_SCHEMA)
             .option("maxFilesPerTrigger", 16)
@@ -1287,7 +1273,7 @@ def q68_stream_session_window(spark, sf_dir):
     src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
     synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
 
-    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
         _drain_to_parquet(
             spark.readStream.schema(_INPUT_SCHEMA)
             .option("maxFilesPerTrigger", 16)
@@ -1459,7 +1445,7 @@ def q76_stream_static_join(spark, sf_dir):
     src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
     synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
 
-    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
         _drain_to_parquet(
             spark.readStream.schema(_INPUT_SCHEMA)
             .option("maxFilesPerTrigger", 16)
@@ -2298,7 +2284,7 @@ def q123_rtbf_purge(spark, sf_dir):
         rtbf_purge_audit,
     )
 
-    sinks = route(_parsed(spark, sf_dir))
+    sinks = _built(spark, sf_dir)
     deny = rtbf_deny_list(synth_transcripts(spark, sf_dir))
     return rtbf_purge_audit(
         {k: sinks[k] for k in ("pause_events", "tool_calls", "unmatched")},
@@ -2403,7 +2389,7 @@ def q126_stream_outer_join(spark, sf_dir):
             outp, ck,
         )
 
-    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
         _drain()  # matches; watermark still below every horizon
         sent_ts = hi + datetime.timedelta(seconds=2 * delay_s + 2 * bucket_s)
         rows = [
@@ -2641,7 +2627,7 @@ def q141_stream_index_maintenance(spark, sf_dir):
     vectors are batch-encoded as the base generation; the remaining
     vectors then ARRIVE as a file stream and each micro-batch encodes
     against the FIXED broadcast metadata and appends per cell under the
-    q67 generation + atomic-pointer discipline (replayed batch ids are
+    q67 generation + commit-log discipline (replayed batch ids are
     drained, not re-applied; codebooks never move — re-train is a
     planned rebuild). Oracled end-to-end: the drained maintained index
     (base + every appended generation) must equal the batch-built index
@@ -2667,7 +2653,7 @@ def q141_stream_index_maintenance(spark, sf_dir):
     cells_b = spark.createDataFrame(cells_rows, cells.schema)
     books_b = spark.createDataFrame(books_rows, books.schema)
     im.write_base_generation(base, cells_b, books_b, out_root)
-    with _shuffle_partitions(spark, _jvm_state_parts(spark)):
+    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
         im.maintain_index(
             spark, src, embs.schema, out_root,
             cells_rows, cells.schema, books_rows, books.schema,

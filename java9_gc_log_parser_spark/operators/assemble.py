@@ -148,17 +148,12 @@ def assemble_groups(filtered: DataFrame) -> DataFrame:
     return g.withColumn("verdict", verdict)
 
 
-def assembled_pauses(filtered: DataFrame) -> DataFrame:
-    """The Pause/RemarkPause event table (reference L2 layer).
+def assembled_pauses_from_groups(groups: DataFrame) -> DataFrame:
+    """The Pause/RemarkPause event table (reference L2 layer) from an
+    ``assemble_groups`` output.
 
     RemarkPause carries no generation sizes (``CollectPauseLines.scala:34-40``)
     -> region columns are nulled even if region lines appeared in the group.
-    """
-    return assembled_pauses_from_groups(assemble_groups(filtered))
-
-
-def assembled_pauses_from_groups(groups: DataFrame) -> DataFrame:
-    """Pause table from a (possibly pre-materialized) assemble_groups output.
 
     The split lets the pipeline compute the assembly shuffle ONCE, persist it
     through the storage seam, and derive both the pause table and the
@@ -174,14 +169,9 @@ def assembled_pauses_from_groups(groups: DataFrame) -> DataFrame:
     return g.select(*ASSEMBLED_COLUMNS)
 
 
-def assembly_dead_letters(filtered: DataFrame) -> DataFrame:
-    """Invalid groups -> dead-letter rows with reference-parity messages
-    (``CollectPauseLines.scala:31-32,42-43``)."""
-    return assembly_dead_letters_from_groups(assemble_groups(filtered))
-
-
 def assembly_dead_letters_from_groups(groups: DataFrame) -> DataFrame:
-    """Dead-letter rows from a (possibly pre-materialized) groups table."""
+    """Invalid groups of an ``assemble_groups`` output -> dead-letter rows
+    with reference-parity messages (``CollectPauseLines.scala:31-32,42-43``)."""
     g = groups.filter(
         F.col("verdict").isin("end_before_start", "missing_regions")
     )

@@ -6,16 +6,21 @@ table in partition-range micro-batches, checkpoint a manifest with
 per-partition lineage + per-batch metrics, and resume idempotently.
 
 Design:
-  * batch key = ``pmod(xxhash64(conv_id), n_batches)`` — conversations stay
-    whole within a batch (assembly needs every line of a (conv_id, event_id)
-    group), and hashing spreads hot convs' *neighbors* evenly even though a
-    single hot conv is indivisible.
+  * batch key = a hash of ``conv_id`` modulo ``n_batches`` — conversations
+    stay whole within a batch (assembly needs every line of a
+    (conv_id, event_id) group), and hashing spreads hot convs' *neighbors*
+    evenly even though a single hot conv is indivisible.
   * the batch key is written as a PARTITION COLUMN at source-preparation time
-    (``prepare_source``): each micro-batch then reads ``batch_bucket=b/``
-    only — scan bytes ∝ 1/n_batches — instead of filtering a full scan of
+    (``prepare_source``, the only source layout ``run`` accepts): each
+    micro-batch then reads ``batch_bucket=b/`` only — scan bytes ∝
+    1/n_batches — instead of filtering a full scan of
     the table per batch (n_batches full scans of 100 TB). The manifest
-    records the pruned scan's file count + bytes as evidence. A raw
-    unpartitioned path still works (predicate fallback) for ad-hoc runs.
+    records the pruned scan's file count + bytes as evidence. Every batch
+    reads through the storage seam, so parquet and Iceberg sources share one
+    read path; a source without the ``batch_bucket`` column is refused.
+  * a resume must use the ``n_batches`` its committed batches ran under;
+    ``run`` refuses any other count, which would lose or duplicate
+    conversations.
   * each sink writes to ``{root}/{sink}/batch={id}/`` with overwrite — a
     re-run of a half-finished batch replaces its output exactly (idempotent).
   * the batch's parse and assembly groups are staged under ``{root}/stage/``
@@ -41,11 +46,9 @@ from pyspark.sql import functions as F
 
 from .. import commit_log
 from ..storage import (
-    ICEBERG,
     TableRef,
     _as_ref,
     current_snapshot_id,
-    path_exists,
     read_table,
     table_scan_stats,
     write_table,
@@ -119,41 +122,23 @@ def run_batch(
     batch_id: int,
     n_batches: int,
 ) -> BatchResult:
-    """Process one micro-batch: read its bucket, write every sink, commit the
-    manifest record."""
+    """Process one micro-batch: read its ``batch_bucket`` partition, write
+    every sink, commit the manifest record."""
     src = _as_ref(source_path)
-    snapshot = None
-    if src.format == ICEBERG:
-        # prepared Iceberg source: hidden-partition pruning on batch_bucket;
-        # scan evidence from the .files METADATA table (manifest-backed),
-        # never a filesystem walk — the driver cannot see a cluster's files
-        predicate = f"batch_bucket = {batch_id}"
-        transcripts = (
-            read_table(spark, src)
-            .filter(F.col("batch_bucket") == batch_id)
-            .drop("batch_bucket")
+    source = read_table(spark, src)
+    if "batch_bucket" not in source.columns:
+        raise ValueError(
+            f"checkpoint source {src.location!r} has no batch_bucket column: "
+            "write it with prepare_source first"
         )
-        scan_files, scan_bytes = table_scan_stats(
-            spark, src, where=f"partition.batch_bucket = {batch_id}"
-        )
-        snapshot = current_snapshot_id(spark, src)
-    elif path_exists(
-        spark, bucket_dir := os.path.join(src.location,
-                                          f"batch_bucket={batch_id}")
-    ):
-        # prepared source: partition-pruned scan — only this bucket's files
-        predicate = f"batch_bucket = {batch_id}"
-        transcripts = (
-            read_table(spark, src.location)
-            .filter(F.col("batch_bucket") == batch_id)
-            .drop("batch_bucket")
-        )
-        scan_files, scan_bytes = table_scan_stats(spark, TableRef(bucket_dir))
-    else:
-        # raw unpartitioned path: every batch re-scans the full source
-        predicate = f"pmod(xxhash64(conv_id), {n_batches}) = {batch_id}"
-        transcripts = read_table(spark, src.location).filter(F.expr(predicate))
-        scan_files, scan_bytes = table_scan_stats(spark, src)
+    predicate = f"batch_bucket = {batch_id}"
+    transcripts = (
+        source.filter(F.col("batch_bucket") == batch_id).drop("batch_bucket")
+    )
+    scan_files, scan_bytes = table_scan_stats(
+        spark, src, partition=("batch_bucket", batch_id)
+    )
+    snapshot = current_snapshot_id(spark, src)
     t0 = time.perf_counter()
     dfs = build(transcripts, os.path.join(root, "stage", "parsed"))
     rows_in = dfs["parsed"].count()
@@ -189,15 +174,24 @@ def run(
     spark: SparkSession,
     source_path: TableRef | str,
     root: str,
-    n_batches: int = 8,
+    n_batches: int,
     stop_after: int | None = None,
 ) -> list[BatchResult]:
     """Run all pending micro-batches (resuming past completed ones).
 
     ``stop_after`` processes at most that many pending batches — the test
-    hook for simulating a mid-run crash.
+    hook for simulating a mid-run crash. Raises ``ValueError`` when a
+    committed batch was run under a different ``n_batches``.
     """
-    done = completed_batches(root)
+    committed = commit_log.records(_manifest_path(root))
+    other = sorted({r["n_batches"] for r in committed} - {n_batches})
+    if other:
+        raise ValueError(
+            f"{root} holds batches committed under n_batches={other}; "
+            f"resuming with n_batches={n_batches} would lose or duplicate "
+            "conversations"
+        )
+    done = {r["batch_id"] for r in committed}
     results = []
     for b in range(n_batches):
         if b in done:

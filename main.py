@@ -10,9 +10,11 @@ Packaging (north rule: "packaged for spark-submit --py-files"):
 Modes:
   batch      one-shot pipeline, all sinks written once (parse and assembly
              staged under <output>/stage)
-  checkpoint resumable micro-batches with manifest/lineage/metrics (default);
-             --prepare-source first rewrites the input partitioned by
-             batch_bucket so every micro-batch is a pruned 1/n scan
+  checkpoint resumable micro-batches with manifest/lineage/metrics (default).
+             A fresh run first rewrites the input partitioned by
+             batch_bucket under <output>/source, so every micro-batch is a
+             pruned 1/n scan; a resume (same --output, same --n-batches)
+             reuses that source and runs only the uncommitted batches
   synth      generate a transcripts parquet from an events parquet dir
 """
 
@@ -30,10 +32,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--input", help="transcripts parquet path (batch/checkpoint)")
     p.add_argument("--output", required=True, help="output root dir")
     p.add_argument("--n-batches", type=int, default=16)
-    p.add_argument("--prepare-source", action="store_true",
-                   help="checkpoint mode: rewrite input bucketed by "
-                        "batch_bucket under <output>/source first, then run "
-                        "partition-pruned micro-batches from it")
     p.add_argument("--sf-dir", help="events parquet dir (synth mode)")
     p.add_argument("--replicate", type=int, default=1, help="synth scale-up")
     p.add_argument("--master", default=None)
@@ -64,12 +62,10 @@ def main(argv: list[str] | None = None) -> None:
         print(json.dumps({"mode": "batch", "sink_rows": counts}))
         return
 
-    source = args.input
-    if args.prepare_source:
-        source = cp.prepare_source(
-            spark, spark.read.parquet(args.input),
-            f"{args.output}/source", args.n_batches,
-        )
+    source = f"{args.output}/source"
+    if not cp.completed_batches(args.output):
+        cp.prepare_source(spark, spark.read.parquet(args.input), source,
+                          args.n_batches)
     results = cp.run(spark, source, args.output, n_batches=args.n_batches)
     print(json.dumps({
         "mode": "checkpoint",

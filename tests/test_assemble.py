@@ -16,8 +16,9 @@ from pyspark.sql import Row
 
 from java9_gc_log_parser_spark.functions.parse import parse_lines
 from java9_gc_log_parser_spark.operators.assemble import (
-    assembled_pauses,
-    assembly_dead_letters,
+    assemble_groups,
+    assembled_pauses_from_groups,
+    assembly_dead_letters_from_groups,
 )
 from java9_gc_log_parser_spark.operators.route import supported_types_filter
 
@@ -40,8 +41,8 @@ def _df(spark, lines, conv="c1"):
 def _run(spark, lines):
     filtered = supported_types_filter(parse_lines(_df(spark, lines)))
     return (
-        assembled_pauses(filtered).collect(),
-        assembly_dead_letters(filtered).collect(),
+        assembled_pauses_from_groups(assemble_groups(filtered)).collect(),
+        assembly_dead_letters_from_groups(assemble_groups(filtered)).collect(),
     )
 
 

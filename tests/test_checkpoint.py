@@ -14,10 +14,28 @@ from java9_gc_log_parser_spark.sources.transcripts import synth_transcripts
 
 
 @pytest.fixture(scope="module")
-def source_path(spark, sf_dir, tmp_path_factory):
+def raw_path(spark, sf_dir, tmp_path_factory):
+    """The unbucketed transcripts: the single-shot reference's input."""
     p = str(tmp_path_factory.mktemp("ckpt") / "transcripts.parquet")
     synth_transcripts(spark, sf_dir).write.mode("overwrite").parquet(p)
     return p
+
+
+@pytest.fixture(scope="module")
+def source_path(spark, raw_path, tmp_path_factory):
+    """``source_path(n)``: the raw table prepared into n batch buckets,
+    written once per n."""
+    root = tmp_path_factory.mktemp("ckpt_src")
+    paths = {}
+
+    def prepared(n_batches):
+        if n_batches not in paths:
+            paths[n_batches] = str(root / f"n{n_batches}")
+            cp.prepare_source(spark, spark.read.parquet(raw_path),
+                              paths[n_batches], n_batches)
+        return paths[n_batches]
+
+    return prepared
 
 
 def _collect_sorted(df, cols):
@@ -29,9 +47,9 @@ def _manifest(root):
         return [json.loads(line) for line in f]
 
 
-def _assert_matches_single_shot(spark, source_path, root):
+def _assert_matches_single_shot(spark, raw_path, root):
     """Resumed output == single-shot pipeline output, sink by sink."""
-    single = build(spark.read.parquet(source_path),
+    single = build(spark.read.parquet(raw_path),
                    os.path.join(root, "single_stage"))
     for sink, cols in [
         ("assembled", ["conv_id", "event_id", "pause_type", "duration_ms"]),
@@ -44,29 +62,52 @@ def _assert_matches_single_shot(spark, source_path, root):
         assert got == want, f"{sink}: resumed output differs from single-shot"
 
 
-def test_crash_resume_identical(spark, source_path, tmp_path):
+def test_crash_resume_identical(spark, raw_path, source_path, tmp_path):
     root = str(tmp_path / "out")
     n_batches = 4
+    src = source_path(n_batches)
 
     # run 2 of 4 batches, then "crash"
-    r1 = cp.run(spark, source_path, root, n_batches, stop_after=2)
+    r1 = cp.run(spark, src, root, n_batches, stop_after=2)
     assert len(r1) == 2
     assert cp.completed_batches(root) == {0, 1}
 
     # resume: only the remaining batches run
-    r2 = cp.run(spark, source_path, root, n_batches)
+    r2 = cp.run(spark, src, root, n_batches)
     assert sorted(b.batch_id for b in r2) == [2, 3]
 
-    _assert_matches_single_shot(spark, source_path, root)
+    _assert_matches_single_shot(spark, raw_path, root)
 
 
-def test_crash_between_sink_write_and_commit(spark, source_path, tmp_path,
-                                             monkeypatch):
+def test_resume_with_other_n_batches_is_refused(spark, source_path, tmp_path):
+    """Batches committed under n_batches=4 cannot be resumed under 3: bucket
+    3 would never be read. The refusal leaves the manifest as it was."""
+    root = str(tmp_path / "out_n")
+    src = source_path(4)
+    cp.run(spark, src, root, 4, stop_after=2)
+    before = _manifest(root)
+    with pytest.raises(ValueError, match="n_batches"):
+        cp.run(spark, src, root, 3)
+    assert _manifest(root) == before
+
+
+def test_unprepared_source_is_refused(spark, raw_path, tmp_path):
+    """A source without the batch_bucket partition column would be fully
+    scanned by every batch; run_batch refuses it and commits nothing."""
+    root = str(tmp_path / "out_raw")
+    with pytest.raises(ValueError, match="prepare_source"):
+        cp.run_batch(spark, raw_path, root, 0, 2)
+    assert cp.completed_batches(root) == set()
+
+
+def test_crash_between_sink_write_and_commit(spark, raw_path, source_path,
+                                             tmp_path, monkeypatch):
     """The second commit raises: batch 1's sinks are written but its
     manifest record is not. The resume re-runs batch 1 over its own partial
     output and must end equal to the single-shot build."""
     root = str(tmp_path / "out_crash")
     n_batches = 3
+    src = source_path(n_batches)
     real_commit = commit_log.commit
     calls = []
 
@@ -78,39 +119,41 @@ def test_crash_between_sink_write_and_commit(spark, source_path, tmp_path,
 
     monkeypatch.setattr(commit_log, "commit", crash_on_second)
     with pytest.raises(RuntimeError, match="injected crash"):
-        cp.run(spark, source_path, root, n_batches)
+        cp.run(spark, src, root, n_batches)
     monkeypatch.undo()
     assert cp.completed_batches(root) == {0}
     assert os.path.isdir(os.path.join(root, "assembled", "batch=1"))
 
-    resumed = cp.run(spark, source_path, root, n_batches)
+    resumed = cp.run(spark, src, root, n_batches)
     assert [b.batch_id for b in resumed] == [1, 2]
     recs = _manifest(root)
     assert sorted(r["batch_id"] for r in recs) == list(range(n_batches))
     assert (sum(r["rows_in"] for r in recs)
-            == spark.read.parquet(source_path).count())
-    _assert_matches_single_shot(spark, source_path, root)
+            == spark.read.parquet(raw_path).count())
+    _assert_matches_single_shot(spark, raw_path, root)
 
 
-def test_rerun_is_idempotent(spark, source_path, tmp_path):
+def test_rerun_is_idempotent(spark, raw_path, source_path, tmp_path):
     root = str(tmp_path / "out2")
-    cp.run(spark, source_path, root, 2)
+    src = source_path(2)
+    cp.run(spark, src, root, 2)
     n_before = cp.read_sink(spark, root, "assembled").count()
     # simulate a crash after sink write but before manifest append: re-run
     # batch 0 directly — overwrite makes it idempotent
-    cp.run_batch(spark, source_path, root, 0, 2)
+    cp.run_batch(spark, src, root, 0, 2)
     assert cp.read_sink(spark, root, "assembled").count() == n_before
     # the re-commit replaced batch 0's record: one record per batch id, and
     # rows_in still partitions the input
     recs = _manifest(root)
-    n_in = spark.read.parquet(source_path).count()
+    n_in = spark.read.parquet(raw_path).count()
     assert (sorted(r["batch_id"] for r in recs),
             sum(r["rows_in"] for r in recs)) == ([0, 1], n_in)
 
 
-def test_manifest_lineage_and_metrics(spark, source_path, tmp_path):
+def test_manifest_lineage_and_metrics(spark, raw_path, source_path, tmp_path):
     root = str(tmp_path / "out3")
-    cp.run(spark, source_path, root, 2)
+    src = source_path(2)
+    cp.run(spark, src, root, 2)
     with open(os.path.join(root, "manifest.jsonl")) as f:
         recs = [json.loads(l) for l in f]
     assert len(recs) == 2
@@ -119,11 +162,11 @@ def test_manifest_lineage_and_metrics(spark, source_path, tmp_path):
         assert rec["rows_in"] > 0
         assert "pause_events" in rec["sink_rows"]
         assert rec["wall_s"] > 0
-        assert "xxhash64(conv_id)" in rec["lineage"]["predicate"]
-        assert rec["lineage"]["source"] == source_path
+        assert rec["lineage"]["predicate"] == f"batch_bucket = {rec['batch_id']}"
+        assert rec["lineage"]["source"] == src
     # batches partition the input exactly
     total_in = sum(r["rows_in"] for r in recs)
-    assert total_in == spark.read.parquet(source_path).count()
+    assert total_in == spark.read.parquet(raw_path).count()
 
 
 def test_prepared_source_prunes_scans(spark, sf_dir, tmp_path):

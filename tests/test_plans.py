@@ -92,13 +92,16 @@ def test_assembly_and_state_aggs_are_hash_based(spark, sf_dir):
     SortAggregate (string max_by buffers would silently force a full
     per-partition sort of the biggest table — see assemble.py scale note)."""
     from java9_gc_log_parser_spark.functions.parse import parse_lines
-    from java9_gc_log_parser_spark.operators.assemble import assembled_pauses
+    from java9_gc_log_parser_spark.operators.assemble import (
+        assemble_groups,
+        assembled_pauses_from_groups,
+    )
     from java9_gc_log_parser_spark.operators.aggregate import conv_state_final
     from java9_gc_log_parser_spark.operators.route import supported_types_filter
 
-    assembled = assembled_pauses(
+    assembled = assembled_pauses_from_groups(assemble_groups(
         supported_types_filter(parse_lines(synth_transcripts(spark, sf_dir)))
-    )
+    ))
     plan = _formatted(conv_state_final(assembled))
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan

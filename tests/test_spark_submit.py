@@ -2,7 +2,8 @@
 spark-submit --py-files ... run via spark-submit on a multi-executor
 cluster"). Builds dist/pipeline.zip with scripts/package.sh, then launches a
 REAL spark-submit subprocess — package importable only through the zip
-(cwd moved away from the repo) — running synth + batch modes end to end.
+(cwd moved away from the repo) — running synth, batch and checkpoint modes
+end to end, the checkpoint mode twice (run, then a no-op resume).
 """
 
 from __future__ import annotations
@@ -77,3 +78,24 @@ def test_package_and_submit_synth_then_batch(tmp_path):
         files = glob.glob(str(tmp_path / "out" / sink / "*.parquet"))
         assert files, sink
         assert sum(pq.read_metadata(f).num_rows for f in files) == n, sink
+
+    # checkpoint mode: the first run buckets the input under out/source and
+    # runs every batch; the second finds them committed and rewrites nothing
+    ck = tmp_path / "ckpt"
+    r3 = _submit(
+        tmp_path, "--mode", "checkpoint", "--n-batches", "2",
+        "--input", tpath, "--output", str(ck),
+    )
+    assert r3["batches_run"] == [0, 1]
+    assert (ck / "source" / "batch_bucket=0").is_dir()
+    with open(ck / "manifest.jsonl") as f:
+        recs = [json.loads(line) for line in f if line.strip()]
+    assert sum(r["rows_in"] for r in recs) == r1["rows"]
+    success_mtime = os.stat(ck / "source" / "_SUCCESS").st_mtime_ns
+
+    r4 = _submit(
+        tmp_path, "--mode", "checkpoint", "--n-batches", "2",
+        "--input", tpath, "--output", str(ck),
+    )
+    assert r4["batches_run"] == []
+    assert os.stat(ck / "source" / "_SUCCESS").st_mtime_ns == success_mtime

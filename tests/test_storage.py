@@ -52,6 +52,23 @@ def test_parquet_scan_stats(spark, tmp_path):
     assert n_bytes > 0
 
 
+def test_scan_stats_of_one_partition(spark, tmp_path):
+    """``partition=(col, value)`` lists only that partition's files; a
+    parquet table has no snapshot id."""
+    from java9_gc_log_parser_spark.storage import (
+        current_snapshot_id,
+        table_scan_stats,
+    )
+
+    ref = TableRef(str(tmp_path / "t_part"), partition_by=("role",))
+    write_table(spark.createDataFrame(ROWS, SCHEMA), ref)
+    n_files, n_bytes = table_scan_stats(spark, ref, partition=("role", "user"))
+    assert n_files >= 1
+    assert 0 < n_bytes < table_scan_stats(spark, ref)[1]
+    assert table_scan_stats(spark, ref, partition=("role", "nobody")) == (0, 0)
+    assert current_snapshot_id(spark, ref) is None
+
+
 def test_orc_roundtrip_partitioned_pushdown(spark, tmp_path):
     """ORC leg parity with parquet: partitioned write, partition-column
     recovery on read, timestamp-micros fidelity, predicate pushdown into

@@ -14,9 +14,8 @@ from pyspark.sql import functions as F
 
 from java9_gc_log_parser_spark.functions.parse import parse_lines
 from java9_gc_log_parser_spark.operators.assemble import (
-    assembled_pauses,
+    assemble_groups,
     assembled_pauses_from_groups,
-    assembly_dead_letters,
     assembly_dead_letters_from_groups,
 )
 from java9_gc_log_parser_spark.operators.route import supported_types_filter
@@ -103,7 +102,8 @@ def test_streaming_matches_batch_assembly(spark, stream_source, tmp_path):
         [
             (r.conv_id, r.event_id, r.pause_type, r.offset_ms, r.duration_ms,
              r.eden_after, r.humongous_after)
-            for r in assembled_pauses(batch_filtered).collect()
+            for r in assembled_pauses_from_groups(
+                assemble_groups(batch_filtered)).collect()
         ]
     )
     assert got_ok == want_ok and len(got_ok) > 0
@@ -111,7 +111,8 @@ def test_streaming_matches_batch_assembly(spark, stream_source, tmp_path):
     # they stay in the carry and must NOT have been emitted
     assert got.filter("verdict <> 'ok'").count() == 0
     # ...and the batch assembler confirms they exist in this input
-    assert assembly_dead_letters(batch_filtered).count() > 0
+    assert assembly_dead_letters_from_groups(
+        assemble_groups(batch_filtered)).count() > 0
 
 
 def test_event_time_watermark_dead_letter(spark, tmp_path):
@@ -205,7 +206,8 @@ def test_stream_conv_state_matches_batch_final(spark, stream_source, tmp_path):
         parse_lines(spark.read.parquet(stream_source))
     )
     want = sorted(
-        map(tuple, conv_state_final(assembled_pauses(batch_filtered)).collect())
+        map(tuple, conv_state_final(assembled_pauses_from_groups(
+            assemble_groups(batch_filtered))).collect())
     )
     assert got == want and len(got) > 0
 
@@ -495,9 +497,9 @@ def test_cross_trigger_duplicate_region_last_turn_wins(spark, tmp_path):
     _drain(spark, src, str(tmp_path / "fold"), str(tmp_path / "out"),
            max_files_per_trigger=1)
     got = _closed_rows(spark, str(tmp_path / "out"))
-    want = assembled_pauses(
+    want = assembled_pauses_from_groups(assemble_groups(
         supported_types_filter(parse_lines(spark.read.parquet(src)))
-    )
+    ))
     got_ok = [r.asDict() for r in got.filter("verdict = 'ok'")
               .select(*want.columns).collect()]
     assert got_ok == [r.asDict() for r in want.collect()]
@@ -591,9 +593,9 @@ def test_conv_state_crash_between_carry_write_and_commit(spark, stream_source,
                           max_files_per_trigger=8)
     assert q.awaitTermination(300)
 
-    ok = assembled_pauses(
+    ok = assembled_pauses_from_groups(assemble_groups(
         supported_types_filter(parse_lines(spark.read.parquet(stream_source)))
-    )
+    ))
     got = sorted(map(tuple, final_state(spark, out_root).collect()))
     assert got == sorted(map(tuple, conv_state_final(ok).collect()))
     beats = commit_log.records(log)
