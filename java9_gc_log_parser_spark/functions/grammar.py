@@ -38,6 +38,16 @@ java.util.regex (Spark JVM), Python ``re`` (Arrow UDF variant) and RE2
 
 from __future__ import annotations
 
+
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal, every quote, backslash and
+    non-printable character written as a ``\\uXXXX`` escape."""
+    return "'" + "".join(
+        c if c.isprintable() and c not in "'\\" else f"\\u{ord(c):04x}"
+        for c in s
+    ) + "'"
+
+
 # --- vocabularies (GcLineParser.scala / GCLogFileModel.scala) ---------------
 
 TAGS = ("gc", "start", "heap", "phases")

@@ -46,13 +46,26 @@ HotSpot's 8000-bytecode JIT ceiling (DontCompileHugeMethods), so it runs as
 Spark's interpreted-expression fallback. ``session.get_spark`` therefore
 sets ``spark.sql.codegen.hugeMethodLimit=8000`` so exactly such stages fall
 back; narrow stages elsewhere in the pipeline keep codegen.
+
+Driver-cost note (measured ~10,000 -> ~1,600 Py4J round trips per
+``plans.pipeline.build``): every ``F.col`` / ``F.when`` / operator call on a
+``Column`` is a round trip to the JVM (~0.25 ms each), so building the
+cascade node by node cost ~4,000 round trips per parse, and the Column-built
+stages of ``build`` ~10,000, before any task ran —
+paid again by every checkpoint batch and every stream trigger. The
+classification and typing stages are therefore SQL text, generated from
+``grammar`` in pure Python at import time, and each stage is handed to Spark
+in ONE ``selectExpr`` call, which the JVM parses into the same expression
+trees (the optimized plans are identical). Only the regex stage stays
+Column-built: two columns. Column objects are not cached across calls
+instead: their JVM proxies die with the gateway.
 """
 
 from __future__ import annotations
 
 import itertools
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import grammar as G
@@ -62,16 +75,175 @@ from . import grammar as G
 _obs_ids = itertools.count()
 
 
-def _dur_ms(i: Column, f: Column, unit: Column) -> Column:
+def _dur_ms(i: str, f: str, unit: str) -> str:
     """offset production -> fractional milliseconds (GcLineParser.scala:28-33)."""
-    num = F.concat(i, F.lit("."), F.when(f == "", "0").otherwise(f)).try_cast("double")
-    return F.when(unit == "s", num * 1000.0).otherwise(num)
+    num = f"try_cast(concat({i}, '.', CASE WHEN {f} = '' THEN '0' ELSE {f} END) AS DOUBLE)"
+    return f"CASE WHEN {unit} = 's' THEN {num} * 1000.0D ELSE {num} END"
+
+
+def _ovf(raw: str, typ: str) -> str:
+    """Numeric-overflow demotion: a line whose digits exceed the target type
+    would throw in the reference (String.toLong / toInt) and fail-stop the
+    stream; here it becomes a dead-letter row instead of failing the job."""
+    return f"({raw} != '' AND try_cast({raw} AS {typ}) IS NULL)"
+
+
+def _inner(raw: str) -> str:
+    return f"substring({raw}, 2, length({raw}) - 2)"
+
+
+# reason: captured *with* parens so "absent" ('') differs from "()" — the
+# reference throws a MatchError on any parsed-but-unlisted reason string
+# (GcLineParser.scala:57-61); we dead-letter those lines instead.
+_LISTED = ", ".join(G.sql_str(r) for r in G.REASONS)
+
+
+def _reason_unlisted(raw: str) -> str:
+    return f"({raw} != '' AND NOT ({_inner(raw)} IN ({_LISTED})))"
+
+
+def _reason_mapped(raw: str) -> str:
+    whens = " ".join(
+        f"WHEN {_inner(raw)} = {G.sql_str(lit)} THEN {G.sql_str(name)}"
+        for lit, name in G.REASONS.items()
+    )
+    return (f"CASE WHEN {raw} = '' THEN CAST(NULL AS STRING) {whens} "
+            "ELSE CAST(NULL AS STRING) END")
+
+
+def _p(i: int) -> str:
+    """Body group ``i`` (1-based) of the packed split; '' off a match."""
+    return f"CASE WHEN _hok THEN element_at(_hp, {6 + i}) ELSE '' END"
+
+
+# --- stage 3: the header's and the body's groups, each bound once -----------
+_HEADER = {
+    f"_h{i}": f"CASE WHEN _hok THEN element_at(_hp, {i}) ELSE '' END"
+    for i in range(1, 7)
+}
+_BODY = {
+    "_nr1": _p(1), "_nr2": _p(2), "_nr3": _p(3),
+    "_e1": _p(4), "_e2": _p(5), "_e3": _p(6), "_e4": _p(7),
+    "_e5": _p(8), "_e6": _p(9), "_e7": _p(10), "_e8": _p(11),
+    "_s1": _p(12), "_s2": _p(13),
+    "_is_cc": f"{_p(14)} != ''", "_is_ts": f"{_p(15)} != ''",
+    "_is_g1": f"{_p(16)} != ''",
+    "_rs1": _p(17),
+    "_ph1": _p(18), "_ph2": _p(19), "_ph3": _p(20), "_ph4": _p(21),
+}
+
+# --- stage 4: classification over bound attributes ---------------------------
+_END_UNLISTED = f"(_e3 != '' AND {_reason_unlisted('_e2')})"
+_START_UNLISTED = f"(NOT (_e3 != '') AND _s1 != '' AND {_reason_unlisted('_s2')})"
+_GRAMMAR_CLASS = (
+    "CASE WHEN NOT (_h1 != '') THEN 'unmatched'"
+    " WHEN _nr1 != '' THEN 'nr_regions'"
+    f" WHEN {_END_UNLISTED} OR {_START_UNLISTED} THEN 'unmatched'"
+    " WHEN _e3 != '' THEN 'pause_end'"
+    " WHEN _s1 != '' THEN 'pause_start'"
+    " WHEN _is_cc THEN 'concurrent_cycle'"
+    " WHEN _is_ts THEN 'to_space_exhausted'"
+    " WHEN _is_g1 THEN 'using_g1'"
+    " WHEN _rs1 != '' THEN 'region_size'"
+    # PHASE group 1 can match empty; group 2 is \d+
+    " WHEN _ph2 != '' THEN 'phase'"
+    " ELSE 'unmatched' END"
+)
+
+
+def _ovf_when(cls: str, *raws: str) -> str:
+    ovf = " OR ".join(_ovf(r, "BIGINT") for r in raws)
+    return f"CASE WHEN ({_GRAMMAR_CLASS}) = '{cls}' THEN ({ovf}) ELSE false END"
+
+
+_CLASSIFY = {
+    "_gclass": _GRAMMAR_CLASS,
+    "_unl": f"{_END_UNLISTED} OR {_START_UNLISTED}",
+    "_ovfl": " OR ".join([
+        _ovf("_h6", "INT"),
+        _ovf("_h1", "BIGINT"),
+        _ovf_when("pause_end", "_e3", "_e4", "_e5"),
+        _ovf_when("nr_regions", "_nr2", "_nr3"),
+        _ovf_when("region_size", "_rs1"),
+    ]),
+}
+
+# --- stage 5: output columns over bound attributes ---------------------------
+_DEMOTED = "(_gclass != 'unmatched' AND _ovfl)"
+_EVENT_CLASS = f"(CASE WHEN {_DEMOTED} THEN 'unmatched' ELSE _gclass END)"
+_REASON_CODE = (
+    "CASE WHEN NOT (_h1 != '') THEN 'header_mismatch'"
+    " WHEN _unl THEN 'unlisted_reason'"
+    f" WHEN {_DEMOTED} THEN 'numeric_overflow'"
+    " ELSE 'body_mismatch' END"
+)
+_PTYPE_MAP = "map(" + ", ".join(
+    G.sql_str(x) for kv in G.PAUSE_TYPES.items() for x in kv
+) + ")"
+# Duration.toMillis truncates sub-ms; for unit 's' that is
+# int_part*1000 + first-three fraction digits (zero-padded).
+_FRAC3 = "rpad(substring(CASE WHEN _h2 = '' THEN '0' ELSE _h2 END, 1, 3), 3, '0')"
+_OFFSET_MS = (
+    f"CASE WHEN _h3 = 's' THEN try_cast(_h1 AS BIGINT) * 1000 "
+    f"+ CAST({_FRAC3} AS BIGINT) ELSE try_cast(_h1 AS BIGINT) END"
+)
+# Distinct+sorted tag array WITHOUT higher-order functions: HOFs
+# (array_sort/array_distinct/filter with a lambda) are CodegenFallback,
+# and ONE such expression evicts the ENTIRE wide output projection from
+# whole-stage codegen into interpreted per-row eval — measured ~10x on
+# the full parse (52.9s -> ~5s for 15M turns at 8 cores). The tag
+# vocabulary is closed (grammar.TAGS), so membership tests + concat_ws
+# in alphabetical order rebuild the same distinct-sorted array from
+# codegen-friendly primitives; translate (single byte-pass) replaces the
+# \s+ regexp_replace. The header regex guarantees >=1 valid tag on
+# matched rows, so the array is never empty where `tags` is emitted.
+_WHITESPACE = G.sql_str(" \t\n\x0b\f\r")
+_TAG_ARR = f"split(translate(_h5, {_WHITESPACE}, ''), ',')"
+_TAGS = "split(concat_ws(',', " + ", ".join(
+    f"CASE WHEN array_contains({_TAG_ARR}, {G.sql_str(t)}) THEN {G.sql_str(t)} END"
+    for t in sorted(G.TAGS)
+) + "), ',')"
+
+
+def _when_class(cls: str, value: str) -> str:
+    return f"CASE WHEN {_EVENT_CLASS} = '{cls}' THEN {value} END"
+
+
+_MATCHED = f"{_EVENT_CLASS} != 'unmatched'"
+_OUTPUTS = {
+    "event_class": _EVENT_CLASS,
+    "offset_ms": f"CASE WHEN {_MATCHED} THEN {_OFFSET_MS} END",
+    "level": f"CASE WHEN {_MATCHED} THEN _h4 END",
+    "tags": f"CASE WHEN {_MATCHED} THEN {_TAGS} END",
+    "event_id": (f"CASE WHEN {_MATCHED} THEN "
+                 "CASE WHEN _h6 != '' THEN try_cast(_h6 AS INT) END END"),
+    "pause_type": (f"CASE WHEN {_EVENT_CLASS} = 'pause_end' THEN {_PTYPE_MAP}[_e1]"
+                   f" WHEN {_EVENT_CLASS} = 'pause_start' THEN {_PTYPE_MAP}[_s1] END"),
+    "reason": (f"CASE WHEN {_EVENT_CLASS} = 'pause_end' THEN {_reason_mapped('_e2')}"
+               f" WHEN {_EVENT_CLASS} = 'pause_start' THEN {_reason_mapped('_s2')} END"),
+    "heap_before": _when_class("pause_end", "try_cast(_e3 AS BIGINT)"),
+    "heap_after": _when_class("pause_end", "try_cast(_e4 AS BIGINT)"),
+    "heap_total": _when_class("pause_end", "try_cast(_e5 AS BIGINT)"),
+    "duration_ms": _when_class("pause_end", _dur_ms("_e6", "_e7", "_e8")),
+    "region": _when_class("nr_regions", "_nr1"),
+    "region_before": _when_class("nr_regions", "try_cast(_nr2 AS BIGINT)"),
+    "region_after": _when_class("nr_regions", "try_cast(_nr3 AS BIGINT)"),
+    "region_size_mb": _when_class("region_size", "try_cast(_rs1 AS BIGINT)"),
+    "phase_details": _when_class("phase", "_ph1"),
+    "phase_ms": _when_class("phase", _dur_ms("_ph2", "_ph3", "_ph4")),
+    "reason_code": _when_class("unmatched", _REASON_CODE),
+}
+
+
+def _stage(exprs: dict[str, str]) -> list[str]:
+    return [f"{sql} AS `{name}`" for name, sql in exprs.items()]
 
 
 def parse_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append the wide parse-struct columns to ``df`` (staged cascade; see
-    module expression-shape and execution-mode notes)."""
-    clash = [c for c in df.columns if c.startswith("_")]
+    module expression-shape, execution-mode and driver-cost notes)."""
+    in_cols = df.columns
+    clash = [c for c in in_cols if c.startswith("_")]
     if clash:
         raise ValueError(
             f"input carries underscore-prefixed column(s) {clash}, reserved "
@@ -110,196 +282,12 @@ def parse_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     df = df.withColumn(
         "_hok", (F.size("_hp") == n_groups + 1) & ~text.contains(sep)
     )
-    hdr_ok = F.col("_hok")
-    df = df.withColumns(
-        {
-            f"_h{i}": F.when(hdr_ok, F.element_at("_hp", i)).otherwise("")
-            for i in range(1, 7)
-        }
-    )
-    h_int, h_frac, h_unit = F.col("_h1"), F.col("_h2"), F.col("_h3")
-    header_ok = h_int != ""
-
-    def _p(i: int) -> Column:
-        return F.when(hdr_ok, F.element_at("_hp", 6 + i)).otherwise("")
-
-    df = df.withColumns(
-        {
-            "_nr1": _p(1), "_nr2": _p(2), "_nr3": _p(3),
-            "_e1": _p(4), "_e2": _p(5), "_e3": _p(6), "_e4": _p(7),
-            "_e5": _p(8), "_e6": _p(9), "_e7": _p(10), "_e8": _p(11),
-            "_s1": _p(12), "_s2": _p(13),
-            "_is_cc": _p(14) != "", "_is_ts": _p(15) != "",
-            "_is_g1": _p(16) != "",
-            "_rs1": _p(17),
-            "_ph1": _p(18), "_ph2": _p(19), "_ph3": _p(20), "_ph4": _p(21),
-        }
-    )
-    is_nr = F.col("_nr1") != ""
-    is_end = F.col("_e3") != ""
-    is_start = F.col("_s1") != ""
-    is_rs = F.col("_rs1") != ""
-    is_ph = F.col("_ph2") != ""  # PHASE group 1 can match empty; group 2 is \d+
-
-    # --- stage 4: classification over bound attributes ----------------------
-    # reason: captured *with* parens so "absent" ('') differs from "()" — the
-    # reference throws a MatchError on any parsed-but-unlisted reason string
-    # (GcLineParser.scala:57-61); we dead-letter those lines instead.
-    end_reason_raw = F.col("_e2")
-    start_reason_raw = F.col("_s2")
-
-    def inner(raw: Column) -> Column:
-        return F.substring(raw, 2, F.length(raw) - 2)
-
-    listed = list(G.REASONS.keys())
-
-    def reason_unlisted(raw: Column) -> Column:
-        return (raw != "") & ~inner(raw).isin(listed)
-
-    end_unlisted = is_end & reason_unlisted(end_reason_raw)
-    start_unlisted = (~is_end) & is_start & reason_unlisted(start_reason_raw)
-
-    grammar_class = (
-        F.when(~header_ok, "unmatched")
-        .when(is_nr, "nr_regions")
-        .when(end_unlisted | start_unlisted, "unmatched")
-        .when(is_end, "pause_end")
-        .when(is_start, "pause_start")
-        .when(F.col("_is_cc"), "concurrent_cycle")
-        .when(F.col("_is_ts"), "to_space_exhausted")
-        .when(F.col("_is_g1"), "using_g1")
-        .when(is_rs, "region_size")
-        .when(is_ph, "phase")
-        .otherwise("unmatched")
-    )
-
-    # Numeric-overflow demotion: a line whose digits exceed the target type
-    # would throw in the reference (String.toLong / toInt) and fail-stop the
-    # stream; here it becomes a dead-letter row instead of failing the job.
-    def _ovf(raw: Column, typ: str) -> Column:
-        return (raw != "") & raw.try_cast(typ).isNull()
-
-    overflow = (
-        _ovf(F.col("_h6"), "int")
-        | _ovf(h_int, "long")
-        | F.when(
-            grammar_class == "pause_end",
-            _ovf(F.col("_e3"), "long")
-            | _ovf(F.col("_e4"), "long")
-            | _ovf(F.col("_e5"), "long"),
-        ).otherwise(F.lit(False))
-        | F.when(
-            grammar_class == "nr_regions",
-            _ovf(F.col("_nr2"), "long") | _ovf(F.col("_nr3"), "long"),
-        ).otherwise(F.lit(False))
-        | F.when(
-            grammar_class == "region_size", _ovf(F.col("_rs1"), "long")
-        ).otherwise(F.lit(False))
-    )
-
-    df = df.withColumns(
-        {
-            "_gclass": grammar_class,
-            "_unl": end_unlisted | start_unlisted,
-            "_ovfl": overflow,
-        }
-    )
-
-    # --- stage 5: output columns over bound attributes ----------------------
-    gclass = F.col("_gclass")
-    event_class = F.when(
-        (gclass != "unmatched") & F.col("_ovfl"), "unmatched"
-    ).otherwise(gclass)
-
-    reason_code = (
-        F.when(~header_ok, "header_mismatch")
-        .when(F.col("_unl"), "unlisted_reason")
-        .when((gclass != "unmatched") & F.col("_ovfl"), "numeric_overflow")
-        .otherwise("body_mismatch")
-    )
-
-    def reason_mapped(raw: Column) -> Column:
-        i = inner(raw)
-        c = F.when(raw == "", F.lit(None).cast("string"))
-        for lit in listed:
-            c = c.when(i == lit, G.REASONS[lit])
-        return c.otherwise(F.lit(None).cast("string"))
-
-    ptype_map = F.create_map(
-        *[F.lit(x) for kv in G.PAUSE_TYPES.items() for x in kv]
-    )
-
-    # Duration.toMillis truncates sub-ms; for unit 's' that is
-    # int_part*1000 + first-three fraction digits (zero-padded).
-    frac3 = F.rpad(F.substring(F.when(h_frac == "", "0").otherwise(h_frac), 1, 3), 3, "0")
-    offset_ms = F.when(
-        h_unit == "s", h_int.try_cast("long") * 1000 + frac3.cast("long")
-    ).otherwise(h_int.try_cast("long"))
-
-    # Distinct+sorted tag array WITHOUT higher-order functions: HOFs
-    # (array_sort/array_distinct/filter with a lambda) are CodegenFallback,
-    # and ONE such expression evicts the ENTIRE wide output projection from
-    # whole-stage codegen into interpreted per-row eval — measured ~10x on
-    # the full parse (52.9s -> ~5s for 15M turns at 8 cores). The tag
-    # vocabulary is closed (grammar.TAGS), so membership tests + concat_ws
-    # in alphabetical order rebuild the same distinct-sorted array from
-    # codegen-friendly primitives; translate (single byte-pass) replaces the
-    # \s+ regexp_replace. The header regex guarantees >=1 valid tag on
-    # matched rows, so the array is never empty where `tags` is emitted.
-    _tag_arr = F.split(F.translate(F.col("_h5"), " \t\n\x0b\f\r", ""), ",")
-    tags = F.split(
-        F.concat_ws(
-            ",",
-            *[F.when(F.array_contains(_tag_arr, t), t) for t in sorted(G.TAGS)],
-        ),
-        ",",
-    )
-
-    event_id = F.when(F.col("_h6") != "", F.col("_h6").try_cast("int"))
-    matched = event_class != "unmatched"
-    is_ec_end = event_class == "pause_end"
-    is_ec_nr = event_class == "nr_regions"
-
-    out = df.withColumns(
-        {
-            "event_class": event_class,
-            "offset_ms": F.when(matched, offset_ms),
-            "level": F.when(matched, F.col("_h4")),
-            "tags": F.when(matched, tags),
-            "event_id": F.when(matched, event_id),
-            "pause_type": F.when(is_ec_end, ptype_map[F.col("_e1")]).when(
-                event_class == "pause_start", ptype_map[F.col("_s1")]
-            ),
-            "reason": F.when(is_ec_end, reason_mapped(end_reason_raw)).when(
-                event_class == "pause_start", reason_mapped(start_reason_raw)
-            ),
-            "heap_before": F.when(is_ec_end, F.col("_e3").try_cast("long")),
-            "heap_after": F.when(is_ec_end, F.col("_e4").try_cast("long")),
-            "heap_total": F.when(is_ec_end, F.col("_e5").try_cast("long")),
-            "duration_ms": F.when(
-                is_ec_end, _dur_ms(F.col("_e6"), F.col("_e7"), F.col("_e8"))
-            ),
-            "region": F.when(is_ec_nr, F.col("_nr1")),
-            "region_before": F.when(is_ec_nr, F.col("_nr2").try_cast("long")),
-            "region_after": F.when(is_ec_nr, F.col("_nr3").try_cast("long")),
-            "region_size_mb": F.when(
-                event_class == "region_size", F.col("_rs1").try_cast("long")
-            ),
-            "phase_details": F.when(event_class == "phase", F.col("_ph1")),
-            "phase_ms": F.when(
-                event_class == "phase",
-                _dur_ms(F.col("_ph2"), F.col("_ph3"), F.col("_ph4")),
-            ),
-            "reason_code": F.when(event_class == "unmatched", reason_code),
-        }
-    )
-    staging = (
-        [f"_h{i}" for i in range(1, 7)]
-        + ["_hp", "_hok", "_nr1", "_e3", "_s1", "_rs1", "_ph2",
-           "_is_cc", "_is_ts", "_is_g1", "_nr2", "_nr3", "_e1", "_e2", "_e4",
-           "_e5", "_e6", "_e7", "_e8", "_s2", "_ph1", "_ph3", "_ph4",
-           "_gclass", "_unl", "_ovfl"]
-    )
+    df = df.selectExpr("*", *_stage(_HEADER))
+    df = df.selectExpr("*", *_stage(_BODY))
+    df = df.selectExpr("*", *_stage(_CLASSIFY))
+    # the output stage also drops every staged intermediate
+    kept = [f"`{c}`" for c in in_cols if c not in _OUTPUTS]
+    out = df.selectExpr(*kept, *_stage(_OUTPUTS))
     # Optimizer barrier (+ free parsed-rows metric): PushDownPredicates does
     # not cross CollectMetrics, so a filter composed above the parse stays
     # above it. Without this, alias substitution through the cascade's
@@ -312,8 +300,8 @@ def parse_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
     # cross the barrier (verified: a select of one output column prunes the
     # scan to ReadSchema<text>), and measured overhead on a 200k-turn parse
     # is ~4%. Names are unique per call so two parses can meet in one query.
-    return out.drop(*staging).observe(
-        f"parse_obs_{next(_obs_ids)}", F.count(F.lit(1)).alias("rows")
+    return out.observe(
+        f"parse_obs_{next(_obs_ids)}", F.expr("count(1) AS rows")
     )
 
 

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.grammar import sql_str
+
 #: GcState counter -> pause type (GcStateFlow.scala:18-29)
 COUNTERS = {
     "full_gcs": "Full",
@@ -47,41 +49,56 @@ COUNTERS = {
 GEN_COLS = ["eden_after", "survivor_after", "old_after", "humongous_after"]
 
 
-def conv_state_scan(assembled: DataFrame) -> DataFrame:
-    """G1: one cumulative GcState row per assembled event (prefix scan)."""
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy("offset_ms", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pt = F.col("pause_type")
-    not_remark = pt != "Remark"
+def _unless_remark(value: str) -> str:
+    """Remark updates the heap but keeps the generation sizes."""
+    return f"CASE WHEN pause_type != 'Remark' THEN {value} END"
 
-    out = assembled.select(
-        "conv_id",
-        "event_id",
-        F.col("offset_ms").alias("time_offset_ms"),
-        *[
-            F.sum((pt == t).cast("long")).over(w).alias(name)
-            for name, t in COUNTERS.items()
-        ],
-        F.col("heap_after").alias("heap_size"),
-        F.col("heap_total"),
-        *[
-            F.coalesce(
-                F.last(F.when(not_remark, F.col(c)), ignorenulls=True).over(w),
-                F.lit(0),
-            ).alias(c)
-            for c in GEN_COLS
-        ],
-    )
-    return out
+
+_RUNNING = ("OVER (PARTITION BY conv_id ORDER BY offset_ms, event_id "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
+_SCAN = [
+    "conv_id",
+    "event_id",
+    "offset_ms AS time_offset_ms",
+    *[f"sum(CAST(pause_type = '{t}' AS BIGINT)) {_RUNNING} AS {name}"
+      for name, t in COUNTERS.items()],
+    "heap_after AS heap_size",
+    "heap_total",
+    *[f"coalesce(last({_unless_remark(c)}, true) {_RUNNING}, 0) AS {c}"
+      for c in GEN_COLS],
+]
+_PARTIAL = [
+    *[f"sum(CAST(pause_type = '{t}' AS BIGINT)) AS {name}"
+      for name, t in COUNTERS.items()],
+    "max(offset_ms) AS time_offset_ms",
+    "max_by(heap_after, offset_ms) AS heap_size",
+    "max_by(heap_total, offset_ms) AS heap_total",
+    *[f"max_by({c}, {_unless_remark('offset_ms')}) AS {c}" for c in GEN_COLS],
+    f"max({_unless_remark('offset_ms')}) AS _max_nr_off",
+]
+_MERGE = [
+    *[f"sum({name}) AS {name}" for name in COUNTERS],
+    "max(time_offset_ms) AS time_offset_ms",
+    "max_by(heap_size, time_offset_ms) AS heap_size",
+    "max_by(heap_total, time_offset_ms) AS heap_total",
+    *[f"max_by({c}, _max_nr_off) AS {c}" for c in GEN_COLS],
+    "max(_max_nr_off) AS _max_nr_off",
+]
+_FINAL = [
+    "conv_id", *COUNTERS, "time_offset_ms", "heap_size", "heap_total",
+    *[f"coalesce({c}, 0) AS {c}" for c in GEN_COLS],
+]
 
 
 def _salt(n_salts: int) -> Column:
     # deterministic spreading key; any per-row value works, hash keeps it
     # uniform even if turn/event ids cluster
-    return F.pmod(F.xxhash64("event_id"), F.lit(n_salts))
+    return F.expr(f"pmod(xxhash64(event_id), {n_salts})")
+
+
+def conv_state_scan(assembled: DataFrame) -> DataFrame:
+    """G1: one cumulative GcState row per assembled event (prefix scan)."""
+    return assembled.selectExpr(*_SCAN)
 
 
 def gc_state_partial(assembled: DataFrame, *keys: str) -> DataFrame:
@@ -89,46 +106,20 @@ def gc_state_partial(assembled: DataFrame, *keys: str) -> DataFrame:
     ``time_offset_ms``, heap by max ``offset_ms`` and generation sizes by max
     non-Remark offset, whose key is kept as ``_max_nr_off`` — Remark updates
     the heap but keeps the generation sizes (``GcStateFlow.scala:28-29``)."""
-    pt = F.col("pause_type")
-    nr_off = F.when(pt != "Remark", F.col("offset_ms"))
-    return assembled.groupBy(*keys).agg(
-        *[
-            F.sum((pt == t).cast("long")).alias(name)
-            for name, t in COUNTERS.items()
-        ],
-        F.max("offset_ms").alias("time_offset_ms"),
-        F.max_by("heap_after", "offset_ms").alias("heap_size"),
-        F.max_by("heap_total", "offset_ms").alias("heap_total"),
-        *[F.max_by(F.col(c), nr_off).alias(c) for c in GEN_COLS],
-        F.max(nr_off).alias("_max_nr_off"),
-    )
+    return assembled.groupBy(*keys).agg(*map(F.expr, _PARTIAL))
 
 
 def gc_state_merge(partials: DataFrame) -> DataFrame:
     """partial ⊕ partial per ``conv_id``: counters add; heap follows max
     ``time_offset_ms``; generation sizes follow max ``_max_nr_off`` (a
     Remark-only partial's null key never wins)."""
-    return partials.groupBy("conv_id").agg(
-        *[F.sum(name).alias(name) for name in COUNTERS],
-        F.max("time_offset_ms").alias("time_offset_ms"),
-        F.max_by("heap_size", "time_offset_ms").alias("heap_size"),
-        F.max_by("heap_total", "time_offset_ms").alias("heap_total"),
-        *[F.max_by(c, "_max_nr_off").alias(c) for c in GEN_COLS],
-        F.max("_max_nr_off").alias("_max_nr_off"),
-    )
+    return partials.groupBy("conv_id").agg(*map(F.expr, _MERGE))
 
 
 def gc_state_finalize(state: DataFrame) -> DataFrame:
     """The exposed GcState: ``_max_nr_off`` dropped, generation sizes
     zero-filled like ``GcState``'s zero-initialised ones."""
-    return state.select(
-        "conv_id",
-        *COUNTERS,
-        "time_offset_ms",
-        "heap_size",
-        "heap_total",
-        *[F.coalesce(F.col(c), F.lit(0)).alias(c) for c in GEN_COLS],
-    )
+    return state.selectExpr(*_FINAL)
 
 
 def conv_state_final(assembled: DataFrame) -> DataFrame:
@@ -191,17 +182,15 @@ def bucket_pause_stats(assembled: DataFrame, bucket: str = "hour") -> DataFrame:
     the boundary, also un-rounded.
     """
     return (
-        assembled.withColumn(
-            "_milli", F.round(F.col("duration_ms") * 1000).cast("long")
+        assembled.selectExpr(
+            "*", "CAST(round(duration_ms * 1000) AS BIGINT) AS _milli"
         )
-        .groupBy(F.date_trunc(bucket, "ts").alias("bucket"))
+        .groupBy(F.expr(f"date_trunc({sql_str(bucket)}, ts) AS bucket"))
         .agg(
-            F.count(F.lit(1)).alias("pause_count"),
-            (
-                F.sum("_milli").cast("double")
-                / (F.count(F.lit(1)) * F.lit(1000)).cast("double")
-            ).alias("mean_ms"),
-            (F.percentile("_milli", 0.99) / F.lit(1000.0)).alias("p99_ms"),
+            F.expr("count(1) AS pause_count"),
+            F.expr("CAST(sum(_milli) AS DOUBLE) "
+                   "/ CAST(count(1) * 1000 AS DOUBLE) AS mean_ms"),
+            F.expr("percentile(_milli, 0.99D, 1) / 1000.0D AS p99_ms"),
         )
     )
 
@@ -242,9 +231,7 @@ def sessionize(transcripts: DataFrame, gap_s: int = 3600) -> DataFrame:
 
 def duration_histogram(assembled: DataFrame, bin_ms: float = 10.0) -> DataFrame:
     """G3c: pause-duration histogram (fixed-width bins)."""
-    return (
-        assembled.groupBy(
-            F.floor(F.col("duration_ms") / bin_ms).cast("long").alias("dur_bucket")
-        )
-        .agg(F.count(F.lit(1)).alias("pause_count"))
-    )
+    return assembled.groupBy(
+        F.expr(f"CAST(floor(duration_ms / {float(bin_ms)!r}D) AS BIGINT) "
+               "AS dur_bucket")
+    ).agg(F.expr("count(1) AS pause_count"))

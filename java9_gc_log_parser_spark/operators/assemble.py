@@ -31,7 +31,7 @@ every buffer field primitive so Catalyst plans a hash aggregation
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.grammar import (
@@ -40,6 +40,7 @@ from ..functions.grammar import (
     PAUSE_TYPES,
     REASONS,
     REGIONS,
+    sql_str,
 )
 
 ASSEMBLED_COLUMNS = [
@@ -67,9 +68,9 @@ LINE_COLUMNS = [
 ]
 
 
-def _last(value: Column, cond: Column) -> Column:
+def _last(value: str, cond: str) -> str:
     """Last-write-wins under ``cond``, ordered by turn_idx (null keys ignored)."""
-    return F.max_by(value, F.when(cond, F.col("turn_idx")))
+    return f"max_by({value}, CASE WHEN {cond} THEN turn_idx END)"
 
 
 #: closed vocabularies dictionary-encoded for the hash-aggregable assembly
@@ -77,18 +78,71 @@ PAUSE_TYPE_CODES = {t: i for i, t in enumerate(sorted(set(PAUSE_TYPES.values()))
 REASON_CODES = {r: i for i, r in enumerate(sorted(set(REASONS.values())))}
 
 
-def _encode(col: Column, codes: dict[str, int]) -> Column:
-    out = F.lit(None).cast("int")
-    for token, code in codes.items():
-        out = F.when(col == token, code).otherwise(out)
-    return out
+def _encode(col: str, codes: dict[str, int]) -> str:
+    whens = " ".join(f"WHEN {col} = {sql_str(t)} THEN {c}" for t, c in codes.items())
+    return f"CASE {whens} END"
 
 
-def _decode(col: Column, codes: dict[str, int]) -> Column:
-    out = F.lit(None).cast("string")
-    for token, code in codes.items():
-        out = F.when(col == code, token).otherwise(out)
-    return out
+def _decode(col: str, codes: dict[str, int]) -> str:
+    whens = " ".join(f"WHEN {col} = {c} THEN {sql_str(t)}" for t, c in codes.items())
+    return f"CASE {whens} END"
+
+
+_IS_END = "event_class = 'pause_end'"
+
+
+def _region_line(r: str) -> str:
+    return f"(event_class = 'nr_regions' AND region = {sql_str(r)})"
+
+
+#: the per-group aggregates, in output order
+_AGGS = {
+    "has_start": "max(event_class = 'pause_start')",
+    "has_end": f"max({_IS_END})",
+    "_pt_code": _last("_pt_code", _IS_END),
+    "_rs_code": _last("_rs_code", _IS_END),
+    **{c: _last(c, _IS_END) for c in (
+        "offset_ms", "duration_ms", "heap_before", "heap_after", "heap_total",
+        "ts")},
+    **{name: sql for r in REGIONS for name, sql in (
+        (f"{r.lower()}_after", _last("region_after", _region_line(r))),
+        (f"has_{r.lower()}", f"max(CAST({_region_line(r)} AS BOOLEAN))"),
+    )},
+}
+
+_DECODED = [
+    "conv_id", "event_id", *(c for c in _AGGS if c not in ("_pt_code", "_rs_code")),
+    f"{_decode('_pt_code', PAUSE_TYPE_CODES)} AS pause_type",
+    f"{_decode('_rs_code', REASON_CODES)} AS reason",
+]
+_VERDICT = (
+    "CASE WHEN NOT has_end THEN 'dangling'"  # silent discard (stream-end state)
+    " WHEN NOT has_start THEN 'end_before_start'"
+    " WHEN NOT (pause_type = 'Remark') AND NOT ("
+    + " AND ".join(f"has_{r.lower()}" for r in REGIONS)
+    + ") THEN 'missing_regions'"
+    " ELSE 'ok' END"
+)
+#: RemarkPause carries no generation sizes: its region columns are nulled
+_PAUSE_COLUMNS = [
+    f"CASE WHEN NOT (pause_type = 'Remark') THEN {c} END AS {c}"
+    if c in {f"{r.lower()}_after" for r in REGIONS} else c
+    for c in ASSEMBLED_COLUMNS
+]
+_PRESENT = "concat_ws(',', " + ", ".join(
+    f"CASE WHEN has_{r.lower()} THEN {sql_str(r)} END" for r in REGIONS
+) + ")"
+_MESSAGE = (
+    "CASE WHEN verdict = 'end_before_start' THEN format_string("
+    f"{sql_str(ERR_END_BEFORE_START.format(event_id='%s'))}, "
+    "CAST(event_id AS STRING)) ELSE format_string("
+    f"{sql_str(ERR_MISSING_REGIONS.format(regions='%s', event_id='%s'))}, "
+    f"{_PRESENT}, CAST(event_id AS STRING)) END"
+)
+_DEAD_LETTER_COLUMNS = [
+    "conv_id", "event_id", "verdict AS error_code",
+    f"{_MESSAGE} AS error_message", "ts",
+]
 
 
 def assemble_groups(filtered: DataFrame) -> DataFrame:
@@ -98,54 +152,18 @@ def assemble_groups(filtered: DataFrame) -> DataFrame:
     eventId map to the reference's NotInteresting marker
     (``CollectPauseLines.scala:21-22``) and take no part in assembly.
     """
-    ec = F.col("event_class")
-    is_start = ec == "pause_start"
-    is_end = ec == "pause_end"
-
-    region_aggs = {}
-    for r in REGIONS:
-        cond = (ec == "nr_regions") & (F.col("region") == r)
-        region_aggs[f"{r.lower()}_after"] = _last(F.col("region_after"), cond).alias(
-            f"{r.lower()}_after"
+    return (
+        filtered.filter("event_id IS NOT NULL")
+        .selectExpr(
+            "*",
+            f"{_encode('pause_type', PAUSE_TYPE_CODES)} AS _pt_code",
+            f"{_encode('reason', REASON_CODES)} AS _rs_code",
         )
-        region_aggs[f"has_{r.lower()}"] = F.max(cond.cast("boolean")).alias(
-            f"has_{r.lower()}"
-        )
-
-    g = (
-        filtered.filter(F.col("event_id").isNotNull())
-        .withColumn("_pt_code", _encode(F.col("pause_type"), PAUSE_TYPE_CODES))
-        .withColumn("_rs_code", _encode(F.col("reason"), REASON_CODES))
         .groupBy("conv_id", "event_id")
-        .agg(
-            F.max(is_start).alias("has_start"),
-            F.max(is_end).alias("has_end"),
-            _last(F.col("_pt_code"), is_end).alias("_pt_code"),
-            _last(F.col("_rs_code"), is_end).alias("_rs_code"),
-            _last(F.col("offset_ms"), is_end).alias("offset_ms"),
-            _last(F.col("duration_ms"), is_end).alias("duration_ms"),
-            _last(F.col("heap_before"), is_end).alias("heap_before"),
-            _last(F.col("heap_after"), is_end).alias("heap_after"),
-            _last(F.col("heap_total"), is_end).alias("heap_total"),
-            _last(F.col("ts"), is_end).alias("ts"),
-            *region_aggs.values(),
-        )
-        .withColumn("pause_type", _decode(F.col("_pt_code"), PAUSE_TYPE_CODES))
-        .withColumn("reason", _decode(F.col("_rs_code"), REASON_CODES))
-        .drop("_pt_code", "_rs_code")
+        .agg(*[F.expr(f"{sql} AS {name}") for name, sql in _AGGS.items()])
+        .selectExpr(*_DECODED)
+        .selectExpr("*", f"{_VERDICT} AS verdict")
     )
-
-    is_remark = F.col("pause_type") == "Remark"
-    all_regions = F.col("has_eden") & F.col("has_survivor") & F.col("has_old") & F.col(
-        "has_humongous"
-    )
-    verdict = (
-        F.when(~F.col("has_end"), "dangling")  # silent discard (stream-end state)
-        .when(~F.col("has_start"), "end_before_start")
-        .when(~is_remark & ~all_regions, "missing_regions")
-        .otherwise("ok")
-    )
-    return g.withColumn("verdict", verdict)
 
 
 def assembled_pauses_from_groups(groups: DataFrame) -> DataFrame:
@@ -161,44 +179,12 @@ def assembled_pauses_from_groups(groups: DataFrame) -> DataFrame:
     groups — at 10^12-turn scale the assembly output is an Iceberg
     intermediate, never recomputed per rollup.
     """
-    g = groups.filter(F.col("verdict") == "ok")
-    is_remark = F.col("pause_type") == "Remark"
-    for r in REGIONS:
-        c = f"{r.lower()}_after"
-        g = g.withColumn(c, F.when(~is_remark, F.col(c)))
-    return g.select(*ASSEMBLED_COLUMNS)
+    return groups.filter("verdict = 'ok'").selectExpr(*_PAUSE_COLUMNS)
 
 
 def assembly_dead_letters_from_groups(groups: DataFrame) -> DataFrame:
     """Invalid groups of an ``assemble_groups`` output -> dead-letter rows
     with reference-parity messages (``CollectPauseLines.scala:31-32,42-43``)."""
-    g = groups.filter(
-        F.col("verdict").isin("end_before_start", "missing_regions")
-    )
-    present = F.concat_ws(
-        ",",
-        *[
-            F.when(F.col(f"has_{r.lower()}"), F.lit(r))
-            for r in REGIONS
-        ],
-    )
-    msg = F.when(
-        F.col("verdict") == "end_before_start",
-        F.format_string(
-            ERR_END_BEFORE_START.format(event_id="%s"),
-            F.col("event_id").cast("string"),
-        ),
-    ).otherwise(
-        F.format_string(
-            ERR_MISSING_REGIONS.format(regions="%s", event_id="%s"),
-            present,
-            F.col("event_id").cast("string"),
-        )
-    )
-    return g.select(
-        "conv_id",
-        "event_id",
-        F.col("verdict").alias("error_code"),
-        msg.alias("error_message"),
-        "ts",
-    )
+    return groups.filter(
+        "verdict IN ('end_before_start', 'missing_regions')"
+    ).selectExpr(*_DEAD_LETTER_COLUMNS)

@@ -16,21 +16,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.grammar import SUPPORTED_PAUSE_TYPES
+from ..functions.grammar import SUPPORTED_PAUSE_TYPES, sql_str
 from .enrich import enrich
 
 SINKS = ("pause_events", "tool_calls", "unmatched")
 
+_SUPPORTED = (
+    "event_class = 'nr_regions' OR (event_class IN ('pause_start', 'pause_end')"
+    f" AND pause_type IN ({', '.join(map(sql_str, SUPPORTED_PAUSE_TYPES))}))"
+)
+
 
 def supported_types_filter(parsed: DataFrame) -> DataFrame:
     """Replicates GcLogStream.supportedTypesFilter (Cleanup excluded)."""
-    return parsed.filter(
-        (F.col("event_class") == "nr_regions")
-        | (
-            F.col("event_class").isin("pause_start", "pause_end")
-            & F.col("pause_type").isin(*SUPPORTED_PAUSE_TYPES)
-        )
-    )
+    return parsed.filter(_SUPPORTED)
 
 
 def route(parsed: DataFrame) -> dict[str, DataFrame]:

@@ -18,7 +18,8 @@ Design:
     records the pruned scan's file count + bytes as evidence. Every batch
     reads through the storage seam, so parquet and Iceberg sources share one
     read path; a source without the ``batch_bucket`` column is refused.
-  * a resume must use the ``n_batches`` its committed batches ran under;
+  * a run's ``n_batches`` must exceed the source's largest ``batch_bucket``
+    and, on a resume, equal the count its committed batches ran under;
     ``run`` refuses any other count, which would lose or duplicate
     conversations.
   * each sink writes to ``{root}/{sink}/batch={id}/`` with overwrite — a
@@ -28,7 +29,8 @@ Design:
   * ``manifest.jsonl`` is the commit log (``commit_log``): a batch's record
     is committed after every one of its sinks has been written.
   * lineage per batch records the source path + the exact filter predicate;
-    metrics record rows in/out per sink and wall seconds.
+    metrics record rows in/out per sink and wall seconds, each counted by an
+    Observation on the write that moves those rows.
 
 On a real cluster the same loop runs over Iceberg snapshot ranges; the batch
 predicate becomes a snapshot/partition range and the sinks become Iceberg
@@ -38,6 +40,7 @@ appends with overwrite-by-filter.
 from __future__ import annotations
 
 import os
+import re
 import time
 from dataclasses import dataclass
 
@@ -132,8 +135,11 @@ def run_batch(
             "write it with prepare_source first"
         )
     predicate = f"batch_bucket = {batch_id}"
+    # the batch's row count rides build's parsed-table write
+    rows = Observation("rows_in")
     transcripts = (
         source.filter(F.col("batch_bucket") == batch_id).drop("batch_bucket")
+        .observe(rows, F.count(F.lit(1)).alias("rows"))
     )
     scan_files, scan_bytes = table_scan_stats(
         spark, src, partition=("batch_bucket", batch_id)
@@ -141,7 +147,7 @@ def run_batch(
     snapshot = current_snapshot_id(spark, src)
     t0 = time.perf_counter()
     dfs = build(transcripts, os.path.join(root, "stage", "parsed"))
-    rows_in = dfs["parsed"].count()
+    rows_in = int(rows.get["rows"])
     sink_rows = write_sinks(
         dfs, {s: os.path.join(root, s, f"batch={batch_id}") for s in SINKS}
     )
@@ -170,6 +176,16 @@ def run_batch(
     return BatchResult(batch_id, rows_in, sink_rows, wall)
 
 
+def _source_buckets(spark: SparkSession, source: TableRef | str) -> set[int]:
+    """The ``batch_bucket`` values of the source's files, from their
+    partition paths (a listing, no job)."""
+    return {
+        int(m.group(1))
+        for f in read_table(spark, source).inputFiles()
+        if (m := re.search(r"/batch_bucket=(\d+)/", f))
+    }
+
+
 def run(
     spark: SparkSession,
     source_path: TableRef | str,
@@ -180,8 +196,10 @@ def run(
     """Run all pending micro-batches (resuming past completed ones).
 
     ``stop_after`` processes at most that many pending batches — the test
-    hook for simulating a mid-run crash. Raises ``ValueError`` when a
-    committed batch was run under a different ``n_batches``.
+    hook for simulating a mid-run crash. Raises ``ValueError``, before any
+    batch runs, when a committed batch was run under a different
+    ``n_batches`` or when the source holds a ``batch_bucket`` that no batch
+    under this ``n_batches`` would read.
     """
     committed = commit_log.records(_manifest_path(root))
     other = sorted({r["n_batches"] for r in committed} - {n_batches})
@@ -190,6 +208,14 @@ def run(
             f"{root} holds batches committed under n_batches={other}; "
             f"resuming with n_batches={n_batches} would lose or duplicate "
             "conversations"
+        )
+    unread = sorted(b for b in _source_buckets(spark, source_path)
+                    if b >= n_batches)
+    if unread:
+        raise ValueError(
+            f"source holds batch_bucket {unread}, prepared under a larger "
+            f"n_batches; running with n_batches={n_batches} would never read "
+            "them"
         )
     done = {r["batch_id"] for r in committed}
     results = []

@@ -1,9 +1,11 @@
 """Role/tool lookup dimensions for broadcast-join enrichment (SURVEY §2.6).
 
 The reference joins nothing; the north rule adds broadcast hash joins of
-parsed turns against small lookup dims. One shared literal table definition
-feeds both the Spark DataFrame and the DuckDB oracle CTE so enrich results
-are value-identical.
+parsed turns against small lookup dims. One shared ``VALUES`` literal feeds
+both the Spark relation and the DuckDB oracle CTE so enrich results are
+value-identical. In Spark it is a local relation: the broadcast of a dim is
+a ``LocalTableScan`` built in the JVM, where a ``createDataFrame`` dim would
+run a Python-worker job (``Scan ExistingRDD``) every time it is broadcast.
 """
 
 from __future__ import annotations
@@ -25,12 +27,16 @@ TOOL_DIM = [  # (tool, tool_family, is_side_effecting)
 ]
 
 
+ROLE_COLUMNS = ["role", "role_group", "is_agent"]
+TOOL_COLUMNS = ["tool", "tool_family", "is_side_effecting"]
+
+
 def role_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLE_DIM, "role string, role_group string, is_agent boolean")
+    return spark.sql(_values_cte(ROLE_DIM, ROLE_COLUMNS))
 
 
 def tool_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOL_DIM, "tool string, tool_family string, is_side_effecting boolean")
+    return spark.sql(_values_cte(TOOL_DIM, TOOL_COLUMNS))
 
 
 def _values_cte(rows, cols) -> str:
@@ -44,8 +50,8 @@ def _values_cte(rows, cols) -> str:
 
 
 def duckdb_role_dim_cte() -> str:
-    return "role_dim AS " + _values_cte(ROLE_DIM, ["role", "role_group", "is_agent"])
+    return "role_dim AS " + _values_cte(ROLE_DIM, ROLE_COLUMNS)
 
 
 def duckdb_tool_dim_cte() -> str:
-    return "tool_dim AS " + _values_cte(TOOL_DIM, ["tool", "tool_family", "is_side_effecting"])
+    return "tool_dim AS " + _values_cte(TOOL_DIM, TOOL_COLUMNS)

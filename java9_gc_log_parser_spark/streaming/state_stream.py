@@ -87,8 +87,8 @@ def stream_conv_state(
     def emit(closed: DataFrame, batch_id: int, last: int | None) -> dict:
         part = gc_state_partial(assembled_pauses_from_groups(closed), "conv_id")
         if last is not None:
-            part = part.unionByName(
-                spark.read.parquet(_gen_dir(out_root, last)))
+            part = part.unionByName(spark.read.schema(part.schema).parquet(
+                _gen_dir(out_root, last)))
         # observed on the merged generation, above its last shuffle: an
         # observation of the batch's events below it is lost when a trigger
         # closes no group, because AQE replaces the empty stage that held it

@@ -37,6 +37,15 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
+    from java9_gc_log_parser_spark.plans import checkpoint as cp
+
+    if not args.input and (
+        args.mode == "batch"
+        or (args.mode == "checkpoint" and not cp.completed_batches(args.output))
+    ):
+        p.error("--input is required for --mode batch and for a checkpoint "
+                "run with no committed batch")
+
     from java9_gc_log_parser_spark.session import get_spark
 
     spark = get_spark(app_name=f"gclp-{args.mode}", master=args.master)
@@ -48,8 +57,6 @@ def main(argv: list[str] | None = None) -> None:
         df.write.mode("overwrite").parquet(args.output)
         print(json.dumps({"mode": "synth", "rows": spark.read.parquet(args.output).count()}))
         return
-
-    from java9_gc_log_parser_spark.plans import checkpoint as cp
 
     if args.mode == "batch":
         from java9_gc_log_parser_spark.plans.pipeline import build

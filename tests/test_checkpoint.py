@@ -6,6 +6,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from java9_gc_log_parser_spark import commit_log
 from java9_gc_log_parser_spark.plans import checkpoint as cp
@@ -80,15 +81,20 @@ def test_crash_resume_identical(spark, raw_path, source_path, tmp_path):
 
 
 def test_resume_with_other_n_batches_is_refused(spark, source_path, tmp_path):
-    """Batches committed under n_batches=4 cannot be resumed under 3: bucket
-    3 would never be read. The refusal leaves the manifest as it was."""
-    root = str(tmp_path / "out_n")
+    """Neither batches committed under n_batches=4 nor a source prepared
+    into 4 buckets with nothing committed yet can run under 3: bucket 3
+    would never be read. The refusal comes before any batch runs and leaves
+    the manifest as it was."""
     src = source_path(4)
-    cp.run(spark, src, root, 4, stop_after=2)
-    before = _manifest(root)
-    with pytest.raises(ValueError, match="n_batches"):
-        cp.run(spark, src, root, 3)
-    assert _manifest(root) == before
+    for committed in (2, 0):
+        root = str(tmp_path / f"out_n{committed}")
+        if committed:
+            cp.run(spark, src, root, 4, stop_after=committed)
+        log = os.path.join(root, "manifest.jsonl")
+        before = commit_log.records(log)
+        with pytest.raises(ValueError, match="n_batches"):
+            cp.run(spark, src, root, 3)
+        assert commit_log.records(log) == before
 
 
 def test_unprepared_source_is_refused(spark, raw_path, tmp_path):
@@ -148,6 +154,19 @@ def test_rerun_is_idempotent(spark, raw_path, source_path, tmp_path):
     n_in = spark.read.parquet(raw_path).count()
     assert (sorted(r["batch_id"] for r in recs),
             sum(r["rows_in"] for r in recs)) == ([0, 1], n_in)
+
+
+def test_empty_bucket_commits_zero_rows_in(spark, raw_path, tmp_path):
+    """More buckets than conversations: the bucket with no rows still runs
+    and commits, and the Observation that counts rows_in reads 0."""
+    raw = spark.read.parquet(raw_path)
+    conv = raw.select("conv_id").first()[0]
+    one = raw.filter(F.col("conv_id") == conv)
+    src = cp.prepare_source(spark, one, str(tmp_path / "src_one"), 2)
+    root = str(tmp_path / "out_one")
+    results = cp.run(spark, src, root, 2)
+    assert sorted(r.rows_in for r in results) == [0, one.count()]
+    assert cp.completed_batches(root) == {0, 1}
 
 
 def test_manifest_lineage_and_metrics(spark, raw_path, source_path, tmp_path):

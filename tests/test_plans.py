@@ -34,6 +34,35 @@ def test_enrich_uses_broadcast_hash_join(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
+    # the dims are JVM local relations: broadcasting one runs no
+    # Python-worker job over a createDataFrame RDD
+    tree = plan.split("\n\n")[0].splitlines()
+    sides = [tree[i + 1] for i, line in enumerate(tree)
+             if "BroadcastExchange" in line]
+    assert sides and all("LocalTableScan" in line for line in sides), sides
+    assert "ExistingRDD" not in plan
+
+
+def test_build_crosses_the_gateway_per_stage(spark, sf_dir, tmp_path,
+                                             monkeypatch):
+    """build() hands Spark each stage's fixed expressions as SQL text, one
+    call per stage, so one build makes well under 2,500 Py4J round trips
+    (about 10,000 when its expressions were built node by node from Column
+    calls)."""
+    transcripts = synth_transcripts(spark, sf_dir)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counted(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    build(transcripts, str(tmp_path / "stage" / "parsed"))
+    monkeypatch.undo()
+    assert calls <= 2_500, calls
 
 
 def test_pipeline_sinks_read_staged_tables(spark, sf_dir, tmp_path):
