@@ -10,8 +10,12 @@ by feeding nulls for Remark rows into the carry-forward.
 
 G2 ``conv_state_final``: the final snapshot per conversation = grouped
 counters + last sizes, built from the one GcState aggregate that the
-snapshot stream (``streaming/state_stream.py``) shares: a mergeable
-``gc_state_partial``, its ``gc_state_merge`` and ``gc_state_finalize``.
+snapshot stream (``streaming/state_stream.py``) shares. It is a
+partial/merge/finalize triple: ``gc_state_rows`` turns each assembled pause
+into a one-event partial, ``gc_state_merge`` merges partials per key (the
+counters add, the heap and the generation sizes follow their newest offset)
+and ``gc_state_finalize`` exposes the GcState; ``gc_state_partial`` is the
+merge of the rows by the partial's keys.
 Implemented as a *salted two-phase aggregation* (the partial groups on
 (conv_id, salt), the merge re-aggregates per conv_id) to defuse the
 hot-conv skew the north rule calls out. For algebraic aggs Spark's
@@ -48,6 +52,8 @@ COUNTERS = {
 
 GEN_COLS = ["eden_after", "survivor_after", "old_after", "humongous_after"]
 
+_KEY = ("conv_id",)
+
 
 def _unless_remark(value: str) -> str:
     """Remark updates the heap but keeps the generation sizes."""
@@ -67,14 +73,15 @@ _SCAN = [
     *[f"coalesce(last({_unless_remark(c)}, true) {_RUNNING}, 0) AS {c}"
       for c in GEN_COLS],
 ]
-_PARTIAL = [
-    *[f"sum(CAST(pause_type = '{t}' AS BIGINT)) AS {name}"
+#: one assembled pause as a one-event partial GcState
+_ROW = [
+    *[f"CAST(pause_type = '{t}' AS BIGINT) AS {name}"
       for name, t in COUNTERS.items()],
-    "max(offset_ms) AS time_offset_ms",
-    "max_by(heap_after, offset_ms) AS heap_size",
-    "max_by(heap_total, offset_ms) AS heap_total",
-    *[f"max_by({c}, {_unless_remark('offset_ms')}) AS {c}" for c in GEN_COLS],
-    f"max({_unless_remark('offset_ms')}) AS _max_nr_off",
+    "offset_ms AS time_offset_ms",
+    "heap_after AS heap_size",
+    "heap_total",
+    *GEN_COLS,
+    f"{_unless_remark('offset_ms')} AS _max_nr_off",
 ]
 _MERGE = [
     *[f"sum({name}) AS {name}" for name in COUNTERS],
@@ -101,19 +108,26 @@ def conv_state_scan(assembled: DataFrame) -> DataFrame:
     return assembled.selectExpr(*_SCAN)
 
 
+def gc_state_rows(assembled: DataFrame, *keys: str) -> DataFrame:
+    """Each assembled pause as a one-event partial GcState, keyed by
+    ``keys`` (default ``conv_id``): its counter, its offset as
+    ``time_offset_ms``, its heap, its generation sizes and, unless it is a
+    Remark, its offset again as ``_max_nr_off`` — Remark updates the heap
+    but keeps the generation sizes (``GcStateFlow.scala:28-29``)."""
+    return assembled.selectExpr(*(keys or _KEY), *_ROW)
+
+
+def gc_state_merge(partials: DataFrame, *keys: str) -> DataFrame:
+    """partial ⊕ partial per ``keys`` (default ``conv_id``): counters add;
+    heap follows max ``time_offset_ms``; generation sizes follow max
+    ``_max_nr_off`` (a Remark-only partial's null key never wins)."""
+    return partials.groupBy(*(keys or _KEY)).agg(*map(F.expr, _MERGE))
+
+
 def gc_state_partial(assembled: DataFrame, *keys: str) -> DataFrame:
-    """Mergeable partial GcState per ``keys`` (``conv_id`` first): counters,
-    ``time_offset_ms``, heap by max ``offset_ms`` and generation sizes by max
-    non-Remark offset, whose key is kept as ``_max_nr_off`` — Remark updates
-    the heap but keeps the generation sizes (``GcStateFlow.scala:28-29``)."""
-    return assembled.groupBy(*keys).agg(*map(F.expr, _PARTIAL))
-
-
-def gc_state_merge(partials: DataFrame) -> DataFrame:
-    """partial ⊕ partial per ``conv_id``: counters add; heap follows max
-    ``time_offset_ms``; generation sizes follow max ``_max_nr_off`` (a
-    Remark-only partial's null key never wins)."""
-    return partials.groupBy("conv_id").agg(*map(F.expr, _MERGE))
+    """Mergeable partial GcState per ``keys`` (``conv_id`` first): the merge
+    of the events' ``gc_state_rows``."""
+    return gc_state_merge(gc_state_rows(assembled, *keys), *keys)
 
 
 def gc_state_finalize(state: DataFrame) -> DataFrame:
@@ -163,10 +177,9 @@ def conv_state_json(conv_state: DataFrame) -> DataFrame:
 
 def bucket_turn_counts(transcripts: DataFrame, bucket: str = "hour") -> DataFrame:
     """G3a: turns per time bucket (map-side combinable; AQE handles skew)."""
-    return (
-        transcripts.groupBy(F.date_trunc(bucket, "ts").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("turn_count"))
-    )
+    return transcripts.groupBy(
+        F.expr(f"date_trunc({sql_str(bucket)}, ts) AS bucket")
+    ).agg(F.expr("count(1) AS turn_count"))
 
 
 def bucket_pause_stats(assembled: DataFrame, bucket: str = "hour") -> DataFrame:

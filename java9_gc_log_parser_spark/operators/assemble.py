@@ -17,6 +17,25 @@ Per-field "last write wins" is reproduced with ``max_by(value, turn_idx)``
 under a class/region predicate, so duplicate lines resolve exactly like the
 reference's mutable overwrite under stable (conv_id, turn_idx) order.
 
+The assembly is a mergeable partial aggregate, like the GcState aggregate in
+``operators/aggregate.py``: ``assemble_groups = assembly_finalize ∘
+assembly_merge ∘ assembly_rows``.
+
+* ``assembly_rows``: each line as a one-line partial group. Every
+  last-write-wins value sits next to its ``turn_idx`` key (``_end_turn`` for
+  the PauseEnd fields, ``_<region>_turn`` per region; null where the line
+  does not write it), beside the ``has_*`` flags and the line's event time
+  as the group's newest (``_newest_ms``).
+* ``assembly_merge``: partial ⊕ partial per ``(conv_id, event_id)``: ``max``
+  of the flags and keys, ``max_by(value, key)`` for the values. It is
+  associative, so merging a group's partials in any split gives the group.
+* ``assembly_finalize``: decodes, attaches the verdict and drops the keys.
+
+The stream (``streaming/assembler.py``) keeps each open group as its merged
+partial row across triggers. In the batch plan, Catalyst prunes the key and
+``_newest_ms`` aggregates that the finalize drops, so the assembly stays one
+18-function hash aggregation.
+
 Groups that never see a PauseEnd are dangling state at stream end: the
 reference silently discards them; so do we (tested).
 
@@ -60,19 +79,6 @@ ASSEMBLED_COLUMNS = [
     "ts",
 ]
 
-#: the parse columns ``assemble_groups`` reads
-LINE_COLUMNS = [
-    "conv_id", "event_id", "turn_idx", "ts", "event_class", "region",
-    "region_after", "pause_type", "reason", "offset_ms", "duration_ms",
-    "heap_before", "heap_after", "heap_total",
-]
-
-
-def _last(value: str, cond: str) -> str:
-    """Last-write-wins under ``cond``, ordered by turn_idx (null keys ignored)."""
-    return f"max_by({value}, CASE WHEN {cond} THEN turn_idx END)"
-
-
 #: closed vocabularies dictionary-encoded for the hash-aggregable assembly
 PAUSE_TYPE_CODES = {t: i for i, t in enumerate(sorted(set(PAUSE_TYPES.values())))}
 REASON_CODES = {r: i for i, r in enumerate(sorted(set(REASONS.values())))}
@@ -95,34 +101,60 @@ def _region_line(r: str) -> str:
     return f"(event_class = 'nr_regions' AND region = {sql_str(r)})"
 
 
-#: the per-group aggregates, in output order
-_AGGS = {
-    "has_start": "max(event_class = 'pause_start')",
-    "has_end": f"max({_IS_END})",
-    "_pt_code": _last("_pt_code", _IS_END),
-    "_rs_code": _last("_rs_code", _IS_END),
-    **{c: _last(c, _IS_END) for c in (
-        "offset_ms", "duration_ms", "heap_before", "heap_after", "heap_total",
-        "ts")},
-    **{name: sql for r in REGIONS for name, sql in (
-        (f"{r.lower()}_after", _last("region_after", _region_line(r))),
-        (f"has_{r.lower()}", f"max(CAST({_region_line(r)} AS BOOLEAN))"),
+def _key(cond: str) -> str:
+    """The line's last-write-wins key under ``cond`` (null: no write)."""
+    return f"CASE WHEN {cond} THEN turn_idx END"
+
+
+#: the values the PauseEnd line writes, keyed by ``_end_turn``
+_END_VALUES = ["_pt_code", "_rs_code", "offset_ms", "duration_ms",
+               "heap_before", "heap_after", "heap_total", "ts"]
+
+#: one line as a one-line partial group
+_ROW = [
+    "conv_id", "event_id",
+    "event_class = 'pause_start' AS has_start",
+    f"{_IS_END} AS has_end",
+    f"{_key(_IS_END)} AS _end_turn",
+    f"{_encode('pause_type', PAUSE_TYPE_CODES)} AS _pt_code",
+    f"{_encode('reason', REASON_CODES)} AS _rs_code",
+    *_END_VALUES[2:],
+    *(c for r in REGIONS for c in (
+        f"region_after AS {r.lower()}_after",
+        f"{_key(_region_line(r))} AS _{r.lower()}_turn",
+        f"CAST({_region_line(r)} AS BOOLEAN) AS has_{r.lower()}",
+    )),
+    "unix_millis(CAST(ts AS TIMESTAMP)) AS _newest_ms",
+]
+
+#: partial ⊕ partial, in the partial's column order
+_MERGE = {
+    "has_start": "max(has_start)",
+    "has_end": "max(has_end)",
+    "_end_turn": "max(_end_turn)",
+    **{v: f"max_by({v}, _end_turn)" for v in _END_VALUES},
+    **{name: sql for r in (r.lower() for r in REGIONS) for name, sql in (
+        (f"{r}_after", f"max_by({r}_after, _{r}_turn)"),
+        (f"_{r}_turn", f"max(_{r}_turn)"),
+        (f"has_{r}", f"max(has_{r})"),
     )},
+    "_newest_ms": "max(_newest_ms)",
 }
 
-_DECODED = [
-    "conv_id", "event_id", *(c for c in _AGGS if c not in ("_pt_code", "_rs_code")),
-    f"{_decode('_pt_code', PAUSE_TYPE_CODES)} AS pause_type",
-    f"{_decode('_rs_code', REASON_CODES)} AS reason",
-]
 _VERDICT = (
     "CASE WHEN NOT has_end THEN 'dangling'"  # silent discard (stream-end state)
     " WHEN NOT has_start THEN 'end_before_start'"
-    " WHEN NOT (pause_type = 'Remark') AND NOT ("
+    f" WHEN NOT (_pt_code = {PAUSE_TYPE_CODES['Remark']}) AND NOT ("
     + " AND ".join(f"has_{r.lower()}" for r in REGIONS)
     + ") THEN 'missing_regions'"
     " ELSE 'ok' END"
 )
+_FINAL = [
+    "conv_id", "event_id", *(c for c in _MERGE if not c.startswith("_")),
+    f"{_decode('_pt_code', PAUSE_TYPE_CODES)} AS pause_type",
+    f"{_decode('_rs_code', REASON_CODES)} AS reason",
+    f"{_VERDICT} AS verdict",
+]
 #: RemarkPause carries no generation sizes: its region columns are nulled
 _PAUSE_COLUMNS = [
     f"CASE WHEN NOT (pause_type = 'Remark') THEN {c} END AS {c}"
@@ -145,25 +177,41 @@ _DEAD_LETTER_COLUMNS = [
 ]
 
 
-def assemble_groups(filtered: DataFrame) -> DataFrame:
-    """One row per (conv_id, event_id) group with validity verdict attached.
+def assembly_rows(filtered: DataFrame) -> DataFrame:
+    """Each line as a one-line partial group (see the module docstring).
 
     Input: the supported-types-filtered parse output. Lines without an
     eventId map to the reference's NotInteresting marker
     (``CollectPauseLines.scala:21-22``) and take no part in assembly.
     """
-    return (
-        filtered.filter("event_id IS NOT NULL")
-        .selectExpr(
-            "*",
-            f"{_encode('pause_type', PAUSE_TYPE_CODES)} AS _pt_code",
-            f"{_encode('reason', REASON_CODES)} AS _rs_code",
-        )
-        .groupBy("conv_id", "event_id")
-        .agg(*[F.expr(f"{sql} AS {name}") for name, sql in _AGGS.items()])
-        .selectExpr(*_DECODED)
-        .selectExpr("*", f"{_VERDICT} AS verdict")
+    return filtered.filter("event_id IS NOT NULL").selectExpr(*_ROW)
+
+
+def assembly_merge(partials: DataFrame) -> DataFrame:
+    """One partial row per ``(conv_id, event_id)``: flags and keys by
+    ``max``, each value by ``max_by`` of its key (a null key never wins), so
+    the higher ``turn_idx`` wins whichever partial carried it."""
+    return partials.groupBy("conv_id", "event_id").agg(
+        *[F.expr(f"{sql} AS {name}") for name, sql in _MERGE.items()]
     )
+
+
+def assembly_verdict(merged: DataFrame) -> DataFrame:
+    """``merged`` with each group's ``verdict`` attached; its partial
+    columns are kept."""
+    return merged.selectExpr("*", f"{_VERDICT} AS verdict")
+
+
+def assembly_finalize(merged: DataFrame) -> DataFrame:
+    """Merged partials -> ``assemble_groups``' shape: codes decoded, verdict
+    attached, keys and ``_newest_ms`` dropped."""
+    return merged.selectExpr(*_FINAL)
+
+
+def assemble_groups(filtered: DataFrame) -> DataFrame:
+    """One row per (conv_id, event_id) group with validity verdict attached:
+    ``assembly_finalize(assembly_merge(assembly_rows(filtered)))``."""
+    return assembly_finalize(assembly_merge(assembly_rows(filtered)))
 
 
 def assembled_pauses_from_groups(groups: DataFrame) -> DataFrame:

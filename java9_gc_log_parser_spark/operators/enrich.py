@@ -16,11 +16,12 @@ from ..sources.dims import role_dim, tool_dim
 def enrich(df: DataFrame, with_role: bool = True, with_tool: bool = True) -> DataFrame:
     """Left-join role_dim/tool_dim with explicit broadcast hints."""
     spark = df.sparkSession
+    columns = df.columns
     out = df
-    if with_role and "role" in df.columns:
-        out = out.join(F.broadcast(role_dim(spark)), "role", "left")
-    if with_tool and "tool" in df.columns:
-        out = out.join(F.broadcast(tool_dim(spark)), "tool", "left")
+    if with_role and "role" in columns:
+        out = out.join(role_dim(spark).hint("broadcast"), "role", "left")
+    if with_tool and "tool" in columns:
+        out = out.join(tool_dim(spark).hint("broadcast"), "tool", "left")
     return out
 
 

@@ -14,7 +14,6 @@ the parse stage executes once for all sinks (SURVEY §4 "one-pass fan-out").
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.grammar import SUPPORTED_PAUSE_TYPES, sql_str
 from .enrich import enrich
@@ -38,7 +37,7 @@ def route(parsed: DataFrame) -> dict[str, DataFrame]:
     Caller is responsible for materializing `parsed` before writing more
     than one sink (plans/pipeline.py does; verified by explain in tests).
     """
-    pause_events = supported_types_filter(parsed).transform(enrich).select(
+    pause_events = enrich(supported_types_filter(parsed)).selectExpr(
         "conv_id",
         "turn_idx",
         "event_id",
@@ -58,13 +57,12 @@ def route(parsed: DataFrame) -> dict[str, DataFrame]:
         "ts",
     )
 
-    tool_calls = (
-        parsed.filter(F.col("tool").isNotNull())
-        .transform(lambda d: enrich(d, with_role=False))
-        .select("conv_id", "turn_idx", "tool", "tool_family", "is_side_effecting", "ts")
-    )
+    tool_calls = enrich(
+        parsed.filter("tool IS NOT NULL"), with_role=False
+    ).selectExpr("conv_id", "turn_idx", "tool", "tool_family",
+                 "is_side_effecting", "ts")
 
-    unmatched = parsed.filter(F.col("event_class") == "unmatched").select(
+    unmatched = parsed.filter("event_class = 'unmatched'").selectExpr(
         "conv_id", "turn_idx", "text", "reason_code", "ts"
     )
 

@@ -15,6 +15,8 @@ column is read ONLY by the dead-letter sink).
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,6 +44,14 @@ def _sibling(table: TableRef | str, suffix: str) -> TableRef | str:
     return table.rstrip("/") + suffix
 
 
+def _stage(df: DataFrame, table: TableRef | str) -> DataFrame:
+    """Write ``df`` to ``table`` and read it back with ``df``'s schema, so
+    the read runs no schema-inference job."""
+    write_table(df, table)
+    ref = table if isinstance(table, TableRef) else TableRef(table)
+    return read_table(df.sparkSession, replace(ref, schema=df.schema))
+
+
 def build(
     transcripts: DataFrame, materialize_table: TableRef | str
 ) -> dict[str, DataFrame]:
@@ -56,7 +66,6 @@ def build(
     overwriting both; the returned sinks are lazy plans over the two staged
     tables.
     """
-    spark = transcripts.sparkSession
     parsed = parse_lines(transcripts)
     # The stored parsed table keeps raw `text` ONLY for dead-letter rows:
     # the reference retains the raw line solely in UnknownLine
@@ -65,22 +74,18 @@ def build(
     # rows cuts the widest column's write+read bytes — at 10^12 turns
     # the parsed Iceberg table would otherwise duplicate the whole
     # transcript corpus.
-    write_table(
-        parsed.withColumn(
-            "text",
-            F.when(F.col("event_class") == "unmatched", F.col("text")),
-        ),
+    parsed = _stage(
+        parsed.withColumn("text", F.expr(
+            "CASE WHEN event_class = 'unmatched' THEN text END")),
         materialize_table,
     )
-    parsed = read_table(spark, materialize_table)
     # materialize the assembly output too: six sinks (pause table,
     # dead letter, conv-state final/scan, bucket pauses, histogram)
     # otherwise each re-run the scan+filter+assembly shuffle — at
     # 10^12 turns the assembled groups are an Iceberg intermediate
     # written once (and ~100x smaller than the parsed table)
-    gref = _sibling(materialize_table, "__groups")
-    write_table(assemble_groups(supported_types_filter(parsed)), gref)
-    groups = read_table(spark, gref)
+    groups = _stage(assemble_groups(supported_types_filter(parsed)),
+                    _sibling(materialize_table, "__groups"))
 
     sinks = route(parsed)
     assembled = assembled_pauses_from_groups(groups)
@@ -89,11 +94,11 @@ def build(
     # unified dead-letter sink: grammar-unmatched rows + assembly-error groups
     # (FIXTURES.md §3 unmatched sink definition)
     dead_letter = sinks["unmatched"].unionByName(
-        dead.select(
+        dead.selectExpr(
             "conv_id",
-            F.lit(None).cast("int").alias("turn_idx"),
-            F.col("error_message").alias("text"),
-            F.col("error_code").alias("reason_code"),
+            "CAST(NULL AS INT) AS turn_idx",
+            "error_message AS text",
+            "error_code AS reason_code",
             "ts",
         )
     )

@@ -3,19 +3,33 @@
 The reference's live mode tails a file every second
 (``GcLogStream.scala:45-51``) through an order-dependent assembler; a
 distributed stream cannot assume order, so the lines of one GC event may
-arrive across micro-batches. ``assemble_stream`` therefore runs the batch
-``assemble_groups`` in ``foreachBatch`` under ``commit_log.once_per_batch``:
+arrive across micro-batches. Like the reference's assembler
+(``CollectPauseLines.scala:13-70``), which keeps one small state entry per
+open event, the fold keeps each open group as one row: its merged partial of
+the batch assembly (``operators/assemble.py``). ``assemble_stream`` runs it
+in ``foreachBatch`` under ``commit_log.once_per_batch``:
 
-1. union the trigger's supported, event-id-bearing lines with the carry (the
-   lines of the groups still open after the last committed batch);
-2. decide every group's verdict with ``assemble_groups``, so stream and batch
-   share one verdict and one last-line-wins rule (the higher ``turn_idx``
-   wins, whichever trigger delivered it);
-3. hand ``emit`` the closed groups: every ``ok`` group and, under
-   ``lateness_ms``, every expired end-bearing incomplete group;
-4. write the lines of every other group as the next carry;
-5. commit ``{batch_id, hwm_ms, **emit(...), wall_s}``, ``hwm_ms`` being the
-   high-water mark of the supported lines' ``ts``.
+1. merge the trigger's supported, event-id-bearing lines
+   (``assembly_rows``) with the carry in one ``assembly_merge``, so stream
+   and batch share one verdict and one last-line-wins rule (the higher
+   ``turn_idx`` wins, whichever trigger delivered it). The carry is the
+   groups the last committed batch left open: its stored groups that its
+   ``hwm_ms`` and ``lateness_ms`` do not close;
+2. write the merged groups, one row each, under ``carry/batch=N``; an
+   Observation on this write reads the high-water mark of their newest
+   ``ts``;
+3. read them back and hand ``emit`` the closed ones in ``assemble_groups``'
+   shape: every ``ok`` group and, under ``lateness_ms``, every expired
+   end-bearing incomplete group;
+4. commit ``{batch_id, hwm_ms, lateness_ms, **emit(...), wall_s}``,
+   ``hwm_ms`` being the high-water mark of the supported lines' ``ts``. The
+   next batch re-derives its carry from the stored groups with this
+   record's ``hwm_ms`` and ``lateness_ms``, so a resume under another
+   lateness carries exactly the groups the last batch left open.
+
+A trigger runs no Spark action besides the groups write and ``emit``'s
+writes, and persists nothing: the stored groups serve both the closed
+groups of this batch and the carry of the next.
 
 Dangling groups (no PauseEnd) never close: the batch assembler discards them
 at end of input, so an expiry would invent a dead letter.
@@ -38,8 +52,11 @@ micro-batch, with two measured divergences:
     batch's advance; the fold drops it.
 
 Layout under ``root``: ``ckpt/`` (the stream checkpoint), ``carry/batch=N/``
-(the open groups' lines after batch N) and ``metrics.jsonl`` (the commit log,
-one record per batch).
+(the merged partial row of every group batch N carried in or touched: the
+ones its ``hwm_ms`` leaves open are the next batch's carry) and
+``metrics.jsonl`` (the commit log, one record per batch). A carry written
+before it held merged groups holds lines; such a store and its checkpoint
+are discarded together.
 """
 
 from __future__ import annotations
@@ -48,16 +65,19 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .. import commit_log
 from ..functions.parse import parse_lines
-from ..operators.assemble import LINE_COLUMNS, assemble_groups
+from ..operators.assemble import (
+    assembly_finalize,
+    assembly_merge,
+    assembly_rows,
+    assembly_verdict,
+)
 from ..operators.route import supported_types_filter
-
-_KEYS = ["conv_id", "event_id"]
 
 
 def log_path(root: str) -> str:
@@ -66,6 +86,15 @@ def log_path(root: str) -> str:
 
 def _carry(root: str, batch_id: int) -> str:
     return os.path.join(root, "carry", f"batch={batch_id}")
+
+
+def _closed(hwm: int | None, lateness_ms: int | None) -> str:
+    """The groups a batch with high-water mark ``hwm`` closes: every ok
+    group and, under ``lateness_ms``, every expired end-bearing one."""
+    if lateness_ms is None or hwm is None:
+        return "verdict = 'ok'"
+    return (f"verdict = 'ok' OR coalesce(verdict <> 'dangling' AND "
+            f"_newest_ms + {lateness_ms} < {hwm - lateness_ms}, false)")
 
 
 def assemble_stream(
@@ -88,60 +117,44 @@ def assemble_stream(
     backlog and stops; otherwise the stream runs on a 1 s processing-time
     trigger."""
     log = log_path(root)
-    lines = (
-        supported_types_filter(
-            parse_lines(
-                spark.readStream.schema(input_schema)
-                .option("maxFilesPerTrigger", max_files_per_trigger)
-                .parquet(source_path)
-            )
-        )
-        .filter(F.col("event_id").isNotNull())
-        .select(*LINE_COLUMNS)
-    )
+    lines = supported_types_filter(parse_lines(
+        spark.readStream.schema(input_schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(source_path)
+    ))
 
     def apply(new: DataFrame, batch_id: int, last: int | None) -> dict:
         t0 = time.perf_counter()
-        ts = F.col("ts").cast("timestamp")  # the source's ts may be NTZ
         hwm = None
         if last is not None:
-            hwm = max(commit_log.records(log),
-                      key=lambda r: r["batch_id"])["hwm_ms"]
+            prev = max(commit_log.records(log), key=lambda r: r["batch_id"])
+            hwm = prev["hwm_ms"]
             if lateness_ms is not None and hwm is not None:
-                wm = F.timestamp_millis(F.lit(hwm - lateness_ms))
-                new = new.filter(ts.isNull() | (ts > wm))
-            new = new.unionByName(
-                new.sparkSession.read.schema(new.schema).parquet(
-                    _carry(root, last))
-            )
-        new.persist()
-        top = new.agg(F.max(F.unix_millis(ts))).first()[0]
-        hwm = max((h for h in (hwm, top) if h is not None), default=None)
-
-        groups = assemble_groups(new)
-        closed = F.col("verdict") == "ok"
-        if lateness_ms is not None and hwm is not None:
-            newest = new.groupBy(*_KEYS).agg(
-                F.max(F.unix_millis(ts)).alias("_newest_ms")
-            )
-            expired = (F.col("verdict") != "dangling") & (
-                F.col("_newest_ms") + lateness_ms < hwm - lateness_ms
-            )
-            closed = closed | F.coalesce(expired, F.lit(False))
-            groups = groups.join(newest, _KEYS)
-        groups = groups.withColumn("_closed", closed).persist()
-
-        still_open = groups.filter(~F.col("_closed")).select(*_KEYS)
-        new.join(still_open, _KEYS, "left_semi").write.mode(
-            "overwrite"
-        ).parquet(_carry(root, batch_id))
-        out = emit(
-            groups.filter(F.col("_closed")).drop("_closed", "_newest_ms"),
-            batch_id, last,
-        )
-        groups.unpersist()
-        new.unpersist()
-        return {"batch_id": batch_id, "hwm_ms": hwm, **out,
+                # the source's ts may be NTZ
+                new = new.filter(
+                    "ts IS NULL OR CAST(ts AS TIMESTAMP) > "
+                    f"timestamp_millis({hwm - lateness_ms})")
+        read = new.sparkSession.read
+        parts = assembly_rows(new)
+        if last is not None:
+            # the groups the last batch left open, under the lateness it
+            # ran with: a resume under another one keeps them
+            carried = read.schema(parts.schema).parquet(_carry(root, last))
+            parts = parts.unionByName(assembly_verdict(carried).filter(
+                f"NOT ({_closed(hwm, prev['lateness_ms'])})").drop("verdict"))
+        # observed above the merge's shuffle, so AQE cannot drop it with an
+        # empty stage
+        obs = Observation()
+        assembly_merge(parts).observe(
+            obs, F.max("_newest_ms").alias("top")
+        ).write.mode("overwrite").parquet(_carry(root, batch_id))
+        hwm = max((h for h in (hwm, obs.get["top"]) if h is not None),
+                  default=None)
+        groups = read.schema(parts.schema).parquet(_carry(root, batch_id))
+        out = emit(assembly_finalize(assembly_verdict(groups).filter(
+            _closed(hwm, lateness_ms))), batch_id, last)
+        return {"batch_id": batch_id, "hwm_ms": hwm,
+                "lateness_ms": lateness_ms, **out,
                 "wall_s": round(time.perf_counter() - t0, 3)}
 
     writer = lines.writeStream.foreachBatch(

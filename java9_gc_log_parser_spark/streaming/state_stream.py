@@ -12,13 +12,15 @@ events, convs, wall seconds) to a JSONL feed, which is the fold's commit log
 (``commit_log``).
 
 The running state is the mergeable partial of the one GcState aggregate in
-``operators/aggregate.py`` (``gc_state_partial``, ``gc_state_merge``,
+``operators/aggregate.py`` (``gc_state_rows``, ``gc_state_merge``,
 ``gc_state_finalize``), so each generation is
-``gc_state_merge(prev ∪ gc_state_partial(batch))`` — the same shape Spark uses
-for partial/final aggregation, applied across micro-batches — and
-``final_state`` finalizes the last one. After any prefix of batches the
-exposed state equals ``operators.aggregate.conv_state_final`` over the same
-events (asserted in tests).
+``gc_state_merge(prev ∪ gc_state_rows(batch))``: one shuffle merges the
+previous generation with the batch's events, each a one-event partial — the
+same shape Spark uses for partial/final aggregation, applied across
+micro-batches — and ``final_state`` finalizes the last one. After any
+prefix of batches the exposed state equals
+``operators.aggregate.conv_state_final`` over the same events (asserted in
+tests).
 
 The heartbeat's ``convs`` and ``events`` come from one Observation on the
 merged generation, so they ride on the generation write and cost no extra
@@ -27,8 +29,8 @@ counters' total over the committed heartbeats (each ok event bumps exactly
 one counter).
 
 Batch sizing note: micro-batches are bounded (maxFilesPerTrigger), so the
-per-batch partial needs no salting; the merge touches one row per conv per
-side.
+batch's events need no salting; the merge touches one row per conv of the
+previous generation and one per ok event of the batch.
 """
 
 from __future__ import annotations
@@ -43,7 +45,7 @@ from ..operators.aggregate import (
     COUNTERS,
     gc_state_finalize,
     gc_state_merge,
-    gc_state_partial,
+    gc_state_rows,
 )
 from ..operators.assemble import assembled_pauses_from_groups
 from .assembler import assemble_stream, log_path
@@ -85,7 +87,7 @@ def stream_conv_state(
     row_events = sum(F.col(name) for name in COUNTERS)
 
     def emit(closed: DataFrame, batch_id: int, last: int | None) -> dict:
-        part = gc_state_partial(assembled_pauses_from_groups(closed), "conv_id")
+        part = gc_state_rows(assembled_pauses_from_groups(closed))
         if last is not None:
             part = part.unionByName(spark.read.schema(part.schema).parquet(
                 _gen_dir(out_root, last)))

@@ -164,3 +164,41 @@ def test_cleanup_never_assembles_via_pipeline(spark):
     ]
     assembled, dead = _run(spark, lines)
     assert assembled == [] and dead == []
+
+
+def test_assembly_merge_of_split_partials_equals_groups(spark):
+    """finalize(merge(rows(a) ∪ merge(rows(b)))) == assemble_groups(a ∪ b):
+    GC(0) has an Eden line in each half (the higher turn, in b, wins), GC(1)
+    has an end-only half, and the Remark GC(15) is split start | end."""
+    from java9_gc_log_parser_spark.operators.assemble import (
+        assembly_finalize,
+        assembly_merge,
+        assembly_rows,
+    )
+
+    gc1 = [line.replace("GC(0)", "GC(1)") for line in FULL_EVENT]
+    lines = [
+        *FULL_EVENT[:-1],                                        # a: 0-4
+        "[8.999s][info][gc,heap      ] GC(0) Eden regions: 25->7(21)",  # b: 5
+        FULL_EVENT[-1],                                          # b: 6
+        *gc1[:-1],                                               # a: 7-11
+        gc1[-1],                                                 # b: 12
+        "[613.102s][info][gc,start     ] GC(15) Pause Remark",   # a: 13
+        "[613.102s][info][gc           ] GC(15) Pause Remark "
+        "149M->148M(256M) 1.381ms",                              # b: 14
+    ]
+    filtered = supported_types_filter(parse_lines(_df(spark, lines)))
+    in_b = "turn_idx IN (5, 6, 12, 14)"
+    a, b = filtered.filter(f"NOT ({in_b})"), filtered.filter(in_b)
+    merged = assembly_finalize(assembly_merge(
+        assembly_rows(a).unionByName(assembly_merge(assembly_rows(b)))
+    ))
+
+    def by_group(df):
+        return {(r.conv_id, r.event_id): r.asDict() for r in df.collect()}
+
+    got, want = by_group(merged), by_group(assemble_groups(filtered))
+    assert got == want
+    assert {k[1]: v["verdict"] for k, v in got.items()} == {
+        0: "ok", 1: "ok", 15: "ok"}
+    assert got[("c1", 0)]["eden_after"] == 7

@@ -41,6 +41,34 @@ def test_text_format_requires_schema(spark, tmp_path):
         read_table(spark, TableRef(str(tmp_path / "x"), format="jsonl"))
 
 
+@pytest.mark.parametrize("fmt, inference_jobs", [("parquet", 1), ("orc", 0)])
+def test_columnar_read_with_known_schema_runs_no_job(spark, tmp_path, fmt,
+                                                     inference_jobs):
+    """A parquet/orc read given the schema it was written with runs no job.
+    Inferring the schema instead costs parquet a one-task footer job; orc
+    reads its footer on the driver."""
+    df = spark.createDataFrame(ROWS, SCHEMA)
+    path = str(tmp_path / f"t_{fmt}")
+    write_table(df, TableRef(path, format=fmt))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(group, ref):
+        sc.setJobGroup(group, group)
+        try:
+            back = read_table(spark, ref)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return back, tracker.getJobIdsForGroup(group)
+
+    known, jobs = jobs_of(f"known-{fmt}", TableRef(path, fmt, schema=df.schema))
+    assert jobs == []
+    assert known.schema == df.schema
+    assert sorted(map(tuple, known.collect())) == sorted(map(tuple, df.collect()))
+    _, jobs = jobs_of(f"inferred-{fmt}", TableRef(path, fmt))
+    assert len(jobs) == inference_jobs
+
+
 def test_parquet_scan_stats(spark, tmp_path):
     from java9_gc_log_parser_spark.storage import table_scan_stats
 

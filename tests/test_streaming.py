@@ -506,6 +506,95 @@ def test_cross_trigger_duplicate_region_last_turn_wins(spark, tmp_path):
     assert got_ok[0]["eden_after"] == 0
 
 
+def test_carry_holds_one_row_per_open_group(spark, tmp_path):
+    """A PauseStart and two region lines of one event leave one carry row,
+    the group's merged partial, not the three lines."""
+    src, fold = str(tmp_path / "src"), str(tmp_path / "fold")
+    heap = "[1.5s][info][gc,heap      ] GC(7) "
+    _write_files(spark, src, [[
+        ("c1", 0, START7, T0),
+        ("c1", 1, heap + "Eden regions: 25->0(21)", T0),
+        ("c1", 2, heap + "Survivor regions: 0->4(21)", T0),
+    ]])
+    _drain(spark, src, fold, str(tmp_path / "out"))
+    [row] = spark.read.parquet(f"{fold}/carry/batch=0").collect()
+    assert (row.conv_id, row.event_id, row.has_start, row.has_end) == (
+        "c1", 7, True, False)
+    assert (row.has_eden, row.has_survivor, row.has_old) == (True, True, False)
+
+
+def test_stream_heartbeats_through_empty_carry_and_empty_trigger(spark,
+                                                                 tmp_path):
+    """Three triggers: one closes every group (empty carry), one holds no
+    supported line (nothing to merge at all), one adds an event. Every
+    heartbeat is committed, ``hwm_ms`` is the newest supported line's
+    ``ts`` so far, and the final state equals the batch final state."""
+    import os
+
+    from java9_gc_log_parser_spark import commit_log
+    from java9_gc_log_parser_spark.operators.aggregate import conv_state_final
+    from java9_gc_log_parser_spark.operators.assemble import assembly_verdict
+    from java9_gc_log_parser_spark.streaming.state_stream import (
+        final_state,
+        stream_conv_state,
+    )
+
+    src, out_root = str(tmp_path / "src"), str(tmp_path / "state")
+    heap = "[1.5s][info][gc,heap      ] GC(7) "
+    event = [START7, *(heap + r for r in (
+        "Eden regions: 25->0(21)", "Survivor regions: 0->4(21)",
+        "Old regions: 0->4", "Humongous regions: 0->4")), END7]
+    t1, t_free, t3 = (T0 + dt.timedelta(seconds=s) for s in (5, 3600, 60))
+    _write_files(spark, src, [
+        [("c1", i, line, T0 if i < 5 else t1) for i, line in enumerate(event)],
+        [("c1", 6, "free text, no GC line", t_free)],
+        [("c2", i, line, t3) for i, line in enumerate(event)],
+    ])
+    q = stream_conv_state(spark, src, INPUT_SCHEMA, out_root,
+                          max_files_per_trigger=1)
+    assert q.awaitTermination(300)
+
+    def ms(ts):
+        return spark.createDataFrame([(ts,)], "ts timestamp").selectExpr(
+            "unix_millis(ts)").first()[0]
+
+    beats = sorted(commit_log.records(os.path.join(out_root, "metrics.jsonl")),
+                   key=lambda b: b["batch_id"])
+    assert [b["batch_id"] for b in beats] == [0, 1, 2]
+    assert [b["hwm_ms"] for b in beats] == [ms(t1), ms(t1), ms(t3)]
+    assert [(b["events"], b["convs"]) for b in beats] == [(1, 1), (0, 1), (1, 2)]
+    # batch 0 merged one group and closed it: nothing is carried
+    carry0 = spark.read.parquet(os.path.join(out_root, "carry", "batch=0"))
+    assert [r.verdict for r in assembly_verdict(carry0).collect()] == ["ok"]
+    ok = assembled_pauses_from_groups(assemble_groups(
+        supported_types_filter(parse_lines(spark.read.parquet(src)))))
+    assert sorted(map(tuple, final_state(spark, out_root).collect())) == sorted(
+        map(tuple, conv_state_final(ok).collect()))
+
+
+def test_resume_under_another_lateness_keeps_the_carry(spark, tmp_path):
+    """A straggler expires under a 5 s lateness and is dead-lettered. A
+    resume without lateness must not carry it again: its start and region
+    lines then form a new dangling group, not a second, ok emission."""
+    src, fold, out = (str(tmp_path / d) for d in ("src", "fold", "out"))
+    heap = "[1.5s][info][gc,heap      ] GC(7) "
+    later = T0 + dt.timedelta(seconds=21)
+    _write_files(spark, src, [
+        [("c1", 5, END7, T0)],
+        [("wm", 0, _sentinel(9001), T0 + dt.timedelta(seconds=20))],
+    ])
+    _drain(spark, src, fold, out, lateness_ms=5000, max_files_per_trigger=1)
+    _write_files(spark, src, [[
+        ("c1", 0, START7, later),
+        *((("c1", i, heap + r, later) for i, r in enumerate((
+            "Eden regions: 25->0(21)", "Survivor regions: 0->4(21)",
+            "Old regions: 0->4", "Humongous regions: 0->4"), start=1))),
+    ]])
+    _drain(spark, src, fold, out, max_files_per_trigger=1)
+    got = [(r.event_id, r.verdict) for r in _closed_rows(spark, out).collect()]
+    assert got == [(7, "end_before_start")]
+
+
 @pytest.mark.parametrize("past_ms, fires", [(0, False), (1, True)])
 def test_expiry_is_strictly_behind_the_watermark(spark, tmp_path, past_ms,
                                                  fires):
