@@ -12,16 +12,13 @@ G2 ``conv_state_final``: the final snapshot per conversation = grouped
 counters + last sizes, built from the one GcState aggregate that the
 snapshot stream (``streaming/state_stream.py``) shares. It is a
 partial/merge/finalize triple: ``gc_state_rows`` turns each assembled pause
-into a one-event partial, ``gc_state_merge`` merges partials per key (the
-counters add, the heap and the generation sizes follow their newest offset)
-and ``gc_state_finalize`` exposes the GcState; ``gc_state_partial`` is the
-merge of the rows by the partial's keys.
-Implemented as a *salted two-phase aggregation* (the partial groups on
-(conv_id, salt), the merge re-aggregates per conv_id) to defuse the
-hot-conv skew the north rule calls out. For algebraic aggs Spark's
-map-side partial aggregation already bounds per-key work; the salted shape
-matters once holistic aggs (exact percentiles, collect_*) enter, and it keeps
-reducer-side hash tables balanced under extreme key skew.
+into a one-event partial, ``gc_state_merge`` merges partials per
+``conv_id`` (the counters add, the heap and the generation sizes follow
+their newest offset) and ``gc_state_finalize`` exposes the GcState. The
+batch final state runs the same three calls as each stream generation.
+Every merge aggregate is algebraic (``sum``, ``max``, ``max_by``), so
+Spark's map-side partial aggregation already bounds the hot
+conversation's work: one shuffle on ``conv_id``, no salt.
 
 G3 rollups (target-only): per-time-bucket turn counts, pause-duration
 histograms, exact p99 latency.
@@ -35,7 +32,7 @@ does increment it (tested, mirroring ``GcStateFlowTest.scala:86-100``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.grammar import sql_str
@@ -51,8 +48,6 @@ COUNTERS = {
 }
 
 GEN_COLS = ["eden_after", "survivor_after", "old_after", "humongous_after"]
-
-_KEY = ("conv_id",)
 
 
 def _unless_remark(value: str) -> str:
@@ -97,37 +92,25 @@ _FINAL = [
 ]
 
 
-def _salt(n_salts: int) -> Column:
-    # deterministic spreading key; any per-row value works, hash keeps it
-    # uniform even if turn/event ids cluster
-    return F.expr(f"pmod(xxhash64(event_id), {n_salts})")
-
-
 def conv_state_scan(assembled: DataFrame) -> DataFrame:
     """G1: one cumulative GcState row per assembled event (prefix scan)."""
     return assembled.selectExpr(*_SCAN)
 
 
-def gc_state_rows(assembled: DataFrame, *keys: str) -> DataFrame:
-    """Each assembled pause as a one-event partial GcState, keyed by
-    ``keys`` (default ``conv_id``): its counter, its offset as
-    ``time_offset_ms``, its heap, its generation sizes and, unless it is a
-    Remark, its offset again as ``_max_nr_off`` — Remark updates the heap
-    but keeps the generation sizes (``GcStateFlow.scala:28-29``)."""
-    return assembled.selectExpr(*(keys or _KEY), *_ROW)
+def gc_state_rows(assembled: DataFrame) -> DataFrame:
+    """Each assembled pause as a one-event partial GcState keyed by
+    ``conv_id``: its counter, its offset as ``time_offset_ms``, its heap, its
+    generation sizes and, unless it is a Remark, its offset again as
+    ``_max_nr_off`` — Remark updates the heap but keeps the generation sizes
+    (``GcStateFlow.scala:28-29``)."""
+    return assembled.selectExpr("conv_id", *_ROW)
 
 
-def gc_state_merge(partials: DataFrame, *keys: str) -> DataFrame:
-    """partial ⊕ partial per ``keys`` (default ``conv_id``): counters add;
-    heap follows max ``time_offset_ms``; generation sizes follow max
-    ``_max_nr_off`` (a Remark-only partial's null key never wins)."""
-    return partials.groupBy(*(keys or _KEY)).agg(*map(F.expr, _MERGE))
-
-
-def gc_state_partial(assembled: DataFrame, *keys: str) -> DataFrame:
-    """Mergeable partial GcState per ``keys`` (``conv_id`` first): the merge
-    of the events' ``gc_state_rows``."""
-    return gc_state_merge(gc_state_rows(assembled, *keys), *keys)
+def gc_state_merge(partials: DataFrame) -> DataFrame:
+    """partial ⊕ partial per ``conv_id``: counters add; heap follows max
+    ``time_offset_ms``; generation sizes follow max ``_max_nr_off`` (a
+    Remark-only partial's null key never wins)."""
+    return partials.groupBy("conv_id").agg(*map(F.expr, _MERGE))
 
 
 def gc_state_finalize(state: DataFrame) -> DataFrame:
@@ -137,11 +120,8 @@ def gc_state_finalize(state: DataFrame) -> DataFrame:
 
 
 def conv_state_final(assembled: DataFrame) -> DataFrame:
-    """G2: final GcState per conversation via salted two-phase aggregation."""
-    salted = assembled.withColumn("_salt", _salt(16))
-    return gc_state_finalize(
-        gc_state_merge(gc_state_partial(salted, "conv_id", "_salt"))
-    )
+    """G2: final GcState per conversation, finalize ∘ merge ∘ rows."""
+    return gc_state_finalize(gc_state_merge(gc_state_rows(assembled)))
 
 
 def conv_state_json(conv_state: DataFrame) -> DataFrame:

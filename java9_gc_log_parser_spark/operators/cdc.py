@@ -41,13 +41,12 @@ def snapshot_diff(
     new: DataFrame,
     key: str = "doc_id",
     compare_cols: tuple[str, ...] = ("text",),
-    emit_unchanged: bool = False,
 ) -> DataFrame:
     """Change set between two snapshots keyed by ``key``.
 
     Returns one row per changed key: ``(key, change_type, old_fp, new_fp)``
-    with ``change_type`` in ``{'added', 'deleted', 'updated'}`` (plus
-    ``'unchanged'`` when ``emit_unchanged``). The fingerprint is md5 over
+    with ``change_type`` in ``{'added', 'deleted', 'updated'}``; unchanged
+    keys are dropped. The fingerprint is md5 over
     the ``compare_cols`` concatenation (NUL-separated so column boundaries
     can't alias) — engine-portable, so an external system (or the DuckDB
     oracle) can recompute it from the raw snapshots.
@@ -55,17 +54,17 @@ def snapshot_diff(
     fp = F.md5(F.concat_ws("\x00", *[F.col(c) for c in compare_cols]))
     o = old.select(F.col(key), fp.alias("old_fp"))
     n = new.select(F.col(key), fp.alias("new_fp"))
-    joined = o.join(n, key, "full_outer")
+    changed = o.join(n, key, "full_outer").filter(
+        ~F.col("old_fp").eqNullSafe(F.col("new_fp"))
+    )
     change = (
         F.when(F.col("old_fp").isNull(), F.lit("added"))
         .when(F.col("new_fp").isNull(), F.lit("deleted"))
-        .when(F.col("old_fp") != F.col("new_fp"), F.lit("updated"))
-        .otherwise(F.lit("unchanged"))
+        .otherwise(F.lit("updated"))
     )
-    out = joined.select(F.col(key), change.alias("change_type"), "old_fp", "new_fp")
-    if not emit_unchanged:
-        out = out.filter(F.col("change_type") != "unchanged")
-    return out
+    return changed.select(
+        F.col(key), change.alias("change_type"), "old_fp", "new_fp"
+    )
 
 
 def synth_mutated_snapshot(docs: DataFrame, salt: str = "snap2") -> DataFrame:

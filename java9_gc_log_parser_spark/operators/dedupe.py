@@ -33,7 +33,7 @@ per hash/bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from itertools import count
@@ -478,22 +478,24 @@ def star_contract(
     ``(id, label)`` DataFrame mapping every paired node to its component
     minimum, plus the round count actually used.
 
-    Contrast with min-label propagation (``dedup_clusters`` default): label
-    propagation needs rounds = component DIAMETER — fine for blob-shaped
-    near-dup clusters, O(n) for a chain-shaped duplicate graph (iteratively
-    edited boilerplate where version i only resembles version i±1). The
-    alternating contraction halves tree heights each round: O(log n) rounds
-    on a path graph (property-tested on a 1,000-node path), at ~2x the
-    per-round cost (two join+agg passes instead of one).
+    Min-label propagation would need rounds = component DIAMETER: O(n) for
+    a chain-shaped duplicate graph (iteratively edited boilerplate where
+    version i only resembles version i±1). The alternating contraction
+    halves tree heights each round: O(log n) rounds on a path graph
+    (property-tested on a 1,000-node path).
 
     Per-round shape: each star op is one hash agg (min per node) + one
-    equi-join on u — same shuffle count as a label-prop round, over an edge
-    set that only shrinks (star ops never add edges beyond the node count).
+    equi-join on u, over an edge set that only shrinks (star ops never add
+    edges beyond the node count).
     Rounds are localCheckpoint()ed for lineage truncation; convergence is
     detected by an (edge-count, hash-sum) signature of the checkpointed edge
     set — one tiny agg job per round, no exceptAll shuffle. (A 64-bit
     hash-sum tie at equal counts on *different* edge sets is a ~2^-64
     event; the signature is over already-materialized data.)
+
+    Raises ``RuntimeError`` when ``max_iter`` rounds pass without
+    convergence, rather than returning labels that are not yet component
+    minima.
     """
     edges = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
@@ -520,6 +522,10 @@ def star_contract(
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(
+            f"star contraction did not converge in {max_iter} rounds"
+        )
     # converged star forest: edges point child -> component root
     labels = edges.select(F.col("u").alias("id"), F.col("v").alias("label"))
     roots = edges.select(F.col("v").alias("id")).distinct().withColumn(
@@ -529,11 +535,7 @@ def star_contract(
 
 
 def dedup_clusters(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 20,
-    method: str = "label_prop",
+    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Resolve near-dup *pairs* into duplicate *clusters* and a keep-list.
 
@@ -545,84 +547,19 @@ def dedup_clusters(
     (its own id for singletons) and ``keep`` marks the canonical
     representative — ``filter(keep)`` IS the deduplicated corpus.
 
-    Algorithm (``method="label_prop"``, default): distributed min-label
-    propagation over the undirected pair graph — per round, every node takes
-    the min label across itself and its neighbors (one equi-join + one hash
-    groupBy = two shuffles per round), until a fixpoint. Rounds needed =
-    component diameter, small by construction for near-dup clusters (dense
-    blobs around shared content). ``method="star"`` switches to the
-    alternating large-star/small-star contraction (:func:`star_contract`) —
-    O(log n) rounds on chain-shaped duplicate graphs at ~2x the per-round
-    cost; identical output (property-tested).
+    Components come from the alternating large-star/small-star contraction
+    (:func:`star_contract`): O(log n) rounds even on chain-shaped duplicate
+    graphs.
 
     Scale notes (100 TB): the edge set is tiny relative to the corpus (only
-    docs with a near-dup appear), and iteration state is one (id, label) row
-    per *paired* doc — the full corpus joins in exactly once, at the end.
+    docs with a near-dup appear), and iteration state is one edge per
+    *paired* doc — the full corpus joins in exactly once, at the end.
     Each round's result is localCheckpoint()ed: without lineage truncation
     round i replans rounds 0..i-1 (quadratic driver/optimizer work and a
     re-execution cliff on any retry); on a multi-tenant cluster prefer
     reliable checkpoint(dir) for executor-loss resilience.
     """
-    if method == "star":
-        star_labels, _rounds = star_contract(pairs, max_iter)
-        out = docs.select(id_col).join(
-            star_labels.withColumnRenamed("id", id_col), id_col, "left"
-        )
-        cluster = F.coalesce(F.col("label"), F.col(id_col))
-        return out.select(
-            F.col(id_col),
-            cluster.alias("cluster_id"),
-            (cluster == F.col(id_col)).alias("keep"),
-        )
-    if method != "label_prop":
-        raise ValueError(f"unknown method {method!r}")
-    spark = docs.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = (
-        fwd.unionByName(
-            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .repartition(n_parts, "src")
-        .localCheckpoint(eager=True)
-    )
-
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .repartition(n_parts, "id")
-        .localCheckpoint(eager=True)
-    )
-    for i in range(max_iter):
-        prop = edges.join(
-            labels.withColumnRenamed("id", "src"), "src"
-        ).select(F.col("dst").alias("id"), "label")
-        nbr = prop.groupBy("id").agg(F.min("label").alias("_nbr"))
-        # min over self + neighbors == least(own, min-neighbor); the
-        # convergence check piggybacks on the checkpoint's job via an
-        # Observation instead of costing a separate join + count action
-        # per round (half the driver round-trips per iteration)
-        obs = Observation(f"cc_changed_{id(edges)}_{i}")
-        new_labels = (
-            labels.join(nbr, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("_nbr"), F.col("label"))
-                ).alias("label"),
-                (F.coalesce(F.col("_nbr"), F.col("label"))
-                 < F.col("label")).alias("_chg"),
-            )
-            .observe(obs, F.sum(F.col("_chg").cast("long")).alias("n"))
-            .drop("_chg")
-            .localCheckpoint(eager=True)
-        )
-        labels = new_labels
-        if int(obs.get["n"] or 0) == 0:
-            break
-
+    labels, _rounds = star_contract(pairs)
     out = docs.select(id_col).join(
         labels.withColumnRenamed("id", id_col), id_col, "left"
     )
@@ -680,7 +617,6 @@ def incremental_dedup(
     k: int = 32,
     threshold: float = 0.4,
     max_bucket: int = 1000,
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """Dedup a NEW batch against a persisted signature store — pure
     signature-space, the base corpus text is never read.
@@ -707,12 +643,10 @@ def incremental_dedup(
     UNION of both sides and degenerate buckets (> max_bucket) dropped
     before any pair is generated, so the candidate join's output stays
     bounded exactly as in :func:`minhash_lsh_pairs`. A daily batch is
-    orders of magnitude smaller than the store, so with
-    ``broadcast_new=True`` (default) the batch's bucket rows broadcast and
-    the store-side scan never shuffles on the bucket key; the only
-    corpus-sized movement is a key-lookup join back to the store's
-    signature rows for the candidates that survive. Set it False when the
-    batch is a backfill comparable to the store. The per-doc best-match
+    orders of magnitude smaller than the store, so the batch's bucket rows
+    broadcast and the store-side scan never shuffles on the bucket key; the
+    only corpus-sized movement is a key-lookup join back to the store's
+    signature rows for the candidates that survive. The per-doc best-match
     window partitions by new doc_id — millions of tiny partitions, no
     global sort (same shape as the tf-idf top-k).
     """
@@ -731,9 +665,8 @@ def incremental_dedup(
     )
     bn = buckets_new.join(sizes, ["band_id", "band_hash"])
     bs = buckets_store.join(sizes, ["band_id", "band_hash"])
-    bn_maybe = F.broadcast(bn) if broadcast_new else bn
     cand_base = (
-        bn_maybe.join(bs, ["band_id", "band_hash"])
+        F.broadcast(bn).join(bs, ["band_id", "band_hash"])
         .select(
             F.col("n.doc_id").alias("new_id"),
             F.col("s.doc_id").alias("match_id"),

@@ -13,14 +13,14 @@ from pyspark.sql import functions as F
 from ..sources.dims import role_dim, tool_dim
 
 
-def enrich(df: DataFrame, with_role: bool = True, with_tool: bool = True) -> DataFrame:
+def enrich(df: DataFrame, with_role: bool = True) -> DataFrame:
     """Left-join role_dim/tool_dim with explicit broadcast hints."""
     spark = df.sparkSession
     columns = df.columns
     out = df
     if with_role and "role" in columns:
         out = out.join(role_dim(spark).hint("broadcast"), "role", "left")
-    if with_tool and "tool" in columns:
+    if "tool" in columns:
         out = out.join(tool_dim(spark).hint("broadcast"), "tool", "left")
     return out
 

@@ -15,10 +15,10 @@ Decode has TWO paths selected per call (r3 verdict task #2):
   (``PIL_AVAILABLE``; probed at import, tests skip cleanly without it).
   Undecodable payloads dead-letter (NULL metadata / dropped), never raise.
 * ``decoder="stub"`` — a clearly-marked DETERMINISTIC STUB
-  (``_fake_decode`` spec): metadata from byte arithmetic, features from the
-  raw byte histogram. The oracled queries (q24/q25/q127) pin this path
-  because their corpus is text bytes, which no real codec accepts; the
-  DuckDB oracles replay its arithmetic exactly.
+  (``decode_and_featurize`` states its arithmetic): metadata from byte
+  arithmetic, features from the raw byte histogram. The oracled queries
+  (q24/q25/q127) pin this path because their corpus is text bytes, which no
+  real codec accepts; the DuckDB oracles replay its arithmetic exactly.
 
 Everything around the codec boundary — schema, batch iteration, Arrow
 transfer, partition-parallel execution, the one-bincount featurization —
@@ -235,33 +235,20 @@ def _decode_image(payload: bytes):
     return None
 
 
-def _fake_decode(payload: bytes, modality: str) -> tuple[int, int, int]:
-    """Deterministic stand-in for a codec: metadata from byte arithmetic.
-
-    width  = 64 + n_bytes % 512
-    height = 64 + (n_bytes * 7) % 512
-    frames = 1 for image, 1 + n_bytes % 240 otherwise.
-
-    Kept as the per-item SPEC of the stub (what a real ``decode(payload)``
-    replaces); the hot kernel below computes the same values column-wise —
-    it never calls this per row.
-    """
-    n = len(payload)
-    width = 64 + n % 512
-    height = 64 + (n * 7) % 512
-    frames = 1 if modality == "image" else 1 + n % 240
-    return width, height, frames
-
-
 def decode_and_featurize(
     assets: DataFrame, feat_dim: int = 8, decoder: str = "stub"
 ) -> DataFrame:
     """mapInPandas decode/feature stage over (asset_id, modality, content).
 
     ``decoder="stub"`` (default): metadata by deterministic byte arithmetic
-    and a raw-byte histogram feature — the engine-replayable path the
-    q24/q25 DuckDB oracles check (their corpus is text bytes, which no real
-    codec accepts, so the oracled queries pin this path explicitly).
+    over ``n = len(payload)`` and a raw-byte histogram feature — the
+    engine-replayable path the q24/q25 DuckDB oracles check (their corpus is
+    text bytes, which no real codec accepts, so the oracled queries pin this
+    path explicitly)::
+
+        width    = 64 + n % 512
+        height   = 64 + (n * 7) % 512
+        n_frames = 1 for image, 1 + n % 240 otherwise
 
     ``decoder="real"``: decode each payload as a still image through
     ``_decode_image`` (pure-Python PPM + 8-bit PNG always; JPEG etc. where PIL
@@ -279,7 +266,7 @@ def decode_and_featurize(
     arithmetic on the length vector, and the per-asset byte histogram is
     ONE concatenated buffer + ONE segment-offset bincount for the whole
     Arrow batch — O(1) numpy calls per batch, no per-row Python loop (the
-    r2-verdict defect: per-content ``np.frombuffer`` + ``_fake_decode`` in
+    r2-verdict defect: a per-content ``np.frombuffer`` + per-item decode in
     a list comprehension was O(rows) interpreter work per batch).
     """
     import numpy as np

@@ -19,8 +19,9 @@ the 4-hex-char fold is exactly uniform over positions.
 
 Scale notes (100 TB):
   * the bitmap is <= m_bits distinct positions built from the TINY side
-    (one explode + distinct over |keys| * k rows) and broadcast as one
-    sorted int array — a few KB however large the fact side is.
+    (one explode + distinct over |keys| * k rows), packed into m_bits/64
+    longs (``packed_bloom``) and broadcast as one row — a few KB however
+    large the fact side is.
   * probing is a map-only expression (F.forall over a k-element array): no
     shuffle, no state; rows failing the bloom never reach the exact
     verification join.
@@ -43,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["bloom_positions", "bloom_bits", "bloom_prune_audit"]
+__all__ = ["bloom_positions", "packed_bloom", "bloom_prune_audit"]
 
 #: default geometry: 4096-bit filter, 4 hashes — for |keys| = n the FPR is
 #: ~(1 - e^(-4n/4096))^4 (≈0.24% at n=64, ≈2.4% at n=256).
@@ -74,23 +75,6 @@ def bloom_positions(
         % m_bits
         for r in range(k)
     ]
-
-
-def bloom_bits(
-    keys: DataFrame, key: str, k: int = BLOOM_K, m_bits: int = BLOOM_M_BITS
-) -> DataFrame:
-    """The set bit positions as a one-row DataFrame ``(_bits: array<int>)``.
-
-    Built from the tiny key side: explode k positions per key, distinct,
-    collect into ONE sorted array (<= m_bits ints) — the broadcastable
-    bitmap.
-    """
-    pos = bloom_positions(F.col(key), k, m_bits)
-    return (
-        keys.select(F.explode(F.array(*pos)).alias("pos"))
-        .distinct()
-        .agg(F.sort_array(F.collect_set("pos")).alias("_bits"))
-    )
 
 
 def packed_bloom(

@@ -28,9 +28,9 @@ action: ``convs`` is its row count, and ``events`` is the growth of its
 counters' total over the committed heartbeats (each ok event bumps exactly
 one counter).
 
-Batch sizing note: micro-batches are bounded (maxFilesPerTrigger), so the
-batch's events need no salting; the merge touches one row per conv of the
-previous generation and one per ok event of the batch.
+Batch sizing note: micro-batches are bounded (maxFilesPerTrigger); the
+merge touches one row per conv of the previous generation and one per ok
+event of the batch.
 """
 
 from __future__ import annotations

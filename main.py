@@ -45,6 +45,8 @@ def main(argv: list[str] | None = None) -> None:
     ):
         p.error("--input is required for --mode batch and for a checkpoint "
                 "run with no committed batch")
+    if args.mode == "synth" and not args.sf_dir:
+        p.error("--sf-dir is required for --mode synth")
 
     from java9_gc_log_parser_spark.session import get_spark
 

@@ -104,14 +104,15 @@ def test_final_state_matches_scan_tail(spark):
 
 
 def test_merge_of_split_partials_equals_final_state(spark):
-    """finalize(merge(partial(a) ∪ partial(b))) == conv_state_final(a ∪ b)
+    """finalize(merge(merge(rows(a)) ∪ merge(rows(b)))) ==
+    conv_state_final(a ∪ b)
     when a conversation's latest event is a Remark in one half and its
     latest generation sizes live in the other: the heap crosses the merge
     from one side, the generation sizes from the other."""
     from java9_gc_log_parser_spark.operators.aggregate import (
         gc_state_finalize,
         gc_state_merge,
-        gc_state_partial,
+        gc_state_rows,
     )
 
     a = [
@@ -127,8 +128,8 @@ def test_merge_of_split_partials_equals_final_state(spark):
     ]
     da, db = (spark.createDataFrame(h, SCHEMA) for h in (a, b))
     merged = gc_state_finalize(gc_state_merge(
-        gc_state_partial(da, "conv_id").unionByName(
-            gc_state_partial(db, "conv_id"))
+        gc_state_merge(gc_state_rows(da)).unionByName(
+            gc_state_merge(gc_state_rows(db)))
     ))
     got = {r.conv_id: r for r in merged.collect()}
     want = {r.conv_id: r for r in conv_state_final(da.unionByName(db)).collect()}

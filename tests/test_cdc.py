@@ -20,22 +20,11 @@ def _snap(spark, rows):
 def test_snapshot_diff_classifies_all_change_types(spark):
     old = _snap(spark, [(1, "a"), (2, "b"), (3, "c")])
     new = _snap(spark, [(2, "b"), (3, "c2"), (4, "d")])
-    got = {
-        r["doc_id"]: r["change_type"]
-        for r in snapshot_diff(old, new).collect()
-    }
-    assert got == {1: "deleted", 3: "updated", 4: "added"}
-
-
-def test_snapshot_diff_emit_unchanged(spark):
-    old = _snap(spark, [(1, "a"), (2, "b")])
-    new = _snap(spark, [(1, "a"), (2, "b2")])
-    rows = snapshot_diff(old, new, emit_unchanged=True).collect()
+    rows = snapshot_diff(old, new).collect()
     got = {r["doc_id"]: r["change_type"] for r in rows}
-    assert got == {1: "unchanged", 2: "updated"}
+    assert got == {1: "deleted", 3: "updated", 4: "added"}
     fps = {r["doc_id"]: (r["old_fp"], r["new_fp"]) for r in rows}
-    assert fps[1][0] == fps[1][1]
-    assert fps[2][0] != fps[2][1] and None not in fps[2]
+    assert fps[3][0] != fps[3][1] and None not in fps[3]
 
 
 def test_snapshot_diff_multi_column_fingerprint(spark):

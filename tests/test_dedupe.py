@@ -230,6 +230,10 @@ def _clusters(spark, docs_rows, pairs_rows):
     }
 
 
+def _path_pairs(spark, n):
+    return spark.range(n - 1).selectExpr("id AS doc_a", "id + 1 AS doc_b")
+
+
 def test_dedup_clusters_transitive_chain(spark):
     """A~B and B~C must land A,B,C in one cluster even though A~C was never
     emitted; the min id is canonical; untouched docs are their own keepers."""
@@ -242,9 +246,11 @@ def test_dedup_clusters_transitive_chain(spark):
 
 
 def test_dedup_clusters_two_components_and_long_chain(spark):
-    """Chain 0-1-2-3-4 (diameter > 1 round) + disjoint pair 10-11."""
+    """Chain 0-1-2-3-4 (diameter > 1 round) with a triangle 0-1-2 and a
+    reversed duplicate edge + disjoint pair 10-11."""
     rows = [(i, "s", f"doc {i}") for i in [0, 1, 2, 3, 4, 10, 11, 12]]
-    got = _clusters(spark, rows, [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11)])
+    got = _clusters(spark, rows, [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11),
+                                  (0, 2), (1, 0)])
     assert {k: v[0] for k, v in got.items()} == {
         0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 10: 10, 11: 10, 12: 12,
     }
@@ -268,10 +274,7 @@ def test_star_contract_path_graph_olog_rounds(spark):
     from java9_gc_log_parser_spark.operators.dedupe import star_contract
 
     n = 1000
-    pairs = spark.range(n - 1).selectExpr(
-        "id AS doc_a", "id + 1 AS doc_b"
-    )
-    labels, rounds = star_contract(pairs, max_iter=25)
+    labels, rounds = star_contract(_path_pairs(spark, n), max_iter=25)
     # Kiveris et al. bound: O(log^2 n) worst case, ~log2(n) in practice;
     # anything near the 999-round diameter means the contraction is broken
     assert rounds <= 15, rounds
@@ -280,29 +283,26 @@ def test_star_contract_path_graph_olog_rounds(spark):
     assert set(got.values()) == {0}
 
 
-def test_dedup_clusters_star_equals_label_prop(spark):
-    """Both methods are the same operator contract: identical
-    (cluster_id, keep) output on a mixed graph (two blobs + a chain +
-    singletons)."""
+def test_dedup_clusters_long_chain_is_one_cluster(spark):
+    """A 30-node path is one component whatever its diameter: every node's
+    cluster_id is 0 and only node 0 is kept."""
     from java9_gc_log_parser_spark.operators.dedupe import dedup_clusters
 
-    rows = [(i, "s", f"doc {i}") for i in range(12)]
-    docs = _docs(spark, rows)
-    pairs = spark.createDataFrame(
-        # blob {0,1,2} (triangle), chain 3-4-5-6, pair (8,9), dup edge, rev
-        [(0, 1), (1, 2), (0, 2), (3, 4), (4, 5), (5, 6), (8, 9), (1, 0)],
-        "doc_a long, doc_b long",
-    )
-    lp = {
+    n = 30
+    docs = _docs(spark, [(i, "s", f"doc {i}") for i in range(n)])
+    got = {
         r["doc_id"]: (r["cluster_id"], r["keep"])
-        for r in dedup_clusters(docs, pairs, method="label_prop").collect()
+        for r in dedup_clusters(docs, _path_pairs(spark, n)).collect()
     }
-    st = {
-        r["doc_id"]: (r["cluster_id"], r["keep"])
-        for r in dedup_clusters(docs, pairs, method="star").collect()
-    }
-    assert lp == st
-    assert lp[3] == (3, True) and lp[6] == (3, False) and lp[11] == (11, True)
+    assert got == {i: (0, i == 0) for i in range(n)}
+
+
+def test_star_contract_raises_when_not_converged(spark):
+    """Running out of rounds is an error, never a silent partial labelling."""
+    from java9_gc_log_parser_spark.operators.dedupe import star_contract
+
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        star_contract(_path_pairs(spark, 30), max_iter=1)
 
 
 # ---------------------------------------------------------------------------
@@ -366,13 +366,8 @@ def test_incremental_dedup_broadcast_paths_agree_and_plan(spark):
     )
 
     base, new = _incr_fixture(spark)
-    ns, ss = signature_table(new), signature_table(base)
-    a = incremental_dedup(ns, ss, broadcast_new=True)
-    b = incremental_dedup(ns, ss, broadcast_new=False)
-    pa = a.toPandas().sort_values("doc_id").reset_index(drop=True)
-    pb = b.toPandas().sort_values("doc_id").reset_index(drop=True)
-    assert pa.equals(pb)
-    plan = a._jdf.queryExecution().executedPlan().toString()
+    out = incremental_dedup(signature_table(new), signature_table(base))
+    plan = out._jdf.queryExecution().executedPlan().toString()
     # the batch side broadcasts into the store-side candidate join; no
     # cartesian product, no Python eval anywhere
     assert "BroadcastHashJoin" in plan

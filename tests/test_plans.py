@@ -122,7 +122,7 @@ def test_route_stage_is_fully_jvm_side(spark, sf_dir):
 
 
 def test_assembly_and_state_aggs_are_hash_based(spark, sf_dir):
-    """Assembly groupBy + salted G2 agg plan as HashAggregate, never
+    """Assembly groupBy + G2 agg plan as HashAggregate, never
     SortAggregate (string max_by buffers would silently force a full
     per-partition sort of the biggest table — see assemble.py scale note)."""
     from java9_gc_log_parser_spark.functions.parse import parse_lines
@@ -139,6 +139,26 @@ def test_assembly_and_state_aggs_are_hash_based(spark, sf_dir):
     plan = _formatted(conv_state_final(assembled))
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
+
+
+def test_conv_state_final_shuffles_once(spark):
+    """G2 is one merge per conv_id over one-event partials: one hash
+    exchange, with map-side partial aggregation before it."""
+    from java9_gc_log_parser_spark.operators.aggregate import conv_state_final
+
+    assembled = spark.range(1000).selectExpr(
+        "concat('conv-', CAST(id % 7 AS STRING)) AS conv_id",
+        "CAST(id AS INT) AS event_id",
+        "IF(id % 3 = 0, 'Young', 'Remark') AS pause_type",
+        "id AS offset_ms",
+        "id AS heap_after",
+        "1024L AS heap_total",
+        *[f"id AS {c}" for c in
+          ("eden_after", "survivor_after", "old_after", "humongous_after")],
+    )
+    plan = conv_state_final(assembled)._jdf.queryExecution(
+    ).executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 @pytest.mark.parametrize("sink", ["pause_events", "tool_calls"])

@@ -3,8 +3,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from java9_gc_log_parser_spark.operators.runtime_filter import (
-    bloom_bits,
     bloom_prune_audit,
+    packed_bloom,
 )
 
 
@@ -30,12 +30,13 @@ def test_bloom_no_false_negatives(spark):
 
 def test_bloom_bits_bounded_and_deterministic(spark):
     keys = _keys(spark, [f"k{i}" for i in range(20)])
-    a = bloom_bits(keys, "k").collect()[0]._bits
-    b = bloom_bits(keys, "k").collect()[0]._bits
-    assert a == b  # pure function of the key set
-    assert 1 <= len(a) <= 20 * 4
-    assert all(0 <= p < 4096 for p in a)
-    assert a == sorted(a)
+    a = packed_bloom(keys, "k").collect()[0]
+    b = packed_bloom(keys, "k").collect()[0]
+    assert a._words == b._words  # pure function of the key set
+    assert len(a._words) == 4096 // 64
+    assert 1 <= a._n_bits <= min(20 * 4, 4096)
+    assert a._n_bits == sum(bin(w & (1 << 64) - 1).count("1")
+                            for w in a._words)
 
 
 def test_bloom_disjoint_keys_rarely_pass(spark):

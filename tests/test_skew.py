@@ -6,11 +6,10 @@ names hot conv_id skew explicitly. These tests build a standalone fixture
 where ONE conversation holds 10% of all rows and measure that the two
 skew-exposed aggregation shapes hold their documented bounds:
 
-  * ``conv_state_final`` (aggregate.py): the salted two-phase agg must
-    split the hot key across all salt values, so no single phase-1 group —
-    the reducer-side hash-table unit — ever holds more than ~1/n_salts of
-    the hot rows. Correctness under the split is cross-checked against a
-    direct unsalted computation.
+  * ``conv_state_final`` (aggregate.py): every merge aggregate is
+    algebraic, so map-side partial aggregation bounds the hot key's
+    reducer-side work; its result for the hot conversation is cross-checked
+    against a direct aggregation.
   * ``sessionize`` (aggregate.py): a window PARTITION BY conv_id cannot be
     salted (session numbering needs the whole conversation in order); the
     documented mitigation is O(1) per-row window state + one shared
@@ -49,34 +48,9 @@ def _skewed_assembled(spark):
     )
 
 
-def test_salted_phase1_spreads_hot_conv(spark):
-    """Phase 1 of conv_state_final groups on (conv_id, salt): the hot conv's
-    rows must land in EVERY salt bucket with a measured max/mean ratio close
-    to 1 — the bound that keeps one reducer hash-table entry from absorbing
-    the whole hot key."""
-    from java9_gc_log_parser_spark.operators.aggregate import _salt
-
-    n_salts = 16
-    df = _skewed_assembled(spark)
-    groups = (
-        df.withColumn("_salt", _salt(n_salts))
-        .groupBy("conv_id", "_salt")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("conv_id") == "conv-hot")
-        .collect()
-    )
-    hot_total = sum(r["n"] for r in groups)
-    assert hot_total == int(N_ROWS * HOT_FRAC)
-    assert len(groups) == n_salts  # every salt value hit
-    mean = hot_total / n_salts
-    worst = max(r["n"] for r in groups)
-    # xxhash64 over sequential event_ids is near-uniform; 1.25x headroom
-    assert worst <= 1.25 * mean, (worst, mean)
-
-
-def test_salted_final_state_correct_under_skew(spark):
-    """The two-phase result for the hot conv must equal a direct unsalted
-    aggregation — the salt can spread work but never change the answer."""
+def test_final_state_correct_under_skew(spark):
+    """The hot conv's final state must equal a direct aggregation over its
+    rows."""
     from java9_gc_log_parser_spark.operators.aggregate import (
         COUNTERS,
         conv_state_final,
