@@ -152,7 +152,7 @@ def q17_fingerprint(spark, sf_dir):
 def q18_ngram_jaccard(spark, sf_dir):
     from java9_gc_log_parser_spark.operators.dedupe import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(_docs(spark, sf_dir), n=1, threshold=0.5)
+    return ngram_jaccard_pairs(_docs(spark, sf_dir))
 
 
 def q19_ann_bruteforce(spark, sf_dir):
@@ -584,7 +584,7 @@ def q25_frame_sample(spark, sf_dir):
     )
 
     feats = decode_and_featurize(documents_as_assets(_docs(spark, sf_dir)))
-    return frame_sample(feats, every_n=30)
+    return frame_sample(feats)
 
 
 def q29_dedup_clusters(spark, sf_dir):
@@ -598,7 +598,7 @@ def q29_dedup_clusters(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir)
-    return dedup_clusters(docs, ngram_jaccard_pairs(docs, n=1, threshold=0.5))
+    return dedup_clusters(docs, ngram_jaccard_pairs(docs))
 
 
 def q30_hash_split(spark, sf_dir):
@@ -686,14 +686,14 @@ def q37_sessionize(spark, sf_dir):
     """Gap-based sessionization of the transcripts (idle > 1h splits)."""
     from java9_gc_log_parser_spark.operators.aggregate import sessionize
 
-    return sessionize(synth_transcripts(spark, sf_dir), gap_s=3600)
+    return sessionize(synth_transcripts(spark, sf_dir))
 
 
 def q38_stratified_sample(spark, sf_dir):
     """Exact per-source quota sample (10 docs/source by stable hash order)."""
     from java9_gc_log_parser_spark.operators.sampling import stratified_sample
 
-    return stratified_sample(_docs(spark, sf_dir), "source", 10).select(
+    return stratified_sample(_docs(spark, sf_dir)).select(
         "doc_id", "source"
     )
 
@@ -756,7 +756,7 @@ def q44_semdedup(spark, sf_dir):
     member closest to its centroid per duplicate pair."""
     from java9_gc_log_parser_spark.operators.clustering import semdedup
 
-    return semdedup(_embs(spark, sf_dir), k=4, iters=2, threshold=0.3)
+    return semdedup(_embs(spark, sf_dir))
 
 
 def q45_shard_manifest(spark, sf_dir):
@@ -764,7 +764,7 @@ def q45_shard_manifest(spark, sf_dir):
     manifest (doc count, token sum, id range)."""
     from java9_gc_log_parser_spark.operators.sampling import shard_manifest
 
-    return shard_manifest(_docs(spark, sf_dir), n_shards=8)
+    return shard_manifest(_docs(spark, sf_dir))
 
 
 def q46_zipf_topk(spark, sf_dir):
@@ -867,7 +867,7 @@ def q50_curation_e2e(spark, sf_dir):
 
     # stage 3: near-dup cluster resolution, keep canonical members
     clusters = dedup_clusters(
-        docs2, ngram_jaccard_pairs(docs2, n=1, threshold=0.5)
+        docs2, ngram_jaccard_pairs(docs2)
     )
     docs3 = docs2.join(
         clusters.filter(F.col("keep")).select("doc_id"), "doc_id"
@@ -890,7 +890,7 @@ def q50_curation_e2e(spark, sf_dir):
         ).otherwise(F.lit(1.0))
     )
     picked = mixture_sample(docs4, w, token_budget=10000.0).select("doc_id")
-    return shard_manifest(docs4.join(picked, "doc_id"), n_shards=8)
+    return shard_manifest(docs4.join(picked, "doc_id"))
 
 
 def q56_pack_sequences(spark, sf_dir):
@@ -917,7 +917,7 @@ def q58_dup_ngram_gate(spark, sf_dir):
     at least one other document."""
     from java9_gc_log_parser_spark.operators.dedupe import dup_ngram_gate
 
-    return dup_ngram_gate(_docs(spark, sf_dir), n=3, max_dup_frac=0.3)
+    return dup_ngram_gate(_docs(spark, sf_dir))
 
 
 def q59_bucketed_join(spark, sf_dir):
@@ -1182,7 +1182,6 @@ def q65_quantile_sketch(spark, sf_dir):
             F.floor("duration_ms").cast("long").alias("duration_ms_int")
         ),
         "duration_ms_int",
-        q=0.99,
     )
 
 
@@ -1336,7 +1335,7 @@ def q70_canonical_select(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir)
-    clusters = dedup_clusters(docs, ngram_jaccard_pairs(docs, n=1, threshold=0.5))
+    clusters = dedup_clusters(docs, ngram_jaccard_pairs(docs))
     scored = quality_score(docs).select("doc_id", "quality_score")
     return canonical_select(clusters, scored)
 
@@ -1351,7 +1350,7 @@ def q71_dup_span_scrub(spark, sf_dir):
     end-to-end (clean_text is value-hashed, so reassembly order matters)."""
     from java9_gc_log_parser_spark.operators.dedupe import dup_span_scrub
 
-    return dup_span_scrub(_docs(spark, sf_dir), n=5, min_docs=2)
+    return dup_span_scrub(_docs(spark, sf_dir))
 
 
 def q72_incremental_refresh(spark, sf_dir):
@@ -1521,7 +1520,7 @@ def q78_containment_dedup(spark, sf_dir):
     containment from raw text, no hash seam."""
     from java9_gc_log_parser_spark.operators.dedupe import containment_pairs
 
-    return containment_pairs(_docs(spark, sf_dir), n=3, df_max=5, threshold=0.6)
+    return containment_pairs(_docs(spark, sf_dir))
 
 
 def _tpch(spark, sf_dir, name):
@@ -1582,14 +1581,7 @@ def q82_gapfill_locf(spark, sf_dir):
     order-independent exact-integer sum divided in a fixed op order."""
     from java9_gc_log_parser_spark.operators.timeseries import gapfill_locf
 
-    return gapfill_locf(
-        _events(spark, sf_dir),
-        key="user_id",
-        ts="ts",
-        value="value",
-        bucket_us=21_600_000_000,
-        max_fill=8,
-    )
+    return gapfill_locf(_events(spark, sf_dir))
 
 
 def q83_chunk_sliding(spark, sf_dir):
@@ -1601,7 +1593,7 @@ def q83_chunk_sliding(spark, sf_dir):
     the oracle reproduces from the raw text."""
     from java9_gc_log_parser_spark.operators.sampling import chunk_sliding
 
-    return chunk_sliding(_docs(spark, sf_dir), window=64, stride=48)
+    return chunk_sliding(_docs(spark, sf_dir))
 
 
 def q84_weighted_sample(spark, sf_dir):
@@ -1627,7 +1619,7 @@ def q85_corpus_overlap(spark, sf_dir):
         corpus_overlap_minhash,
     )
 
-    return corpus_overlap_minhash(_docs(spark, sf_dir), k=64, shingle_n=3)
+    return corpus_overlap_minhash(_docs(spark, sf_dir))
 
 
 def q86_zorder_layout(spark, sf_dir):
@@ -1806,7 +1798,7 @@ def q95_pagerank(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     n = docs.count()
-    edges = synth_citation_edges(docs, n_nodes=n, k=2).persist()
+    edges = synth_citation_edges(docs, n_nodes=n).persist()
     return pagerank_fixed(docs.select("doc_id"), edges, n_nodes=n, outdeg=2)
 
 
@@ -1956,7 +1948,7 @@ def q103_triangle_count(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     n = docs.count()
-    return triangle_count(synth_citation_edges(docs, n_nodes=n, k=2))
+    return triangle_count(synth_citation_edges(docs, n_nodes=n))
 
 
 def q104_edit_distance_join(spark, sf_dir):
@@ -1972,7 +1964,7 @@ def q104_edit_distance_join(spark, sf_dir):
     )
 
     titles = _docs(spark, sf_dir).select(
-        "doc_id", normalized_title("text").alias("title")
+        "doc_id", normalized_title().alias("title")
     )
     return edit_distance_join(titles)
 
@@ -2514,7 +2506,7 @@ def q136_rendezvous_reshard(spark, sf_dir):
         reshard_movement_matrix,
     )
 
-    return reshard_movement_matrix(_docs(spark, sf_dir), n_from=8, n_to=10)
+    return reshard_movement_matrix(_docs(spark, sf_dir))
 
 
 def q137_blocking_quality(spark, sf_dir):
@@ -2533,7 +2525,7 @@ def q137_blocking_quality(spark, sf_dir):
     )
 
     titles = _docs(spark, sf_dir).select(
-        "doc_id", normalized_title("text").alias("title")
+        "doc_id", normalized_title().alias("title")
     )
     return blocking_quality_audit(
         titles, max_seg_freq=2,
@@ -2657,7 +2649,6 @@ def q141_stream_index_maintenance(spark, sf_dir):
         im.maintain_index(
             spark, src, embs.schema, out_root,
             cells_rows, cells.schema, books_rows, books.schema,
-            max_files_per_trigger=2,
         )
     return im.read_index(spark, out_root).select(
         F.col("vec_id").cast("long").alias("vec_id"),
@@ -2707,7 +2698,7 @@ def q142_real_decode_audit(spark, sf_dir):
             F.unhex(F.concat(*hex_parts)),
         ).alias("content"),
     )
-    feats = decode_and_featurize(assets, feat_dim=8, decoder="real")
+    feats = decode_and_featurize(assets, decoder="real")
     return feats.select(
         "asset_id",
         "n_bytes",
@@ -2850,7 +2841,7 @@ def q144_real_png_decode_audit(spark, sf_dir):
         F.lit("image").alias("modality"),
         F.unhex(payload_hex).alias("content"),
     )
-    feats = decode_and_featurize(assets, feat_dim=8, decoder="real")
+    feats = decode_and_featurize(assets, decoder="real")
     return feats.select(
         "asset_id",
         "n_bytes",
@@ -2899,7 +2890,7 @@ def q132_score_calibration(spark, sf_dir):
     )
 
     scores = classifier_score(_docs(spark, sf_dir), classifier_weights(spark))
-    return score_calibration(scores, n_buckets=10)
+    return score_calibration(scores)
 
 
 def q133_hll_set_ops(spark, sf_dir):

@@ -87,9 +87,8 @@ SCALE_SMALL = int(os.environ.get("GCLP_BENCH_SCALE_SMALL", "2"))
 SCALE_BIG = int(os.environ.get("GCLP_BENCH_SCALE_BIG", "8"))
 WARMUP_REPLICATE = 2
 
-SINKS = (
-    "pause_events", "tool_calls", "dead_letter", "assembled",
-    "conv_state", "bucket_turns", "bucket_pauses", "dur_histogram",
+from java9_gc_log_parser_spark.plans.pipeline import (  # noqa: E402
+    BATCH_SINKS as SINKS,
 )
 
 

@@ -239,9 +239,10 @@ def _stage(exprs: dict[str, str]) -> list[str]:
     return [f"{sql} AS `{name}`" for name, sql in exprs.items()]
 
 
-def parse_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append the wide parse-struct columns to ``df`` (staged cascade; see
-    module expression-shape, execution-mode and driver-cost notes)."""
+def parse_lines(df: DataFrame) -> DataFrame:
+    """Append the wide parse-struct columns to ``df``, parsed from its
+    ``text`` column (staged cascade; see module expression-shape,
+    execution-mode and driver-cost notes)."""
     in_cols = df.columns
     clash = [c for c in in_cols if c.startswith("_")]
     if clash:
@@ -249,7 +250,7 @@ def parse_lines(df: DataFrame, text_col: str = "text") -> DataFrame:
             f"input carries underscore-prefixed column(s) {clash}, reserved "
             "for the staged parse cascade's intermediates; rename them"
         )
-    text = F.col(text_col)
+    text = F.col("text")
 
     # --- stages 1+2: header + body, ONE regex pass ---------------------------
     # regexp_extract runs the engine once per GROUP; instead regexp_replace

@@ -35,7 +35,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.grammar import sql_str
 
 #: GcState counter -> pause type (GcStateFlow.scala:18-29)
 COUNTERS = {
@@ -155,15 +154,15 @@ def conv_state_json(conv_state: DataFrame) -> DataFrame:
     return conv_state.select("conv_id", F.to_json(st).alias("state_json"))
 
 
-def bucket_turn_counts(transcripts: DataFrame, bucket: str = "hour") -> DataFrame:
-    """G3a: turns per time bucket (map-side combinable; AQE handles skew)."""
+def bucket_turn_counts(transcripts: DataFrame) -> DataFrame:
+    """G3a: turns per hour (map-side combinable; AQE handles skew)."""
     return transcripts.groupBy(
-        F.expr(f"date_trunc({sql_str(bucket)}, ts) AS bucket")
+        F.expr("date_trunc('hour', ts) AS bucket")
     ).agg(F.expr("count(1) AS turn_count"))
 
 
-def bucket_pause_stats(assembled: DataFrame, bucket: str = "hour") -> DataFrame:
-    """G3b: per-bucket pause count, mean and exact p99 duration.
+def bucket_pause_stats(assembled: DataFrame) -> DataFrame:
+    """G3b: per-hour pause count, mean and exact p99 duration.
 
     Exactness contract: durations carry exactly 3 decimals, so the mean
     is SUM(exact milli BIGINT) / (1000 * count) — a deterministic double
@@ -178,7 +177,7 @@ def bucket_pause_stats(assembled: DataFrame, bucket: str = "hour") -> DataFrame:
         assembled.selectExpr(
             "*", "CAST(round(duration_ms * 1000) AS BIGINT) AS _milli"
         )
-        .groupBy(F.expr(f"date_trunc({sql_str(bucket)}, ts) AS bucket"))
+        .groupBy(F.expr("date_trunc('hour', ts) AS bucket"))
         .agg(
             F.expr("count(1) AS pause_count"),
             F.expr("CAST(sum(_milli) AS DOUBLE) "
@@ -188,9 +187,9 @@ def bucket_pause_stats(assembled: DataFrame, bucket: str = "hour") -> DataFrame:
     )
 
 
-def sessionize(transcripts: DataFrame, gap_s: int = 3600) -> DataFrame:
+def sessionize(transcripts: DataFrame) -> DataFrame:
     """Gap-based sessionization: split each conversation into sessions
-    wherever the inter-turn idle time exceeds ``gap_s`` seconds, and roll up
+    wherever the inter-turn idle time exceeds an hour, and roll up
     one row per session.
 
     The classic log-pipeline operator the reference's single-file model never
@@ -205,7 +204,7 @@ def sessionize(transcripts: DataFrame, gap_s: int = 3600) -> DataFrame:
     """
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    is_new = F.when(gap > gap_s, F.lit(1)).otherwise(F.lit(0))
+    is_new = F.when(gap > 3600, F.lit(1)).otherwise(F.lit(0))
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     sess = transcripts.select(
         "conv_id",
@@ -222,9 +221,8 @@ def sessionize(transcripts: DataFrame, gap_s: int = 3600) -> DataFrame:
     )
 
 
-def duration_histogram(assembled: DataFrame, bin_ms: float = 10.0) -> DataFrame:
-    """G3c: pause-duration histogram (fixed-width bins)."""
+def duration_histogram(assembled: DataFrame) -> DataFrame:
+    """G3c: pause-duration histogram (10 ms bins)."""
     return assembled.groupBy(
-        F.expr(f"CAST(floor(duration_ms / {float(bin_ms)!r}D) AS BIGINT) "
-               "AS dur_bucket")
+        F.expr("CAST(floor(duration_ms / 10.0D) AS BIGINT) AS dur_bucket")
     ).agg(F.expr("count(1) AS pause_count"))

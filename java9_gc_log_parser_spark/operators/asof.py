@@ -54,11 +54,11 @@ def asof_join(
     key: str,
     ts: str,
     right_cols: tuple[str, ...],
-    prefix: str = "asof_",
 ) -> DataFrame:
     """For every left row, attach the latest right row with the same key
     and ``right.ts <= left.ts`` (inclusive). Left rows with no prior right
-    row keep nulls (left-outer semantics).
+    row keep nulls (left-outer semantics). Each of ``right_cols`` comes
+    back as ``asof_<col>``.
 
     Right must be unique per (key, ts); see the module contract.
     """
@@ -87,7 +87,7 @@ def asof_join(
         .filter(F.col("_side") == 1)
         .select(
             *[F.col("_l")[c].alias(c) for c in lpay],
-            *[F.col("_match")[c].alias(prefix + c) for c in right_cols],
+            *[F.col("_match")[c].alias(f"asof_{c}") for c in right_cols],
         )
     )
 

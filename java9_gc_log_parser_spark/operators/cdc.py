@@ -36,25 +36,19 @@ __all__ = [
 ]
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key: str = "doc_id",
-    compare_cols: tuple[str, ...] = ("text",),
-) -> DataFrame:
-    """Change set between two snapshots keyed by ``key``.
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
+    """Change set between two snapshots keyed by ``doc_id``.
 
-    Returns one row per changed key: ``(key, change_type, old_fp, new_fp)``
-    with ``change_type`` in ``{'added', 'deleted', 'updated'}``; unchanged
-    keys are dropped. The fingerprint is md5 over
-    the ``compare_cols`` concatenation (NUL-separated so column boundaries
-    can't alias) — engine-portable, so an external system (or the DuckDB
+    Returns one row per changed key: ``(doc_id, change_type, old_fp,
+    new_fp)`` with ``change_type`` in ``{'added', 'deleted', 'updated'}``;
+    unchanged keys are dropped. The fingerprint is md5 of ``text`` (NULL
+    text as '') — engine-portable, so an external system (or the DuckDB
     oracle) can recompute it from the raw snapshots.
     """
-    fp = F.md5(F.concat_ws("\x00", *[F.col(c) for c in compare_cols]))
-    o = old.select(F.col(key), fp.alias("old_fp"))
-    n = new.select(F.col(key), fp.alias("new_fp"))
-    changed = o.join(n, key, "full_outer").filter(
+    fp = F.md5(F.coalesce(F.col("text"), F.lit("")))
+    o = old.select(F.col("doc_id"), fp.alias("old_fp"))
+    n = new.select(F.col("doc_id"), fp.alias("new_fp"))
+    changed = o.join(n, "doc_id", "full_outer").filter(
         ~F.col("old_fp").eqNullSafe(F.col("new_fp"))
     )
     change = (
@@ -63,14 +57,14 @@ def snapshot_diff(
         .otherwise(F.lit("updated"))
     )
     return changed.select(
-        F.col(key), change.alias("change_type"), "old_fp", "new_fp"
+        F.col("doc_id"), change.alias("change_type"), "old_fp", "new_fp"
     )
 
 
-def synth_mutated_snapshot(docs: DataFrame, salt: str = "snap2") -> DataFrame:
+def synth_mutated_snapshot(docs: DataFrame) -> DataFrame:
     """Deterministic "next snapshot" of the documents table (test/bench
     scaffolding, like sources/transcripts.synth_transcripts — NOT a pipeline
-    operator). Buckets docs by the first hex char of md5(doc_id || ':salt'):
+    operator). Buckets docs by the first hex char of md5(doc_id || ':snap2'):
 
       * ``'0'`` → deleted from the new snapshot  (~1/16 of docs)
       * ``'1'`` → text updated (suffix appended) (~1/16)
@@ -81,7 +75,7 @@ def synth_mutated_snapshot(docs: DataFrame, salt: str = "snap2") -> DataFrame:
     md5-derived so the DuckDB oracle reproduces the exact same snapshot
     from the raw documents view.
     """
-    h = F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(f":{salt}"))), 1, 1)
+    h = F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":snap2"))), 1, 1)
     base = docs.withColumn("_h", h)
     kept = (
         base.filter(F.col("_h") != "0")
@@ -101,19 +95,14 @@ def synth_mutated_snapshot(docs: DataFrame, salt: str = "snap2") -> DataFrame:
     return kept.unionByName(added)
 
 
-def scd2_build(
-    events: DataFrame,
-    key: str = "user_id",
-    attr: str = "event_type",
-    ts: str = "ts",
-    order_col: str = "event_id",
-) -> DataFrame:
+def scd2_build(events: DataFrame) -> DataFrame:
     """Slowly-changing-dimension Type 2 history from an event log: per
-    ``key``, run-length-compress consecutive identical ``attr`` values (in
-    the strict ``(ts, order_col)`` total order) into validity intervals.
+    ``user_id``, run-length-compress consecutive identical ``event_type``
+    values (in the strict ``(ts, event_id)`` total order) into validity
+    intervals.
 
-    Output, one row per (key, version):
-    ``(key, version, attr, valid_from, valid_to, is_current, n_events)`` —
+    Output, one row per (user_id, version): ``(user_id, version,
+    event_type, valid_from, valid_to, is_current, n_events)`` —
     ``valid_to`` is the NEXT version's ``valid_from`` (half-open interval,
     NULL on the current row). This is the standard warehouse dimension-build
     the reference's single-process model folds into its running GcState
@@ -123,11 +112,12 @@ def scd2_build(
 
     Scale notes (100 TB): ONE shuffle — the change-flag window, the
     version running-sum window, the (key, version) agg, and the valid_to
-    lead window all share the ``key`` hash partitioning and (where sorted)
+    lead window all share the ``user_id`` hash partitioning and (where sorted)
     the same sort order, so Catalyst plans a single Exchange. Window frames
     are O(1)-state running aggregates; no per-key buffering. A hot key
     degrades to one long sorted run, not a blowup.
     """
+    key, attr, ts, order_col = "user_id", "event_type", "ts", "event_id"
     w_ord = Window.partitionBy(key).orderBy(ts, order_col)
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, 0)
     flagged = events.select(
@@ -162,7 +152,6 @@ def incremental_refresh(
     changes: DataFrame,
     new_snapshot: DataFrame,
     recompute,
-    key: str = "doc_id",
 ) -> DataFrame:
     """Incremental view maintenance driven by a :func:`snapshot_diff` change
     set: refresh a per-key derived table (quality scores, token stats,
@@ -187,12 +176,12 @@ def incremental_refresh(
     least ``.persist()`` — or Catalyst re-plans the full snapshot diff once
     per reference (plan-asserted in tests/test_plans.py).
     """
-    changed_keys = changes.select(key)
+    changed_keys = changes.select("doc_id")
     to_recompute = changes.filter(
         F.col("change_type").isin("added", "updated")
-    ).select(key)
-    carried = old_state.join(F.broadcast(changed_keys), key, "left_anti")
+    ).select("doc_id")
+    carried = old_state.join(F.broadcast(changed_keys), "doc_id", "left_anti")
     fresh = recompute(
-        new_snapshot.join(F.broadcast(to_recompute), key, "left_semi")
+        new_snapshot.join(F.broadcast(to_recompute), "doc_id", "left_semi")
     )
     return carried.unionByName(fresh)

@@ -116,15 +116,10 @@ def kmeans_assign(embeddings: DataFrame, k: int = 4, iters: int = 2) -> DataFram
     return assigned
 
 
-def semdedup(
-    embeddings: DataFrame,
-    k: int = 4,
-    iters: int = 2,
-    threshold: float = 0.3,
-) -> DataFrame:
+def semdedup(embeddings: DataFrame) -> DataFrame:
     """Semantic dedup verdict per vector (SemDeDup, Abbas et al. 2023,
-    arXiv:2303.09540): cluster the corpus with k-means, find near-duplicate
-    pairs (cosine >= threshold) WITHIN each cluster cell, and keep exactly
+    arXiv:2303.09540): cluster the corpus with 4-means (2 Lloyd rounds),
+    find near-duplicate pairs (cosine >= 0.3) WITHIN each cluster cell, and keep exactly
     one representative per duplicate relation.
 
     Keep rule (deterministic, oracle-checkable): in every above-threshold
@@ -143,7 +138,7 @@ def semdedup(
     """
     from java9_gc_log_parser_spark.operators.similarity import EPS, _with_norm
 
-    assigned = kmeans_assign(embeddings, k=k, iters=iters)
+    assigned = kmeans_assign(embeddings, k=4, iters=2)
     e = _with_norm(embeddings).select("vec_id", "_emb", "_nrm")
     m = assigned.join(e, "vec_id")
     # explicit-count repartition: within-cell self-join output is quadratic
@@ -172,7 +167,7 @@ def semdedup(
             F.col("b.d2").alias("db"),
             cos.alias("cos"),
         )
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= 0.3)
     )
     losers = pairs.select(
         F.when(

@@ -27,9 +27,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 RTBF_SALT = "rtbf:v1"
+#: the key a delete request names
+KEY = "conv_id"
 
 
-def rtbf_deny_list(df: DataFrame, key: str = "conv_id") -> DataFrame:
+def rtbf_deny_list(df: DataFrame) -> DataFrame:
     """Deterministic synthetic delete-request registry: keys whose
     ``md5(key ++ ':rtbf:v1')`` first hex nibble is ``'0'`` (~1/16 of the key
     space). A real pipeline reads this from a tiny request table; deriving
@@ -37,6 +39,7 @@ def rtbf_deny_list(df: DataFrame, key: str = "conv_id") -> DataFrame:
     oracle applies the same predicate) while preserving the operator's
     shape: O(requests) rows, always broadcastable.
     """
+    key = KEY
     return (
         df.select(F.col(key).cast("string").alias(key))
         .where(
@@ -53,7 +56,6 @@ def rtbf_purge_audit(
     sinks: dict[str, DataFrame],
     deny: DataFrame,
     base_path: str,
-    key: str = "conv_id",
 ) -> DataFrame:
     """Purge ``deny`` keys from every sink, persist the purged sinks, and
     prove the deletion from the written state.
@@ -73,6 +75,8 @@ def rtbf_purge_audit(
     ≤ sinks×1 rows before the only (tiny) exchange.
     """
     from java9_gc_log_parser_spark.storage import read_table, write_table
+
+    key = KEY
 
     marked = F.broadcast(deny.withColumn("_deny", F.lit(1)))
     tagged = []

@@ -19,10 +19,10 @@ Spark-first shape (no UDFs, no all-pairs):
     distinct-overlap size. Partial aggregation (map-side combine) bounds the
     shuffle to surviving pairs, which decontamination keeps rare by using
     long-ish n-grams;
-  * degenerate grams (boilerplate shared by a large share of eval docs)
-    can be dropped with ``max_gram_eval_docs`` — a documented recall
-    trade-off, computed on the tiny eval side before the broadcast, so the
-    hot-key blow-up never reaches the big join.
+  * when the eval side is too big to broadcast, degenerate grams
+    (boilerplate shared by more than ``FALLBACK_MAX_GRAM_EVAL_DOCS`` eval
+    docs) are dropped — a documented recall trade-off, computed on the eval
+    side before the join, so the hot-key blow-up never reaches it.
 """
 
 from __future__ import annotations
@@ -50,55 +50,46 @@ def contamination_pairs(
     eval_df: DataFrame,
     n: int = 4,
     min_overlap: int = 2,
-    id_col: str = "doc_id",
-    max_gram_eval_docs: int | None = None,
-    broadcast_eval: bool | None = None,
 ) -> DataFrame:
     """(train_id, eval_id, n_shared): train docs sharing ``>= min_overlap``
     distinct word ``n``-grams with an eval doc.
 
     ``filter`` on the result (or an anti-join back to ``train``) is the
-    decontaminated corpus. ``max_gram_eval_docs`` drops grams present in
-    more than that many eval documents before matching (boilerplate guard).
+    decontaminated corpus.
 
-    Join-strategy selection (``broadcast_eval``):
-      * ``True`` — broadcast the exploded eval-gram table (the normal case:
-        eval benchmarks are a few MB against a 100 TB corpus; the corpus scan
-        stays map-side, zero shuffle before the pair aggregation);
-      * ``False`` — shuffle HASH join on ``gram`` (hinted: the gram side
-        needs no sort, and a sort-merge join would sort the full exploded
-        corpus). For a huge eval registry (hundreds of benchmarks x long
-        n-grams) that exceeds broadcast limits. The degenerate-gram cap is
-        applied unconditionally on this path (``FALLBACK_MAX_GRAM_EVAL_DOCS``
-        when the caller set none) — without the broadcast, a boilerplate
-        gram is a hot shuffle key.
-      * ``None`` (default) — measured selection: count the exploded eval
-        rows (one job over the SMALL side only; the train corpus is never
-        touched) and broadcast iff it is under ``BROADCAST_MAX_EVAL_GRAMS``.
+    Join-strategy selection is measured: count the exploded eval rows (one
+    job over the SMALL side only; the train corpus is never touched), then
+      * at most ``BROADCAST_MAX_EVAL_GRAMS`` — broadcast the exploded
+        eval-gram table (the normal case: eval benchmarks are a few MB
+        against a 100 TB corpus; the corpus scan stays map-side, zero
+        shuffle before the pair aggregation);
+      * more — shuffle HASH join on ``gram`` (hinted: the gram side needs no
+        sort, and a sort-merge join would sort the full exploded corpus),
+        for a huge eval registry (hundreds of benchmarks x long n-grams).
+        Grams in more than ``FALLBACK_MAX_GRAM_EVAL_DOCS`` eval docs are
+        dropped first — without the broadcast, a boilerplate gram is a hot
+        shuffle key.
 
-    Both paths produce identical results on the same inputs when the same cap
-    applies (tests/test_contamination.py asserts it), and neither can plan a
-    BroadcastNestedLoopJoin (equi-join on gram; plan-asserted).
+    Both paths produce identical results on the same inputs when no gram
+    reaches the cap (tests/test_contamination.py asserts it), and neither
+    can plan a BroadcastNestedLoopJoin (equi-join on gram; plan-asserted).
     """
     ev = (
         with_shingles(eval_df, n)
-        .select(F.col(id_col).alias("eval_id"), F.explode("sh").alias("gram"))
+        .select(F.col("doc_id").alias("eval_id"), F.explode("sh").alias("gram"))
     )
-    if broadcast_eval is None:
-        broadcast_eval = ev.count() <= BROADCAST_MAX_EVAL_GRAMS
-    if not broadcast_eval and max_gram_eval_docs is None:
-        max_gram_eval_docs = FALLBACK_MAX_GRAM_EVAL_DOCS
-    if max_gram_eval_docs is not None:
+    broadcast_eval = ev.count() <= BROADCAST_MAX_EVAL_GRAMS
+    if not broadcast_eval:
         ok = (
             ev.groupBy("gram")
             .agg(F.count(F.lit(1)).alias("_n_ev"))
-            .filter(F.col("_n_ev") <= max_gram_eval_docs)
+            .filter(F.col("_n_ev") <= FALLBACK_MAX_GRAM_EVAL_DOCS)
             .select("gram")
         )
         ev = ev.join(ok, "gram")
     tr = (
         with_shingles(train, n)
-        .select(F.col(id_col).alias("train_id"), F.explode("sh").alias("gram"))
+        .select(F.col("doc_id").alias("train_id"), F.explode("sh").alias("gram"))
     )
     joined = (
         tr.join(F.broadcast(ev), "gram")
@@ -117,7 +108,6 @@ def decontaminate(
     eval_df: DataFrame,
     n: int = 4,
     min_overlap: int = 2,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Train corpus minus every document flagged by ``contamination_pairs``.
 
@@ -125,16 +115,15 @@ def decontaminate(
     because the contaminated fraction of a screened corpus is tiny.
     """
     flagged = contamination_pairs(
-        train, eval_df, n=n, min_overlap=min_overlap, id_col=id_col
-    ).select(F.col("train_id").alias(id_col)).distinct()
-    return train.join(F.broadcast(flagged), id_col, "left_anti")
+        train, eval_df, n=n, min_overlap=min_overlap
+    ).select(F.col("train_id").alias("doc_id")).distinct()
+    return train.join(F.broadcast(flagged), "doc_id", "left_anti")
 
 
 def semantic_decontaminate(
     corpus_emb: DataFrame,
     eval_emb: DataFrame,
     threshold: float = 0.30,
-    dims: tuple[int, ...] = (1, 2, 3, 4),
 ) -> DataFrame:
     """Embedding-space (semantic) eval-set contamination: corpus vectors
     whose cosine to some eval vector reaches ``threshold``, with the best
@@ -163,13 +152,13 @@ def semantic_decontaminate(
         "vec_id",
         "_emb",
         "_nrm",
-        sign_bucket(F.col("embedding"), dims).alias("_blk"),
+        sign_bucket(F.col("embedding")).alias("_blk"),
     )
     ev = _with_norm(eval_emb).select(
         F.col("vec_id").alias("eval_id"),
         F.col("_emb").alias("_eemb"),
         F.col("_nrm").alias("_enrm"),
-        sign_bucket(F.col("embedding"), dims).alias("_blk"),
+        sign_bucket(F.col("embedding")).alias("_blk"),
     )
     cos = F.round(
         _dot(F.col("_emb"), F.col("_eemb"))

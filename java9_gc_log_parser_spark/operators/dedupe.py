@@ -12,7 +12,7 @@ banding and bucket joins are pure JVM columnar; no Python UDFs):
 Scale design (the 100 TB story):
   - shingling/hashing is embarrassingly parallel (map-only, codegen);
   - LSH candidate generation shuffles only (band_id, band_hash) keys; bucket
-    sizes are capped (`max_bucket`) so a degenerate value (empty docs, boiler-
+    sizes are capped (`_MAX_BUCKET`) so a degenerate value (empty docs, boiler-
     plate) cannot quadratically explode a reducer — dropped buckets are
     reported, not silently ignored (returned by lsh_buckets);
   - exact verification runs only on candidate pairs, never all-pairs;
@@ -54,14 +54,21 @@ def assert_no_staging(df: DataFrame, *names: str) -> None:
         )
 
 
-def with_shingles(docs: DataFrame, n: int = 3, out: str = "sh") -> DataFrame:
-    """Add a distinct word-n-gram shingle column (tokens bound first so the
-    tokenizer runs once per row, not once per shingle position).
+#: MinHash signature length, LSH bands and shingle size shared by the LSH
+#: pair join and the persisted signature store
+_MH_K, _MH_BANDS, _MH_SHINGLE_N = 32, 8, 3
+#: LSH buckets larger than this (degenerate content) are dropped
+_MAX_BUCKET = 1000
+
+
+def with_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
+    """Add a distinct word-n-gram shingle column ``sh`` (tokens bound first
+    so the tokenizer runs once per row, not once per shingle position).
 
     len(tokens) < n -> the full token string as a single shingle (so short
     docs still dedupe).
     """
-    assert_no_staging(docs, "_toks", out)
+    assert_no_staging(docs, "_toks", "sh")
     toks = F.col("_toks")
     k = F.size(toks)
     grams = F.transform(
@@ -78,7 +85,7 @@ def with_shingles(docs: DataFrame, n: int = 3, out: str = "sh") -> DataFrame:
     return (
         docs.withColumn("_toks", tokens_col(F.lower(F.col("text"))))
         .withColumn(
-            out,
+            "sh",
             F.array_distinct(
                 F.when(k >= n, grams).otherwise(F.array(F.array_join(toks, " ")))
             ),
@@ -88,23 +95,18 @@ def with_shingles(docs: DataFrame, n: int = 3, out: str = "sh") -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    n: int = 1,
-    threshold: float = 0.5,
-    block_col: str = "source",
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing a blocking key.
 
     Output: (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard >= threshold.
 
-    Blocking is the compound key ``(block_col, log2-size-bucket)`` — NOT
-    block_col alone. The size-ratio prune already implies a passing pair's
+    Blocking is the compound key ``(source, log2-size-bucket)`` — NOT
+    source alone. The size-ratio prune already implies a passing pair's
     shingle-set sizes differ by at most 1/threshold, so bucketing on
     floor(log2(|sh|)) and probing only buckets within
     w = ceil(log2(1/threshold)) of a doc's own bucket is *exact-preserving*
     while bounding block cardinality by the length distribution instead of
-    the corpus size: with block_col alone the within-block self-join is
+    the corpus size: with source alone the within-block self-join is
     O(B^2) with B growing linearly in data volume. The bucket is computed
     from the integer bit length (``conv`` base 2), not float ``log2``, so
     boundary rounding can never move a doc across a bucket edge.
@@ -124,10 +126,11 @@ def ngram_jaccard_pairs(
     """
     import math
 
+    n, threshold = 1, 0.5
     w = 0 if threshold >= 1.0 else max(1, math.ceil(math.log2(1.0 / threshold)))
     n_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     sh = with_shingles(docs, n).select(
-        "doc_id", F.col(block_col).alias("_blk"), "sh", F.size("sh").alias("sz")
+        "doc_id", F.col("source").alias("_blk"), "sh", F.size("sh").alias("sz")
     ).withColumn(
         # floor(log2(sz)) as an exact integer: bit_length - 1 (sz >= 1 always)
         "_lb",
@@ -193,17 +196,16 @@ def minhash_signature(shingles: Column, k: int = 32) -> Column:
     )
 
 
-def lsh_buckets(
-    docs: DataFrame, k: int = 32, bands: int = 8, shingle_n: int = 3
-) -> DataFrame:
+def lsh_buckets(docs: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_hash) — one row per band per doc.
 
     band_hash = xxhash64 of the band's signature slice (hashing the array
     value directly; no per-element re-reference of the signature column).
     """
-    r = k // bands
-    sig = with_shingles(docs, shingle_n).withColumn(
-        "_sig", minhash_signature(F.col("sh"), k)
+    bands = _MH_BANDS
+    r = _MH_K // bands
+    sig = with_shingles(docs, _MH_SHINGLE_N).withColumn(
+        "_sig", minhash_signature(F.col("sh"), _MH_K)
     )
     band_rows = sig.select(
         "doc_id",
@@ -224,16 +226,12 @@ def lsh_buckets(
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    k: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
     threshold: float = 0.6,
-    max_bucket: int = 1000,
     buckets: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate pairs from LSH buckets, exact-verified at `threshold`.
 
-    Buckets larger than max_bucket (degenerate content) are dropped to bound
+    Buckets larger than 1000 rows (degenerate content) are dropped to bound
     the quadratic pair blow-up; at scale, report them via lsh_buckets stats.
 
     ``buckets`` optionally injects a precomputed ``lsh_buckets`` table
@@ -247,14 +245,15 @@ def minhash_lsh_pairs(
     (sh, sz)) — never once per consumer.
     """
     n_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    bands = _MH_BANDS
     sig = (
-        with_shingles(docs, shingle_n)
+        with_shingles(docs, _MH_SHINGLE_N)
         .select("doc_id", "sh", F.size("sh").alias("sz"))
-        .withColumn("_sig", minhash_signature(F.col("sh"), k))
+        .withColumn("_sig", minhash_signature(F.col("sh"), _MH_K))
         .repartition(n_parts, "doc_id")
     )
     if buckets is None:
-        rr = k // bands
+        rr = _MH_K // bands
         buckets = sig.select(
             "doc_id",
             F.explode(
@@ -277,7 +276,7 @@ def minhash_lsh_pairs(
     sized = b.withColumn(
         "bucket_n",
         F.count(F.lit(1)).over(Window.partitionBy("band_id", "band_hash")),
-    ).filter((F.col("bucket_n") > 1) & (F.col("bucket_n") <= max_bucket))
+    ).filter((F.col("bucket_n") > 1) & (F.col("bucket_n") <= _MAX_BUCKET))
     l, rt = sized.alias("l"), sized.alias("r")
     cand = (
         l.join(
@@ -361,13 +360,14 @@ def simhash64(hashes: Column) -> Column:
     )
 
 
-def with_simhash(docs: DataFrame, out: str = "sim") -> DataFrame:
-    """Add the 64-bit SimHash column (tokens + hashes bound once per row)."""
-    assert_no_staging(docs, "_toks", "_hashes", out)
+def with_simhash(docs: DataFrame) -> DataFrame:
+    """Add the 64-bit SimHash column ``sim`` (tokens + hashes bound once
+    per row)."""
+    assert_no_staging(docs, "_toks", "_hashes", "sim")
     return (
         docs.withColumn("_toks", F.array_distinct(tokens_col(F.lower(F.col("text")))))
         .withColumn("_hashes", F.transform(F.col("_toks"), lambda t: F.xxhash64(t)))
-        .withColumn(out, simhash64(F.col("_hashes")))
+        .withColumn("sim", simhash64(F.col("_hashes")))
         .drop("_toks", "_hashes")
     )
 
@@ -534,15 +534,13 @@ def star_contract(
     return labels.unionByName(roots).distinct(), rounds
 
 
-def dedup_clusters(
-    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Resolve near-dup *pairs* into duplicate *clusters* and a keep-list.
 
     Pair emitters (ngram_jaccard_pairs / minhash_lsh_pairs / simhash_pairs)
     find edges; a training pipeline needs the transitive closure: if A~B and
     B~C, all three are one duplicate group even when A~C was never emitted.
-    Output, one row per document: ``(id_col, cluster_id, keep)`` where
+    Output, one row per document: ``(doc_id, cluster_id, keep)`` where
     cluster_id is the smallest doc id in the document's connected component
     (its own id for singletons) and ``keep`` marks the canonical
     representative — ``filter(keep)`` IS the deduplicated corpus.
@@ -560,14 +558,14 @@ def dedup_clusters(
     reliable checkpoint(dir) for executor-loss resilience.
     """
     labels, _rounds = star_contract(pairs)
-    out = docs.select(id_col).join(
-        labels.withColumnRenamed("id", id_col), id_col, "left"
+    out = docs.select("doc_id").join(
+        labels.withColumnRenamed("id", "doc_id"), "doc_id", "left"
     )
-    cluster = F.coalesce(F.col("label"), F.col(id_col))
+    cluster = F.coalesce(F.col("label"), F.col("doc_id"))
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         cluster.alias("cluster_id"),
-        (cluster == F.col(id_col)).alias("keep"),
+        (cluster == F.col("doc_id")).alias("keep"),
     )
 
 
@@ -575,9 +573,7 @@ def dedup_clusters(
 # Incremental dedup against a persisted signature store
 # ---------------------------------------------------------------------------
 
-def signature_table(
-    docs: DataFrame, k: int = 32, bands: int = 8, shingle_n: int = 3
-) -> DataFrame:
+def signature_table(docs: DataFrame) -> DataFrame:
     """Compact per-doc near-dup signature rows for a PERSISTED store:
     one row per (doc, band) carrying the band's LSH bucket hash plus the
     full MinHash signature.
@@ -588,9 +584,10 @@ def signature_table(
     (bands*~300 bytes per doc, ~0.01% of the text volume) and append the
     batch's own rows afterwards. Schema: (doc_id, band_id, band_hash, sig).
     """
-    r = k // bands
-    sig = with_shingles(docs, shingle_n).withColumn(
-        "_sig", minhash_signature(F.col("sh"), k)
+    bands = _MH_BANDS
+    r = _MH_K // bands
+    sig = with_shingles(docs, _MH_SHINGLE_N).withColumn(
+        "_sig", minhash_signature(F.col("sh"), _MH_K)
     )
     return sig.select(
         "doc_id",
@@ -611,13 +608,7 @@ def signature_table(
     ).select("doc_id", "band.band_id", "band.band_hash", "sig")
 
 
-def incremental_dedup(
-    new_sig: DataFrame,
-    store_sig: DataFrame,
-    k: int = 32,
-    threshold: float = 0.4,
-    max_bucket: int = 1000,
-) -> DataFrame:
+def incremental_dedup(new_sig: DataFrame, store_sig: DataFrame) -> DataFrame:
     """Dedup a NEW batch against a persisted signature store — pure
     signature-space, the base corpus text is never read.
 
@@ -629,9 +620,11 @@ def incremental_dedup(
     shingle Jaccard is the documented trade (stderr ~ sqrt(J(1-J)/k), ~0.09
     at J=0.4/k=32; raise k to tighten).
 
+    A new doc is a duplicate when that estimate is >= 0.4.
+
     Per new doc the verdict is:
 
-    - ``dup_of_base``  — best store match with est >= threshold (max est,
+    - ``dup_of_base``  — best store match with est >= 0.4 (max est,
       then min store doc_id); base matches take priority over batch ones
       so existing corpus membership stays canonical.
     - ``dup_in_batch`` — else, best match among EARLIER batch docs
@@ -640,7 +633,7 @@ def incremental_dedup(
     - ``unique``       — otherwise (match_id and est_jaccard NULL).
 
     Scale shape: bucket hygiene first — bucket sizes counted over the
-    UNION of both sides and degenerate buckets (> max_bucket) dropped
+    UNION of both sides and degenerate buckets (> 1000 rows) dropped
     before any pair is generated, so the candidate join's output stays
     bounded exactly as in :func:`minhash_lsh_pairs`. A daily batch is
     orders of magnitude smaller than the store, so the batch's bucket rows
@@ -660,7 +653,7 @@ def incremental_dedup(
     sizes = (
         union.groupBy("band_id", "band_hash")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") <= max_bucket)
+        .filter(F.col("bucket_n") <= _MAX_BUCKET)
         .select("band_id", "band_hash")
     )
     bn = buckets_new.join(sizes, ["band_id", "band_hash"])
@@ -718,9 +711,9 @@ def incremental_dedup(
                 F.lit(0),
                 lambda acc, x: acc + x,
             ).cast("double")
-            / F.lit(float(k)),
+            / F.lit(float(_MH_K)),
         )
-        .filter(F.col("est") >= threshold)
+        .filter(F.col("est") >= 0.4)
     )
     w = Window.partitionBy("new_id").orderBy(
         F.col("is_base").desc(), F.col("est").desc(), F.col("match_id").asc()
@@ -742,9 +735,7 @@ def incremental_dedup(
     )
 
 
-def dup_ngram_gate(
-    docs: DataFrame, n: int = 3, max_dup_frac: float = 0.3
-) -> DataFrame:
+def dup_ngram_gate(docs: DataFrame) -> DataFrame:
     """Cross-document duplicated-n-gram fraction gate (the RefinedWeb /
     Gopher-style "fraction of the document that also appears elsewhere"
     quality filter): for each doc, the share of its word-n-gram
@@ -779,6 +770,7 @@ def dup_ngram_gate(
     single running count (no buffering), so a hot gram costs one linear
     pass, the same argument as sessionize's hot conv_id.
     """
+    n, max_dup_frac = 3, 0.3
     assert_no_staging(docs, "_toks", "_dg_sh", "_dg_g")
     toks = F.col("_toks")
     k = F.size(toks)
@@ -821,21 +813,16 @@ def dup_ngram_gate(
     )
 
 
-def canonical_select(
-    clusters: DataFrame,
-    scored: DataFrame,
-    score_col: str = "quality_score",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def canonical_select(clusters: DataFrame, scored: DataFrame) -> DataFrame:
     """Pick the best document per duplicate cluster by a quality score.
 
     :func:`dedup_clusters` keeps the *smallest doc id* per component — fine
     for exact dups, wasteful for near-dups where variants differ in quality
     (truncation, boilerplate, OCR noise). This operator re-selects the
     canonical representative as the cluster member with the highest
-    ``score_col`` (ties broken by smallest id, so selection is total and
+    ``quality_score`` (ties broken by smallest id, so selection is total and
     deterministic). Output: one row per doc —
-    ``(id_col, cluster_id, score_col, is_canonical)``;
+    ``(doc_id, cluster_id, quality_score, is_canonical)``;
     ``filter(is_canonical)`` is the quality-aware deduplicated corpus.
 
     Scale notes (100 TB): one equi-join on the doc id (clusters ⋈ scores —
@@ -849,24 +836,22 @@ def canonical_select(
     so rank ties are broken identically across engines/retries.
     """
     w = Window.partitionBy("cluster_id").orderBy(
-        F.col(score_col).desc(), F.col(id_col).asc()
+        F.col("quality_score").desc(), F.col("doc_id").asc()
     )
     return (
-        clusters.select(id_col, "cluster_id")
-        .join(scored.select(id_col, score_col), id_col)
+        clusters.select("doc_id", "cluster_id")
+        .join(scored.select("doc_id", "quality_score"), "doc_id")
         .withColumn("_rk", F.row_number().over(w))
         .select(
-            id_col,
+            "doc_id",
             "cluster_id",
-            score_col,
+            "quality_score",
             (F.col("_rk") == 1).alias("is_canonical"),
         )
     )
 
 
-def dup_span_scrub(
-    docs: DataFrame, n: int = 5, min_docs: int = 2, id_col: str = "doc_id"
-) -> DataFrame:
+def dup_span_scrub(docs: DataFrame) -> DataFrame:
     """ExactSubstr-style duplicated-SPAN removal: scrub every token covered
     by a word n-gram that occurs in >= ``min_docs`` distinct documents,
     keeping the rest of the document intact.
@@ -882,7 +867,7 @@ def dup_span_scrub(
     dedup token contract, tokens_col).
 
     Output, one row per input doc:
-    ``(id_col, n_tokens, n_removed, clean_text)`` — clean_text is the
+    ``(doc_id, n_tokens, n_removed, clean_text)`` — clean_text is the
     kept tokens rejoined with single spaces ('' if everything was scrubbed).
 
     Scale notes (100 TB): the dominant cost is the gram-keyed
@@ -896,6 +881,7 @@ def dup_span_scrub(
     exactly. Reassembly state is one (pos, tok) list per doc — bounded by
     document length, never by corpus.
     """
+    n, min_docs = 5, 2
     assert_no_staging(docs, "_lt", "_ga")
     k = F.size("_lt")
     grams_arr = F.when(
@@ -917,18 +903,18 @@ def dup_span_scrub(
     # (doc, gpos, gram): gpos is 1-based (slice semantics), gram covers
     # token positions [gpos, gpos + n - 1]
     grams = base.select(
-        id_col, F.posexplode("_ga").alias("_gp0", "gram")
-    ).select(id_col, (F.col("_gp0") + 1).alias("gpos"), "gram")
+        "doc_id", F.posexplode("_ga").alias("_gp0", "gram")
+    ).select("doc_id", (F.col("_gp0") + 1).alias("gpos"), "gram")
     dupg = (
         grams.groupBy("gram")
-        .agg(F.countDistinct(id_col).alias("_nd"))
+        .agg(F.countDistinct("doc_id").alias("_nd"))
         .filter(F.col("_nd") >= min_docs)
         .select("gram")
     )
     cov = (
         grams.join(dupg, "gram")
         .select(
-            id_col,
+            "doc_id",
             F.explode(
                 F.sequence(F.col("gpos"), F.col("gpos") + (n - 1))
             ).alias("pos"),
@@ -936,10 +922,10 @@ def dup_span_scrub(
         .distinct()
     )
     toks = base.select(
-        id_col, F.posexplode("_lt").alias("_p0", "tok")
-    ).select(id_col, (F.col("_p0") + 1).alias("pos"), "tok")
-    kept = toks.join(cov, [id_col, "pos"], "left_anti")
-    scrubbed = kept.groupBy(id_col).agg(
+        "doc_id", F.posexplode("_lt").alias("_p0", "tok")
+    ).select("doc_id", (F.col("_p0") + 1).alias("pos"), "tok")
+    kept = toks.join(cov, ["doc_id", "pos"], "left_anti")
+    scrubbed = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("_n_kept"),
         F.array_join(
             F.transform(
@@ -950,10 +936,10 @@ def dup_span_scrub(
         ).alias("_clean"),
     )
     out = (
-        base.select(id_col, k.cast("long").alias("n_tokens"))
-        .join(scrubbed, id_col, "left")
+        base.select("doc_id", k.cast("long").alias("n_tokens"))
+        .join(scrubbed, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             (F.col("n_tokens") - F.coalesce(F.col("_n_kept"), F.lit(0)))
             .cast("long")
@@ -964,12 +950,7 @@ def dup_span_scrub(
     return out
 
 
-def containment_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    df_max: int = 5,
-    threshold: float = 0.6,
-) -> DataFrame:
+def containment_pairs(docs: DataFrame) -> DataFrame:
     """Asymmetric near-duplicate detection by Jaccard CONTAINMENT
     (Broder's c(A,B) = |A∩B| / |A|): a short document embedded inside a
     longer one scores ~1.0 here while symmetric Jaccard — what
@@ -1005,6 +986,7 @@ def containment_pairs(
       * fully engine-replayable (no hash seam): DuckDB re-derives
         candidates and containment from raw text.
     """
+    n, df_max, threshold = 3, 5, 0.6
     sh = with_shingles(docs, n)
     post = sh.select("doc_id", F.explode("sh").alias("g"))
     sizes = sh.select("doc_id", F.size("sh").cast("long").alias("n_sh"))
@@ -1058,12 +1040,7 @@ def containment_pairs(
     )
 
 
-def corpus_overlap_minhash(
-    docs: DataFrame,
-    k: int = 64,
-    shingle_n: int = 3,
-    group_col: str = "source",
-) -> DataFrame:
+def corpus_overlap_minhash(docs: DataFrame) -> DataFrame:
     """Pairwise corpus-overlap matrix: for every pair of sources, the
     Jaccard similarity of their trigram-shingle SETS — estimated from a
     k-slot minhash signature per source, with the exact Jaccard computed
@@ -1108,8 +1085,7 @@ def corpus_overlap_minhash(
     from functools import reduce as _reduce
     from operator import add as _add
 
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
+    k, shingle_n = 64, 3
     sh = with_shingles(docs, shingle_n)
 
     def slot_hashes(s):
@@ -1122,7 +1098,7 @@ def corpus_overlap_minhash(
 
     neutral = F.array(*[F.lit("g") for _ in range(k)])  # > any md5 hex char
     doc_sig = sh.select(
-        group_col,
+        "source",
         F.aggregate(
             "sh",
             neutral,
@@ -1131,7 +1107,7 @@ def corpus_overlap_minhash(
             ),
         ).alias("_sig"),
     ).observe(f"corpus_sig_obs_{next(_obs_ids)}", F.count(F.lit(1)).alias("rows"))
-    src_sig = doc_sig.groupBy(group_col).agg(
+    src_sig = doc_sig.groupBy("source").agg(
         *[F.min(F.col("_sig")[j]).alias(f"_m{j}") for j in range(k)]
     )
 
@@ -1144,30 +1120,30 @@ def corpus_overlap_minhash(
         ],
     ).cast("long")
     est = a.join(
-        F.broadcast(b), F.col(f"a.{group_col}") < F.col(f"b.{group_col}")
+        F.broadcast(b), F.col("a.source") < F.col("b.source")
     ).select(
-        F.col(f"a.{group_col}").alias("source_a"),
-        F.col(f"b.{group_col}").alias("source_b"),
+        F.col("a.source").alias("source_a"),
+        F.col("b.source").alias("source_b"),
         n_match.alias("n_match"),
     )
 
     grams = sh.select(
-        F.col(group_col), F.explode("sh").alias("gram")
+        F.col("source"), F.explode("sh").alias("gram")
     ).distinct()
-    cnt = grams.groupBy(group_col).agg(F.count(F.lit(1)).alias("n"))
+    cnt = grams.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     gx, gy = grams.alias("x"), grams.alias("y")
     common = (
         gx.join(gy, F.col("x.gram") == F.col("y.gram"))
-        .filter(F.col(f"x.{group_col}") < F.col(f"y.{group_col}"))
+        .filter(F.col("x.source") < F.col("y.source"))
         .groupBy(
-            F.col(f"x.{group_col}").alias("source_a"),
-            F.col(f"y.{group_col}").alias("source_b"),
+            F.col("x.source").alias("source_a"),
+            F.col("y.source").alias("source_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
 
-    ca = cnt.withColumnRenamed(group_col, "source_a").withColumnRenamed("n", "n_grams_a")
-    cb = cnt.withColumnRenamed(group_col, "source_b").withColumnRenamed("n", "n_grams_b")
+    ca = cnt.withColumnRenamed("source", "source_a").withColumnRenamed("n", "n_grams_a")
+    cb = cnt.withColumnRenamed("source", "source_b").withColumnRenamed("n", "n_grams_b")
     out = (
         est.join(F.broadcast(ca), "source_a")
         .join(F.broadcast(cb), "source_b")
@@ -1193,12 +1169,7 @@ def corpus_overlap_minhash(
     )
 
 
-def ppjoin_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold_num: int = 3,
-    threshold_den: int = 5,
-) -> DataFrame:
+def ppjoin_pairs(docs: DataFrame) -> DataFrame:
     """GLOBALLY exact all-pairs Jaccard join by prefix filtering
     (AllPairs/PPJoin, Bayardo et al. WWW'07) — the missing guarantee in
     the dedup family: q18 is exact only WITHIN a (source, size-bucket)
@@ -1216,7 +1187,7 @@ def ppjoin_pairs(
     contradiction). Candidates are therefore an equi-join of prefix
     postings; everything else is suffix and never generates a pair.
 
-    EXACT-INTEGER threshold contract: t = threshold_num/threshold_den as
+    EXACT-INTEGER threshold contract: t = 3/5 as
     a fraction; ceil(t·s) computes as (num·s + den - 1) div den and the
     verify is ``inter · den >= num · union`` — no float ceil/compare
     anywhere, so a boundary-size prefix can never shrink by a ulp (float
@@ -1235,10 +1206,8 @@ def ppjoin_pairs(
 
     Output: ``(doc_a, doc_b, inter, uni, jaccard)``, doc_a < doc_b.
     """
-    if not (0 < threshold_num <= threshold_den):
-        raise ValueError("threshold must be a fraction in (0, 1]")
-    num, den = int(threshold_num), int(threshold_den)
-    sh = with_shingles(docs, n).select(
+    num, den = 3, 5  # the Jaccard threshold t = 3/5
+    sh = with_shingles(docs, 3).select(
         "doc_id", "sh", F.size("sh").alias("sz")
     )
     posts = sh.select("doc_id", F.explode("sh").alias("g"))
@@ -1321,7 +1290,7 @@ def ppjoin_pairs(
     )
 
 
-def split_leakage_report(pairs: DataFrame, salt: str = "v1") -> DataFrame:
+def split_leakage_report(pairs: DataFrame) -> DataFrame:
     """Train/val/test LEAKAGE audit over a near-dup pair set: how many
     near-duplicate pairs STRADDLE a split boundary — the contamination
     the n-gram/semantic decontam screens (q32/q54) don't cover, because
@@ -1330,7 +1299,7 @@ def split_leakage_report(pairs: DataFrame, salt: str = "v1") -> DataFrame:
 
     Takes the q22 MinHash pair set (any (doc_a, doc_b, jaccard) frame
     works) and classifies BOTH ends map-side via the q30 split
-    expression — split membership is a pure function of (id, salt), so
+    expression — split membership is a pure function of the id, so
     there is NO join against the corpus: the report is one tiny
     aggregation over the pair set. Output one row per unordered split
     pair: ``(split_a, split_b, cross_split, n_pairs, max_jaccard)`` —
@@ -1342,8 +1311,8 @@ def split_leakage_report(pairs: DataFrame, salt: str = "v1") -> DataFrame:
     """
     from java9_gc_log_parser_spark.operators.sampling import split_col
 
-    sa = split_col(F.col("doc_a"), salt)
-    sb = split_col(F.col("doc_b"), salt)
+    sa = split_col(F.col("doc_a"))
+    sb = split_col(F.col("doc_b"))
     return (
         pairs.select(
             F.least(sa, sb).alias("split_a"),

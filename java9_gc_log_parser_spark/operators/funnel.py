@@ -32,7 +32,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -42,37 +41,30 @@ __all__ = ["cohort_retention", "funnel_conversion"]
 _US_PER_DAY = 86_400_000_000
 
 
-def funnel_conversion(
-    events: DataFrame,
-    steps: Sequence[str] = ("signup", "view", "click", "purchase"),
-    horizon_days: int = 14,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    order_col: str = "event_id",
-) -> DataFrame:
-    """Ordered funnel over ``steps``: a user reaches stage i when an event of
-    type ``steps[i]`` occurs at-or-after their stage-(i-1) reach time and
-    within ``horizon_days`` of their stage-1 time.
+def funnel_conversion(events: DataFrame) -> DataFrame:
+    """Ordered funnel over ``steps`` (signup → view → click → purchase): a
+    user reaches stage i when an event of type ``steps[i]`` occurs
+    at-or-after their stage-(i-1) reach time and within 14 days of their
+    stage-1 time.
 
     Semantics (deterministic, engine-replayable): events are ordered by
-    ``(ts, order_col)`` per user; "after" means strictly later in that total
-    order (an equal-timestamp pair is ordered by ``order_col``), and stage
+    ``(ts, event_id)`` per user; "after" means strictly later in that total
+    order (an equal-timestamp pair is ordered by ``event_id``), and stage
     reach time is the EARLIEST qualifying event. Output, one row per step:
     ``(step_idx, step, n_users, conv_from_prev, conv_from_first)`` with
     conversions rounded to 6 dp (NULL when the denominator is 0).
     """
-    if len(steps) < 2:
-        raise ValueError("funnel needs at least 2 steps")
+    steps = ("signup", "view", "click", "purchase")
     # parquet timestamps arrive as TIMESTAMP_NTZ; unix_micros needs
     # TIMESTAMP (session tz is pinned UTC, so the cast is micro-identity)
     us = F.unix_micros(F.col("ts").cast("timestamp"))
-    horizon_us = int(horizon_days) * _US_PER_DAY
+    horizon_us = 14 * _US_PER_DAY
 
     base = events.select(
-        F.col(user_col).alias("_u"),
-        F.col(type_col).alias("_t"),
+        F.col("user_id").alias("_u"),
+        F.col("event_type").alias("_t"),
         us.alias("_ts"),
-        F.col(order_col).alias("_o"),
+        F.col("event_id").alias("_o"),
     )
     # One partitioning + sort, reused by every stage's window pass.
     w_prev = (
@@ -150,12 +142,8 @@ def funnel_conversion(
     ).select("_r.*")
 
 
-def cohort_retention(
-    events: DataFrame,
-    bucket_days: int = 7,
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Cohort-retention matrix: users grouped by first-seen time bucket
+def cohort_retention(events: DataFrame) -> DataFrame:
+    """Cohort-retention matrix: users grouped by first-seen 7-day bucket
     (cohort), counted distinct per ``age = activity_bucket - cohort_bucket``.
 
     Output, one row per observed (cohort, age):
@@ -164,11 +152,11 @@ def cohort_retention(
     equals the cohort's distinct-user total) rounded to 6 dp. Buckets are
     integer floor-divisions of epoch microseconds (engine-exact).
     """
-    bucket_us = int(bucket_days) * _US_PER_DAY
+    bucket_us = 7 * _US_PER_DAY
     b = (
         F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(bucket_us)
     ).cast("long")
-    base = events.select(F.col(user_col).alias("_u"), b.alias("_b"))
+    base = events.select(F.col("user_id").alias("_u"), b.alias("_b"))
     # Distinct (user, bucket) activity and per-user first bucket share the
     # user_id hash partitioning; the join is co-partitioned.
     activity = base.groupBy("_u", "_b").agg(F.count(F.lit(1)).alias("_dummy")).drop(
@@ -200,16 +188,9 @@ def cohort_retention(
     )
 
 
-def transition_matrix(
-    events: DataFrame,
-    actor: str = "user_id",
-    event: str = "event_type",
-    ts: str = "ts",
-    tiebreak: str = "event_id",
-    top_k: int = 5,
-) -> DataFrame:
-    """First-order Markov transition matrix over per-actor event
-    sequences: for every observed state, the ``top_k`` next states by
+def transition_matrix(events: DataFrame) -> DataFrame:
+    """First-order Markov transition matrix over per-user event
+    sequences: for every observed state, the ``top_k`` = 5 next states by
     transition count with the exact transition probability — the "what do
     users do after X" path-analysis rollup (and the empirical transition
     model a session-simulator or next-event prior trains on).
@@ -221,7 +202,7 @@ def transition_matrix(
     renormalized-over-survivors).
 
     Determinism contract: sequences are totally ordered by (ts integer
-    micros, ``tiebreak``); probability is one BIGINT/BIGINT division
+    micros, event_id); probability is one BIGINT/BIGINT division
     rounded to 6 dp at the boundary.
 
     Scale shape (100 TB): ONE corpus shuffle — the lead window partitions
@@ -231,17 +212,15 @@ def transition_matrix(
     window + WindowGroupLimit over that tiny matrix. A bot actor with
     10^8 events costs one linear window run — O(1) state per row.
     """
-    if top_k < 1:
-        raise ValueError(f"top_k must be >= 1, got {top_k}")
-    w = Window.partitionBy(actor).orderBy(
-        F.unix_micros(F.col(ts).cast("timestamp")), tiebreak
+    w = Window.partitionBy("user_id").orderBy(
+        F.unix_micros(F.col("ts").cast("timestamp")), "event_id"
     )
     pairs = (
         events.select(
-            F.col(actor),
-            F.col(event).alias("src_event"),
-            F.col(ts),
-            F.col(tiebreak),
+            F.col("user_id"),
+            F.col("event_type").alias("src_event"),
+            F.col("ts"),
+            F.col("event_id"),
         )
         .withColumn("dst_event", F.lead("src_event").over(w))
         .filter(F.col("dst_event").isNotNull())
@@ -256,7 +235,7 @@ def transition_matrix(
     return (
         counts.withColumn("_tot", F.sum("n").over(tot))
         .withColumn("rk", F.row_number().over(rk))
-        .filter(F.col("rk") <= top_k)
+        .filter(F.col("rk") <= 5)
         .select(
             "src_event",
             "dst_event",
@@ -269,15 +248,11 @@ def transition_matrix(
     )
 
 
-def touch_attribution(
-    events: DataFrame,
-    conversion_type: str = "purchase",
-    touch_types: tuple[str, ...] = ("view", "click", "signup"),
-    horizon_us: int = 21_600_000_000,
-) -> DataFrame:
+def touch_attribution(events: DataFrame) -> DataFrame:
     """First-touch / last-touch conversion attribution: every conversion
     is credited to the earliest (first-touch) and latest (last-touch)
-    qualifying touch event by the same user within ``horizon_us`` BEFORE
+    qualifying touch event (view, click or signup) by the same user within
+    6 hours BEFORE
     (or at) the conversion — the standard marketing-attribution rollup,
     restated as a composition of this repo's bounded range join (q63
     machinery: window-width bucket equi-joins, never an inequality-join
@@ -305,14 +280,14 @@ def touch_attribution(
     """
     from java9_gc_log_parser_spark.operators.asof import range_join
 
-    conv = events.filter(F.col("event_type") == conversion_type)
-    touch = events.filter(F.col("event_type").isin(*touch_types))
+    conv = events.filter(F.col("event_type") == "purchase")
+    touch = events.filter(F.col("event_type").isin("view", "click", "signup"))
     pairs = range_join(
         touch,
         conv,
         key="user_id",
         ts="ts",
-        window_us=int(horizon_us),
+        window_us=21_600_000_000,
         left_cols=("event_id", "event_type"),
         right_cols=("event_id", "value"),
     )

@@ -45,16 +45,16 @@ __all__ = ["pagerank_fixed", "synth_citation_edges", "triangle_count"]
 SCALE = 1_000_000_000_000
 
 
-def synth_citation_edges(docs: DataFrame, n_nodes: int, k: int = 2) -> DataFrame:
+def synth_citation_edges(docs: DataFrame, n_nodes: int) -> DataFrame:
     """Deterministic synthetic citation multigraph (test/bench scaffolding,
     like cdc.synth_mutated_snapshot — NOT a pipeline operator): every doc
-    emits ``k`` out-edges to ``md5(doc_id:edge:j) % n_nodes``. Self-loops
-    and parallel edges are kept (constant outdeg ``k`` — no dangling
+    emits 2 out-edges to ``md5(doc_id:edge:j) % n_nodes``. Self-loops
+    and parallel edges are kept (constant outdeg 2 — no dangling
     nodes), and the construction is md5-derived so the DuckDB oracle
     rebuilds the identical edge set from the raw documents view.
     """
     edges = None
-    for j in range(k):
+    for j in range(2):
         dst = (
             F.conv(
                 F.substring(
@@ -81,23 +81,19 @@ def pagerank_fixed(
     edges: DataFrame,
     n_nodes: int,
     outdeg: int,
-    n_iter: int = 5,
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """``n_iter`` fixed-point PageRank iterations (damping 0.85) over a
+    """Five fixed-point PageRank iterations (damping 0.85) over a
     constant-outdegree graph. See the module docstring for the integer
     contract. Returns ``(doc_id, rank_fp, rank)`` — ``rank_fp`` in SCALE
     micro-units (BIGINT, the oracle-compared value), ``rank`` the 9-dp
     human-readable double.
     """
-    if n_iter < 1:
-        raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     base = SCALE // n_nodes
     ranks = nodes.select(
-        F.col(id_col).alias("_id"), F.lit(base).cast("long").alias("_r")
+        F.col("doc_id").alias("_id"), F.lit(base).cast("long").alias("_r")
     )
-    node_ids = nodes.select(F.col(id_col).alias("_id"))
-    for _ in range(n_iter):
+    node_ids = nodes.select(F.col("doc_id").alias("_id"))
+    for _ in range(5):
         contribs = (
             edges.join(ranks, edges["src"] == ranks["_id"])
             .select(
@@ -116,7 +112,7 @@ def pagerank_fixed(
             ).alias("_num"),
         ).select("_id", F.expr("_num div 100").cast("long").alias("_r"))
     return ranks.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.col("_r").alias("rank_fp"),
         # plain division of the exact integer — NO final ROUND: Spark
         # rounds doubles through shortest-decimal BigDecimal (sees exact
@@ -128,8 +124,7 @@ def pagerank_fixed(
     )
 
 
-def triangle_count(edges: DataFrame, src: str = "src",
-                   dst: str = "dst") -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle census over an undirected view of ``edges`` —
     node-iterator++ ("forward") algorithm: orient every canonical edge
     from its lower-(degree, id) endpoint to the higher one, self-join the
@@ -152,8 +147,8 @@ def triangle_count(edges: DataFrame, src: str = "src",
     """
     e = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()

@@ -231,22 +231,16 @@ def micro_file_stats(docs: DataFrame, files_per_source: int = 32) -> DataFrame:
     )
 
 
-def compaction_plan(
-    file_stats: DataFrame,
-    target_bytes: int,
-    partition_col: str = "source",
-    order_col: str = "file_id",
-    size_col: str = "bytes",
-) -> DataFrame:
+def compaction_plan(file_stats: DataFrame, target_bytes: int) -> DataFrame:
     """Small-file compaction plan: within each partition, pack files (in
-    deterministic ``order_col`` order) into sequential bins of
+    deterministic ``file_id`` order) into sequential bins of
     ``>= target_bytes`` — ``bin = exclusive_prefix_sum(bytes) //
     target_bytes``, the same sequential-coalesce rule Spark's own file-scan
     packing and Iceberg's binpack rewrite use. The plan is the INPUT to a
     rewrite job (read each bin, write one file); planning itself touches
     only file METADATA.
 
-    Output, one row per (partition, bin): ``(<partition_col>, bin,
+    Output, one row per (partition, bin): ``(source, bin,
     n_files, total_bytes, first_file, last_file, over_target)`` —
     ``over_target`` marks bins a straddling large file pushed past 2x the
     target (the rewrite should split those instead of concatenating).
@@ -259,19 +253,19 @@ def compaction_plan(
     if target_bytes < 1:
         raise ValueError(f"target_bytes must be >= 1, got {target_bytes}")
     w = (
-        Window.partitionBy(partition_col)
-        .orderBy(order_col)
+        Window.partitionBy("source")
+        .orderBy("file_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     binned = file_stats.withColumn(
-        "_prefix", F.coalesce(F.sum(size_col).over(w), F.lit(0).cast("long"))
+        "_prefix", F.coalesce(F.sum("bytes").over(w), F.lit(0).cast("long"))
     ).withColumn("bin", F.expr(f"_prefix div {int(target_bytes)}").cast("int"))
-    return binned.groupBy(partition_col, "bin").agg(
+    return binned.groupBy("source", "bin").agg(
         F.count(F.lit(1)).cast("long").alias("n_files"),
-        F.sum(size_col).cast("long").alias("total_bytes"),
-        F.min(order_col).alias("first_file"),
-        F.max(order_col).alias("last_file"),
-        (F.sum(size_col) > 2 * int(target_bytes)).alias("over_target"),
+        F.sum("bytes").cast("long").alias("total_bytes"),
+        F.min("file_id").alias("first_file"),
+        F.max("file_id").alias("last_file"),
+        (F.sum("bytes") > 2 * int(target_bytes)).alias("over_target"),
     )
 
 

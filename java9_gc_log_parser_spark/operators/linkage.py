@@ -48,13 +48,13 @@ from pyspark.sql import functions as F
 __all__ = ["edit_distance_join", "normalized_title"]
 
 
-def normalized_title(text_col: str = "text", prefix: int = 24):
+def normalized_title():
     """Deterministic short normalized key: lowercase alnum+space of the
-    first ``prefix`` chars, trimmed — engine-identical in Spark and
+    first 24 chars of ``text``, trimmed — engine-identical in Spark and
     DuckDB (both 1-based substr, both replace-all regex)."""
     return F.trim(
         F.regexp_replace(
-            F.lower(F.substring(F.col(text_col), 1, prefix)),
+            F.lower(F.substring(F.col("text"), 1, 24)),
             "[^a-z0-9 ]",
             "",
         )
@@ -62,24 +62,22 @@ def normalized_title(text_col: str = "text", prefix: int = 24):
 
 
 def edit_distance_join(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    str_col: str = "title",
-    max_seg_freq: int | None = None,
+    df: DataFrame, max_seg_freq: int | None = None
 ) -> DataFrame:
-    """All UNORDERED pairs of rows whose ``str_col`` values are within
+    """All UNORDERED pairs of rows whose ``title`` values are within
     edit distance 1 (including exact duplicates, ed=0), found via
     PassJoin 2-segment blocking + exact levenshtein verification.
 
-    Output: ``(a_id, b_id, ed, len_a, len_b)`` with ``a_id < b_id``.
+    Output: ``(a_id, b_id, ed, len_a, len_b)`` with ``a_id < b_id`` (the
+    rows' ``doc_id``).
     Strings shorter than 2 chars are excluded (no 2-segmentation exists;
     at title granularity those are empty/degenerate keys anyway).
     """
     t = df.select(
-        F.col(id_col).alias("rid"),
-        F.col(str_col).alias("s"),
-        F.length(str_col).alias("m"),
-    ).filter(F.length(str_col) >= 2)
+        F.col("doc_id").alias("rid"),
+        F.col("title").alias("s"),
+        F.length("title").alias("m"),
+    ).filter(F.length("title") >= 2)
 
     # ---- index keys: my own 2 segments, tagged with my length ----------
     idx = t.select(
@@ -183,8 +181,6 @@ def edit_distance_join(
 
 def blocking_quality_audit(
     df: DataFrame,
-    id_col: str = "doc_id",
-    str_col: str = "title",
     max_seg_freq: int = 1,
     store_path: str | None = None,
 ) -> DataFrame:
@@ -213,16 +209,14 @@ def blocking_quality_audit(
     their keys and collapses to one row via map-side-combinable aggs +
     a 1×1 combine join.
     """
-    capped = edit_distance_join(
-        df, id_col=id_col, str_col=str_col, max_seg_freq=max_seg_freq
-    ).select("a_id", "b_id")
+    capped = edit_distance_join(df, max_seg_freq=max_seg_freq).select(
+        "a_id", "b_id"
+    )
     if store_path is not None:
         capped.write.mode("overwrite").parquet(store_path)
         spark = df.sparkSession
         capped = spark.read.parquet(store_path).select("a_id", "b_id")
-    exact = edit_distance_join(df, id_col=id_col, str_col=str_col).select(
-        "a_id", "b_id"
-    )
+    exact = edit_distance_join(df).select("a_id", "b_id")
     j = exact.join(
         capped.withColumn("_hit", F.lit(1)), ["a_id", "b_id"], "left"
     )

@@ -235,9 +235,7 @@ def _decode_image(payload: bytes):
     return None
 
 
-def decode_and_featurize(
-    assets: DataFrame, feat_dim: int = 8, decoder: str = "stub"
-) -> DataFrame:
+def decode_and_featurize(assets: DataFrame, decoder: str = "stub") -> DataFrame:
     """mapInPandas decode/feature stage over (asset_id, modality, content).
 
     ``decoder="stub"`` (default): metadata by deterministic byte arithmetic
@@ -269,6 +267,7 @@ def decode_and_featurize(
     r2-verdict defect: a per-content ``np.frombuffer`` + per-item decode in
     a list comprehension was O(rows) interpreter work per batch).
     """
+    feat_dim = 8
     import numpy as np
 
     if decoder not in ("stub", "real"):
@@ -380,8 +379,9 @@ def documents_as_assets(docs: DataFrame) -> DataFrame:
     )
 
 
-def frame_sample(features: DataFrame, every_n: int = 30) -> DataFrame:
-    """Frame-sampling plan for video assets: one row per sampled frame index.
+def frame_sample(features: DataFrame) -> DataFrame:
+    """Frame-sampling plan for video assets: one row per sampled frame index
+    (every 30th frame).
 
     Pure columnar explode of a sequence — the shuffle-free shape a real
     frame-extraction stage would feed (frame decode itself would be another
@@ -390,7 +390,7 @@ def frame_sample(features: DataFrame, every_n: int = 30) -> DataFrame:
     return vids.select(
         "asset_id",
         F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
+            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(30))
         ).alias("frame_idx"),
     )
 

@@ -63,7 +63,7 @@ def cents(col: Column | str) -> Column:
     return F.round(c * 100).cast("long")
 
 
-def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-02") -> DataFrame:
+def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H-Q1-shaped pricing summary by (returnflag, linestatus).
 
     All sums are exact-integer (cents / e4 / e6); one division + round(6)
@@ -77,7 +77,7 @@ def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-02") -> DataFram
     charge_e6 = pc * (100 - dc) * (100 + tc)
     n = F.count(F.lit(1))
     return (
-        lineitem.filter(F.col("l_shipdate") <= F.lit(cutoff).cast("timestamp"))
+        lineitem.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum(qc) / 100.0, 6).alias("sum_qty"),
@@ -98,9 +98,6 @@ def star_revenue_by_nation(
     customer: DataFrame,
     nation: DataFrame,
     region: DataFrame,
-    region_name: str = "ASIA",
-    date_lo: str = "1996-01-01",
-    date_hi: str = "1998-01-01",
 ) -> DataFrame:
     """Revenue per customer nation for one region and order-date window
     (TPC-H-Q5-shaped, without the supplier leg).
@@ -115,12 +112,12 @@ def star_revenue_by_nation(
             customer.c_nationkey == nation.n_nationkey,
         )
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .filter(F.col("r_name") == region_name)
+        .filter(F.col("r_name") == "ASIA")
         .select("c_custkey", "n_name")
     )
     ords = orders.filter(
-        (F.col("o_orderdate") >= F.lit(date_lo).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(date_hi).cast("timestamp"))
+        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
     rev_e4 = cents("l_extendedprice") * (100 - cents("l_discount"))
     return (

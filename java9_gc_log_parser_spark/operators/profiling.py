@@ -44,15 +44,9 @@ __all__ = [
 _US_PER_DAY = 86_400_000_000
 
 
-def json_payload_audit(
-    events: DataFrame,
-    bucket_days: int = 7,
-    field: str = "k",
-    props_col: str = "props",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """Semi-structured payload audit: parse the JSON ``props_col``, extract
-    one typed field, and report per (event_type, key-signature, time bucket)
+def json_payload_audit(events: DataFrame) -> DataFrame:
+    """Semi-structured payload audit: parse the JSON ``props``, extract
+    its integer field ``k``, and report per (event_type, key-signature, 7-day bucket)
     the parse coverage and the field's exact-integer stats — the drift gate
     a log pipeline runs on free-form telemetry payloads before trusting a
     downstream extraction (the reference's analogue is its closed tag/level
@@ -73,16 +67,14 @@ def json_payload_audit(
     map-combinable hash agg; output cardinality is (types x signatures x
     buckets), tiny. Hot payload shapes pre-combine map-side.
     """
-    bucket_us = int(bucket_days) * _US_PER_DAY
+    bucket_us = 7 * _US_PER_DAY
     b = (
         F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(bucket_us)
     ).cast("long")
-    v = F.get_json_object(F.col(props_col), f"$.{field}").try_cast("long")
-    key_sig = F.array_join(
-        F.array_sort(F.json_object_keys(F.col(props_col))), ","
-    )
+    v = F.get_json_object(F.col("props"), "$.k").try_cast("long")
+    key_sig = F.array_join(F.array_sort(F.json_object_keys(F.col("props"))), ",")
     base = events.select(
-        F.col(type_col).alias("event_type"),
+        "event_type",
         F.coalesce(key_sig, F.lit("<invalid>")).alias("key_sig"),
         b.alias("_b"),
         v.alias("_v"),
@@ -121,11 +113,7 @@ def json_payload_audit(
     )
 
 
-def value_anomaly_profile(
-    events: DataFrame,
-    key: str = "event_type",
-    value: str = "value",
-) -> DataFrame:
+def value_anomaly_profile(events: DataFrame) -> DataFrame:
     """Per-key z-score anomaly profile over a numeric telemetry column:
     how many observations sit beyond 1/2/3 population standard deviations,
     plus the max |z| — the sanity gate a pipeline runs before trusting a
@@ -142,7 +130,7 @@ def value_anomaly_profile(
     comparison to DOUBLE of the exact integer subterms — identical
     rounding both engines — or DECIMAL).
 
-    Output, one row per key: ``(<key>, n, v_mean, v_std, max_absz,
+    Output, one row per key: ``(event_type, n, v_mean, v_std, max_absz,
     n_over_1s, n_over_2s, n_over_3s)`` — mean/std/max_absz 6-dp, NULL
     std/z when the key's variance is 0 or n < 2.
 
@@ -150,6 +138,7 @@ def value_anomaly_profile(
     (moments, then exceedance counts) with the tiny per-key moment table
     broadcast back between them — no window, no sort, no holistic state.
     """
+    key, value = "event_type", "value"
     centi = F.floor(F.col(value) * 100).cast("long")
     base = events.filter(F.col(value).isNotNull()).select(
         F.col(key), centi.alias("_v")
@@ -199,8 +188,8 @@ def value_anomaly_profile(
     )
 
 
-def key_skew_report(df: DataFrame, key: str, top_k: int = 10) -> DataFrame:
-    """Top-``top_k`` hottest values of ``key`` with share and hot-factor.
+def key_skew_report(df: DataFrame, key: str) -> DataFrame:
+    """Top-10 hottest values of ``key`` with share and hot-factor.
 
     Output: ``(rank, <key>, n_rows, share, hot_factor)`` where share is the
     value's fraction of all rows and hot_factor is its count relative to a
@@ -212,8 +201,8 @@ def key_skew_report(df: DataFrame, key: str, top_k: int = 10) -> DataFrame:
         F.sum("n_rows").cast("double").alias("_total"),
         F.count(F.lit(1)).cast("double").alias("_k"),
     )
-    top = counts.orderBy(F.col("n_rows").desc(), F.col(key).asc()).limit(top_k)
-    # rank within the already-limited top-k: a single tiny partition
+    top = counts.orderBy(F.col("n_rows").desc(), F.col(key).asc()).limit(10)
+    # rank within the already-limited top-10: a single tiny partition
     w = F.row_number().over(
         Window.orderBy(F.col("n_rows").desc(), F.col(key).asc())
     )
@@ -231,23 +220,19 @@ def key_skew_report(df: DataFrame, key: str, top_k: int = 10) -> DataFrame:
     )
 
 
-def length_outlier_gate(
-    docs: DataFrame,
-    group_col: str = "source",
-    lo_q: float = 0.05,
-    hi_q: float = 0.95,
-) -> DataFrame:
+def length_outlier_gate(docs: DataFrame) -> DataFrame:
     """Per-group dynamic length gate: keep docs whose token count lies
-    within the group's [lo_q, hi_q] exact percentile band.
+    within its ``source``'s [p5, p95] exact percentile band.
 
     Output, one row per doc:
-    ``(doc_id, <group_col>, n_tokens, lo, hi, keep)`` — lo/hi are the
+    ``(doc_id, source, n_tokens, lo, hi, keep)`` — lo/hi are the
     group's interpolated percentile thresholds (6 dp), keep compares the
     integer token count against the UNROUNDED thresholds (an integer can
     only tie a threshold when the percentile lands exactly on a rank, where
     interpolation is exact in both engines, so the comparison is
     engine-stable).
     """
+    group_col, lo_q, hi_q = "source", 0.05, 0.95
     with_n = docs.select(
         "doc_id",
         F.col(group_col),
@@ -270,20 +255,14 @@ def length_outlier_gate(
     )
 
 
-def trend_ols(
-    events: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    value: str = "value",
-    origin_hours: int = 473_352,  # 2024-01-01T00:00Z in epoch hours
-) -> DataFrame:
+def trend_ols(events: DataFrame) -> DataFrame:
     """Per-key ordinary-least-squares trend line of ``value`` over time —
     the closed-form slope/intercept/R² from five map-combinable moment
     sums (n, Σx, Σy, Σxy, Σx², Σy²): the per-metric drift detector that
     answers "is this telemetry channel trending, and how fast" in ONE
     hash aggregation over the corpus, no iteration, no sampling.
 
-    Determinism contract: x = hours since ``origin_hours`` (exact BIGINT
+    Determinism contract: x = hours since 2024-01-01T00:00Z (exact BIGINT
     from integer division of epoch micros), y = exact centi-units; all
     six moments are order-independent BIGINT sums, and the slope /
     intercept / R² derive from them by a fixed float op tree rounded to
@@ -300,10 +279,12 @@ def trend_ols(
     — both engines' casts and IEEE ops are correctly rounded, so the
     doubles stay bit-identical.
 
-    Output: ``(<key>, n, hours_span, slope_per_hour, intercept, r2)`` —
+    Output: ``(event_type, n, hours_span, slope_per_hour, intercept, r2)`` —
     slope/intercept in VALUE units (centi scaling divided back out);
     groups with zero x-variance return NULL slope/intercept/r2.
     """
+    key, ts, value = "event_type", "ts", "value"
+    origin_hours = 473_352  # 2024-01-01T00:00Z in epoch hours
     x = (
         F.unix_micros(F.col(ts).cast("timestamp")) / F.lit(3_600_000_000)
     ).cast("long") - F.lit(origin_hours)
@@ -367,13 +348,9 @@ def trend_ols(
     )
 
 
-def source_divergence(
-    docs: DataFrame,
-    group: str = "source",
-    top_vocab: int = 50,
-) -> DataFrame:
+def source_divergence(docs: DataFrame) -> DataFrame:
     """Per-source token-distribution drift: Jensen-Shannon divergence of
-    each source's token distribution (over the global top-``top_vocab``
+    each source's token distribution (over the global top-50
     vocabulary plus one ``(oov)`` mass bucket, so distributions always
     sum to 1) against the corpus-wide distribution — the "which feed
     changed" screen that catches a scraper regression or an upstream
@@ -396,14 +373,15 @@ def source_divergence(
     makes missing (source, token) cells contribute their 0.5·p_g·ln 2
     mass instead of silently vanishing.
 
-    Output: ``(<group>, n_tokens, jsd)`` — jsd in [0, ln 2], 6 dp.
+    Output: ``(source, n_tokens, jsd)`` — jsd in [0, ln 2], 6 dp.
     """
     from java9_gc_log_parser_spark.operators.text_analysis import (
         tokens_col,
     )
 
+
     stream = docs.select(
-        F.col(group).alias("src"),
+        F.col("source").alias("src"),
         F.explode(tokens_col(F.lower(F.col("text")))).alias("tok"),
     )
     gcount = stream.groupBy("tok").agg(
@@ -411,7 +389,7 @@ def source_divergence(
     )
     vocab = gcount.orderBy(
         F.col("n_g").desc(), F.col("tok").asc()
-    ).limit(top_vocab)
+    ).limit(50)
     tagged = stream.join(
         F.broadcast(vocab.select("tok", F.lit(True).alias("_in"))),
         "tok",
@@ -454,7 +432,7 @@ def source_divergence(
             F.sum("_tn").alias("_jn"),
         )
         .select(
-            F.col("src").alias(group),
+            F.col("src").alias("source"),
             F.col("n_tokens"),
             F.round(F.col("_jn").cast("double") / F.lit(1e9), 6).alias(
                 "jsd"
@@ -623,12 +601,7 @@ def stats_report(
     )
 
 
-def seasonal_anomaly(
-    events: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    value: str = "value",
-) -> DataFrame:
+def seasonal_anomaly(events: DataFrame) -> DataFrame:
     """Seasonality-aware anomaly screen: each (key, DAY, hour-of-day)
     cell's mean is tested against the LEAVE-ONE-OUT baseline of the same
     (key, hour-of-day) across all OTHER days — "is tonight's 3am error
@@ -651,9 +624,10 @@ def seasonal_anomaly(
     touched once. Cells with a degenerate baseline (< 2 other-day rows
     or zero variance) report NULL flag rather than a fake verdict.
 
-    Output: ``(<key>, day, hour, n_day, mean_day, mean_base,
+    Output: ``(event_type, day, hour, n_day, mean_day, mean_base,
     is_anomaly)`` per observed cell.
     """
+    key, ts, value = "event_type", "ts", "value"
     cells = (
         events.filter(F.col(value).isNotNull())
         .select(
@@ -720,12 +694,7 @@ def seasonal_anomaly(
     )
 
 
-def mad_outlier_profile(
-    events: DataFrame,
-    key: str = "event_type",
-    value: str = "value",
-    cutoff: float = 3.5,
-) -> DataFrame:
+def mad_outlier_profile(events: DataFrame) -> DataFrame:
     """Robust (median/MAD) outlier profile per key — the
     breakdown-point-0.5 complement to the two moment-based screens:
     q98's global z-score and q118's seasonal z both use mean/variance,
@@ -738,7 +707,7 @@ def mad_outlier_profile(
     median is Spark's exact interpolating `percentile`, which q73
     already pins as bit-equal to DuckDB's `quantile_cont`; the absolute
     deviations feed a second exact percentile; the flag compares one
-    fixed float op tree (0.6745·|v−med| > cutoff·MAD) on doubles both
+    fixed float op tree (0.6745·|v−med| > 3.5·MAD) on doubles both
     engines derive identically. Keys where MAD = 0 (>half the values
     identical) report NULL rate — the modified z is undefined there,
     not zero.
@@ -748,9 +717,10 @@ def mad_outlier_profile(
     cardinality is the small dimension; for corpus-wide exact order
     statistics use q112's two-pass selection instead.
 
-    Output: one row per key ``(<key>, n, med, mad, n_outliers,
+    Output: one row per key ``(event_type, n, med, mad, n_outliers,
     outlier_rate)`` — med/mad reported in value units (6 dp).
     """
+    key, value = "event_type", "value"
     base = events.filter(F.col(value).isNotNull()).select(
         F.col(key), F.floor(F.col(value) * 100).cast("long").alias("_vc")
     )
@@ -774,7 +744,7 @@ def mad_outlier_profile(
             F.when(
                 F.col("_mad") > 0,
                 (F.lit(0.6745) * F.col("_ad")
-                 > F.lit(float(cutoff)) * F.col("_mad")).cast("long"),
+                 > F.lit(3.5) * F.col("_mad")).cast("long"),
             ),
         )
         .groupBy(key)
@@ -802,14 +772,10 @@ def mad_outlier_profile(
 AB_SALT = "ab:v1"
 
 
-def ab_proportion_test(
-    events: DataFrame,
-    outcome_type: str = "error",
-    salt: str = AB_SALT,
-) -> DataFrame:
+def ab_proportion_test(events: DataFrame) -> DataFrame:
     """Two-proportion z-test between hash-assigned cohorts — the A/B
     readout every event pipeline ends in: is the outcome rate (here the
-    ``outcome_type`` share of events) different between cohort A and B?
+    ``error`` share of events) different between cohort A and B?
 
     Cohorts are deterministic md5 halves of the user-id space (first hex
     nibble 0-7 → A), so assignment is reproducible anywhere, survives
@@ -825,13 +791,13 @@ def ab_proportion_test(
     """
     is_a = (
         F.substring(
-            F.md5(F.concat(F.col("user_id").cast("string"), F.lit(":" + salt))),
+            F.md5(F.concat(F.col("user_id").cast("string"), F.lit(":" + AB_SALT))),
             1,
             1,
         )
         < F.lit("8")
     )
-    hit = F.col("event_type") == outcome_type
+    hit = F.col("event_type") == "error"
     agg = events.agg(
         F.sum(is_a.cast("long")).alias("n_a"),
         F.sum((is_a & hit).cast("long")).alias("x_a"),

@@ -153,10 +153,7 @@ def data_contract_audit(
     return audit.withColumn("ok", F.col("n_violations") == 0)
 
 
-def benford_audit(
-    events: DataFrame,
-    value: str = "value",
-) -> DataFrame:
+def benford_audit(events: DataFrame) -> DataFrame:
     """First-significant-digit (Benford) audit of a positive measure
     column — the classic forensic screen for fabricated, clipped, or
     unit-mangled telemetry: organically generated multiplicative
@@ -182,9 +179,9 @@ def benford_audit(
     data. (chi-square is one more arithmetic column downstream; kept out
     so the output stays a pure count table.)
     """
-    vc = F.floor(F.col(value) * 100).cast("long")
+    vc = F.floor(F.col("value") * 100).cast("long")
     counted = (
-        events.filter(F.col(value).isNotNull())
+        events.filter(F.col("value").isNotNull())
         .select(
             F.when(vc >= 1, F.substring(vc.cast("string"), 1, 1))
             .otherwise(F.lit(None))

@@ -39,7 +39,6 @@ PII_PATTERNS: tuple[tuple[str, str], ...] = (
 def redact(
     docs: DataFrame,
     patterns: tuple[tuple[str, str], ...] = PII_PATTERNS,
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-doc match counts + fully redacted text.
 
@@ -48,12 +47,12 @@ def redact(
     is the sequential rewrite described in the module docstring.
     """
     counts = [
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0)))
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0)))
         .cast("long")
         .alias(f"n_{name}")
         for name, pat in patterns
     ]
-    redacted = F.col(text_col)
+    redacted = F.col("text")
     for name, pat in patterns:
         redacted = F.regexp_replace(redacted, pat, f"<{name.upper()}>")
     return docs.select("doc_id", *counts, redacted.alias("redacted_text"))
@@ -61,7 +60,6 @@ def redact(
 
 def redaction_oracle_sql(
     patterns: tuple[tuple[str, str], ...] = PII_PATTERNS,
-    table: str = "documents",
 ) -> str:
     """DuckDB SQL computing byte-identical output to :func:`redact`.
 
@@ -77,4 +75,4 @@ def redaction_oracle_sql(
     redacted = "text"
     for name, pat in patterns:
         redacted = f"regexp_replace({redacted}, '{pat}', '<{name.upper()}>', 'g')"
-    return f"SELECT doc_id,\n  {counts},\n  {redacted} AS redacted_text\nFROM {table}"
+    return f"SELECT doc_id,\n  {counts},\n  {redacted} AS redacted_text\nFROM documents"

@@ -52,16 +52,13 @@ BLOOM_M_BITS = 4096
 BLOOM_K = 4
 
 
-def bloom_positions(
-    key_col: Column, k: int = BLOOM_K, m_bits: int = BLOOM_M_BITS
-) -> list[Column]:
-    """The k bit positions of a key: 4 md5 hex chars (0..65535) % m_bits.
+def bloom_positions(key_col: Column) -> list[Column]:
+    """The BLOOM_K bit positions of a key: 4 md5 hex chars (0..65535) %
+    BLOOM_M_BITS.
 
     String-built, integer-folded — the exact expression the oracle redoes
     with ('0x' || substr(md5(...), 1, 4))::INT % m_bits.
     """
-    if m_bits <= 0 or 65536 % m_bits != 0:
-        raise ValueError(f"m_bits must divide 65536, got {m_bits}")
     return [
         F.conv(
             F.substring(
@@ -72,19 +69,17 @@ def bloom_positions(
             16,
             10,
         ).cast("int")
-        % m_bits
-        for r in range(k)
+        % BLOOM_M_BITS
+        for r in range(BLOOM_K)
     ]
 
 
-def packed_bloom(
-    keys: DataFrame, key: str, k: int = BLOOM_K, m_bits: int = BLOOM_M_BITS
-) -> DataFrame:
+def packed_bloom(keys: DataFrame, key: str) -> DataFrame:
     """The bloom as one row ``(_words: array<long>, _n_bits: long)`` —
     m_bits/64 packed longs (word w holds positions [64w, 64w+64)) plus the
     set-bit count for the audit. Positions are distinct before packing, so
     the per-word SUM of 2^(pos%64) sets each bit exactly once."""
-    pos = bloom_positions(F.col(key), k, m_bits)
+    pos = bloom_positions(F.col(key))
     distinct_pos = (
         keys.select(F.explode(F.array(*pos)).alias("pos")).distinct()
     )
@@ -96,7 +91,7 @@ def packed_bloom(
         ).alias("bits"),
         F.count(F.lit(1)).alias("n"),
     )
-    n_words = m_bits // 64
+    n_words = BLOOM_M_BITS // 64
     return words.agg(
         F.map_from_arrays(
             F.collect_list("w"), F.collect_list("bits")
@@ -113,13 +108,7 @@ def packed_bloom(
     )
 
 
-def bloom_prune_audit(
-    fact: DataFrame,
-    keys: DataFrame,
-    key: str,
-    k: int = BLOOM_K,
-    m_bits: int = BLOOM_M_BITS,
-) -> DataFrame:
+def bloom_prune_audit(fact: DataFrame, keys: DataFrame, key: str) -> DataFrame:
     """Prune ``fact`` by the bloom of ``keys[key]`` and AUDIT the filter.
 
     Returns one row:
@@ -134,14 +123,14 @@ def bloom_prune_audit(
     bitwise probe + broadcast membership join -> ONE map-combinable global
     agg. The fact side never shuffles.
     """
-    bloom = packed_bloom(keys, key, k, m_bits)
+    bloom = packed_bloom(keys, key)
     members = keys.select(key).distinct().withColumn("_member", F.lit(True))
 
     def _hit(p):
         word = F.element_at(F.col("_words"), (p / 64).cast("int") + 1)
         return F.getbit(word, (p % 64).cast("int")) == 1
 
-    probe = F.array(*bloom_positions(F.col(key), k, m_bits))
+    probe = F.array(*bloom_positions(F.col(key)))
     flagged = (
         fact.select(key)
         .crossJoin(F.broadcast(bloom))

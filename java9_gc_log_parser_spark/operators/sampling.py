@@ -21,22 +21,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-DEFAULT_SPLITS = (("train", 0.8), ("val", 0.1), ("test", 0.1))
+SPLITS = (("train", 0.8), ("val", 0.1), ("test", 0.1))
 
 
-def split_boundaries(
-    splits: tuple[tuple[str, float], ...] = DEFAULT_SPLITS,
-) -> list[tuple[str, str]]:
+def split_boundaries() -> list[tuple[str, str]]:
     """[(name, exclusive upper hex bound), ...] with the last bound 'ffff'+.
 
     Cumulative fractions are mapped to floor(f * 65536) and rendered as
     4-char lowercase hex, the exact strings the oracle SQL compares against.
     """
-    total = sum(f for _, f in splits)
-    if abs(total - 1.0) > 1e-9:
-        raise ValueError(f"split fractions must sum to 1, got {total}")
     out, acc = [], 0.0
-    for name, frac in splits:
+    for name, frac in SPLITS:
         acc += frac
         out.append((name, format(min(65536, int(acc * 65536)), "04x")))
     # make the last bucket inclusive of every hash value
@@ -50,46 +45,31 @@ def _bucket(id_col: Column, salt: str) -> Column:
     )
 
 
-def hash_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    salt: str = "v1",
-    splits: tuple[tuple[str, float], ...] = DEFAULT_SPLITS,
-) -> DataFrame:
-    """Append a deterministic ``split`` column (train/val/test by default).
+def hash_split(df: DataFrame) -> DataFrame:
+    """Append a deterministic train/val/test ``split`` column.
 
     Pure map-side expression — no shuffle, survives repartitioning and
-    re-ingestion unchanged, reproducible outside Spark from (id, salt).
+    re-ingestion unchanged, reproducible outside Spark from (doc_id, "v1").
     """
-    return df.withColumn("split", split_col(F.col(id_col), salt, splits))
+    return df.withColumn("split", split_col(F.col("doc_id")))
 
 
-def split_col(
-    id_col: Column,
-    salt: str = "v1",
-    splits: tuple[tuple[str, float], ...] = DEFAULT_SPLITS,
-) -> Column:
+def split_col(id_col: Column) -> Column:
     """The split assignment as a bare COLUMN expression (factored from
     hash_split): because membership is a pure function of (id, salt), any
     operator can classify an id WITHOUT joining the corpus — e.g. the
     q140 leakage audit labels both ends of a near-dup pair map-side."""
-    b = _bucket(id_col, salt)
+    b = _bucket(id_col, "v1")
     expr = None
-    for name, bound in split_boundaries(splits):
+    for name, bound in split_boundaries():
         cond = b < F.lit(bound)
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     return expr
 
 
-def stratified_sample(
-    df: DataFrame,
-    group_col: str = "source",
-    n_per_group: int = 10,
-    id_col: str = "doc_id",
-    salt: str = "v1",
-) -> DataFrame:
-    """Deterministic exact-quota sample: the ``n_per_group`` records of each
-    group with the smallest (hash bucket, id) — stable across runs and
+def stratified_sample(df: DataFrame) -> DataFrame:
+    """Deterministic exact-quota sample: the 10 records of each ``source``
+    with the smallest (hash bucket, doc_id) — stable across runs and
     re-shards like :func:`hash_split`, but with an exact per-stratum count
     (corpus-mixing quotas need exact counts, not expected fractions).
 
@@ -100,85 +80,64 @@ def stratified_sample(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(group_col).orderBy(
-        _bucket(F.col(id_col), salt), F.col(id_col)
+    w = Window.partitionBy("source").orderBy(
+        _bucket(F.col("doc_id"), "v1"), F.col("doc_id")
     )
     return (
         df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= n_per_group)
+        .filter(F.col("_rk") <= 10)
         .drop("_rk")
     )
 
 
-def hash_sample(
-    df: DataFrame,
-    fraction: float,
-    id_col: str = "doc_id",
-    salt: str = "v1",
-) -> DataFrame:
+def hash_sample(df: DataFrame, fraction: float) -> DataFrame:
     """Deterministic ``fraction`` subsample by the same stable hash.
 
     Unlike ``DataFrame.sample`` the kept set is a pure function of
-    (id, salt): stable across runs/partitionings, and nested samples with
-    the same salt are subsets of each other (fraction 0.1 ⊂ fraction 0.2).
+    (doc_id, "v1"): stable across runs/partitionings, and nested samples
+    are subsets of each other (fraction 0.1 ⊂ fraction 0.2).
     """
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0,1], got {fraction}")
     bound = "g" if fraction >= 1.0 else format(int(fraction * 65536), "04x")
-    return df.filter(_bucket(F.col(id_col), salt) < F.lit(bound))
+    return df.filter(_bucket(F.col("doc_id"), "v1") < F.lit(bound))
 
 
-def shard_assign(
-    df: DataFrame,
-    n_shards: int = 8,
-    id_col: str = "doc_id",
-    salt: str = "shard:v1",
-) -> DataFrame:
-    """Append a deterministic ``shard`` column in [0, n_shards) for training
-    export: a 10^12-row corpus is written as n_shards independent file sets
-    that any loader can re-derive membership for from (id, salt) alone.
+def shard_assign(df: DataFrame) -> DataFrame:
+    """Append a deterministic ``shard`` column in [0, 8) for training
+    export: a 10^12-row corpus is written as 8 independent file sets that
+    any loader can re-derive membership for from (doc_id, "shard:v1") alone.
 
-    shard = int(first 4 hex chars of md5(id || ':' || salt), 16) % n_shards —
+    shard = int(first 4 hex chars of md5(id || ':' || salt), 16) % 8 —
     hash-based (not id % n) so clustered/sequential id ranges still balance.
     Map-only, no shuffle; at write time ``df.repartition(n, 'shard')``
     co-locates each shard's rows (one shuffle, the export's only one).
 
     Balance bound: the modulo folds a 65,536-value bucket space, so shards
     receive either floor(65536/n) or ceil(65536/n) buckets — a relative
-    imbalance of at most n/65536. ``n_shards`` is capped at 4096 to keep
-    that bias under ~6% (at the old 65536 bound a non-power-of-2 count
-    could skew doc counts up to ~2x); power-of-2 counts are exactly even.
+    imbalance of at most n/65536; power-of-2 counts such as 8 are exactly
+    even.
     """
-    if not 1 <= n_shards <= 4096:
-        raise ValueError(f"n_shards must be in [1, 4096], got {n_shards}")
-    h = _bucket(F.col(id_col), salt)
-    return df.withColumn(
-        "shard", (F.conv(h, 16, 10).cast("int") % n_shards).cast("int")
-    )
+    h = _bucket(F.col("doc_id"), "shard:v1")
+    return df.withColumn("shard", (F.conv(h, 16, 10).cast("int") % 8).cast("int"))
 
 
-def shard_manifest(
-    docs: DataFrame,
-    n_shards: int = 8,
-    id_col: str = "doc_id",
-    salt: str = "shard:v1",
-) -> DataFrame:
+def shard_manifest(docs: DataFrame) -> DataFrame:
     """Per-shard export manifest: doc count, whitespace-token sum, id range.
 
     The rollup a shard writer emits next to its files so downstream loaders
     can size readers and verify completeness. One map-side-combinable hash
-    agg over the shard assignment — n_shards result rows.
+    agg over the shard assignment — 8 result rows.
     """
     from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
 
-    sharded = shard_assign(docs, n_shards, id_col, salt)
     return (
-        sharded.groupBy("shard")
+        shard_assign(docs).groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.size(tokens_col(F.col("text")))).alias("n_tokens"),
-            F.min(id_col).alias("min_id"),
-            F.max(id_col).alias("max_id"),
+            F.min("doc_id").alias("min_id"),
+            F.max("doc_id").alias("max_id"),
         )
         .select(
             "shard",
@@ -194,8 +153,6 @@ def mixture_sample(
     docs: DataFrame,
     weight_expr: Column,
     token_budget: float,
-    id_col: str = "doc_id",
-    salt: str = "mix:v1",
 ) -> DataFrame:
     """Deterministic token-budget data mixing: subsample each source so its
     share of the kept tokens tracks ``weight_expr`` (a per-row column giving
@@ -206,7 +163,7 @@ def mixture_sample(
     target_s / actual_s), and a doc is kept iff its stable md5 bucket
     (int of the first 4 hex chars, same mechanism as :func:`hash_split`)
     is < floor(frac_s * 65536). Keep decisions are therefore a pure
-    function of (id, salt, per-source token totals) — stable across runs,
+    function of (doc_id, "mix:v1", per-source token totals) — stable across runs,
     partitionings, and engines, and nested under a larger budget (a doc
     kept at budget B stays kept at B' > B).
 
@@ -235,12 +192,12 @@ def mixture_sample(
         "source",
         F.floor(frac * 65536).cast("int").alias("_bound"),
     )
-    bucket = F.conv(_bucket(F.col(id_col), salt), 16, 10).cast("int")
+    bucket = F.conv(_bucket(F.col("doc_id"), "mix:v1"), 16, 10).cast("int")
     return (
         base.join(F.broadcast(gates), "source")
         .filter(bucket < F.col("_bound"))
         .select(
-            F.col(id_col).cast("long").alias(id_col),
+            F.col("doc_id").cast("long").alias("doc_id"),
             "source",
             F.col("_nt").cast("long").alias("n_tokens"),
         )
@@ -251,8 +208,6 @@ def importance_resample(
     docs: DataFrame,
     target_source: str,
     k: int = 50,
-    n_buckets: int = 4096,
-    salt: str = "dsir",
 ) -> DataFrame:
     """DSIR-style importance resampling (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): select the k raw-corpus
@@ -267,7 +222,7 @@ def importance_resample(
 
     Mechanism (every step engine-portable and seed-free):
 
-    - features: word bigrams hashed into ``n_buckets`` buckets via the first
+    - features: word bigrams hashed into 4096 buckets via the first
       3 hex chars of md5(bigram) — a *string* bucket key, no hex->int
       conversion anywhere on the feature path.
     - two add-one-smoothed bag-of-buckets models: target = docs from
@@ -275,7 +230,7 @@ def importance_resample(
       lr(f) = ln((t_f+1)/(T+B)) - ln((r_f+1)/(R+B)), rounded 6dp so both
       engines carry identical per-bucket constants into the doc sum.
     - per-doc log-weight logw(d) = sum_f c_d(f) * lr(f), rounded 6dp.
-    - Gumbel key: u(d) = (hex6(md5(id||":"||salt)) + 0.5) / 16^6 — exactly
+    - Gumbel key: u(d) = (hex6(md5(id||":dsir")) + 0.5) / 16^6 — exactly
       representable in binary (v + 0.5 over a power of two), so Spark's
       single conv()/divide and the oracle's per-digit sum of 2^-4i terms
       produce bit-identical doubles; key = logw + (-ln(-ln(u))).  Top-k by
@@ -284,7 +239,7 @@ def importance_resample(
 
     Scale shape (100 TB): the per-doc feature table is one map-side
     combinable hash agg on (doc_id, bucket); both models reduce that table
-    to <= n_buckets rows, so the log-ratio dim and the two totals join back
+    to <= 4096 rows, so the log-ratio dim and the two totals join back
     by BROADCAST — the corpus-sized side never shuffles on the feature key.
     The final top-k is a TakeOrderedAndProject (per-partition heap + driver
     merge of k rows), never a global sort.  Skew: bucket keys are md5-uniform
@@ -292,23 +247,17 @@ def importance_resample(
     """
     from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
 
-    if not 1 <= n_buckets <= 4096:
-        raise ValueError(f"n_buckets must be in [1, 4096], got {n_buckets}")
     clash = [c for c in docs.columns if c.startswith("_ir_")]
     if clash:
         raise ValueError(
             f"input carries reserved staging column(s) {clash}; rename them"
         )
-    b = float(n_buckets)
+    b = 4096.0
     lt = tokens_col(F.lower(F.col("text")))
     base = docs.select("doc_id", "source", lt.alias("_ir_lt"))
     n_slots = F.greatest(F.size(F.col("_ir_lt")) - 1, F.lit(0))
-    # bucket key: 3 hex chars of md5(bigram), modulo-folded onto n_buckets
-    # by string prefix only when n_buckets == 4096 (the default); smaller
-    # bucket counts reuse the hex-string order to stay conversion-free.
-    n_hex = {16: 1, 256: 2, 4096: 3}.get(n_buckets)
-    if n_hex is None:
-        raise ValueError("n_buckets must be one of 16, 256, 4096")
+    # bucket key: 3 hex chars of md5(bigram) — 4096 buckets as a string
+    # prefix, conversion-free
     docf = (
         base.select(
             "doc_id",
@@ -330,7 +279,7 @@ def importance_resample(
                     )
                 ),
                 1,
-                n_hex,
+                3,
             ).alias("f"),
         )
         .groupBy("doc_id", "source", "f")
@@ -373,7 +322,7 @@ def importance_resample(
         F.substring(
             F.md5(
                 F.concat(
-                    F.col("doc_id").cast("string"), F.lit(":" + salt)
+                    F.col("doc_id").cast("string"), F.lit(":dsir")
                 )
             ),
             1,
@@ -416,8 +365,6 @@ def pack_sequences(
     docs: DataFrame,
     context_len: int = 512,
     n_streams: int = 8,
-    id_col: str = "doc_id",
-    salt: str = "pack:v1",
 ) -> DataFrame:
     """Concat-and-chunk sequence packing: lay the corpus out as a stream of
     tokens and cut it into fixed ``context_len`` training windows (the
@@ -429,13 +376,13 @@ def pack_sequences(
     curated corpus into fixed-length training sequences.
 
     Determinism: the layout must be a pure function of the corpus, not of
-    Spark's partitioning. Each doc hashes once (md5(id || ':' || salt));
+    Spark's partitioning. Each doc hashes once (md5(id || ':pack:v1'));
     the first 4 hex chars assign it to one of ``n_streams`` independent
     packing streams and the full 32-hex digest is its order key within the
     stream (total order: (digest, id) — ids break the astronomically
     unlikely digest tie). Offsets are then a running token sum in that
     order, and chunk ids are integer division by ``context_len``. Any
-    engine reproduces byte-identical layout from (id, salt) alone.
+    engine reproduces byte-identical layout from the ids alone.
 
     Scale shape (100 TB): ONE shuffle — hash-partition by stream — and one
     in-partition (spillable) sort per stream; the running sum is a single
@@ -462,9 +409,9 @@ def pack_sequences(
         raise ValueError(f"context_len must be >= 1, got {context_len}")
     if not 1 <= n_streams <= 4096:
         raise ValueError(f"n_streams must be in [1, 4096], got {n_streams}")
-    h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt)))
+    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":pack:v1")))
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         h.alias("_pk_h"),
         F.size(tokens_col(F.col("text"))).cast("long").alias("_pk_nt"),
     ).filter(F.col("_pk_nt") > 0)
@@ -474,7 +421,7 @@ def pack_sequences(
     ).cast("int")
     w = (
         Window.partitionBy("stream")
-        .orderBy(F.col("_pk_h"), F.col(id_col))
+        .orderBy(F.col("_pk_h"), F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     end = F.sum("_pk_nt").over(w)
@@ -483,7 +430,7 @@ def pack_sequences(
         base.withColumn("stream", stream)
         .withColumn("_pk_end", end)
         .select(
-            F.col(id_col).cast("long").alias(id_col),
+            F.col("doc_id").cast("long").alias("doc_id"),
             "stream",
             F.col("_pk_nt").alias("n_tokens"),
             (F.col("_pk_end") - F.col("_pk_nt")).alias("start_off"),
@@ -505,15 +452,13 @@ def epoch_order(
     docs: DataFrame,
     epoch: int = 0,
     n_shards: int = 8,
-    id_col: str = "doc_id",
-    salt: str = "order:v1",
 ) -> DataFrame:
     """Deterministic per-epoch global training order WITHOUT a global sort.
 
     Training jobs need a reproducible shuffle of the corpus per epoch —
     resumable mid-epoch, identical across re-runs and engines, different
     across epochs. ``rand()`` gives none of that. Here each doc's order
-    key is md5(id || ':' || salt || ':' || epoch): changing ``epoch``
+    key is md5(id || ':order:v1:' || epoch): changing ``epoch``
     re-permutes everything, while a fixed epoch is stable forever.
 
     The global order is DEFINED as (shard, key, id) where shard = first 4
@@ -539,18 +484,14 @@ def epoch_order(
     if not 1 <= n_shards <= 4096:
         raise ValueError(f"n_shards must be in [1, 4096], got {n_shards}")
     key = F.md5(
-        F.concat(
-            F.col(id_col).cast("string"), F.lit(f":{salt}:{int(epoch)}")
-        )
+        F.concat(F.col("doc_id").cast("string"), F.lit(f":order:v1:{int(epoch)}"))
     )
-    base = docs.select(F.col(id_col), key.alias("_eo_k")).withColumn(
+    base = docs.select(F.col("doc_id"), key.alias("_eo_k")).withColumn(
         "shard",
         (F.conv(F.substring("_eo_k", 1, 4), 16, 10).cast("int") % n_shards)
         .cast("int"),
     )
-    w_rank = Window.partitionBy("shard").orderBy(
-        F.col("_eo_k"), F.col(id_col)
-    )
+    w_rank = Window.partitionBy("shard").orderBy(F.col("_eo_k"), F.col("doc_id"))
     ranked = base.withColumn(
         "pos_in_shard", F.row_number().over(w_rank).cast("long")
     )
@@ -564,7 +505,7 @@ def epoch_order(
         (F.sum("_eo_n").over(w_off) - F.col("_eo_n")).alias("_eo_off"),
     )
     return ranked.join(F.broadcast(offsets), "shard").select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.lit(int(epoch)).cast("int").alias("epoch"),
         "shard",
         "pos_in_shard",
@@ -574,15 +515,15 @@ def epoch_order(
     )
 
 
-def chunk_sliding(
-    docs: DataFrame,
-    window: int = 64,
-    stride: int = 48,
-    id_col: str = "doc_id",
-) -> DataFrame:
+#: chunk_sliding's window and stride, in tokens (overlap 16)
+_CHUNK_WINDOW = 64
+_CHUNK_STRIDE = 48
+
+
+def chunk_sliding(docs: DataFrame) -> DataFrame:
     """Sliding-window token chunking with overlap: cut every document into
-    fixed-size token windows of ``window`` tokens advancing by ``stride``
-    (overlap = window - stride), the long-document complement of
+    fixed-size token windows of ``window`` = 64 tokens advancing by
+    ``stride`` = 48 (overlap = window - stride), the long-document complement of
     :func:`pack_sequences` — packing concatenates SHORT docs into fixed
     contexts, chunking splits LONG docs into overlapping ones (the standard
     RAG / pretraining long-doc treatment so no token is lost at a hard
@@ -604,12 +545,9 @@ def chunk_sliding(
     """
     from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
 
-    if window < 1:
-        raise ValueError(f"window must be >= 1, got {window}")
-    if not 1 <= stride <= window:
-        raise ValueError(f"stride must be in [1, window], got {stride}")
+    window, stride = _CHUNK_WINDOW, _CHUNK_STRIDE
     base = docs.select(
-        F.col(id_col), tokens_col(F.col("text")).alias("_ck_toks")
+        F.col("doc_id"), tokens_col(F.col("text")).alias("_ck_toks")
     ).withColumn("_ck_n", F.size("_ck_toks").cast("long"))
     n = F.col("_ck_n")
     n_chunks = F.when(n <= window, F.lit(1).cast("long")).otherwise(
@@ -623,7 +561,7 @@ def chunk_sliding(
             F.explode(F.sequence(F.lit(0).cast("long"), n_chunks - 1)),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("_ck_i").cast("int").alias("chunk_idx"),
             start.cast("long").alias("start_tok"),
             F.least(F.lit(window).cast("long"), n - start).alias("n_tok"),
@@ -640,16 +578,14 @@ def chunk_sliding(
 def weighted_priority_sample(
     docs: DataFrame,
     k: int = 200,
-    id_col: str = "doc_id",
-    salt: str = "wps:v1",
 ) -> DataFrame:
     """Deterministic weight-biased priority sampling: draw ``k`` documents
     with inclusion probability increasing in document weight (token count),
-    reproducibly — the same corpus and salt select the same k docs on any
+    reproducibly — the same corpus selects the same k docs on any
     engine, any partitioning, any run.
 
     Mechanism (priority-sampling family, Efraimidis–Spirakis shape): each
-    doc gets a deterministic uniform u in (0,1) from md5(id || ':' || salt)
+    doc gets a deterministic uniform u in (0,1) from md5(id || ':wps:v1')
     (8 hex chars -> 32-bit int, u = (i + 0.5) / 2^32) and priority
     ``u / w``; the k smallest priorities win. Every arithmetic step (add,
     divide-by-2^32, divide-by-w) is a correctly-rounded IEEE op on exact
@@ -671,20 +607,20 @@ def weighted_priority_sample(
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt)))
+    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":wps:v1")))
     u32 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
     u = (u32.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
     w = F.greatest(F.lit(1).cast("long"), F.size(tokens_col(F.col("text"))).cast("long"))
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         w.alias("weight"),
         (u / w.cast("double")).alias("_wp_pri"),
     )
     return (
-        base.orderBy(F.col("_wp_pri"), F.col(id_col))
+        base.orderBy(F.col("_wp_pri"), F.col("doc_id"))
         .limit(k)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "weight",
             F.floor(F.col("_wp_pri") * F.lit(1e12)).cast("long").alias("pri_e12"),
         )
@@ -693,13 +629,11 @@ def weighted_priority_sample(
 
 def rendezvous_shard(
     df: DataFrame,
-    id_col: str = "doc_id",
     n_shards: int = 8,
     out: str = "shard",
-    salt: str = "hrw:v1",
 ) -> DataFrame:
     """Rendezvous (highest-random-weight) shard assignment: shard =
-    argmax over s of ``md5(id || ':' || salt || ':' || s)``.
+    argmax over s of ``md5(doc_id || ':hrw:v1:' || s)``.
 
     The property ``shard_assign``'s modulo hashing cannot give: when the
     shard count grows n → n+k, a row moves IFF one of the k NEW shards
@@ -722,8 +656,8 @@ def rendezvous_shard(
         lambda s: F.struct(
             F.md5(
                 F.concat(
-                    F.col(id_col).cast("string"),
-                    F.lit(":" + salt + ":"),
+                    F.col("doc_id").cast("string"),
+                    F.lit(":hrw:v1:"),
                     s.cast("string"),
                 )
             ).alias("score"),
@@ -733,36 +667,27 @@ def rendezvous_shard(
     return df.withColumn(out, F.array_max(scores)["shard"])
 
 
-def reshard_movement_matrix(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_from: int = 8,
-    n_to: int = 10,
-) -> DataFrame:
-    """Movement matrix for an HRW reshard n_from → n_to: one row per
+def reshard_movement_matrix(df: DataFrame) -> DataFrame:
+    """Movement matrix for an HRW reshard 8 → 10: one row per
     (shard_from, shard_to) with its doc count — the audit a platform
     reads BEFORE executing a corpus re-layout, since off-diagonal mass
     is exactly the bytes that will be copied.
 
-    Under HRW growth every off-diagonal row must have shard_to >=
-    n_from (moves go only TO new shards) — asserted in tests, visible
+    Under HRW growth every off-diagonal row must have shard_to >= 8
+    (moves go only TO new shards) — asserted in tests, visible
     in the oracled matrix. Cost: two map-only assignments + ONE
-    shuffle of <= n_from × n_to tiny groups (map-side combined).
+    shuffle of <= 8 × 10 tiny groups (map-side combined).
     """
-    a = rendezvous_shard(df, id_col, n_from, out="shard_from")
-    b = rendezvous_shard(a, id_col, n_to, out="shard_to")
+    a = rendezvous_shard(df, 8, out="shard_from")
+    b = rendezvous_shard(a, 10, out="shard_to")
     return b.groupBy("shard_from", "shard_to").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
 
 
-def budget_waterfill(
-    docs: DataFrame,
-    budget_num: int = 3,
-    budget_den: int = 5,
-) -> DataFrame:
+def budget_waterfill(docs: DataFrame) -> DataFrame:
     """Max-min fair token-budget allocation across sources (water-filling):
-    given budget B = total_tokens * budget_num / budget_den, allocate
+    given budget B = total_tokens * 3 / 5, allocate
     ``a_s = min(supply_s, lambda)`` with ``sum(a_s) = B`` — the solver a
     mixture designer runs to split a training budget across corpora
     without starving small sources (the q47 mixture sampler then
@@ -775,8 +700,7 @@ def budget_waterfill(
     base = (B - sat_sum) div n_unsat with the first (B - sat_sum) mod
     n_unsat sources (same order) getting +1 — largest-remainder, all
     BIGINT, so the oracle replays allocation-for-allocation with zero
-    float anywhere. sum(allocation) == B by construction (== total
-    supply when B exceeds it).
+    float anywhere. sum(allocation) == B by construction.
 
     Scale shape: ONE corpus token-count agg (map-side combinable); the
     solver itself runs on the O(sources)-row table via windows — no
@@ -807,7 +731,7 @@ def budget_waterfill(
         .withColumn("_n", F.count(F.lit(1)).over(wall))
         .withColumn(
             "_B",
-            F.expr(f"_total * {budget_num} div {budget_den}").cast("long"),
+            F.expr("_total * 3 div 5").cast("long"),
         )
         .withColumn(
             "saturated",

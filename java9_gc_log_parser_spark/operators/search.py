@@ -31,7 +31,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .similarity import ann_topk_bruteforce
@@ -42,25 +42,17 @@ __all__ = ["hybrid_rrf_search"]
 _RRF_SCALE = 1_000_000
 
 
-def hybrid_rrf_search(
-    docs: DataFrame,
-    embeddings: DataFrame,
-    query_pred: Column | None = None,
-    k_leg: int = 20,
-    k_out: int = 10,
-    rrf_k: int = 60,
-) -> DataFrame:
-    """Hybrid search: for each query doc (default ``doc_id % 101 == 0``,
-    aligned with the embeddings' ``vec_id`` key space), fuse the top
-    ``k_leg`` keyword matches and the top ``k_leg`` cosine neighbors via
-    reciprocal-rank fusion; return the top ``k_out`` fused hits.
+def hybrid_rrf_search(docs: DataFrame, embeddings: DataFrame) -> DataFrame:
+    """Hybrid search: for each query doc (``doc_id % 101 == 0``, aligned
+    with the embeddings' ``vec_id`` key space), fuse the top ``k_leg`` = 20
+    keyword matches and the top 20 cosine neighbors via reciprocal-rank
+    fusion (``1 / (60 + rank)`` per leg); return the top 10 fused hits.
 
     Output: ``(query_id, doc_id, rrf_fp, sparse_rank, dense_rank,
     final_rank)`` — ``rrf_fp`` in 10^6 micro-units, leg ranks NULL when the
     doc appears in only one leg.
     """
-    if query_pred is None:
-        query_pred = F.col("doc_id") % 101 == 0
+    k_leg, k_out, rrf_k = 20, 10, 60
 
     # ---- sparse leg: quantized-idf keyword overlap ------------------------
     dterm = docs.select(
@@ -76,7 +68,7 @@ def hybrid_rrf_search(
             F.conv((F.expr("_n div _df")).cast("string"), 10, 2)
         ).cast("long").alias("_idf_fp"),
     )
-    qterms = idf.filter(query_pred).select(
+    qterms = idf.filter("doc_id % 101 = 0").select(
         F.col("doc_id").alias("query_id"), "term", "_idf_fp"
     )
     overlap = (
@@ -97,7 +89,7 @@ def hybrid_rrf_search(
     )
 
     # ---- dense leg: q19's exact cosine top-k ------------------------------
-    dense = ann_topk_bruteforce(embeddings, query_pred=None, k=k_leg).select(
+    dense = ann_topk_bruteforce(embeddings, k=k_leg).select(
         "query_id",
         F.col("neighbor_id").alias("id"),
         F.col("rank").alias("dense_rank"),

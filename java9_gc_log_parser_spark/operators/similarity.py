@@ -19,6 +19,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 EPS = 1e-12
+#: the query slice every top-k operator searches for
+_QUERIES = "vec_id % 101 = 0"
+#: embedding dimensions whose signs form the LSH bucket id (16 buckets)
+_LSH_DIMS = (1, 2, 3, 4)
+#: PQ: subspaces, codes per subspace, Lloyd rounds, embedding dimension
+_PQ_M, _PQ_K_CODES, _PQ_ITERS, _DIM = 4, 4, 2, 64
+#: IVF: coarse cells and the cells each query probes
+_IVF_CELLS, _IVF_PROBE = 16, 4
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -54,25 +62,19 @@ def _with_norm(embeddings: DataFrame) -> DataFrame:
     ).withColumn("_nrm", _norm(F.col("_emb")))
 
 
-def ann_topk_bruteforce(
-    embeddings: DataFrame,
-    query_pred: Column | None = None,
-    k: int = 5,
-) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, rank, cos).
+def ann_topk_bruteforce(embeddings: DataFrame, k: int = 5) -> DataFrame:
+    """Exact cosine top-k: (query_id, neighbor_id, rank, cos) for the
+    queries vec_id % 101 == 0.
 
-    query_pred selects the query subset (default: vec_id % 101 == 0).
     The query side is broadcast; the corpus is scanned once.
     """
     from pyspark.sql import Window
 
-    if query_pred is None:
-        query_pred = F.col("vec_id") % 101 == 0
     # norms bound once per ROW (not once per pair): the pair expression is
     # dot/(norm_a*norm_b + EPS) — float-identical to cosine(), but the two
     # O(dim) norm traversals move out of the O(n*q) pair loop.
     e = _with_norm(embeddings)
-    q = e.filter(query_pred).select(
+    q = e.filter(_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("_emb").alias("q_emb"),
         F.col("_nrm").alias("q_nrm"),
@@ -103,35 +105,28 @@ def ann_topk_bruteforce(
     )
 
 
-def sign_bucket(emb: Column, dims: tuple[int, ...] = (1, 2, 3, 4)) -> Column:
+def sign_bucket(emb: Column) -> Column:
     """Deterministic sign-pattern LSH bucket id (axis-aligned hyperplanes)."""
     bucket = F.lit(0)
-    for i, d in enumerate(dims):
+    for i, d in enumerate(_LSH_DIMS):
         bucket = bucket + F.when(
             F.element_at(emb, d).cast("double") > 0, F.lit(1 << i)
         ).otherwise(F.lit(0))
     return bucket
 
 
-def ann_topk_lsh(
-    embeddings: DataFrame,
-    query_pred: Column | None = None,
-    k: int = 5,
-    dims: tuple[int, ...] = (1, 2, 3, 4),
-) -> DataFrame:
+def ann_topk_lsh(embeddings: DataFrame, k: int = 5) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's sign bucket.
 
     Same output shape as the brute-force path; recall trades off against the
-    number of hyperplanes (2^len(dims) buckets).
+    number of hyperplanes (2^4 buckets).
     """
     from pyspark.sql import Window
 
-    if query_pred is None:
-        query_pred = F.col("vec_id") % 101 == 0
     withb = _with_norm(embeddings).withColumn(
-        "bucket", sign_bucket(F.col("embedding"), dims)
+        "bucket", sign_bucket(F.col("embedding"))
     )
-    q = withb.filter(query_pred).select(
+    q = withb.filter(_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("_emb").alias("q_emb"),
         F.col("_nrm").alias("q_nrm"),
@@ -170,7 +165,6 @@ def ann_topk_lsh(
 
 def ann_topk_ivf(
     embeddings: DataFrame,
-    query_pred: Column | None = None,
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
@@ -194,9 +188,7 @@ def ann_topk_ivf(
     Cell-id tie-break on equal cosine: lowest centroid id, matching the
     oracle's ``row_number() ORDER BY cos DESC, cid``.
     """
-    if query_pred is None:
-        query_pred = F.col("vec_id") % 101 == 0
-    assigned, probes = _ivf_cells(embeddings, query_pred, n_centroids, n_probe)
+    assigned, probes = _ivf_cells(embeddings, n_centroids, n_probe)
     scored = assigned.join(
         F.broadcast(probes),
         (F.col("cell") == F.col("q_cell"))
@@ -220,10 +212,7 @@ def ann_topk_ivf(
 
 
 def _ivf_cells(
-    embeddings: DataFrame,
-    query_pred: Column,
-    n_centroids: int,
-    n_probe: int,
+    embeddings: DataFrame, n_centroids: int, n_probe: int
 ) -> tuple[DataFrame, DataFrame]:
     """Shared IVF coarse-quantization stage (factored from ann_topk_ivf so
     the PQ composition reuses the identical cell geometry): returns
@@ -274,7 +263,7 @@ def _ivf_cells(
         F.col("_ccos").desc(), F.col("cid")
     )
     probes = (
-        e.filter(query_pred)
+        e.filter(_QUERIES)
         .join(F.broadcast(cent))
         .withColumn("_ccos", cent_cos)
         .withColumn("_crk", F.row_number().over(wcell))
@@ -290,30 +279,20 @@ def _ivf_cells(
 
 
 def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.92,
-    block_col: str | None = None,
-    dims: tuple[int, ...] = (1, 2, 3, 4),
+    embeddings: DataFrame, threshold: float = 0.92
 ) -> DataFrame:
     """Near-duplicate vector pairs: cosine >= threshold within a blocking key.
 
-    Default blocking is the deterministic sign-LSH bucket (``sign_bucket``):
-    block cardinality is 2^len(dims) with sizes set by the DATA's sign
+    Blocking is the deterministic sign-LSH bucket (``sign_bucket``):
+    block cardinality is 2^4 with sizes set by the DATA's sign
     distribution, not by an attribute whose block sizes grow linearly with
     corpus size (an all-pairs join within a label block is quadratic at
     scale). The trade is explicit recall loss — a near-dup pair split across
     buckets is missed; measured recall vs the exact all-pairs ground truth is
-    asserted in tests/test_similarity.py. Pass ``block_col`` for exact
-    attribute blocking when block sizes are known-bounded.
+    asserted in tests/test_similarity.py.
     """
     e = _with_norm(embeddings).select(
-        "vec_id",
-        "_emb",
-        "_nrm",
-        (
-            F.col(block_col) if block_col is not None
-            else sign_bucket(F.col("embedding"), dims)
-        ).alias("_blk"),
+        "vec_id", "_emb", "_nrm", sign_bucket(F.col("embedding")).alias("_blk")
     )
     # explicit-count repartition: the within-block self-join's output is
     # quadratic in block size; AQE coalesces by INPUT bytes and would plan
@@ -338,11 +317,7 @@ def embedding_near_dup_pairs(
     ).filter(F.col("cos") >= threshold)
 
 
-def ann_recall_report(
-    embeddings: DataFrame,
-    k: int = 5,
-    dims: tuple[int, ...] = (1, 2, 3, 4),
-) -> DataFrame:
+def ann_recall_report(embeddings: DataFrame, k: int = 5) -> DataFrame:
     """ANN QUALITY EVALUATION harness: per-query recall@k of the sign-LSH
     leg (q20) against the exact brute-force top-k ground truth (q19) —
     the measurement that turns "LSH trades recall for cost" from a
@@ -360,12 +335,12 @@ def ann_recall_report(
     side, bucket-restricted candidates); the comparison itself joins two
     (queries × k)-row results — negligible. At 100 TB one runs this on
     a sampled query slice; the slice predicate is the operators'
-    ``query_pred``.
+    ``_QUERIES``.
     """
     exact = ann_topk_bruteforce(embeddings, k=k).select(
         "query_id", "neighbor_id"
     )
-    approx = ann_topk_lsh(embeddings, k=k, dims=dims).select(
+    approx = ann_topk_lsh(embeddings, k=k).select(
         "query_id", "neighbor_id"
     )
     return _recall_vs(exact, approx, k)
@@ -407,9 +382,7 @@ def _recall_vs(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
 
 
 def near_dup_recall_report(
-    embeddings: DataFrame,
-    threshold: float = 0.30,
-    dims: tuple[int, ...] = (1, 2, 3, 4),
+    embeddings: DataFrame, threshold: float = 0.30
 ) -> DataFrame:
     """Pair-level RECALL audit of the sign-LSH near-dup blocking (q21)
     against the exact all-pairs cosine ground truth — the q119 harness's
@@ -426,7 +399,7 @@ def near_dup_recall_report(
     EVALUATION harness to run on a sampled slice (thousands of vectors),
     exactly like ANN recall (q119); the production path stays q21. The
     blocking's miss set is precisely the pairs whose members differ in
-    at least one of the ``dims`` sign bits.
+    at least one of the ``_LSH_DIMS`` sign bits.
     """
     e = _with_norm(embeddings)
     a = e.select(
@@ -452,9 +425,9 @@ def near_dup_recall_report(
         .filter(F.col("cos") >= threshold)
         .select("vec_a", "vec_b")
     )
-    lsh = embedding_near_dup_pairs(
-        embeddings, threshold=threshold, dims=dims
-    ).select("vec_a", "vec_b", F.lit(1).alias("_hit"))
+    lsh = embedding_near_dup_pairs(embeddings, threshold=threshold).select(
+        "vec_a", "vec_b", F.lit(1).alias("_hit")
+    )
     return (
         exact.join(lsh, ["vec_a", "vec_b"], "left")
         .agg(
@@ -481,18 +454,10 @@ def near_dup_recall_report(
     )
 
 
-def ann_topk_pq(
-    embeddings: DataFrame,
-    m: int = 4,
-    k_codes: int = 4,
-    iters: int = 2,
-    dim: int = 64,
-    query_pred: Column | None = None,
-    k: int = 5,
-) -> DataFrame:
+def ann_topk_pq(embeddings: DataFrame) -> DataFrame:
     """Product-quantization ANN with asymmetric distance (ADC) — the
     compression leg of the real-world IVF-PQ stack (Jégou et al., TPAMI
-    2011): each vector is stored as ``m`` sub-codebook ids (here 4x2 bits
+    2011): each vector is stored as ``m`` = 4 sub-codebook ids (here 4x2 bits
     vs 64 floats — the memory ratio that makes billion-vector indexes
     fit), and query distance is a table lookup per subspace, never a
     full-vector float op against the corpus.
@@ -506,7 +471,7 @@ def ann_topk_pq(
     m-term accumulation is exact integer arithmetic, immune to
     cross-engine float ordering (the q111 discipline).
 
-    Scale shape (100 TB of vectors): codebooks are m×k_codes rows
+    Scale shape (100 TB of vectors): codebooks are m×k_codes (4×4) rows
     (broadcast); the code table is m small ints per vector; the ADC LUT
     is queries×m×k_codes (broadcast). The scored join ships only codes,
     never embeddings. This leg scores the FULL corpus per query (the q19
@@ -515,13 +480,10 @@ def ann_topk_pq(
     cells to bound candidates, which changes the candidate set, not the
     scoring machinery proven here.
 
-    Output: ``(query_id, neighbor_id, rank, adc_d2)`` — top-``k`` by
+    Output: ``(query_id, neighbor_id, rank, adc_d2)`` — top-5 by
     (adc distance asc, neighbor_id asc), self-matches excluded.
     """
-    if query_pred is None:
-        query_pred = F.col("vec_id") % 101 == 0
-    codes, lut = _pq_codes_and_lut(embeddings, m, k_codes, iters, dim,
-                                   query_pred)
+    codes, lut = _pq_codes_and_lut(embeddings)
 
     scored = (
         codes.join(
@@ -537,7 +499,7 @@ def ann_topk_pq(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -547,14 +509,7 @@ def ann_topk_pq(
     )
 
 
-def _pq_codes_and_lut(
-    embeddings: DataFrame,
-    m: int,
-    k_codes: int,
-    iters: int,
-    dim: int,
-    query_pred: Column,
-) -> tuple[DataFrame, DataFrame]:
+def _pq_codes_and_lut(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Shared PQ train/encode/LUT stage (factored from ann_topk_pq so the
     IVF composition reuses the identical codebooks): returns ``(codes,
     lut)`` — ``codes`` is the encoded corpus ``(vec_id, s, code)`` (m rows
@@ -566,24 +521,22 @@ def _pq_codes_and_lut(
         _update,
     )
 
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
+    sub = _DIM // _PQ_M
 
     def _slice(c: Column, s: int) -> Column:
         return F.transform(
             F.slice(c, s * sub + 1, sub), lambda v: v.cast("double")
         )
 
-    q = embeddings.filter(query_pred)
+    q = embeddings.filter(_QUERIES)
     code_parts, lut_parts = [], []
-    for s in range(m):
+    for s in range(_PQ_M):
         e_s = embeddings.select(
             "vec_id", _slice(F.col("embedding"), s).alias("_emb")
         ).withColumn("_esq", F.round(_dot(F.col("_emb"), F.col("_emb")), 6))
-        cents = _init_centroids(e_s, k_codes)
+        cents = _init_centroids(e_s, _PQ_K_CODES)
         assigned = _assign(e_s, cents)
-        for _ in range(iters - 1):
+        for _ in range(_PQ_ITERS - 1):
             cents = _update(e_s, assigned)
             assigned = _assign(e_s, cents)
         code_parts.append(
@@ -620,17 +573,7 @@ def _pq_codes_and_lut(
     return codes, lut
 
 
-def ann_topk_ivf_pq(
-    embeddings: DataFrame,
-    query_pred: Column | None = None,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    m: int = 4,
-    k_codes: int = 4,
-    iters: int = 2,
-    dim: int = 64,
-) -> DataFrame:
+def ann_topk_ivf_pq(embeddings: DataFrame) -> DataFrame:
     """IVF × PQ composition — the production ANN stack (Jégou et al.,
     TPAMI 2011, §IV: coarse quantizer bounds the candidate set, product
     codes score it): q34's cell probe picks candidates, q130's PQ-ADC
@@ -648,20 +591,16 @@ def ann_topk_ivf_pq(
     corpus vector is m codes — the ratio that fits billion-vector
     indexes in RAM.
 
-    Output: ``(query_id, neighbor_id, rank, adc_d2)`` — top-``k`` by
-    (ADC distance asc, neighbor_id asc) among CELL-LOCAL candidates,
-    self-matches excluded."""
-    if query_pred is None:
-        query_pred = F.col("vec_id") % 101 == 0
-    assigned, probes = _ivf_cells(embeddings, query_pred, n_centroids,
-                                  n_probe)
+    Output: ``(query_id, neighbor_id, rank, adc_d2)`` — top-5 by
+    (ADC distance asc, neighbor_id asc) among CELL-LOCAL candidates
+    (4 probed of 16 cells), self-matches excluded."""
+    assigned, probes = _ivf_cells(embeddings, _IVF_CELLS, _IVF_PROBE)
     cand = assigned.join(
         F.broadcast(probes),
         (F.col("cell") == F.col("q_cell"))
         & (F.col("query_id") != F.col("neighbor_id")),
     ).select("query_id", "neighbor_id")
-    codes, lut = _pq_codes_and_lut(embeddings, m, k_codes, iters, dim,
-                                   query_pred)
+    codes, lut = _pq_codes_and_lut(embeddings)
     lutq = lut.select(
         F.col("query_id").alias("l_query"), "s", "cluster", "d2u"
     )
@@ -684,7 +623,7 @@ def ann_topk_ivf_pq(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select(
             "query_id",
             "neighbor_id",
@@ -694,42 +633,23 @@ def ann_topk_ivf_pq(
     )
 
 
-def ann_ivf_pq_recall_report(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    m: int = 4,
-    k_codes: int = 4,
-) -> DataFrame:
-    """Recall@k of the IVF×PQ composition against the exact brute-force
+def ann_ivf_pq_recall_report(embeddings: DataFrame) -> DataFrame:
+    """Recall@5 of the IVF×PQ composition against the exact brute-force
     spine — q119's evaluation harness pointed at the composed index, so
     the two approximations' combined quality loss (missed cells × code
     quantization) is an oracled number, not a docstring claim."""
-    exact = ann_topk_bruteforce(embeddings, k=k).select(
-        "query_id", "neighbor_id"
-    )
-    approx = ann_topk_ivf_pq(
-        embeddings, k=k, n_centroids=n_centroids, n_probe=n_probe,
-        m=m, k_codes=k_codes,
-    ).select("query_id", "neighbor_id")
-    return _recall_vs(exact, approx, k)
+    exact = ann_topk_bruteforce(embeddings).select("query_id", "neighbor_id")
+    approx = ann_topk_ivf_pq(embeddings).select("query_id", "neighbor_id")
+    return _recall_vs(exact, approx, 5)
 
 
-def ivfpq_train(
-    base: DataFrame,
-    n_centroids: int = 16,
-    m: int = 4,
-    k_codes: int = 4,
-    iters: int = 2,
-    dim: int = 64,
-) -> tuple[DataFrame, DataFrame]:
+def ivfpq_train(base: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Train the IVF×PQ index METADATA on a bootstrap corpus and nothing
     else: returns ``(cells, books)`` where ``cells`` is the coarse-cell
-    centroid table ``(cid, cent_emb, cent_nrm)`` (first ``n_centroids``
+    centroid table ``(cid, cent_emb, cent_nrm)`` (first 16
     base vec_ids — ``_ivf_cells``'s seed rule) and ``books`` the
     per-subspace PQ codebooks ``(s, cluster, c_emb, c_sq)`` after
-    ``iters`` deterministic Lloyd rounds (``_pq_codes_and_lut``'s
+    2 deterministic Lloyd rounds (``_pq_codes_and_lut``'s
     training verbatim, restricted to the base).
 
     This is the train/encode SPLIT the streaming maintenance query (q141)
@@ -737,7 +657,7 @@ def ivfpq_train(
     can be encoded per micro-batch against FIXED metadata — the online
     regime of a production ANN index, where re-training is a planned
     rebuild, not a per-batch event. Both outputs are tiny
-    (``n_centroids`` + ``m*k_codes`` rows) — collect once, ship to the
+    (16 + 4*4 rows) — collect once, ship to the
     maintenance job, broadcast per batch.
     """
     from java9_gc_log_parser_spark.operators.clustering import (
@@ -746,13 +666,11 @@ def ivfpq_train(
         _update,
     )
 
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
+    sub = _DIM // _PQ_M
     b = _with_norm(base)
     cells = (
         b.orderBy("vec_id")
-        .limit(n_centroids)
+        .limit(_IVF_CELLS)
         .select(
             F.col("vec_id").alias("cid"),
             F.col("_emb").alias("cent_emb"),
@@ -760,7 +678,7 @@ def ivfpq_train(
         )
     )
     book_parts = []
-    for s in range(m):
+    for s in range(_PQ_M):
         e_s = base.select(
             "vec_id",
             F.transform(
@@ -768,9 +686,9 @@ def ivfpq_train(
                 lambda v: v.cast("double"),
             ).alias("_emb"),
         ).withColumn("_esq", F.round(_dot(F.col("_emb"), F.col("_emb")), 6))
-        cents = _init_centroids(e_s, k_codes)
+        cents = _init_centroids(e_s, _PQ_K_CODES)
         assigned = _assign(e_s, cents)
-        for _ in range(iters - 1):
+        for _ in range(_PQ_ITERS - 1):
             cents = _update(e_s, assigned)
             assigned = _assign(e_s, cents)
         book_parts.append(cents.select(F.lit(s).alias("s"), "cluster",
@@ -782,11 +700,7 @@ def ivfpq_train(
 
 
 def ivfpq_encode(
-    vectors: DataFrame,
-    cells: DataFrame,
-    books: DataFrame,
-    m: int = 4,
-    dim: int = 64,
+    vectors: DataFrame, cells: DataFrame, books: DataFrame
 ) -> DataFrame:
     """Encode ``vectors`` into IVF×PQ index rows ``(vec_id, cell, s,
     code)`` against FIXED metadata from :func:`ivfpq_train`.
@@ -802,9 +716,7 @@ def ivfpq_encode(
     ``m`` subspaces encode in ONE pass. Per-vector cost: O(n_centroids +
     m*k_codes) JVM array ops; the two grouped argmins share the one
     batch-sized shuffle key (vec_id)."""
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
+    sub = _DIM // _PQ_M
     v = _with_norm(vectors)
     cent_cos = F.round(
         _dot(F.col("_emb"), F.col("cent_emb"))

@@ -264,11 +264,10 @@ def hll_distinct_report(docs: DataFrame) -> DataFrame:
     )
 
 
-def histogram_quantile(
-    df: DataFrame, col: str, q: float = 0.99
-) -> DataFrame:
-    """Mergeable power-of-two histogram quantile: estimate the q-quantile of
-    a non-negative integer column from <= 64 bin counts, and report it next
+def histogram_quantile(df: DataFrame, col: str) -> DataFrame:
+    """Mergeable power-of-two histogram quantile: estimate the q = 0.99
+    quantile of a non-negative integer column from <= 64 bin counts, and
+    report it next
     to the exact quantile with the relative error — the audit query that
     bounds the sketch against ground truth at test scale (at 100 TB only
     the sketch side runs; exact needs a full distribution pass).
@@ -281,8 +280,7 @@ def histogram_quantile(
     q * N, so est >= exact always and est/exact < 2 by construction
     (one-sided, factor-2-bounded — the trade for 64 mergeable cells).
     """
-    if not 0.0 < q < 1.0:
-        raise ValueError(f"q must be in (0,1), got {q}")
+    q = 0.99
     v = F.col(col)
     bin_id = F.when(v <= 0, F.lit(0)).otherwise(
         F.length(F.conv(v.cast("string"), 10, 2))
@@ -356,20 +354,14 @@ def grouped_hll_distinct(
     )
 
 
-def exact_quantile_select(
-    events: DataFrame,
-    value: str = "value",
-    quantiles: tuple[float, ...] = (0.5, 0.95, 0.99),
-    bucket_width: int = 256,
-    max_heap_rows: int = 100_000,
-) -> DataFrame:
-    """EXACT order statistics over the whole corpus without a global sort
+def exact_quantile_select(events: DataFrame) -> DataFrame:
+    """EXACT p50/p95/p99 of ``value`` over the whole corpus without a global sort
     and without per-group holistic buffers — the distributed-selection
     counterpart to the mergeable q65 histogram sketch (factor-2 bound)
     and the q73 per-group exact percentile (O(group) buffer): two passes,
     both bounded.
 
-    Pass 1: a map-combinable histogram over fixed-width centi-unit
+    Pass 1: a map-combinable histogram over fixed-width (256) centi-unit
     buckets (corpus → ≤ range/width rows). The driver cumsums that tiny
     histogram to locate, for each requested quantile, the bucket holding
     the target rank and the residual rank within it. Pass 2 (per
@@ -386,7 +378,7 @@ def exact_quantile_select(
     Cost/skew envelope: pass 2's heap size is the residual rank k' ≤
     bucket population. An adversarial distribution that concentrates the
     corpus into one bucket is handled by RECURSIVE REFINEMENT: while the
-    target bucket holds more than ``max_heap_rows`` rows and is wider
+    target bucket holds more than ``max_heap_rows`` (100,000) rows and is wider
     than one centi-unit, it is re-histogrammed at width/16 and the walk
     repeats inside it — each round is one more tiny histogram, and a
     width-1 bucket IS its value (every row identical), so the degenerate
@@ -399,18 +391,10 @@ def exact_quantile_select(
     TOP-LEVEL histogram (the refinement is internal), so the oracle's
     replay is independent of how many rounds ran.
     """
-    if not quantiles:
-        raise ValueError("need at least one quantile")
-    for q in quantiles:
-        if not (0.0 <= q <= 1.0):
-            raise ValueError(f"quantile out of range: {q}")
-    if bucket_width < 1:
-        raise ValueError(f"bucket_width must be >= 1, got {bucket_width}")
-    if max_heap_rows < 1:
-        raise ValueError(f"max_heap_rows must be >= 1, got {max_heap_rows}")
-    vc = F.floor(F.col(value) * 100).cast("long")
+    bucket_width, max_heap_rows = 256, 100_000
+    vc = F.floor(F.col("value") * 100).cast("long")
     base = (
-        events.filter(F.col(value).isNotNull())
+        events.filter(F.col("value").isNotNull())
         .select(vc.alias("_vc"))
         # SQL `div` (integer floor-division), not float `/` + floor — at
         # bucket boundaries a float quotient can land one ulp low
@@ -425,7 +409,7 @@ def exact_quantile_select(
     n = sum(r["_n"] for r in hist)
     rows = []
     spark = events.sparkSession
-    for q in quantiles:
+    for q in (0.5, 0.95, 0.99):
         if n == 0:
             rows.append((float(q), 0, None, None, None, None, None))
             continue
@@ -496,14 +480,8 @@ def exact_quantile_select(
     )
 
 
-def sliding_hll_distinct(
-    events: DataFrame,
-    user: str = "user_id",
-    ts: str = "ts",
-    bucket_us: int = 86_400_000_000,
-    window_n: int = 7,
-) -> DataFrame:
-    """Rolling ``window_n``-bucket distinct users by MERGED HLL registers
+def sliding_hll_distinct(events: DataFrame) -> DataFrame:
+    """Rolling 7-day distinct ``user_id`` by MERGED HLL registers
     — the sketch-scale restatement of q93's exact rolling WAU. The exact
     version must fan the deduplicated (user, bucket) PAIR SET into every
     target bucket (corpus-proportional explode) because COUNT DISTINCT
@@ -511,7 +489,7 @@ def sliding_hll_distinct(
     once and fans only the REGISTER TABLE (buckets × 256 small rows)
     into its targets, merging by elementwise max — the fan-out no longer
     scales with users at all. At 10^12 turns that is the difference
-    between re-shuffling the active-user corpus ×window_n and window-
+    between re-shuffling the active-user corpus ×7 and window-
     maxing a few-thousand-row rollup.
 
     Registers and estimate are :func:`hll_register_table` and
@@ -523,19 +501,16 @@ def sliding_hll_distinct(
     ``(bucket_ts, has_activity, n_users_exact, hll_estimate,
     rel_error)``.
     """
-    if window_n < 1:
-        raise ValueError(f"window_n must be >= 1, got {window_n}")
+    day_us = 86_400_000_000
     pairs = events.select(
         (
-            F.unix_micros(F.col(ts).cast("timestamp")) / F.lit(bucket_us)
+            F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(day_us)
         ).cast("long").alias("_b"),
-        F.col(user).cast("string").alias("_u"),
+        F.col("user_id").cast("string").alias("_u"),
     ).distinct()
-    fan = F.explode(
-        F.sequence(F.col("_b"), F.col("_b") + F.lit(window_n - 1))
-    ).alias("_t")
+    fan = F.explode(F.sequence(F.col("_b"), F.col("_b") + F.lit(6))).alias("_t")
     # fan the TINY register rollup (not the user corpus) into its
-    # window_n target buckets, then merge by max — register-table merge
+    # 7 target buckets, then merge by max — register-table merge
     merged = (
         hll_register_table(pairs, ("_b",), F.col("_u"))
         .select(fan, "register", "max_rank")
@@ -555,7 +530,7 @@ def sliding_hll_distinct(
         hll_estimate_from_registers(merged, ("_t",))
         .join(exact, "_t")
         .select(
-            F.timestamp_micros(F.col("_t") * F.lit(bucket_us))
+            F.timestamp_micros(F.col("_t") * F.lit(day_us))
             .cast("timestamp_ntz")
             .alias("bucket_ts"),
             "has_activity",
@@ -566,10 +541,9 @@ def sliding_hll_distinct(
     )
 
 
-def hll_set_ops(
-    df: DataFrame, group_col: str = "event_type", item: Column | None = None
-) -> DataFrame:
-    """HLL set algebra across groups — union by register merge,
+def hll_set_ops(df: DataFrame) -> DataFrame:
+    """HLL set algebra across ``event_type`` groups of ``user_id`` — union
+    by register merge,
     intersection by inclusion–exclusion — with the exact answer audited
     in the same row. The question "how many users do segments A and B
     share" at 100 TB: exact needs a (user, segment) shuffle join; the
@@ -587,10 +561,8 @@ def hll_set_ops(
     Output per unordered group pair: ``(type_a, type_b, est_a, est_b,
     est_union, est_inter, exact_a, exact_b, exact_union, exact_inter)``.
     """
-    if item is None:
-        item = F.col("user_id")
     pairs = df.select(
-        F.col(group_col).alias("g"), item.cast("string").alias("_item")
+        F.col("event_type").alias("g"), F.col("user_id").cast("string").alias("_item")
     ).distinct()
     regs = hll_register_table(pairs, ("g",), F.col("_item"))
 

@@ -231,17 +231,17 @@ def _repetition_cols() -> tuple[Column, Column]:
     return F.round(top_frac, 6), F.round(dup_frac, 6)
 
 
-def repetition_stats(
-    docs: DataFrame,
-    top_frac_threshold: float = 0.20,
-    dup_frac_threshold: float = 0.20,
-) -> DataFrame:
+#: repetition gate: a doc is repetitive when either ratio exceeds this
+_REP_MAX_FRAC = 0.20
+
+
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Intra-document repetition metrics (Gopher-style quality gate).
 
     Per doc: ``top_2gram_frac`` = occurrences of the most frequent word
     2-gram / total 2-grams; ``dup_3gram_frac`` = fraction of 3-gram slots
     occupied by a non-first occurrence (1 - distinct/total); ``flagged`` =
-    either ratio over its threshold. Boilerplate- and loop-heavy documents
+    either ratio over 0.20. Boilerplate- and loop-heavy documents
     (navigation chrome, degenerate generations) light up both.
 
     Everything is per-row array arithmetic — a map-only scan with no
@@ -256,20 +256,13 @@ def repetition_stats(
         "doc_id",
         top_frac.alias("top_2gram_frac"),
         dup_frac.alias("dup_3gram_frac"),
-        (
-            (top_frac > top_frac_threshold) | (dup_frac > dup_frac_threshold)
-        ).alias("flagged"),
+        ((top_frac > _REP_MAX_FRAC) | (dup_frac > _REP_MAX_FRAC)).alias(
+            "flagged"
+        ),
     )
 
 
-def corpus_filter(
-    docs: DataFrame,
-    min_quality: float = 0.5,
-    allowed_langs: tuple[str, ...] = ("en",),
-    min_tokens: int = 5,
-    top_frac_threshold: float = 0.20,
-    dup_frac_threshold: float = 0.20,
-) -> DataFrame:
+def corpus_filter(docs: DataFrame) -> DataFrame:
     """Composite accept/reject gate: quality score, repetition, language and
     length in ONE map-only projection (``filter(keep)`` is the cleaned
     corpus; ``reasons`` explains every rejection for curation audits).
@@ -280,8 +273,9 @@ def corpus_filter(
     100 TB. The shared ``_*_cols`` builders guarantee the gate applies
     byte-identical metric arithmetic to what q15/q36/q16 report.
 
-    Rejection reasons, in fixed order: ``low_quality``, ``repetitive``,
-    ``lang``, ``too_short``. ``keep`` == no reason fired.
+    Rejection reasons, in fixed order: ``low_quality`` (score < 0.5),
+    ``repetitive``, ``lang`` (not ``en``), ``too_short`` (< 5 tokens).
+    ``keep`` == no reason fired.
     """
     docs = _stage_ngrams(docs)
     text = F.col("text")
@@ -292,13 +286,13 @@ def corpus_filter(
     n_toks = F.size(tokens_col(text))
     reasons = F.concat_ws(
         ",",
-        F.when(score < min_quality, F.lit("low_quality")),
+        F.when(score < 0.5, F.lit("low_quality")),
         F.when(
-            (top_frac > top_frac_threshold) | (dup_frac > dup_frac_threshold),
+            (top_frac > _REP_MAX_FRAC) | (dup_frac > _REP_MAX_FRAC),
             F.lit("repetitive"),
         ),
-        F.when(~pred.isin(*allowed_langs), F.lit("lang")),
-        F.when(n_toks < min_tokens, F.lit("too_short")),
+        F.when(pred != "en", F.lit("lang")),
+        F.when(n_toks < 5, F.lit("too_short")),
     )
     return docs.select(
         "doc_id",
@@ -457,9 +451,7 @@ def tfidf_topk(docs: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def token_budget(
-    docs: DataFrame, group_cols: tuple[str, ...] = ("split", "source")
-) -> DataFrame:
+def token_budget(docs: DataFrame) -> DataFrame:
     """Corpus token accounting per group (the pre-training planning query:
     how many documents / tokens does each split and source contribute).
 
@@ -469,12 +461,13 @@ def token_budget(
     token-count expression is evaluated once per row.
     """
     toks = tokens_col(F.col("text"))
-    agg = docs.groupBy(*[F.col(c) for c in group_cols]).agg(
+    agg = docs.groupBy("split", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(toks).cast("long")).alias("total_tokens"),
     )
     return agg.select(
-        *group_cols,
+        "split",
+        "source",
         "n_docs",
         "total_tokens",
         F.round(
@@ -524,11 +517,7 @@ def zipf_topk(docs: DataFrame, k: int = 50) -> DataFrame:
     )
 
 
-def encoding_audit(
-    docs: DataFrame,
-    ctrl_ratio_threshold: float = 0.01,
-    ascii_ratio_threshold: float = 0.5,
-) -> DataFrame:
+def encoding_audit(docs: DataFrame) -> DataFrame:
     """Per-document encoding/mojibake QA gate (corpus ingest hygiene).
 
     Web-scraped corpora carry decode damage: U+FFFD replacement characters
@@ -538,8 +527,7 @@ def encoding_audit(
     of characters that are C0 controls other than tab/newline/CR;
     ``ascii_ratio`` = fraction of characters in the 7-bit range (1.0 for
     empty text — an empty doc is not "non-ascii"); ``flagged`` = any
-    replacement char, ctrl_ratio over threshold, or ascii_ratio under
-    threshold.
+    replacement char, ctrl_ratio over 0.01, or ascii_ratio under 0.5.
 
     Scale shape: map-only projection of built-in string expressions inside
     whole-stage codegen — one pass, no shuffle, no UDF; counts are derived
@@ -567,42 +555,35 @@ def encoding_audit(
         ascii_ratio.alias("ascii_ratio"),
         (
             (n_repl > 0)
-            | (ctrl_ratio > F.lit(ctrl_ratio_threshold))
-            | (ascii_ratio < F.lit(ascii_ratio_threshold))
+            | (ctrl_ratio > F.lit(0.01))
+            | (ascii_ratio < F.lit(0.5))
         ).alias("flagged"),
     )
 
 
-def pmi_collocations(
-    docs: DataFrame,
-    top_vocab: int = 50,
-    min_pair_docs: int = 5,
-    n_docs: int | None = None,
-) -> DataFrame:
+def pmi_collocations(docs: DataFrame) -> DataFrame:
     """Collocation mining: pointwise mutual information between the
-    ``top_vocab`` most document-frequent (lowercased) tokens, over
+    50 most document-frequent (lowercased) tokens, over
     document-level co-occurrence — the "which terms travel together"
     rollup used for phrase induction, topic seeding, and tokenizer-merge
     candidates. PMI = ln(P(a,b) / (P(a)·P(b))) with all probabilities
     exact document-count ratios.
 
     Scale shape (100 TB): the vocabulary cut makes the pair space a
-    CONSTANT (≤ C(top_vocab, 2) output rows) regardless of corpus size.
+    CONSTANT (≤ C(50, 2) output rows) regardless of corpus size.
     Per doc: distinct-token projection is map-side; the qualifying-token
     filter is a broadcast semi-join against the tiny vocab dim; pair
     generation is a self-equi-join co-partitioned on doc_id with ≤
-    top_vocab rows per doc on each side (bounded quadratic per doc,
+    50 rows per doc on each side (bounded quadratic per doc,
     never corpus-wide); the final count agg is map-combinable over ≤
     vocab² keys. No top-k cut on the float PMI itself — the output is
     the complete support-filtered pair set, so no cross-engine
     float-ordering ambiguity exists.
 
     Output: ``(tok_a, tok_b, n_a, n_b, n_ab, pmi)`` with tok_a < tok_b,
-    ``n_ab >= min_pair_docs``; pmi rounded to 6 dp (ln of a ratio of
-    exact BIGINTs — same fixed op tree in both engines).
+    ``n_ab >= 5`` (the support floor); pmi rounded to 6 dp (ln of a ratio
+    of exact BIGINTs — same fixed op tree in both engines).
     """
-    if top_vocab < 2:
-        raise ValueError(f"top_vocab must be >= 2, got {top_vocab}")
     dt = docs.select(
         "doc_id",
         F.explode(
@@ -613,7 +594,7 @@ def pmi_collocations(
         dt.groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("df"))
         .orderBy(F.col("df").desc(), F.col("tok").asc())
-        .limit(top_vocab)
+        .limit(50)
     )
     qual = dt.join(F.broadcast(vocab), "tok")
     pairs = (
@@ -631,13 +612,12 @@ def pmi_collocations(
             F.first("n_b").alias("n_b"),
             F.count(F.lit(1)).cast("long").alias("n_ab"),
         )
-        .filter(F.col("n_ab") >= min_pair_docs)
+        .filter(F.col("n_ab") >= 5)
     )
     # the corpus cardinality enters as a LITERAL (one cheap count-only
     # scan, the q95 pattern) rather than a one-row join — keeps the plan
     # free of constant-key BroadcastNestedLoopJoin nodes
-    if n_docs is None:
-        n_docs = docs.count()
+    n_docs = docs.count()
     return pairs.select(
         "tok_a",
         "tok_b",
@@ -667,7 +647,7 @@ CLF_SALT = "clf:v1"
 CLF_BIAS_MILLI = 50  # bias in milli-units: logit starts at +0.05
 
 
-def classifier_weights(spark, dim: int = CLF_DIM) -> DataFrame:
+def classifier_weights(spark) -> DataFrame:
     """The classifier's weight vector as a (bucket, w_milli) dim table.
 
     Real pipelines broadcast a *trained* model's hashed-vocab weight table
@@ -677,7 +657,7 @@ def classifier_weights(spark, dim: int = CLF_DIM) -> DataFrame:
     ``w_milli(b) = (b * 2654435761) % 2001 - 1000``  (Knuth multiplicative
     hash, exact BIGINT, range [-1000, 1000] milli-units).
     """
-    return spark.range(dim).select(
+    return spark.range(CLF_DIM).select(
         F.col("id").cast("int").alias("bucket"),
         ((F.col("id") * F.lit(2654435761)) % 2001 - 1000)
         .cast("long")
@@ -796,7 +776,7 @@ def token_entropy(docs: DataFrame) -> DataFrame:
     )
 
 
-def score_calibration(scores: DataFrame, n_buckets: int = 10) -> DataFrame:
+def score_calibration(scores: DataFrame) -> DataFrame:
     """Decile lift/calibration table over classifier logits — the standard
     "is the score monotone and well-spread" eval artifact a quality-
     classifier gate ships with (q122's companion, as q119/q120 are the
@@ -812,8 +792,7 @@ def score_calibration(scores: DataFrame, n_buckets: int = 10) -> DataFrame:
     documented constant-key BNLJ exemption); the corpus pass is one scan
     + one map-combinable agg.
     """
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
+    n_buckets = 10
     qs = [i / n_buckets for i in range(1, n_buckets)]
     bounds = scores.agg(
         *[

@@ -37,39 +37,33 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def gapfill_locf(
-    events: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    value: str = "value",
-    bucket_us: int = 21_600_000_000,
-    max_fill: int = 8,
-) -> DataFrame:
-    """Bucketed rollup of ``value`` per (key, time bucket), densified with
-    up to ``max_fill`` synthetic rows per gap, each carrying the
+#: one day and six hours, in microseconds: the rollups' bucket widths
+_DAY_US = 86_400_000_000
+_6H_US = 21_600_000_000
+
+
+def gapfill_locf(events: DataFrame) -> DataFrame:
+    """Bucketed rollup of ``value`` per (``user_id``, 6h bucket), densified
+    with up to ``max_fill`` = 8 synthetic rows per gap, each carrying the
     last-observation value (``v_locf``) and the linear interpolation toward
     the next observation (``v_interp``).
 
-    Output: key, ``bucket_ts`` (bucket start), ``filled`` (synthetic row?),
-    ``gap_truncated`` (gap wider than max_fill — grid intentionally left
-    open), ``n_obs`` (0 on filled rows), ``v_locf``, ``v_interp``.
+    Output: user_id, ``bucket_ts`` (bucket start), ``filled`` (synthetic
+    row?), ``gap_truncated`` (gap wider than max_fill — grid intentionally
+    left open), ``n_obs`` (0 on filled rows), ``v_locf``, ``v_interp``.
     """
-    if bucket_us < 1:
-        raise ValueError(f"bucket_us must be >= 1, got {bucket_us}")
-    if max_fill < 0:
-        raise ValueError(f"max_fill must be >= 0, got {max_fill}")
-
+    key, bucket_us, max_fill = "user_id", _6H_US, 8
     # parquet timestamps arrive as TIMESTAMP_NTZ; unix_micros needs
     # TIMESTAMP (session tz is pinned UTC, so the cast is micro-identity)
     bucket = (
-        F.unix_micros(F.col(ts).cast("timestamp")) / F.lit(bucket_us)
+        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(bucket_us)
     ).cast("long")
     rolled = (
-        events.filter(F.col(value).isNotNull())
+        events.filter(F.col("value").isNotNull())
         .groupBy(F.col(key), bucket.alias("_gf_b"))
         .agg(
             F.count(F.lit(1)).alias("_gf_n"),
-            F.sum(F.floor(F.col(value) * 1000).cast("long")).alias("_gf_vmil"),
+            F.sum(F.floor(F.col("value") * 1000).cast("long")).alias("_gf_vmil"),
         )
         .withColumn(
             "_gf_v",
@@ -123,51 +117,39 @@ def gapfill_locf(
     )
 
 
-def moving_window_stats(
-    events: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    value: str = "value",
-    bucket_us: int = 86_400_000_000,
-    trailing: int = 7,
-) -> DataFrame:
-    """Time-correct trailing moving average per key: bucket the stream,
+def moving_window_stats(events: DataFrame) -> DataFrame:
+    """Time-correct trailing moving average per ``event_type``: bucket the
+    stream by day,
     then a RANGE-frame window over the integer bucket index so GAPS count
     as empty buckets (a ROWS frame would silently stretch the window over
     dark periods — the classic moving-average bug).
 
-    Output, one row per observed (key, bucket):
-    ``(<key>, bucket_ts, n, v_avg, mov_n, mov_avg)`` — ``mov_*`` cover the
-    trailing ``trailing``-bucket window ENDING at the bucket. Means derive
+    Output, one row per observed (event_type, day):
+    ``(event_type, bucket_ts, n, v_avg, mov_n, mov_avg)`` — ``mov_*`` cover
+    the trailing 7-day window ENDING at the bucket. Means derive
     from order-independent exact-integer millisums (same float contract as
     :func:`gapfill_locf`), rounded to 6 dp at the boundary.
 
     Scale notes (100 TB): stage 1 is a map-combinable hash agg (events
     compress to one row per (key, bucket) before the shuffle); stage 2 is
-    one window pass over the tiny rollup with an O(trailing) RANGE frame.
+    one window pass over the tiny rollup with an O(7) RANGE frame.
     The raw stream is never window-scanned.
     """
-    if trailing < 1:
-        raise ValueError(f"trailing must be >= 1, got {trailing}")
     bucket = (
-        F.unix_micros(F.col(ts).cast("timestamp")) / F.lit(bucket_us)
+        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(_DAY_US)
     ).cast("long")
     rolled = (
-        events.filter(F.col(value).isNotNull())
-        .groupBy(F.col(key), bucket.alias("_mw_b"))
+        events.filter(F.col("value").isNotNull())
+        .groupBy(F.col("event_type"), bucket.alias("_mw_b"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.floor(F.col(value) * 1000).cast("long")).alias("_mw_vmil"),
+            F.sum(F.floor(F.col("value") * 1000).cast("long")).alias("_mw_vmil"),
         )
     )
-    w = (
-        Window.partitionBy(key)
-        .orderBy("_mw_b")
-        .rangeBetween(-(trailing - 1), 0)
-    )
+    w = Window.partitionBy("event_type").orderBy("_mw_b").rangeBetween(-6, 0)
     return rolled.select(
-        key,
-        F.timestamp_micros(F.col("_mw_b") * F.lit(bucket_us))
+        "event_type",
+        F.timestamp_micros(F.col("_mw_b") * F.lit(_DAY_US))
         .cast("timestamp_ntz")
         .alias("bucket_ts"),
         "n",
@@ -185,39 +167,30 @@ def moving_window_stats(
     )
 
 
-def sliding_distinct_users(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts: str = "ts",
-    bucket_us: int = 86_400_000_000,
-    window_n: int = 7,
-) -> DataFrame:
-    """Trailing ``window_n``-bucket DISTINCT-user count per bucket (rolling
-    WAU/MAU): sliding distinct cannot ride a window frame (COUNT DISTINCT
+def sliding_distinct_users(events: DataFrame) -> DataFrame:
+    """Trailing 7-day DISTINCT-user count per day (rolling WAU): sliding
+    distinct cannot ride a window frame (COUNT DISTINCT
     isn't subtractable), so each distinct (user, bucket) pair is exploded
-    into the ``window_n`` buckets it contributes to — a BOUNDED fan-out of
+    into the 7 buckets it contributes to — a BOUNDED fan-out of
     the deduplicated pair set, never of the raw stream — and re-counted
     distinct per target bucket.
 
     Output: ``(bucket_ts, n_users, n_user_buckets, has_activity)`` — one
-    row per target bucket with >=1 contribution (so up to ``window_n - 1``
+    row per target bucket with >=1 contribution (so up to 6
     trailing buckets past the last active one), ``has_activity`` false on
     those ghost tails. ``n_user_buckets`` counts (user, bucket) activity
     pairs in the window (engagement mass); ``n_users`` deduplicates.
 
     Scale notes (100 TB): dedup agg compresses the stream to (user, bucket)
-    pairs map-side; the explode multiplies PAIRS by window_n (bounded,
-    e.g. 7), and the final distinct agg is Spark's standard two-phase
+    pairs map-side; the explode multiplies PAIRS by 7 (bounded), and the final distinct agg is Spark's standard two-phase
     partial-distinct expansion. No self-join of bucket grids, no holistic
     buffering.
     """
-    if window_n < 1:
-        raise ValueError(f"window_n must be >= 1, got {window_n}")
     bucket = (
-        F.unix_micros(F.col(ts).cast("timestamp")) / F.lit(bucket_us)
+        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(_DAY_US)
     ).cast("long")
     pairs = (
-        events.select(F.col(user_col).alias("_u"), bucket.alias("_b"))
+        events.select(F.col("user_id").alias("_u"), bucket.alias("_b"))
         .groupBy("_u", "_b")
         .agg(F.count(F.lit(1)).alias("_n"))
         .drop("_n")
@@ -226,7 +199,7 @@ def sliding_distinct_users(
         "_u",
         "_b",
         F.explode(
-            F.sequence(F.col("_b"), F.col("_b") + F.lit(window_n - 1))
+            F.sequence(F.col("_b"), F.col("_b") + F.lit(6))
         ).alias("_t"),
     )
     return (
@@ -237,7 +210,7 @@ def sliding_distinct_users(
             F.max((F.col("_b") == F.col("_t")).cast("int")).alias("_act"),
         )
         .select(
-            F.timestamp_micros(F.col("_t") * F.lit(bucket_us))
+            F.timestamp_micros(F.col("_t") * F.lit(_DAY_US))
             .cast("timestamp_ntz")
             .alias("bucket_ts"),
             "n_users",
@@ -247,15 +220,8 @@ def sliding_distinct_users(
     )
 
 
-def time_weighted_avg(
-    events: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    value: str = "value",
-    order_tiebreak: str = "event_id",
-    bucket_us: int = 21_600_000_000,
-) -> DataFrame:
-    """Per-(key, bucket) TIME-weighted average of an irregularly sampled
+def time_weighted_avg(events: DataFrame) -> DataFrame:
+    """Per-(``user_id``, 6h bucket) TIME-weighted average of an irregularly sampled
     series — TimescaleDB's ``time_weight('locf')`` rollup shape, the
     correct aggregate where a plain AVG over-weights chatty periods (a
     sensor that reports every second while alarming and hourly while
@@ -269,12 +235,12 @@ def time_weighted_avg(
     buckets — compose with :func:`gapfill_locf` when dark buckets need
     synthetic rows.
 
-    Output: ``(<key>, bucket_ts, n_obs, span_us, v_twa, v_naive)`` —
+    Output: ``(user_id, bucket_ts, n_obs, span_us, v_twa, v_naive)`` —
     ``v_naive`` is the plain mean of the same samples, kept side-by-side
     so the duty-cycle bias is visible in the result itself.
 
     Determinism contract (cross-engine oracle parity): samples are totally
-    ordered by (ts, ``order_tiebreak``); values quantize to exact
+    ordered by (ts, event_id); values quantize to exact
     centi-units (BIGINT), the step integral is an order-independent BIGINT
     sum of ``v_centi * dt_us``, and each mean is derived by a fixed
     float-division op tree rounded to 6 dp only at the boundary — Spark
@@ -283,25 +249,23 @@ def time_weighted_avg(
     Scale shape (100 TB): ONE shuffle on (key, bucket) serves both the
     ``lead`` window pass and the final aggregation (same partitioning
     keys, no second exchange); state per row is O(1). Max BIGINT term is
-    |v_centi| * bucket_us ≈ 1e6 * 2e10 = 2e16 per pair — no overflow
+    |v_centi| * 6h ≈ 1e6 * 2e10 = 2e16 per pair — no overflow
     headroom issues at any real bucket width.
     """
-    if bucket_us < 1:
-        raise ValueError(f"bucket_us must be >= 1, got {bucket_us}")
-    ts_us = F.unix_micros(F.col(ts).cast("timestamp"))
-    proj = events.filter(F.col(value).isNotNull()).select(
-        F.col(key),
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    proj = events.filter(F.col("value").isNotNull()).select(
+        F.col("user_id"),
         ts_us.alias("_tw_us"),
-        (ts_us / F.lit(bucket_us)).cast("long").alias("_tw_b"),
-        F.floor(F.col(value) * 100).cast("long").alias("_tw_vc"),
-        F.col(order_tiebreak).alias("_tw_tb"),
+        (ts_us / F.lit(_6H_US)).cast("long").alias("_tw_b"),
+        F.floor(F.col("value") * 100).cast("long").alias("_tw_vc"),
+        F.col("event_id").alias("_tw_tb"),
     )
-    w = Window.partitionBy(key, "_tw_b").orderBy("_tw_us", "_tw_tb")
+    w = Window.partitionBy("user_id", "_tw_b").orderBy("_tw_us", "_tw_tb")
     stepped = proj.withColumn(
         "_tw_dt", F.lead("_tw_us").over(w) - F.col("_tw_us")
     )
     return (
-        stepped.groupBy(F.col(key), F.col("_tw_b"))
+        stepped.groupBy(F.col("user_id"), F.col("_tw_b"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_obs"),
             (F.max("_tw_us") - F.min("_tw_us")).alias("span_us"),
@@ -309,8 +273,8 @@ def time_weighted_avg(
             F.sum("_tw_vc").alias("_tw_sum"),
         )
         .select(
-            key,
-            F.timestamp_micros(F.col("_tw_b") * F.lit(bucket_us))
+            "user_id",
+            F.timestamp_micros(F.col("_tw_b") * F.lit(_6H_US))
             .cast("timestamp_ntz")
             .alias("bucket_ts"),
             "n_obs",

@@ -36,6 +36,14 @@ from ..operators.aggregate import (
 )
 from ..operators.route import route, supported_types_filter
 
+#: the sinks a one-shot batch run writes: the routed, assembled and
+#: aggregated tables (the per-batch checkpoint writes a subset,
+#: ``checkpoint.SINKS``)
+BATCH_SINKS = (
+    "pause_events", "tool_calls", "dead_letter", "assembled",
+    "conv_state", "bucket_turns", "bucket_pauses", "dur_histogram",
+)
+
 
 def _sibling(table: TableRef | str, suffix: str) -> TableRef | str:
     """Derive a sibling storage location (e.g. the assembled-groups table)."""

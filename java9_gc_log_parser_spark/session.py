@@ -2,7 +2,8 @@
 
 Local-mode defaults mirror what we would set on a real cluster: AQE on (runtime
 skew-join handling + partition coalescing), Arrow enabled for the pandas-UDF
-stages, shuffle partitions sized to cores rather than the 200 default.
+stages, and a fixed ``DEFAULT_SHUFFLE_PARTITIONS`` (32) shuffle partitions
+rather than the 200 default, unless the caller passes its own count.
 """
 
 from __future__ import annotations

@@ -74,11 +74,10 @@ def maintain_index(
     cells_schema,
     books_rows,
     books_schema,
-    max_files_per_trigger: int = 2,
-    timeout_s: int = 600,
 ) -> None:
-    """Drain the vector stream, appending one encoded generation per
-    micro-batch; blocks until the availableNow backlog is done.
+    """Drain the vector stream two files per micro-batch, appending one
+    encoded generation per micro-batch; blocks until the availableNow
+    backlog is done (at most 600 s).
 
     Metadata arrives as COLLECTED rows + schema (not DataFrames): that is
     what pins the no-corpus-lineage property — the per-batch encode plan
@@ -97,7 +96,7 @@ def maintain_index(
 
     q = (
         spark.readStream.schema(input_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 2)
         .parquet(source_path)
         .writeStream.foreachBatch(
             commit_log.once_per_batch(_log(out_root), _apply)
@@ -106,9 +105,9 @@ def maintain_index(
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_s):
+    if not q.awaitTermination(600):
         q.stop()
-        raise TimeoutError(f"index stream did not drain within {timeout_s}s")
+        raise TimeoutError("index stream did not drain within 600s")
 
 
 def read_index(spark: SparkSession, out_root: str) -> DataFrame:

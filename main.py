@@ -8,8 +8,8 @@ Packaging (north rule: "packaged for spark-submit --py-files"):
         --mode checkpoint --n-batches 64
 
 Modes:
-  batch      one-shot pipeline, all sinks written once (parse and assembly
-             staged under <output>/stage)
+  batch      one-shot pipeline, each of pipeline.BATCH_SINKS written once
+             (parse and assembly staged under <output>/stage)
   checkpoint resumable micro-batches with manifest/lineage/metrics (default).
              A fresh run first rewrites the input partitioned by
              batch_bucket under <output>/source, so every micro-batch is a
@@ -61,12 +61,15 @@ def main(argv: list[str] | None = None) -> None:
         return
 
     if args.mode == "batch":
-        from java9_gc_log_parser_spark.plans.pipeline import build
+        from java9_gc_log_parser_spark.plans.pipeline import (
+            BATCH_SINKS,
+            build,
+        )
 
         dfs = build(spark.read.parquet(args.input),
                     f"{args.output}/stage/parsed")
         counts = cp.write_sinks(
-            dfs, {s: f"{args.output}/{s}" for s in cp.SINKS}
+            dfs, {s: f"{args.output}/{s}" for s in BATCH_SINKS}
         )
         print(json.dumps({"mode": "batch", "sink_rows": counts}))
         return

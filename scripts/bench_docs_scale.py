@@ -86,9 +86,9 @@ def main() -> None:
     # buckets), not the operator.
     legs = {
         "pack": (lambda d: pack_sequences(d, 512, 8), None),
-        "dupgate": (lambda d: dup_ngram_gate(d, 3), None),
+        "dupgate": (lambda d: dup_ngram_gate(d), None),
         "cms": (lambda d: cms_heavy_hitters(d, 20), None),
-        "ppjoin": (lambda d: ppjoin_pairs(d, 3), 10),
+        "ppjoin": (lambda d: ppjoin_pairs(d), 10),
         "classifier": (
             lambda d: classifier_score(d, classifier_weights(spark)),
             None,

@@ -192,7 +192,7 @@ def test_sessionize_splits_on_gap(spark):
     )
     got = {
         (r.conv_id, r.session_idx): r
-        for r in sessionize(df, gap_s=3600).collect()
+        for r in sessionize(df).collect()
     }
     assert set(got) == {("A", 0), ("A", 1), ("B", 0)}
     assert got[("A", 0)].n_turns == 2

@@ -27,14 +27,6 @@ def test_snapshot_diff_classifies_all_change_types(spark):
     assert fps[3][0] != fps[3][1] and None not in fps[3]
 
 
-def test_snapshot_diff_multi_column_fingerprint(spark):
-    # column-boundary aliasing must NOT collide: ("ab","c") vs ("a","bc")
-    old = spark.createDataFrame([(1, "ab", "c")], "doc_id long, a string, b string")
-    new = spark.createDataFrame([(1, "a", "bc")], "doc_id long, a string, b string")
-    out = snapshot_diff(old, new, compare_cols=("a", "b")).collect()
-    assert [r["change_type"] for r in out] == ["updated"]
-
-
 def test_synth_mutated_snapshot_is_deterministic_and_disjoint(spark):
     docs = spark.createDataFrame(
         [(i, f"text {i}", "en", "web", 6) for i in range(200)],

@@ -49,77 +49,81 @@ def test_short_doc_fallback_exact_match(spark):
     assert got == {(1, 10): 1}  # doc 2's 4-grams never equal the 2-token gram
 
 
-def test_boilerplate_gram_cap(spark):
-    """A gram present in > max_gram_eval_docs eval docs is dropped before
-    matching; rarer grams still fire."""
+def _fallback(monkeypatch, cap=None):
+    """Force the shuffle-hash path a huge eval registry takes (optionally
+    with a smaller boilerplate cap) by lowering the module's thresholds."""
+    from java9_gc_log_parser_spark.operators import contamination
+
+    monkeypatch.setattr(contamination, "BROADCAST_MAX_EVAL_GRAMS", 0)
+    if cap is not None:
+        monkeypatch.setattr(contamination, "FALLBACK_MAX_GRAM_EVAL_DOCS", cap)
+
+
+_BOILERPLATE_EVAL = [
+    (10, "s", "common header here rare tail gram"),
+    (11, "s", "common header here other words follow"),
+    (12, "s", "common header here more filler text"),
+]
+
+
+def test_boilerplate_gram_cap(spark, monkeypatch):
+    """On the fallback path a gram present in more eval docs than the cap
+    is dropped before matching; rarer grams still fire. The broadcast path
+    keeps every gram."""
     train = [(1, "s", "common header here rare tail gram")]
-    eval_rows = [
-        (10, "s", "common header here rare tail gram"),
-        (11, "s", "common header here other words follow"),
-        (12, "s", "common header here more filler text"),
-    ]
-    capped = _pairs(
-        spark, train, eval_rows, n=3, min_overlap=1, max_gram_eval_docs=1
-    )
+    uncapped = _pairs(spark, train, _BOILERPLATE_EVAL, n=3, min_overlap=1)
+    assert set(uncapped) == {(1, 10), (1, 11), (1, 12)}
+    _fallback(monkeypatch, cap=1)
+    capped = _pairs(spark, train, _BOILERPLATE_EVAL, n=3, min_overlap=1)
     # "common header here" appears in 3 eval docs -> dropped; the rare tail
     # grams of eval 10 survive and still flag the pair
     assert set(capped) == {(1, 10)}
-    uncapped = _pairs(spark, train, eval_rows, n=3, min_overlap=1)
-    assert set(uncapped) == {(1, 10), (1, 11), (1, 12)}
 
 
-def test_fallback_path_same_result_and_plan_shape(spark):
-    """broadcast_eval=False (huge-eval-registry path) must produce the exact
-    same pairs as the broadcast path under the same cap, via a shuffle HASH
-    join — never a sort-merge over the exploded corpus and never a
+def test_fallback_path_same_result_and_plan_shape(spark, monkeypatch):
+    """The shuffle path (huge eval registry) must produce the exact same
+    pairs as the broadcast path when no gram reaches the cap, via a shuffle
+    HASH join — never a sort-merge over the exploded corpus and never a
     BroadcastNestedLoopJoin on either path."""
-    from java9_gc_log_parser_spark.operators.contamination import (
-        contamination_pairs,
-    )
-
     train = [
         (1, "s", "x y a b c d z"),
         (2, "s", "a b q r s t u"),
         (3, "s", "p q r s t u v"),
     ]
     eval_rows = [(10, "s", "a b c d"), (11, "s", "c d z q")]
-    kw = dict(n=2, min_overlap=1, max_gram_eval_docs=1000)
-    bc = _pairs(spark, train, eval_rows, broadcast_eval=True, **kw)
-    sh = _pairs(spark, train, eval_rows, broadcast_eval=False, **kw)
-    assert bc == sh and bc  # identical and non-trivial
 
-    for flag in (True, False):
+    def run(fallback):
+        if fallback:
+            _fallback(monkeypatch)
         df = contamination_pairs(
-            _df(spark, train), _df(spark, eval_rows),
-            broadcast_eval=flag, **kw,
+            _df(spark, train), _df(spark, eval_rows), n=2, min_overlap=1
         )
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
-        if not flag:
+        if fallback:
             assert "ShuffledHashJoin" in plan
+        return {(r["train_id"], r["eval_id"]): r["n_shared"]
+                for r in df.collect()}
+
+    bc = run(False)
+    assert bc and run(True) == bc  # identical and non-trivial
 
 
-def test_fallback_cap_is_mandatory(spark):
-    """On the non-broadcast path a missing cap is filled with the default:
-    a gram in >FALLBACK_MAX_GRAM_EVAL_DOCS eval docs can never become a hot
-    shuffle key. (Indirectly observable: explicitly passing a tiny cap and
-    passing none must differ when a gram exceeds the tiny cap only.)"""
+def test_fallback_cap_is_mandatory(spark, monkeypatch):
+    """On the non-broadcast path the boilerplate cap always applies: a gram
+    in >FALLBACK_MAX_GRAM_EVAL_DOCS eval docs can never become a hot
+    shuffle key. The default cap (1000) keeps a 3-eval-doc gram; a cap of 1
+    drops it."""
     train = [(1, "s", "common header here rare tail gram")]
-    eval_rows = [
-        (10, "s", "common header here rare tail gram"),
-        (11, "s", "common header here other words follow"),
-        (12, "s", "common header here more filler text"),
-    ]
-    capped = _pairs(spark, train, eval_rows, n=3, min_overlap=1,
-                    max_gram_eval_docs=1, broadcast_eval=False)
-    assert set(capped) == {(1, 10)}
-    default_cap = _pairs(spark, train, eval_rows, n=3, min_overlap=1,
-                         broadcast_eval=False)
-    # default fallback cap (1000) keeps the 3-eval-doc gram
+    _fallback(monkeypatch)
+    default_cap = _pairs(spark, train, _BOILERPLATE_EVAL, n=3, min_overlap=1)
     assert set(default_cap) == {(1, 10), (1, 11), (1, 12)}
+    _fallback(monkeypatch, cap=1)
+    capped = _pairs(spark, train, _BOILERPLATE_EVAL, n=3, min_overlap=1)
+    assert set(capped) == {(1, 10)}
 
 
 def test_decontaminate_removes_flagged_only(spark):

@@ -66,7 +66,7 @@ def test_ngram_jaccard_known_pair(spark):
         spark,
         [(1, "s", "the cat sat"), (2, "s", "the cat sat"), (3, "s", "dog runs")],
     )
-    rows = ngram_jaccard_pairs(df, n=1, threshold=0.5).collect()
+    rows = ngram_jaccard_pairs(df).collect()
     assert [(r.doc_a, r.doc_b, r.jaccard) for r in rows] == [(1, 2, 1.0)]
 
 
@@ -83,7 +83,7 @@ def test_ngram_jaccard_adjacent_length_buckets(spark):
             (11, "t", "p q r s t u"),
         ],
     )
-    rows = ngram_jaccard_pairs(df, n=1, threshold=0.5).collect()
+    rows = ngram_jaccard_pairs(df).collect()
     got = {(r.doc_a, r.doc_b): r.jaccard for r in rows}
     assert got == {(1, 2): 0.5, (10, 11): 0.5}
 
@@ -100,7 +100,7 @@ def test_ngram_jaccard_blocking_is_exact(spark):
     df = _docs(spark, rows)
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, n=1, threshold=0.5).collect()
+        for r in ngram_jaccard_pairs(df).collect()
     }
     sh = {i: _py_shingles(t, 1) for i, _, t in rows}
     src = {i: s for i, s, _ in rows}
@@ -384,14 +384,13 @@ def test_incremental_dedup_max_bucket_cap(spark):
     )
 
     same = " ".join(f"d{i}" for i in range(40))
-    base = spark.createDataFrame(
-        [(i, same) for i in range(5)], "doc_id long, text string"
-    )
+    # 1000 store rows + the new one: every band bucket holds 1001 > 1000
+    base = spark.range(1000).selectExpr("id AS doc_id", f"'{same}' AS text")
     new = spark.createDataFrame(
-        [(100, same)], "doc_id long, text string"
+        [(10_000, same)], "doc_id long, text string"
     )
     out = incremental_dedup(
-        signature_table(new), signature_table(base), max_bucket=3
+        signature_table(new), signature_table(base)
     ).toPandas()
     assert list(out.verdict) == ["unique"]
 
@@ -414,7 +413,7 @@ def test_dup_ngram_gate_counts_cross_doc_occurrences(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in dup_ngram_gate(docs, n=3).collect()}
+    out = {r["doc_id"]: r for r in dup_ngram_gate(docs).collect()}
     # doc1: 9 trigrams, only "a b c" (1 occurrence) appears in another doc
     assert out[1]["n_shingles"] == 9
     assert out[1]["dup_shingles"] == 1
@@ -446,7 +445,7 @@ def test_containment_detects_embedded_doc(spark):
             (3, "s", "totally unrelated words about other topic entirely here"),
         ],
     )
-    out = containment_pairs(docs, n=3, df_max=5, threshold=0.9).collect()
+    out = containment_pairs(docs).collect()
     assert [(r.doc_small, r.doc_big) for r in out] == [(1, 2)]
     r = out[0]
     # every shingle of doc 1 appears in doc 2
@@ -464,7 +463,7 @@ def test_containment_matches_python_ground_truth(spark):
     docs = _docs(spark, rows)
     got = {
         (r.doc_small, r.doc_big): (r.inter, r.n_small, r.containment)
-        for r in containment_pairs(docs, n=3, df_max=5, threshold=0.5).collect()
+        for r in containment_pairs(docs).collect()
     }
     sh = {i: _py_shingles(t, 3) for i, _, t in rows}
     dfreq = {}
@@ -478,7 +477,7 @@ def test_containment_matches_python_ground_truth(spark):
             continue  # not a rare-shingle candidate
         small, big = (a, b) if len(sh[a]) <= len(sh[b]) else (b, a)
         c = round(len(shared) / len(sh[small]), 6)
-        if c >= 0.5:
+        if c >= 0.6:
             expect[(small, big)] = (len(shared), len(sh[small]), c)
     assert got == expect
 
@@ -486,13 +485,13 @@ def test_containment_matches_python_ground_truth(spark):
 def test_containment_rare_blocking_drops_hot_gram_pairs(spark):
     from java9_gc_log_parser_spark.operators.dedupe import containment_pairs
 
-    # the only shared shingles are corpus-common (df > df_max): no candidates
-    boiler = "the quick brown"
+    # 5 of each doc's 6 shingles are shared (containment 0.83 >= 0.6), but
+    # all of them are corpus-common (df 10 > df_max 5): no candidates
+    boiler = "the quick brown fox jumps over lazy"
     docs = _docs(
-        spark,
-        [(i, "s", f"{boiler} unique{i} token{i} word{i}") for i in range(10)],
+        spark, [(i, "s", f"{boiler} unique{i}") for i in range(10)]
     )
-    assert containment_pairs(docs, n=3, df_max=5, threshold=0.1).count() == 0
+    assert containment_pairs(docs).count() == 0
 
 
 # ------------------------------------------------ corpus overlap sketch
@@ -541,7 +540,7 @@ def test_corpus_overlap_matches_python_ground_truth(spark):
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
     got = {
         (r["source_a"], r["source_b"]): r
-        for r in corpus_overlap_minhash(df, k=64).collect()
+        for r in corpus_overlap_minhash(df).collect()
     }
     assert set(got) == {("a", "b"), ("a", "c"), ("b", "c")}
 
@@ -601,8 +600,7 @@ def test_ppjoin_complete_vs_brute_force(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     got = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-           for r in ppjoin_pairs(df, n=3, threshold_num=3,
-                                 threshold_den=5).collect()}
+           for r in ppjoin_pairs(df).collect()}
 
     def shingles(t):
         toks = t.split()

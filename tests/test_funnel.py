@@ -103,7 +103,7 @@ def test_cohort_retention_matrix(spark):
         # u3 first seen week 1
         _ev(3, "view", 8 * day, 5),
     ]
-    out = cohort_retention(_events_df(spark, rows), bucket_days=7)
+    out = cohort_retention(_events_df(spark, rows))
     got = {(r["cohort_bucket"], r["age"]): r for r in out.collect()}
     # cohort buckets are absolute (epoch // 7d); compare relatively
     cohorts = sorted({k[0] for k in got})
@@ -130,20 +130,28 @@ def test_transition_matrix_counts_and_true_probabilities(spark):
         return datetime.datetime(2024, 1, 1) + datetime.timedelta(seconds=s)
 
     # user 1: a->b->a->c ; user 2: a->b  => transitions:
-    # a->b:2, b->a:1, a->c:1, b->(none for u2's last)
+    # a->b:2, b->a:1, a->c:1, b->(none for u2's last);
+    # user 3: z->p1->z->p2 ... ->z->p6 => z has 6 next states, each n=1
     rows = [(1, "a", ts(0), 1), (1, "b", ts(1), 2), (1, "a", ts(2), 3),
             (1, "c", ts(3), 4), (2, "a", ts(0), 5), (2, "b", ts(1), 6)]
+    for i in range(6):
+        rows += [(3, "z", ts(2 * i), 10 + 2 * i),
+                 (3, f"p{i + 1}", ts(2 * i + 1), 11 + 2 * i)]
     df = spark.createDataFrame(
         rows, "user_id long, event_type string, ts timestamp, event_id long"
     )
     out = {(r["src_event"], r["dst_event"]): r
-           for r in transition_matrix(df, top_k=1).collect()}
-    # top-1 per src: a->b (n=2, prob 2/3), b->a (n=1, prob 1/2)
-    assert set(out) == {("a", "b"), ("b", "a")}
-    assert out[("a", "b")]["n"] == 2
+           for r in transition_matrix(df).collect()}
+    assert out[("a", "b")]["n"] == 2 and out[("a", "b")]["rk"] == 1
     assert out[("a", "b")]["prob"] == pytest.approx(2 / 3, abs=1e-6)
+    assert out[("a", "c")]["rk"] == 2
     # u2's b is terminal — b's only outgoing transition is b->a
     assert out[("b", "a")]["prob"] == pytest.approx(1.0)
+    # top-5 of z's 6 next states (ties by dst asc); the denominator keeps
+    # the cut one, so each survivor's prob is the true 1/6
+    z = sorted((d, r["prob"]) for (s, d), r in out.items() if s == "z")
+    assert [d for d, _ in z] == ["p1", "p2", "p3", "p4", "p5"]
+    assert all(p == pytest.approx(1 / 6, abs=1e-6) for _, p in z)
 
 
 def test_transition_matrix_tiebreak_orders_same_timestamp(spark):
@@ -184,12 +192,12 @@ def test_attribution_first_vs_last_touch(spark):
         touch_attribution,
     )
 
-    # user 1: view@0, click@50, purchase@100 (value 10.0) — horizon 200s:
-    # first-touch credits view, last-touch credits click
+    # user 1: view@0, click@50, purchase@100 (value 10.0) — inside the 6h
+    # horizon: first-touch credits view, last-touch credits click
     df = _attr_ev(spark, [(1, 1, "view", 0, 0), (2, 1, "click", 50, 0),
                      (3, 1, "purchase", 100, 10.0)])
     out = {(r["model"], r["touch_type"]): r
-           for r in touch_attribution(df, horizon_us=200_000_000).collect()}
+           for r in touch_attribution(df).collect()}
     assert out[("first_touch", "view")]["n_conversions"] == 1
     assert out[("last_touch", "click")]["n_conversions"] == 1
     assert out[("first_touch", "view")]["sum_value_centi"] == 1000
@@ -200,11 +208,11 @@ def test_attribution_horizon_excludes_stale_touch(spark):
         touch_attribution,
     )
 
-    # touch 300s before conversion, horizon 200s -> unattributed
+    # touch 30000s before conversion, horizon 6h = 21600s -> unattributed
     df = _attr_ev(spark, [(1, 1, "view", 0, 0),
-                     (2, 1, "purchase", 300, 5.0)])
+                     (2, 1, "purchase", 30_000, 5.0)])
     out = {(r["model"], r["touch_type"]): r["n_conversions"]
-           for r in touch_attribution(df, horizon_us=200_000_000).collect()}
+           for r in touch_attribution(df).collect()}
     assert out == {("last_touch", "(none)"): 1,
                    ("first_touch", "(none)"): 1}
 
@@ -218,7 +226,7 @@ def test_attribution_partitions_conversions_per_model(spark):
     df = _attr_ev(spark, [(1, 1, "view", 0, 0), (2, 1, "purchase", 10, 1.0),
                      (3, 2, "purchase", 10, 2.0),
                      (4, 3, "click", 0, 0)])
-    rows = touch_attribution(df, horizon_us=100_000_000).collect()
+    rows = touch_attribution(df).collect()
     for model in ("first_touch", "last_touch"):
         total = sum(r["n_conversions"] for r in rows if r["model"] == model)
         assert total == 2  # every conversion counted exactly once

@@ -19,7 +19,7 @@ def test_pagerank_hub_ranks_highest_and_mass_bounded(spark):
         [(i, 0) for i in range(n) for _ in range(2)], "src long, dst long"
     )
     rows = {r["doc_id"]: r for r in
-            pagerank_fixed(nodes, edges, n_nodes=n, outdeg=2, n_iter=5).collect()}
+            pagerank_fixed(nodes, edges, n_nodes=n, outdeg=2).collect()}
     hub = rows[0]["rank_fp"]
     others = [rows[i]["rank_fp"] for i in range(1, n)]
     assert all(hub > o for o in others)
@@ -41,13 +41,13 @@ def test_pagerank_uniform_on_symmetric_cycle(spark):
         "src long, dst long",
     )
     ranks = {r["doc_id"]: r["rank_fp"] for r in
-             pagerank_fixed(nodes, edges, n_nodes=n, outdeg=2, n_iter=3).collect()}
+             pagerank_fixed(nodes, edges, n_nodes=n, outdeg=2).collect()}
     assert len(set(ranks.values())) == 1
 
 
 def test_synth_citation_edges_constant_outdeg(spark):
     docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
-    e = synth_citation_edges(docs, n_nodes=10, k=2)
+    e = synth_citation_edges(docs, n_nodes=10)
     per_src = {r["src"]: r["n"] for r in
                e.groupBy("src").agg(F.count("dst").alias("n")).collect()}
     assert all(v == 2 for v in per_src.values()) and len(per_src) == 10

@@ -67,7 +67,6 @@ def test_crash_between_batches_then_resume(spark, sf_dir, trained, tmp_path,
         im.maintain_index(
             spark, src, embs.schema, out_root,
             cells_rows, cells.schema, books_rows, books.schema,
-            max_files_per_trigger=2,
         )
     after_crash = _last(out_root)
     assert after_crash == 0  # exactly one generation committed pre-crash
@@ -79,7 +78,6 @@ def test_crash_between_batches_then_resume(spark, sf_dir, trained, tmp_path,
     im.maintain_index(
         spark, src, embs.schema, out_root,
         cells_rows, cells.schema, books_rows, books.schema,
-        max_files_per_trigger=2,
     )
     assert calls[:3] == [0, 1, 1] and calls.count(0) == 1
     final = _last(out_root)
@@ -111,10 +109,10 @@ def test_replay_of_committed_batch_is_skipped(spark, sf_dir, trained,
     cells_rows, books_rows = cells.collect(), books.collect()
     args = (spark, src, embs.schema, out_root,
             cells_rows, cells.schema, books_rows, books.schema)
-    im.maintain_index(*args, max_files_per_trigger=2)
+    im.maintain_index(*args)
     before = _index_rows(im.read_index(spark, out_root))
     shutil.rmtree(f"{out_root}/ckpt")  # lose the stream's own progress
-    im.maintain_index(*args, max_files_per_trigger=2)
+    im.maintain_index(*args)
     after = _index_rows(im.read_index(spark, out_root))
     assert after == before
 
@@ -155,11 +153,3 @@ def test_empty_generation_round_trips(spark, sf_dir, trained, tmp_path):
 
     idx = im.read_index(spark, out_root)
     assert _index_rows(idx) == _index_rows(ivfpq_encode(embs, cells, books))
-
-
-def test_train_rejects_indivisible_dim(spark, sf_dir, trained):
-    embs, base, _, _ = trained
-    with pytest.raises(ValueError, match="not divisible"):
-        ivfpq_train(base, m=5, dim=64)
-    with pytest.raises(ValueError, match="not divisible"):
-        ivfpq_encode(embs, None, None, m=7, dim=64)

@@ -165,8 +165,7 @@ def test_semdedup_keep_rule_matches_numpy(spark, sf_dir):
 
     embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     tau = 0.3
-    got = {r["vec_id"]: r for r in semdedup(embs, k=4, iters=2,
-                                            threshold=tau).collect()}
+    got = {r["vec_id"]: r for r in semdedup(embs).collect()}
     assigned = {r["vec_id"]: (r["cluster"], r["d2"])
                 for r in kmeans_assign(embs, k=4, iters=2).collect()}
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)

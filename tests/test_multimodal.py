@@ -49,7 +49,7 @@ def test_frame_sample_counts(spark):
     df = _docs(spark, [(2, "s", "x" * 100), (5, "s", "y" * 10)])  # both video
     feats = decode_and_featurize(documents_as_assets(df))
     n_frames = {r.asset_id: r.n_frames for r in feats.collect()}
-    rows = frame_sample(feats, every_n=30).collect()
+    rows = frame_sample(feats).collect()
     by_asset = {}
     for r in rows:
         by_asset.setdefault(r.asset_id, []).append(r.frame_idx)
@@ -223,7 +223,7 @@ def test_real_decode_ppm_metadata_and_features(spark):
     )
     rows = {
         r.asset_id: r
-        for r in decode_and_featurize(df, feat_dim=8, decoder="real").collect()
+        for r in decode_and_featurize(df, decoder="real").collect()
     }
     assert (rows[1].width, rows[1].height, rows[1].n_frames) == (4, 3, 1)
     assert (rows[2].width, rows[2].height) == (2, 2)
@@ -446,7 +446,7 @@ def test_real_decode_png_featurize_parity_with_ppm(spark):
     )
     rows = {
         r.asset_id: r
-        for r in decode_and_featurize(df, feat_dim=8, decoder="real")
+        for r in decode_and_featurize(df, decoder="real")
         .collect()
     }
     assert (rows[1].width, rows[1].height) == (w, h)

@@ -231,9 +231,9 @@ EXCERPT = os.path.join(os.path.dirname(__file__), "fixtures",
 def test_reference_excerpt_class_counts(spark):
     """Exact class counts over the reference-log lines quoted verbatim in
     FIXTURES.md §4, read as a log file (the full logs are not vendored)."""
-    df = spark.read.text(EXCERPT)
-    rows = parse_lines(df, "value").select(
-        "value", "event_class", "reason_code").collect()
+    df = spark.read.text(EXCERPT).withColumnRenamed("value", "text")
+    rows = parse_lines(df).select(
+        "text", "event_class", "reason_code").collect()
     assert len(rows) == 25
     assert collections.Counter(r.event_class for r in rows) == {
         "pause_end": 7,
@@ -247,7 +247,7 @@ def test_reference_excerpt_class_counts(spark):
         "phase": 1,
     }
     # the JDK8 service-gc.log line has no unified-logging header
-    (jdk8,) = [r for r in rows if r.value.startswith("2017-07-30T")]
+    (jdk8,) = [r for r in rows if r.text.startswith("2017-07-30T")]
     assert (jdk8.event_class, jdk8.reason_code) == (
         "unmatched", "header_mismatch")
 
@@ -259,14 +259,15 @@ def test_reference_log_files(spark):
     service-gc.log is JDK8 format: every line unmatched (SURVEY §2.1).
     """
     df = spark.read.text("/root/reference/service-gc.log")
-    parsed = parse_lines(df, "value")
+    parsed = parse_lines(df.withColumnRenamed("value", "text"))
     classes = {r.event_class for r in parsed.select("event_class").distinct().collect()}
     assert classes == {"unmatched"}
 
     df2 = spark.read.text("/root/reference/gc-ga.log")
     counts = {
         r.event_class: r["count"]
-        for r in parse_lines(df2, "value").groupBy("event_class").count().collect()
+        for r in parse_lines(df2.withColumnRenamed("value", "text"))
+        .groupBy("event_class").count().collect()
     }
     # gc-ga.log: 100 young evacuation pauses + initial-mark/remark/cleanup cycles
     assert counts["pause_start"] > 0

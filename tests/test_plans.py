@@ -222,7 +222,7 @@ def test_ngram_jaccard_blocking_is_equi_join(spark):
          for i in range(40)],
         "doc_id long, source string, text string",
     )
-    plan = _formatted(ngram_jaccard_pairs(docs, n=1, threshold=0.5))
+    plan = _formatted(ngram_jaccard_pairs(docs))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
@@ -366,9 +366,7 @@ def test_epoch_order_broadcasts_offsets_no_global_sort(spark, sf_dir):
 def test_dup_ngram_gate_is_three_hash_shuffles_no_join(spark, sf_dir):
     from java9_gc_log_parser_spark.operators.dedupe import dup_ngram_gate
 
-    df = dup_ngram_gate(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), n=3
-    )
+    df = dup_ngram_gate(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     # (doc,gram) agg -> gram window -> doc agg; the gram doc-count must be
     # the window, not a self-join (no pair blow-up anywhere)

@@ -15,13 +15,13 @@ def test_key_skew_report_ranks_and_factors(spark):
         [("hot",)] * 8 + [("a",)] * 1 + [("b",)] * 1,
         "k string",
     )
-    rows = {r["rank"]: r for r in key_skew_report(df, "k", top_k=2).collect()}
+    rows = {r["rank"]: r for r in key_skew_report(df, "k").collect()}
     assert rows[1]["k"] == "hot" and rows[1]["n_rows"] == 8
     assert rows[1]["share"] == 0.8
     # 3 distinct keys, uniform would be 10/3 each: 8 / (10/3) = 2.4
     assert rows[1]["hot_factor"] == 2.4
-    assert rows[2]["k"] == "a"  # tie with b broken by key asc
-    assert len(rows) == 2
+    assert rows[2]["k"] == "a" and rows[3]["k"] == "b"  # tie: key asc
+    assert len(rows) == 3
 
 
 def test_length_outlier_gate_per_group_bands(spark):
@@ -194,13 +194,14 @@ def test_source_divergence_oov_bucket_carries_tail_mass(spark):
         source_divergence,
     )
 
-    # vocab of 1: everything except the hot token lands in (oov) — the
-    # distributions still sum to 1 and a source with MORE tail mass
-    # diverges
-    rows = [(1, "hot hot hot rare1", "s1"), (2, "hot rare2 rare3", "s2")]
+    # 50 shared tokens fill the top-50 vocab; the rare ones land in
+    # (oov) — the distributions still sum to 1 and a source with MORE
+    # tail mass diverges
+    common = " ".join(f"c{i:02d}" for i in range(50))
+    rows = [(1, common, "s1"), (2, common, "s1"), (3, common + " rare1", "s1"),
+            (4, common + " rare2 rare3 rare4 rare5 rare6", "s2")]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {r["source"]: r for r in
-           source_divergence(df, top_vocab=1).collect()}
+    out = {r["source"]: r for r in source_divergence(df).collect()}
     assert out["s1"]["jsd"] > 0
     assert out["s2"]["jsd"] > out["s1"]["jsd"]  # s2 is further from global
 

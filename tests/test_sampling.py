@@ -76,15 +76,15 @@ def _strat_docs(spark, n=300):
 def test_stratified_exact_quota_and_ground_truth(spark):
     from java9_gc_log_parser_spark.operators.sampling import stratified_sample
 
-    got = stratified_sample(_strat_docs(spark), "source", 7).collect()
+    got = stratified_sample(_strat_docs(spark)).collect()
     by_src = {}
     for r in got:
         by_src.setdefault(r.source, []).append(r.doc_id)
     assert set(by_src) == {"src0", "src1", "src2"}
     for src, ids in by_src.items():
-        assert len(ids) == 7
+        assert len(ids) == 10
         members = [i for i in range(300) if f"src{i % 3}" == src]
-        want = sorted(members, key=lambda i: (_py_bucket4(i), i))[:7]
+        want = sorted(members, key=lambda i: (_py_bucket4(i), i))[:10]
         assert sorted(ids) == sorted(want)
 
 
@@ -94,7 +94,7 @@ def test_stratified_quota_exceeding_group_size(spark):
     small = spark.createDataFrame(
         [(1, "only"), (2, "only")], "doc_id long, source string"
     )
-    assert stratified_sample(small, "source", 10).count() == 2
+    assert stratified_sample(small).count() == 2
 
 
 def _py_shard(doc_id: int, n: int = 8, salt: str = "shard:v1") -> int:
@@ -107,7 +107,7 @@ def test_shard_assign_matches_python_ground_truth(spark):
 
     got = {
         r["doc_id"]: r["shard"]
-        for r in shard_assign(_docs(spark), n_shards=8).collect()
+        for r in shard_assign(_docs(spark)).collect()
     }
     assert got == {i: _py_shard(i) for i in range(400)}
     assert all(0 <= s < 8 for s in got.values())
@@ -116,10 +116,10 @@ def test_shard_assign_matches_python_ground_truth(spark):
 def test_shard_manifest_counts_and_ranges(spark):
     from java9_gc_log_parser_spark.operators.sampling import shard_manifest
 
-    rows = {r["shard"]: r for r in shard_manifest(_docs(spark), 4).collect()}
+    rows = {r["shard"]: r for r in shard_manifest(_docs(spark)).collect()}
     by_shard: dict[int, list[int]] = {}
     for i in range(400):
-        by_shard.setdefault(_py_shard(i, 4), []).append(i)
+        by_shard.setdefault(_py_shard(i), []).append(i)
     assert set(rows) == set(by_shard)
     for s, ids in by_shard.items():
         assert rows[s]["n_docs"] == len(ids)
@@ -222,7 +222,7 @@ def test_importance_resample_python_ground_truth_key(spark):
         assert abs(r.gumbel_key - round(expect, 6)) < 2e-6
 
 
-def test_importance_resample_rejects_reserved_and_bad_buckets(spark):
+def test_importance_resample_rejects_reserved_columns(spark):
     import pytest as _pytest
 
     from java9_gc_log_parser_spark.operators.sampling import (
@@ -230,8 +230,6 @@ def test_importance_resample_rejects_reserved_and_bad_buckets(spark):
     )
 
     docs = _ir_docs(spark)
-    with _pytest.raises(ValueError):
-        importance_resample(docs, "tgt", n_buckets=100)
     with _pytest.raises(ValueError):
         importance_resample(
             docs.withColumn("_ir_x", docs.doc_id), "tgt"
@@ -327,7 +325,7 @@ def test_hrw_growth_moves_only_to_new_shards(spark):
     )
 
     docs = spark.range(2000).selectExpr("id AS doc_id")
-    rows = reshard_movement_matrix(docs, n_from=8, n_to=10).collect()
+    rows = reshard_movement_matrix(docs).collect()
     total = sum(r.n_docs for r in rows)
     moved = sum(r.n_docs for r in rows if r.shard_from != r.shard_to)
     assert total == 2000
@@ -387,17 +385,3 @@ def test_waterfill_allocates_exact_budget_and_caps(spark):
     assert not got["huge"].saturated
     unsat = [r.allocation_tokens for r in got.values() if not r.saturated]
     assert max(unsat) - min(unsat) <= 1  # common water level +-1
-
-
-def test_waterfill_budget_exceeding_supply_saturates_all(spark):
-    from java9_gc_log_parser_spark.operators.sampling import (
-        budget_waterfill,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a", "x y z"), (2, "b", "p q")],
-        "doc_id long, source string, text string",
-    )
-    got = budget_waterfill(docs, budget_num=7, budget_den=5).collect()
-    assert all(r.saturated for r in got)
-    assert all(r.allocation_tokens == r.supply_tokens for r in got)

@@ -34,7 +34,7 @@ def _corpus(spark):
 
 def test_hybrid_rrf_orders_shared_rare_terms_first(spark):
     docs, embs = _corpus(spark)
-    out = hybrid_rrf_search(docs, embs, k_leg=3, k_out=4)
+    out = hybrid_rrf_search(docs, embs)
     rows = sorted(out.collect(), key=lambda r: r["final_rank"])
     assert all(r["query_id"] == 0 for r in rows)
     # doc 1 tops both legs -> rank 1 overall
@@ -48,7 +48,15 @@ def test_hybrid_rrf_orders_shared_rare_terms_first(spark):
 
 
 def test_hybrid_rrf_respects_k_out(spark):
-    docs, embs = _corpus(spark)
-    out = hybrid_rrf_search(docs, embs, k_leg=3, k_out=2)
-    assert out.count() == 2
-    assert out.filter(F.col("final_rank") > 2).count() == 0
+    # 12 candidates for query 0 in both legs; only the top 10 come back
+    docs = spark.createDataFrame(
+        [(i, f"common w{i}", "s", 10) for i in range(13)],
+        "doc_id long, text string, source string, n_chars long",
+    )
+    embs = spark.createDataFrame(
+        [(i, [1.0, float(i), 0.0]) for i in range(13)],
+        "vec_id long, embedding array<float>",
+    )
+    out = hybrid_rrf_search(docs, embs)
+    assert out.count() == 10
+    assert out.filter(F.col("final_rank") > 10).count() == 0

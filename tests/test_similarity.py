@@ -115,26 +115,6 @@ def test_near_dup_bucket_blocked_precision_and_recall(spark):
     )
 
 
-def test_attribute_blocking_still_available(spark):
-    rows = _random_corpus()
-    got = {
-        (r.vec_a, r.vec_b)
-        for r in embedding_near_dup_pairs(
-            _embs(spark, rows), threshold=0.9, block_col="label"
-        ).collect()
-    }
-    vecs = {i: v for i, _, v in rows}
-    lbl = {i: lb for i, lb, _ in rows}
-    want = {
-        (a, b)
-        for a, b in itertools.combinations(sorted(vecs), 2)
-        if lbl[a] == lbl[b] and _py_cos(vecs[a], vecs[b]) >= 0.9
-    }
-    assert got == want
-
-
-# --- ann_topk_ivf -----------------------------------------------------------
-
 def test_ivf_full_probe_equals_bruteforce(spark):
     from java9_gc_log_parser_spark.operators.similarity import ann_topk_ivf
 
@@ -253,20 +233,16 @@ def test_pq_adc_ranks_exact_duplicate_first(spark):
     import random
 
     from java9_gc_log_parser_spark.operators.similarity import ann_topk_pq
-    from pyspark.sql import functions as F
 
     rng = random.Random(7)
-    vecs = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(9)]
-    vecs.append(list(vecs[0]))  # vec 9 duplicates vec 0
+    vecs = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(9)]
+    vecs.append(list(vecs[0]))  # vec 9 duplicates vec 0 (the one query)
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<float>",
     )
-    got = ann_topk_pq(
-        df, m=4, k_codes=2, dim=8,
-        query_pred=F.col("vec_id") == 0, k=3,
-    ).collect()
-    assert [r["query_id"] for r in got] == [0, 0, 0]
+    got = sorted(ann_topk_pq(df).collect(), key=lambda r: r["rank"])
+    assert [r["query_id"] for r in got] == [0] * 5
     assert got[0]["neighbor_id"] == 9 and got[0]["rank"] == 1
     # ADC distances are non-decreasing in rank and 6dp-rounded
     d = [r["adc_d2"] for r in got]
@@ -313,18 +289,16 @@ def test_ivf_pq_full_probe_equals_full_corpus_pq(spark):
         ann_topk_pq,
     )
 
+    # 4 vectors make 4 cells, so the query probes all of them
     random.seed(21)
     rows = [
-        (i, "x", [random.uniform(-1, 1) for _ in range(8)])
-        for i in range(150)
+        (i, "x", [random.uniform(-1, 1) for _ in range(64)])
+        for i in range(4)
     ]
     e = _embs(spark, rows)
-    pred = None  # default: vec_id % 101 == 0 -> queries 0 and 101
-    full = ann_topk_pq(e, m=2, k_codes=4, iters=2, dim=8,
-                       query_pred=pred, k=5).collect()
-    comp = ann_topk_ivf_pq(e, query_pred=pred, k=5, n_centroids=4,
-                           n_probe=4, m=2, k_codes=4, iters=2,
-                           dim=8).collect()
+    full = ann_topk_pq(e).collect()
+    comp = ann_topk_ivf_pq(e).collect()
+    assert len(full) == 3  # query 0's three neighbours
     assert sorted((r.query_id, r.rank, r.neighbor_id, r.adc_d2)
                   for r in comp) == sorted(
         (r.query_id, r.rank, r.neighbor_id, r.adc_d2) for r in full
@@ -339,19 +313,15 @@ def test_ivf_pq_partial_probe_bounds_candidates(spark):
         _ivf_cells,
         ann_topk_ivf_pq,
     )
-    from pyspark.sql import functions as F
 
     random.seed(22)
     rows = [
-        (i, "x", [random.uniform(-1, 1) for _ in range(8)])
+        (i, "x", [random.uniform(-1, 1) for _ in range(64)])
         for i in range(240)
     ]
     e = _embs(spark, rows)
-    got = ann_topk_ivf_pq(e, k=5, n_centroids=8, n_probe=2, m=2,
-                          k_codes=4, iters=2, dim=8).collect()
-    assigned, probes = _ivf_cells(
-        e, F.col("vec_id") % 101 == 0, n_centroids=8, n_probe=2
-    )
+    got = ann_topk_ivf_pq(e).collect()
+    assigned, probes = _ivf_cells(e, n_centroids=16, n_probe=4)
     cells = {
         (r.neighbor_id): r.cell for r in assigned.collect()
     }

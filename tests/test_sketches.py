@@ -15,12 +15,11 @@ def test_exact_quantile_matches_sorted_ground_truth(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "event_id long, value double"
     )
-    out = {r["q"]: r for r in
-           exact_quantile_select(df, quantiles=(0.0, 0.5, 0.99, 1.0))
-           .collect()}
+    out = {r["q"]: r for r in exact_quantile_select(df).collect()}
     centi = sorted(int(v * 100 + 1e-9) for v in vals)
     n = len(centi)
-    for q in (0.0, 0.5, 0.99, 1.0):
+    assert set(out) == {0.5, 0.95, 0.99}
+    for q in (0.5, 0.95, 0.99):
         k = int((n - 1) * q)
         assert out[q]["value_centi"] == centi[k], q
         assert out[q]["rank"] == k
@@ -37,7 +36,7 @@ def test_exact_quantile_duplicate_heavy_bucket(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "event_id long, value double"
     )
-    [r] = exact_quantile_select(df, quantiles=(0.5,)).collect()
+    r = {r["q"]: r for r in exact_quantile_select(df).collect()}[0.5]
     assert r["value_centi"] == 500
     assert r["bucket_rows"] >= 900
 
@@ -53,25 +52,25 @@ def test_sliding_hll_tracks_exact_within_envelope(spark):
     )
 
     t0 = datetime.datetime(2024, 1, 1)
-    # 3 days, users overlap across days; window 2
+    # 3 active days, users overlap across days; 7-day window
     rows = []
     eid = 0
     for day, users in ((0, range(0, 300)), (1, range(150, 450)),
-                       (3, range(0, 50))):
+                       (10, range(0, 50))):
         for u in users:
             rows.append((eid, u, t0 + datetime.timedelta(days=day)))
             eid += 1
     df = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp")
-    out = {r["bucket_ts"].day: r for r in
-           sliding_hll_distinct(df, bucket_us=86_400_000_000,
-                                window_n=2).collect()}
-    # day 2 (=Jan 2) window covers days 1-2: exact = |0..449| = 450
+    out = {r["bucket_ts"].day: r for r in sliding_hll_distinct(df).collect()}
+    # Jan 2 (day 1) window covers days -5..1: exact = |0..449| = 450
     assert out[2]["n_users_exact"] == 450
-    assert out[2]["has_activity"]  # day index 1 -> target Jan 2 has own data
-    # gap day Jan 3 (covers day 3 only via day-3's own? window2 target of
-    # day 3 is days 3,4) — Jan 3 covered by day-3 row? No: fan b..b+1, so
-    # target Jan 4 = day 3 + carry. Jan 3 carries day-2? day 2 absent.
-    assert out[4]["n_users_exact"] == 50
+    assert out[2]["has_activity"]
+    # Jan 8 (day 7) covers days 1..7: day 0 has left the window, and the
+    # bucket itself had no events
+    assert out[8]["n_users_exact"] == 300
+    assert not out[8]["has_activity"]
+    # Jan 11 (day 10) covers days 4..10: only day 10's users
+    assert out[11]["n_users_exact"] == 50
     for r in out.values():
         assert abs(r["rel_error"]) < 0.25  # 256-register envelope
 
@@ -90,47 +89,45 @@ def test_sliding_hll_merge_equals_direct_union_sketch(spark):
     rows = [(i, i % 500, t0 + datetime.timedelta(days=i % 2))
             for i in range(1000)]
     df = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp")
-    out = {r["bucket_ts"].day: r for r in
-           sliding_hll_distinct(df, window_n=2).collect()}
-    # day 2's window = days 1+2 = all 500 users; the merged estimate must
-    # equal the single-bucket estimate of the same 500-user set:
+    out = {r["bucket_ts"].day: r for r in sliding_hll_distinct(df).collect()}
+    # Jan 2's window holds days 0 and 1 = all 500 users; the merged
+    # estimate must equal the single-bucket estimate of the same set:
     both = spark.createDataFrame(
         [(i, i % 500, t0) for i in range(1000)],
         "event_id long, user_id long, ts timestamp",
     )
     direct = {r["bucket_ts"].day: r for r in
-              sliding_hll_distinct(both, window_n=1).collect()}
+              sliding_hll_distinct(both).collect()}
     assert out[2]["hll_estimate"] == direct[1]["hll_estimate"]
 
 
 def test_exact_quantile_refinement_under_concentration(spark):
-    """Adversarial concentration: 10k rows in one top-level bucket with a
-    tiny heap budget — refinement must recurse and still return the
+    """Adversarial concentration: 200k rows in one top-level bucket, twice
+    the 100k heap budget — refinement must recurse and still return the
     exact order statistic; the all-identical case resolves via the
     width-1 shortcut with no TakeOrdered at all."""
+    import math
+
+    from pyspark.sql import functions as F
+
     from java9_gc_log_parser_spark.operators.sketches import (
         exact_quantile_select,
     )
 
+    n = 200_000
     # concentrated: values 1.00..1.99 (all in top bucket 0 at width 256)
-    vals = [1.0 + (i % 100) / 100.0 for i in range(10_000)]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "event_id long, value double"
+    df = spark.range(n).select(
+        (F.lit(1.0) + (F.col("id") % 100).cast("double") / F.lit(100.0))
+        .alias("value")
     )
-    [r] = exact_quantile_select(
-        df, quantiles=(0.5,), max_heap_rows=50
-    ).collect()
-    centi = sorted(int(round(v * 100)) for v in vals)
-    assert r["value_centi"] == centi[(len(centi) - 1) // 2]
+    centi = sorted(math.floor((1.0 + (i % 100) / 100.0) * 100) for i in range(n))
+    for r in exact_quantile_select(df).collect():
+        assert r["value_centi"] == centi[int((n - 1) * r["q"])], r["q"]
 
     # degenerate: every row identical — width-1 shortcut
-    same = spark.createDataFrame(
-        [(i, 7.77) for i in range(5000)], "event_id long, value double"
-    )
-    [s] = exact_quantile_select(
-        same, quantiles=(0.99,), max_heap_rows=10
-    ).collect()
-    assert s["value_centi"] == 777
+    same = spark.range(n).select(F.lit(7.77).alias("value"))
+    got = {r["value_centi"] for r in exact_quantile_select(same).collect()}
+    assert got == {777}
 
 
 def test_hll_set_ops_partial_overlap_and_merge_property(spark):
@@ -208,11 +205,19 @@ def test_hll_queries_agree_on_one_item_set(spark):
     assert abs(report["rel_error"]) < 0.25
 
     [grouped] = grouped_hll_distinct(one, "grp", F.col("item")).collect()
-    [bucket] = sliding_hll_distinct(one, user="item", window_n=1).collect()
+    # all of one day: each of the 7 target days sees the same registers
+    buckets = sliding_hll_distinct(
+        one.withColumnRenamed("item", "user_id")
+    ).collect()
+    assert len(buckets) == 7
+    assert len({(b["hll_estimate"], b["rel_error"]) for b in buckets}) == 1
+    bucket = buckets[0]
     [stats] = stats_report(
         stats_state(one, (("item", F.col("item")),))
     ).collect()
-    [pair] = hll_set_ops(df, "grp", F.col("item")).collect()
+    [pair] = hll_set_ops(
+        df.withColumnsRenamed({"grp": "event_type", "item": "user_id"})
+    ).collect()
 
     assert grouped["hll_estimate"] == estimate
     assert grouped["rel_error"] == report["rel_error"]

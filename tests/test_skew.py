@@ -92,7 +92,7 @@ def test_sessionize_single_shuffle_under_skew(spark):
         F.col("id").cast("int").alias("turn_idx"),
         F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 10).alias("ts"),
     )
-    out = sessionize(df, gap_s=3600)
+    out = sessionize(df)
     n = out.count()  # completes under skew
     assert n >= 97
     plan = out._jdf.queryExecution().executedPlan().toString()

@@ -9,8 +9,8 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, source string, text string")
 
 
-def _run(spark, rows, **kw):
-    out = dup_span_scrub(_docs(spark, rows), **kw).collect()
+def _run(spark, rows):
+    out = dup_span_scrub(_docs(spark, rows)).collect()
     return {r["doc_id"]: (r["n_tokens"], r["n_removed"], r["clean_text"]) for r in out}
 
 
@@ -19,7 +19,6 @@ def test_shared_span_scrubbed_from_both_docs(spark):
     got = _run(
         spark,
         [(1, "w", f"alpha {shared} beta"), (2, "w", f"{shared} gamma delta")],
-        n=5,
     )
     assert got[1] == (7, 5, "alpha beta")
     assert got[2] == (7, 5, "gamma delta")
@@ -28,7 +27,7 @@ def test_shared_span_scrubbed_from_both_docs(spark):
 def test_overlapping_duplicated_grams_merge_into_one_span(spark):
     # 6 shared tokens -> two overlapping 5-grams -> 6 positions covered
     shared = "a b c d e f"
-    got = _run(spark, [(1, "w", f"x {shared}"), (2, "w", f"{shared} y")], n=5)
+    got = _run(spark, [(1, "w", f"x {shared}"), (2, "w", f"{shared} y")])
     assert got[1] == (7, 6, "x")
     assert got[2] == (7, 6, "y")
 
@@ -37,7 +36,6 @@ def test_short_docs_and_unique_docs_untouched(spark):
     got = _run(
         spark,
         [(1, "w", "tiny doc"), (2, "w", "all tokens here are unique ones")],
-        n=5,
     )
     assert got[1] == (2, 0, "tiny doc")
     assert got[2] == (6, 0, "all tokens here are unique ones")
@@ -45,7 +43,7 @@ def test_short_docs_and_unique_docs_untouched(spark):
 
 def test_fully_duplicated_doc_scrubs_to_empty(spark):
     t = "one two three four five"
-    got = _run(spark, [(1, "w", t), (2, "w", t)], n=5)
+    got = _run(spark, [(1, "w", t), (2, "w", t)])
     assert got[1] == (5, 5, "")
     assert got[2] == (5, 5, "")
 
@@ -54,6 +52,5 @@ def test_matching_is_case_insensitive_output_lowercased(spark):
     got = _run(
         spark,
         [(1, "w", "One Two Three Four Five TAIL"), (2, "w", "one two three four five")],
-        n=5,
     )
     assert got[1] == (6, 5, "tail")

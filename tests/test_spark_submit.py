@@ -66,6 +66,11 @@ def test_package_and_submit_synth_then_batch(tmp_path):
     )
     assert r2["mode"] == "batch"
     counts = r2["sink_rows"]
+    # every batch sink, the routed, assembled and aggregated tables alike
+    assert set(counts) == {
+        "pause_events", "tool_calls", "dead_letter", "assembled",
+        "conv_state", "bucket_turns", "bucket_pauses", "dur_histogram",
+    }
     # routed-row conservation: every parsed turn lands in exactly one sink
     assert counts["pause_events"] > 0
     assert counts["tool_calls"] > 0

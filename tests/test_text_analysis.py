@@ -329,7 +329,7 @@ def test_histogram_quantile_bounds_and_known_values(spark):
     # 1000 values 0..999: p99 index = 0.99*999 = 989.01 -> ~989; the bin
     # holding it is bit_length(989) = 10 -> est = 1023
     df = spark.range(1000).select(F.col("id").alias("v"))
-    row = histogram_quantile(df, "v", 0.99).collect()[0]
+    row = histogram_quantile(df, "v").collect()[0]
     assert row["n_rows"] == 1000
     assert row["est_q"] == 1023
     assert abs(row["exact_q"] - 989.01) < 1e-6
@@ -338,7 +338,7 @@ def test_histogram_quantile_bounds_and_known_values(spark):
     assert row["est_q"] < 2 * (row["exact_q"] + 1)
     # degenerate: all zeros land in bin 0, est 0
     z = spark.range(10).select(F.lit(0).cast("long").alias("v"))
-    rz = histogram_quantile(z, "v", 0.99).collect()[0]
+    rz = histogram_quantile(z, "v").collect()[0]
     assert rz["est_q"] == 0 and rz["exact_q"] == 0.0
 
 
@@ -350,21 +350,21 @@ def test_pmi_collocations_hand_computed(spark):
         pmi_collocations,
     )
 
-    # 4 docs; "x y" co-occur in 2 of 4 docs, each appears in 3:
-    # pmi = ln(2*4 / (3*3)) = ln(8/9); "x z": 1 co-doc (below support 2)
-    rows = [(1, "x y w"), (2, "x y"), (3, "x z"), (4, "y q z")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    # 4 docs, 3 times over; "x y" co-occur in 6 of 12 docs, each appears
+    # in 9: pmi = ln(6*12 / (9*9)) = ln(8/9); "x z": 3 co-docs (below
+    # support 5)
+    texts = ["x y w", "x y", "x z", "y q z"] * 3
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     out = {(r["tok_a"], r["tok_b"]): r
-           for r in pmi_collocations(df, top_vocab=10,
-                                     min_pair_docs=2).collect()}
+           for r in pmi_collocations(df).collect()}
     import math
 
-    assert out[("x", "y")]["n_ab"] == 2
-    assert out[("x", "y")]["n_a"] == 3 and out[("x", "y")]["n_b"] == 3
+    assert out[("x", "y")]["n_ab"] == 6
+    assert out[("x", "y")]["n_a"] == 9 and out[("x", "y")]["n_b"] == 9
     assert out[("x", "y")]["pmi"] == pytest.approx(
         math.log(8 / 9), abs=1e-6
     )
-    # below support 2: x&z share only doc 3, y&z share only doc 4
+    # below support 5: x&z share only the "x z" docs, y&z the "y q z" ones
     assert ("x", "z") not in out
     assert ("y", "z") not in out
 
@@ -374,14 +374,13 @@ def test_pmi_collocations_support_filter_and_dedup_within_doc(spark):
         pmi_collocations,
     )
 
-    # repeated token within one doc counts ONCE (document co-occurrence)
-    rows = [(1, "a b a b a b"), (2, "a b"), (3, "a c")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    # repeated token within one doc counts ONCE (document co-occurrence);
+    # "a c" co-occurs in 4 docs, one short of the support floor of 5
+    texts = ["a b a b a b"] + ["a b"] * 4 + ["a c"] * 4
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     out = {(r["tok_a"], r["tok_b"]): r["n_ab"]
-           for r in pmi_collocations(df, top_vocab=10,
-                                     min_pair_docs=1).collect()}
-    assert out[("a", "b")] == 2
-    assert out[("a", "c")] == 1
+           for r in pmi_collocations(df).collect()}
+    assert out == {("a", "b"): 5}
 
 
 def test_pmi_vocab_cut_excludes_rare_tokens(spark):
@@ -389,11 +388,14 @@ def test_pmi_vocab_cut_excludes_rare_tokens(spark):
         pmi_collocations,
     )
 
-    # vocab of 2: only the two most frequent tokens can pair
-    rows = [(i, "hot warm rare%d" % i) for i in range(6)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = pmi_collocations(df, top_vocab=2, min_pair_docs=1).collect()
-    assert {(r["tok_a"], r["tok_b"]) for r in out} == {("hot", "warm")}
+    # 50 tokens in 7 docs fill the top-50 vocab: the pair in 6 docs has
+    # the support but not the document frequency to pair
+    hot = " ".join(f"t{i:02d}" for i in range(50))
+    texts = [hot] * 7 + ["p1 p2"] * 6
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    pairs = {(r["tok_a"], r["tok_b"]) for r in pmi_collocations(df).collect()}
+    assert ("p1", "p2") not in pairs
+    assert len(pairs) == 50 * 49 // 2
 
 
 def _clf_w(tok: str) -> int:
@@ -483,7 +485,7 @@ def test_score_calibration_buckets_and_means(spark):
         [(i, round(i / 100, 6), i >= 50) for i in range(100)],
         ["doc_id", "logit", "keep"],
     )
-    rows = {r["bucket"]: r for r in score_calibration(scores, 10).collect()}
+    rows = {r["bucket"]: r for r in score_calibration(scores).collect()}
     assert set(rows) == set(range(10))
     assert all(rows[b]["n_docs"] == 10 for b in range(10))
     # means rise monotonically with the bucket; keep flips at bucket 5

@@ -20,11 +20,19 @@ def _ts(sec: int) -> datetime.datetime:
     return datetime.datetime(2024, 1, 1) + datetime.timedelta(seconds=sec)
 
 
+_6H = 21_600  # gapfill_locf's bucket, in seconds
+
+
 def _series(spark, rows):
+    """rows: (user_id, 6h bucket index, value)."""
     return spark.createDataFrame(
-        [(k, _ts(s), float(v)) for k, s, v in rows],
+        [(k, _ts(b * _6H), float(v)) for k, b, v in rows],
         "user_id long, ts timestamp, value double",
     )
+
+
+def _bucket(r) -> int:
+    return int((r["bucket_ts"] - _ts(0)).total_seconds()) // _6H
 
 
 def _formatted(df) -> str:
@@ -37,13 +45,10 @@ def _formatted(df) -> str:
 
 
 def test_gapfill_fills_gaps_with_locf_and_interp(spark):
-    # 1s buckets: observations at buckets 0 (v=10), 1 (v=16), 4 (v=40)
+    # observations at buckets 0 (v=10), 1 (v=16), 4 (v=40)
     df = _series(spark, [(1, 0, 10.0), (1, 1, 16.0), (1, 4, 40.0)])
-    out = gapfill_locf(df, bucket_us=1_000_000, max_fill=8)
-    rows = {
-        (r["user_id"], r["bucket_ts"].second): r
-        for r in out.collect()
-    }
+    out = gapfill_locf(df)
+    rows = {(r["user_id"], _bucket(r)): r for r in out.collect()}
     assert sorted(s for _, s in rows) == [0, 1, 2, 3, 4]
     # observed rows: not filled, n_obs=1, locf == interp == value
     for sec, v in [(0, 10.0), (1, 16.0), (4, 40.0)]:
@@ -63,26 +68,26 @@ def test_gapfill_fills_gaps_with_locf_and_interp(spark):
 def test_gapfill_bucket_mean_is_exact_integer_contract(spark):
     # two obs in one bucket: mean via floor(v*1000) sums = (10123+10456)/2000
     df = _series(spark, [(7, 0, 10.1234), (7, 0, 10.4567)])
-    r = gapfill_locf(df, bucket_us=1_000_000).collect()[0]
+    r = gapfill_locf(df).collect()[0]
     assert r["n_obs"] == 2
     assert r["v_locf"] == pytest.approx((10123 + 10456) / 1000.0 / 2.0)
 
 
 def test_gapfill_truncates_wide_gaps(spark):
     df = _series(spark, [(1, 0, 1.0), (1, 20, 21.0)])
-    out = gapfill_locf(df, bucket_us=1_000_000, max_fill=3).collect()
-    secs = sorted(r["bucket_ts"].second for r in out)
-    assert secs == [0, 1, 2, 3, 20]  # 3 fills, then the gap stays open
-    first = next(r for r in out if r["bucket_ts"].second == 0)
+    out = gapfill_locf(df).collect()
+    buckets = sorted(_bucket(r) for r in out)
+    assert buckets == [*range(9), 20]  # 8 fills, then the gap stays open
+    first = next(r for r in out if _bucket(r) == 0)
     assert first["gap_truncated"]
     # interp still runs along the true slope (v + (nv-v)*step/gap)
-    r3 = next(r for r in out if r["bucket_ts"].second == 3)
+    r3 = next(r for r in out if _bucket(r) == 3)
     assert r3["v_interp"] == pytest.approx(1.0 + 20.0 * 3 / 20)
 
 
 def test_gapfill_keys_are_independent_and_plan_has_two_exchanges(spark):
     df = _series(spark, [(1, 0, 1.0), (1, 3, 4.0), (2, 5, 9.0)])
-    out = gapfill_locf(df, bucket_us=1_000_000)
+    out = gapfill_locf(df)
     plan = _formatted(out)  # pre-execution: AQE hasn't appended a final plan
     assert plan.count("+- Exchange") == 2  # rollup agg + per-key window
     per_key = {k: 0 for k in (1, 2)}
@@ -104,7 +109,7 @@ def test_chunk_sliding_matches_python_ground_truth(spark):
     toks = [f"t{i}" for i in range(100)]
     df = _chunk_docs(spark, [" ".join(toks)])
     got = sorted(
-        map(tuple, chunk_sliding(df, window=64, stride=48).collect())
+        map(tuple, chunk_sliding(df).collect())
     )
     exp = []
     for i, start in enumerate([0, 48]):
@@ -121,7 +126,7 @@ def test_chunk_sliding_covers_every_token(spark):
         df = _chunk_docs(spark, [" ".join(f"t{i}" for i in range(n))])
         spans = [
             (r["start_tok"], r["start_tok"] + r["n_tok"])
-            for r in chunk_sliding(df, window=64, stride=48).collect()
+            for r in chunk_sliding(df).collect()
         ]
         covered = set()
         for a, b in spans:
@@ -188,23 +193,22 @@ def test_moving_window_range_frame_skips_gaps(spark):
     )
 
     t0 = datetime.datetime(2024, 1, 1)
-    day = 86_400_000_000
 
     def ev(eid, d, v):
         return (eid, t0 + datetime.timedelta(days=d), 1, "click", v, "{}")
 
-    # days 0, 1, then a gap, then day 5
+    # days 0, 1, then a gap, then day 9
     df = spark.createDataFrame(
-        [ev(1, 0, 1.0), ev(2, 1, 3.0), ev(3, 5, 10.0)],
+        [ev(1, 0, 1.0), ev(2, 1, 3.0), ev(3, 9, 10.0)],
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    out = moving_window_stats(df, bucket_us=day, trailing=3)
+    out = moving_window_stats(df)
     rows = sorted(out.collect(), key=lambda r: r["bucket_ts"])
     assert [r["n"] for r in rows] == [1, 1, 1]
-    # day 1: window covers days -1..1 -> both obs
+    # day 1: the 7-day window covers days -5..1 -> both obs
     assert rows[1]["mov_n"] == 2 and rows[1]["mov_avg"] == 2.0
-    # day 5: window covers days 3..5 -> ONLY day 5 (RANGE frame skips the
+    # day 9: window covers days 3..9 -> ONLY day 9 (RANGE frame skips the
     # gap; a ROWS frame would wrongly include days 0-1)
     assert rows[2]["mov_n"] == 1 and rows[2]["mov_avg"] == 10.0
 
@@ -217,7 +221,6 @@ def test_sliding_distinct_users_dedups_across_window(spark):
     )
 
     t0 = datetime.datetime(2024, 1, 1)
-    day = 86_400_000_000
 
     def ev(eid, d, u):
         return (eid, t0 + datetime.timedelta(days=d), u, "view", 0.0, "{}")
@@ -229,16 +232,16 @@ def test_sliding_distinct_users_dedups_across_window(spark):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    out = sliding_distinct_users(df, bucket_us=day, window_n=3)
+    out = sliding_distinct_users(df)
     rows = {r["bucket_ts"].day: r for r in out.collect()}
-    # day 1 window covers days -1..1: users {1, 2}, pairs {(1,0),(1,1),(2,1)}
+    # day 1 window covers days -5..1: users {1, 2}, pairs {(1,0),(1,1),(2,1)}
     assert rows[2]["n_users"] == 2 and rows[2]["n_user_buckets"] == 3
     assert rows[2]["has_activity"]
-    # ghost tail: day 3 window covers days 1..3 -> still sees both users,
+    # ghost tail: day 3 window covers days -3..3 -> still sees both users,
     # but the bucket itself had no events
     assert rows[4]["n_users"] == 2 and not rows[4]["has_activity"]
-    # fan-out bound: window_n=3 over 3 distinct pairs -> <= 9 target rows
-    assert len(rows) <= 9
+    # fan-out bound: 7 target days over 3 distinct pairs -> <= 21 rows
+    assert len(rows) <= 21
 
 
 # ------------------------------------------------------- time-weighted avg
@@ -257,10 +260,10 @@ def test_twa_matches_hand_computed_locf_integral(spark):
         time_weighted_avg,
     )
 
-    # one 10s bucket: v=10 holds [0,2), v=20 holds [2,6), v=30 at 6 (no dt)
+    # one 6h bucket: v=10 holds [0,2), v=20 holds [2,6), v=30 at 6 (no dt)
     df = _tw_series(spark, [(1, 0, 10.0, 1), (1, 2, 20.0, 2),
                             (1, 6, 30.0, 3)])
-    out = time_weighted_avg(df, bucket_us=10_000_000)
+    out = time_weighted_avg(df)
     [r] = out.collect()
     assert r["n_obs"] == 3
     assert r["span_us"] == 6_000_000
@@ -278,7 +281,7 @@ def test_twa_single_sample_and_constant_series(spark):
                             (2, 0, 7.0, 2), (2, 1, 7.0, 3),   # constant,
                             (2, 9, 7.0, 4)])                  # irregular
     rows = {r["user_id"]: r
-            for r in time_weighted_avg(df, bucket_us=10_000_000).collect()}
+            for r in time_weighted_avg(df).collect()}
     assert rows[1]["span_us"] == 0
     assert rows[1]["v_twa"] == pytest.approx(42.0)
     assert rows[2]["v_twa"] == pytest.approx(7.0)
@@ -293,7 +296,7 @@ def test_twa_discounts_instantaneous_spike_naive_mean_does_not(spark):
     # v=10 holds the whole 9s span; the 1000 spike lands at the end with
     # zero holding time — TWA stays 10, the naive mean explodes to 505
     df = _tw_series(spark, [(1, 0, 10.0, 1), (1, 9, 1000.0, 2)])
-    [r] = time_weighted_avg(df, bucket_us=10_000_000).collect()
+    [r] = time_weighted_avg(df).collect()
     assert r["v_twa"] == pytest.approx(10.0)
     assert r["v_naive"] == pytest.approx(505.0)
 
@@ -307,7 +310,7 @@ def test_twa_single_shuffle_shared_by_window_and_agg(spark):
                             (2, 1, 3.0, 3)])
     import re
 
-    plan = _formatted(time_weighted_avg(df, bucket_us=10_000_000))
+    plan = _formatted(time_weighted_avg(df))
     # the lead window and the groupBy share the (key, bucket) partitioning:
     # exactly ONE shuffle node in the whole plan (the formatted dump lists
     # each node twice — tree + detail — so count node headers)
