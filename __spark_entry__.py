@@ -649,7 +649,7 @@ def q34_ann_ivf(spark, sf_dir):
     4-cell probe (the scale path where the cell id is the partition key)."""
     from java9_gc_log_parser_spark.operators.similarity import ann_topk_ivf
 
-    return ann_topk_ivf(_embs(spark, sf_dir), k=5, n_centroids=16, n_probe=4)
+    return ann_topk_ivf(_embs(spark, sf_dir), n_centroids=16)
 
 
 #: q35's pattern set: the standard PII list plus a corpus-matching deny term
@@ -878,7 +878,7 @@ def q50_curation_e2e(spark, sf_dir):
     # removes eval members themselves from the training set)
     eval_docs = hash_split(docs).filter(F.col("split") == "test").drop("split")
     write_table(
-        decontaminate(docs3, eval_docs, n=4, min_overlap=2), f"{root}/stage4"
+        decontaminate(docs3, eval_docs, n=4), f"{root}/stage4"
     )
     docs4 = read_table(spark, f"{root}/stage4")
 
@@ -2528,7 +2528,7 @@ def q137_blocking_quality(spark, sf_dir):
         "doc_id", normalized_title().alias("title")
     )
     return blocking_quality_audit(
-        titles, max_seg_freq=2,
+        titles,
         store_path=f"{_ORACLE_EXPORT_DIR}/passjoin_capped_pairs.parquet",
     )
 
@@ -2873,7 +2873,6 @@ def q131_compaction_apply(spark, sf_dir):
         _docs(spark, sf_dir),
         _scratch(sf_dir, "q131"),
         target_bytes=16384,
-        files_per_source=16,
     )
 
 

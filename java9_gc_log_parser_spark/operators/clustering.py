@@ -36,10 +36,29 @@ and the per-iteration cost is one columnar scan + one broadcast join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from java9_gc_log_parser_spark.operators.similarity import _as_double, _dot
+from java9_gc_log_parser_spark.operators.similarity import (
+    _as_double,
+    _dot,
+    _with_norm,
+    rounded_cos,
+)
+
+
+def _sq(c: str) -> Column:
+    """Rounded squared norm of vector column ``c``."""
+    return F.round(_dot(F.col(c), F.col(c)), 6)
+
+
+def _d2() -> Column:
+    """Rounded expanded-form squared distance of ``_emb`` (with its
+    ``_esq``) to centroid ``c_emb`` (with its ``c_sq``)."""
+    return F.round(
+        F.col("_esq") - 2.0 * _dot(F.col("_emb"), F.col("c_emb")) + F.col("c_sq"),
+        6,
+    )
 
 
 def _init_centroids(e: DataFrame, k: int) -> DataFrame:
@@ -60,25 +79,26 @@ def _init_centroids(e: DataFrame, k: int) -> DataFrame:
     return seeds.select(
         (F.row_number().over(w) - 1).cast("int").alias("cluster"),
         F.col("_emb").alias("c_emb"),
-    ).withColumn("c_sq", F.round(_dot(F.col("c_emb"), F.col("c_emb")), 6))
+    ).withColumn("c_sq", _sq("c_emb"))
 
 
-def _assign(e: DataFrame, centroids: DataFrame) -> DataFrame:
-    """(vec_id, cluster, d2): nearest centroid by rounded expanded-form
-    squared distance, ties to the smallest cluster id (struct-min argmin)."""
-    pairs = e.join(F.broadcast(centroids))
-    d2 = F.round(
-        F.col("_esq") - 2.0 * _dot(F.col("_emb"), F.col("c_emb")) + F.col("c_sq"),
-        6,
-    )
+def _argmin(pairs: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, cluster, d2): per ``keys`` group of (vector, centroid) rows,
+    the nearest centroid by rounded expanded-form squared distance, ties
+    to the smallest cluster id (struct-min argmin)."""
     best = (
-        pairs.select("vec_id", F.struct(d2.alias("d2"), "cluster").alias("_s"))
-        .groupBy("vec_id")
+        pairs.select(*keys, F.struct(_d2().alias("d2"), "cluster").alias("_s"))
+        .groupBy(*keys)
         .agg(F.min("_s").alias("_s"))
     )
     return best.select(
-        "vec_id", F.col("_s.cluster").alias("cluster"), F.col("_s.d2").alias("d2")
+        *keys, F.col("_s.cluster").alias("cluster"), F.col("_s.d2").alias("d2")
     )
+
+
+def _assign(e: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vec_id, cluster, d2): each vector's nearest centroid."""
+    return _argmin(e.join(F.broadcast(centroids)), "vec_id")
 
 
 def _update(e: DataFrame, assigned: DataFrame) -> DataFrame:
@@ -97,23 +117,35 @@ def _update(e: DataFrame, assigned: DataFrame) -> DataFrame:
             F.array_sort(F.collect_list(F.struct("pos", "v"))), lambda s: s["v"]
         ).alias("c_emb")
     )
-    return cent.withColumn("c_sq", F.round(_dot(F.col("c_emb"), F.col("c_emb")), 6))
+    return cent.withColumn("c_sq", _sq("c_emb"))
 
 
-def kmeans_assign(embeddings: DataFrame, k: int = 4, iters: int = 2) -> DataFrame:
-    """Final (vec_id, cluster, d2) after ``iters`` Lloyd iterations.
+def lloyd(
+    embeddings: DataFrame, vec: Column, k: int, iters: int
+) -> tuple[DataFrame, DataFrame]:
+    """``iters`` Lloyd rounds over the double vector ``vec`` of each
+    ``embeddings`` row: ``(centroids, assigned)``, the last round's
+    ``(cluster, c_emb, c_sq)`` and ``(vec_id, cluster, d2)``.
 
     ``iters`` counts assignment rounds: iters=2 means assign against the
-    seeds, update centroids, assign again (the returned assignment).
+    seeds, update centroids, assign again (the returned assignment). The
+    vector and its rounded squared norm ``_esq`` are bound once per row.
     """
-    e = embeddings.select("vec_id", _as_double(F.col("embedding")).alias("_emb"))
-    e = e.withColumn("_esq", F.round(_dot(F.col("_emb"), F.col("_emb")), 6))
+    e = embeddings.select("vec_id", vec.alias("_emb")).withColumn(
+        "_esq", _sq("_emb")
+    )
     centroids = _init_centroids(e, k)
     assigned = _assign(e, centroids)
     for _ in range(iters - 1):
         centroids = _update(e, assigned)
         assigned = _assign(e, centroids)
-    return assigned
+    return centroids, assigned
+
+
+def kmeans_assign(embeddings: DataFrame, k: int = 4, iters: int = 2) -> DataFrame:
+    """Final (vec_id, cluster, d2) after ``iters`` Lloyd rounds over the
+    whole embedding (see :func:`lloyd`)."""
+    return lloyd(embeddings, _as_double(F.col("embedding")), k, iters)[1]
 
 
 def semdedup(embeddings: DataFrame) -> DataFrame:
@@ -131,13 +163,10 @@ def semdedup(embeddings: DataFrame) -> DataFrame:
     Scale shape: the expensive all-pairs step never runs corpus-wide — only
     within k-means cells, and k grows with the corpus (SemDeDup used 50k
     cells for LAION; cell size, not corpus size, bounds the quadratic term).
-    The cosine reuses the rounded-6dp contract from
-    ``similarity.embedding_near_dup_pairs``; distances reuse
+    The cosine is ``similarity.rounded_cos``; distances reuse
     ``kmeans_assign``'s rounded expanded form, so the oracle re-derives the
     identical verdict in DuckDB by unrolling the same iterations.
     """
-    from java9_gc_log_parser_spark.operators.similarity import EPS, _with_norm
-
     assigned = kmeans_assign(embeddings, k=4, iters=2)
     e = _with_norm(embeddings).select("vec_id", "_emb", "_nrm")
     m = assigned.join(e, "vec_id")
@@ -149,11 +178,7 @@ def semdedup(embeddings: DataFrame) -> DataFrame:
     )
     m = m.repartition(n_parts, "cluster")
     a, b = m.alias("a"), m.alias("b")
-    cos = F.round(
-        _dot(F.col("a._emb"), F.col("b._emb"))
-        / (F.col("a._nrm") * F.col("b._nrm") + F.lit(EPS)),
-        6,
-    )
+    cos = rounded_cos("a._emb", "a._nrm", "b._emb", "b._nrm")
     pairs = (
         a.join(
             b,

@@ -103,20 +103,16 @@ def contamination_pairs(
     )
 
 
-def decontaminate(
-    train: DataFrame,
-    eval_df: DataFrame,
-    n: int = 4,
-    min_overlap: int = 2,
-) -> DataFrame:
-    """Train corpus minus every document flagged by ``contamination_pairs``.
+def decontaminate(train: DataFrame, eval_df: DataFrame, n: int = 4) -> DataFrame:
+    """Train corpus minus every document ``contamination_pairs`` flags (at
+    its default of 2 shared ``n``-grams).
 
     Left anti join on the (small) flagged-id set — at scale, broadcast-able
     because the contaminated fraction of a screened corpus is tiny.
     """
-    flagged = contamination_pairs(
-        train, eval_df, n=n, min_overlap=min_overlap
-    ).select(F.col("train_id").alias("doc_id")).distinct()
+    flagged = contamination_pairs(train, eval_df, n=n).select(
+        F.col("train_id").alias("doc_id")
+    ).distinct()
     return train.join(F.broadcast(flagged), "doc_id", "left_anti")
 
 
@@ -146,7 +142,7 @@ def semantic_decontaminate(
     table, and the best-match window partitions by corpus vec_id over only
     the matched subset. No corpus-sized shuffle anywhere.
     """
-    from .similarity import EPS, _dot, _with_norm, sign_bucket
+    from .similarity import _with_norm, rounded_cos, sign_bucket
 
     c = _with_norm(corpus_emb).select(
         "vec_id",
@@ -160,11 +156,7 @@ def semantic_decontaminate(
         F.col("_nrm").alias("_enrm"),
         sign_bucket(F.col("embedding")).alias("_blk"),
     )
-    cos = F.round(
-        _dot(F.col("_emb"), F.col("_eemb"))
-        / (F.col("_nrm") * F.col("_enrm") + F.lit(EPS)),
-        6,
-    )
+    cos = rounded_cos("_emb", "_nrm", "_eemb", "_enrm")
     matched = (
         c.join(F.broadcast(ev), "_blk")
         .withColumn("cos", cos)

@@ -177,99 +177,90 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signature(shingles: Column, k: int = 32) -> Column:
-    """k minhashes in ONE shingle-array traversal; hash_j(s) = xxhash64(s, j).
+def minhash_signature(shingles: Column) -> Column:
+    """``_MH_K`` minhashes in ONE shingle-array traversal; hash_j(s) =
+    xxhash64(s, j).
 
     acc starts at [Long.Max]*k and folds elementwise-min of the per-shingle
     hash vector. Empty shingle set -> [Long.Max]*k (never occurs via
     with_shingles, which emits >=1 shingle).
     """
-    zero = F.array(*[F.lit(_LONG_MAX).cast("long") for _ in range(k)])
+    zero = F.array(*[F.lit(_LONG_MAX).cast("long") for _ in range(_MH_K)])
     return F.aggregate(
         shingles,
         zero,
         lambda acc, s: F.zip_with(
             acc,
-            F.array(*[F.xxhash64(s, F.lit(j)) for j in range(k)]),
+            F.array(*[F.xxhash64(s, F.lit(j)) for j in range(_MH_K)]),
             lambda a, h: F.least(a, h),
         ),
     )
 
 
-def lsh_buckets(docs: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_hash) — one row per band per doc.
+def signature_table(docs: DataFrame) -> DataFrame:
+    """The MinHash LSH banding: one row per (doc, band) carrying the band's
+    bucket hash and the doc's full MinHash signature, ``(doc_id, band_id,
+    band_hash, sig)``. ``band_hash`` is xxhash64 of the band's signature
+    slice (hashing the array value directly; no per-element re-reference
+    of the signature column).
 
-    band_hash = xxhash64 of the band's signature slice (hashing the array
-    value directly; no per-element re-reference of the signature column).
+    This is also the artifact a continuously-ingesting corpus keeps instead
+    of its text: at 100 TB you never re-shingle the base corpus to dedup a
+    daily batch — you join the batch's signatures against this store
+    (bands*~300 bytes per doc, ~0.01% of the text volume) and append the
+    batch's own rows afterwards (:func:`incremental_dedup`).
     """
-    bands = _MH_BANDS
-    r = _MH_K // bands
+    r = _MH_K // _MH_BANDS
     sig = with_shingles(docs, _MH_SHINGLE_N).withColumn(
-        "_sig", minhash_signature(F.col("sh"), _MH_K)
+        "_sig", minhash_signature(F.col("sh"))
     )
-    band_rows = sig.select(
+    return sig.select(
         "doc_id",
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("band_id"),
-                        F.xxhash64(F.slice("_sig", b * r + 1, r)).alias("band_hash"),
+                        F.xxhash64(F.slice("_sig", b * r + 1, r)).alias(
+                            "band_hash"
+                        ),
                     )
-                    for b in range(bands)
+                    for b in range(_MH_BANDS)
                 ]
             )
         ).alias("band"),
-    )
-    return band_rows.select("doc_id", "band.band_id", "band.band_hash")
+        F.col("_sig").alias("sig"),
+    ).select("doc_id", "band.band_id", "band.band_hash", "sig")
+
+
+def lsh_buckets(docs: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_hash) — :func:`signature_table` without the
+    signature."""
+    return signature_table(docs).drop("sig")
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame,
-    threshold: float = 0.6,
-    buckets: DataFrame | None = None,
+    docs: DataFrame, threshold: float, buckets: DataFrame
 ) -> DataFrame:
-    """Candidate pairs from LSH buckets, exact-verified at `threshold`.
+    """Candidate pairs from the :func:`lsh_buckets` table ``buckets``,
+    exact-verified at ``threshold``.
 
     Buckets larger than 1000 rows (degenerate content) are dropped to bound
     the quadratic pair blow-up; at scale, report them via lsh_buckets stats.
 
-    ``buckets`` optionally injects a precomputed ``lsh_buckets`` table
-    (materialize the banding once — also lets an external oracle re-verify
-    the banding logic from the artifact); the shingle pipeline then runs
-    exactly once for the whole query. When None, AQE's runtime exchange
-    reuse (asserted in tests/test_plans.py) shares (a) the band-key shuffle
+    The caller materializes the banding once (which also lets an external
+    oracle re-verify the banding logic from the artifact), so the shingle
+    pipeline runs exactly once here: AQE's runtime exchange reuse
+    (asserted in tests/test_plans.py) shares (a) the band-key shuffle
     across the candidate self-join's two sides and (b) the hash(doc_id)
-    exchange across both verification joins, so shingling runs twice (band
-    subtree carries the signature; the verification subtree is pruned to
-    (sh, sz)) — never once per consumer.
+    exchange across both verification joins.
     """
     n_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    bands = _MH_BANDS
-    sig = (
+    sh = (
         with_shingles(docs, _MH_SHINGLE_N)
         .select("doc_id", "sh", F.size("sh").alias("sz"))
-        .withColumn("_sig", minhash_signature(F.col("sh"), _MH_K))
         .repartition(n_parts, "doc_id")
     )
-    if buckets is None:
-        rr = _MH_K // bands
-        buckets = sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bd).alias("band_id"),
-                            F.xxhash64(F.slice("_sig", bd * rr + 1, rr)).alias(
-                                "band_hash"
-                            ),
-                        )
-                        for bd in range(bands)
-                    ]
-                )
-            ).alias("band"),
-        ).select("doc_id", "band.band_id", "band.band_hash")
     # explicit count: the bucket self-join's output is quadratic in bucket
     # size — AQE's input-bytes coalescing must not squeeze it onto one task
     b = buckets.repartition(n_parts, "band_id", "band_hash")
@@ -288,7 +279,6 @@ def minhash_lsh_pairs(
         .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
         .distinct()
     )
-    sh = sig.select("doc_id", "sh", "sz")
     verified = (
         cand.join(
             sh.select(
@@ -572,41 +562,6 @@ def dedup_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Incremental dedup against a persisted signature store
 # ---------------------------------------------------------------------------
-
-def signature_table(docs: DataFrame) -> DataFrame:
-    """Compact per-doc near-dup signature rows for a PERSISTED store:
-    one row per (doc, band) carrying the band's LSH bucket hash plus the
-    full MinHash signature.
-
-    This is the artifact a continuously-ingesting corpus keeps instead of
-    its text: at 100 TB you never re-shingle the base corpus to dedup a
-    daily batch — you join the batch's signatures against this store
-    (bands*~300 bytes per doc, ~0.01% of the text volume) and append the
-    batch's own rows afterwards. Schema: (doc_id, band_id, band_hash, sig).
-    """
-    bands = _MH_BANDS
-    r = _MH_K // bands
-    sig = with_shingles(docs, _MH_SHINGLE_N).withColumn(
-        "_sig", minhash_signature(F.col("sh"), _MH_K)
-    )
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(F.slice("_sig", b * r + 1, r)).alias(
-                            "band_hash"
-                        ),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-        F.col("_sig").alias("sig"),
-    ).select("doc_id", "band.band_id", "band.band_hash", "sig")
-
 
 def incremental_dedup(new_sig: DataFrame, store_sig: DataFrame) -> DataFrame:
     """Dedup a NEW batch against a persisted signature store — pure

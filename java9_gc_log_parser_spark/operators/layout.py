@@ -36,7 +36,7 @@ layout, and time-clustering is the canonical choice for event data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -203,17 +203,9 @@ def zorder_zone_map(
     )
 
 
-def micro_file_stats(docs: DataFrame, files_per_source: int = 32) -> DataFrame:
-    """Synthetic per-file metadata table (test/bench scaffolding for
-    :func:`compaction_plan`, like cdc.synth_mutated_snapshot — NOT a
-    pipeline operator): docs are md5-bucketed into ``files_per_source``
-    micro-files per source, mimicking the small-file litter a streaming
-    ingest leaves behind. md5-derived so the DuckDB oracle rebuilds the
-    identical table from the raw documents view.
-
-    Output: ``(source, file_id, n_docs, bytes)``.
-    """
-    fid = (
+def _file_id(files_per_source: int) -> Column:
+    """A doc's md5-derived micro-file id in ``[0, files_per_source)``."""
+    return (
         F.conv(
             F.substring(
                 F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":file:v1"))),
@@ -225,7 +217,21 @@ def micro_file_stats(docs: DataFrame, files_per_source: int = 32) -> DataFrame:
         ).cast("long")
         % files_per_source
     ).cast("int")
-    return docs.groupBy(F.col("source"), fid.alias("file_id")).agg(
+
+
+def micro_file_stats(docs: DataFrame, files_per_source: int = 32) -> DataFrame:
+    """Synthetic per-file metadata table (test/bench scaffolding for
+    :func:`compaction_plan`, like cdc.synth_mutated_snapshot — NOT a
+    pipeline operator): docs are md5-bucketed into ``files_per_source``
+    micro-files per source, mimicking the small-file litter a streaming
+    ingest leaves behind. md5-derived so the DuckDB oracle rebuilds the
+    identical table from the raw documents view.
+
+    Output: ``(source, file_id, n_docs, bytes)``.
+    """
+    return docs.groupBy(
+        F.col("source"), _file_id(files_per_source).alias("file_id")
+    ).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("bytes"),
     )
@@ -269,17 +275,20 @@ def compaction_plan(file_stats: DataFrame, target_bytes: int) -> DataFrame:
     )
 
 
+#: micro-files per source that compaction_apply writes and plans
+_COMPACT_FILES = 16
+
+
 def compaction_apply(
     docs: DataFrame,
     base_path: str,
     target_bytes: int = 2048,
-    files_per_source: int = 32,
 ) -> DataFrame:
     """Execute the q94 binpack plan and prove it from the written state —
     the rewrite job `compaction_plan` only plans: write the micro-file
-    layout (one parquet file per (source, file_id) — streaming-ingest
-    litter), rewrite each plan bin into one file partitioned by
-    (source, bin), then audit BOTH committed tables.
+    layout (16 files per source, one parquet file per (source, file_id) —
+    streaming-ingest litter), rewrite each plan bin into one file
+    partitioned by (source, bin), then audit BOTH committed tables.
 
     Every audit column is independently replayable by the oracle:
     physical file counts are deterministic because a keyed
@@ -304,31 +313,18 @@ def compaction_apply(
     )
 
     spark = docs.sparkSession
-    fid = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.col("doc_id").cast("string"), F.lit(":file:v1"))
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % files_per_source
-    ).cast("int")
-
     before_path = f"{base_path}/before"
     after_path = f"{base_path}/after"
     shutil.rmtree(base_path, ignore_errors=True)
-    before = docs.withColumn("file_id", fid).repartition("source", "file_id")
+    before = docs.withColumn("file_id", _file_id(_COMPACT_FILES)).repartition(
+        "source", "file_id"
+    )
     write_table(
         before,
         TableRef(before_path, partition_by=("source", "file_id")),
     )
 
-    stats = micro_file_stats(docs, files_per_source=files_per_source)
+    stats = micro_file_stats(docs, files_per_source=_COMPACT_FILES)
     plan = compaction_plan(stats, target_bytes=target_bytes)
     bin_map = plan.select(
         "source",

@@ -179,16 +179,18 @@ def edit_distance_join(
     )
 
 
+#: the segment-frequency cap blocking_quality_audit grades
+_AUDIT_SEG_FREQ = 2
+
+
 def blocking_quality_audit(
-    df: DataFrame,
-    max_seg_freq: int = 1,
-    store_path: str | None = None,
+    df: DataFrame, store_path: str | None = None
 ) -> DataFrame:
     """Price the ``max_seg_freq`` completeness trade (the q119/q120
-    audit pattern applied to record linkage): run the CAPPED PassJoin —
-    the bounded production config that drops hot index segments — against
-    the exact uncapped join (complete for ed<=1 by the pigeonhole
-    theorem) and report one row:
+    audit pattern applied to record linkage): run the PassJoin CAPPED at
+    ``_AUDIT_SEG_FREQ`` — the bounded production config that drops hot
+    index segments — against the exact uncapped join (complete for ed<=1
+    by the pigeonhole theorem) and report one row:
 
       ``(n_exact_pairs, n_capped_pairs, n_missed_pairs,
          completeness_micro)``
@@ -209,7 +211,7 @@ def blocking_quality_audit(
     their keys and collapses to one row via map-side-combinable aggs +
     a 1×1 combine join.
     """
-    capped = edit_distance_join(df, max_seg_freq=max_seg_freq).select(
+    capped = edit_distance_join(df, max_seg_freq=_AUDIT_SEG_FREQ).select(
         "a_id", "b_id"
     )
     if store_path is not None:

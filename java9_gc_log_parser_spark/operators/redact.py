@@ -58,10 +58,9 @@ def redact(
     return docs.select("doc_id", *counts, redacted.alias("redacted_text"))
 
 
-def redaction_oracle_sql(
-    patterns: tuple[tuple[str, str], ...] = PII_PATTERNS,
-) -> str:
-    """DuckDB SQL computing byte-identical output to :func:`redact`.
+def redaction_oracle_sql(patterns: tuple[tuple[str, str], ...]) -> str:
+    """DuckDB SQL computing byte-identical output to :func:`redact` over
+    the same ``patterns``.
 
     Kept next to the operator so the pattern list can never drift from its
     oracle; ``__spark_entry__`` embeds the result. ``redacted_text`` is

@@ -1,19 +1,36 @@
-"""Similarity search over the `embeddings` table (array<float> vectors).
+"""Vector search over the `embeddings` table (array<float> vectors).
 
-Two paths:
-  * brute-force cosine top-k — the exact baseline; scales as a broadcast of
-    the (small) query set against a full scan of the vector table, dot
-    products computed JVM-side via zip_with/aggregate (no Python);
-  * sign-LSH bucketed top-k — the scale path: vectors are bucketed by the
-    sign pattern of selected dimensions (a deterministic random-hyperplane
-    LSH with axis-aligned planes); each query probes only its own bucket.
-    At 100 TB the bucket id becomes the table's partition key so a query
-    touches one partition instead of the whole corpus.
+Five top-k legs, all returning ``(query_id, neighbor_id, rank, score)``
+for the query slice ``_QUERIES``, self-matches excluded, ties to the
+lower neighbor_id:
+  * brute force — the exact baseline: the (small) query set is broadcast
+    against one scan of the corpus, dot products computed JVM-side via
+    zip_with/aggregate (no Python);
+  * sign-LSH — candidates restricted to the query's sign bucket (a
+    deterministic random-hyperplane LSH with axis-aligned planes,
+    ``sign_bucket``); at 100 TB the bucket id is the table's partition key,
+    so a query touches one partition instead of the whole corpus;
+  * IVF — a coarse quantizer (``_IVF_CELLS`` cells) assigns every vector to
+    its nearest cell, and a query searches only its ``_IVF_PROBE`` nearest;
+  * PQ — product quantization with asymmetric distance: vectors are stored
+    as ``_PQ_M`` sub-codebook ids, query distance is a table lookup;
+  * IVF-PQ — the two composed (Jégou et al., TPAMI 2011): IVF cells bound
+    the candidates, PQ codes score them. ``ivfpq_train``/``ivfpq_encode``
+    split the same index into train-once metadata and per-batch encoding.
+Recall reports grade the LSH, IVF-PQ and near-duplicate legs against the
+exact answer. Near-duplicate pairs (and the semantic decontamination
+screen) are blocked by the sign bucket.
 
-Also: embedding-cosine near-duplicate pairs (blocked by label).
+Each step is written once: the rounded cosine (``rounded_cos``), the
+broadcast probe join and the top-k tail (``_probe_join``, ``_topk``), the
+IVF seed and cell argmax (``_ivf_seed``, ``_nearest_cell``), and the Lloyd
+loop that trains the PQ codebooks (``clustering.lloyd``, k-means'
+own).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -21,10 +38,14 @@ from pyspark.sql import functions as F
 EPS = 1e-12
 #: the query slice every top-k operator searches for
 _QUERIES = "vec_id % 101 = 0"
+#: neighbours per query of the legs that take no ``k``
+_K = 5
 #: embedding dimensions whose signs form the LSH bucket id (16 buckets)
 _LSH_DIMS = (1, 2, 3, 4)
 #: PQ: subspaces, codes per subspace, Lloyd rounds, embedding dimension
 _PQ_M, _PQ_K_CODES, _PQ_ITERS, _DIM = 4, 4, 2, 64
+#: PQ subspace width
+_SUB = _DIM // _PQ_M
 #: IVF: coarse cells and the cells each query probes
 _IVF_CELLS, _IVF_PROBE = 16, 4
 
@@ -54,6 +75,18 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(da, db) / (_norm(da) * _norm(db) + F.lit(EPS))
 
 
+def rounded_cos(a: str, a_nrm: str, b: str, b_nrm: str) -> Column:
+    """Cosine of the bound double vectors ``a`` and ``b`` given their norms,
+    rounded to 6 dp: the score every search, near-duplicate and
+    decontamination leg compares. Float-identical to ``cosine()``, but the
+    two O(dim) norm traversals run once per row (``_with_norm``), not once
+    per pair."""
+    return F.round(
+        _dot(F.col(a), F.col(b)) / (F.col(a_nrm) * F.col(b_nrm) + F.lit(EPS)),
+        6,
+    )
+
+
 def _with_norm(embeddings: DataFrame) -> DataFrame:
     """Bind the double-cast vector and its L2 norm as real columns so each is
     computed once per row (see dedupe's expression-shape note)."""
@@ -62,47 +95,76 @@ def _with_norm(embeddings: DataFrame) -> DataFrame:
     ).withColumn("_nrm", _norm(F.col("_emb")))
 
 
+def _probe_join(c: DataFrame, q: DataFrame, *on: Column) -> DataFrame:
+    """Corpus rows ``c`` (``neighbor_id``, ...) against the broadcast query
+    rows ``q`` (``query_id``, ...) where every ``on`` holds, self-matches
+    excluded: the corpus is scanned once and never shuffled toward the
+    queries."""
+    cond = F.col("query_id") != F.col("neighbor_id")
+    for o in on:
+        cond = o & cond
+    return c.join(F.broadcast(q), cond)
+
+
+def _topk(
+    scored: DataFrame, order: Column, score: Column | str, k: int
+) -> DataFrame:
+    """The top-k tail: per query the ``k`` best ``neighbor_id`` by
+    ``order``, ties to the lower neighbor_id, as ``(query_id, neighbor_id,
+    rank, score)``. The window partitions by query, so the sort is
+    queries-sized per partition, never global."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", score)
+    )
+
+
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Top-k by rounded cosine of probe pairs ``(q_emb, q_nrm, c_emb,
+    c_nrm)``."""
+    scored = pairs.withColumn(
+        "cos", rounded_cos("q_emb", "q_nrm", "c_emb", "c_nrm")
+    )
+    return _topk(scored, F.col("cos").desc(), "cos", k)
+
+
+def _adc_topk(scored: DataFrame) -> DataFrame:
+    """Top-``_K`` by summed micro-unit ADC distance ``du``, reported as
+    ``adc_d2``."""
+    return _topk(
+        scored,
+        F.col("du").asc(),
+        F.round(F.col("du").cast("double") / 1e6, 6).alias("adc_d2"),
+        _K,
+    )
+
+
+def _sides(e: DataFrame, *extra: str) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a cosine search over ``_with_norm`` rows: the
+    corpus ``(neighbor_id, c_emb, c_nrm, c_<extra>...)`` and the query slice
+    ``(query_id, q_emb, q_nrm, q_<extra>...)``."""
+
+    def side(df: DataFrame, vid: str, p: str) -> DataFrame:
+        return df.select(
+            F.col("vec_id").alias(vid),
+            F.col("_emb").alias(f"{p}_emb"),
+            F.col("_nrm").alias(f"{p}_nrm"),
+            *[F.col(x).alias(f"{p}_{x}") for x in extra],
+        )
+
+    return side(e, "neighbor_id", "c"), side(e.filter(_QUERIES), "query_id", "q")
+
+
 def ann_topk_bruteforce(embeddings: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, rank, cos) for the
     queries vec_id % 101 == 0.
 
     The query side is broadcast; the corpus is scanned once.
     """
-    from pyspark.sql import Window
-
-    # norms bound once per ROW (not once per pair): the pair expression is
-    # dot/(norm_a*norm_b + EPS) — float-identical to cosine(), but the two
-    # O(dim) norm traversals move out of the O(n*q) pair loop.
-    e = _with_norm(embeddings)
-    q = e.filter(_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("_emb").alias("q_emb"),
-        F.col("_nrm").alias("q_nrm"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("_emb").alias("c_emb"),
-        F.col("_nrm").alias("c_nrm"),
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos",
-            F.round(
-                _dot(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_nrm") * F.col("c_nrm") + F.lit(EPS)),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    c, q = _sides(_with_norm(embeddings))
+    return _cosine_topk(_probe_join(c, q), k)
 
 
 def sign_bucket(emb: Column) -> Column:
@@ -121,141 +183,99 @@ def ann_topk_lsh(embeddings: DataFrame, k: int = 5) -> DataFrame:
     Same output shape as the brute-force path; recall trades off against the
     number of hyperplanes (2^4 buckets).
     """
-    from pyspark.sql import Window
-
     withb = _with_norm(embeddings).withColumn(
         "bucket", sign_bucket(F.col("embedding"))
     )
-    q = withb.filter(_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("_emb").alias("q_emb"),
-        F.col("_nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    c = withb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("_emb").alias("c_emb"),
-        F.col("_nrm").alias("c_nrm"),
-        F.col("bucket").alias("c_bucket"),
-    )
-    scored = (
-        c.join(
-            F.broadcast(q),
-            (F.col("q_bucket") == F.col("c_bucket"))
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        .withColumn(
-            "cos",
-            F.round(
-                _dot(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_nrm") * F.col("c_nrm") + F.lit(EPS)),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
+    c, q = _sides(withb, "bucket")
+    return _cosine_topk(
+        _probe_join(c, q, F.col("q_bucket") == F.col("c_bucket")), k
     )
 
 
-def ann_topk_ivf(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: coarse-quantize the corpus into
-    ``n_centroids`` cells, then search each query against only its
-    ``n_probe`` nearest cells.
+def ann_topk_ivf(embeddings: DataFrame, n_centroids: int = 16) -> DataFrame:
+    """IVF (inverted-file) approximate top-``_K``: coarse-quantize the corpus
+    into ``n_centroids`` cells, then search each query against only its
+    ``_IVF_PROBE`` nearest cells.
 
     The centroid set is deterministic — the ``n_centroids`` lowest-vec_id
     vectors (a training-free coarse quantizer; a real deployment k-means
     refines it offline, which changes the centroid table, not this plan).
     Centroids are tiny and broadcast twice: once to assign every corpus
     vector to its argmax-cosine cell (map-only scan), once to pick each
-    query's probe cells. The candidate join then hits ``n_probe/n_centroids``
-    of the corpus instead of all of it — at 100 TB the cell id becomes the
-    table's partition key, so a probe is a partition-pruned scan, and the
-    assignment column is written once at ingest. Output shape matches the
-    exact path: (query_id, neighbor_id, rank, cos); recall vs brute force is
-    asserted in tests (n_probe = n_centroids degenerates to exact).
+    query's probe cells. The candidate join then hits ``_IVF_PROBE /
+    n_centroids`` of the corpus instead of all of it — at 100 TB the cell
+    id becomes the table's partition key, so a probe is a partition-pruned
+    scan, and the assignment column is written once at ingest. Output shape
+    matches the exact path: (query_id, neighbor_id, rank, cos); recall vs
+    brute force is asserted in tests (probing every cell degenerates to
+    exact).
 
     Cell-id tie-break on equal cosine: lowest centroid id, matching the
     oracle's ``row_number() ORDER BY cos DESC, cid``.
     """
-    assigned, probes = _ivf_cells(embeddings, n_centroids, n_probe)
-    scored = assigned.join(
-        F.broadcast(probes),
-        (F.col("cell") == F.col("q_cell"))
-        & (F.col("query_id") != F.col("neighbor_id")),
-    ).withColumn(
-        "cos",
-        F.round(
-            _dot(F.col("q_emb"), F.col("c_emb"))
-            / (F.col("q_nrm") * F.col("c_nrm") + F.lit(EPS)),
-            6,
-        ),
+    assigned, probes = _ivf_cells(embeddings, n_centroids, _IVF_PROBE)
+    return _cosine_topk(
+        _probe_join(assigned, probes, F.col("cell") == F.col("q_cell")), _K
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
+
+
+def _ivf_seed(e: DataFrame, n: int) -> DataFrame:
+    """The coarse-cell centroids ``(cid, cent_emb, cent_nrm)``: the ``n``
+    lowest-vec_id ``_with_norm`` rows."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
-
-
-def _ivf_cells(
-    embeddings: DataFrame, n_centroids: int, n_probe: int
-) -> tuple[DataFrame, DataFrame]:
-    """Shared IVF coarse-quantization stage (factored from ann_topk_ivf so
-    the PQ composition reuses the identical cell geometry): returns
-    ``(assigned, probes)`` where ``assigned`` is the corpus with its argmax
-    cell ``(neighbor_id, c_emb, c_nrm, cell)`` and ``probes`` is the query
-    set with its top-``n_probe`` cells ``(query_id, q_emb, q_nrm, q_cell)``
-    — one row per probed cell."""
-    e = _with_norm(embeddings)
-    cent = (
         e.orderBy("vec_id")
-        .limit(n_centroids)
+        .limit(n)
         .select(
             F.col("vec_id").alias("cid"),
             F.col("_emb").alias("cent_emb"),
             F.col("_nrm").alias("cent_nrm"),
         )
     )
-    cent_cos = F.round(
-        _dot(F.col("_emb"), F.col("cent_emb"))
-        / (F.col("_nrm") * F.col("cent_nrm") + F.lit(EPS)),
-        6,
+
+
+def _cell_cos(e: DataFrame, cells: DataFrame) -> DataFrame:
+    """Every (``_with_norm`` row, broadcast cell) pair with its rounded
+    cosine ``_ccos``."""
+    return e.join(F.broadcast(cells)).withColumn(
+        "_ccos", rounded_cos("_emb", "_nrm", "cent_emb", "cent_nrm")
     )
-    # corpus cell assignment: argmax over the 16x-exploded (vector, centroid)
-    # rows as a map-side-combinable groupBy — each partition folds its 16
-    # copies locally, so the shuffle stays ~corpus-sized (a window
-    # partitioned by vec_id would shuffle the full explosion). max_by's
-    # ordering struct breaks cosine ties toward the lowest centroid id.
-    assigned = (
-        e.join(F.broadcast(cent))
-        .withColumn("_ccos", cent_cos)
+
+
+def _nearest_cell(e: DataFrame, cells: DataFrame, *carry: str) -> DataFrame:
+    """``(vec_id, _best)``: each vector's argmax-cosine cell,
+    ``_best = struct(cid, *carry)``, cosine ties to the lowest cid.
+
+    A map-side-combinable groupBy over the cell-exploded rows: each
+    partition folds its copies locally, so the shuffle stays ~input-sized
+    (a window partitioned by vec_id would shuffle the full explosion).
+    max_by's ordering struct breaks the ties."""
+    return (
+        _cell_cos(e, cells)
         .groupBy("vec_id")
         .agg(
             F.max_by(
-                F.struct("cid", "_emb", "_nrm"),
+                F.struct("cid", *carry),
                 F.struct(F.col("_ccos"), -F.col("cid")),
             ).alias("_best")
         )
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("_best._emb").alias("c_emb"),
-            F.col("_best._nrm").alias("c_nrm"),
-            F.col("_best.cid").alias("cell"),
-        )
+    )
+
+
+def _ivf_cells(
+    embeddings: DataFrame, n_centroids: int, n_probe: int
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF coarse-quantization stage shared by the IVF and IVF-PQ legs:
+    returns ``(assigned, probes)`` where ``assigned`` is the corpus with its
+    argmax cell ``(neighbor_id, c_emb, c_nrm, cell)`` and ``probes`` is the
+    query set with its top-``n_probe`` cells ``(query_id, q_emb, q_nrm,
+    q_cell)`` — one row per probed cell."""
+    e = _with_norm(embeddings)
+    cent = _ivf_seed(e, n_centroids)
+    assigned = _nearest_cell(e, cent, "_emb", "_nrm").select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("_best._emb").alias("c_emb"),
+        F.col("_best._nrm").alias("c_nrm"),
+        F.col("_best.cid").alias("cell"),
     )
     # probe-cell ranking needs top-n_probe (not argmax); the query set is
     # tiny so this window's shuffle is negligible
@@ -263,9 +283,7 @@ def _ivf_cells(
         F.col("_ccos").desc(), F.col("cid")
     )
     probes = (
-        e.filter(_QUERIES)
-        .join(F.broadcast(cent))
-        .withColumn("_ccos", cent_cos)
+        _cell_cos(e.filter(_QUERIES), cent)
         .withColumn("_crk", F.row_number().over(wcell))
         .filter(F.col("_crk") <= n_probe)
         .select(
@@ -305,15 +323,10 @@ def embedding_near_dup_pairs(
         (F.col("a._blk") == F.col("b._blk"))
         & (F.col("a.vec_id") < F.col("b.vec_id")),
     )
-    cos = F.round(
-        _dot(F.col("a._emb"), F.col("b._emb"))
-        / (F.col("a._nrm") * F.col("b._nrm") + F.lit(EPS)),
-        6,
-    )
     return pairs.select(
         F.col("a.vec_id").alias("vec_a"),
         F.col("b.vec_id").alias("vec_b"),
-        cos.alias("cos"),
+        rounded_cos("a._emb", "a._nrm", "b._emb", "b._nrm").alias("cos"),
     ).filter(F.col("cos") >= threshold)
 
 
@@ -414,14 +427,7 @@ def near_dup_recall_report(
     )
     exact = (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn(
-            "cos",
-            F.round(
-                _dot(F.col("_ea"), F.col("_eb"))
-                / (F.col("_na") * F.col("_nb") + F.lit(EPS)),
-                6,
-            ),
-        )
+        .withColumn("cos", rounded_cos("_ea", "_na", "_eb", "_nb"))
         .filter(F.col("cos") >= threshold)
         .select("vec_a", "vec_b")
     )
@@ -454,6 +460,27 @@ def near_dup_recall_report(
     )
 
 
+def _subspace(s: int) -> Column:
+    """PQ subspace ``s`` of the embedding, as doubles."""
+    return F.transform(
+        F.slice(F.col("embedding"), s * _SUB + 1, _SUB),
+        lambda v: v.cast("double"),
+    )
+
+
+def _pq_lloyd(embeddings: DataFrame) -> list[tuple[DataFrame, DataFrame]]:
+    """Per PQ subspace ``s``, the ``(codebook, assigned)`` pair of
+    ``_PQ_ITERS`` Lloyd rounds over that slice of ``embeddings``:
+    k-means' own loop (``clustering.lloyd``), so the DuckDB oracle unrolls
+    the identical iterations per subspace."""
+    from java9_gc_log_parser_spark.operators.clustering import lloyd
+
+    return [
+        lloyd(embeddings, _subspace(s), _PQ_K_CODES, _PQ_ITERS)
+        for s in range(_PQ_M)
+    ]
+
+
 def ann_topk_pq(embeddings: DataFrame) -> DataFrame:
     """Product-quantization ANN with asymmetric distance (ADC) — the
     compression leg of the real-world IVF-PQ stack (Jégou et al., TPAMI
@@ -462,10 +489,10 @@ def ann_topk_pq(embeddings: DataFrame) -> DataFrame:
     fit), and query distance is a table lookup per subspace, never a
     full-vector float op against the corpus.
 
-    Training reuses the deterministic Lloyd's machinery of
-    ``clustering.kmeans_assign`` per subspace slice (same md5 seed order,
-    same rounded-6dp expanded-form distances, same struct-min argmin), so
-    the DuckDB oracle unrolls the identical iterations per subspace.
+    Training is ``clustering.lloyd`` per subspace slice (same md5 seed
+    order, same rounded-6dp expanded-form distances, same struct-min
+    argmin as k-means), so the DuckDB oracle unrolls the identical
+    iterations per subspace.
     ADC: per (query, subspace, code) the distance term is rounded to 6 dp
     then QUANTIZED to micro-unit BIGINTs before the per-pair sum — the
     m-term accumulation is exact integer arithmetic, immune to
@@ -484,92 +511,45 @@ def ann_topk_pq(embeddings: DataFrame) -> DataFrame:
     (adc distance asc, neighbor_id asc), self-matches excluded.
     """
     codes, lut = _pq_codes_and_lut(embeddings)
-
-    scored = (
+    return _adc_topk(
         codes.join(
             F.broadcast(lut),
             (codes["s"] == lut["s"]) & (codes["code"] == lut["cluster"]),
         )
         .filter(F.col("query_id") != F.col("vec_id"))
-        .groupBy("query_id", "vec_id")
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d2u").alias("du"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("du").asc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round(F.col("du").cast("double") / 1e6, 6).alias("adc_d2"),
-        )
     )
 
 
 def _pq_codes_and_lut(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Shared PQ train/encode/LUT stage (factored from ann_topk_pq so the
-    IVF composition reuses the identical codebooks): returns ``(codes,
-    lut)`` — ``codes`` is the encoded corpus ``(vec_id, s, code)`` (m rows
-    per vector) and ``lut`` the per-query ADC table ``(query_id, s,
-    cluster, d2u)`` with micro-unit BIGINT distance terms."""
-    from java9_gc_log_parser_spark.operators.clustering import (
-        _assign,
-        _init_centroids,
-        _update,
-    )
+    """The PQ train/encode/LUT stage shared by the PQ and IVF-PQ legs:
+    returns ``(codes, lut)`` — ``codes`` is the encoded corpus ``(vec_id,
+    s, code)`` (m rows per vector) and ``lut`` the per-query ADC table
+    ``(query_id, s, cluster, d2u)`` with micro-unit BIGINT distance
+    terms."""
+    from java9_gc_log_parser_spark.operators.clustering import _d2, _sq
 
-    sub = _DIM // _PQ_M
-
-    def _slice(c: Column, s: int) -> Column:
-        return F.transform(
-            F.slice(c, s * sub + 1, sub), lambda v: v.cast("double")
+    trained = _pq_lloyd(embeddings)
+    codes = reduce(DataFrame.unionByName, [
+        assigned.select(
+            "vec_id", F.lit(s).alias("s"), F.col("cluster").alias("code")
         )
-
+        for s, (_, assigned) in enumerate(trained)
+    ])
     q = embeddings.filter(_QUERIES)
-    code_parts, lut_parts = [], []
-    for s in range(_PQ_M):
-        e_s = embeddings.select(
-            "vec_id", _slice(F.col("embedding"), s).alias("_emb")
-        ).withColumn("_esq", F.round(_dot(F.col("_emb"), F.col("_emb")), 6))
-        cents = _init_centroids(e_s, _PQ_K_CODES)
-        assigned = _assign(e_s, cents)
-        for _ in range(_PQ_ITERS - 1):
-            cents = _update(e_s, assigned)
-            assigned = _assign(e_s, cents)
-        code_parts.append(
-            assigned.select(
-                "vec_id",
-                F.lit(s).alias("s"),
-                F.col("cluster").alias("code"),
-            )
+    lut = reduce(DataFrame.unionByName, [
+        q.select(F.col("vec_id").alias("query_id"), _subspace(s).alias("_emb"))
+        .withColumn("_esq", _sq("_emb"))
+        .join(F.broadcast(cents))
+        .select(
+            "query_id",
+            F.lit(s).alias("s"),
+            "cluster",
+            F.round(_d2() * 1e6).cast("long").alias("d2u"),
         )
-        q_s = q.select(
-            F.col("vec_id").alias("query_id"),
-            _slice(F.col("embedding"), s).alias("q_emb"),
-        ).withColumn("q_sq", F.round(_dot(F.col("q_emb"), F.col("q_emb")), 6))
-        d2 = F.round(
-            F.col("q_sq")
-            - 2.0 * _dot(F.col("q_emb"), F.col("c_emb"))
-            + F.col("c_sq"),
-            6,
-        )
-        lut_parts.append(
-            q_s.join(F.broadcast(cents)).select(
-                "query_id",
-                F.lit(s).alias("s"),
-                "cluster",
-                F.round(d2 * 1e6).cast("long").alias("d2u"),
-            )
-        )
-    codes = code_parts[0]
-    for p in code_parts[1:]:
-        codes = codes.unionByName(p)
-    lut = lut_parts[0]
-    for p in lut_parts[1:]:
-        lut = lut.unionByName(p)
+        for s, (cents, _) in enumerate(trained)
+    ])
     return codes, lut
 
 
@@ -595,16 +575,14 @@ def ann_topk_ivf_pq(embeddings: DataFrame) -> DataFrame:
     (ADC distance asc, neighbor_id asc) among CELL-LOCAL candidates
     (4 probed of 16 cells), self-matches excluded."""
     assigned, probes = _ivf_cells(embeddings, _IVF_CELLS, _IVF_PROBE)
-    cand = assigned.join(
-        F.broadcast(probes),
-        (F.col("cell") == F.col("q_cell"))
-        & (F.col("query_id") != F.col("neighbor_id")),
+    cand = _probe_join(
+        assigned, probes, F.col("cell") == F.col("q_cell")
     ).select("query_id", "neighbor_id")
     codes, lut = _pq_codes_and_lut(embeddings)
     lutq = lut.select(
         F.col("query_id").alias("l_query"), "s", "cluster", "d2u"
     )
-    scored = (
+    return _adc_topk(
         # cand is queries × n_probe × cell-bounded — queries-scale, so it
         # broadcasts against the corpus-scale code table (the corpus never
         # shuffles toward the query side anywhere in this operator)
@@ -618,19 +596,6 @@ def ann_topk_ivf_pq(embeddings: DataFrame) -> DataFrame:
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d2u").alias("du"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("du").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round(F.col("du").cast("double") / 1e6, 6).alias("adc_d2"),
-        )
-    )
 
 
 def ann_ivf_pq_recall_report(embeddings: DataFrame) -> DataFrame:
@@ -640,17 +605,16 @@ def ann_ivf_pq_recall_report(embeddings: DataFrame) -> DataFrame:
     quantization) is an oracled number, not a docstring claim."""
     exact = ann_topk_bruteforce(embeddings).select("query_id", "neighbor_id")
     approx = ann_topk_ivf_pq(embeddings).select("query_id", "neighbor_id")
-    return _recall_vs(exact, approx, 5)
+    return _recall_vs(exact, approx, _K)
 
 
 def ivfpq_train(base: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Train the IVF×PQ index METADATA on a bootstrap corpus and nothing
     else: returns ``(cells, books)`` where ``cells`` is the coarse-cell
-    centroid table ``(cid, cent_emb, cent_nrm)`` (first 16
-    base vec_ids — ``_ivf_cells``'s seed rule) and ``books`` the
-    per-subspace PQ codebooks ``(s, cluster, c_emb, c_sq)`` after
-    2 deterministic Lloyd rounds (``_pq_codes_and_lut``'s
-    training verbatim, restricted to the base).
+    centroid table ``(cid, cent_emb, cent_nrm)`` (``_ivf_seed``: the first
+    16 base vec_ids) and ``books`` the per-subspace PQ codebooks ``(s,
+    cluster, c_emb, c_sq)`` after 2 deterministic Lloyd rounds
+    (``_pq_lloyd``, restricted to the base).
 
     This is the train/encode SPLIT the streaming maintenance query (q141)
     needs: training sees only the bootstrap slice, so arriving vectors
@@ -660,42 +624,11 @@ def ivfpq_train(base: DataFrame) -> tuple[DataFrame, DataFrame]:
     (16 + 4*4 rows) — collect once, ship to the
     maintenance job, broadcast per batch.
     """
-    from java9_gc_log_parser_spark.operators.clustering import (
-        _assign,
-        _init_centroids,
-        _update,
-    )
-
-    sub = _DIM // _PQ_M
-    b = _with_norm(base)
-    cells = (
-        b.orderBy("vec_id")
-        .limit(_IVF_CELLS)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("_emb").alias("cent_emb"),
-            F.col("_nrm").alias("cent_nrm"),
-        )
-    )
-    book_parts = []
-    for s in range(_PQ_M):
-        e_s = base.select(
-            "vec_id",
-            F.transform(
-                F.slice(F.col("embedding"), s * sub + 1, sub),
-                lambda v: v.cast("double"),
-            ).alias("_emb"),
-        ).withColumn("_esq", F.round(_dot(F.col("_emb"), F.col("_emb")), 6))
-        cents = _init_centroids(e_s, _PQ_K_CODES)
-        assigned = _assign(e_s, cents)
-        for _ in range(_PQ_ITERS - 1):
-            cents = _update(e_s, assigned)
-            assigned = _assign(e_s, cents)
-        book_parts.append(cents.select(F.lit(s).alias("s"), "cluster",
-                                       "c_emb", "c_sq"))
-    books = book_parts[0]
-    for p in book_parts[1:]:
-        books = books.unionByName(p)
+    cells = _ivf_seed(_with_norm(base), _IVF_CELLS)
+    books = reduce(DataFrame.unionByName, [
+        cents.select(F.lit(s).alias("s"), "cluster", "c_emb", "c_sq")
+        for s, (cents, _) in enumerate(_pq_lloyd(base))
+    ])
     return cells, books
 
 
@@ -708,50 +641,29 @@ def ivfpq_encode(
     Plan shape (the q141 claim, pinned in tests/test_plans.py): the ONLY
     table scanned is ``vectors`` — cells and books join as broadcasts, so
     a micro-batch encode touches batch rows plus a few KB of metadata and
-    NEVER re-scans the corpus. Cell assignment is the map-side-combinable
-    max_by argmax (``_ivf_cells``'s tie-break: highest rounded cosine,
-    then lowest cid); PQ codes are the struct-min argmin over rounded
-    expanded-form distances (``clustering._assign``'s contract), with the
-    per-row subspace slice driven by the broadcast ``s`` column so all
-    ``m`` subspaces encode in ONE pass. Per-vector cost: O(n_centroids +
-    m*k_codes) JVM array ops; the two grouped argmins share the one
-    batch-sized shuffle key (vec_id)."""
-    sub = _DIM // _PQ_M
+    NEVER re-scans the corpus. Cell assignment is ``_nearest_cell`` (the
+    IVF legs' argmax: highest rounded cosine, then lowest cid); PQ codes
+    are ``clustering._argmin`` over rounded expanded-form distances
+    (k-means' assignment), with the per-row subspace slice driven by the
+    broadcast ``s`` column so all ``m`` subspaces encode in ONE pass.
+    Per-vector cost: O(n_centroids + m*k_codes) JVM array ops; the two
+    grouped argmins share the one batch-sized shuffle key (vec_id)."""
+    from java9_gc_log_parser_spark.operators.clustering import _argmin, _sq
+
     v = _with_norm(vectors)
-    cent_cos = F.round(
-        _dot(F.col("_emb"), F.col("cent_emb"))
-        / (F.col("_nrm") * F.col("cent_nrm") + F.lit(EPS)),
-        6,
+    assigned = _nearest_cell(v, cells).select(
+        "vec_id", F.col("_best.cid").alias("cell")
     )
-    assigned = (
-        v.join(F.broadcast(cells))
-        .withColumn("_ccos", cent_cos)
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("cid"), F.struct(F.col("_ccos"), -F.col("cid"))
-            ).alias("cell")
-        )
-    )
-    se = F.slice(F.col("_emb"), F.col("s") * sub + 1, F.lit(sub))
     pairs = (
         v.select("vec_id", "_emb")
         .join(F.broadcast(books))
-        .withColumn("_se", se)
-        .withColumn("_esq", F.round(_dot(F.col("_se"), F.col("_se")), 6))
-    )
-    d2 = F.round(
-        F.col("_esq") - 2.0 * _dot(F.col("_se"), F.col("c_emb"))
-        + F.col("c_sq"),
-        6,
-    )
-    codes = (
-        pairs.select(
-            "vec_id", "s", F.struct(d2.alias("d2"), "cluster").alias("_t")
+        .withColumn(
+            "_emb", F.slice(F.col("_emb"), F.col("s") * _SUB + 1, F.lit(_SUB))
         )
-        .groupBy("vec_id", "s")
-        .agg(F.min("_t").alias("_t"))
-        .select("vec_id", "s", F.col("_t.cluster").alias("code"))
+        .withColumn("_esq", _sq("_emb"))
+    )
+    codes = _argmin(pairs, "vec_id", "s").select(
+        "vec_id", "s", F.col("cluster").alias("code")
     )
     return assigned.join(codes, "vec_id").select(
         "vec_id",

@@ -134,7 +134,7 @@ def test_decontaminate_removes_flagged_only(spark):
     ]
     eval_rows = [(10, "s", "a b c d")]
     kept = decontaminate(
-        _df(spark, train), _df(spark, eval_rows), n=2, min_overlap=2
+        _df(spark, train), _df(spark, eval_rows), n=2
     )
     assert sorted(r["doc_id"] for r in kept.collect()) == [2, 3]
     assert kept.columns == ["doc_id", "source", "text"]

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from java9_gc_log_parser_spark.operators.dedupe import (
+    lsh_buckets,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
@@ -141,7 +142,7 @@ def _near_dup_corpus():
 
 def test_minhash_identical_docs_pair(spark):
     df = _docs(spark, [(1, "s", BASE), (2, "s", BASE), (3, "s", "other words here")])
-    rows = minhash_lsh_pairs(df, threshold=0.6).collect()
+    rows = minhash_lsh_pairs(df, 0.6, lsh_buckets(df)).collect()
     assert [(r.doc_a, r.doc_b, r.jaccard) for r in rows] == [(1, 2, 1.0)]
 
 
@@ -150,7 +151,7 @@ def test_minhash_lsh_recall_and_precision_vs_exact(spark):
     df = _docs(spark, rows)
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in minhash_lsh_pairs(df, threshold=0.5).collect()
+        for r in minhash_lsh_pairs(df, 0.5, lsh_buckets(df)).collect()
     }
     sh = {i: _py_shingles(t, 3) for i, _, t in rows}
     exact = {

@@ -205,7 +205,7 @@ def test_compaction_apply_reduces_files_and_preserves_content(spark, tmp_path):
     out = {
         r["source"]: r
         for r in compaction_apply(
-            docs, str(tmp_path / "cmp"), target_bytes=400, files_per_source=16
+            docs, str(tmp_path / "cmp"), target_bytes=400
         ).collect()
     }
     for src in ("s0", "s1"):

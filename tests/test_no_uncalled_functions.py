@@ -11,6 +11,12 @@ scripts (``__spark_entry__.py``, ``main.py``, ``bench.py``), ``scripts/`` or
 ``perfbench/`` — outside its own body; a parameter counts as set when such a
 module calls a function of its name passing it by keyword, by position, or
 through ``*args`` / ``**kwargs``.
+
+A defaulted parameter that every call passes the same value, the tests'
+calls included, is an option with one value too: ``single_valued_parameters``
+compares the source text of what each call of a function of its name
+passes (the default's, where a call leaves it out) and fails when a call
+sets it and all agree.
 """
 
 from __future__ import annotations
@@ -41,6 +47,15 @@ ALLOWED_PARAMS = {
     # the only way to reach the non-convergence RuntimeError (a test runs
     # one round on a 30-node path)
     "operators/dedupe.py:star_contract:max_iter",
+}
+
+#: defaulted parameters kept though every call passes one value, each with
+#: its reason
+ALLOWED_SINGLE = {
+    # perfbench passes it, and the benchmark's sources are fixed
+    "streaming/state_stream.py:stream_conv_state:available_now",
+    # a path, which stays a deployment setting
+    "operators/linkage.py:blocking_quality_audit:store_path",
 }
 
 
@@ -98,8 +113,8 @@ def _set_by(call: ast.Call) -> tuple[int, set[str]] | None:
     return len(call.args), {k.arg for k in call.keywords}
 
 
-def unset_parameters() -> list[str]:
-    trees = _trees()
+def _calls(trees) -> dict[str, list[ast.Call]]:
+    """Every call in ``trees``, by the name it calls."""
     calls: dict[str, list] = {}
     for tree in trees.values():
         for n in ast.walk(tree):
@@ -107,21 +122,61 @@ def unset_parameters() -> list[str]:
                 f = n.func
                 name = f.id if isinstance(f, ast.Name) else \
                     f.attr if isinstance(f, ast.Attribute) else None
-                calls.setdefault(name, []).append(_set_by(n))
+                calls.setdefault(name, []).append(n)
+    return calls
+
+
+def _defaulted(fn):
+    """``(position or None, name, default)`` of each defaulted parameter."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [(i, p.arg, a.defaults[i - first])
+           for i, p in enumerate(pos) if i >= first]
+    out += [(None, p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None]
+    return out
+
+
+def unset_parameters() -> list[str]:
+    trees = _trees()
+    calls = {name: [_set_by(c) for c in cs]
+             for name, cs in _calls(trees).items()}
     found = []
     for key, fn in _package_functions(trees):
-        a = fn.args
-        pos = a.posonlyargs + a.args
-        defaulted = [(i, p.arg) for i, p in enumerate(pos)
-                     if i >= len(pos) - len(a.defaults)]
-        defaulted += [(None, p.arg) for p, d in zip(a.kwonlyargs,
-                                                    a.kw_defaults)
-                      if d is not None]
-        for i, name in defaulted:
+        for i, name, _ in _defaulted(fn):
             if any(c is None or name in c[1] or (i is not None and c[0] > i)
                    for c in calls.get(fn.name, ())):
                 continue
             if f"{key}:{name}" not in ALLOWED_PARAMS:
+                found.append(f"{key}:{name}")
+    return sorted(found)
+
+
+def single_valued_parameters() -> list[str]:
+    trees = _trees()
+    calls = _calls({**trees, **{f: ast.parse(f.read_text(), str(f))
+                                for f in (ROOT / "tests").rglob("*.py")}})
+    found = []
+    for key, fn in _package_functions(trees):
+        for i, name, default in _defaulted(fn):
+            values, set_somewhere = set(), False
+            for c in calls.get(fn.name, ()):
+                if _set_by(c) is None:
+                    values = None
+                    break
+                kw = {k.arg: k.value for k in c.keywords}
+                if name in kw:
+                    v = kw[name]
+                elif i is not None and len(c.args) > i:
+                    v = c.args[i]
+                else:
+                    values.add(ast.unparse(default))
+                    continue
+                set_somewhere = True
+                values.add(ast.unparse(v))
+            if set_somewhere and values is not None and len(values) == 1 \
+                    and f"{key}:{name}" not in ALLOWED_SINGLE:
                 found.append(f"{key}:{name}")
     return sorted(found)
 
@@ -132,3 +187,7 @@ def test_every_package_function_has_a_non_test_caller():
 
 def test_every_defaulted_parameter_is_set_by_a_non_test_caller():
     assert unset_parameters() == []
+
+
+def test_no_defaulted_parameter_has_a_single_value_in_use():
+    assert single_valued_parameters() == []

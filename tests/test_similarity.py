@@ -124,7 +124,7 @@ def test_ivf_full_probe_equals_bruteforce(spark):
     ]
     e = _embs(spark, rows)
     exact = ann_topk_bruteforce(e, k=5).collect()
-    full = ann_topk_ivf(e, k=5, n_centroids=4, n_probe=4).collect()
+    full = ann_topk_ivf(e, n_centroids=4).collect()
     key = lambda r: (r.query_id, r.rank)  # noqa: E731
     assert sorted(((r.query_id, r.rank, r.neighbor_id) for r in full)) == sorted(
         ((r.query_id, r.rank, r.neighbor_id) for r in exact)
@@ -144,7 +144,7 @@ def test_ivf_partial_probe_recall(spark):
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in ann_topk_ivf(e, k=5, n_centroids=8, n_probe=4).collect()
+        for r in ann_topk_ivf(e, n_centroids=8).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, recall  # half the cells probed; seed-pinned bound
