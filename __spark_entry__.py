@@ -164,7 +164,7 @@ def q19_ann_bruteforce(spark, sf_dir):
 def q20_ann_lsh(spark, sf_dir):
     from java9_gc_log_parser_spark.operators.similarity import ann_topk_lsh
 
-    return ann_topk_lsh(_embs(spark, sf_dir), k=5)
+    return ann_topk_lsh(_embs(spark, sf_dir))
 
 
 def q21_embedding_near_dup(spark, sf_dir):
@@ -172,9 +172,7 @@ def q21_embedding_near_dup(spark, sf_dir):
         embedding_near_dup_pairs,
     )
 
-    # 0.30: these synthetic embeddings are near-random (max pairwise cosine
-    # ~0.4), so the operator default 0.92 would make the oracle check trivial
-    return embedding_near_dup_pairs(_embs(spark, sf_dir), threshold=0.30)
+    return embedding_near_dup_pairs(_embs(spark, sf_dir))
 
 
 # Oracle seam for the hash-based near-dup ops: xxhash64 itself is not
@@ -217,7 +215,6 @@ def q54_semantic_decontam(spark, sf_dir):
     return semantic_decontaminate(
         embs.filter(F.col("vec_id") % 20 != 0),
         embs.filter(F.col("vec_id") % 20 == 0),
-        threshold=0.30,
     )
 
 
@@ -260,7 +257,7 @@ def q23_simhash_pairs(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     out = f"{_ORACLE_EXPORT_DIR}/simhash_sig.parquet"
     with_simhash(docs).select("doc_id", "sim").write.mode("overwrite").parquet(out)
-    return simhash_pairs(docs, max_hamming=10, sig=spark.read.parquet(out))
+    return simhash_pairs(spark.read.parquet(out), max_hamming=10)
 
 
 # --- streaming / checkpoint / serialization parity (reference live mode) ---
@@ -630,8 +627,6 @@ def q32_contamination(spark, sf_dir):
     return contamination_pairs(
         split.filter(F.col("split") == "train"),
         split.filter(F.col("split") == "test"),
-        n=4,
-        min_overlap=2,
     )
 
 
@@ -649,7 +644,7 @@ def q34_ann_ivf(spark, sf_dir):
     4-cell probe (the scale path where the cell id is the partition key)."""
     from java9_gc_log_parser_spark.operators.similarity import ann_topk_ivf
 
-    return ann_topk_ivf(_embs(spark, sf_dir), n_centroids=16)
+    return ann_topk_ivf(_embs(spark, sf_dir))
 
 
 #: q35's pattern set: the standard PII list plus a corpus-matching deny term
@@ -740,7 +735,7 @@ def q42_kmeans(spark, sf_dir):
     SemDeDup-style cell partition); oracle unrolls the same iterations."""
     from java9_gc_log_parser_spark.operators.clustering import kmeans_assign
 
-    return kmeans_assign(_embs(spark, sf_dir), k=4, iters=2)
+    return kmeans_assign(_embs(spark, sf_dir))
 
 
 def q43_tfidf_topk(spark, sf_dir):
@@ -748,7 +743,7 @@ def q43_tfidf_topk(spark, sf_dir):
     deterministic rank (score desc, term asc)."""
     from java9_gc_log_parser_spark.operators.text_analysis import tfidf_topk
 
-    return tfidf_topk(_docs(spark, sf_dir), k=3)
+    return tfidf_topk(_docs(spark, sf_dir))
 
 
 def q44_semdedup(spark, sf_dir):
@@ -772,7 +767,7 @@ def q46_zipf_topk(spark, sf_dir):
     coverage share (Zipf audit)."""
     from java9_gc_log_parser_spark.operators.text_analysis import zipf_topk
 
-    return zipf_topk(_docs(spark, sf_dir), k=50)
+    return zipf_topk(_docs(spark, sf_dir))
 
 
 def q47_mixture_sample(spark, sf_dir):
@@ -798,9 +793,7 @@ def q52_importance_resample(spark, sf_dir):
         importance_resample,
     )
 
-    return importance_resample(
-        _docs(spark, sf_dir), target_source="src0", k=50
-    )
+    return importance_resample(_docs(spark, sf_dir), target_source="src0")
 
 
 def q48_encoding_audit(spark, sf_dir):
@@ -877,9 +870,7 @@ def q50_curation_e2e(spark, sf_dir):
     # the ORIGINAL corpus stands in for external benchmarks — this also
     # removes eval members themselves from the training set)
     eval_docs = hash_split(docs).filter(F.col("split") == "test").drop("split")
-    write_table(
-        decontaminate(docs3, eval_docs, n=4), f"{root}/stage4"
-    )
+    write_table(decontaminate(docs3, eval_docs), f"{root}/stage4")
     docs4 = read_table(spark, f"{root}/stage4")
 
     # stage 5+6: token-budget mixture (q47's weights), shard manifest
@@ -899,7 +890,7 @@ def q56_pack_sequences(spark, sf_dir):
     packing streams (one shuffle, no global sort)."""
     from java9_gc_log_parser_spark.operators.sampling import pack_sequences
 
-    return pack_sequences(_docs(spark, sf_dir), context_len=512, n_streams=8)
+    return pack_sequences(_docs(spark, sf_dir))
 
 
 def q57_epoch_order(spark, sf_dir):
@@ -908,7 +899,7 @@ def q57_epoch_order(spark, sf_dir):
     reproducible global position for every doc with no global sort."""
     from java9_gc_log_parser_spark.operators.sampling import epoch_order
 
-    return epoch_order(_docs(spark, sf_dir), epoch=1, n_shards=8)
+    return epoch_order(_docs(spark, sf_dir), epoch=1)
 
 
 def q58_dup_ngram_gate(spark, sf_dir):
@@ -966,7 +957,7 @@ def q60_cms_heavy_hitters(spark, sf_dir):
     4x1024 mergeable-grid estimate and its (never-negative) overcount."""
     from java9_gc_log_parser_spark.operators.sketches import cms_heavy_hitters
 
-    return cms_heavy_hitters(_docs(spark, sf_dir), k=20)
+    return cms_heavy_hitters(_docs(spark, sf_dir))
 
 
 def q61_hll_distinct(spark, sf_dir):
@@ -1495,7 +1486,7 @@ def q77_range_cluster_layout(spark, sf_dir):
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
     )
     clustered = (
-        range_cluster(ev, "ts_us", n_clusters=8)
+        range_cluster(ev, "ts_us")
         .repartition("cluster")
         .sortWithinPartitions("ts_us")
     )
@@ -1606,7 +1597,7 @@ def q84_weighted_sample(spark, sf_dir):
         weighted_priority_sample,
     )
 
-    return weighted_priority_sample(_docs(spark, sf_dir), k=200)
+    return weighted_priority_sample(_docs(spark, sf_dir))
 
 
 def q85_corpus_overlap(spark, sf_dir):
@@ -1664,7 +1655,7 @@ def q86_zorder_layout(spark, sf_dir):
         F.expr("(user_id - u_lo) * 1024 DIV (u_hi - u_lo + 1)").alias("db"),
     )
     clustered = (
-        zorder_cluster(dims, "da", "db", bits=10, cluster_bits=4)
+        zorder_cluster(dims, "da", "db")
         .repartition("cluster")
         .sortWithinPartitions("zval")
     )
@@ -1694,7 +1685,7 @@ def q87_inverted_index(spark, sf_dir):
     manifest would store anyway."""
     from java9_gc_log_parser_spark.operators.indexing import inverted_index
 
-    idx = inverted_index(_docs(spark, sf_dir), df_min=2, postings_cap=16)
+    idx = inverted_index(_docs(spark, sf_dir))
     return idx.select(
         "term", "df", "tf",
         F.array_join("postings", ",").alias("postings"),
@@ -2214,7 +2205,7 @@ def q119_ann_recall(spark, sf_dir):
         ann_recall_report,
     )
 
-    return ann_recall_report(_embs(spark, sf_dir), k=5)
+    return ann_recall_report(_embs(spark, sf_dir))
 
 
 def q120_near_dup_recall(spark, sf_dir):
@@ -2232,7 +2223,7 @@ def q120_near_dup_recall(spark, sf_dir):
     )
 
     sample = _embs(spark, sf_dir).filter(F.col("vec_id") % 3 == 0)
-    return near_dup_recall_report(sample, threshold=0.30)
+    return near_dup_recall_report(sample)
 
 
 def q121_mad_outliers(spark, sf_dir):
@@ -2433,9 +2424,7 @@ def q127_ahash_near_dup(spark, sf_dir):
         documents_as_assets,
     )
 
-    return ahash_near_dup_pairs(
-        documents_as_assets(_docs(spark, sf_dir)), max_hamming=16
-    )
+    return ahash_near_dup_pairs(documents_as_assets(_docs(spark, sf_dir)))
 
 
 def q128_token_entropy(spark, sf_dir):
@@ -2869,11 +2858,7 @@ def q131_compaction_apply(spark, sf_dir):
     the hash, not just a count)."""
     from java9_gc_log_parser_spark.operators.layout import compaction_apply
 
-    return compaction_apply(
-        _docs(spark, sf_dir),
-        _scratch(sf_dir, "q131"),
-        target_bytes=16384,
-    )
+    return compaction_apply(_docs(spark, sf_dir), _scratch(sf_dir, "q131"))
 
 
 def q132_score_calibration(spark, sf_dir):
@@ -4901,7 +4886,7 @@ WITH ev AS (
   FROM ev CROSS JOIN mm
 ), z AS (
   SELECT da, db,
-         CAST({_msql("da", "db", 10)} AS BIGINT) >> 16 AS cluster
+         CAST({_msql("da", "db")} AS BIGINT) >> 16 AS cluster
   FROM dims
 )
 SELECT CAST(cluster AS INT) AS cluster,

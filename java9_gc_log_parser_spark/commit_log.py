@@ -15,17 +15,19 @@ q67's sketch stream) commits through this module, under one contract:
   the previous log intact (a stale ``.tmp`` is never read and is overwritten
   by the next commit).
 * ``once_per_batch`` is the ``foreachBatch`` callback. ``foreachBatch`` is
-  at-least-once: after recovery Spark replays the in-flight batch id. A
-  replayed id (``batch_id <= last_batch``) is drained with ``count()``,
-  because Spark requires every partition of the batch to be processed, and
-  writes nothing.
+  at-least-once: after recovery Spark replays the in-flight batch id, which
+  is at most the last one committed here (Spark never re-runs a batch its
+  checkpoint has committed). That replay (``batch_id == last_batch``) is
+  drained with ``count()``, because Spark requires every partition of the
+  batch to be processed, and writes nothing.
+* A ``batch_id`` below the last committed one means the stream checkpoint
+  was lost while the store survived: the new run numbers its batches from 0
+  again. ``once_per_batch`` raises, naming both ids, before anything is
+  written; the checkpoint and the store must be kept or discarded together.
+  Still undetectable: a checkpoint lost when the last committed id is 0,
+  whose new batch 0 drains as a replay.
 * The rename is atomic on local disk and HDFS, not on S3. On an object store
   the table format (Iceberg, Delta) must be the commit.
-* Limitation: the replay guard trusts batch ids, so the stream checkpoint and
-  the store must be kept or discarded together. If the checkpoint is lost
-  while the store survives, the new run numbers its batches from 0 again and
-  every id up to the last committed one is drained as a replay; data from
-  source files that arrived since is then dropped.
 """
 
 from __future__ import annotations
@@ -61,13 +63,19 @@ def commit(log: str, record: dict) -> None:
 
 
 def once_per_batch(log: str, apply: Callable) -> Callable:
-    """The ``foreachBatch`` callback: drain a replayed batch id; otherwise
+    """The ``foreachBatch`` callback: drain a replay of the last committed
+    batch id and refuse an earlier id (a lost stream checkpoint); otherwise
     call ``apply(batch_df, batch_id, last)``, ``last`` being the previous
     committed id or ``None``, and commit the record it returns."""
 
     def on_batch(batch_df, batch_id: int) -> None:
         last = last_batch(log)
-        if last is not None and batch_id <= last:
+        if last is not None and batch_id < last:
+            raise RuntimeError(
+                f"batch {batch_id} arrived after batch {last} was committed "
+                f"to {log}: the stream checkpoint was lost while the store "
+                "survived; restore the checkpoint or discard the store")
+        if batch_id == last:
             batch_df.count()
             return
         commit(log, apply(batch_df, batch_id, last))

@@ -142,10 +142,17 @@ def lloyd(
     return centroids, assigned
 
 
-def kmeans_assign(embeddings: DataFrame, k: int = 4, iters: int = 2) -> DataFrame:
-    """Final (vec_id, cluster, d2) after ``iters`` Lloyd rounds over the
-    whole embedding (see :func:`lloyd`)."""
-    return lloyd(embeddings, _as_double(F.col("embedding")), k, iters)[1]
+#: kmeans_assign's cluster count and Lloyd rounds
+_KMEANS_K = 4
+_KMEANS_ITERS = 2
+
+
+def kmeans_assign(embeddings: DataFrame) -> DataFrame:
+    """Final (vec_id, cluster, d2) after ``_KMEANS_ITERS`` Lloyd rounds of
+    ``_KMEANS_K``-means over the whole embedding (see :func:`lloyd`)."""
+    return lloyd(
+        embeddings, _as_double(F.col("embedding")), _KMEANS_K, _KMEANS_ITERS
+    )[1]
 
 
 def semdedup(embeddings: DataFrame) -> DataFrame:
@@ -167,7 +174,7 @@ def semdedup(embeddings: DataFrame) -> DataFrame:
     ``kmeans_assign``'s rounded expanded form, so the oracle re-derives the
     identical verdict in DuckDB by unrolling the same iterations.
     """
-    assigned = kmeans_assign(embeddings, k=4, iters=2)
+    assigned = kmeans_assign(embeddings)
     e = _with_norm(embeddings).select("vec_id", "_emb", "_nrm")
     m = assigned.join(e, "vec_id")
     # explicit-count repartition: within-cell self-join output is quadratic

@@ -44,15 +44,18 @@ BROADCAST_MAX_EVAL_GRAMS = 5_000_000
 #: whose output is |train matches| x |eval docs| rows on one reducer
 FALLBACK_MAX_GRAM_EVAL_DOCS = 1000
 
+#: a train doc is contaminated when it shares at least _MIN_OVERLAP distinct
+#: word _NGRAM-grams with an eval doc
+_NGRAM = 4
+_MIN_OVERLAP = 2
 
-def contamination_pairs(
-    train: DataFrame,
-    eval_df: DataFrame,
-    n: int = 4,
-    min_overlap: int = 2,
-) -> DataFrame:
-    """(train_id, eval_id, n_shared): train docs sharing ``>= min_overlap``
-    distinct word ``n``-grams with an eval doc.
+#: the cosine at which semantic_decontaminate flags a corpus vector
+_SEMANTIC_THRESHOLD = 0.30
+
+
+def contamination_pairs(train: DataFrame, eval_df: DataFrame) -> DataFrame:
+    """(train_id, eval_id, n_shared): train docs sharing ``>= _MIN_OVERLAP``
+    distinct word ``_NGRAM``-grams with an eval doc.
 
     ``filter`` on the result (or an anti-join back to ``train``) is the
     decontaminated corpus.
@@ -75,7 +78,7 @@ def contamination_pairs(
     can plan a BroadcastNestedLoopJoin (equi-join on gram; plan-asserted).
     """
     ev = (
-        with_shingles(eval_df, n)
+        with_shingles(eval_df, _NGRAM)
         .select(F.col("doc_id").alias("eval_id"), F.explode("sh").alias("gram"))
     )
     broadcast_eval = ev.count() <= BROADCAST_MAX_EVAL_GRAMS
@@ -88,7 +91,7 @@ def contamination_pairs(
         )
         ev = ev.join(ok, "gram")
     tr = (
-        with_shingles(train, n)
+        with_shingles(train, _NGRAM)
         .select(F.col("doc_id").alias("train_id"), F.explode("sh").alias("gram"))
     )
     joined = (
@@ -99,31 +102,28 @@ def contamination_pairs(
     return (
         joined.groupBy("train_id", "eval_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_overlap)
+        .filter(F.col("n_shared") >= _MIN_OVERLAP)
     )
 
 
-def decontaminate(train: DataFrame, eval_df: DataFrame, n: int = 4) -> DataFrame:
-    """Train corpus minus every document ``contamination_pairs`` flags (at
-    its default of 2 shared ``n``-grams).
+def decontaminate(train: DataFrame, eval_df: DataFrame) -> DataFrame:
+    """Train corpus minus every document ``contamination_pairs`` flags.
 
     Left anti join on the (small) flagged-id set — at scale, broadcast-able
     because the contaminated fraction of a screened corpus is tiny.
     """
-    flagged = contamination_pairs(train, eval_df, n=n).select(
+    flagged = contamination_pairs(train, eval_df).select(
         F.col("train_id").alias("doc_id")
     ).distinct()
     return train.join(F.broadcast(flagged), "doc_id", "left_anti")
 
 
 def semantic_decontaminate(
-    corpus_emb: DataFrame,
-    eval_emb: DataFrame,
-    threshold: float = 0.30,
+    corpus_emb: DataFrame, eval_emb: DataFrame
 ) -> DataFrame:
     """Embedding-space (semantic) eval-set contamination: corpus vectors
-    whose cosine to some eval vector reaches ``threshold``, with the best
-    match per corpus vector — (vec_id, eval_id, cos).
+    whose cosine to some eval vector reaches ``_SEMANTIC_THRESHOLD``, with
+    the best match per corpus vector — (vec_id, eval_id, cos).
 
     The n-gram screen (:func:`contamination_pairs`) misses paraphrased or
     lightly-rewritten benchmark leakage; the embedding screen catches what
@@ -160,7 +160,7 @@ def semantic_decontaminate(
     matched = (
         c.join(F.broadcast(ev), "_blk")
         .withColumn("cos", cos)
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= _SEMANTIC_THRESHOLD)
     )
     from pyspark.sql import Window
 

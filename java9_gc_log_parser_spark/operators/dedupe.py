@@ -95,6 +95,42 @@ def with_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
+def _jaccard() -> Column:
+    """The rounded shingle Jaccard ``|A n B| / |A u B|`` of a pair from its
+    ``_inter``, ``_sza`` and ``_szb`` columns: |A u B| = |A| + |B| - |A n B|
+    since the shingle arrays are distinct."""
+    union = F.col("_sza") + F.col("_szb") - F.col("_inter")
+    return F.round(
+        F.when(union > 0, F.col("_inter").cast("double") / union).otherwise(
+            F.lit(0.0)
+        ),
+        6,
+    )
+
+
+def _with_overlap(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """The ``(doc_a, doc_b)`` candidate pairs joined back to both ends'
+    rows of the shingle table ``sh`` ``(doc_id, sh, sz)``:
+    ``(doc_a, doc_b, _sza, _szb, _inter)``, the set sizes and their
+    intersection size (one array traversal per pair)."""
+
+    def end(s: str) -> DataFrame:
+        return sh.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("sh").alias(f"_sh{s}"),
+            F.col("sz").alias(f"_sz{s}"),
+        )
+
+    return (
+        cand.join(end("a"), "doc_a")
+        .join(end("b"), "doc_b")
+        .select(
+            "doc_a", "doc_b", "_sza", "_szb",
+            F.size(F.array_intersect("_sha", "_shb")).alias("_inter"),
+        )
+    )
+
+
 def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing a blocking key.
 
@@ -154,8 +190,7 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
         & (F.col("a.doc_id") < F.col("b.doc_id"))
         & size_ok,
     )
-    # one array traversal per pair: |A u B| = |A| + |B| - |A n B| since the
-    # shingle arrays are distinct; _inter bound so intersect runs once
+    # _inter bound so the intersect runs once per pair
     scored = pairs.select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
@@ -163,12 +198,8 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
         F.col("b.sz").alias("_szb"),
         F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh"))).alias("_inter"),
     )
-    union = F.col("_sza") + F.col("_szb") - F.col("_inter")
-    jac = F.when(union > 0, F.col("_inter").cast("double") / union).otherwise(
-        F.lit(0.0)
-    )
     return (
-        scored.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+        scored.select("doc_a", "doc_b", _jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -279,40 +310,18 @@ def minhash_lsh_pairs(
         .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
         .distinct()
     )
-    verified = (
-        cand.join(
-            sh.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("sh").alias("sh_a"),
-                F.col("sz").alias("_sza"),
-            ),
-            "doc_a",
-        )
-        .join(
-            sh.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("sh").alias("sh_b"),
-                F.col("sz").alias("_szb"),
-            ),
-            "doc_b",
-        )
+    return (
+        _with_overlap(cand, sh)
         # size-bound prune (exact-preserving, cf. ngram_jaccard_pairs):
         # jaccard <= min/max sizes, so pairs failing the ratio cannot verify
+        # (the filter reads only the sizes, so it runs before the intersect)
         .filter(
             F.least("_sza", "_szb")
             >= F.lit(threshold) * F.greatest("_sza", "_szb")
         )
-        .withColumn(
-            "_inter", F.size(F.array_intersect("sh_a", "sh_b"))
-        )
+        .select("doc_a", "doc_b", _jaccard().alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
     )
-    union = F.col("_sza") + F.col("_szb") - F.col("_inter")
-    jac = F.when(union > 0, F.col("_inter").cast("double") / union).otherwise(
-        F.lit(0.0)
-    )
-    return verified.select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -362,19 +371,14 @@ def with_simhash(docs: DataFrame) -> DataFrame:
     )
 
 
-def simhash_pairs(
-    docs: DataFrame, max_hamming: int = 8, sig: DataFrame | None = None
-) -> DataFrame:
-    """Near-dup candidates by banded SimHash: 4 bands of 16 bits; a pair
+def simhash_pairs(sig: DataFrame, max_hamming: int) -> DataFrame:
+    """Near-dup candidates by banded SimHash over the ``(doc_id, sim)``
+    signature table ``sig`` (:func:`with_simhash`'s, or one materialized to
+    parquet so an external oracle can re-verify the banding + Hamming logic
+    over the exact signatures used here): 4 bands of 16 bits; a pair
     sharing any band is a candidate; verified by exact Hamming distance.
     Bands are repartitioned on the join key so the self-join reuses one
-    shuffle instead of recomputing signatures per side.
-
-    ``sig`` optionally injects a precomputed (doc_id, sim) signature table
-    (e.g. materialized to parquet so an external oracle can re-verify the
-    banding + Hamming logic over the exact signatures used here)."""
-    if sig is None:
-        sig = with_simhash(docs).select("doc_id", "sim")
+    shuffle instead of recomputing signatures per side."""
     bands = sig.select(
         "doc_id",
         "sim",
@@ -392,7 +396,7 @@ def simhash_pairs(
             )
         ).alias("b"),
     ).select("doc_id", "sim", "b.band_id", "b.band_val").repartition(
-        int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+        int(sig.sparkSession.conf.get("spark.sql.shuffle.partitions")),
         "band_id",
         "band_val",
     )
@@ -1213,35 +1217,18 @@ def ppjoin_pairs(docs: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    sa = sh.select(
-        F.col("doc_id").alias("doc_a"), F.col("sh").alias("_sa"),
-        F.col("sz").alias("_za"),
-    )
-    sb = sh.select(
-        F.col("doc_id").alias("doc_b"), F.col("sh").alias("_sb"),
-        F.col("sz").alias("_zb"),
-    )
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "inter",
-            F.size(F.array_intersect("_sa", "_sb")).cast("long"),
-        )
-        .withColumn(
-            "uni", (F.col("_za") + F.col("_zb") - F.col("inter")).cast("long")
-        )
-        .filter(F.col("inter") * F.lit(den) >= F.lit(num) * F.col("uni"))
+        _with_overlap(cand, sh)
         .select(
             "doc_a",
             "doc_b",
-            "inter",
-            "uni",
-            F.round(
-                F.col("inter").cast("double") / F.col("uni").cast("double"),
-                6,
-            ).alias("jaccard"),
+            F.col("_inter").cast("long").alias("inter"),
+            (F.col("_sza") + F.col("_szb") - F.col("_inter"))
+            .cast("long")
+            .alias("uni"),
+            _jaccard().alias("jaccard"),
         )
+        .filter(F.col("inter") * F.lit(den) >= F.lit(num) * F.col("uni"))
     )
 
 

@@ -17,7 +17,7 @@ Scale notes (100 TB):
     materializes 10^9 rows in one task — the classic hot-postings skew
     killer). df/tf stats still count EVERY doc via a map-combinable hash
     agg that never builds the list.
-  * df_min prunes hapax terms (the overwhelming majority of the vocab by
+  * ``_DF_MIN`` prunes hapax terms (the overwhelming majority of the vocab by
     type count) from the index, bounding output size; full-vocab stats
     live in `zipf_topk`/`tfidf_topk`.
 
@@ -35,21 +35,21 @@ from .text_analysis import tokens_col
 __all__ = ["inverted_index"]
 
 
-def inverted_index(
-    docs: DataFrame, df_min: int = 2, postings_cap: int = 16
-) -> DataFrame:
-    """Build ``(term, df, tf, postings)`` per term with df >= df_min.
+#: smallest document frequency a term is indexed at, and the posting
+#: list head's length
+_DF_MIN = 2
+_POSTINGS_CAP = 16
+
+
+def inverted_index(docs: DataFrame) -> DataFrame:
+    """Build ``(term, df, tf, postings)`` per term with df >= ``_DF_MIN``.
 
     ``df`` counts distinct docs containing the term, ``tf`` total
-    occurrences across the corpus, ``postings`` the first ``postings_cap``
+    occurrences across the corpus, ``postings`` the first ``_POSTINGS_CAP``
     doc_ids ascending (array<long>) — the bounded head of the posting
     list; a real store would spill full postings to a term-bucketed table,
     same plan shape.
     """
-    if df_min < 1:
-        raise ValueError(f"df_min must be >= 1, got {df_min}")
-    if postings_cap < 1:
-        raise ValueError(f"postings_cap must be >= 1, got {postings_cap}")
     per_doc = (
         docs.select(
             "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
@@ -64,12 +64,12 @@ def inverted_index(
     w = Window.partitionBy("term").orderBy("doc_id")
     head = (
         per_doc.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= postings_cap)
+        .filter(F.col("_rn") <= _POSTINGS_CAP)
         .groupBy("term")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("postings"))
     )
     return (
-        stats.filter(F.col("df") >= df_min)
+        stats.filter(F.col("df") >= _DF_MIN)
         .join(head, "term")
         .select("term", "df", "tf", "postings")
     )

@@ -16,7 +16,7 @@ established q73 exact-percentile pair).
 
 Scale notes (100 TB):
   * boundary computation is ONE holistic percentile agg producing
-    n_clusters-1 numbers — at extreme row counts switch to
+    ``_RANGE_CLUSTERS - 1`` numbers — at extreme row counts switch to
     approx_percentile or the q65 mergeable histogram sketch (documented
     error bound); the assignment side is unchanged either way.
   * assignment is map-only: broadcast the boundary array, cluster =
@@ -26,8 +26,8 @@ Scale notes (100 TB):
     partitions on the key, so row groups inside every file are also
     key-ordered — min/max stats stay tight at file AND row-group grain.
   * the zone-map audit (per-cluster min/max/count + pairwise disjointness)
-    is a tiny n_clusters-row agg over the written table — the invariant
-    that makes skipping sound is ASSERTED, not assumed.
+    is a tiny ``_RANGE_CLUSTERS``-row agg over the written table — the
+    invariant that makes skipping sound is ASSERTED, not assumed.
 
 Reference parity: beyond-reference operator (SURVEY §2 extension set); the
 reference streams one log file — a corpus store must decide physical
@@ -42,7 +42,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "compaction_plan",
     "micro_file_stats",
-    "range_boundaries",
     "range_cluster",
     "zone_map",
     "morton_sql",
@@ -51,28 +50,26 @@ __all__ = [
 ]
 
 
-def range_boundaries(df: DataFrame, col: str, n_clusters: int) -> DataFrame:
-    """One row ``(_bs: array<double>)`` — the n_clusters-1 exact
-    interpolated percentile boundaries of ``col`` at i/n_clusters."""
-    if n_clusters < 2:
-        raise ValueError(f"n_clusters must be >= 2, got {n_clusters}")
-    qs = [i / n_clusters for i in range(1, n_clusters)]
-    return df.agg(
-        F.percentile(F.col(col).cast("double"), F.array(*[F.lit(q) for q in qs])).alias(
-            "_bs"
-        )
-    )
+#: range_cluster's cluster count
+_RANGE_CLUSTERS = 8
 
 
-def range_cluster(df: DataFrame, col: str, n_clusters: int = 8) -> DataFrame:
-    """Append a deterministic ``cluster`` id: #{boundary < value}.
+def range_cluster(df: DataFrame, col: str) -> DataFrame:
+    """Append a deterministic ``cluster`` id: #{boundary < value}, over the
+    ``_RANGE_CLUSTERS - 1`` exact interpolated percentile boundaries of
+    ``col`` at i/_RANGE_CLUSTERS.
 
     A value exactly ON a boundary goes to the LOWER cluster (strict >);
     boundary/data ties only occur where the percentile lands on an exact
     rank, where interpolation is exact in both engines (the q73 argument),
     so the assignment is engine-stable.
     """
-    bs = range_boundaries(df, col, n_clusters)
+    qs = [i / _RANGE_CLUSTERS for i in range(1, _RANGE_CLUSTERS)]
+    bs = df.agg(
+        F.percentile(
+            F.col(col).cast("double"), F.array(*[F.lit(q) for q in qs])
+        ).alias("_bs")
+    )
     v = F.col(col).cast("double")
     return (
         df.crossJoin(F.broadcast(bs))
@@ -87,7 +84,7 @@ def range_cluster(df: DataFrame, col: str, n_clusters: int = 8) -> DataFrame:
 def zone_map(clustered: DataFrame, col: str) -> DataFrame:
     """Per-cluster zone-map stats + the disjointness proof.
 
-    Output (n_clusters rows): ``(cluster, n_rows, min_v, max_v, disjoint)``
+    Output (one row per cluster): ``(cluster, n_rows, min_v, max_v, disjoint)``
     where disjoint asserts this cluster's min exceeds the previous
     cluster's max — the invariant that makes min/max file skipping sound.
     min/max are the raw key values cast to long (the key is integral here:
@@ -110,21 +107,25 @@ def zone_map(clustered: DataFrame, col: str) -> DataFrame:
     )
 
 
-def morton_sql(col_a: str, col_b: str, bits: int) -> str:
+#: Z-order dims are integers in [0, 2**_ZORDER_BITS); a z-cluster is the
+#: top _ZORDER_CLUSTER_BITS bits of the Morton code
+_ZORDER_BITS = 10
+_ZORDER_CLUSTER_BITS = 4
+
+
+def morton_sql(col_a: str, col_b: str) -> str:
     """SQL text for the Morton (Z-order) interleave of two integer dims in
-    ``[0, 2**bits)`` — dim a takes the odd bit positions (more significant
-    within each pair), dim b the even ones.
+    ``[0, 2**_ZORDER_BITS)`` — dim a takes the odd bit positions (more
+    significant within each pair), dim b the even ones.
 
     Deliberately ONE generated expression string evaluated verbatim by BOTH
     Spark (`F.expr`) and the DuckDB oracle: pure `>> & <<  |` integer ops,
     so the code is bit-identical across engines by construction. The
-    expression is a flat OR-tree of 2*bits terms — comfortably inside
-    whole-stage codegen (no interpreted lambda, no UDF).
+    expression is a flat OR-tree of 2*_ZORDER_BITS terms — comfortably
+    inside whole-stage codegen (no interpreted lambda, no UDF).
     """
-    if not 1 <= bits <= 31:
-        raise ValueError(f"bits must be in [1, 31], got {bits}")
     terms = []
-    for i in range(bits):
+    for i in range(_ZORDER_BITS):
         terms.append(
             f"((({col_a} >> {i}) & CAST(1 AS BIGINT)) << {2 * i + 1})"
         )
@@ -132,12 +133,9 @@ def morton_sql(col_a: str, col_b: str, bits: int) -> str:
     return "(" + " | ".join(terms) + ")"
 
 
-def zorder_cluster(
-    df: DataFrame, col_a: str, col_b: str, bits: int = 10,
-    cluster_bits: int = 4,
-) -> DataFrame:
-    """Append ``zval`` (the 2*bits-bit Morton code of the two dim columns)
-    and ``cluster`` (its top ``cluster_bits`` bits).
+def zorder_cluster(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
+    """Append ``zval`` (the 2*_ZORDER_BITS-bit Morton code of the two dim
+    columns) and ``cluster`` (its top ``_ZORDER_CLUSTER_BITS`` bits).
 
     Why the top-bit prefix is the cluster id: a Morton prefix of 2k bits is
     exactly (k MSBs of dim a) x (k MSBs of dim b) — every cluster is an
@@ -150,20 +148,18 @@ def zorder_cluster(
 
     Scale notes (100 TB): the code is map-only codegen arithmetic; the only
     shuffle is the final clustered write's repartition on ``cluster``
-    (same as `range_cluster`). `cluster_bits` picks file count per
-    partition grain — at petabyte scale raise it so each z-cluster is a
-    few GB; the rectangles just get finer. Dims must be pre-scaled to
-    [0, 2**bits) integers (caller does the scaling so it stays an exact
-    integer contract both engines replay).
+    (same as `range_cluster`). ``_ZORDER_CLUSTER_BITS`` picks file count
+    per partition grain — at petabyte scale, raise the constant until each
+    z-cluster is a few GB; the rectangles just get finer. Dims must be
+    pre-scaled to [0, 2**_ZORDER_BITS) integers (caller does the scaling so
+    it stays an exact integer contract both engines replay).
     """
-    if not 1 <= cluster_bits <= 2 * bits:
-        raise ValueError(
-            f"cluster_bits must be in [1, {2 * bits}], got {cluster_bits}"
-        )
-    z = F.expr(morton_sql(col_a, col_b, bits)).cast("long")
+    z = F.expr(morton_sql(col_a, col_b)).cast("long")
     return df.withColumn("zval", z).withColumn(
         "cluster",
-        F.shiftright(F.col("zval"), 2 * bits - cluster_bits).cast("int"),
+        F.shiftright(
+            F.col("zval"), 2 * _ZORDER_BITS - _ZORDER_CLUSTER_BITS
+        ).cast("int"),
     )
 
 
@@ -180,7 +176,7 @@ def zorder_zone_map(
     reader would have to touch this cluster for a predicate on that dim
     alone. The audited claim: BOTH probe columns prune to a strict subset
     of clusters under one layout. The audit itself is a tiny
-    2**cluster_bits-row agg.
+    2**_ZORDER_CLUSTER_BITS-row agg.
     """
     alo, ahi = probe_a
     blo, bhi = probe_b
@@ -277,13 +273,11 @@ def compaction_plan(file_stats: DataFrame, target_bytes: int) -> DataFrame:
 
 #: micro-files per source that compaction_apply writes and plans
 _COMPACT_FILES = 16
+#: compaction_apply's bin size, in bytes
+_COMPACT_TARGET_BYTES = 16384
 
 
-def compaction_apply(
-    docs: DataFrame,
-    base_path: str,
-    target_bytes: int = 2048,
-) -> DataFrame:
+def compaction_apply(docs: DataFrame, base_path: str) -> DataFrame:
     """Execute the q94 binpack plan and prove it from the written state —
     the rewrite job `compaction_plan` only plans: write the micro-file
     layout (16 files per source, one parquet file per (source, file_id) —
@@ -325,7 +319,7 @@ def compaction_apply(
     )
 
     stats = micro_file_stats(docs, files_per_source=_COMPACT_FILES)
-    plan = compaction_plan(stats, target_bytes=target_bytes)
+    plan = compaction_plan(stats, target_bytes=_COMPACT_TARGET_BYTES)
     bin_map = plan.select(
         "source",
         F.explode(

@@ -491,10 +491,15 @@ def ahash_signatures(assets: DataFrame, decoder: str = "stub") -> DataFrame:
     return assets.mapInPandas(batches, AHASH_SCHEMA)
 
 
-def ahash_near_dup_pairs(assets: DataFrame, max_hamming: int = 6) -> DataFrame:
+#: ahash_near_dup_pairs' largest Hamming distance of a near-dup pair
+_AHASH_MAX_HAMMING = 16
+
+
+def ahash_near_dup_pairs(assets: DataFrame) -> DataFrame:
     """Perceptual near-dup pairs over the multimodal corpus: aHash
     signatures banded 4x16 bits (a pair sharing any band is a candidate),
-    verified by exact Hamming distance — the q23 SimHash machinery reused
+    verified by exact Hamming distance (at most ``_AHASH_MAX_HAMMING``
+    bits) — the q23 SimHash machinery reused
     verbatim on top of the mapInPandas signature kernel, which is the
     point: once an asset is 8 signature bytes, image dedup IS text dedup.
     """
@@ -503,7 +508,7 @@ def ahash_near_dup_pairs(assets: DataFrame, max_hamming: int = 6) -> DataFrame:
     sig = ahash_signatures(assets).select(
         F.col("asset_id").alias("doc_id"), F.col("ahash").alias("sim")
     )
-    pairs = simhash_pairs(assets, max_hamming=max_hamming, sig=sig)
+    pairs = simhash_pairs(sig, _AHASH_MAX_HAMMING)
     return pairs.select(
         F.col("doc_a").alias("asset_a"),
         F.col("doc_b").alias("asset_b"),

@@ -204,15 +204,15 @@ def mixture_sample(
     )
 
 
-def importance_resample(
-    docs: DataFrame,
-    target_source: str,
-    k: int = 50,
-) -> DataFrame:
+#: importance_resample's sample size
+_IR_K = 50
+
+
+def importance_resample(docs: DataFrame, target_source: str) -> DataFrame:
     """DSIR-style importance resampling (Xie et al. 2023, "Data Selection
-    for Language Models via Importance Resampling"): select the k raw-corpus
-    documents whose hashed-n-gram feature distribution most resembles a
-    target domain, by Gumbel-top-k over importance log-weights.
+    for Language Models via Importance Resampling"): select the ``_IR_K``
+    raw-corpus documents whose hashed-n-gram feature distribution most
+    resembles a target domain, by Gumbel-top-k over importance log-weights.
 
     Reference parity note: the reference engine has no learned selection —
     this is one of the beyond-reference training-data operators (SURVEY §2
@@ -350,7 +350,7 @@ def importance_resample(
     )
     return (
         keyed.orderBy(F.col("_ir_key").desc(), F.col("doc_id"))
-        .limit(k)
+        .limit(_IR_K)
         .select(
             "doc_id",
             "source",
@@ -361,13 +361,14 @@ def importance_resample(
     )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    context_len: int = 512,
-    n_streams: int = 8,
-) -> DataFrame:
+#: pack_sequences' training window, in tokens, and its packing streams
+_PACK_CONTEXT = 512
+_PACK_STREAMS = 8
+
+
+def pack_sequences(docs: DataFrame) -> DataFrame:
     """Concat-and-chunk sequence packing: lay the corpus out as a stream of
-    tokens and cut it into fixed ``context_len`` training windows (the
+    tokens and cut it into fixed ``_PACK_CONTEXT`` training windows (the
     GPT-style packing where documents may span chunk boundaries), emitting
     each document's position in that layout.
 
@@ -377,11 +378,11 @@ def pack_sequences(
 
     Determinism: the layout must be a pure function of the corpus, not of
     Spark's partitioning. Each doc hashes once (md5(id || ':pack:v1'));
-    the first 4 hex chars assign it to one of ``n_streams`` independent
+    the first 4 hex chars assign it to one of ``_PACK_STREAMS`` independent
     packing streams and the full 32-hex digest is its order key within the
     stream (total order: (digest, id) — ids break the astronomically
     unlikely digest tie). Offsets are then a running token sum in that
-    order, and chunk ids are integer division by ``context_len``. Any
+    order, and chunk ids are integer division by ``_PACK_CONTEXT``. Any
     engine reproduces byte-identical layout from the ids alone.
 
     Scale shape (100 TB): ONE shuffle — hash-partition by stream — and one
@@ -390,8 +391,8 @@ def pack_sequences(
     per row, never a re-scan). There is deliberately NO global order: a
     single global token stream would serialize the sort on one task, so the
     unit of sequentiality is the stream, exactly as a multi-worker loader
-    consumes one shard-stream per reader. ``n_streams`` must grow with the
-    corpus (corpus_tokens / n_streams ≈ tokens a single sort task should
+    consumes one shard-stream per reader. ``_PACK_STREAMS`` must grow with
+    the corpus (corpus_tokens / streams ≈ tokens a single sort task should
     own, e.g. 1e5 streams at 1e12 docs); it is the write-side analogue of
     :func:`shard_assign`'s n_shards. Empty docs are dropped (they occupy
     zero tokens and would otherwise make ordering ties semantic).
@@ -405,10 +406,6 @@ def pack_sequences(
 
     from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
 
-    if context_len < 1:
-        raise ValueError(f"context_len must be >= 1, got {context_len}")
-    if not 1 <= n_streams <= 4096:
-        raise ValueError(f"n_streams must be in [1, 4096], got {n_streams}")
     h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":pack:v1")))
     base = docs.select(
         F.col("doc_id"),
@@ -417,7 +414,7 @@ def pack_sequences(
     ).filter(F.col("_pk_nt") > 0)
     stream = (
         F.conv(F.substring("_pk_h", 1, 4), 16, 10).cast("int")
-        % n_streams
+        % _PACK_STREAMS
     ).cast("int")
     w = (
         Window.partitionBy("stream")
@@ -425,7 +422,7 @@ def pack_sequences(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     end = F.sum("_pk_nt").over(w)
-    L = float(context_len)
+    L = float(_PACK_CONTEXT)
     return (
         base.withColumn("stream", stream)
         .withColumn("_pk_end", end)
@@ -448,11 +445,11 @@ def pack_sequences(
     )
 
 
-def epoch_order(
-    docs: DataFrame,
-    epoch: int = 0,
-    n_shards: int = 8,
-) -> DataFrame:
+#: epoch_order's shard count
+_EPOCH_SHARDS = 8
+
+
+def epoch_order(docs: DataFrame, epoch: int) -> DataFrame:
     """Deterministic per-epoch global training order WITHOUT a global sort.
 
     Training jobs need a reproducible shuffle of the corpus per epoch —
@@ -462,34 +459,34 @@ def epoch_order(
     re-permutes everything, while a fixed epoch is stable forever.
 
     The global order is DEFINED as (shard, key, id) where shard = first 4
-    hex chars of the key modulo ``n_shards`` — so the global position
+    hex chars of the key modulo ``_EPOCH_SHARDS`` — so the global position
     decomposes into (a) a rank within the shard and (b) the total size of
     all earlier shards. That decomposition is the whole trick:
 
     - rank within shard: one hash-partition shuffle + in-partition sort
       (row_number over PARTITION BY shard), the same single-shuffle shape
       as :func:`pack_sequences`;
-    - earlier-shard offsets: a shard-count dim of ``n_shards`` rows (one
-      map-side-combinable hash agg), turned into exclusive prefix sums by a
-      window over the TINY dim and broadcast back.
+    - earlier-shard offsets: a shard-count dim of ``_EPOCH_SHARDS`` rows
+      (one map-side-combinable hash agg), turned into exclusive prefix sums
+      by a window over the TINY dim and broadcast back.
 
     No task ever sees a global ORDER BY; at 10^12 rows the plan is two hash
     aggs over the corpus scan + one broadcast join, and a consumer reads
     shard s's files in rank order to walk the global permutation.
-    Skew: shards are md5-uniform; ``n_shards`` scales like
+    Skew: shards are md5-uniform; ``_EPOCH_SHARDS`` scales like
     :func:`shard_assign`'s (capped 4096, bias <= n/65536).
     """
     from pyspark.sql import Window
 
-    if not 1 <= n_shards <= 4096:
-        raise ValueError(f"n_shards must be in [1, 4096], got {n_shards}")
     key = F.md5(
         F.concat(F.col("doc_id").cast("string"), F.lit(f":order:v1:{int(epoch)}"))
     )
     base = docs.select(F.col("doc_id"), key.alias("_eo_k")).withColumn(
         "shard",
-        (F.conv(F.substring("_eo_k", 1, 4), 16, 10).cast("int") % n_shards)
-        .cast("int"),
+        (
+            F.conv(F.substring("_eo_k", 1, 4), 16, 10).cast("int")
+            % _EPOCH_SHARDS
+        ).cast("int"),
     )
     w_rank = Window.partitionBy("shard").orderBy(F.col("_eo_k"), F.col("doc_id"))
     ranked = base.withColumn(
@@ -575,14 +572,15 @@ def chunk_sliding(docs: DataFrame) -> DataFrame:
     )
 
 
-def weighted_priority_sample(
-    docs: DataFrame,
-    k: int = 200,
-) -> DataFrame:
-    """Deterministic weight-biased priority sampling: draw ``k`` documents
-    with inclusion probability increasing in document weight (token count),
-    reproducibly — the same corpus selects the same k docs on any
-    engine, any partitioning, any run.
+#: weighted_priority_sample's sample size
+_WPS_K = 200
+
+
+def weighted_priority_sample(docs: DataFrame) -> DataFrame:
+    """Deterministic weight-biased priority sampling: draw ``_WPS_K``
+    documents with inclusion probability increasing in document weight
+    (token count), reproducibly — the same corpus selects the same k docs
+    on any engine, any partitioning, any run.
 
     Mechanism (priority-sampling family, Efraimidis–Spirakis shape): each
     doc gets a deterministic uniform u in (0,1) from md5(id || ':wps:v1')
@@ -605,8 +603,6 @@ def weighted_priority_sample(
     """
     from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
 
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
     h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":wps:v1")))
     u32 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
     u = (u32.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
@@ -618,7 +614,7 @@ def weighted_priority_sample(
     )
     return (
         base.orderBy(F.col("_wp_pri"), F.col("doc_id"))
-        .limit(k)
+        .limit(_WPS_K)
         .select(
             F.col("doc_id"),
             "weight",

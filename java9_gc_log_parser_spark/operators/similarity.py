@@ -40,6 +40,10 @@ EPS = 1e-12
 _QUERIES = "vec_id % 101 = 0"
 #: neighbours per query of the legs that take no ``k``
 _K = 5
+#: cosine at which two vectors are near-duplicates: the synthetic
+#: embeddings are near-random (max pairwise cosine ~0.4), so a higher bar
+#: would leave no pair to check
+_NEAR_DUP_COS = 0.30
 #: embedding dimensions whose signs form the LSH bucket id (16 buckets)
 _LSH_DIMS = (1, 2, 3, 4)
 #: PQ: subspaces, codes per subspace, Lloyd rounds, embedding dimension
@@ -177,8 +181,9 @@ def sign_bucket(emb: Column) -> Column:
     return bucket
 
 
-def ann_topk_lsh(embeddings: DataFrame, k: int = 5) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's sign bucket.
+def ann_topk_lsh(embeddings: DataFrame) -> DataFrame:
+    """Approximate top-``_K``: candidates restricted to the query's sign
+    bucket.
 
     Same output shape as the brute-force path; recall trades off against the
     number of hyperplanes (2^4 buckets).
@@ -188,22 +193,22 @@ def ann_topk_lsh(embeddings: DataFrame, k: int = 5) -> DataFrame:
     )
     c, q = _sides(withb, "bucket")
     return _cosine_topk(
-        _probe_join(c, q, F.col("q_bucket") == F.col("c_bucket")), k
+        _probe_join(c, q, F.col("q_bucket") == F.col("c_bucket")), _K
     )
 
 
-def ann_topk_ivf(embeddings: DataFrame, n_centroids: int = 16) -> DataFrame:
+def ann_topk_ivf(embeddings: DataFrame) -> DataFrame:
     """IVF (inverted-file) approximate top-``_K``: coarse-quantize the corpus
-    into ``n_centroids`` cells, then search each query against only its
+    into ``_IVF_CELLS`` cells, then search each query against only its
     ``_IVF_PROBE`` nearest cells.
 
-    The centroid set is deterministic — the ``n_centroids`` lowest-vec_id
+    The centroid set is deterministic — the ``_IVF_CELLS`` lowest-vec_id
     vectors (a training-free coarse quantizer; a real deployment k-means
     refines it offline, which changes the centroid table, not this plan).
     Centroids are tiny and broadcast twice: once to assign every corpus
     vector to its argmax-cosine cell (map-only scan), once to pick each
     query's probe cells. The candidate join then hits ``_IVF_PROBE /
-    n_centroids`` of the corpus instead of all of it — at 100 TB the cell
+    _IVF_CELLS`` of the corpus instead of all of it — at 100 TB the cell
     id becomes the table's partition key, so a probe is a partition-pruned
     scan, and the assignment column is written once at ingest. Output shape
     matches the exact path: (query_id, neighbor_id, rank, cos); recall vs
@@ -213,7 +218,7 @@ def ann_topk_ivf(embeddings: DataFrame, n_centroids: int = 16) -> DataFrame:
     Cell-id tie-break on equal cosine: lowest centroid id, matching the
     oracle's ``row_number() ORDER BY cos DESC, cid``.
     """
-    assigned, probes = _ivf_cells(embeddings, n_centroids, _IVF_PROBE)
+    assigned, probes = _ivf_cells(embeddings)
     return _cosine_topk(
         _probe_join(assigned, probes, F.col("cell") == F.col("q_cell")), _K
     )
@@ -261,23 +266,21 @@ def _nearest_cell(e: DataFrame, cells: DataFrame, *carry: str) -> DataFrame:
     )
 
 
-def _ivf_cells(
-    embeddings: DataFrame, n_centroids: int, n_probe: int
-) -> tuple[DataFrame, DataFrame]:
+def _ivf_cells(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The IVF coarse-quantization stage shared by the IVF and IVF-PQ legs:
     returns ``(assigned, probes)`` where ``assigned`` is the corpus with its
     argmax cell ``(neighbor_id, c_emb, c_nrm, cell)`` and ``probes`` is the
-    query set with its top-``n_probe`` cells ``(query_id, q_emb, q_nrm,
+    query set with its top-``_IVF_PROBE`` cells ``(query_id, q_emb, q_nrm,
     q_cell)`` — one row per probed cell."""
     e = _with_norm(embeddings)
-    cent = _ivf_seed(e, n_centroids)
+    cent = _ivf_seed(e, _IVF_CELLS)
     assigned = _nearest_cell(e, cent, "_emb", "_nrm").select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("_best._emb").alias("c_emb"),
         F.col("_best._nrm").alias("c_nrm"),
         F.col("_best.cid").alias("cell"),
     )
-    # probe-cell ranking needs top-n_probe (not argmax); the query set is
+    # probe-cell ranking needs top-_IVF_PROBE (not argmax); the query set is
     # tiny so this window's shuffle is negligible
     wcell = Window.partitionBy("vec_id").orderBy(
         F.col("_ccos").desc(), F.col("cid")
@@ -285,7 +288,7 @@ def _ivf_cells(
     probes = (
         _cell_cos(e.filter(_QUERIES), cent)
         .withColumn("_crk", F.row_number().over(wcell))
-        .filter(F.col("_crk") <= n_probe)
+        .filter(F.col("_crk") <= _IVF_PROBE)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("_emb").alias("q_emb"),
@@ -296,10 +299,9 @@ def _ivf_cells(
     return assigned, probes
 
 
-def embedding_near_dup_pairs(
-    embeddings: DataFrame, threshold: float = 0.92
-) -> DataFrame:
-    """Near-duplicate vector pairs: cosine >= threshold within a blocking key.
+def embedding_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
+    """Near-duplicate vector pairs: cosine >= ``_NEAR_DUP_COS`` within a
+    blocking key.
 
     Blocking is the deterministic sign-LSH bucket (``sign_bucket``):
     block cardinality is 2^4 with sizes set by the DATA's sign
@@ -327,10 +329,10 @@ def embedding_near_dup_pairs(
         F.col("a.vec_id").alias("vec_a"),
         F.col("b.vec_id").alias("vec_b"),
         rounded_cos("a._emb", "a._nrm", "b._emb", "b._nrm").alias("cos"),
-    ).filter(F.col("cos") >= threshold)
+    ).filter(F.col("cos") >= _NEAR_DUP_COS)
 
 
-def ann_recall_report(embeddings: DataFrame, k: int = 5) -> DataFrame:
+def ann_recall_report(embeddings: DataFrame) -> DataFrame:
     """ANN QUALITY EVALUATION harness: per-query recall@k of the sign-LSH
     leg (q20) against the exact brute-force top-k ground truth (q19) —
     the measurement that turns "LSH trades recall for cost" from a
@@ -350,13 +352,9 @@ def ann_recall_report(embeddings: DataFrame, k: int = 5) -> DataFrame:
     a sampled query slice; the slice predicate is the operators'
     ``_QUERIES``.
     """
-    exact = ann_topk_bruteforce(embeddings, k=k).select(
-        "query_id", "neighbor_id"
-    )
-    approx = ann_topk_lsh(embeddings, k=k).select(
-        "query_id", "neighbor_id"
-    )
-    return _recall_vs(exact, approx, k)
+    exact = ann_topk_bruteforce(embeddings).select("query_id", "neighbor_id")
+    approx = ann_topk_lsh(embeddings).select("query_id", "neighbor_id")
+    return _recall_vs(exact, approx, _K)
 
 
 def _recall_vs(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
@@ -394,9 +392,7 @@ def _recall_vs(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
     )
 
 
-def near_dup_recall_report(
-    embeddings: DataFrame, threshold: float = 0.30
-) -> DataFrame:
+def near_dup_recall_report(embeddings: DataFrame) -> DataFrame:
     """Pair-level RECALL audit of the sign-LSH near-dup blocking (q21)
     against the exact all-pairs cosine ground truth — the q119 harness's
     sibling for the PAIR problem: q21's docstring prices its bucket
@@ -428,10 +424,10 @@ def near_dup_recall_report(
     exact = (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .withColumn("cos", rounded_cos("_ea", "_na", "_eb", "_nb"))
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= _NEAR_DUP_COS)
         .select("vec_a", "vec_b")
     )
-    lsh = embedding_near_dup_pairs(embeddings, threshold=threshold).select(
+    lsh = embedding_near_dup_pairs(embeddings).select(
         "vec_a", "vec_b", F.lit(1).alias("_hit")
     )
     return (
@@ -563,7 +559,7 @@ def ann_topk_ivf_pq(embeddings: DataFrame) -> DataFrame:
     validating the pieces while this operator validates the composition.
 
     Scale shape (100 TB of vectors): candidates are bounded by the
-    ``n_probe/n_centroids`` corpus fraction (a partition-pruned scan once
+    ``_IVF_PROBE/_IVF_CELLS`` corpus fraction (a partition-pruned scan once
     cell id is the table's partition key); the scored join ships only
     (query_id, neighbor_id) pairs and m-small-int code rows — never
     embeddings; probes and the ADC LUT are queries-sized broadcasts. The
@@ -574,7 +570,7 @@ def ann_topk_ivf_pq(embeddings: DataFrame) -> DataFrame:
     Output: ``(query_id, neighbor_id, rank, adc_d2)`` — top-5 by
     (ADC distance asc, neighbor_id asc) among CELL-LOCAL candidates
     (4 probed of 16 cells), self-matches excluded."""
-    assigned, probes = _ivf_cells(embeddings, _IVF_CELLS, _IVF_PROBE)
+    assigned, probes = _ivf_cells(embeddings)
     cand = _probe_join(
         assigned, probes, F.col("cell") == F.col("q_cell")
     ).select("query_id", "neighbor_id")
@@ -583,9 +579,9 @@ def ann_topk_ivf_pq(embeddings: DataFrame) -> DataFrame:
         F.col("query_id").alias("l_query"), "s", "cluster", "d2u"
     )
     return _adc_topk(
-        # cand is queries × n_probe × cell-bounded — queries-scale, so it
-        # broadcasts against the corpus-scale code table (the corpus never
-        # shuffles toward the query side anywhere in this operator)
+        # cand is queries × _IVF_PROBE × cell-bounded — queries-scale, so
+        # it broadcasts against the corpus-scale code table (the corpus
+        # never shuffles toward the query side anywhere in this operator)
         codes.join(F.broadcast(cand), cand["neighbor_id"] == codes["vec_id"])
         .join(
             F.broadcast(lutq),
@@ -646,7 +642,7 @@ def ivfpq_encode(
     are ``clustering._argmin`` over rounded expanded-form distances
     (k-means' assignment), with the per-row subspace slice driven by the
     broadcast ``s`` column so all ``m`` subspaces encode in ONE pass.
-    Per-vector cost: O(n_centroids + m*k_codes) JVM array ops; the two
+    Per-vector cost: O(_IVF_CELLS + m*k_codes) JVM array ops; the two
     grouped argmins share the one batch-sized shuffle key (vec_id)."""
     from java9_gc_log_parser_spark.operators.clustering import _argmin, _sq
 

@@ -100,11 +100,16 @@ def cms_sketch(docs: DataFrame) -> DataFrame:
     )
 
 
-def cms_heavy_hitters(docs: DataFrame, k: int = 20) -> DataFrame:
-    """Top-k tokens by exact count, each with its count-min estimate and
-    overcount — the audit query that validates the sketch against ground
-    truth at test scale (at 100 TB one keeps only the sketch and a
-    candidate heap; the exact side here doubles as the oracle anchor).
+#: cms_heavy_hitters' candidate heap size
+_CMS_TOP = 20
+
+
+def cms_heavy_hitters(docs: DataFrame) -> DataFrame:
+    """Top-``_CMS_TOP`` tokens by exact count, each with its count-min
+    estimate and overcount — the audit query that validates the sketch
+    against ground truth at test scale (at 100 TB one keeps only the sketch
+    and a candidate heap; the exact side here doubles as the oracle
+    anchor).
 
     est(term) = min over rows r of grid[r][bucket_r(term)]; CMS guarantees
     est >= cnt (overcount >= 0, never under).
@@ -114,7 +119,7 @@ def cms_heavy_hitters(docs: DataFrame, k: int = 20) -> DataFrame:
     BROADCAST — the corpus-sized side is long gone by then.
     """
     tc = _term_counts(docs)
-    top = tc.orderBy(F.col("cnt").desc(), F.col("term")).limit(k)
+    top = tc.orderBy(F.col("cnt").desc(), F.col("term")).limit(_CMS_TOP)
     grid = cms_sketch(docs)
     for r in range(CMS_DEPTH):
         g = grid.filter(F.col("row") == r).select(

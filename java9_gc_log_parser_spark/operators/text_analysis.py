@@ -401,9 +401,13 @@ def bigram_logprob(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_topk(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Top-k terms per document by tf-idf (keyword extraction / topic
-    labeling for corpus audits).
+#: tfidf_topk's terms per document
+_TFIDF_K = 3
+
+
+def tfidf_topk(docs: DataFrame) -> DataFrame:
+    """Top-``_TFIDF_K`` terms per document by tf-idf (keyword extraction /
+    topic labeling for corpus audits).
 
     tf = in-document occurrence count (lowercased whitespace tokens);
     idf = ln(N / df) with N = total documents (including empty ones) and
@@ -446,7 +450,7 @@ def tfidf_topk(docs: DataFrame, k: int = 3) -> DataFrame:
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _TFIDF_K)
         .select("doc_id", "term", "tf", "score", "rank")
     )
 
@@ -476,11 +480,15 @@ def token_budget(docs: DataFrame) -> DataFrame:
     )
 
 
-def zipf_topk(docs: DataFrame, k: int = 50) -> DataFrame:
-    """Corpus vocabulary head: the top-k terms by frequency with rank and
-    cumulative coverage share — the Zipf audit a curation pipeline runs to
-    spot boilerplate explosions (a term head covering an outsized share of
-    all tokens) and tokenizer-vocabulary drift.
+#: zipf_topk's vocabulary head size
+_ZIPF_K = 50
+
+
+def zipf_topk(docs: DataFrame) -> DataFrame:
+    """Corpus vocabulary head: the top-``_ZIPF_K`` terms by frequency with
+    rank and cumulative coverage share — the Zipf audit a curation pipeline
+    runs to spot boilerplate explosions (a term head covering an outsized
+    share of all tokens) and tokenizer-vocabulary drift.
 
     Deterministic total order: (count desc, term asc). ``share`` and
     ``cum_share`` are fractions of ALL corpus tokens (not just the head),
@@ -501,7 +509,9 @@ def zipf_topk(docs: DataFrame, k: int = 50) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     total = counts.agg(F.sum("cnt").cast("double").alias("total"))
-    head = counts.orderBy(F.col("cnt").desc(), F.col("term").asc()).limit(k)
+    head = counts.orderBy(F.col("cnt").desc(), F.col("term").asc()).limit(
+        _ZIPF_K
+    )
     w = Window.orderBy(F.col("cnt").desc(), F.col("term").asc())
     return (
         head.join(F.broadcast(total))

@@ -85,16 +85,16 @@ def main() -> None:
     # quadratic TRUE answer (candidate pairs within identical-hash
     # buckets), not the operator.
     legs = {
-        "pack": (lambda d: pack_sequences(d, 512, 8), None),
-        "dupgate": (lambda d: dup_ngram_gate(d), None),
-        "cms": (lambda d: cms_heavy_hitters(d, 20), None),
-        "ppjoin": (lambda d: ppjoin_pairs(d), 10),
+        "pack": (pack_sequences, None),
+        "dupgate": (dup_ngram_gate, None),
+        "cms": (cms_heavy_hitters, None),
+        "ppjoin": (ppjoin_pairs, 10),
         "classifier": (
             lambda d: classifier_score(d, classifier_weights(spark)),
             None,
         ),
         "ahash": (
-            lambda d: ahash_near_dup_pairs(documents_as_assets(d), 16),
+            lambda d: ahash_near_dup_pairs(documents_as_assets(d)),
             10,
         ),
         "bpe": (lambda d: bpe_learn(spark, d, n_merges=4), None),

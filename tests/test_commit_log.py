@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from java9_gc_log_parser_spark import commit_log
 
 
@@ -62,12 +64,18 @@ def test_once_per_batch_applies_new_ids_and_drains_replays(tmp_path):
     assert calls == [(0, None), (1, 0)]
     assert commit_log.last_batch(log) == 1
 
-    # replays of committed ids (a lost stream checkpoint restarts at 0):
-    # drained with one count() each, nothing applied or committed
-    for batch_id in (0, 1):
-        batch = StubBatch()
-        on_batch(batch, batch_id)
-        assert batch.counts == 1
+    # a replay of the last committed id (Spark re-runs the batch its own
+    # checkpoint had not committed): drained with one count(), nothing
+    # applied or committed
+    batch = StubBatch()
+    on_batch(batch, 1)
+    assert batch.counts == 1
+    # an earlier id (a lost stream checkpoint restarts at 0): refused before
+    # the batch is read, nothing applied or committed
+    batch = StubBatch()
+    with pytest.raises(RuntimeError, match="batch 0 arrived after batch 1"):
+        on_batch(batch, 0)
+    assert batch.counts == 0
     assert calls == [(0, None), (1, 0)]
     assert commit_log.records(log) == [{"batch_id": 0}, {"batch_id": 1}]
 

@@ -13,39 +13,51 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, source string, text string")
 
 
-def _pairs(spark, train_rows, eval_rows, **kw):
+def _pairs(spark, train_rows, eval_rows):
     got = contamination_pairs(
-        _df(spark, train_rows), _df(spark, eval_rows), **kw
+        _df(spark, train_rows), _df(spark, eval_rows)
     ).collect()
     return {(r["train_id"], r["eval_id"]): r["n_shared"] for r in got}
 
 
+_TRAIN = [
+    (1, "s", "x y a b c d e f z"),   # contains "a b c d e f": 3 of its 4-grams
+    (2, "s", "a b c d q r s t u"),   # shares only "a b c d"
+    (3, "s", "p q r s t u v w"),     # disjoint
+    (4, "s", "a b c d e q r s"),     # shares exactly "a b c d", "b c d e"
+]
+
+
 def test_known_answer_overlap(spark):
-    """Train doc 1 embeds eval doc 10's text verbatim -> every eval 2-gram is
-    shared; train doc 2 shares exactly one 2-gram (below min_overlap=2)."""
-    train = [
-        (1, "s", "x y a b c d z"),       # contains "a b c d" -> grams a b, b c, c d
-        (2, "s", "a b q r s t u"),       # shares only "a b"
-        (3, "s", "p q r s t u v"),       # disjoint
-    ]
+    """Train doc 1 embeds eval doc 10's text verbatim -> every eval 4-gram
+    is shared; train doc 2 shares one 4-gram (below the minimum of 2) and
+    train doc 4 exactly two (the minimum, inclusive)."""
+    eval_rows = [(10, "s", "a b c d e f")]
+    got = _pairs(spark, _TRAIN, eval_rows)
+    assert got == {(1, 10): 3, (4, 10): 2}
+
+
+def test_min_overlap_one_flags_single_gram(spark, monkeypatch):
+    """The overlap minimum is inclusive at any value: lowered to 1, one
+    shared 4-gram flags."""
+    from java9_gc_log_parser_spark.operators import contamination
+
+    monkeypatch.setattr(contamination, "_MIN_OVERLAP", 1)
+    train = [(2, "s", "a b c d q r s t u")]
     eval_rows = [(10, "s", "a b c d")]
-    got = _pairs(spark, train, eval_rows, n=2, min_overlap=2)
-    assert got == {(1, 10): 3}
+    assert _pairs(spark, train, eval_rows) == {(2, 10): 1}
 
 
-def test_min_overlap_one_flags_single_gram(spark):
-    train = [(2, "s", "a b q r s t u")]
-    eval_rows = [(10, "s", "a b c d")]
-    got = _pairs(spark, train, eval_rows, n=2, min_overlap=1)
-    assert got == {(2, 10): 1}
-
-
-def test_short_doc_fallback_exact_match(spark):
+def test_short_doc_fallback_exact_match(spark, monkeypatch):
     """Docs shorter than n collapse to one full-text shingle: only an exact
-    (lowercased) token-sequence match can fire."""
+    (lowercased) token-sequence match can fire. One shingle can never reach
+    the minimum overlap of 2, so the test lowers _MIN_OVERLAP to 1."""
+    from java9_gc_log_parser_spark.operators import contamination
+
+    monkeypatch.setattr(contamination, "_MIN_OVERLAP", 1)
     train = [(1, "s", "Tiny Doc"), (2, "s", "tiny doc x y z w q")]
     eval_rows = [(10, "s", "tiny doc")]
-    got = _pairs(spark, train, eval_rows, n=4, min_overlap=1)
+    got = _pairs(spark, train, eval_rows)
     assert got == {(1, 10): 1}  # doc 2's 4-grams never equal the 2-token gram
 
 
@@ -59,10 +71,14 @@ def _fallback(monkeypatch, cap=None):
         monkeypatch.setattr(contamination, "FALLBACK_MAX_GRAM_EVAL_DOCS", cap)
 
 
+#: every eval doc opens with the same 5-token header: two boilerplate 4-grams
 _BOILERPLATE_EVAL = [
-    (10, "s", "common header here rare tail gram"),
-    (11, "s", "common header here other words follow"),
-    (12, "s", "common header here more filler text"),
+    (10, "s", "common shared header boiler text rare tail gram end"),
+    (11, "s", "common shared header boiler text other words follow now"),
+    (12, "s", "common shared header boiler text more filler words here"),
+]
+_BOILERPLATE_TRAIN = [
+    (1, "s", "common shared header boiler text rare tail gram end")
 ]
 
 
@@ -70,12 +86,11 @@ def test_boilerplate_gram_cap(spark, monkeypatch):
     """On the fallback path a gram present in more eval docs than the cap
     is dropped before matching; rarer grams still fire. The broadcast path
     keeps every gram."""
-    train = [(1, "s", "common header here rare tail gram")]
-    uncapped = _pairs(spark, train, _BOILERPLATE_EVAL, n=3, min_overlap=1)
+    uncapped = _pairs(spark, _BOILERPLATE_TRAIN, _BOILERPLATE_EVAL)
     assert set(uncapped) == {(1, 10), (1, 11), (1, 12)}
     _fallback(monkeypatch, cap=1)
-    capped = _pairs(spark, train, _BOILERPLATE_EVAL, n=3, min_overlap=1)
-    # "common header here" appears in 3 eval docs -> dropped; the rare tail
+    capped = _pairs(spark, _BOILERPLATE_TRAIN, _BOILERPLATE_EVAL)
+    # the two header grams appear in 3 eval docs -> dropped; the rare tail
     # grams of eval 10 survive and still flag the pair
     assert set(capped) == {(1, 10)}
 
@@ -85,19 +100,12 @@ def test_fallback_path_same_result_and_plan_shape(spark, monkeypatch):
     pairs as the broadcast path when no gram reaches the cap, via a shuffle
     HASH join — never a sort-merge over the exploded corpus and never a
     BroadcastNestedLoopJoin on either path."""
-    train = [
-        (1, "s", "x y a b c d z"),
-        (2, "s", "a b q r s t u"),
-        (3, "s", "p q r s t u v"),
-    ]
-    eval_rows = [(10, "s", "a b c d"), (11, "s", "c d z q")]
+    eval_rows = [(10, "s", "a b c d e f"), (11, "s", "c d e f z q r")]
 
     def run(fallback):
         if fallback:
             _fallback(monkeypatch)
-        df = contamination_pairs(
-            _df(spark, train), _df(spark, eval_rows), n=2, min_overlap=1
-        )
+        df = contamination_pairs(_df(spark, _TRAIN), _df(spark, eval_rows))
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
@@ -117,25 +125,17 @@ def test_fallback_cap_is_mandatory(spark, monkeypatch):
     in >FALLBACK_MAX_GRAM_EVAL_DOCS eval docs can never become a hot
     shuffle key. The default cap (1000) keeps a 3-eval-doc gram; a cap of 1
     drops it."""
-    train = [(1, "s", "common header here rare tail gram")]
     _fallback(monkeypatch)
-    default_cap = _pairs(spark, train, _BOILERPLATE_EVAL, n=3, min_overlap=1)
+    default_cap = _pairs(spark, _BOILERPLATE_TRAIN, _BOILERPLATE_EVAL)
     assert set(default_cap) == {(1, 10), (1, 11), (1, 12)}
     _fallback(monkeypatch, cap=1)
-    capped = _pairs(spark, train, _BOILERPLATE_EVAL, n=3, min_overlap=1)
+    capped = _pairs(spark, _BOILERPLATE_TRAIN, _BOILERPLATE_EVAL)
     assert set(capped) == {(1, 10)}
 
 
 def test_decontaminate_removes_flagged_only(spark):
-    train = [
-        (1, "s", "x y a b c d z"),
-        (2, "s", "a b q r s t u"),
-        (3, "s", "p q r s t u v"),
-    ]
-    eval_rows = [(10, "s", "a b c d")]
-    kept = decontaminate(
-        _df(spark, train), _df(spark, eval_rows), n=2
-    )
+    eval_rows = [(10, "s", "a b c d e f")]
+    kept = decontaminate(_df(spark, _TRAIN), _df(spark, eval_rows))
     assert sorted(r["doc_id"] for r in kept.collect()) == [2, 3]
     assert kept.columns == ["doc_id", "source", "text"]
 
@@ -171,10 +171,12 @@ def test_semantic_decontaminate_flags_leaks_and_best_match(spark):
     embs = _emb_fixture(spark)
     ev = embs.filter(F.col("vec_id") % 10 == 0)
     corpus = embs.filter(F.col("vec_id") % 10 != 0)
-    out = semantic_decontaminate(corpus, ev, threshold=0.98).toPandas()
+    out = semantic_decontaminate(corpus, ev).toPandas()
     got = dict(zip(out.vec_id, out.eval_id))
     assert got[5] == 0 and got[15] == 10
-    assert (out.cos >= 0.98).all()
+    cos = dict(zip(out.vec_id, out.cos))
+    assert cos[5] >= 0.98 and cos[15] >= 0.98  # the near-copies
+    assert (out.cos >= 0.30).all()
     # eval ids never appear on the corpus side
     assert not (out.vec_id % 10 == 0).any()
 
@@ -193,7 +195,7 @@ def test_semantic_decontaminate_plan_and_recall(spark):
     embs = _emb_fixture(spark, n=300)
     ev = embs.filter(F.col("vec_id") % 10 == 0)
     corpus = embs.filter(F.col("vec_id") % 10 != 0)
-    out = semantic_decontaminate(corpus, ev, threshold=0.5)
+    out = semantic_decontaminate(corpus, ev)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -204,7 +206,7 @@ def test_semantic_decontaminate_plan_and_recall(spark):
         corpus.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
         .crossJoin(ev.select(F.col("vec_id").alias("eid"), F.col("embedding").alias("ee")))
         .withColumn("cos", cosine(F.col("ce"), F.col("ee")))
-        .filter(F.col("cos") >= 0.5)
+        .filter(F.col("cos") >= 0.30)
         .select("cid")
         .distinct()
     )

@@ -177,8 +177,18 @@ def test_minhash_lsh_recall_and_precision_vs_exact(spark):
 
 def test_simhash_identical_docs_zero_hamming(spark):
     df = _docs(spark, [(1, "s", BASE), (2, "s", BASE)])
-    rows = simhash_pairs(df, max_hamming=8).collect()
+    rows = simhash_pairs(with_simhash(df), max_hamming=8).collect()
     assert [(r.doc_a, r.doc_b, r.hamming) for r in rows] == [(1, 2, 0)]
+
+
+def test_simhash_pairs_accepts_injected_signatures(spark):
+    """Any ``(doc_id, sim)`` table works, e.g. one read back from parquet:
+    docs 1 and 2 share bands 1-3 and sit 3 bits apart; doc 3 (all ones)
+    shares no band with either."""
+    sig = spark.createDataFrame([(1, 0), (2, 7), (3, -1)],
+                                "doc_id long, sim long")
+    rows = simhash_pairs(sig, max_hamming=8).collect()
+    assert [(r.doc_a, r.doc_b, r.hamming) for r in rows] == [(1, 2, 3)]
 
 
 def test_simhash_signature_deterministic(spark):
@@ -194,19 +204,15 @@ def test_simhash_signature_deterministic(spark):
 def test_simhash_near_dups_found_unrelated_excluded(spark):
     rows = _near_dup_corpus()
     df = _docs(spark, rows)
-    got = {(r.doc_a, r.doc_b): r.hamming for r in simhash_pairs(df, max_hamming=10).collect()}
+    got = {
+        (r.doc_a, r.doc_b): r.hamming
+        for r in simhash_pairs(with_simhash(df), max_hamming=10).collect()
+    }
     # every one-word-edit clone pair is near in Hamming space
     found_clones = sum(1 for i in range(10) if (2 * i, 2 * i + 1) in got)
     assert found_clones >= 8
     # hamming values bounded as filtered
     assert all(0 <= h <= 10 for h in got.values())
-
-
-def test_simhash_pairs_accepts_injected_signatures(spark):
-    df = _docs(spark, [(1, "s", BASE), (2, "s", BASE)])
-    sig = with_simhash(df).select("doc_id", "sim")
-    rows = simhash_pairs(df, max_hamming=8, sig=sig).collect()
-    assert [(r.doc_a, r.doc_b, r.hamming) for r in rows] == [(1, 2, 0)]
 
 
 def test_staging_columns_rejected_on_input(spark):

@@ -96,10 +96,12 @@ def test_crash_between_batches_then_resume(spark, sf_dir, trained, tmp_path,
 
 def test_replay_of_committed_batch_is_skipped(spark, sf_dir, trained,
                                               tmp_path):
-    """Deleting the checkpoint (but not the store) forces EVERY batch to
-    replay with fresh ids from 0: all of them collide with the last commit or
-    rewrite identical content — the store must come out unchanged."""
+    """Deleting the checkpoint (but not the store) makes the re-run number
+    its batches from 0 again, below the last commit: the commit-log guard
+    refuses the run, and the store comes out unchanged."""
     import shutil
+
+    from pyspark.errors import StreamingQueryException
 
     embs, base, cells, books = trained
     src = str(tmp_path / "src")
@@ -111,8 +113,13 @@ def test_replay_of_committed_batch_is_skipped(spark, sf_dir, trained,
             cells_rows, cells.schema, books_rows, books.schema)
     im.maintain_index(*args)
     before = _index_rows(im.read_index(spark, out_root))
+    last = _last(out_root)
+    assert last >= 1
     shutil.rmtree(f"{out_root}/ckpt")  # lose the stream's own progress
-    im.maintain_index(*args)
+    with pytest.raises(StreamingQueryException,
+                       match=f"batch 0 arrived after batch {last}"):
+        im.maintain_index(*args)
+    assert _last(out_root) == last
     after = _index_rows(im.read_index(spark, out_root))
     assert after == before
 

@@ -1,13 +1,8 @@
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from java9_gc_log_parser_spark.operators.layout import (
-    range_boundaries,
-    range_cluster,
-    zone_map,
-)
+from java9_gc_log_parser_spark.operators.layout import range_cluster, zone_map
 
 
 def _vals(spark, vals):
@@ -15,33 +10,33 @@ def _vals(spark, vals):
 
 
 def test_uniform_values_split_evenly(spark):
-    df = _vals(spark, range(100))
-    out = range_cluster(df, "v", n_clusters=4)
+    df = _vals(spark, range(800))
+    out = range_cluster(df, "v")
     sizes = {r.cluster: r.n for r in out.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert sizes == {0: 25, 1: 25, 2: 25, 3: 25}
+    assert sizes == {c: 100 for c in range(8)}
 
 
 def test_boundary_tie_goes_to_lower_cluster(spark):
-    # [0,1,2] at n_clusters=2: the 0.5 percentile lands exactly on 1
-    # (integer rank, interpolation exact) and 1 > 1 is false -> cluster 0
-    df = _vals(spark, [0, 1, 2])
-    got = {r.v: r.cluster for r in range_cluster(df, "v", 2).collect()}
-    assert got == {0: 0, 1: 0, 2: 1}
+    # [0..8] in 8 clusters: the i/8 percentile lands exactly on i (integer
+    # rank, interpolation exact) and i > i is false -> cluster i - 1
+    df = _vals(spark, range(9))
+    got = {r.v: r.cluster for r in range_cluster(df, "v").collect()}
+    assert got == {0: 0, **{v: v - 1 for v in range(1, 9)}}
 
 
 def test_cluster_is_pure_function_of_data(spark):
     df = _vals(spark, [5, 1, 9, 3, 7, 2, 8, 4, 6, 0])
-    a = sorted((r.v, r.cluster) for r in range_cluster(df, "v", 4).collect())
+    a = sorted((r.v, r.cluster) for r in range_cluster(df, "v").collect())
     b = sorted(
         (r.v, r.cluster)
-        for r in range_cluster(df.repartition(7), "v", 4).collect()
+        for r in range_cluster(df.repartition(7), "v").collect()
     )
     assert a == b  # unlike repartitionByRange's sampled boundaries
 
 
 def test_zone_map_disjoint_and_complete(spark):
     df = _vals(spark, range(0, 1000, 3))
-    zm = zone_map(range_cluster(df, "v", 8), "v").collect()
+    zm = zone_map(range_cluster(df, "v"), "v").collect()
     assert len(zm) == 8
     assert all(r.disjoint for r in zm)
     assert sum(r.n_rows for r in zm) == df.count()
@@ -50,15 +45,10 @@ def test_zone_map_disjoint_and_complete(spark):
         assert prev.max_v < cur.min_v
 
 
-def test_boundaries_require_two_clusters(spark):
-    with pytest.raises(ValueError):
-        range_boundaries(_vals(spark, [1, 2]), "v", 1)
-
-
 def test_assignment_is_map_only_broadcast(spark):
     # no shuffle on the fact side: the boundary row arrives by broadcast
     df = _vals(spark, range(50))
-    plan = range_cluster(df, "v", 4)._jdf.queryExecution().executedPlan().toString()
+    plan = range_cluster(df, "v")._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
     assert "Exchange hashpartitioning" not in plan
 
@@ -76,12 +66,12 @@ def _dims(spark, pairs):
 def test_morton_interleave_known_values(spark):
     from java9_gc_log_parser_spark.operators.layout import zorder_cluster
 
-    # da=0b11, db=0b01 at bits=2 -> z = 1a 0b 1a 1b = 0b1011 = 11
+    # da=0b11, db=0b01 -> z = 1a 0b 1a 1b = 0b1011 = 11 (the higher bit
+    # pairs are all zero)
     got = {
         (r.da, r.db): r.zval
         for r in zorder_cluster(
-            _dims(spark, [(0, 0), (3, 1), (1, 3), (3, 3)]),
-            "da", "db", bits=2, cluster_bits=1,
+            _dims(spark, [(0, 0), (3, 1), (1, 3), (3, 3)]), "da", "db"
         ).collect()
     }
     assert got == {(0, 0): 0, (3, 1): 11, (1, 3): 7, (3, 3): 15}
@@ -90,21 +80,23 @@ def test_morton_interleave_known_values(spark):
 def test_zorder_cluster_is_rectangle_grid(spark):
     from java9_gc_log_parser_spark.operators.layout import zorder_cluster
 
-    # full 8x8 grid at bits=3, cluster_bits=2 -> each cluster must be one
-    # axis-aligned 4x4 rectangle (the property that makes two-dim zone-map
-    # pruning sound)
-    grid = _dims(spark, [(a, b) for a in range(8) for b in range(8)])
-    rows = zorder_cluster(grid, "da", "db", bits=3, cluster_bits=2).collect()
+    # 8x8 grid of step 128 over [0, 1024)^2, 4 cluster bits -> each
+    # cluster must be one axis-aligned 256x256 rectangle holding 2x2 grid
+    # points (the property that makes two-dim zone-map pruning sound)
+    steps = range(0, 1024, 128)
+    grid = _dims(spark, [(a, b) for a in steps for b in steps])
+    rows = zorder_cluster(grid, "da", "db").collect()
     by_cluster = {}
     for r in rows:
         by_cluster.setdefault(r.cluster, []).append((r.da, r.db))
-    assert len(by_cluster) == 4
+    assert len(by_cluster) == 16
+    quarters = [{q, q + 128} for q in range(0, 1024, 256)]
     for pts in by_cluster.values():
         las = {a for a, _ in pts}
         lbs = {b for _, b in pts}
-        assert len(pts) == 16
-        assert las in ({0, 1, 2, 3}, {4, 5, 6, 7})
-        assert lbs in ({0, 1, 2, 3}, {4, 5, 6, 7})
+        assert len(pts) == 4
+        assert las in quarters
+        assert lbs in quarters
 
 
 def test_zorder_zone_map_prunes_both_dims(spark):
@@ -113,12 +105,11 @@ def test_zorder_zone_map_prunes_both_dims(spark):
         zorder_zone_map,
     )
 
-    grid = _dims(
-        spark, [(a, b) for a in range(16) for b in range(16)]
-    )
-    clustered = zorder_cluster(grid, "da", "db", bits=4, cluster_bits=4)
+    steps = range(0, 1024, 64)
+    grid = _dims(spark, [(a, b) for a in steps for b in steps])
+    clustered = zorder_cluster(grid, "da", "db")
     zm = zorder_zone_map(
-        clustered, "da", "db", probe_a=(0, 3), probe_b=(0, 3)
+        clustered, "da", "db", probe_a=(0, 255), probe_b=(0, 255)
     ).collect()
     assert len(zm) == 16
     # a probe on EITHER single dim touches exactly 4 of 16 clusters
@@ -133,7 +124,7 @@ def test_morton_sql_shared_text_matches_duckdb(spark):
 
     from java9_gc_log_parser_spark.operators.layout import morton_sql
 
-    expr = morton_sql("da", "db", 10)
+    expr = morton_sql("da", "db")
     pairs = [(a * 97 % 1024, a * 31 % 1024) for a in range(257)]
     got_spark = {
         (r.da, r.db): r.z
@@ -151,19 +142,6 @@ def test_morton_sql_shared_text_matches_duckdb(spark):
         ).fetchall()
     }
     assert got_spark == got_duck
-
-
-def test_zorder_validates_params(spark):
-    from java9_gc_log_parser_spark.operators.layout import (
-        morton_sql,
-        zorder_cluster,
-    )
-
-    with pytest.raises(ValueError):
-        morton_sql("a", "b", 0)
-    with pytest.raises(ValueError):
-        zorder_cluster(_dims(spark, [(0, 0)]), "da", "db", bits=4,
-                       cluster_bits=9)
 
 
 def test_compaction_plan_sequential_bins_and_straddle(spark):
@@ -199,18 +177,16 @@ def test_compaction_apply_reduces_files_and_preserves_content(spark, tmp_path):
     from java9_gc_log_parser_spark.operators.layout import compaction_apply
 
     docs = spark.createDataFrame(
-        [(i, f"text {i} " * 5, "s%d" % (i % 2), 40) for i in range(120)],
+        [(i, f"text {i} " * 5, "s%d" % (i % 2), 1000) for i in range(120)],
         ["doc_id", "text", "source", "n_chars"],
     )
     out = {
         r["source"]: r
-        for r in compaction_apply(
-            docs, str(tmp_path / "cmp"), target_bytes=400
-        ).collect()
+        for r in compaction_apply(docs, str(tmp_path / "cmp")).collect()
     }
     for src in ("s0", "s1"):
         a = out[src]
-        assert a["n_files_after"] < a["n_files_before"]
+        assert 1 < a["n_files_after"] < a["n_files_before"]
         assert a["rows_before"] == a["rows_after"] == 60
         # checksum equals the python-computed expectation over raw docs
         exp = sum(

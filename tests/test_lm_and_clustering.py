@@ -4,10 +4,12 @@ kmeans_assign (clustering) — hand-computed known answers plus invariants
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 from pyspark.sql import functions as F
 
+from java9_gc_log_parser_spark.operators import clustering
 from java9_gc_log_parser_spark.operators.clustering import kmeans_assign
 from java9_gc_log_parser_spark.operators.text_analysis import (
     bigram_logprob,
@@ -78,29 +80,33 @@ def test_tfidf_topk_hand_computed(spark):
     docs = _docs(
         spark,
         [
-            (1, "s", "the cat cat"),
-            (2, "s", "the dog"),
+            (1, "s", "the cat cat fish"),
+            (2, "s", "the dog eel fox gnu"),
             (3, "s", "the bird"),
         ],
     )
-    rows = tfidf_topk(docs, k=2).collect()
+    rows = tfidf_topk(docs).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r.doc_id, []).append(r)
     d1 = sorted(by_doc[1], key=lambda r: r.rank)
     assert d1[0].term == "cat" and d1[0].tf == 2
     assert abs(d1[0].score - round(2 * math.log(3.0), 6)) < 1e-9
+    assert d1[1].term == "fish"
     # "the" has idf ln(3/3)=0 -> score 0, still rankable
-    assert d1[1].term == "the" and d1[1].score == 0.0
-    # ranks are 1..k and capped at k
-    assert all(1 <= r.rank <= 2 for r in rows)
+    assert d1[2].term == "the" and d1[2].score == 0.0
+    # ranks are 1..k and capped at k: d2's five terms keep the top 3
+    assert all(1 <= r.rank <= 3 for r in rows)
+    assert [r.term for r in sorted(by_doc[2], key=lambda r: r.rank)] == [
+        "dog", "eel", "fox"
+    ]
 
 
 def test_tfidf_topk_deterministic_tie_break(spark):
     # two terms with identical tf and df tie on score -> term asc order
     docs = _docs(spark, [(1, "s", "b a"), (2, "s", "c d")])
     d1 = sorted(
-        [r for r in tfidf_topk(docs, k=2).collect() if r.doc_id == 1],
+        [r for r in tfidf_topk(docs).collect() if r.doc_id == 1],
         key=lambda r: r.rank,
     )
     assert [r.term for r in d1] == ["a", "b"]
@@ -117,35 +123,41 @@ def _embs(spark, rows):
 
 
 def test_kmeans_two_obvious_clusters(spark):
-    # two tight groups far apart: k=2 must separate them regardless of seeds
-    near_origin = [(i, [0.0 + i * 0.01, 0.0], 0) for i in range(5)]
-    far = [(10 + i, [100.0 + i * 0.01, 100.0], 1) for i in range(5)]
-    out = kmeans_assign(_embs(spark, near_origin + far), k=2, iters=3).collect()
+    # two tight groups far apart, each holding two of the four seeds (the
+    # ids with the smallest md5, dealt alternately): no 4-means cluster may
+    # mix them
+    ids = sorted(range(10), key=lambda i: hashlib.md5(str(i).encode()).digest())
+    near_origin = [(i, [0.0 + i * 0.01, 0.0], 0) for i in ids[0::2]]
+    far = [(i, [100.0 + i * 0.01, 100.0], 1) for i in ids[1::2]]
+    out = kmeans_assign(_embs(spark, near_origin + far)).collect()
     groups = {}
     for r in out:
         groups.setdefault(r.cluster, set()).add(r.vec_id)
     assert len(out) == 10
-    assert sorted(map(sorted, groups.values())) == [
-        [0, 1, 2, 3, 4], [10, 11, 12, 13, 14],
-    ]
+    sides = [{i for i, _, _ in near_origin}, {i for i, _, _ in far}]
+    assert all(any(g <= s for s in sides) for g in groups.values())
 
 
 def test_kmeans_deterministic_across_runs(spark):
     rows = [(i, [float(i % 7), float((i * 3) % 5), 1.0], 0) for i in range(40)]
     e = _embs(spark, rows)
-    a = sorted((r.vec_id, r.cluster, r.d2) for r in kmeans_assign(e, 4, 2).collect())
-    b = sorted((r.vec_id, r.cluster, r.d2) for r in kmeans_assign(e, 4, 2).collect())
+    a = sorted((r.vec_id, r.cluster, r.d2) for r in kmeans_assign(e).collect())
+    b = sorted((r.vec_id, r.cluster, r.d2) for r in kmeans_assign(e).collect())
     assert a == b
 
 
-def test_kmeans_converges_on_line(spark):
-    # 12 colinear points, k=3: one more Lloyd iteration must not change the
-    # assignment (fixed point reached), and the partition must be contiguous
-    # segments of the line (1-D k-means clusters are always intervals)
+def test_kmeans_converges_on_line(spark, monkeypatch):
+    # 12 colinear points, 4-means: one more Lloyd iteration must not change
+    # the assignment (fixed point reached), and the partition must be
+    # contiguous segments of the line (1-D k-means clusters are always
+    # intervals). A fixed point needs more rounds than the 2 kmeans_assign
+    # runs, so the test raises _KMEANS_ITERS.
     rows = [(i, [float(i), 0.0], 0) for i in range(12)]
     e = _embs(spark, rows)
-    a4 = sorted((r.vec_id, r.cluster) for r in kmeans_assign(e, 3, 4).collect())
-    a5 = sorted((r.vec_id, r.cluster) for r in kmeans_assign(e, 3, 5).collect())
+    monkeypatch.setattr(clustering, "_KMEANS_ITERS", 4)
+    a4 = sorted((r.vec_id, r.cluster) for r in kmeans_assign(e).collect())
+    monkeypatch.setattr(clustering, "_KMEANS_ITERS", 5)
+    a5 = sorted((r.vec_id, r.cluster) for r in kmeans_assign(e).collect())
     assert a4 == a5
     seq = [c for _, c in a4]  # cluster ids along the line
     changes = sum(1 for i in range(1, len(seq)) if seq[i] != seq[i - 1])
@@ -167,7 +179,7 @@ def test_semdedup_keep_rule_matches_numpy(spark, sf_dir):
     tau = 0.3
     got = {r["vec_id"]: r for r in semdedup(embs).collect()}
     assigned = {r["vec_id"]: (r["cluster"], r["d2"])
-                for r in kmeans_assign(embs, k=4, iters=2).collect()}
+                for r in kmeans_assign(embs).collect()}
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
             for r in embs.collect()}
     # semdedup's clusters/d2 must equal kmeans_assign's

@@ -110,13 +110,13 @@ def test_ahash_near_dup_identical_payloads_pair_at_zero(spark):
         [
             (1, "image", base),
             (2, "image", base),  # byte-identical -> hamming 0
-            (3, "image", bytes(reversed(base))),
+            (3, "image", bytes(reversed(base))),  # hamming 48 from base
         ],
         "asset_id long, modality string, content binary",
     )
     pairs = {
         (r["asset_a"], r["asset_b"]): r["hamming"]
-        for r in ahash_near_dup_pairs(df, max_hamming=0).collect()
+        for r in ahash_near_dup_pairs(df).collect()
     }
     assert pairs == {(1, 2): 0}
 
@@ -174,9 +174,7 @@ def test_ahash_oracle_byte_exact_on_non_ascii(spark):
     )
     got = {
         (r["asset_a"], r["asset_b"]): r["hamming"]
-        for r in ahash_near_dup_pairs(
-            documents_as_assets(docs), max_hamming=16
-        ).collect()
+        for r in ahash_near_dup_pairs(documents_as_assets(docs)).collect()
     }
 
     con = duckdb.connect()

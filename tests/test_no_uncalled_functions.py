@@ -1,22 +1,24 @@
 """Every top-level function of the package has a caller outside the tests,
-and every defaulted parameter of one has a caller outside the tests that
-sets it.
+and every defaulted parameter of one takes more than one value from the
+callers outside the tests.
 
 A function that only a test calls is a twin or a spec nothing runs: it is
-deleted, or its caller is named here. A defaulted parameter that no caller
-sets is an option with one value in use: it is a constant, or its reason is
-named here. The checks are static (``ast``, no JVM): a function counts as
-called when any non-test module names it — the package itself, the root
-scripts (``__spark_entry__.py``, ``main.py``, ``bench.py``), ``scripts/`` or
-``perfbench/`` — outside its own body; a parameter counts as set when such a
-module calls a function of its name passing it by keyword, by position, or
-through ``*args`` / ``**kwargs``.
+deleted, or its caller is named here. A defaulted parameter that every
+non-test call passes the same value is an option with one value in use: it
+is a constant, or its reason is named here. The checks are static (``ast``,
+no JVM) and read the non-test modules: the package itself, the root scripts
+(``__spark_entry__.py``, ``main.py``, ``bench.py``), ``scripts/`` and
+``perfbench/``. A function counts as called when such a module names it
+outside its own body.
 
-A defaulted parameter that every call passes the same value, the tests'
-calls included, is an option with one value too: ``single_valued_parameters``
-compares the source text of what each call of a function of its name
-passes (the default's, where a call leaves it out) and fails when a call
-sets it and all agree.
+``single_valued_parameters`` reads what each non-test call of a function of
+the parameter's function's name passes: by keyword, by position, or, where
+the call leaves the argument out, the default. Only literals (what
+``ast.literal_eval`` accepts) count as one value: a name or an expression
+varies at run time, so a call passing one gives the parameter a second
+value, and so does a call that forwards ``*args`` / ``**kwargs``. A
+default that every call leaves out is the one value in use whatever it is:
+``unset_parameters`` finds those.
 """
 
 from __future__ import annotations
@@ -36,8 +38,7 @@ ALLOWED = {
     "operators/similarity.py:cosine",
 }
 
-#: defaulted parameters kept without a non-test caller that sets them,
-#: each with its reason
+#: defaulted parameters kept with one value in use, each with its reason
 ALLOWED_PARAMS = {
     # the storage seam: a deployment picks the write mode and the
     # partition overwrite of its table format; tests/test_storage.py
@@ -47,15 +48,8 @@ ALLOWED_PARAMS = {
     # the only way to reach the non-convergence RuntimeError (a test runs
     # one round on a 30-node path)
     "operators/dedupe.py:star_contract:max_iter",
-}
-
-#: defaulted parameters kept though every call passes one value, each with
-#: its reason
-ALLOWED_SINGLE = {
     # perfbench passes it, and the benchmark's sources are fixed
     "streaming/state_stream.py:stream_conv_state:available_now",
-    # a path, which stays a deployment setting
-    "operators/linkage.py:blocking_quality_audit:store_path",
 }
 
 
@@ -104,15 +98,6 @@ def uncalled_functions() -> list[str]:
     return sorted(found)
 
 
-def _set_by(call: ast.Call) -> tuple[int, set[str]] | None:
-    """(positional count, keyword names) a call passes; None when it
-    forwards ``*args`` or ``**kwargs`` (anything may be set)."""
-    if any(isinstance(a, ast.Starred) for a in call.args) \
-            or any(k.arg is None for k in call.keywords):
-        return None
-    return len(call.args), {k.arg for k in call.keywords}
-
-
 def _calls(trees) -> dict[str, list[ast.Call]]:
     """Every call in ``trees``, by the name it calls."""
     calls: dict[str, list] = {}
@@ -138,47 +123,63 @@ def _defaulted(fn):
     return out
 
 
-def unset_parameters() -> list[str]:
-    trees = _trees()
-    calls = {name: [_set_by(c) for c in cs]
-             for name, cs in _calls(trees).items()}
-    found = []
-    for key, fn in _package_functions(trees):
-        for i, name, _ in _defaulted(fn):
-            if any(c is None or name in c[1] or (i is not None and c[0] > i)
-                   for c in calls.get(fn.name, ())):
-                continue
-            if f"{key}:{name}" not in ALLOWED_PARAMS:
-                found.append(f"{key}:{name}")
-    return sorted(found)
+def _forwards(call: ast.Call) -> bool:
+    """Whether a call passes ``*args`` or ``**kwargs`` (anything may be
+    set)."""
+    return any(isinstance(a, ast.Starred) for a in call.args) \
+        or any(k.arg is None for k in call.keywords)
 
 
-def single_valued_parameters() -> list[str]:
+_NOT_LITERAL = object()
+
+
+def _literal(node: ast.expr):
+    """The value of a literal, tagged with its type (``1``, ``1.0`` and
+    ``True`` differ); ``_NOT_LITERAL`` for a name or an expression."""
+    try:
+        value = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return _NOT_LITERAL
+    return type(value), repr(value)
+
+
+def _parameter_uses():
+    """``(key:name, passed, values)`` of each defaulted parameter outside
+    ``ALLOWED_PARAMS``: whether a non-test call passes it, and the literal
+    values those calls give it (the default's where one leaves it out)."""
     trees = _trees()
-    calls = _calls({**trees, **{f: ast.parse(f.read_text(), str(f))
-                                for f in (ROOT / "tests").rglob("*.py")}})
-    found = []
+    calls = _calls(trees)
     for key, fn in _package_functions(trees):
         for i, name, default in _defaulted(fn):
-            values, set_somewhere = set(), False
+            if f"{key}:{name}" in ALLOWED_PARAMS:
+                continue
+            values, passed = set(), False
             for c in calls.get(fn.name, ()):
-                if _set_by(c) is None:
-                    values = None
-                    break
+                if _forwards(c):
+                    passed = True
+                    values.add(_NOT_LITERAL)
+                    continue
                 kw = {k.arg: k.value for k in c.keywords}
                 if name in kw:
                     v = kw[name]
                 elif i is not None and len(c.args) > i:
                     v = c.args[i]
                 else:
-                    values.add(ast.unparse(default))
+                    values.add(_literal(default))
                     continue
-                set_somewhere = True
-                values.add(ast.unparse(v))
-            if set_somewhere and values is not None and len(values) == 1 \
-                    and f"{key}:{name}" not in ALLOWED_SINGLE:
-                found.append(f"{key}:{name}")
-    return sorted(found)
+                passed = True
+                values.add(_literal(v))
+            yield f"{key}:{name}", passed, values
+
+
+def unset_parameters() -> list[str]:
+    return sorted(p for p, passed, _ in _parameter_uses() if not passed)
+
+
+def single_valued_parameters() -> list[str]:
+    return sorted(p for p, passed, values in _parameter_uses()
+                  if passed and len(values) == 1
+                  and _NOT_LITERAL not in values)
 
 
 def test_every_package_function_has_a_non_test_caller():

@@ -343,9 +343,7 @@ def test_curation_e2e_final_plan_scans_only_last_stage(spark, sf_dir):
 def test_pack_sequences_is_single_shuffle_no_join(spark, sf_dir):
     from java9_gc_log_parser_spark.operators.sampling import pack_sequences
 
-    df = pack_sequences(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), 512, 8
-    )
+    df = pack_sequences(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     # one hash-partition shuffle (by stream) + in-partition sort; the
     # running sum must be a running frame, never a join or second shuffle
@@ -357,9 +355,7 @@ def test_pack_sequences_is_single_shuffle_no_join(spark, sf_dir):
 def test_epoch_order_broadcasts_offsets_no_global_sort(spark, sf_dir):
     from java9_gc_log_parser_spark.operators.sampling import epoch_order
 
-    df = epoch_order(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), 1, 8
-    )
+    df = epoch_order(spark.read.parquet(f"{sf_dir}/documents.parquet"), 1)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # corpus shuffles once for the rank window; the shard-size dim is the
     # only other exchange and comes back by broadcast
@@ -397,9 +393,7 @@ def test_bucketed_join_has_zero_exchange(spark, sf_dir):
 def test_cms_estimation_joins_are_broadcast_only(spark, sf_dir):
     from java9_gc_log_parser_spark.operators.sketches import cms_heavy_hitters
 
-    df = cms_heavy_hitters(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), k=20
-    )
+    df = cms_heavy_hitters(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the <=4096-row grid comes back by broadcast; the corpus never
     # shuffles on a sketch key and the top-k is a heap, not a global sort

@@ -26,7 +26,8 @@ from scripts.pin_query_hashes import FIXTURE, query_hash  # noqa: E402
 SF_DIR = "/root/testdata/sf0.01"
 
 # Cheap deterministic queries spread across q01-q50, q51-q100 and q101+,
-# and the vector-search, k-means and MinHash operators.
+# the vector-search, k-means and MinHash operators, and the operators whose
+# single-valued parameters are module constants.
 PINNED_SAMPLE = [
     "q01_parse_classify",
     "q03_pause_events_sink",
@@ -35,22 +36,38 @@ PINNED_SAMPLE = [
     "q13_dedup_exact",
     "q19_ann_bruteforce",
     "q20_ann_lsh",
+    "q21_embedding_near_dup",
     "q22_minhash_lsh",
+    "q23_simhash_pairs",
     "q28_conv_state_json",
     "q30_hash_split",
+    "q32_contamination",
     "q34_ann_ivf",
     "q42_kmeans",
+    "q43_tfidf_topk",
+    "q44_semdedup",
+    "q46_zipf_topk",
     "q52_importance_resample",
     "q53_incremental_dedup",
+    "q54_semantic_decontam",
     "q56_pack_sequences",
+    "q57_epoch_order",
     "q60_cms_heavy_hitters",
     "q62_asof_join",
+    "q77_range_cluster_layout",
     "q79_pricing_summary",
+    "q84_weighted_sample",
+    "q86_zorder_layout",
+    "q87_inverted_index",
     "q100_grouped_hll_distinct",
     "q104_edit_distance_join",
     "q110_benford_audit",
+    "q119_ann_recall",
+    "q120_near_dup_recall",
+    "q127_ahash_near_dup",
     "q128_token_entropy",
     "q130_ann_pq",
+    "q131_compaction_apply",
     "q133_hll_set_ops",
     "q135_ann_ivf_pq",
     "q136_rendezvous_reshard",

@@ -165,17 +165,20 @@ def test_mixture_sample_matches_python_ground_truth(spark):
     assert 0 < len(expected) < 300  # non-degenerate: a real subsample
 
 
-def _ir_docs(spark):
+def _ir_docs(spark, n_off=30):
     """Small corpus with a clear target signature: 'tgt' docs repeat the
-    phrase 'alpha beta', off-domain docs use disjoint vocabulary, and two
-    raw docs mimic the target phrasing (should receive the top weights)."""
+    phrase 'alpha beta', ``n_off`` off-domain docs use disjoint vocabulary,
+    and two raw docs mimic the target phrasing (should receive the top
+    weights). At the default size (42 docs) the sample of ``_IR_K`` = 50
+    returns every doc."""
     rows = []
     for i in range(10):
         rows.append((i, "alpha beta alpha beta alpha beta gamma", "tgt"))
-    for i in range(10, 40):
+    for i in range(10, 10 + n_off):
         rows.append((i, f"delta epsilon zeta eta theta iota w{i}", "raw"))
-    rows.append((40, "alpha beta alpha beta gamma alpha beta", "raw"))
-    rows.append((41, "alpha beta gamma alpha beta alpha", "raw"))
+    m = 10 + n_off
+    rows.append((m, "alpha beta alpha beta gamma alpha beta", "raw"))
+    rows.append((m + 1, "alpha beta gamma alpha beta alpha", "raw"))
     return spark.createDataFrame(
         rows, "doc_id long, text string, source string"
     )
@@ -186,18 +189,18 @@ def test_importance_resample_deterministic_and_target_seeking(spark):
         importance_resample,
     )
 
-    docs = _ir_docs(spark)
-    out1 = importance_resample(docs, "tgt", k=10).toPandas()
-    out2 = importance_resample(
-        docs.repartition(7), "tgt", k=10
-    ).toPandas()
+    # 112 docs, so the sample of 50 is a real selection
+    docs = _ir_docs(spark, n_off=100)
+    out1 = importance_resample(docs, "tgt").toPandas()
+    out2 = importance_resample(docs.repartition(7), "tgt").toPandas()
     # deterministic under repartitioning
     assert sorted(out1.doc_id) == sorted(out2.doc_id)
-    assert len(out1) == 10
+    assert len(out1) == 50
     # the importance WEIGHTS are target-seeking (selection itself is
     # weight-biased but Gumbel-noisy, so assert on logw, not membership):
     # the two target-mimicking raw docs out-weigh every off-domain raw doc
-    full = importance_resample(docs, "tgt", k=42).toPandas()
+    full = importance_resample(_ir_docs(spark), "tgt").toPandas()
+    assert len(full) == 42
     lw = dict(zip(full.doc_id, full.logw))
     off_domain_max = max(lw[d] for d in range(10, 40))
     assert lw[40] > off_domain_max
@@ -214,7 +217,7 @@ def test_importance_resample_python_ground_truth_key(spark):
     )
 
     docs = _ir_docs(spark)
-    out = importance_resample(docs, "tgt", k=42).toPandas()
+    out = importance_resample(docs, "tgt").toPandas()
     for _, r in out.iterrows():
         h = hashlib.md5(f"{int(r.doc_id)}:dsir".encode()).hexdigest()[:6]
         u = (int(h, 16) + 0.5) / 16777216.0
@@ -238,9 +241,14 @@ def test_importance_resample_rejects_reserved_columns(spark):
 
 # ---------------------------------------------------------------- packing
 
+def _ntok(i):
+    # 150..900 tokens: every stream runs past several 512-token windows
+    return (i % 6 + 1) * 150
+
+
 def _text_docs(spark):
-    # doc 7 is empty (must be dropped by packing), lengths vary 1..6 tokens
-    rows = [(i, " ".join(f"w{j}" for j in range(i % 6 + 1))) for i in range(40)]
+    # doc 7777 is empty (must be dropped by packing)
+    rows = [(i, " ".join(f"w{j}" for j in range(_ntok(i)))) for i in range(40)]
     rows.append((7777, "   "))
     return spark.createDataFrame(rows, "doc_id long, text string")
 
@@ -248,7 +256,7 @@ def _text_docs(spark):
 def test_pack_sequences_layout_invariants(spark):
     from java9_gc_log_parser_spark.operators.sampling import pack_sequences
 
-    out = pack_sequences(_text_docs(spark), context_len=4, n_streams=4)
+    out = pack_sequences(_text_docs(spark))
     rows = out.collect()
     assert all(r["doc_id"] != 7777 for r in rows)  # empty doc dropped
     by_stream = {}
@@ -263,10 +271,11 @@ def test_pack_sequences_layout_invariants(spark):
             assert r["start_off"] == pos
             pos += r["n_tokens"]
             # chunk arithmetic: first/last chunk from offsets
-            first = r["start_off"] // 4
-            last = (r["start_off"] + r["n_tokens"] - 1) // 4
+            first = r["start_off"] // 512
+            last = (r["start_off"] + r["n_tokens"] - 1) // 512
             assert r["first_chunk"] == first
             assert r["n_chunks"] == last - first + 1
+    assert any(r["n_chunks"] > 1 for r in rows)  # docs span windows
 
 
 def test_pack_sequences_deterministic_and_python_reproducible(spark):
@@ -275,21 +284,21 @@ def test_pack_sequences_deterministic_and_python_reproducible(spark):
     from java9_gc_log_parser_spark.operators.sampling import pack_sequences
 
     docs = _text_docs(spark)
-    a = sorted(map(tuple, pack_sequences(docs, 4, 4).collect()))
-    b = sorted(map(tuple, pack_sequences(docs, 4, 4).collect()))
+    a = sorted(map(tuple, pack_sequences(docs).collect()))
+    b = sorted(map(tuple, pack_sequences(docs).collect()))
     assert a == b
     # the layout is reproducible OUTSIDE Spark from (id, salt) alone
     py = []
     for i in range(40):
-        nt = i % 6 + 1
+        nt = _ntok(i)
         h = hashlib.md5(f"{i}:pack:v1".encode()).hexdigest()
-        py.append((int(h[:4], 16) % 4, h, i, nt))
+        py.append((int(h[:4], 16) % 8, h, i, nt))
     order = {}
     for stream, h, i, nt in sorted(py):
         start = order.get(stream, 0)
         order[stream] = start + nt
-        expect = (i, stream, nt, start, start // 4,
-                  (start + nt - 1) // 4 - start // 4 + 1)
+        expect = (i, stream, nt, start, start // 512,
+                  (start + nt - 1) // 512 - start // 512 + 1)
         assert tuple(next(r for r in a if r[0] == i)) == expect
 
 
@@ -299,19 +308,19 @@ def test_epoch_order_is_a_permutation_and_epoch_sensitive(spark):
     from java9_gc_log_parser_spark.operators.sampling import epoch_order
 
     docs = _text_docs(spark)
-    e1 = epoch_order(docs, epoch=1, n_shards=4).collect()
+    e1 = epoch_order(docs, epoch=1).collect()
     n = len(e1)
     assert sorted(r["global_pos"] for r in e1) == list(range(n))
     # global_pos is consistent with (shard, pos_in_shard) lexicographic order
     lex = sorted(e1, key=lambda r: (r["shard"], r["pos_in_shard"]))
     assert [r["global_pos"] for r in lex] == list(range(n))
     # a different epoch re-permutes (astronomically unlikely to be equal)
-    e2 = epoch_order(docs, epoch=2, n_shards=4).collect()
+    e2 = epoch_order(docs, epoch=2).collect()
     p1 = {r["doc_id"]: r["global_pos"] for r in e1}
     p2 = {r["doc_id"]: r["global_pos"] for r in e2}
     assert p1 != p2
     # same epoch is stable
-    e1b = epoch_order(docs, epoch=1, n_shards=4).collect()
+    e1b = epoch_order(docs, epoch=1).collect()
     assert sorted(map(tuple, e1)) == sorted(map(tuple, e1b))
 
 

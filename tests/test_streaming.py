@@ -12,6 +12,8 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from pyspark.errors import StreamingQueryException
+
 from java9_gc_log_parser_spark.functions.parse import parse_lines
 from java9_gc_log_parser_spark.operators.assemble import (
     assemble_groups,
@@ -261,8 +263,8 @@ def test_stream_conv_state_survives_triggers_that_close_no_group(spark,
 def test_state_replay_idempotent_and_pointer_atomic(spark, stream_source, tmp_path):
     """A replayed batch_id (at-least-once foreachBatch recovery) must not
     double-count. Deleting the stream's OWN checkpoint while keeping the
-    state makes the re-run re-fire every batch id from 0 — the worst-case
-    replay — and every one must be skipped by the commit-log guard."""
+    state makes the re-run re-fire batch ids from 0, below the last commit:
+    the commit-log guard refuses the run before it writes anything."""
     import os
     import shutil
 
@@ -289,7 +291,9 @@ def test_state_replay_idempotent_and_pointer_atomic(spark, stream_source, tmp_pa
     shutil.rmtree(os.path.join(out_root, "ckpt"))
     q2 = stream_conv_state(spark, stream_source, INPUT_SCHEMA, out_root,
                            max_files_per_trigger=16)
-    q2.awaitTermination(300)
+    with pytest.raises(StreamingQueryException,
+                       match=f"batch 0 arrived after batch {last}"):
+        q2.awaitTermination(300)
 
     assert last_batch(log) == last
     assert sorted(map(tuple, final_state(spark, out_root).collect())) == before

@@ -211,17 +211,20 @@ def test_corpus_filter_matches_individual_metrics(spark, sf_dir):
 def test_zipf_topk_known_answer(spark):
     from java9_gc_log_parser_spark.operators.text_analysis import zipf_topk
 
+    singles = " ".join(f"t{i:02d}" for i in range(60))
     docs = spark.createDataFrame(
-        [(1, "a a a b b c"), (2, "a b x"), (3, "")],
+        [(1, "a a a b b c"), (2, "a b x"), (3, ""), (4, singles)],
         "doc_id long, text string",
     )
-    rows = zipf_topk(docs, k=3).orderBy("rank").collect()
-    # counts: a=4, b=3, c=1, x=1 (total 9); top-3 ties break term-asc
-    assert [(r["rank"], r["term"], r["cnt"]) for r in rows] == [
-        (1, "a", 4), (2, "b", 3), (3, "c", 1)
+    rows = zipf_topk(docs).orderBy("rank").collect()
+    # counts: a=4, b=3, then 62 terms at 1 (c, t00..t59, x; total 69); the
+    # head of 50 cuts the count-1 tie term-asc, after t46
+    assert [(r["rank"], r["term"], r["cnt"]) for r in rows[:4]] == [
+        (1, "a", 4), (2, "b", 3), (3, "c", 1), (4, "t00", 1)
     ]
-    assert rows[0]["share"] == round(4 / 9, 6)
-    assert rows[2]["cum_share"] == round(8 / 9, 6)
+    assert len(rows) == 50 and rows[-1]["term"] == "t46"
+    assert rows[0]["share"] == round(4 / 69, 6)
+    assert rows[2]["cum_share"] == round(8 / 69, 6)
 
 
 def test_encoding_audit_known(spark):
@@ -269,8 +272,8 @@ def test_cms_never_underestimates_and_grid_is_bounded(spark):
         [(i, ("hot " * 50) + f"cold{i} rare{i % 7}") for i in range(200)],
         "doc_id long, text string",
     )
-    out = cms_heavy_hitters(docs, k=10).collect()
-    assert len(out) == 10
+    out = cms_heavy_hitters(docs).collect()
+    assert len(out) == 20
     assert out[0]["term"] == "hot" and out[0]["cnt"] == 200 * 50
     # CMS one-sided error: estimate >= exact count, always
     assert all(r["overcount"] >= 0 for r in out)

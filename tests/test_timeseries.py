@@ -156,31 +156,31 @@ def _py_weighted(ids_weights, k, salt="wps:v1"):
 
 
 def test_weighted_sample_matches_python_ground_truth(spark):
-    docs = [(i, " ".join(["w"] * (1 + i % 7))) for i in range(300)]
+    docs = [(i, " ".join(["w"] * (1 + i % 7))) for i in range(1200)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = sorted(
         (r["doc_id"], r["weight"])
-        for r in weighted_priority_sample(df, k=50).collect()
+        for r in weighted_priority_sample(df).collect()
     )
-    exp = sorted(_py_weighted([(i, 1 + i % 7) for i in range(300)], 50))
+    exp = sorted(_py_weighted([(i, 1 + i % 7) for i in range(1200)], 200))
     assert got == exp
 
 
 def test_weighted_sample_biases_toward_heavy_docs(spark):
-    docs = [(i, "w") for i in range(200)]
-    docs += [(200 + i, " ".join(["w"] * 50)) for i in range(200)]
+    docs = [(i, "w") for i in range(400)]
+    docs += [(400 + i, " ".join(["w"] * 50)) for i in range(400)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = weighted_priority_sample(df, k=100).collect()
-    assert len(out) == 100
+    out = weighted_priority_sample(df).collect()
+    assert len(out) == 200
     heavy = sum(1 for r in out if r["weight"] == 50)
-    assert heavy > 70  # 50x weight should dominate the sample
+    assert heavy > 140  # 50x weight should dominate the sample
 
 
 def test_weighted_sample_plans_take_ordered_no_global_sort(spark):
     df = spark.createDataFrame(
-        [(i, "a b c") for i in range(100)], "doc_id long, text string"
+        [(i, "a b c") for i in range(1000)], "doc_id long, text string"
     )
-    plan = _formatted(weighted_priority_sample(df, k=10))
+    plan = _formatted(weighted_priority_sample(df))
     assert "TakeOrderedAndProject" in plan
     assert "+- Exchange" not in plan
 
