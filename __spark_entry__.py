@@ -616,8 +616,9 @@ def q31_hash_sample(spark, sf_dir):
 
 def q32_contamination(spark, sf_dir):
     """Benchmark decontamination: train docs (hash_split 'train') sharing
-    >=2 distinct word 4-grams with any eval doc (split 'test'); the eval
-    gram table is broadcast so the corpus scan is map-side."""
+    >=2 distinct word 4-grams with any eval doc (split 'test'), or
+    token-identical to it when shorter than 4 tokens; the eval gram table
+    is broadcast so the corpus scan is map-side."""
     from java9_gc_log_parser_spark.operators.contamination import (
         contamination_pairs,
     )
@@ -1631,6 +1632,7 @@ def q86_zorder_layout(spark, sf_dir):
     the property no single-dim layout can give.
     """
     from java9_gc_log_parser_spark.operators.layout import (
+        _ZORDER_BITS,
         zorder_cluster,
         zorder_zone_map,
     )
@@ -1651,8 +1653,12 @@ def q86_zorder_layout(spark, sf_dir):
     )
     dims = ev.crossJoin(F.broadcast(lo)).select(
         "event_id",
-        F.expr("(ts_us - t_lo) * 1024 DIV (t_hi - t_lo + 1)").alias("da"),
-        F.expr("(user_id - u_lo) * 1024 DIV (u_hi - u_lo + 1)").alias("db"),
+        F.expr(
+            f"(ts_us - t_lo) * {2**_ZORDER_BITS} DIV (t_hi - t_lo + 1)"
+        ).alias("da"),
+        F.expr(
+            f"(user_id - u_lo) * {2**_ZORDER_BITS} DIV (u_hi - u_lo + 1)"
+        ).alias("db"),
     )
     clustered = (
         zorder_cluster(dims, "da", "db")
@@ -3435,7 +3441,8 @@ SELECT doc_id FROM documents
 WHERE substring(md5(CAST(doc_id AS VARCHAR) || ':v1'), 1, 4) < '3333'
 """,
         # same tokenizer/shingler as the dedup family (ltoks; 4-grams with
-        # the short-doc full-join fallback), split recomputed from md5
+        # the short-doc full-join fallback, which flags on its own when
+        # shared), split recomputed from md5
         "q32_contamination": _DTOK + f"""
 , sp AS (
   SELECT doc_id, ltoks, {_split_case_sql()} AS split FROM dtok
@@ -3455,6 +3462,7 @@ FROM grams t JOIN grams e USING (gram)
 WHERE t.split = 'train' AND e.split = 'test'
 GROUP BY 1, 2
 HAVING COUNT(*) >= 2
+    OR bool_or(gram <> '' AND len(string_split(gram, ' ')) < 4)
 """,
         "q33_token_budget": _DTOK + f"""
 SELECT {_split_case_sql()} AS split, source,
@@ -4013,6 +4021,7 @@ flagged AS (
     SELECT t.doc_id AS train_id, e.doc_id AS eval_id
     FROM tg t JOIN eg e USING (gram)
     GROUP BY 1, 2 HAVING COUNT(*) >= 2
+      OR bool_or(gram <> '' AND len(string_split(gram, ' ')) < 4)
   )
 ),
 d4 AS (
@@ -4867,9 +4876,15 @@ LEFT JOIN cm ON cm.source_a = pe.source_a AND cm.source_b = pe.source_b
 # q86: the oracle replays the exact-integer dim scaling, evaluates the SAME
 # generated Morton SQL expression Spark ran (shared string — bit-identical
 # by construction), re-derives the top-4-bit cluster ids, and recomputes the
-# two-dim zone map + probe-intersection flags from scratch.
-from java9_gc_log_parser_spark.operators.layout import morton_sql as _msql
+# two-dim zone map + probe-intersection flags from scratch. The dim scale and
+# the cluster shift come from layout's Z-order constants, as the query's do.
+from java9_gc_log_parser_spark.operators.layout import (  # noqa: E402
+    _ZORDER_BITS,
+    _ZORDER_CLUSTER_BITS,
+    morton_sql as _msql,
+)
 
+_ZORDER_SHIFT = 2 * _ZORDER_BITS - _ZORDER_CLUSTER_BITS
 _ORACLES["q86_zorder_layout"] = f"""
 WITH ev AS (
   SELECT event_id, CAST(user_id AS BIGINT) AS user_id,
@@ -4881,12 +4896,12 @@ WITH ev AS (
   FROM ev
 ), dims AS (
   SELECT event_id,
-         (ts_us - t_lo) * 1024 // (t_hi - t_lo + 1) AS da,
-         (user_id - u_lo) * 1024 // (u_hi - u_lo + 1) AS db
+         (ts_us - t_lo) * {2**_ZORDER_BITS} // (t_hi - t_lo + 1) AS da,
+         (user_id - u_lo) * {2**_ZORDER_BITS} // (u_hi - u_lo + 1) AS db
   FROM ev CROSS JOIN mm
 ), z AS (
   SELECT da, db,
-         CAST({_msql("da", "db")} AS BIGINT) >> 16 AS cluster
+         CAST({_msql("da", "db")} AS BIGINT) >> {_ZORDER_SHIFT} AS cluster
   FROM dims
 )
 SELECT CAST(cluster AS INT) AS cluster,
@@ -6509,9 +6524,23 @@ FROM events JOIN dim USING (user_id)
 GROUP BY 1
 """
 
+# q113 and q115 melt the same six event columns
+_STATS_LEGS = "\nUNION ALL\n".join(
+    [
+        "SELECT 'event_id' AS col, CAST(event_id AS VARCHAR) AS key"
+        " FROM events",
+        "SELECT 'ts', CAST(epoch_us(ts) AS VARCHAR) FROM events",
+        "SELECT 'user_id', CAST(user_id AS VARCHAR) FROM events",
+        "SELECT 'event_type', event_type FROM events",
+        "SELECT 'value', CAST(CAST(FLOOR(value * 100) AS BIGINT)"
+        " AS VARCHAR) FROM events",
+        "SELECT 'props', props FROM events",
+    ]
+)
+
 _ORACLES["q115_incremental_stats"] = f"""
 WITH melted AS (
-  {{stats_legs}}
+  {_STATS_LEGS}
 ),
 basic AS (
   SELECT col, CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -6549,7 +6578,7 @@ e AS (
 SELECT basic.col AS column, n_rows, n_null, min_key, max_key,
        CAST(FLOOR(ROUND(est, 6)) AS BIGINT) AS ndv_hll
 FROM basic JOIN e ON basic.col = e.col
-""".replace("{stats_legs}", "PLACEHOLDER_STATS_LEGS")
+"""
 
 _ORACLES["q114_sliding_hll_distinct"] = f"""
 WITH pairs AS (
@@ -6607,19 +6636,6 @@ SELECT make_timestamp(t * 86400000000) AS bucket_ts,
 FROM e
 """
 
-_STATS_LEGS = "\nUNION ALL\n".join(
-    [
-        "SELECT 'event_id' AS col, CAST(event_id AS VARCHAR) AS key"
-        " FROM events",
-        "SELECT 'ts', CAST(epoch_us(ts) AS VARCHAR) FROM events",
-        "SELECT 'user_id', CAST(user_id AS VARCHAR) FROM events",
-        "SELECT 'event_type', event_type FROM events",
-        "SELECT 'value', CAST(CAST(FLOOR(value * 100) AS BIGINT)"
-        " AS VARCHAR) FROM events",
-        "SELECT 'props', props FROM events",
-    ]
-)
-
 _ORACLES["q113_table_stats"] = f"""
 WITH melted AS (
   {_STATS_LEGS}
@@ -6668,11 +6684,6 @@ SELECT basic.col AS column, n_rows, n_null, min_key, max_key,
          AS rel_error
 FROM basic JOIN e ON basic.col = e.col
 """
-
-# q115 shares the melted-legs fragment with q113 (defined just above)
-_ORACLES["q115_incremental_stats"] = _ORACLES[
-    "q115_incremental_stats"
-].replace("PLACEHOLDER_STATS_LEGS", _STATS_LEGS)
 
 _ORACLES["q112_exact_quantile_select"] = """
 WITH v AS (

@@ -10,6 +10,11 @@ Spark-first shape (no UDFs, no all-pairs):
   * both sides are shingled with the SAME tokenizer/shingler as the dedup
     family (``dedupe.with_shingles`` — distinct word n-grams, short-doc
     fallback), so dedup and decontamination agree on token semantics;
+  * a doc shorter than the n-gram collapses to ONE shingle, its full token
+    string, so it can never reach the overlap minimum: a pair that shares
+    a non-empty gram of fewer than n tokens is flagged as well. Only two
+    token-identical short docs share such a gram (every other gram has
+    exactly n tokens; blank docs share the empty one);
   * the eval side is exploded to (gram, eval_id) and **broadcast**: eval
     benchmarks are a few MB against a 100 TB corpus, so the join is map-side
     — the train corpus is scanned once, shuffle-free until the final
@@ -45,7 +50,7 @@ BROADCAST_MAX_EVAL_GRAMS = 5_000_000
 FALLBACK_MAX_GRAM_EVAL_DOCS = 1000
 
 #: a train doc is contaminated when it shares at least _MIN_OVERLAP distinct
-#: word _NGRAM-grams with an eval doc
+#: word _NGRAM-grams with an eval doc, or both are the same short doc
 _NGRAM = 4
 _MIN_OVERLAP = 2
 
@@ -55,7 +60,8 @@ _SEMANTIC_THRESHOLD = 0.30
 
 def contamination_pairs(train: DataFrame, eval_df: DataFrame) -> DataFrame:
     """(train_id, eval_id, n_shared): train docs sharing ``>= _MIN_OVERLAP``
-    distinct word ``_NGRAM``-grams with an eval doc.
+    distinct word ``_NGRAM``-grams with an eval doc, or token-identical to
+    it when shorter than ``_NGRAM`` tokens (then ``n_shared`` is 1).
 
     ``filter`` on the result (or an anti-join back to ``train``) is the
     decontaminated corpus.
@@ -99,10 +105,17 @@ def contamination_pairs(train: DataFrame, eval_df: DataFrame) -> DataFrame:
         if broadcast_eval
         else tr.join(ev.hint("shuffle_hash"), "gram")
     )
+    short = (F.col("gram") != "") & (
+        F.size(F.split(F.col("gram"), " ")) < _NGRAM
+    )
     return (
         joined.groupBy("train_id", "eval_id")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= _MIN_OVERLAP)
+        .agg(
+            F.count(F.lit(1)).alias("n_shared"),
+            F.bool_or(short).alias("_short"),
+        )
+        .filter((F.col("n_shared") >= _MIN_OVERLAP) | F.col("_short"))
+        .drop("_short")
     )
 
 

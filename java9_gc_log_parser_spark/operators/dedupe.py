@@ -38,10 +38,27 @@ from pyspark.sql import functions as F
 
 from itertools import count
 
-from .text_analysis import tokens_col
+from .text_analysis import lower_tokens, word_ngrams
 
 _LONG_MAX = (1 << 63) - 1
 _obs_ids = count()
+
+
+def _barrier(df: DataFrame, name: str) -> DataFrame:
+    """``df`` behind an optimizer barrier (same pattern as
+    functions/parse.py): a no-op row-count observation.
+
+    PushDownPredicates does not cross CollectMetrics, so a filter inferred
+    above (a downstream ``explode`` makes InferFiltersFromGenerate add
+    ``size(col)>0 AND isnotnull(col)``) stays above the bound column
+    instead of re-inlining its whole tokenize+shingle expression into the
+    scan filter (~3 evaluations per row), and CollapseProject cannot
+    re-inline a bound higher-order-function column into each of its
+    consumers. Column pruning still reaches the scan.
+    """
+    return df.observe(
+        f"{name}_obs_{next(_obs_ids)}", F.count(F.lit(1)).alias("rows")
+    )
 
 
 def assert_no_staging(df: DataFrame, *names: str) -> None:
@@ -61,6 +78,14 @@ _MH_K, _MH_BANDS, _MH_SHINGLE_N = 32, 8, 3
 _MAX_BUCKET = 1000
 
 
+def _grams_or_text(toks: Column, n: int) -> Column:
+    """Word n-grams of ``toks``; fewer than n tokens -> the full token
+    string as the one gram (so short docs still dedupe)."""
+    return F.when(F.size(toks) >= n, word_ngrams(toks, n)).otherwise(
+        F.array(F.array_join(toks, " "))
+    )
+
+
 def with_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """Add a distinct word-n-gram shingle column ``sh`` (tokens bound first
     so the tokenizer runs once per row, not once per shingle position).
@@ -69,29 +94,11 @@ def with_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     docs still dedupe).
     """
     assert_no_staging(docs, "_toks", "sh")
-    toks = F.col("_toks")
-    k = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), k - n + 1),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    # Optimizer barrier (same pattern as functions/parse.py): a downstream
-    # explode(sh) makes InferFiltersFromGenerate add `size(sh)>0 AND
-    # isnotnull(sh)`, and predicate pushdown then re-inlines the whole
-    # tokenize+shingle expression into the scan filter — ~3 evaluations per
-    # row (filter twice + project once). PushDownPredicates does not cross
-    # CollectMetrics, so the inferred filter stays above the bound column
-    # and shingling runs exactly once; column pruning still reaches the scan.
-    return (
-        docs.withColumn("_toks", tokens_col(F.lower(F.col("text"))))
-        .withColumn(
-            "sh",
-            F.array_distinct(
-                F.when(k >= n, grams).otherwise(F.array(F.array_join(toks, " ")))
-            ),
-        )
-        .drop("_toks")
-        .observe(f"shingle_obs_{next(_obs_ids)}", F.count(F.lit(1)).alias("rows"))
+    return _barrier(
+        docs.withColumn("_toks", lower_tokens())
+        .withColumn("sh", F.array_distinct(_grams_or_text(F.col("_toks"), n)))
+        .drop("_toks"),
+        "shingle",
     )
 
 
@@ -364,7 +371,7 @@ def with_simhash(docs: DataFrame) -> DataFrame:
     per row)."""
     assert_no_staging(docs, "_toks", "_hashes", "sim")
     return (
-        docs.withColumn("_toks", F.array_distinct(tokens_col(F.lower(F.col("text")))))
+        docs.withColumn("_toks", F.array_distinct(lower_tokens()))
         .withColumn("_hashes", F.transform(F.col("_toks"), lambda t: F.xxhash64(t)))
         .withColumn("sim", simhash64(F.col("_hashes")))
         .drop("_toks", "_hashes")
@@ -731,28 +738,12 @@ def dup_ngram_gate(docs: DataFrame) -> DataFrame:
     """
     n, max_dup_frac = 3, 0.3
     assert_no_staging(docs, "_toks", "_dg_sh", "_dg_g")
-    toks = F.col("_toks")
-    k = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), k - n + 1),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    sh = (
-        docs.withColumn("_toks", tokens_col(F.lower(F.col("text"))))
-        .withColumn(
-            "_dg_sh",
-            F.when(k >= n, grams).otherwise(
-                F.array(F.array_join(toks, " "))
-            ),
-        )
-        .drop("_toks")
-        # same optimizer barrier as with_shingles: keep the tokenize+
-        # shingle chain from being re-inlined below the explode
-        .observe(
-            f"dupgate_obs_{next(_obs_ids)}", F.count(F.lit(1)).alias("rows")
-        )
-        .select("doc_id", F.explode("_dg_sh").alias("_dg_g"))
-    )
+    sh = _barrier(
+        docs.withColumn("_toks", lower_tokens())
+        .withColumn("_dg_sh", _grams_or_text(F.col("_toks"), n))
+        .drop("_toks"),
+        "dupgate",
+    ).select("doc_id", F.explode("_dg_sh").alias("_dg_g"))
     per_doc_gram = sh.groupBy("doc_id", "_dg_g").agg(
         F.count(F.lit(1)).alias("_dg_m")
     )
@@ -823,7 +814,7 @@ def dup_span_scrub(docs: DataFrame) -> DataFrame:
     positional n-gram occurrences instead of a suffix array, so overlapping
     duplicated grams merge naturally into maximal scrubbed spans. Matching
     and reassembly are over lowercased whitespace tokens (the corpus-wide
-    dedup token contract, tokens_col).
+    dedup token contract, lower_tokens).
 
     Output, one row per input doc:
     ``(doc_id, n_tokens, n_removed, clean_text)`` — clean_text is the
@@ -843,21 +834,11 @@ def dup_span_scrub(docs: DataFrame) -> DataFrame:
     n, min_docs = 5, 2
     assert_no_staging(docs, "_lt", "_ga")
     k = F.size("_lt")
-    grams_arr = F.when(
-        k >= n,
-        F.transform(
-            F.sequence(F.lit(1), k - n + 1),
-            lambda i: F.array_join(F.slice(F.col("_lt"), i, n), " "),
+    base = _barrier(
+        docs.withColumn("_lt", lower_tokens()).withColumn(
+            "_ga", word_ngrams(F.col("_lt"), n)
         ),
-    ).otherwise(F.array().cast("array<string>"))
-    base = (
-        docs.withColumn("_lt", tokens_col(F.lower(F.col("text"))))
-        .withColumn("_ga", grams_arr)
-        # same CollectMetrics optimizer barrier as with_shingles: keep the
-        # tokenize+gram chain from re-inlining below the explodes
-        .observe(
-            f"spanscrub_obs_{next(_obs_ids)}", F.count(F.lit(1)).alias("rows")
-        )
+        "spanscrub",
     ).persist()
     # (doc, gpos, gram): gpos is 1-based (slice semantics), gram covers
     # token positions [gpos, gpos + n - 1]
@@ -1036,7 +1017,7 @@ def corpus_overlap_minhash(docs: DataFrame) -> DataFrame:
       it is free and it turns the estimator's accuracy into an asserted,
       hash-checked fact. At 100 TB run the sketch leg alone.
 
-    The ``.observe`` barrier after the per-doc signature pins the
+    The :func:`_barrier` after the per-doc signature pins the
     64-reference ``_sig`` column (q41 lesson: CollapseProject re-inlines a
     once-projected HOF column into every consumer, re-deriving the whole
     shingle fold per slot reference).
@@ -1056,16 +1037,19 @@ def corpus_overlap_minhash(docs: DataFrame) -> DataFrame:
         )
 
     neutral = F.array(*[F.lit("g") for _ in range(k)])  # > any md5 hex char
-    doc_sig = sh.select(
-        "source",
-        F.aggregate(
-            "sh",
-            neutral,
-            lambda acc, s: F.zip_with(
-                acc, slot_hashes(s), lambda a, h: F.least(a, h)
-            ),
-        ).alias("_sig"),
-    ).observe(f"corpus_sig_obs_{next(_obs_ids)}", F.count(F.lit(1)).alias("rows"))
+    doc_sig = _barrier(
+        sh.select(
+            "source",
+            F.aggregate(
+                "sh",
+                neutral,
+                lambda acc, s: F.zip_with(
+                    acc, slot_hashes(s), lambda a, h: F.least(a, h)
+                ),
+            ).alias("_sig"),
+        ),
+        "corpus_sig",
+    )
     src_sig = doc_sig.groupBy("source").agg(
         *[F.min(F.col("_sig")[j]).alias(f"_m{j}") for j in range(k)]
     )

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text_analysis import tokens_col
+from .text_analysis import lower_tokens, token_count
 
 __all__ = [
     "json_payload_audit",
@@ -236,7 +236,7 @@ def length_outlier_gate(docs: DataFrame) -> DataFrame:
     with_n = docs.select(
         "doc_id",
         F.col(group_col),
-        F.size(tokens_col(F.col("text"))).cast("long").alias("n_tokens"),
+        token_count().cast("long").alias("n_tokens"),
     )
     bands = with_n.groupBy(group_col).agg(
         F.percentile("n_tokens", F.lit(lo_q)).alias("_lo"),
@@ -375,14 +375,8 @@ def source_divergence(docs: DataFrame) -> DataFrame:
 
     Output: ``(source, n_tokens, jsd)`` — jsd in [0, ln 2], 6 dp.
     """
-    from java9_gc_log_parser_spark.operators.text_analysis import (
-        tokens_col,
-    )
-
-
     stream = docs.select(
-        F.col("source").alias("src"),
-        F.explode(tokens_col(F.lower(F.col("text")))).alias("tok"),
+        F.col("source").alias("src"), F.explode(lower_tokens()).alias("tok")
     )
     gcount = stream.groupBy("tok").agg(
         F.count(F.lit(1)).cast("long").alias("n_g")
@@ -441,6 +435,38 @@ def source_divergence(docs: DataFrame) -> DataFrame:
     )
 
 
+def _stats_melt(
+    df: DataFrame, specs: tuple[tuple[str, Column], ...]
+) -> tuple[DataFrame, DataFrame]:
+    """The stats melt shared by :func:`table_stats` and :func:`stats_state`:
+    ``(melted, basics)`` — one ``(column, key)`` row per spec per input row
+    (a map-only explode of a fixed |specs|-slot struct array), and its
+    map-combinable ``(column, n_rows, n_null, min_key, max_key)`` rollup.
+    """
+    if not specs:
+        raise ValueError("need at least one column spec")
+    melted = df.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(name).alias("column"),
+                        key.cast("string").alias("key"),
+                    )
+                    for name, key in specs
+                ]
+            )
+        ).alias("kv")
+    ).select("kv.column", "kv.key")
+    basics = melted.groupBy("column").agg(
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        F.sum(F.col("key").isNull().cast("long")).alias("n_null"),
+        F.min("key").alias("min_key"),
+        F.max("key").alias("max_key"),
+    )
+    return melted, basics
+
+
 def table_stats(
     df: DataFrame,
     specs: tuple[tuple[str, Column], ...],
@@ -460,11 +486,11 @@ def table_stats(
     ``max_key`` are LEXICOGRAPHIC bounds of the key space — what a
     string-keyed zone map stores — not numeric bounds.
 
-    Scale shape (100 TB): one map-only melt (explode of a fixed
-    |specs|-slot struct array) feeds both aggs: the per-column
-    null/count/min/max rollup is map-combinable to |specs| rows; NDV
-    reuses :func:`~.sketches.grouped_hll_distinct` — shards sketch
-    independently, registers merge by max, 256 small ints per column.
+    Scale shape (100 TB): one map-only melt (:func:`_stats_melt`) feeds
+    both aggs: the per-column null/count/min/max rollup is map-combinable
+    to |specs| rows; NDV reuses :func:`~.sketches.grouped_hll_distinct` —
+    shards sketch independently, registers merge by max, 256 small ints
+    per column.
     The exact-distinct leg exists for the audit; at cluster scale only
     the sketch side runs.
 
@@ -475,31 +501,11 @@ def table_stats(
         grouped_hll_distinct,
     )
 
-    if not specs:
-        raise ValueError("need at least one column spec")
-    melted = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(name).alias("column"),
-                        key.cast("string").alias("key"),
-                    )
-                    for name, key in specs
-                ]
-            )
-        ).alias("kv")
-    ).select("kv.column", "kv.key")
-    basic = melted.groupBy("column").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(F.col("key").isNull().cast("long")).alias("n_null"),
-        F.min("key").alias("min_key"),
-        F.max("key").alias("max_key"),
-    )
+    melted, basics = _stats_melt(df, specs)
     ndv = grouped_hll_distinct(
         melted.filter(F.col("key").isNotNull()), "column", F.col("key")
     )
-    return basic.join(ndv, "column").select(
+    return basics.join(ndv, "column").select(
         "column",
         "n_rows",
         "n_null",
@@ -523,27 +529,7 @@ def stats_state(
         hll_register_table,
     )
 
-    if not specs:
-        raise ValueError("need at least one column spec")
-    melted = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(name).alias("column"),
-                        key.cast("string").alias("key"),
-                    )
-                    for name, key in specs
-                ]
-            )
-        ).alias("kv")
-    ).select("kv.column", "kv.key")
-    basics = melted.groupBy("column").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(F.col("key").isNull().cast("long")).alias("n_null"),
-        F.min("key").alias("min_key"),
-        F.max("key").alias("max_key"),
-    )
+    melted, basics = _stats_melt(df, specs)
     regs = hll_register_table(
         melted.filter(F.col("key").isNotNull()), ("column",), F.col("key")
     )

@@ -129,13 +129,13 @@ def shard_manifest(docs: DataFrame) -> DataFrame:
     can size readers and verify completeness. One map-side-combinable hash
     agg over the shard assignment — 8 result rows.
     """
-    from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
+    from java9_gc_log_parser_spark.operators.text_analysis import token_count
 
     return (
         shard_assign(docs).groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(tokens_col(F.col("text")))).alias("n_tokens"),
+            F.sum(token_count()).alias("n_tokens"),
             F.min("doc_id").alias("min_id"),
             F.max("doc_id").alias("max_id"),
         )
@@ -174,10 +174,9 @@ def mixture_sample(
     counts — exact quotas need the top-N variant
     (:func:`stratified_sample`).
     """
-    from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
+    from java9_gc_log_parser_spark.operators.text_analysis import token_count
 
-    toks = F.size(tokens_col(F.col("text")))
-    base = docs.withColumn("_nt", toks).withColumn("_w", weight_expr)
+    base = docs.withColumn("_nt", token_count()).withColumn("_w", weight_expr)
     per_src = base.groupBy("source").agg(
         F.sum("_nt").cast("double").alias("_actual"),
         F.first("_w").cast("double").alias("_sw"),
@@ -245,7 +244,10 @@ def importance_resample(docs: DataFrame, target_source: str) -> DataFrame:
     merge of k rows), never a global sort.  Skew: bucket keys are md5-uniform
     by construction; the only hot key is the broadcast dim itself.
     """
-    from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
+    from java9_gc_log_parser_spark.operators.text_analysis import (
+        bigram_slots,
+        lower_tokens,
+    )
 
     clash = [c for c in docs.columns if c.startswith("_ir_")]
     if clash:
@@ -253,21 +255,14 @@ def importance_resample(docs: DataFrame, target_source: str) -> DataFrame:
             f"input carries reserved staging column(s) {clash}; rename them"
         )
     b = 4096.0
-    lt = tokens_col(F.lower(F.col("text")))
-    base = docs.select("doc_id", "source", lt.alias("_ir_lt"))
-    n_slots = F.greatest(F.size(F.col("_ir_lt")) - 1, F.lit(0))
+    base = docs.select("doc_id", "source", lower_tokens().alias("_ir_lt"))
     # bucket key: 3 hex chars of md5(bigram) — 4096 buckets as a string
     # prefix, conversion-free
     docf = (
         base.select(
             "doc_id",
             "source",
-            F.explode(
-                F.arrays_zip(
-                    F.slice(F.col("_ir_lt"), 1, n_slots).alias("w1"),
-                    F.slice(F.col("_ir_lt"), 2, n_slots).alias("w2"),
-                )
-            ).alias("_ir_z"),
+            F.explode(bigram_slots(F.col("_ir_lt"))).alias("_ir_z"),
         )
         .select(
             "doc_id",
@@ -404,13 +399,13 @@ def pack_sequences(docs: DataFrame) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
+    from java9_gc_log_parser_spark.operators.text_analysis import token_count
 
     h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":pack:v1")))
     base = docs.select(
         F.col("doc_id"),
         h.alias("_pk_h"),
-        F.size(tokens_col(F.col("text"))).cast("long").alias("_pk_nt"),
+        token_count().cast("long").alias("_pk_nt"),
     ).filter(F.col("_pk_nt") > 0)
     stream = (
         F.conv(F.substring("_pk_h", 1, 4), 16, 10).cast("int")
@@ -601,12 +596,12 @@ def weighted_priority_sample(docs: DataFrame) -> DataFrame:
     driver, switch to the two-pass quantile-threshold variant (approx
     k/N-quantile of the priority, filter, exact top-k on the survivors).
     """
-    from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
+    from java9_gc_log_parser_spark.operators.text_analysis import token_count
 
     h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":wps:v1")))
     u32 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
     u = (u32.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
-    w = F.greatest(F.lit(1).cast("long"), F.size(tokens_col(F.col("text"))).cast("long"))
+    w = F.greatest(F.lit(1).cast("long"), token_count().cast("long"))
     base = docs.select(
         F.col("doc_id"),
         w.alias("weight"),
@@ -704,12 +699,10 @@ def budget_waterfill(docs: DataFrame) -> DataFrame:
 
     Output: (source, supply_tokens, allocation_tokens, saturated).
     """
-    from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
+    from java9_gc_log_parser_spark.operators.text_analysis import token_count
 
     sup = (
-        docs.select(
-            "source", F.size(tokens_col(F.col("text"))).alias("_nt")
-        )
+        docs.select("source", token_count().alias("_nt"))
         .groupBy("source")
         .agg(F.sum("_nt").cast("long").alias("supply_tokens"))
     )

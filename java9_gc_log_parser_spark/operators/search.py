@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .similarity import ann_topk_bruteforce
-from .text_analysis import tokens_col
+from .text_analysis import doc_terms
 
 __all__ = ["hybrid_rrf_search"]
 
@@ -55,9 +55,7 @@ def hybrid_rrf_search(docs: DataFrame, embeddings: DataFrame) -> DataFrame:
     k_leg, k_out, rrf_k = 20, 10, 60
 
     # ---- sparse leg: quantized-idf keyword overlap ------------------------
-    dterm = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens_col(F.lower(F.col("text"))))).alias("term")
-    )
+    dterm = doc_terms(docs)
     n_docs = docs.agg(F.count(F.lit(1)).alias("_n"))
     df_tbl = dterm.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("_df"))
     # idf_fp = bit_length(N div df): conv(v,10,2) never emits leading zeros

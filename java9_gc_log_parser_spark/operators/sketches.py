@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text_analysis import tokens_col
+from .text_analysis import term_counts, terms
 
 #: count-min geometry: 4 independent rows x 1024 buckets (err <= 2e/w * N
 #: with prob 1 - (1/2)^d — at d=4, w=1024 the overcount is bounded by
@@ -62,19 +62,6 @@ def _cms_bucket(term: Column, row: int) -> Column:
     )
 
 
-def _terms(docs: DataFrame) -> DataFrame:
-    """One ``term`` row per lowercase whitespace token occurrence."""
-    return docs.select(
-        F.explode(tokens_col(F.lower(F.col("text")))).alias("term")
-    )
-
-
-def _term_counts(docs: DataFrame) -> DataFrame:
-    """Exact occurrence count per lowercase whitespace token (the q46
-    reduction): one map-side-combinable hash agg."""
-    return _terms(docs).groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
-
-
 def cms_sketch(docs: DataFrame) -> DataFrame:
     """The d×w count-min grid as a DataFrame: (row, bucket, total).
 
@@ -83,7 +70,7 @@ def cms_sketch(docs: DataFrame) -> DataFrame:
     (Spark's partial aggregation does exactly this here). Absent cells mean
     zero. <= CMS_DEPTH * CMS_WIDTH rows regardless of corpus size.
     """
-    tc = _term_counts(docs)
+    tc = term_counts(docs)
     per_row = [
         tc.select(
             F.lit(r).alias("row"),
@@ -118,7 +105,7 @@ def cms_heavy_hitters(docs: DataFrame) -> DataFrame:
     a global sort); the k candidate terms then join the <=4096-row grid by
     BROADCAST — the corpus-sized side is long gone by then.
     """
-    tc = _term_counts(docs)
+    tc = term_counts(docs)
     top = tc.orderBy(F.col("cnt").desc(), F.col("term")).limit(_CMS_TOP)
     grid = cms_sketch(docs)
     for r in range(CMS_DEPTH):
@@ -249,7 +236,7 @@ def _rel_error(exact: str) -> Column:
 def hll_registers(docs: DataFrame) -> DataFrame:
     """:func:`hll_register_table` over the distinct lowercase tokens:
     ``(register, max_rank)``, <= 256 rows."""
-    return hll_register_table(_terms(docs), (), F.col("term"))
+    return hll_register_table(terms(docs), (), F.col("term"))
 
 
 def hll_distinct_report(docs: DataFrame) -> DataFrame:
@@ -257,7 +244,7 @@ def hll_distinct_report(docs: DataFrame) -> DataFrame:
     the exact count, with the relative error. Registers and estimate are
     :func:`hll_register_table` and :func:`hll_estimate_from_registers`.
     """
-    exact = _terms(docs).agg(F.countDistinct("term").alias("exact_distinct"))
+    exact = terms(docs).agg(F.countDistinct("term").alias("exact_distinct"))
     return (
         hll_estimate_from_registers(hll_registers(docs), ())
         .join(exact)

@@ -33,6 +33,83 @@ def tokens_col(text: Column) -> Column:
     ).otherwise(F.split(F.trim(text), r"\s+"))
 
 
+# The one kernel per text step: every text operator (dedup,
+# decontamination, LM statistics, sketches, sampling, profiling, search)
+# builds its tokens, n-grams and term counts here, so two operators can
+# never disagree on what a token or a gram is.
+
+
+def lower_tokens() -> Column:
+    """Lowercase whitespace tokens of ``text``."""
+    return tokens_col(F.lower(F.col("text")))
+
+
+def token_count() -> Column:
+    """Number of whitespace tokens of ``text`` (case-independent)."""
+    return F.size(tokens_col(F.col("text")))
+
+
+def norm_text() -> Column:
+    """``text`` lowercased and trimmed, whitespace runs collapsed to one
+    space — the exact-dedup key's text."""
+    return F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
+
+
+def word_ngrams(toks: Column, n: int) -> Column:
+    """Word n-grams of the token array ``toks`` as space-joined strings, in
+    position order; fewer than n tokens -> empty array.
+
+    Bind ``toks`` to a column first: the transform lambda is interpreted
+    and re-derives an unbound token expression once per position."""
+    sz = F.size(toks)
+    return F.when(sz < n, F.array().cast("array<string>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), sz - (n - 1)),
+            lambda i: F.array_join(F.slice(toks, i, n), " "),
+        )
+    )
+
+
+def bigram_slots(toks: Column) -> Column:
+    """Adjacent pairs of the token array ``toks`` as ``(w1, w2)`` structs,
+    built lambda-free (see :func:`bigram_logprob`'s expression-shape note);
+    fewer than 2 tokens -> empty array."""
+    n_slots = F.greatest(F.size(toks) - 1, F.lit(0))
+    return F.arrays_zip(
+        F.slice(toks, 1, n_slots).alias("w1"),
+        F.slice(toks, 2, n_slots).alias("w2"),
+    )
+
+
+def terms(docs: DataFrame) -> DataFrame:
+    """One ``term`` row per lowercase token occurrence."""
+    return docs.select(F.explode(lower_tokens()).alias("term"))
+
+
+def term_counts(docs: DataFrame) -> DataFrame:
+    """``(term, cnt)``: corpus-wide occurrence count of each lowercase
+    token — one map-side-combinable hash agg."""
+    return terms(docs).groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
+
+
+def doc_term_counts(docs: DataFrame) -> DataFrame:
+    """``(doc_id, term, cnt)``: occurrence count of each lowercase token
+    within its document (zero-token docs have no rows)."""
+    return (
+        docs.select("doc_id", F.explode(lower_tokens()).alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def doc_terms(docs: DataFrame) -> DataFrame:
+    """``(doc_id, term)``: each distinct lowercase token of a document
+    once."""
+    return docs.select(
+        "doc_id", F.explode(F.array_distinct(lower_tokens())).alias("term")
+    )
+
+
 def token_stats(docs: DataFrame) -> DataFrame:
     """Per-doc token counts + mean token length (BPE-ish proxy stats)."""
     toks = tokens_col(F.col("text"))
@@ -105,7 +182,7 @@ def _lang_pred(hits_by_lang: dict[str, Column]) -> Column:
 def lang_id(docs: DataFrame) -> DataFrame:
     """Marker-token voting language heuristic; deterministic tie-break by
     (hits desc, lang asc); no hits -> 'unknown'."""
-    hits_by_lang = _lang_hits(tokens_col(F.lower(F.col("text"))))
+    hits_by_lang = _lang_hits(lower_tokens())
     return docs.select(
         "doc_id",
         *[hits_by_lang[lang].alias(f"hits_{lang}") for lang in sorted(LANG_MARKERS)],
@@ -116,8 +193,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
 def fingerprint(docs: DataFrame) -> DataFrame:
     """Order-insensitive bag-of-words fingerprint: md5 of the sorted distinct
     token list (the exact-dedup key for content-equivalent docs)."""
-    toks = tokens_col(F.lower(F.col("text")))
-    bag = F.concat_ws(" ", F.array_sort(F.array_distinct(toks)))
+    bag = F.concat_ws(" ", F.array_sort(F.array_distinct(lower_tokens())))
     return docs.select(
         "doc_id",
         F.md5(F.col("text")).alias("text_md5"),
@@ -132,24 +208,12 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
     canonical (minimum) doc_id — the classic keep-one-per-group dedup shape;
     scales as a single hash aggregation (map-side combinable).
     """
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     return (
-        docs.select(F.md5(norm).alias("text_hash"), "doc_id")
+        docs.select(F.md5(norm_text()).alias("text_hash"), "doc_id")
         .groupBy("text_hash")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.min("doc_id").alias("canonical_doc_id"),
-        )
-    )
-
-
-def _word_ngrams(toks: Column, n: int) -> Column:
-    """Word n-grams as space-joined strings; fewer than n tokens -> empty."""
-    sz = F.size(toks)
-    return F.when(sz < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), sz - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
         )
     )
 
@@ -208,10 +272,8 @@ def _stage_ngrams(docs: DataFrame) -> DataFrame:
             f"input carries reserved staging column(s) {clash}; rename them"
         )
     toks = F.col(_REP_TOKS)
-    return docs.withColumn(
-        _REP_TOKS, tokens_col(F.lower(F.col("text")))
-    ).withColumns(
-        {_REP_G2: _word_ngrams(toks, 2), _REP_G3: _word_ngrams(toks, 3)}
+    return docs.withColumn(_REP_TOKS, lower_tokens()).withColumns(
+        {_REP_G2: word_ngrams(toks, 2), _REP_G3: word_ngrams(toks, 3)}
     )
 
 
@@ -283,7 +345,7 @@ def corpus_filter(docs: DataFrame) -> DataFrame:
     _, _, score = _quality_cols(text)
     top_frac, dup_frac = _repetition_cols()
     pred = _lang_pred(_lang_hits(ltoks))
-    n_toks = F.size(tokens_col(text))
+    n_toks = token_count()
     reasons = F.concat_ws(
         ",",
         F.when(score < 0.5, F.lit("low_quality")),
@@ -327,12 +389,13 @@ def bigram_logprob(docs: DataFrame) -> DataFrame:
     broadcast single row). Token-frequency skew ("the") inflates join-probe
     fan-in but never output (join is key-lookup, not pair generation).
 
-    Expression shape: the bigram slots are built lambda-free —
-    ``arrays_zip(slice(toks,1,n-1), slice(toks,2,n-1))`` exploded, then
-    ``concat_ws`` over the struct fields — so the whole path stays inside
-    whole-stage codegen. The `_word_ngrams` transform-lambda shape is NOT
-    safe here: the explode branch references the ngram column exactly once,
-    so CollapseProject re-inlines it (and the tokenize under it) into the
+    Expression shape: the bigram slots are built lambda-free
+    (:func:`bigram_slots`: ``arrays_zip(slice(toks,1,n-1),
+    slice(toks,2,n-1))``) exploded, then ``concat_ws`` over the struct
+    fields — so the whole path stays inside whole-stage codegen. The
+    :func:`word_ngrams` transform-lambda shape is NOT safe here: the
+    explode branch references the ngram column exactly once, so
+    CollapseProject re-inlines it (and the tokenize under it) into the
     Generate, and the interpreted lambda then re-derives the regex split
     per element — O(n_tokens^2) per doc (see :func:`_top_occurrence_count`
     for the same failure mode in the repetition metrics).
@@ -342,26 +405,18 @@ def bigram_logprob(docs: DataFrame) -> DataFrame:
         raise ValueError(
             f"input carries reserved staging column(s) {clash}; rename them"
         )
-    base = docs.withColumn(
-        "_blm_lt", tokens_col(F.lower(F.col("text")))
-    ).select("doc_id", "_blm_lt")
-    lt = F.col("_blm_lt")
+    base = docs.withColumn("_blm_lt", lower_tokens()).select(
+        "doc_id", "_blm_lt"
+    )
     uni = (
         base.select(F.explode("_blm_lt").alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("uc"))
     )
     vocab = uni.agg(F.count(F.lit(1)).alias("v"))
-    n_slots = F.greatest(F.size(lt) - 1, F.lit(0))
     docbg = (
         base.select(
-            "doc_id",
-            F.explode(
-                F.arrays_zip(
-                    F.slice(lt, 1, n_slots).alias("w1"),
-                    F.slice(lt, 2, n_slots).alias("w2"),
-                )
-            ).alias("_blm_z"),
+            "doc_id", F.explode(bigram_slots(F.col("_blm_lt"))).alias("_blm_z")
         )
         .select(
             "doc_id",
@@ -423,12 +478,7 @@ def tfidf_topk(docs: DataFrame) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    ltoks = tokens_col(F.lower(F.col("text")))
-    tf = (
-        docs.select("doc_id", F.explode(ltoks).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    tf = doc_term_counts(docs)
     dfr = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n"))
     scored = (
@@ -437,9 +487,9 @@ def tfidf_topk(docs: DataFrame) -> DataFrame:
         .select(
             "doc_id",
             "term",
-            F.col("tf").cast("long").alias("tf"),
+            F.col("cnt").cast("long").alias("tf"),
             F.round(
-                F.col("tf")
+                F.col("cnt")
                 * F.log(F.col("n").cast("double") / F.col("df")),
                 6,
             ).alias("score"),
@@ -464,10 +514,9 @@ def token_budget(docs: DataFrame) -> DataFrame:
     shuffle. ``mean_tokens`` is derived post-agg from (total, n) so the
     token-count expression is evaluated once per row.
     """
-    toks = tokens_col(F.col("text"))
     agg = docs.groupBy("split", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(toks).cast("long")).alias("total_tokens"),
+        F.sum(token_count().cast("long")).alias("total_tokens"),
     )
     return agg.select(
         "split",
@@ -502,12 +551,7 @@ def zipf_topk(docs: DataFrame) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    ltoks = tokens_col(F.lower(F.col("text")))
-    counts = (
-        docs.select(F.explode(ltoks).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    counts = term_counts(docs)
     total = counts.agg(F.sum("cnt").cast("double").alias("total"))
     head = counts.orderBy(F.col("cnt").desc(), F.col("term").asc()).limit(
         _ZIPF_K
@@ -594,24 +638,19 @@ def pmi_collocations(docs: DataFrame) -> DataFrame:
     ``n_ab >= 5`` (the support floor); pmi rounded to 6 dp (ln of a ratio
     of exact BIGINTs — same fixed op tree in both engines).
     """
-    dt = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(tokens_col(F.lower(F.col("text"))))
-        ).alias("tok"),
-    )
+    dt = doc_terms(docs)
     vocab = (
-        dt.groupBy("tok")
+        dt.groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("df"))
-        .orderBy(F.col("df").desc(), F.col("tok").asc())
+        .orderBy(F.col("df").desc(), F.col("term").asc())
         .limit(50)
     )
-    qual = dt.join(F.broadcast(vocab), "tok")
+    qual = dt.join(F.broadcast(vocab), "term")
     pairs = (
-        qual.select("doc_id", F.col("tok").alias("tok_a"),
+        qual.select("doc_id", F.col("term").alias("tok_a"),
                     F.col("df").alias("n_a"))
         .join(
-            qual.select("doc_id", F.col("tok").alias("tok_b"),
+            qual.select("doc_id", F.col("term").alias("tok_b"),
                         F.col("df").alias("n_b")),
             "doc_id",
         )
@@ -700,7 +739,7 @@ def classifier_score(docs: DataFrame, weights: DataFrame) -> DataFrame:
     doc gets a verdict (bias-only logit), nothing silently drops.
     """
     toks = docs.select(
-        "doc_id", F.explode_outer(tokens_col(F.lower(F.col("text")))).alias("tok")
+        "doc_id", F.explode_outer(lower_tokens()).alias("tok")
     )
     bucketed = toks.withColumn(
         "bucket",
@@ -756,17 +795,13 @@ def token_entropy(docs: DataFrame) -> DataFrame:
     partial aggregation collapses each doc before either exchange; the
     doc-spine left join keeps zero-token docs in the profile (total gate).
     """
-    stream = docs.select(
-        "doc_id", F.explode(tokens_col(F.lower(F.col("text")))).alias("tok")
-    )
-    counts = stream.groupBy("doc_id", "tok").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    per_doc = counts.groupBy("doc_id").agg(
-        F.sum("c").cast("long").alias("n_tokens"),
+    per_doc = doc_term_counts(docs).groupBy("doc_id").agg(
+        F.sum("cnt").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("n_unique"),
         F.sum(
-            F.round(F.col("c").cast("double") * F.log("c") * 1e9).cast("long")
+            F.round(F.col("cnt").cast("double") * F.log("cnt") * 1e9).cast(
+                "long"
+            )
         ).alias("s_nano"),
     )
     base = docs.select("doc_id").join(per_doc, "doc_id", "left")
@@ -845,13 +880,11 @@ def dataset_card(docs: DataFrame, clf_weights: DataFrame) -> DataFrame:
     the legs combine by one-row cross joins (the documented constant-key
     combine exemption). Float means ride micro-quantized integer sums.
     """
-    toks = tokens_col(F.trim(F.col("text")))
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     base = docs.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.countDistinct("source").cast("long").alias("n_sources"),
-        F.sum(F.size(toks)).cast("long").alias("n_tokens"),
-        F.countDistinct(F.md5(norm)).cast("long").alias("_n_uniq"),
+        F.sum(token_count()).cast("long").alias("n_tokens"),
+        F.countDistinct(F.md5(norm_text())).cast("long").alias("_n_uniq"),
     )
     lang = lang_id(docs).agg(
         F.sum((F.col("pred_lang") == "en").cast("long")).alias("_n_en"),

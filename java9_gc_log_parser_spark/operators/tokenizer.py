@@ -54,19 +54,6 @@ MERGES_SCHEMA = StructType(
 )
 
 
-def word_counts(docs: DataFrame) -> DataFrame:
-    """The single corpus-scale pass: lowered-token word frequencies."""
-    from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
-
-    return (
-        docs.select(
-            F.explode(tokens_col(F.lower(F.col("text")))).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-
-
 def _spaced_chars(word) -> F.Column:
     # "fast" -> " f a s t "  (regexp backref: each char followed by a space)
     return F.concat(F.lit(" "), F.regexp_replace(word, "(.)", "$1 "))
@@ -100,9 +87,12 @@ def bpe_learn(
     artifact a real pipeline would broadcast to its encode stage."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
+    from java9_gc_log_parser_spark.operators.text_analysis import term_counts
+
+    # the single corpus-scale pass: lowered-token word frequencies
     words = (
-        word_counts(docs)
-        .select("cnt", _spaced_chars(F.col("word")).alias("syms"))
+        term_counts(docs)
+        .select("cnt", _spaced_chars(F.col("term")).alias("syms"))
         .persist()
     )
     words.count()  # materialize: no iteration may re-touch the corpus
@@ -149,12 +139,10 @@ def bpe_encode_fertility(
     ``merges`` is the driver-side merge list (O(n_merges) rows, the
     artifact ``bpe_learn`` produced).
     """
-    from java9_gc_log_parser_spark.operators.text_analysis import tokens_col
+    from java9_gc_log_parser_spark.operators.text_analysis import lower_tokens
 
     vocab = (
-        docs.select(
-            F.explode(tokens_col(F.lower(F.col("text")))).alias("word")
-        )
+        docs.select(F.explode(lower_tokens()).alias("word"))
         .distinct()
         .select("word", _spaced_chars(F.col("word")).alias("syms"))
     )
@@ -164,9 +152,7 @@ def bpe_encode_fertility(
     enc = vocab.select(
         "word", F.size(F.split(F.trim(syms), " ")).alias("n_pieces")
     )
-    stream = docs.select(
-        "source", F.explode(tokens_col(F.lower(F.col("text")))).alias("word")
-    )
+    stream = docs.select("source", F.explode(lower_tokens()).alias("word"))
     return (
         stream.join(F.broadcast(enc), "word")
         .groupBy("source")

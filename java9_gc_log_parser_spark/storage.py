@@ -35,7 +35,6 @@ from pyspark.sql.types import StructType
 PARQUET = "parquet"
 ICEBERG = "iceberg"
 JSONL = "jsonl"
-CSV = "csv"
 #: second columnar leg (native Spark, no extra jars): same pushdown/pruning
 #: contract as parquet — proves no operator silently depends on
 #: parquet-specific behavior, and gives clusters standardized on ORC
@@ -51,8 +50,8 @@ class TableRef:
     format: str = PARQUET
     #: partition columns the table is (to be) laid out by
     partition_by: tuple[str, ...] = field(default=())
-    #: DDL schema string (or StructType) for schemaless text formats
-    #: (jsonl/csv) — REQUIRED for those: schema inference is a full extra
+    #: DDL schema string (or StructType) for the schemaless text format
+    #: (jsonl) — REQUIRED for it: schema inference is a full extra
     #: pass over the data and is non-deterministic under sampling at 100 TB.
     #: Honoured by parquet/orc too, whose read then skips the footer job
     #: that infers it (e.g. reading back a table just written)
@@ -135,21 +134,16 @@ def read_table(spark: SparkSession, table: TableRef | str) -> DataFrame:
                 "end-snapshot-id", str(ref.end_snapshot_id)
             )
         return reader.load(ref.location)
-    if ref.format in (JSONL, CSV):
+    if ref.format == JSONL:
         if ref.schema is None:
             raise ValueError(
                 f"{ref.format} table {ref.location!r} needs an explicit "
                 "schema (inference costs an extra full pass at scale)"
             )
-        reader = spark.read.schema(ref.schema)
-        if ref.format == JSONL:
-            # ISO-8601 with micros, matching write_table's output
-            return reader.option(
-                "timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-            ).json(ref.location)
-        return reader.option("header", True).option(
+        # ISO-8601 with micros, matching write_table's output
+        return spark.read.schema(ref.schema).option(
             "timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-        ).csv(ref.location)
+        ).json(ref.location)
     if ref.bucket_by:
         # the bucket spec only exists in the catalog entry — reading the
         # path directly would silently drop the HashPartitioning guarantee
@@ -243,11 +237,6 @@ def write_table(
         writer.option(
             "timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
         ).json(ref.location)
-        return
-    if ref.format == CSV:
-        writer.option("header", True).option(
-            "timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-        ).csv(ref.location)
         return
     if ref.format == ORC:
         writer.orc(ref.location)

@@ -49,16 +49,22 @@ def test_min_overlap_one_flags_single_gram(spark, monkeypatch):
 
 
 def test_short_doc_fallback_exact_match(spark, monkeypatch):
-    """Docs shorter than n collapse to one full-text shingle: only an exact
-    (lowercased) token-sequence match can fire. One shingle can never reach
-    the minimum overlap of 2, so the test lowers _MIN_OVERLAP to 1."""
-    from java9_gc_log_parser_spark.operators import contamination
-
-    monkeypatch.setattr(contamination, "_MIN_OVERLAP", 1)
-    train = [(1, "s", "Tiny Doc"), (2, "s", "tiny doc x y z w q")]
-    eval_rows = [(10, "s", "tiny doc")]
-    got = _pairs(spark, train, eval_rows)
-    assert got == {(1, 10): 1}  # doc 2's 4-grams never equal the 2-token gram
+    """Docs shorter than n collapse to one full-text shingle, below the
+    minimum overlap of 2: sharing it flags on its own, on both join paths.
+    Only an exact (lowercased) token-sequence match shares it, and blank
+    docs, which share the empty shingle, never flag."""
+    train = [
+        (1, "s", "Tiny Doc"),
+        (2, "s", "tiny doc x y z w q"),
+        (3, "s", "  "),
+        (4, "s", "a b c"),
+    ]
+    eval_rows = [(10, "s", "tiny doc"), (11, "s", ""), (12, "s", "a b c d")]
+    # doc 2's 4-grams never equal the 2-token gram; doc 4's whole text is
+    # only a prefix of doc 12's one 4-gram
+    assert _pairs(spark, train, eval_rows) == {(1, 10): 1}
+    _fallback(monkeypatch)
+    assert _pairs(spark, train, eval_rows) == {(1, 10): 1}
 
 
 def _fallback(monkeypatch, cap=None):

@@ -17,20 +17,25 @@ from java9_gc_log_parser_spark.operators.dedupe import (
     with_shingles,
     with_simhash,
 )
+from java9_gc_log_parser_spark.operators.text_analysis import (
+    lower_tokens,
+    word_ngrams,
+)
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, source string, text string")
 
 
+def _py_ngrams(text: str, n: int) -> list[str]:
+    """Python ground truth mirroring text_analysis.word_ngrams exactly."""
+    toks = text.lower().split()
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
 def _py_shingles(text: str, n: int) -> frozenset:
     """Python ground truth mirroring with_shingles exactly."""
-    toks = text.lower().split()
-    if len(toks) < n:
-        return frozenset({" ".join(toks)})
-    return frozenset(
-        " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-    )
+    return frozenset(_py_ngrams(text, n) or [" ".join(text.lower().split())])
 
 
 def _py_jaccard(a: frozenset, b: frozenset) -> float:
@@ -50,12 +55,20 @@ def _py_jaccard(a: frozenset, b: frozenset) -> float:
         ("", 3, {""}),  # empty doc still emits one shingle
         ("A b a B", 1, {"a", "b"}),  # lowercased + distinct
         ("x  y", 2, {"x y"}),  # multi-space collapse via \s+ split
+        ("a b c", 3, {"a b c"}),  # exactly n tokens -> one gram
+        ("a", 2, {"a"}),  # n - 1 tokens
+        ("   ", 3, {""}),  # blank doc
     ],
 )
 def test_with_shingles_known(spark, text, n, expected):
+    """with_shingles, and under it the word n-gram kernel, which yields no
+    gram for fewer than n tokens (with_shingles falls back to the text)."""
     df = _docs(spark, [(1, "s", text)])
-    [row] = with_shingles(df, n=n).select("sh").collect()
+    [row] = with_shingles(df, n=n).select(
+        "sh", word_ngrams(lower_tokens(), n).alias("g")
+    ).collect()
     assert set(row.sh) == expected
+    assert row.g == _py_ngrams(text, n)
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
 """Storage-seam tests: format dispatch, schema discipline for text formats,
-and JSONL/CSV round-trip fidelity (incl. timestamp micros)."""
+and JSONL round-trip fidelity (incl. timestamp micros)."""
 
 from __future__ import annotations
 
@@ -26,7 +26,7 @@ ROWS = [
 ]
 
 
-@pytest.mark.parametrize("fmt", ["jsonl", "csv"])
+@pytest.mark.parametrize("fmt", ["jsonl"])
 def test_text_format_roundtrip(spark, tmp_path, fmt):
     df = spark.createDataFrame(ROWS, SCHEMA)
     ref = TableRef(str(tmp_path / f"t_{fmt}"), format=fmt, schema=SCHEMA)
