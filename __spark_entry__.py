@@ -29,6 +29,11 @@ from java9_gc_log_parser_spark import oracle as O  # noqa: E402
 from java9_gc_log_parser_spark.functions.parse import parse_lines  # noqa: E402
 from java9_gc_log_parser_spark.plans.pipeline import build  # noqa: E402
 from java9_gc_log_parser_spark.sources.transcripts import synth_transcripts  # noqa: E402
+from java9_gc_log_parser_spark.streaming import (  # noqa: E402
+    await_drained,
+    file_stream,
+    start_commit_logged,
+)
 
 _BUILDS: dict[tuple[int, str], dict[str, DataFrame]] = {}
 
@@ -286,44 +291,61 @@ def _fresh_scratch(sf_dir: str, name: str) -> str:
     return root
 
 
-def _await_drained(q, timeout_s: int = 600) -> None:
-    """awaitTermination returns False on timeout — without the check the
-    caller would fall through with the stream still running and read a
-    partial output directory as if it were complete."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"stream did not drain within {timeout_s}s")
+def _scatter(spark, sf_dir: str, name: str, n_files: int = 32) -> str:
+    """A fresh scratch root whose ``src`` holds the transcripts scattered
+    round robin over ``n_files`` files, so one event's lines reach the
+    stream in different micro-batches."""
+    root = _fresh_scratch(sf_dir, name)
+    synth_transcripts(spark, sf_dir).repartition(n_files).write.parquet(
+        f"{root}/src")
+    return root
+
+
+def _lateness_s(spark, src: str):
+    """The newest ts of the written source ``src`` and the stream lateness
+    in seconds: its ts span + 60 s, so no state expires while the backlog
+    drains. min/max come from the parquet footer stats of the written
+    files, not a second pass over the synth plan."""
+    lo, hi = spark.read.parquet(src).agg(F.min("ts"), F.max("ts")).first()
+    return hi, int((hi - lo).total_seconds()) + 60
 
 
 @contextmanager
-def _shuffle_partitions(spark, n: str):
-    """Run the block at ``n`` shuffle partitions. A stream captures the
-    conf when it starts; restoring it keeps later batch queries at the
-    session's own setting."""
+def _shuffle_partitions(spark):
+    """Run the block at ``_JVM_STATE_PARTS`` shuffle partitions. A stream
+    captures the conf when it starts; restoring it keeps later batch
+    queries at the session's own setting."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
+    spark.conf.set("spark.sql.shuffle.partitions", _JVM_STATE_PARTS)
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _drain_to_parquet(sdf: DataFrame, outp: str, ck: str) -> None:
-    """Append a streaming DataFrame to a parquet sink until its backlog
-    is drained (``availableNow``)."""
-    q = (
-        sdf.writeStream.format("parquet")
-        .option("path", outp)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_drained(q)
+def _drain_to_parquet(spark, root: str,
+                      transform: Callable[[DataFrame], DataFrame]) -> DataFrame:
+    """Drain ``transform`` of the turn stream over ``root/src`` (16 files
+    per trigger) into the parquet sink ``root/out`` in append mode, at
+    ``_JVM_STATE_PARTS`` state partitions, with ``availableNow`` and the
+    checkpoint ``root/ckpt``; returns everything the sink holds. A second
+    call resumes from the checkpoint and drains only the new files."""
+    with _shuffle_partitions(spark):
+        q = (
+            transform(file_stream(spark, f"{root}/src", _INPUT_SCHEMA, 16))
+            .writeStream.format("parquet")
+            .option("path", f"{root}/out")
+            .option("checkpointLocation", f"{root}/ckpt")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_drained(q)
+    return spark.read.parquet(f"{root}/out")
 
 
-def _drain_closed(spark, src: str, root: str, rows, **kw) -> DataFrame:
-    """Drain the stream's carry-over assembly fold over ``src`` with
+def _drain_closed(spark, root: str, rows, **kw) -> DataFrame:
+    """Drain the stream's carry-over assembly fold over ``root/src`` with
     ``availableNow``, writing ``rows(closed groups)`` of each trigger under
     ``root/out``; returns everything written there so far."""
     from java9_gc_log_parser_spark.streaming.assembler import assemble_stream
@@ -334,8 +356,8 @@ def _drain_closed(spark, src: str, root: str, rows, **kw) -> DataFrame:
         rows(closed).write.mode("overwrite").parquet(f"{outp}/batch={batch_id}")
         return {}
 
-    _await_drained(assemble_stream(spark, src, _INPUT_SCHEMA, f"{root}/fold",
-                                   emit, **kw))
+    await_drained(assemble_stream(spark, f"{root}/src", _INPUT_SCHEMA,
+                                  f"{root}/fold", emit, **kw))
     return spark.read.parquet(outp)
 
 
@@ -360,15 +382,13 @@ def q26_stream_assembled(spark, sf_dir):
         assembled_pauses_from_groups,
     )
 
-    root = _fresh_scratch(sf_dir, "q26")
-    src = f"{root}/src"
     # round-robin scatter: one event's lines spread across many files, so
     # micro-batches deliver them out of order across triggers (with 16 files
     # per trigger over 32 files, ~97% of events still split across batches:
     # P(all ~6 lines land in one half) = 2 * 0.5^6)
-    synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
+    root = _scatter(spark, sf_dir, "q26")
     return _drain_closed(
-        spark, src, root, assembled_pauses_from_groups,
+        spark, root, assembled_pauses_from_groups,
         max_files_per_trigger=16,
     ).select(*_ASSEMBLED_COLS)
 
@@ -390,28 +410,17 @@ def q55_stream_atleastonce_dedup(spark, sf_dir):
     drops those before they hit storage. State is one entry per key within
     the watermark horizon, partitioned by key hash — sized by the horizon,
     not the corpus."""
-    root = _fresh_scratch(sf_dir, "q55")
-    src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
-    tdf = synth_transcripts(spark, sf_dir)
-    tdf.repartition(16).write.parquet(src)
-    tdf.filter(F.col("turn_idx") % 3 == 0).repartition(16).write.mode(
-        "append"
-    ).parquet(src)
-    lo, hi = tdf.agg(F.min("ts"), F.max("ts")).first()
-    delay_s = int((hi - lo).total_seconds()) + 60
-
-    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
-        _drain_to_parquet(
-            spark.readStream.schema(_INPUT_SCHEMA)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-            .withWatermark("ts", f"{delay_s} seconds")
-            .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"]),
-            outp, ck,
-        )
-    return spark.read.parquet(outp).select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts"
-    )
+    root = _scatter(spark, sf_dir, "q55", 16)
+    src = f"{root}/src"
+    synth_transcripts(spark, sf_dir).filter(
+        F.col("turn_idx") % 3 == 0
+    ).repartition(16).write.mode("append").parquet(src)
+    _, delay_s = _lateness_s(spark, src)
+    return _drain_to_parquet(
+        spark, root,
+        lambda turns: turns.withWatermark("ts", f"{delay_s} seconds")
+        .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"]),
+    ).select("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
 
 def q49_stream_late_dead_letter(spark, sf_dir):
@@ -436,21 +445,19 @@ def q49_stream_late_dead_letter(spark, sf_dir):
         assembly_dead_letters_from_groups,
     )
 
-    root = _fresh_scratch(sf_dir, "q49")
+    root = _scatter(spark, sf_dir, "q49", 8)
     src = f"{root}/src"
-    tdf = synth_transcripts(spark, sf_dir)
-    lo, hi = tdf.agg(F.min("ts"), F.max("ts")).first()
+    lo, hi = spark.read.parquet(src).agg(F.min("ts"), F.max("ts")).first()
     span_ms = int((hi - lo).total_seconds() * 1000)
     # a group expires once its newest ts + lateness is behind the watermark
     # (high-water mark - lateness); during the drain the high-water mark is
     # hi, so expiry needs newest ts < hi - 2 * lateness < lo: nothing
     # expires before the backlog is fully assembled
     lateness_ms = span_ms + 60_000
-    tdf.repartition(8).write.parquet(src)
 
     def drain():
         return _drain_closed(
-            spark, src, root, assembly_dead_letters_from_groups,
+            spark, root, assembly_dead_letters_from_groups,
             lateness_ms=lateness_ms, max_files_per_trigger=32,
         ).select("conv_id", "event_id", "error_code", "error_message")
 
@@ -525,16 +532,15 @@ def q51_stream_metrics_feed(spark, sf_dir):
         stream_conv_state,
     )
 
-    root = _fresh_scratch(sf_dir, "q51")
-    src, out_root = f"{root}/src", f"{root}/out"
-    synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
+    root = _scatter(spark, sf_dir, "q51")
+    out_root = f"{root}/out"
     # 32 files at 16/trigger -> 2 micro-batches. The feed's cross-batch
     # properties (contiguous batch ids, monotonic cumulative convs, events
     # summing across batches) need >= 2 batches, which 2 provides; the old
     # 8/trigger -> 4 batches doubled the per-trigger wall without
     # strengthening any invariant (r3 verdict task #8).
-    _await_drained(stream_conv_state(spark, src, _INPUT_SCHEMA, out_root,
-                                     max_files_per_trigger=16))
+    await_drained(stream_conv_state(spark, f"{root}/src", _INPUT_SCHEMA,
+                                    out_root, max_files_per_trigger=16))
 
     with open(os.path.join(out_root, "metrics.jsonl")) as f:
         beats = sorted(
@@ -1029,7 +1035,7 @@ def q67_stream_cms_maintenance(spark, sf_dir):
     from java9_gc_log_parser_spark.operators.sketches import cms_sketch
 
     root = _fresh_scratch(sf_dir, "q67")
-    src, out_root, ck = f"{root}/src", f"{root}/gens", f"{root}/ckpt"
+    src, out_root = f"{root}/src", f"{root}/gens"
     _docs(spark, sf_dir).repartition(8).write.parquet(src)
     os.makedirs(out_root, exist_ok=True)
     log = f"{out_root}/commits.jsonl"
@@ -1051,17 +1057,10 @@ def q67_stream_cms_maintenance(spark, sf_dir):
         return {"batch_id": batch_id}
 
     docs_schema = _docs(spark, sf_dir).schema
-    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
-        q = (
-            spark.readStream.schema(docs_schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-            .writeStream.foreachBatch(commit_log.once_per_batch(log, _apply))
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(q)
+    with _shuffle_partitions(spark):
+        await_drained(start_commit_logged(
+            file_stream(spark, src, docs_schema, 2), log, _apply,
+            f"{root}/ckpt"))
     final = commit_log.last_batch(log)
     return spark.read.parquet(f"{out_root}/batch={final}").select(
         F.col("row").cast("int").alias("row"),
@@ -1070,18 +1069,25 @@ def q67_stream_cms_maintenance(spark, sf_dir):
     )
 
 
-def q66_stream_stream_join(spark, sf_dir):
-    """Stream-stream inner join with an event-time range condition — the
-    last canonical Structured Streaming operator: user turns joined to the
-    same conversation's assistant turns within 10 minutes, BOTH sides
-    unbounded streams. Spark keeps each side in watermark-bounded state and
-    emits a pair when the partner arrives; the watermark delay exceeds the
-    data's span (the q55 lateness discipline) so no join state expires
-    while the availableNow backlog drains, and the emitted set must equal
-    the batch inequality join EXACTLY — any pair lost to premature state
-    eviction or double-emitted on replay fails rows_match. At production
-    lateness settings the state is sized by the 10-minute range + delay
-    horizon per conversation, not the stream's history.
+#: the turn-pair range bound in seconds (10 minutes), also the width of
+#: the probe buckets that carry it into the join key
+_TURN_PAIR_S = 600
+
+#: the pair projection of the turn-pair join, q66's and q126's output
+_TURN_PAIR_COLS = (
+    "l_conv AS conv_id",
+    "CAST(l_turn AS BIGINT) AS user_turn_idx",
+    "CAST(r_turn AS BIGINT) AS asst_turn_idx",
+    "CAST(unix_micros(r_ts) - unix_micros(l_ts) AS BIGINT) AS delta_us",
+)
+
+
+def _turn_pairs(turns: DataFrame, delay_s: int, how: str) -> DataFrame:
+    """The bucketed stream-stream join of each user turn of ``turns`` to
+    the same conversation's assistant turns at most 10 minutes later, each
+    side a role stream under a ``delay_s`` watermark; ``how`` is the join
+    type. Rows keep ``l_conv``, ``l_turn``, ``l_ts``, ``r_turn`` and
+    ``r_ts``, which ``_TURN_PAIR_COLS`` projects.
 
     Skew defense (the load-bearing scale decision): Spark's symmetric hash
     join keys state on the EQUALITY columns only — joining on bare conv_id
@@ -1099,63 +1105,53 @@ def q66_stream_stream_join(spark, sf_dir):
     no pair can be emitted twice since r_bucket equals at most one probe.
     Measured: 52 s -> 8 s on the identical input with byte-identical
     output (70,710 pairs, 0 dupes). At 100 TB this is the difference
-    between per-key quadratic state probing and horizon-bounded work.
+    between per-key quadratic state probing and horizon-bounded work."""
 
-    Reference capability: the reference correlates pause_start/pause_end
-    lines of one GC event; this is the general two-stream correlation with
-    a time bound."""
-    bucket_s = 600  # == the 10-minute range bound
+    def side(role):
+        return turns.filter(F.col("role") == role).withWatermark(
+            "ts", f"{delay_s} seconds")
 
-    root = _fresh_scratch(sf_dir, "q66")
-    src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
-    synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
-    # min/max from the written files (parquet footer stats), not a second
-    # pass over the synth plan
-    lo, hi = spark.read.parquet(src).agg(F.min("ts"), F.max("ts")).first()
-    delay_s = int((hi - lo).total_seconds()) + 60
-
-    def _stream(role):
-        return (
-            spark.readStream.schema(_INPUT_SCHEMA)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-            .filter(F.col("role") == role)
-            .withWatermark("ts", f"{delay_s} seconds")
-        )
-
-    bucket = (F.unix_seconds(F.col("ts")) / bucket_s).cast("long")
-    left = _stream("user").select(
+    bucket = (F.unix_seconds(F.col("ts")) / _TURN_PAIR_S).cast("long")
+    left = side("user").select(
         F.col("conv_id").alias("l_conv"),
         F.col("turn_idx").alias("l_turn"),
         F.col("ts").alias("l_ts"),
         F.explode(F.array(bucket, bucket + 1)).alias("l_bucket"),
     )
-    right = _stream("assistant").select(
+    right = side("assistant").select(
         F.col("conv_id").alias("r_conv"),
         F.col("turn_idx").alias("r_turn"),
         F.col("ts").alias("r_ts"),
         bucket.alias("r_bucket"),
     )
-    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
-        _drain_to_parquet(
-            left.join(
-                right,
-                F.expr(
-                    "l_conv = r_conv AND l_bucket = r_bucket "
-                    "AND r_ts >= l_ts "
-                    "AND r_ts < l_ts + INTERVAL 10 MINUTES"
-                ),
-            ),
-            outp, ck,
-        )
-    return spark.read.parquet(outp).select(
-        F.col("l_conv").alias("conv_id"),
-        F.col("l_turn").cast("long").alias("user_turn_idx"),
-        F.col("r_turn").cast("long").alias("asst_turn_idx"),
-        (F.unix_micros(F.col("r_ts")) - F.unix_micros(F.col("l_ts")))
-        .cast("long")
-        .alias("delta_us"),
-    )
+    return left.join(right, F.expr(
+        "l_conv = r_conv AND l_bucket = r_bucket AND r_ts >= l_ts "
+        "AND r_ts < l_ts + INTERVAL 10 MINUTES"), how)
+
+
+def q66_stream_stream_join(spark, sf_dir):
+    """Stream-stream inner join with an event-time range condition — the
+    last canonical Structured Streaming operator: user turns joined to the
+    same conversation's assistant turns within 10 minutes, BOTH sides
+    unbounded streams. Spark keeps each side in watermark-bounded state and
+    emits a pair when the partner arrives; the watermark delay exceeds the
+    data's span (the q55 lateness discipline) so no join state expires
+    while the availableNow backlog drains, and the emitted set must equal
+    the batch inequality join EXACTLY — any pair lost to premature state
+    eviction or double-emitted on replay fails rows_match. At production
+    lateness settings the state is sized by the 10-minute range + delay
+    horizon per conversation, not the stream's history. The join keys on
+    adjacent time buckets, so a hot conversation is never probed
+    quadratically (the skew defense is documented on ``_turn_pairs``).
+
+    Reference capability: the reference correlates pause_start/pause_end
+    lines of one GC event; this is the general two-stream correlation with
+    a time bound."""
+    root = _scatter(spark, sf_dir, "q66")
+    _, delay_s = _lateness_s(spark, f"{root}/src")
+    return _drain_to_parquet(
+        spark, root, lambda turns: _turn_pairs(turns, delay_s, "inner"),
+    ).selectExpr(*_TURN_PAIR_COLS)
 
 
 def q65_quantile_sketch(spark, sf_dir):
@@ -1195,26 +1191,17 @@ def q64_stream_window_agg(spark, sf_dir):
     Reference capability: the reference's time-bucketed rollups
     (GcStateFlow.scala counters exposed over SSE) restated as the
     standard streaming windowed aggregate with late-data discipline."""
-    root = _fresh_scratch(sf_dir, "q64")
-    src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
-    synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
-
-    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
-        _drain_to_parquet(
-            spark.readStream.schema(_INPUT_SCHEMA)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-            .withWatermark("ts", "2 hours")
-            .groupBy(F.window("ts", "6 hours").alias("_w"), "role")
-            .agg(F.count(F.lit(1)).alias("n_turns"))
-            .select(
-                F.col("_w.start").alias("window_start"),
-                "role",
-                F.col("n_turns").cast("long").alias("n_turns"),
-            ),
-            outp, ck,
-        )
-    return spark.read.parquet(outp).select("window_start", "role", "n_turns")
+    return _drain_to_parquet(
+        spark, _scatter(spark, sf_dir, "q64"),
+        lambda turns: turns.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "6 hours").alias("_w"), "role")
+        .agg(F.count(F.lit(1)).alias("n_turns"))
+        .select(
+            F.col("_w.start").alias("window_start"),
+            "role",
+            F.col("n_turns").cast("long").alias("n_turns"),
+        ),
+    ).select("window_start", "role", "n_turns")
 
 
 def q63_range_join(spark, sf_dir):
@@ -1260,31 +1247,18 @@ def q68_stream_session_window(spark, sf_dir):
     Reference capability: the reference scopes state to one JVM log = one
     session (GcStateFlow.scala); a multi-tenant transcript store needs the
     gap-based generalization, here in its streaming form."""
-    root = _fresh_scratch(sf_dir, "q68")
-    src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
-    synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
-
-    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
-        _drain_to_parquet(
-            spark.readStream.schema(_INPUT_SCHEMA)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-            .withWatermark("ts", "2 hours")
-            .groupBy(
-                F.session_window("ts", "1 hour").alias("_w"), "conv_id"
-            )
-            .agg(F.count(F.lit(1)).alias("n_turns"))
-            .select(
-                "conv_id",
-                F.col("_w.start").alias("session_start"),
-                F.col("_w.end").alias("session_end"),
-                F.col("n_turns").cast("long").alias("n_turns"),
-            ),
-            outp, ck,
-        )
-    return spark.read.parquet(outp).select(
-        "conv_id", "session_start", "session_end", "n_turns"
-    )
+    return _drain_to_parquet(
+        spark, _scatter(spark, sf_dir, "q68"),
+        lambda turns: turns.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "1 hour").alias("_w"), "conv_id")
+        .agg(F.count(F.lit(1)).alias("n_turns"))
+        .select(
+            "conv_id",
+            F.col("_w.start").alias("session_start"),
+            F.col("_w.end").alias("session_end"),
+            F.col("n_turns").cast("long").alias("n_turns"),
+        ),
+    ).select("conv_id", "session_start", "session_end", "n_turns")
 
 
 def q69_snapshot_diff(spark, sf_dir):
@@ -1432,33 +1406,22 @@ def q76_stream_static_join(spark, sf_dir):
     whose end exceeds the final watermark are withheld."""
     from java9_gc_log_parser_spark.sources.dims import role_dim
 
-    root = _fresh_scratch(sf_dir, "q76")
-    src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
-    synth_transcripts(spark, sf_dir).repartition(32).write.parquet(src)
-
-    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
-        _drain_to_parquet(
-            spark.readStream.schema(_INPUT_SCHEMA)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-            .withWatermark("ts", "2 hours")
-            .join(F.broadcast(role_dim(spark)), "role")
-            .groupBy(F.window("ts", "6 hours").alias("_w"), "role_group")
-            .agg(
-                F.count(F.lit(1)).alias("n_turns"),
-                F.sum(F.col("is_agent").cast("long")).alias("n_agent_turns"),
-            )
-            .select(
-                F.col("_w.start").alias("window_start"),
-                "role_group",
-                F.col("n_turns").cast("long").alias("n_turns"),
-                F.col("n_agent_turns").cast("long").alias("n_agent_turns"),
-            ),
-            outp, ck,
+    return _drain_to_parquet(
+        spark, _scatter(spark, sf_dir, "q76"),
+        lambda turns: turns.withWatermark("ts", "2 hours")
+        .join(F.broadcast(role_dim(spark)), "role")
+        .groupBy(F.window("ts", "6 hours").alias("_w"), "role_group")
+        .agg(
+            F.count(F.lit(1)).alias("n_turns"),
+            F.sum(F.col("is_agent").cast("long")).alias("n_agent_turns"),
         )
-    return spark.read.parquet(outp).select(
-        "window_start", "role_group", "n_turns", "n_agent_turns"
-    )
+        .select(
+            F.col("_w.start").alias("window_start"),
+            "role_group",
+            F.col("n_turns").cast("long").alias("n_turns"),
+            F.col("n_agent_turns").cast("long").alias("n_agent_turns"),
+        ),
+    ).select("window_start", "role_group", "n_turns", "n_agent_turns")
 
 
 def q77_range_cluster_layout(spark, sf_dir):
@@ -2333,87 +2296,29 @@ def q126_stream_outer_join(spark, sf_dir):
     drained+collapsed set must equal DuckDB's batch LEFT JOIN exactly."""
     import datetime
 
-    bucket_s = 600
+    root = _scatter(spark, sf_dir, "q126")
+    hi, delay_s = _lateness_s(spark, f"{root}/src")
 
-    root = _fresh_scratch(sf_dir, "q126")
-    src, outp, ck = f"{root}/src", f"{root}/out", f"{root}/ckpt"
-    tdf = synth_transcripts(spark, sf_dir)
-    tdf.repartition(32).write.parquet(src)
-    lo, hi = spark.read.parquet(src).agg(F.min("ts"), F.max("ts")).first()
-    delay_s = int((hi - lo).total_seconds()) + 60
+    def drain():
+        return _drain_to_parquet(
+            spark, root,
+            lambda turns: _turn_pairs(turns, delay_s, "leftOuter"))
 
-    def _stream(role):
-        return (
-            spark.readStream.schema(_INPUT_SCHEMA)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-            .filter(F.col("role") == role)
-            .withWatermark("ts", f"{delay_s} seconds")
-        )
-
-    def _drain():
-        bucket = (F.unix_seconds(F.col("ts")) / bucket_s).cast("long")
-        left = _stream("user").select(
-            F.col("conv_id").alias("l_conv"),
-            F.col("turn_idx").alias("l_turn"),
-            F.col("ts").alias("l_ts"),
-            F.explode(F.array(bucket, bucket + 1)).alias("l_bucket"),
-        )
-        right = _stream("assistant").select(
-            F.col("conv_id").alias("r_conv"),
-            F.col("turn_idx").alias("r_turn"),
-            F.col("ts").alias("r_ts"),
-            bucket.alias("r_bucket"),
-        )
-        _drain_to_parquet(
-            left.join(
-                right,
-                F.expr(
-                    "l_conv = r_conv AND l_bucket = r_bucket "
-                    "AND r_ts >= l_ts "
-                    "AND r_ts < l_ts + INTERVAL 10 MINUTES"
-                ),
-                "leftOuter",
-            ),
-            outp, ck,
-        )
-
-    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
-        _drain()  # matches; watermark still below every horizon
-        sent_ts = hi + datetime.timedelta(seconds=2 * delay_s + 2 * bucket_s)
-        rows = [
-            ("__wm__", 0, "user", "wm", None, sent_ts),
-            ("__wm__", 1, "assistant", "wm", None, sent_ts),
-        ]
-        spark.createDataFrame(rows, _INPUT_SCHEMA).write.mode(
-            "append"
-        ).parquet(src)
-        _drain()  # no-data batch evicts surviving left state as nulls
-
-    out = spark.read.parquet(outp).filter(F.col("l_conv") != "__wm__")
+    drain()  # matches; watermark still below every horizon
+    sent_ts = hi + datetime.timedelta(seconds=2 * delay_s + 2 * _TURN_PAIR_S)
+    rows = [
+        ("__wm__", 0, "user", "wm", None, sent_ts),
+        ("__wm__", 1, "assistant", "wm", None, sent_ts),
+    ]
+    spark.createDataFrame(rows, _INPUT_SCHEMA).write.mode("append").parquet(
+        f"{root}/src")
+    # no-data batch evicts surviving left state as nulls
+    out = drain().filter(F.col("l_conv") != "__wm__")
     matched = out.filter(F.col("r_turn").isNotNull())
     # probe-artifact collapse: null only if BOTH bucket probes were null
-    unanswered = (
-        out.groupBy("l_conv", "l_turn")
-        .agg(F.max("r_turn").alias("any_match"))
-        .filter(F.col("any_match").isNull())
-        .select("l_conv", "l_turn")
-    )
-    pairs = matched.select(
-        F.col("l_conv").alias("conv_id"),
-        F.col("l_turn").cast("long").alias("user_turn_idx"),
-        F.col("r_turn").cast("long").alias("asst_turn_idx"),
-        (F.unix_micros(F.col("r_ts")) - F.unix_micros(F.col("l_ts")))
-        .cast("long")
-        .alias("delta_us"),
-    )
-    nulls = unanswered.select(
-        F.col("l_conv").alias("conv_id"),
-        F.col("l_turn").cast("long").alias("user_turn_idx"),
-        F.lit(None).cast("long").alias("asst_turn_idx"),
-        F.lit(None).cast("long").alias("delta_us"),
-    )
-    return pairs.unionByName(nulls)
+    unanswered = out.join(matched, ["l_conv", "l_turn"], "left_anti")
+    return matched.selectExpr(*_TURN_PAIR_COLS).unionByName(
+        unanswered.selectExpr(*_TURN_PAIR_COLS).distinct())
 
 
 def q127_ahash_near_dup(spark, sf_dir):
@@ -2640,7 +2545,7 @@ def q141_stream_index_maintenance(spark, sf_dir):
     cells_b = spark.createDataFrame(cells_rows, cells.schema)
     books_b = spark.createDataFrame(books_rows, books.schema)
     im.write_base_generation(base, cells_b, books_b, out_root)
-    with _shuffle_partitions(spark, _JVM_STATE_PARTS):
+    with _shuffle_partitions(spark):
         im.maintain_index(
             spark, src, embs.schema, out_root,
             cells_rows, cells.schema, books_rows, books.schema,
@@ -3146,14 +3051,17 @@ FROM easm WHERE verdict = 'ok'
 """,
 }
 
-# token CTE shared by the documents oracles (mirrors text_analysis.tokens_col)
+# token CTE shared by the documents oracles (mirrors text_analysis.tokens_col:
+# trim the edge whitespace RE2's \s splits on, space, \t, \n, \r and \f)
 _DTOK = """
 WITH dtok AS (
   SELECT doc_id, source, text,
-    CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-         ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks,
-    CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-         ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END AS ltoks
+    CASE WHEN length(trim(text, E' \\t\\n\\r\\f')) = 0 THEN CAST([] AS VARCHAR[])
+         ELSE regexp_split_to_array(trim(text, E' \\t\\n\\r\\f'),
+                                    '\\s+') END AS toks,
+    CASE WHEN length(trim(text, E' \\t\\n\\r\\f')) = 0 THEN CAST([] AS VARCHAR[])
+         ELSE regexp_split_to_array(trim(lower(text), E' \\t\\n\\r\\f'),
+                                    '\\s+') END AS ltoks
   FROM documents
 )
 """
@@ -3195,7 +3103,8 @@ _PRED = (
 _ORACLES.update(
     {
         "q13_dedup_exact": """
-SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS text_hash,
+SELECT md5(regexp_replace(lower(trim(text, E' \\t\\n\\r\\f')), '\\s+', ' ',
+                          'g')) AS text_hash,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        MIN(doc_id) AS canonical_doc_id
 FROM documents GROUP BY 1
@@ -3319,8 +3228,9 @@ cand AS (
 ),
 dtok2 AS (
   SELECT doc_id,
-    CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-         ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END AS ltoks
+    CASE WHEN length(trim(text, E' \\t\\n\\r\\f')) = 0 THEN CAST([] AS VARCHAR[])
+         ELSE regexp_split_to_array(trim(lower(text), E' \\t\\n\\r\\f'),
+                                    '\\s+') END AS ltoks
   FROM documents
 ),
 dsh AS (
@@ -3385,10 +3295,13 @@ FROM (
 )
 
 
-def _split_case_sql(salt: str = "v1", col: str = "doc_id") -> str:
-    from java9_gc_log_parser_spark.operators.sampling import split_boundaries
+def _split_case_sql(col: str = "doc_id") -> str:
+    from java9_gc_log_parser_spark.operators.sampling import (
+        SPLIT_SALT,
+        split_boundaries,
+    )
 
-    h = f"substring(md5(CAST({col} AS VARCHAR) || ':{salt}'), 1, 4)"
+    h = f"substring(md5(CAST({col} AS VARCHAR) || ':{SPLIT_SALT}'), 1, 4)"
     arms = "\n       ".join(
         f"WHEN {h} < '{bound}' THEN '{name}'"
         for name, bound in split_boundaries()
@@ -3963,7 +3876,8 @@ d1 AS (
 canon AS (
   SELECT MIN(doc_id) AS doc_id
   FROM (SELECT doc_id,
-               md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS h
+               md5(regexp_replace(lower(trim(text, E' \\t\\n\\r\\f')),
+                                  '\\s+', ' ', 'g')) AS h
         FROM d1)
   GROUP BY h
 ),
@@ -4500,8 +4414,9 @@ newsnap AS (
 ),
 dtok AS (
   SELECT doc_id, text,
-    CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-         ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
+    CASE WHEN length(trim(text, E' \\t\\n\\r\\f')) = 0 THEN CAST([] AS VARCHAR[])
+         ELSE regexp_split_to_array(trim(text, E' \\t\\n\\r\\f'),
+                                    '\\s+') END AS toks
   FROM newsnap
 )
 """ + _Q15_BODY
@@ -4544,10 +4459,14 @@ FROM r CROSS JOIN t WHERE rank <= 10
 """
 
 
-def _bloom_pos_sql(expr: str, r: int, m_bits: int = 4096) -> str:
+def _bloom_pos_sql(expr: str, r: int) -> str:
+    from java9_gc_log_parser_spark.operators.runtime_filter import (
+        BLOOM_M_BITS,
+    )
+
     return (
         f"CAST(('0x' || substr(md5({expr} || ':bloom:{r}'), 1, 4)) "
-        f"AS INTEGER) % {m_bits}"
+        f"AS INTEGER) % {BLOOM_M_BITS}"
     )
 
 
@@ -4784,8 +4703,9 @@ FROM x
 _ORACLES["q83_chunk_sliding"] = """
 WITH dt AS (
   SELECT doc_id,
-    CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-         ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
+    CASE WHEN length(trim(text, E' \\t\\n\\r\\f')) = 0 THEN CAST([] AS VARCHAR[])
+         ELSE regexp_split_to_array(trim(text, E' \\t\\n\\r\\f'),
+                                    '\\s+') END AS toks
   FROM documents
 ), n AS (
   SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n
@@ -4814,8 +4734,9 @@ FROM x
 _ORACLES["q84_weighted_sample"] = """
 WITH dt AS (
   SELECT doc_id,
-    CASE WHEN length(trim(text)) = 0 THEN CAST([] AS VARCHAR[])
-         ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
+    CASE WHEN length(trim(text, E' \\t\\n\\r\\f')) = 0 THEN CAST([] AS VARCHAR[])
+         ELSE regexp_split_to_array(trim(text, E' \\t\\n\\r\\f'),
+                                    '\\s+') END AS toks
   FROM documents
 ), p AS (
   SELECT doc_id,
@@ -5487,7 +5408,7 @@ SELECT sink,
 FROM fl GROUP BY sink
 """
 
-def _bpe_oracle_sql(n_merges: int = 8) -> str:
+def _bpe_oracle_sql() -> str:
     """Unroll the BPE merge-learning iterations (tokenizer.py contract:
     max count / pair-ascending tie-break / double space-bounded replace)
     as chained CTEs; callers append their own final SELECT over b{i}/w{i}."""
@@ -5503,7 +5424,7 @@ def _bpe_oracle_sql(n_merges: int = 8) -> str:
   FROM wc
 )"""
     ]
-    for i in range(1, n_merges + 1):
+    for i in range(1, _BPE_N_MERGES + 1):
         pat = f"' ' || (SELECT pair FROM b{i}) || ' '"
         rep = f"' ' || (SELECT replace(pair, ' ', '') FROM b{i}) || ' '"
         parts.append(
@@ -5645,11 +5566,22 @@ SELECT n_a, x_a, n_b, x_b,
 FROM t
 """
 
-def _pq_oracle_sql(m: int = 4, k_codes: int = 4, dim: int = 64, k: int = 5) -> str:
+from java9_gc_log_parser_spark.operators.similarity import (  # noqa: E402
+    _DIM,
+    _IVF_CELLS,
+    _IVF_PROBE,
+    _K,
+    _PQ_K_CODES,
+    _PQ_M,
+)
+
+
+def _pq_oracle_sql() -> str:
     """Unroll PQ training (q42's k-means contract per subspace slice),
     encoding, the query LUT, and ADC ranking over the FULL corpus (q130's
-    exactness-baseline shape)."""
-    return _pq_ctes(m, k_codes, dim) + f"""
+    exactness-baseline shape), at ``similarity``'s PQ sizes and top-k."""
+    k = _K
+    return _pq_ctes() + f"""
 , sc AS (
   SELECT l.query_id, c.vec_id, CAST(SUM(l.d2u) AS BIGINT) AS du
   FROM codes c JOIN lut l ON c.s = l.s AND c.code = l.cluster
@@ -5664,12 +5596,13 @@ WHERE rk <= {k}
 """
 
 
-def _pq_ctes(m: int = 4, k_codes: int = 4, dim: int = 64) -> str:
+def _pq_ctes() -> str:
     """PQ train/encode/LUT CTE chain through ``codes`` and ``lut``
     (factored from _pq_oracle_sql so the q135 IVF×PQ composition appends
     its candidate-bounded scoring instead of the full-corpus one). Key
     CTEs are MATERIALIZED — the per-subspace chains reference each other
     enough that inlining would multiply the base scan (the q124 lesson)."""
+    m, k_codes, dim = _PQ_M, _PQ_K_CODES, _DIM
     sub = dim // m
 
     def _assign_sql(s: int, c: str) -> str:
@@ -5740,18 +5673,12 @@ lut AS ({lut_u})"""
     return "".join(parts)
 
 
-def _ivf_pq_oracle_sql(
-    m: int = 4,
-    k_codes: int = 4,
-    dim: int = 64,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-) -> str:
+def _ivf_pq_oracle_sql() -> str:
     """q135: the PQ chain (codes + lut, identical to q130's) composed with
     q34's IVF cell CTEs — ADC scoring restricted to cell-local candidates —
     then q119's recall comparison against the exact brute-force spine."""
-    return _pq_ctes(m, k_codes, dim) + f"""
+    k, n_centroids, n_probe = _K, _IVF_CELLS, _IVF_PROBE
+    return _pq_ctes() + f"""
 , cent AS (
   SELECT vec_id AS cid, emb AS cemb FROM e ORDER BY vec_id LIMIT {n_centroids}
 ),
@@ -5830,9 +5757,7 @@ _ORACLES["q130_ann_pq"] = _pq_oracle_sql()
 _ORACLES["q135_ann_ivf_pq"] = _ivf_pq_oracle_sql()
 
 
-def _stream_ivfpq_oracle_sql(
-    m: int = 4, k_codes: int = 4, dim: int = 64, n_centroids: int = 16
-) -> str:
+def _stream_ivfpq_oracle_sql() -> str:
     """q141: batch re-derivation of the MAINTAINED index — train cells +
     PQ codebooks on the bootstrap corpus only (vec_id % 3 != 2, the
     q130/q135 k-means unroll restricted to the base), then encode EVERY
@@ -5840,6 +5765,7 @@ def _stream_ivfpq_oracle_sql(
     streaming index proves per-batch maintenance preserved batch-build
     semantics exactly (the q67 sketch-associativity discipline applied
     to an index)."""
+    m, k_codes, dim, n_centroids = _PQ_M, _PQ_K_CODES, _DIM, _IVF_CELLS
     sub = dim // m
 
     def _assign_sql(src: str, c: str) -> str:
@@ -6305,7 +6231,7 @@ _ORACLES["q134_dataset_card"] = _DTOK + f"""
          CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
          CAST(SUM(len(toks)) AS BIGINT) AS n_tokens,
          CAST(COUNT(DISTINCT md5(
-             regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')
+             regexp_replace(lower(trim(text, E' \\t\\n\\r\\f')), '\\s+', ' ', 'g')
          )) AS BIGINT) AS n_uniq
   FROM dtok
 ), lg AS (
@@ -6333,7 +6259,7 @@ FROM base CROSS JOIN lg CROSS JOIN qu CROSS JOIN gt
 """
 
 _ORACLES["q124_bpe_merges"] = (
-    _bpe_oracle_sql(_BPE_N_MERGES)
+    _bpe_oracle_sql()
     + "\nSELECT * FROM (\n  "
     + "\n  UNION ALL ".join(
         f"""SELECT {i} AS step, split_part(pair, ' ', 1) AS "left",
@@ -6345,7 +6271,7 @@ _ORACLES["q124_bpe_merges"] = (
 )
 
 _ORACLES["q125_bpe_fertility"] = (
-    _bpe_oracle_sql(_BPE_N_MERGES)
+    _bpe_oracle_sql()
     + f"""
 , enc AS (
   SELECT word, len(string_split(trim(syms), ' ')) AS n_pieces

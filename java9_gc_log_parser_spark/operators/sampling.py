@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 SPLITS = (("train", 0.8), ("val", 0.1), ("test", 0.1))
+#: the salt of the doc_id hash every split and sample buckets on
+SPLIT_SALT = "v1"
 
 
 def split_boundaries() -> list[tuple[str, str]]:
@@ -59,7 +61,7 @@ def split_col(id_col: Column) -> Column:
     hash_split): because membership is a pure function of (id, salt), any
     operator can classify an id WITHOUT joining the corpus — e.g. the
     q140 leakage audit labels both ends of a near-dup pair map-side."""
-    b = _bucket(id_col, "v1")
+    b = _bucket(id_col, SPLIT_SALT)
     expr = None
     for name, bound in split_boundaries():
         cond = b < F.lit(bound)
@@ -81,7 +83,7 @@ def stratified_sample(df: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 
     w = Window.partitionBy("source").orderBy(
-        _bucket(F.col("doc_id"), "v1"), F.col("doc_id")
+        _bucket(F.col("doc_id"), SPLIT_SALT), F.col("doc_id")
     )
     return (
         df.withColumn("_rk", F.row_number().over(w))
@@ -100,7 +102,7 @@ def hash_sample(df: DataFrame, fraction: float) -> DataFrame:
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0,1], got {fraction}")
     bound = "g" if fraction >= 1.0 else format(int(fraction * 65536), "04x")
-    return df.filter(_bucket(F.col("doc_id"), "v1") < F.lit(bound))
+    return df.filter(_bucket(F.col("doc_id"), SPLIT_SALT) < F.lit(bound))
 
 
 def shard_assign(df: DataFrame) -> DataFrame:

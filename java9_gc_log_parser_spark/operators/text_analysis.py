@@ -26,11 +26,17 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS = ("a", "the")
 
 
+#: the edge whitespace the tokenizer trims: what both engines' ``\s``
+#: splits on (Java's ``\s`` also matches ``\v``, RE2's does not)
+_WS = " \t\n\r\f"
+
+
 def tokens_col(text: Column) -> Column:
     """Whitespace tokenization; empty/blank text -> empty array."""
+    text = F.trim(text, F.lit(_WS))
     return F.when(
-        F.length(F.trim(text)) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(F.trim(text), r"\s+"))
+        F.length(text) == 0, F.array().cast("array<string>")
+    ).otherwise(F.split(text, r"\s+"))
 
 
 # The one kernel per text step: every text operator (dedup,
@@ -52,7 +58,8 @@ def token_count() -> Column:
 def norm_text() -> Column:
     """``text`` lowercased and trimmed, whitespace runs collapsed to one
     space — the exact-dedup key's text."""
-    return F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
+    return F.regexp_replace(F.lower(F.trim(F.col("text"), F.lit(_WS))),
+                            r"\s+", " ")
 
 
 def word_ngrams(toks: Column, n: int) -> Column:

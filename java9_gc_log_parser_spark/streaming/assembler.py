@@ -6,8 +6,10 @@ distributed stream cannot assume order, so the lines of one GC event may
 arrive across micro-batches. Like the reference's assembler
 (``CollectPauseLines.scala:13-70``), which keeps one small state entry per
 open event, the fold keeps each open group as one row: its merged partial of
-the batch assembly (``operators/assemble.py``). ``assemble_stream`` runs it
-in ``foreachBatch`` under ``commit_log.once_per_batch``:
+the batch assembly (``operators/assemble.py``). ``assemble_stream`` reads
+the transcripts through the harness's ``file_stream`` and starts the fold
+through ``start_commit_logged``, so each trigger runs in ``foreachBatch``
+under ``commit_log.once_per_batch``:
 
 1. merge the trigger's supported, event-id-bearing lines
    (``assembly_rows``) with the carry in one ``assembly_merge``, so stream
@@ -78,6 +80,7 @@ from ..operators.assemble import (
     assembly_verdict,
 )
 from ..operators.route import supported_types_filter
+from . import file_stream, start_commit_logged
 
 
 def log_path(root: str) -> str:
@@ -117,11 +120,8 @@ def assemble_stream(
     backlog and stops; otherwise the stream runs on a 1 s processing-time
     trigger."""
     log = log_path(root)
-    lines = supported_types_filter(parse_lines(
-        spark.readStream.schema(input_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_path)
-    ))
+    lines = supported_types_filter(parse_lines(file_stream(
+        spark, source_path, input_schema, max_files_per_trigger)))
 
     def apply(new: DataFrame, batch_id: int, last: int | None) -> dict:
         t0 = time.perf_counter()
@@ -157,11 +157,5 @@ def assemble_stream(
                 "lateness_ms": lateness_ms, **out,
                 "wall_s": round(time.perf_counter() - t0, 3)}
 
-    writer = lines.writeStream.foreachBatch(
-        commit_log.once_per_batch(log, apply)
-    ).option("checkpointLocation", os.path.join(root, "ckpt"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return start_commit_logged(lines, log, apply, os.path.join(root, "ckpt"),
+                               available_now)

@@ -31,6 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from java9_gc_log_parser_spark import commit_log
 from java9_gc_log_parser_spark.operators.similarity import ivfpq_encode
+from java9_gc_log_parser_spark.streaming import (
+    await_drained,
+    file_stream,
+    start_commit_logged,
+)
 
 __all__ = [
     "write_base_generation",
@@ -76,8 +81,11 @@ def maintain_index(
     books_schema,
 ) -> None:
     """Drain the vector stream two files per micro-batch, appending one
-    encoded generation per micro-batch; blocks until the availableNow
-    backlog is done (at most 600 s).
+    encoded generation per micro-batch. The stream is the harness's
+    ``file_stream``, started through ``start_commit_logged`` (availableNow,
+    checkpoint under ``out_root/ckpt``); ``await_drained`` blocks until the
+    backlog is done, so a stream failure raises its
+    ``StreamingQueryException`` here.
 
     Metadata arrives as COLLECTED rows + schema (not DataFrames): that is
     what pins the no-corpus-lineage property — the per-batch encode plan
@@ -94,20 +102,9 @@ def maintain_index(
         )
         return apply_generation(enc, out_root, batch_id)
 
-    q = (
-        spark.readStream.schema(input_schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(source_path)
-        .writeStream.foreachBatch(
-            commit_log.once_per_batch(_log(out_root), _apply)
-        )
-        .option("checkpointLocation", f"{out_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("index stream did not drain within 600s")
+    await_drained(start_commit_logged(
+        file_stream(spark, source_path, input_schema, 2), _log(out_root),
+        _apply, f"{out_root}/ckpt"))
 
 
 def read_index(spark: SparkSession, out_root: str) -> DataFrame:

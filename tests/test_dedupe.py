@@ -58,6 +58,9 @@ def _py_jaccard(a: frozenset, b: frozenset) -> float:
         ("a b c", 3, {"a b c"}),  # exactly n tokens -> one gram
         ("a", 2, {"a"}),  # n - 1 tokens
         ("   ", 3, {""}),  # blank doc
+        ("\ta b c", 3, {"a b c"}),  # leading tab trimmed
+        ("x y\n", 2, {"x y"}),  # trailing newline trimmed
+        ("\t", 3, {""}),  # tab-only doc is blank
     ],
 )
 def test_with_shingles_known(spark, text, n, expected):

@@ -8,7 +8,8 @@ non-test call passes the same value is an option with one value in use: it
 is a constant, or its reason is named here. The checks are static (``ast``,
 no JVM) and read the non-test modules: the package itself, the root scripts
 (``__spark_entry__.py``, ``main.py``, ``bench.py``), ``scripts/`` and
-``perfbench/``. A function counts as called when such a module names it
+``perfbench/``. The parameter checks also cover the functions of
+``__spark_entry__.py`` and ``main.py``. A function counts as called when such a module names it
 outside its own body.
 
 ``single_valued_parameters`` reads what each non-test call of a function of
@@ -50,7 +51,14 @@ ALLOWED_PARAMS = {
     "operators/dedupe.py:star_contract:max_iter",
     # perfbench passes it, and the benchmark's sources are fixed
     "streaming/state_stream.py:stream_conv_state:available_now",
+    # the command line: tests/test_main.py drives the CLI in process
+    "main.py:main:argv",
 }
+
+#: the driver scripts whose own functions the parameter checks also read
+#: (not ``uncalled_functions``: ``queries()`` finds the ``qNN_`` functions
+#: by name)
+DRIVERS = ("__spark_entry__.py", "main.py")
 
 
 def _caller_files() -> list[Path]:
@@ -77,14 +85,19 @@ def _trees() -> dict[Path, ast.Module]:
     return {f: ast.parse(f.read_text(), str(f)) for f in _caller_files()}
 
 
-def _package_functions(trees):
-    """``(key prefix, def)`` of every top-level package function."""
+def _package_functions(trees, drivers=False):
+    """``(key prefix, def)`` of every top-level package function, and with
+    ``drivers`` of every top-level function of the ``DRIVERS``."""
     for path, tree in trees.items():
-        if PACKAGE not in path.parents:
+        if PACKAGE in path.parents:
+            prefix = path.relative_to(PACKAGE).as_posix()
+        elif drivers and path.parent == ROOT and path.name in DRIVERS:
+            prefix = path.name
+        else:
             continue
         for fn in tree.body:
             if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                yield f"{path.relative_to(PACKAGE).as_posix()}:{fn.name}", fn
+                yield f"{prefix}:{fn.name}", fn
 
 
 def uncalled_functions() -> list[str]:
@@ -149,7 +162,7 @@ def _parameter_uses():
     values those calls give it (the default's where one leaves it out)."""
     trees = _trees()
     calls = _calls(trees)
-    for key, fn in _package_functions(trees):
+    for key, fn in _package_functions(trees, drivers=True):
         for i, name, default in _defaulted(fn):
             if f"{key}:{name}" in ALLOWED_PARAMS:
                 continue

@@ -22,6 +22,8 @@ from java9_gc_log_parser_spark.operators.assemble import (
 )
 from java9_gc_log_parser_spark.operators.route import supported_types_filter
 from java9_gc_log_parser_spark.sources.transcripts import synth_transcripts
+from java9_gc_log_parser_spark import streaming
+from java9_gc_log_parser_spark.streaming import await_drained, file_stream
 from java9_gc_log_parser_spark.streaming.assembler import assemble_stream
 
 INPUT_SCHEMA = (
@@ -324,9 +326,7 @@ def test_atleastonce_dedup_drops_redeliveries(spark, tmp_path):
     lo, hi = tdf.agg(F.min("ts"), F.max("ts")).first()
     delay_s = int((hi - lo).total_seconds()) + 60
     q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(src)
+        file_stream(spark, src, schema, 8)
         .withWatermark("ts", f"{delay_s} seconds")
         .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
         .writeStream.format("parquet")
@@ -371,9 +371,7 @@ def test_stream_window_agg_withholds_live_tail(spark, tmp_path):
     src = str(tmp_path / "src")
     df.repartition(4).write.parquet(src)
     q = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
+        file_stream(spark, src, df.schema, 2)
         .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "6 hours").alias("w"), "role")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -399,10 +397,11 @@ def test_stream_stream_join_pairs_across_micro_batches(spark, tmp_path):
     """The property that distinguishes a stream-stream join from a
     per-batch join: the user turn arrives in trigger 1, its assistant
     reply in trigger 2 (one file per trigger), and the pair must still be
-    emitted from join state."""
+    emitted from join state — by q66's and q126's bucketed join. A pair
+    that straddles a 600 s bucket boundary is emitted exactly once."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
+    import __spark_entry__ as entrymod
 
     t0 = dt.datetime(2024, 1, 1)
     schema = (
@@ -411,35 +410,23 @@ def test_stream_stream_join_pairs_across_micro_batches(spark, tmp_path):
     )
     users = spark.createDataFrame(
         [("c1", 0, "user", "q", None, t0),
-         ("c2", 0, "user", "q", None, t0)], schema)
+         ("c2", 0, "user", "q", None, t0),
+         ("c3", 0, "user", "q", None, t0 + dt.timedelta(seconds=3590))],
+        schema)
     assts = spark.createDataFrame(
         [("c1", 1, "assistant", "a", None, t0 + dt.timedelta(minutes=2)),
          # out of range: 20 min > the 10-min bound -> must NOT pair
-         ("c2", 1, "assistant", "a", None, t0 + dt.timedelta(minutes=20))],
+         ("c2", 1, "assistant", "a", None, t0 + dt.timedelta(minutes=20)),
+         # 00:59:50 -> 01:00:10 crosses a bucket boundary
+         ("c3", 1, "assistant", "a", None, t0 + dt.timedelta(seconds=3610))],
         schema)
     src = str(tmp_path / "src")
     users.coalesce(1).write.parquet(src)
     assts.coalesce(1).write.mode("append").parquet(src)
 
-    def side(role, names):
-        return (
-            spark.readStream.schema(users.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .filter(F.col("role") == role)
-            .withWatermark("ts", "1 hour")
-            .select(F.col("conv_id").alias(names[0]),
-                    F.col("turn_idx").alias(names[1]),
-                    F.col("ts").alias(names[2]))
-        )
-
     q = (
-        side("user", ("lc", "lt", "lts"))
-        .join(
-            side("assistant", ("rc", "rt", "rts")),
-            F.expr("lc = rc AND rts >= lts "
-                   "AND rts < lts + INTERVAL 10 MINUTES"),
-        )
+        entrymod._turn_pairs(file_stream(spark, src, schema, 1), 3600,
+                             "inner")
         .writeStream.format("parquet")
         .option("path", str(tmp_path / "out"))
         .option("checkpointLocation", str(tmp_path / "ck"))
@@ -448,9 +435,24 @@ def test_stream_stream_join_pairs_across_micro_batches(spark, tmp_path):
         .start()
     )
     assert q.awaitTermination(300)
-    got = {(r["lc"], r["rt"])
-           for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-    assert got == {("c1", 1)}  # cross-batch pair found, out-of-range absent
+    got = sorted((r["l_conv"], r["r_turn"])
+                 for r in spark.read.parquet(str(tmp_path / "out")).collect())
+    # cross-batch pairs found once each, out-of-range absent
+    assert got == [("c1", 1), ("c3", 1)]
+
+
+def test_drain_times_out_and_stops_the_query(spark, tmp_path, monkeypatch):
+    """A stream that never drains (a processing-time trigger over an empty
+    directory) makes ``await_drained`` stop the query and raise."""
+    src = tmp_path / "src"
+    src.mkdir()
+    monkeypatch.setattr(streaming, "DRAIN_TIMEOUT_S", 1)
+    q = assemble_stream(spark, str(src), INPUT_SCHEMA, str(tmp_path / "fold"),
+                        lambda closed, batch_id, last: {},
+                        available_now=False)
+    with pytest.raises(TimeoutError):
+        await_drained(q)
+    assert not q.isActive
 
 
 def test_stream_cms_maintenance_is_truly_incremental(spark, sf_dir):

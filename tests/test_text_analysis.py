@@ -29,6 +29,9 @@ def _docs(spark, rows):
         ("   ", 0, 0, 0.0),  # blank == empty
         ("ab  cd", 2, 2, 2.0),  # multi-space split
         ("x xyz", 2, 2, 2.0),  # (1+3)/2
+        ("\tab cd", 2, 2, 2.0),  # leading tab trimmed
+        ("ab cd\n", 2, 2, 2.0),  # trailing newline trimmed
+        ("\t", 0, 0, 0.0),  # tab-only == empty
     ],
 )
 def test_token_stats_known(spark, text, n_tokens, n_unique, mean_len):
@@ -88,7 +91,7 @@ def test_dedup_exact_normalization(spark):
         [
             (5, "s", "Hello  world"),
             (3, "s", "hello world"),
-            (9, "s", "  hello   WORLD "),  # NB trim strips spaces only
+            (9, "s", "  hello   WORLD "),  # edge spaces trimmed
             (7, "s", "different"),
         ],
     )
